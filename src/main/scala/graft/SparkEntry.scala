@@ -1599,16 +1599,12 @@ object SparkEntry {
         u
       })
       graft.sources.JdbcSink.truncateTables(url, "FACT_IDA")
-      val factDf = IdaMart.fact(
-          IdaMart.records(s, dir).filter(col("linha_origem") % 4 === 0))
-        .select(col("tempo_key"), col("grupo_key"), col("servico_key"),
-          col("variavel_key"), col("valor"), col("arquivo_origem"),
-          col("linha_origem"), col("hash_registro"))
       val inDir = jdbcStreamFactSpool(s, dir)
+      val inSchema = s.read.parquet(inDir).schema
       def replay(): Unit = {
         val cp = scratchDir("jdbcstream-cp")
         val q = graft.streaming.Ingest.startJdbc(
-          s.readStream.schema(factDf.schema).parquet(inDir), url,
+          s.readStream.schema(inSchema).parquet(inDir), url,
           "FACT_IDA", cp)
         q.processAllAvailable(); q.stop()
       }

@@ -16,19 +16,20 @@ import graft.sources.Tables
   * Reference semantics:
   *  - dimensions are distinct natural keys + surrogate keys
   *    (/root/reference/etl/etl_ida.py:556-620); surrogate keys here are
-  *    `row_number` over the natural key order — deterministic and stable,
+  *    the 1-based rank in natural-key order — deterministic and stable,
   *    unlike `monotonically_increasing_id` which depends on partition layout;
   *  - the fact load is an INSERT..SELECT over 4 natural-key lookups where a
   *    record matching no dim row is silently dropped
   *    (/root/reference/etl/etl_ida.py:504-554) -> inner broadcast joins;
   *  - dedup via md5 record hash + ON CONFLICT DO NOTHING
-  *    (schema_star.sql:93-94) -> dropDuplicates(hash) for intra-batch,
-  *    left-anti join vs the existing table for cross-batch idempotency.
+  *    (schema_star.sql:93-94) -> [[firstWinsDedup]] on the hash for
+  *    intra-batch, left-anti join vs the existing table for cross-batch
+  *    idempotency.
   *
   * Scale shape: all four dims are tiny (derived from low-cardinality
   * attributes) -> broadcast hash joins, zero shuffle on the fact side; the
-  * only wide operation is dropDuplicates on the hash (one shuffle on an
-  * already-narrow projection). The dim windows run on driver-scale data.
+  * only wide operation is the dedup on the hash (one shuffle on an
+  * already-narrow projection). The dim keys are ranked on the driver.
   */
 object IdaMart {
 
@@ -53,57 +54,87 @@ object IdaMart {
       .as[graft.model.DataRecord]
   }
 
-  /** Distinct natural keys ranked into surrogate keys ON THE DRIVER.
-    *
-    * Dims are metadata-cardinality by contract (the reference seeds
-    * 36/10/3/11 rows, schema_star.sql:198-268): the distinct set is a
-    * driver-sized collect — the same size bound that already makes these
-    * dims broadcast-join build sides. Ranking driver-side replaces the
-    * previous `row_number` over a global window, which (a) forced an
-    * all-rows-to-one-partition WindowExec whose "No Partition Defined"
-    * warning drowned out real single-partition regressions, and (b) as a
-    * lazy subtree inside the fact's multi-join got re-aliased by the
-    * analyzer's self-join deduplication and re-scanned the raw source
-    * (PipelineSpec's scan-count test pins this).
-    *
-    * Null natural keys are dropped: the fact's equi-join lookup never
-    * matches null, and Spark (NULLS FIRST) vs DuckDB (NULLS LAST) disagree
-    * on where a null would rank. Scala String order (UTF-16 code units)
-    * equals DuckDB's UTF-8 byte order for all BMP text — the fixtures'
-    * pt-BR accents included. */
   /** Fail-fast bound on the driver-side dim collect: dims larger than this
     * violate the metadata-cardinality contract (they would not be
     * broadcastable either) — a clear error beats a silent driver OOM at
     * 100 TB. The reference's largest dim is 36 rows. */
   val MaxDimCardinality = 100000
 
-  private def rankedKeys(records: DataFrame, natural: String,
-                         keyName: String): DataFrame = {
+  /** Surrogate-key column of each dimension, by natural-key column. */
+  private val SurrogateKeys = Map("ano_mes" -> "tempo_key",
+    "grupo_economico" -> "grupo_key", "servico" -> "servico_key",
+    "variavel" -> "variavel_key")
+
+  /** The ONE dimension-key collect: the distinct natural keys of every
+    * requested dim, ranked into surrogate keys ON THE DRIVER, one local
+    * `(x_key, natural)` frame per dim.
+    *
+    * Each record explodes to one (dim, key) row per dim, the key in a
+    * string or a date field (no per-row formatting); one distinct shuffle
+    * (partial aggregation collapses per-partition first) and one global
+    * `limit(n·MaxDimCardinality + 1)` bound the transfer BEFORE the
+    * collect, so the guard itself cannot blow the driver. The limit is
+    * reached only when some dim holds more than [[MaxDimCardinality]]
+    * keys, and then the per-dim check below fails on it.
+    *
+    * Dims are metadata-cardinality by contract (the reference seeds
+    * 36/10/3/11 rows, schema_star.sql:198-268): the key set is a
+    * driver-sized collect — the same size bound that already makes these
+    * dims broadcast-join build sides. Ranking driver-side avoids a
+    * `row_number` over a global window, which (a) forced an
+    * all-rows-to-one-partition WindowExec, and (b) as a lazy subtree
+    * inside the fact's multi-join got re-aliased by the analyzer's
+    * self-join deduplication and re-scanned the raw source (PipelineSpec's
+    * scan-count test pins this).
+    *
+    * Null natural keys are dropped: the fact's equi-join lookup never
+    * matches null, and Spark (NULLS FIRST) vs DuckDB (NULLS LAST) disagree
+    * on where a null would rank. Dates rank chronologically, everything
+    * else in Scala String order (UTF-16 code units), which equals DuckDB's
+    * UTF-8 byte order for all BMP text — the fixtures' pt-BR accents
+    * included. */
+  private def dimKeys(records: DataFrame,
+                      naturals: Seq[String]): Map[String, DataFrame] = {
     val spark = records.sparkSession
-    val keyType = records.schema(natural).dataType
-    // limit(N+1) bounds the transfer BEFORE collecting, so the check
-    // itself cannot blow the driver
-    val vals = records.select(col(natural)).where(col(natural).isNotNull)
-      .distinct().limit(MaxDimCardinality + 1).collect().map(_.get(0)).toSeq
-    require(vals.length <= MaxDimCardinality,
-      s"dimension '$natural' exceeds $MaxDimCardinality distinct keys — " +
-        "not a metadata-scale dimension; model it as a fact-side column " +
-        "or raise MaxDimCardinality deliberately")
-    val sorted = vals.sortWith {
-      case (a: java.sql.Date, b: java.sql.Date) => a.getTime < b.getTime
-      case (a, b) => String.valueOf(a) < String.valueOf(b)
+    val isDate = naturals.map(n => n -> (records.schema(n).dataType == DateType)).toMap
+    val collected = records.select(explode(array(naturals.map { n =>
+        val (str, date) =
+          if (isDate(n)) (lit(null).cast(StringType), col(n))
+          else (col(n), lit(null).cast(DateType))
+        struct(lit(n).as("d"), str.as("s"), date.as("t"))
+      }: _*)).as("e"))
+      .select(col("e.*"))
+      .where(col("s").isNotNull || col("t").isNotNull)
+      .distinct()
+      .limit(naturals.size * MaxDimCardinality + 1)
+      .collect().groupBy(_.getString(0)).map { case (d, rows) =>
+        d -> rows.map(_.get(if (isDate(d)) 2 else 1)) }
+    collected.maxByOption(_._2.length).foreach { case (largest, keys) =>
+      require(keys.length <= MaxDimCardinality,
+        s"dimension '$largest' exceeds $MaxDimCardinality distinct keys — " +
+          "not a metadata-scale dimension; model it as a fact-side column " +
+          "or raise MaxDimCardinality deliberately")
     }
-    spark.createDataFrame(
-      java.util.Arrays.asList(sorted.zipWithIndex.map {
-        case (v, i) => org.apache.spark.sql.Row(i + 1, v) }: _*),
-      StructType(Seq(StructField(keyName, IntegerType, nullable = false),
-        StructField(natural, keyType))))
+    naturals.map { n =>
+      val ranked = collected.getOrElse(n, Array.empty[Any]).sortWith {
+        case (a: java.sql.Date, b: java.sql.Date) => a.getTime < b.getTime
+        case (a, b) => String.valueOf(a) < String.valueOf(b)
+      }
+      n -> spark.createDataFrame(
+        java.util.Arrays.asList(ranked.toSeq.zipWithIndex.map {
+          case (v, i) => org.apache.spark.sql.Row(i + 1, v) }: _*),
+        StructType(Seq(StructField(SurrogateKeys(n), IntegerType, nullable = false),
+          StructField(n, records.schema(n).dataType))))
+    }.toMap
   }
+
+  private def dimKeys(records: DataFrame, natural: String): DataFrame =
+    dimKeys(records, Seq(natural))(natural)
 
   /** S8/A4: dim_tempo — distinct months + calendar attributes
     * (schema_star.sql:19-27; /root/reference/etl/etl_ida.py:574-587). */
   def dimTempo(records: DataFrame): DataFrame =
-    rankedKeys(records, "ano_mes", "tempo_key").select(
+    dimKeys(records, "ano_mes").select(
       col("tempo_key"),
       col("ano_mes"),
       year(col("ano_mes")).as("ano"),
@@ -114,7 +145,7 @@ object IdaMart {
 
   /** S8/A4: dim_grupo_economico (schema_star.sql:35-41). */
   def dimGrupo(records: DataFrame): DataFrame =
-    rankedKeys(records, "grupo_economico", "grupo_key").select(
+    dimKeys(records, "grupo_economico").select(
       col("grupo_key"),
       col("grupo_economico").as("grupo_codigo"),
       col("grupo_economico").as("grupo_nome"),
@@ -124,7 +155,7 @@ object IdaMart {
 
   /** S8/A4: dim_servico (schema_star.sql:49-55). */
   def dimServico(records: DataFrame): DataFrame =
-    rankedKeys(records, "servico", "servico_key").select(
+    dimKeys(records, "servico").select(
       col("servico_key"),
       col("servico").as("servico_codigo"),
       col("servico").as("servico_nome"),
@@ -136,7 +167,7 @@ object IdaMart {
     * /root/reference/etl/etl_ida.py:600-620; rich seeded metadata lives in
     * [[MartSchema.seedDimVariavel]]). */
   def dimVariavel(records: DataFrame): DataFrame =
-    rankedKeys(records, "variavel", "variavel_key").select(
+    dimKeys(records, "variavel").select(
       col("variavel_key"),
       col("variavel").as("variavel_codigo"),
       col("variavel").as("variavel_nome"),
@@ -153,79 +184,26 @@ object IdaMart {
         col("grupo_economico"), col("servico"), col("variavel"),
         money2(col("valor"))))
 
-  /** All four dims' distinct key sets in ONE bounded pass: each record
-    * explodes to four (dim, canonical-string key) rows (dates travel as
-    * exact 'yyyy-MM-dd' strings), one distinct shuffle (partial aggregation
-    * collapses per-partition first, so shuffle bytes ≈ sum of per-dim
-    * distinct sets, same as four separate jobs), and a per-dim rank bounds
-    * every dim to [[MaxDimCardinality]]+1 rows BEFORE the collect. */
-  private def dimKeySets(records: DataFrame): Map[String, Seq[String]] = {
-    val tagged = records.select(explode(array(
-        struct(lit("ano_mes").as("d"),
-          date_format(col("ano_mes"), "yyyy-MM-dd").as("k")),
-        struct(lit("grupo_economico").as("d"), col("grupo_economico").as("k")),
-        struct(lit("servico").as("d"), col("servico").as("k")),
-        struct(lit("variavel").as("d"), col("variavel").as("k")))).as("e"))
-      .select(col("e.d").as("d"), col("e.k").as("k"))
-      .where(col("k").isNotNull)
-      .distinct()
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("d")).orderBy(col("k"))))
-      .filter(col("__rn") <= MaxDimCardinality + 1)
-    tagged.collect().groupBy(_.getString(0)).map { case (d, rows) =>
-      require(rows.length <= MaxDimCardinality,
-        s"dimension '$d' exceeds $MaxDimCardinality distinct keys — " +
-          "not a metadata-scale dimension; model it as a fact-side column " +
-          "or raise MaxDimCardinality deliberately")
-      d -> rows.map(_.getString(1)).toSeq
-    }
-  }
-
-  /** Single-column local relation over collected dim keys — the broadcast
-    * build side that never re-touches the raw source. */
-  private def localKeyFrame(spark: SparkSession, name: String,
-                            dataType: org.apache.spark.sql.types.DataType,
-                            values: Seq[Any]): DataFrame =
-    spark.createDataFrame(
-      java.util.Arrays.asList(values.map(v => org.apache.spark.sql.Row(v)): _*),
-      StructType(Seq(StructField(name, dataType))))
-
   /** J3 + S7: fact build — 4-way natural-key lookup (inner: a record whose
     * key matches no dim row — e.g. a null natural key, which an equi-join
     * never matches — is silently dropped like the reference), F8 md5 hash,
     * intra-batch dedup.
     *
-    * Scan discipline: recs is persisted; the ONE [[dimKeySets]] job both
-    * computes every dim's bounded key set and materializes the cache the
-    * main pass reads — the raw source is scanned exactly once and the
-    * cache exactly twice, independent of the dim count (PipelineSpec pins
-    * source scans with an accumulator). Deriving the dims lazily inside
-    * the join plan instead would re-scan the source per dim: the
-    * analyzer's self-join de-duplication re-aliases those subtrees past
-    * the persist. */
+    * Scan discipline: recs is persisted, and ONE [[dimKeys]] pass over all
+    * four dims both collects every dim's bounded key set and materializes
+    * the cache; the fact joins the resulting local key frames, the same
+    * frames the standalone dim builders project. So the raw source is
+    * scanned exactly once and the cache exactly twice (key pass, main
+    * pass), independent of the dim count (PipelineSpec pins source scans
+    * with an accumulator). Deriving the dims lazily inside the join plan
+    * instead would re-scan the source per dim: the analyzer's self-join
+    * de-duplication re-aliases those subtrees past the persist. */
   def fact(recs: DataFrame): DataFrame = {
-    val spark = recs.sparkSession
     val cached = recs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keys = dimKeySets(cached).withDefaultValue(Seq.empty[String])
-    val dt = dimTempo(localKeyFrame(spark, "ano_mes",
-      recs.schema("ano_mes").dataType,
-      keys("ano_mes").map(java.sql.Date.valueOf(_))))
-    val strType = org.apache.spark.sql.types.StringType
-    val dg = dimGrupo(localKeyFrame(spark, "grupo_economico", strType,
-      keys("grupo_economico")))
-    val ds = dimServico(localKeyFrame(spark, "servico", strType,
-      keys("servico")))
-    val dv = dimVariavel(localKeyFrame(spark, "variavel", strType,
-      keys("variavel")))
-    val hashed = hashRecords(cached)
-    hashed
-      .join(broadcast(dt.select(col("tempo_key"), col("ano_mes"))), Seq("ano_mes"))
-      .join(broadcast(dg.select(col("grupo_key"),
-        col("grupo_codigo").as("grupo_economico"))), Seq("grupo_economico"))
-      .join(broadcast(ds.select(col("servico_key"),
-        col("servico_codigo").as("servico"))), Seq("servico"))
-      .join(broadcast(dv.select(col("variavel_key"),
-        col("variavel_codigo").as("variavel"))), Seq("variavel"))
+    val naturals = Seq("ano_mes", "grupo_economico", "servico", "variavel")
+    val keys = dimKeys(cached, naturals)
+    naturals.foldLeft(hashRecords(cached)) { (df, n) =>
+        df.join(broadcast(keys(n)), Seq(n)) }
       .select(col("tempo_key"), col("grupo_key"), col("servico_key"),
         col("variavel_key"), col("valor").cast(DecimalType(15, 6)).as("valor"),
         col("arquivo_origem"), col("linha_origem"),
@@ -255,10 +233,14 @@ object IdaMart {
 
   /** S7 cross-batch idempotency: ON CONFLICT (hash_registro) DO NOTHING ->
     * left-anti join against the already-loaded fact. Appending the result of
-    * `load(existing, batch)` is a no-op when the batch was already loaded. */
+    * `load(existing, batch)` is a no-op when the batch was already loaded.
+    *
+    * Precondition: `batch` is already unique on `hash_registro` (both
+    * [[fact]] and the streaming ingest dedup it with [[firstWinsDedup]]);
+    * intra-batch dedup is not repeated here, because `dropDuplicates` would
+    * keep an arbitrary row per hash. */
   def load(existing: DataFrame, batch: DataFrame): DataFrame =
-    batch.dropDuplicates("hash_registro")
-      .join(existing.select(col("hash_registro")), Seq("hash_registro"), "left_anti")
+    batch.join(existing.select(col("hash_registro")), Seq("hash_registro"), "left_anti")
 
   /** Read the fact store, or None when it does not exist yet. ONLY a
     * missing path means "first load"; any other read failure propagates —

@@ -18,10 +18,6 @@ import graft.plans.IdaMart
   */
 object Ingest {
 
-  /** Hash-canonicalize a normalized record batch — delegates to the single
-    * canonical definition in [[IdaMart.hashRecords]]. */
-  def hashRecords(batch: DataFrame): DataFrame = IdaMart.hashRecords(batch)
-
   /** Start an idempotent append of streaming records into `factDir`. */
   def start(records: DataFrame, factDir: String,
             checkpointDir: String): StreamingQuery =
@@ -30,7 +26,7 @@ object Ingest {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         val deduped = IdaMart.firstWinsDedup(
-          hashRecords(batch), Seq("hash_registro"),
+          IdaMart.hashRecords(batch), Seq("hash_registro"),
           Seq("arquivo_origem", "linha_origem"))
         val fresh = IdaMart.readStoreIfExists(spark, factDir) match {
           case Some(ex) => IdaMart.load(ex, deduped)

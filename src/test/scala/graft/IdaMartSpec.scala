@@ -56,6 +56,56 @@ class IdaMartSpec extends SparkSpec {
     assert(out.length == expected.length + 1)
   }
 
+  /** `n` records with `n` distinct grupo_economico values. */
+  private def grupoRecords(n: Int) =
+    spark.range(n).select(
+      to_date(lit("2020-01-01")).as("ano_mes"),
+      format_string("G%06d", col("id")).as("grupo_economico"),
+      lit("SMP").as("servico"), lit("ACESSOS").as("variavel"),
+      lit(1.0).as("valor"), lit("g.csv").as("arquivo_origem"),
+      col("id").as("linha_origem"))
+
+  test("a dim with MaxDimCardinality + 1 keys fails dimGrupo and fact, " +
+    "naming the dim") {
+    val recs = grupoRecords(IdaMart.MaxDimCardinality + 1)
+    try {
+      Seq(() => IdaMart.dimGrupo(recs), () => IdaMart.fact(recs)).foreach { build =>
+        val e = intercept[IllegalArgumentException](build())
+        assert(e.getMessage.contains("dimension 'grupo_economico' exceeds " +
+          s"${IdaMart.MaxDimCardinality} distinct keys"), e.getMessage)
+      }
+    } finally recs.unpersist()
+  }
+
+  test("a dim with exactly MaxDimCardinality keys passes dimGrupo") {
+    val dim = IdaMart.dimGrupo(grupoRecords(IdaMart.MaxDimCardinality))
+    assert(dim.count() == IdaMart.MaxDimCardinality)
+    assert(dim.agg(max("grupo_key")).first().getInt(0) == IdaMart.MaxDimCardinality)
+  }
+
+  test("fact surrogate keys equal the standalone dim builders' keys") {
+    val recs = IdaMart.records(spark, sf0001)
+    val fact = IdaMart.fact(recs).cache()
+    try {
+      Seq(
+        ("ano_mes", "tempo_key", IdaMart.dimTempo(recs).select("ano_mes", "tempo_key")),
+        ("grupo_economico", "grupo_key", IdaMart.dimGrupo(recs)
+          .select(col("grupo_codigo").as("grupo_economico"), col("grupo_key"))),
+        ("servico", "servico_key", IdaMart.dimServico(recs)
+          .select(col("servico_codigo").as("servico"), col("servico_key"))),
+        ("variavel", "variavel_key", IdaMart.dimVariavel(recs)
+          .select(col("variavel_codigo").as("variavel"), col("variavel_key")))
+      ).foreach { case (natural, key, dim) =>
+        val fromFact = fact.join(recs, Seq("arquivo_origem", "linha_origem"))
+          .select(col(natural), col(key)).distinct()
+          .collect().map(r => r.get(0) -> r.getInt(1)).toSet
+        val fromDim = dim.collect().map(r => r.get(0) -> r.getInt(1)).toSet
+        assert(fromFact.nonEmpty)
+        assert(fromFact == fromDim, s"$key differs between fact and dim")
+      }
+    } finally { fact.unpersist(); recs.unpersist() }
+  }
+
   test("header probe: token row, month row, default (S6)") {
     assert(Probe.findHeaderRow(Seq(
       Seq("x", "y"), Seq("GRUPO ECONÔMICO", "VARIÁVEL"))) == 1)

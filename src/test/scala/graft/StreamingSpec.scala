@@ -116,7 +116,7 @@ class StreamingSpec extends SparkSpec {
     }
     runOnce()
     val n1 = spark.read.parquet(factDir).count()
-    val expected = Ingest.hashRecords(records)
+    val expected = IdaMart.hashRecords(records)
       .select("hash_registro").distinct().count()
     assert(n1 == expected)
 
