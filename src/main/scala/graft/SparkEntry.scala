@@ -137,25 +137,65 @@ object SparkEntry {
     java.lang.Long.toHexString(h)
   }
 
-  /** Spool staging for the streaming gates: the events fixture rewritten as
-    * ONE parquet file (single deterministic micro-batch under AvailableNow).
-    * Memoized per (sfDir, variant) — staging is harness setup, not part of
-    * the streaming operator under test, so Bench iterations and multiple
-    * stream queries over the same variant reuse one write. */
-  private val spoolCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** One staged artifact the gates read — a fixture file set, a trained
+    * model, an index, a booted database. Staging is harness setup (a
+    * production pipeline materializes these offline, once), not part of
+    * the operator under test. `build(s, dir, out)` derives the artifact
+    * for sf dir `dir`, writing any files under `out`: a fresh scratch dir
+    * named from the spool name and [[fnv64Hex]] of `dir|name`. The result
+    * is memoized per (spool, sf dir), so bench iterations and every gate
+    * sharing the artifact read one build. Builds are deterministic, so a
+    * gate reads identical data whether [[stageAllSpools]] staged the spool
+    * or the gate's own first touch did. Declaring a spool (`Spool(name)`)
+    * is what registers it for [[stageAllSpools]]. */
+  private[graft] final class Spool[A <: AnyRef] private (
+      val name: String, build: (SparkSession, String, String) => A) {
+    def apply(s: SparkSession, dir: String): A = {
+      val key = s"$dir|$name"
+      // builds are serialized under one re-entrant lock (a build may read
+      // another spool); a hit never takes it
+      val v = Option(Spool.built.get(key)).getOrElse(Spool.built.synchronized {
+        Option(Spool.built.get(key)).getOrElse {
+          val a = build(s, dir, scratchDir(s"$name-${fnv64Hex(key)}"))
+          Spool.built.put(key, a)
+          a
+        }
+      })
+      v.asInstanceOf[A]
+    }
+  }
+  private[graft] object Spool {
+    private val built = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+    private val declared = scala.collection.mutable.ArrayBuffer.empty[Spool[_ <: AnyRef]]
+    /** Every declared spool, in declaration order. */
+    def all: Seq[Spool[_ <: AnyRef]] = declared.toSeq
+    def apply[A <: AnyRef](name: String)(
+        build: (SparkSession, String, String) => A): Spool[A] = {
+      // the name is the memo key: a duplicate would serve another build
+      require(!declared.exists(_.name == name), s"duplicate spool '$name'")
+      val sp = new Spool(name, build)
+      declared += sp
+      sp
+    }
+  }
 
-  /** Memoized multimodal fixture staging, shared by the standalone gates
-    * and the curate_report images/audio sections — one staging write per
-    * (sfDir, kind) regardless of how many gates read the files back. */
-  private def mediaSpool(s: SparkSession, dir: String, kind: String,
-                         stage: (org.apache.spark.sql.DataFrame, String) => Int)
-      : String =
-    spoolCache.computeIfAbsent(s"$dir|$kind", key => {
-      val d = scratchDir(s"$kind-${fnv64Hex(key)}")
-      stage(Tables.documents(s, dir), d)
-      d
-    })
+  /** Multimodal fixture staging, shared by the standalone gates and the
+    * curate_report images/audio sections. */
+  private def mediaSpool(kind: String)(stage: (DataFrame, String) => Int)
+      : Spool[String] =
+    Spool(kind)((s, dir, out) => { stage(Tables.documents(s, dir), out); out })
+  private val pngBlobs = mediaSpool("png-blobs")(Multimodal.writePngFixture(_, _))
+  private val pngReal = mediaSpool("png-real")(Multimodal.writeRealPngFixture(_, _))
+  private val pngMeta = mediaSpool("png-meta")(Multimodal.writeMetaPngFixture(_, _))
+  private val pngNearDup =
+    mediaSpool("png-neardup")(Multimodal.writeNearDupPngFixture(_, _))
+  private val wavReal = mediaSpool("wav-real")(Multimodal.writeRealWavFixture(_, _))
+  private val wavMeta = mediaSpool("wav-meta")(Multimodal.writeMetaWavFixture(_, _))
+  private val wavNearDup =
+    mediaSpool("wav-neardup")(Multimodal.writeNearDupWavFixture(_, _))
+  private val apngReal = mediaSpool("apng-real")(Multimodal.writeApngFixture(_, _))
+  private val apngNearDup =
+    mediaSpool("apng-neardup")(Multimodal.writeNearDupApngFixture(_, _))
 
   /** ONE dialect-shared ANSI string for the `f_recursive_cte` gate, used
     * VERBATIM on both sides: Spark executes it through `spark.sql` (4.x
@@ -183,50 +223,37 @@ object SparkEntry {
       |GROUP BY s.month_start
       |ORDER BY s.month_start""".stripMargin
 
-  /** Corpus-learned BPE merge table, memoized per sfDir (training is
-    * deterministic, so the table is value-identical on every call — the
-    * pcaFitCache discipline: train once, apply per query/iteration). */
-  private val bpeLearnedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
-  private def learnedBpeMerges(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeLearnedCache.computeIfAbsent(dir, _ =>
-      graft.functions.Bpe.trainMerges(Tables.documents(s, dir), rounds = 8)
-        .map { case (a, b, _) => (a, b) })
+  /** Corpus-learned BPE merge table (training is deterministic, so the
+    * table is value-identical on every call — the pcaFit discipline:
+    * train once, apply per query/iteration). */
+  private val learnedBpeMerges = Spool("bpe-merges")((s, dir, _) =>
+    graft.functions.Bpe.trainMerges(Tables.documents(s, dir), rounds = 8)
+      .map { case (a, b, _) => (a, b) })
 
-  /** Memoized IVF-PQ index builds per sfDir (see `ann_ivfpq_topk`). */
-  private val ivfPqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ivfPqIndex(s: SparkSession, dir: String): String =
-    ivfPqIndexCache.computeIfAbsent(dir, d => {
-      val p = scratchDir(s"ivfpq-idx-${fnv64Hex(d)}")
-      graft.operators.Pq.writeIvfPqIndex(Tables.embeddings(s, d), p,
-        iters = 2, ivfIters = 2)
-      p
-    })
+  /** IVF-PQ index build (see `ann_ivfpq_topk`). */
+  private val ivfPqIndex = Spool("ivfpq-index")((s, dir, out) => {
+    graft.operators.Pq.writeIvfPqIndex(Tables.embeddings(s, dir), out,
+      iters = 2, ivfIters = 2)
+    out
+  })
 
-  /** Memoized trained-classifier weights per sfDir (see
-    * `quality_classifier_trained_score`): ≤ vocab-bucket (bucket, w)
-    * pairs — metadata, cached as plain values (pcaFitCache discipline). */
-  private val classifierWeightsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Double)]]()
-  private def trainedClassifierWeights(s: SparkSession,
-                                       dir: String): Array[(Long, Double)] =
-    classifierWeightsCache.computeIfAbsent(dir, d =>
-      graft.operators.TextClassifier.trainWeightValues(Tables.documents(s, d)))
+  /** Trained-classifier weights (see `quality_classifier_trained_score`):
+    * ≤ vocab-bucket (bucket, w) pairs — metadata, held as plain values
+    * (pcaFit discipline). */
+  private val trainedClassifierWeights = Spool("classifier-weights")(
+    (s, dir, _) =>
+      graft.operators.TextClassifier.trainWeightValues(Tables.documents(s, dir)))
 
-  /** Memoized PCA fit per sfDir (see `embed_pca_project`): the learned
-    * component is 64 doubles — metadata, cached as plain values so it
-    * survives Bench's between-query cache/RDD cleanup (a cached DataFrame
-    * backed by checkpointed RDDs would not). */
-  private val pcaFitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
-  private def pcaFit(s: SparkSession, dir: String): Array[Double] =
-    pcaFitCache.computeIfAbsent(dir, d =>
-      graft.operators.VectorAgg.pcaPowerTop(Tables.embeddings(s, d))
-        .orderBy(col("dim")).collect().map(_.getDouble(1)))
+  /** PCA fit (see `embed_pca_project`): the learned component is 64
+    * doubles — metadata, held as plain values so it survives Bench's
+    * between-query cache/RDD cleanup (a cached DataFrame backed by
+    * checkpointed RDDs would not). */
+  private val pcaFit = Spool("pca-fit")((s, dir, _) =>
+    graft.operators.VectorAgg.pcaPowerTop(Tables.embeddings(s, dir))
+      .orderBy(col("dim")).collect().map(_.getDouble(1)))
 
-  /** Memoized VERIFIED near-dup pair frame (the planted docs ∪ perturbed
-    * corpus at Jaccard ≥ 0.6) per sfDir, staged to parquet — the offline
+  /** VERIFIED near-dup pair frame (the planted docs ∪ perturbed
+    * corpus at Jaccard ≥ 0.6), staged to parquet — the offline
     * artifact every cluster-family consumer reads. In a production dedup
     * pipeline the MinHash→band→verify pair derivation runs ONCE and its
     * output feeds many consumers (clustering, survivor selection, recall
@@ -237,52 +264,45 @@ object SparkEntry {
     * `dedup_minhash`; pair staging is deterministic, so the staged frame
     * is value-identical to an inline derivation and the oracles are
     * unchanged. */
-  private val pairSpoolCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def spooledNearDupPairs(s: SparkSession, dir: String): String =
-    pairSpoolCache.computeIfAbsent(dir, d => {
-      val spool = scratchDir(s"neardup-pairs-${fnv64Hex(d)}")
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      Dedup.minhashNearDups(docs.unionByName(perturbed), threshold = 0.6)
-        .coalesce(1).write.mode("overwrite").parquet(spool)
-      spool
-    })
-  private def spooledEvents(s: SparkSession, dir: String, variant: String,
-                            doubled: Boolean = false,
-                            msTrunc: Boolean = false): String =
-    // the key carries ALL parameters that shape the staged data, not just
-    // the variant name — a call site reusing a variant with different flags
-    // must stage its own spool, never silently read another call's files
-    spoolCache.computeIfAbsent(s"$dir|$variant|$doubled|$msTrunc", key => {
-      val spool = scratchDir(
-        s"spool-$variant-${fnv64Hex(key)}")
-      val ev0 = Tables.events(s, dir)
-      val ev1 = if (msTrunc)
-        ev0.withColumn("ts", date_trunc("MILLISECOND", col("ts"))) else ev0
-      val ev2 = if (doubled) ev1.unionAll(ev1) else ev1
-      ev2.coalesce(1).write.mode("overwrite").parquet(spool)
-      spool
-    })
+  private val spooledNearDupPairs = Spool("neardup-pairs")((s, dir, out) => {
+    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+    val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
+      regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
+    Dedup.minhashNearDups(docs.unionByName(perturbed), threshold = 0.6)
+      .coalesce(1).write.mode("overwrite").parquet(out)
+    out
+  })
 
-  /** Memoized EXACT-dedup tier over the planted full-copy corpus (docs ∪
+  /** The events fixture rewritten as ONE parquet file for the streaming
+    * gates (a single deterministic micro-batch under AvailableNow), after
+    * `shape`. */
+  private def eventsSpool(name: String)(shape: DataFrame => DataFrame)
+      : Spool[String] =
+    Spool(name)((s, dir, out) => {
+      shape(Tables.events(s, dir)).coalesce(1).write.mode("overwrite")
+        .parquet(out)
+      out
+    })
+  private val eventsTumble = eventsSpool("events-tumble")(identity)
+  private val eventsSess = eventsSpool("events-sess")(
+    _.withColumn("ts", date_trunc("MILLISECOND", col("ts"))))
+  private val eventsDedup = eventsSpool("events-dedup")(ev => ev.unionAll(ev))
+
+  /** EXACT-dedup tier over the planted full-copy corpus (docs ∪
     * id-shifted copies — the `dedup_exact` gate's corpus), staged to
     * parquet. Same rationale as [[spooledNearDupPairs]]: in a production
     * pipeline the dedup tiers materialize once and feed every downstream
     * consumer; `dedup_exact` still measures the derivation in isolation,
     * composites (curate_report) read the staged frame. Deterministic, so
     * value-identical to an inline derivation. */
-  private def spooledExactDups(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|exact-dups", key => {
-      val spool = scratchDir(s"exact-dups-${fnv64Hex(key)}")
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val copies = docs.select((col("doc_id") + 100000).as("doc_id"),
-        col("text"))
-      Dedup.exact(docs.unionByName(copies))
-        .coalesce(1).write.mode("overwrite").parquet(spool)
-      spool
-    })
+  private val spooledExactDups = Spool("exact-dups")((s, dir, out) => {
+    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+    val copies = docs.select((col("doc_id") + 100000).as("doc_id"),
+      col("text"))
+    Dedup.exact(docs.unionByName(copies))
+      .coalesce(1).write.mode("overwrite").parquet(out)
+    out
+  })
 
   /** The 3-batch streaming near-dup replay
     * ([[graft.streaming.NearDupStream]]): one parquet file appended +
@@ -298,7 +318,7 @@ object SparkEntry {
     val src = s"$root/src"
     val store = s"$root/store"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    val slices = streamDedupSliceSpool(s, dir, baseMod = None)
+    val slices = streamDedupSliceSpool(s, dir)
     (0 until 3).foreach { i =>
       stageSliceFile(slices, i, src)
       withStatePartitions(s, 8) {
@@ -310,22 +330,24 @@ object SparkEntry {
     store
   }
 
-  /** The arrival slices of [[streamDedupSlices]] staged ONCE per
-    * (sf dir, baseMod) as single-file parquet — input staging, the
-    * [[spooledEvents]] discipline: deriving the fixture's arrival files
-    * from the documents table is harness setup (a production stream's
-    * input FILES simply exist), so bench iterations re-run the replay —
-    * the operator under test — against identical bytes instead of
-    * re-deriving and re-writing the three slices per iteration. */
-  private def streamDedupSliceSpool(s: SparkSession, dir: String,
-                                    baseMod: Option[Int]): String =
-    spoolCache.computeIfAbsent(s"$dir|stream-dedup-slices-$baseMod", key => {
-      val d = scratchDir(s"streamdedup-slices-${fnv64Hex(key)}")
+  /** The arrival slices of [[streamDedupSlices]] staged as single-file
+    * parquet — input staging, the [[eventsSpool]] discipline: deriving the
+    * fixture's arrival files from the documents table is harness setup (a
+    * production stream's input FILES simply exist), so bench iterations
+    * re-run the replay — the operator under test — against identical
+    * bytes instead of re-deriving and re-writing the slices per iteration.
+    * One spool for the full corpus, one for the lifecycle gates' `% 3`
+    * subset. */
+  private def sliceSpool(name: String, baseMod: Option[Int]): Spool[String] =
+    Spool(name)((s, dir, out) => {
       streamDedupSlices(s, dir, baseMod).zipWithIndex.foreach {
-        case (slice, i) => slice.coalesce(1).write.parquet(s"$d/slice=$i")
+        case (slice, i) => slice.coalesce(1).write.parquet(s"$out/slice=$i")
       }
-      d
+      out
     })
+  private val streamDedupSliceSpool = sliceSpool("stream-dedup-slices", None)
+  private val streamDedupSliceSpoolMod3 =
+    sliceSpool("stream-dedup-slices-mod3", Some(3))
 
   /** Copy staged slice `i`'s parquet part file(s) into a stream source
     * dir under a unique name — the "one file appended per micro-batch"
@@ -349,7 +371,7 @@ object SparkEntry {
     * run on the % 3 subset (oracle-memory rationale at
     * [[graft.functions.SketchOracleSql.streamDedupRetractOracleSql]]). */
   private def streamDedupSlices(s: SparkSession, dir: String,
-                                baseMod: Option[Int] = None): Seq[DataFrame] = {
+                                baseMod: Option[Int]): Seq[DataFrame] = {
     val docs0 = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       .filter(col("text").isNotNull)
     val docs = baseMod.fold(docs0)(m =>
@@ -380,17 +402,15 @@ object SparkEntry {
     }
   }
 
-  /** Memoized PREFIX store of the lifecycle gates: batches 0-2 of the
+  /** PREFIX store of the lifecycle gates: batches 0-2 of the
     * `% 3`-subset slices applied via the SAME
     * [[graft.streaming.NearDupStream.applyBatch]] the stream runs — the
     * production posture (the curated index exists once; admin ops and new
     * batches run against it), so the gates measure their own tail, not a
     * rebuild of the prefix the stream gates already measure. */
-  private def streamDedupLifecycleSpool(s: SparkSession,
-                                        dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|stream-dedup-prefix", key => {
-      val store = scratchDir(s"streamdedup-prefix-${fnv64Hex(key)}")
-      val slices = streamDedupSliceSpool(s, dir, baseMod = Some(3))
+  private val streamDedupLifecycleSpool =
+    Spool("stream-dedup-prefix")((s, dir, store) => {
+      val slices = streamDedupSliceSpoolMod3(s, dir)
       withStatePartitions(s, 8) {
         (0 until 3).foreach { i =>
           graft.streaming.NearDupStream.applyBatch(
@@ -419,152 +439,107 @@ object SparkEntry {
       if (compactBeforeLast) graft.streaming.NearDupStream.compact(s, store)
       graft.streaming.NearDupStream.applyBatch(
         s.read.schema(graft.streaming.NearDupStream.docSchema).parquet(
-          s"${streamDedupSliceSpool(s, dir, baseMod = Some(3))}/slice=3"),
+          s"${streamDedupSliceSpoolMod3(s, dir)}/slice=3"),
         3L, store)
     }
     store
   }
 
-  /** Memoized [[streamDedupReplay]] store, for the gates that READ the
-    * stream's artifacts (log view) without re-running the replay the
-    * main gate measures. */
-  private def streamDedupSpool(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|stream-dedup", key =>
-      streamDedupReplay(s, dir,
-        scratchDir(s"streamdedup-spool-${fnv64Hex(key)}")))
+  /** [[streamDedupReplay]] store, for the gates that READ the stream's
+    * artifacts (log view) without re-running the replay the main gate
+    * measures. */
+  private val streamDedupSpool = Spool("stream-dedup")(streamDedupReplay)
 
   /** Staged single-file parquet input for `stream_jdbc_exactly_once` —
-    * the fact rows the streaming replay reads. Hoisted out of the gate
-    * body so [[stageAllSpools]] can stage it during bench warmup. */
-  private def jdbcStreamFactSpool(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|jdbc-stream-fact", key => {
-      val d = scratchDir(s"jdbcstream-in-${fnv64Hex(key)}")
-      IdaMart.fact(
-          IdaMart.records(s, dir).filter(col("linha_origem") % 4 === 0))
-        .select(col("tempo_key"), col("grupo_key"), col("servico_key"),
-          col("variavel_key"), col("valor"), col("arquivo_origem"),
-          col("linha_origem"), col("hash_registro"))
-        .coalesce(1).write.mode("overwrite").parquet(d)
-      d
-    })
+    * the fact rows the streaming replay reads. */
+  private val jdbcStreamFactSpool = Spool("jdbc-stream-fact")((s, dir, out) => {
+    IdaMart.fact(
+        IdaMart.records(s, dir).filter(col("linha_origem") % 4 === 0))
+      .select(col("tempo_key"), col("grupo_key"), col("servico_key"),
+        col("variavel_key"), col("valor"), col("arquivo_origem"),
+        col("linha_origem"), col("hash_registro"))
+      .coalesce(1).write.mode("overwrite").parquet(out)
+    out
+  })
 
   /** Staged single-file parquet input for `stream_ingest_exactly_once`. */
-  private def ingestRecordsSpool(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|ingest-records", key => {
-      val d = scratchDir(s"ingest-in-${fnv64Hex(key)}")
-      IdaMart.records(s, dir).coalesce(1).write.mode("overwrite").parquet(d)
-      d
-    })
+  private val ingestRecordsSpool = Spool("ingest-records")((s, dir, out) => {
+    IdaMart.records(s, dir).coalesce(1).write.mode("overwrite").parquet(out)
+    out
+  })
 
   /** Staged two-batch store (batch B adds a column) for
     * `s_schema_evolution`. */
-  private def schemaEvoSpool(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|schema-evo", key => {
-      val d = scratchDir(s"schema-evo-${fnv64Hex(key)}")
-      val docs = Tables.documents(s, dir)
-      docs.filter(col("doc_id") % 2 === 0)
-        .select(col("doc_id"), col("text"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$d/batch=a")
-      docs.filter(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), col("text"), col("lang"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$d/batch=b")
-      d
-    })
+  private val schemaEvoSpool = Spool("schema-evo")((s, dir, out) => {
+    val docs = Tables.documents(s, dir)
+    docs.filter(col("doc_id") % 2 === 0)
+      .select(col("doc_id"), col("text"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=a")
+    docs.filter(col("doc_id") % 2 === 1)
+      .select(col("doc_id"), col("text"), col("lang"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=b")
+    out
+  })
 
   /** Staged bucketed tables for `j_bucketed` (zero-shuffle SMJ layout).
     * Returns the per-dir table-name SUFFIX: the table names are keyed by
-    * `fnv64Hex(dir)` like every other spool — fixed global names would let
-    * a second sf dir staged in the same session overwrite the tables while
-    * the first dir's cache entry still claims "staged", silently serving
-    * the wrong dir's data to `j_bucketed` (r16 ADVICE). */
-  private def bucketedTablesSpool(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|bucketed-tables", _ => {
-      val sfx = fnv64Hex(dir)
-      Tables.orders(s, dir).write.mode("overwrite")
-        .bucketBy(8, "o_custkey").sortBy("o_custkey")
-        .saveAsTable(s"graft_orders_b_$sfx")
-      Tables.customer(s, dir).write.mode("overwrite")
-        .bucketBy(8, "c_custkey").sortBy("c_custkey")
-        .saveAsTable(s"graft_customer_b_$sfx")
-      sfx
-    })
+    * `fnv64Hex(dir)` — fixed global names would let a second sf dir
+    * staged in the same session overwrite the tables while the first
+    * dir's spool still claims "staged", silently serving the wrong dir's
+    * data to `j_bucketed` (r16 ADVICE). */
+  private val bucketedTablesSpool = Spool("bucketed-tables")((s, dir, _) => {
+    val sfx = fnv64Hex(dir)
+    Tables.orders(s, dir).write.mode("overwrite")
+      .bucketBy(8, "o_custkey").sortBy("o_custkey")
+      .saveAsTable(s"graft_orders_b_$sfx")
+    Tables.customer(s, dir).write.mode("overwrite")
+      .bucketBy(8, "c_custkey").sortBy("c_custkey")
+      .saveAsTable(s"graft_customer_b_$sfx")
+    sfx
+  })
 
   /** Staged user_id-clustered event files for `s_bloom_file_skip`. */
-  private def bloomSkipSpool(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|bloomskip", key => {
-      val d = scratchDir(s"bloomskip-${fnv64Hex(key)}")
-      graft.sources.StatsManifest.writeClustered(
-        Tables.events(s, dir).filter(col("event_id").isNotNull),
-        d, "user_id", nFiles = 8)
-      d
-    })
+  private val bloomSkipSpool = Spool("bloomskip")((s, dir, out) => {
+    graft.sources.StatsManifest.writeClustered(
+      Tables.events(s, dir).filter(col("event_id").isNotNull),
+      out, "user_id", nFiles = 8)
+    out
+  })
 
-  /** Force-materialize every memoized staging artifact — file spools AND
-    * trained-model value caches — for a given sf dir. The bench harness
-    * calls this ONCE during warmup, before any timed loop: staging is
-    * harness setup (a production pipeline materializes these artifacts
-    * offline, once), and a first touch landing inside a timed iteration
+  /** Embedded Derby database booted with `ensure`'s DDL for the JDBC gates.
+    * Boot + DDL is harness setup; each gate call starts from the
+    * fresh-table state via TRUNCATE, which is load-indistinguishable from
+    * a new database. Returns the JDBC url. */
+  private def derbySpool(name: String)(ensure: String => Unit): Spool[String] =
+    Spool(name)((_, _, out) => {
+      // derby.log + scratch under the session temp root, never the repo
+      if (System.getProperty("derby.system.home") == null)
+        System.setProperty("derby.system.home",
+          System.getProperty("java.io.tmpdir"))
+      val url = s"jdbc:derby:$out/ida;create=true"
+      ensure(url)
+      url
+    })
+  private val derbyFact =
+    derbySpool("derby-fact")(graft.sources.JdbcSink.ensureFactTable(_))
+  private val derbyDim =
+    derbySpool("derby-dim")(graft.sources.JdbcSink.ensureDimGrupoTables(_))
+  private val derbyStream =
+    derbySpool("derby-stream")(graft.sources.JdbcSink.ensureFactTable(_))
+
+  /** Force-materialize every declared [[Spool]] for a given sf dir, in
+    * declaration order. The bench harness calls this ONCE during warmup,
+    * before any timed loop: a first touch landing inside a timed iteration
     * charges a whole staging pipeline to whichever gate happened to run
-    * first (the r15 verdict's `graph_hits` bimodality hypothesis). Every
-    * entry here is deterministic and keyed the same way the gate bodies
-    * key it, so gates read identical data whether staged here or lazily.
-    * Returns the number of artifacts staged. */
+    * first (the r15 verdict's `graph_hits` bimodality hypothesis). Returns
+    * the number of artifacts staged. */
   def stageAllSpools(s: SparkSession, dir: String): Int = {
-    val stagers: Seq[(String, () => Any)] = Seq(
-      "neardup-pairs" -> (() => spooledNearDupPairs(s, dir)),
-      "exact-dups" -> (() => spooledExactDups(s, dir)),
-      "events-tumble" -> (() => spooledEvents(s, dir, "tumble")),
-      "events-sess" -> (() => spooledEvents(s, dir, "sess", msTrunc = true)),
-      "events-dedup" -> (() => spooledEvents(s, dir, "dedup", doubled = true)),
-      "jdbc-stream-fact" -> (() => jdbcStreamFactSpool(s, dir)),
-      "ingest-records" -> (() => ingestRecordsSpool(s, dir)),
-      "schema-evo" -> (() => schemaEvoSpool(s, dir)),
-      "bucketed-tables" -> (() => bucketedTablesSpool(s, dir)),
-      "bloomskip" -> (() => bloomSkipSpool(s, dir)),
-      "png-blobs" -> (() =>
-        mediaSpool(s, dir, "png-blobs", Multimodal.writePngFixture(_, _))),
-      "png-real" -> (() =>
-        mediaSpool(s, dir, "png-real", Multimodal.writeRealPngFixture(_, _))),
-      "png-meta" -> (() =>
-        mediaSpool(s, dir, "png-meta", Multimodal.writeMetaPngFixture(_, _))),
-      "png-neardup" -> (() =>
-        mediaSpool(s, dir, "png-neardup",
-          Multimodal.writeNearDupPngFixture(_, _))),
-      "wav-real" -> (() =>
-        mediaSpool(s, dir, "wav-real", Multimodal.writeRealWavFixture(_, _))),
-      "wav-meta" -> (() =>
-        mediaSpool(s, dir, "wav-meta", Multimodal.writeMetaWavFixture(_, _))),
-      "wav-neardup" -> (() =>
-        mediaSpool(s, dir, "wav-neardup",
-          Multimodal.writeNearDupWavFixture(_, _))),
-      "apng-real" -> (() =>
-        mediaSpool(s, dir, "apng-real", Multimodal.writeApngFixture(_, _))),
-      "apng-neardup" -> (() =>
-        mediaSpool(s, dir, "apng-neardup",
-          Multimodal.writeNearDupApngFixture(_, _))),
-      "curated-corpus" -> (() => incrementalCrawlFixture(s, dir)),
-      "curate-staged" -> (() => curateStagedSpool(s, dir)),
-      "curate-dedup" -> (() => curateDedupSpool(s, dir)),
-      "kmeans-fit" -> (() => kmeansFitSpool(s, dir)),
-      "mh-index-append" -> (() => minhashIndexAppendSpool(s, dir)),
-      "corpus-dedup-artifacts" -> (() => corpusDedupArtifactsSpool(s, dir)),
-      "stream-dedup-slices" -> (() => streamDedupSliceSpool(s, dir, None)),
-      "stream-dedup-slices-mod3" -> (() =>
-        streamDedupSliceSpool(s, dir, Some(3))),
-      "stream-dedup" -> (() => streamDedupSpool(s, dir)),
-      "stream-dedup-prefix" -> (() => streamDedupLifecycleSpool(s, dir)),
-      "ivfpq-index" -> (() => ivfPqIndex(s, dir)),
-      "bpe-merges" -> (() => learnedBpeMerges(s, dir)),
-      "classifier-weights" -> (() => trainedClassifierWeights(s, dir)),
-      "pca-fit" -> (() => pcaFit(s, dir)),
-      "cluster-reps" -> (() => clusterRepsSpool(s, dir)),
-      "scc-memo" -> (() => sccMemo(s, dir).count()))
-    stagers.foreach { case (name, f) =>
+    Spool.all.foreach { sp =>
       val t0 = System.nanoTime()
-      f()
-      System.err.println(f"[spool] $name staged in ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      sp(s, dir)
+      System.err.println(f"[spool] ${sp.name} staged in ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
-    stagers.size
+    Spool.all.size
   }
 
   /** Stateful-streaming gates keep one state store per shuffle partition,
@@ -652,24 +627,22 @@ object SparkEntry {
     * `curate_incremental`'s own oracle, which restates the chain from the
     * raw fixture); the inline derivation itself stays measured by
     * `dedup_incremental`. */
-  private def curatedCorpusSpool(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|curated-corpus", key => {
-      val d = scratchDir(s"curated-corpus-${fnv64Hex(key)}")
-      Tables.documents(s, dir).filter(col("text").isNotNull)
-        .filter(col("doc_id") % 3 =!= 0)
-        .select(col("doc_id"), col("source"), col("text"))
-        .select(col("doc_id"), TextFns.redactPii(col("text")).as("text"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$d/docs")
-      val corpus = s.read.parquet(s"$d/docs")
-      val (hashes, bandIdx, shHashes) =
-        graft.plans.Curation.noveltyArtifacts(corpus)
-      hashes.coalesce(1).write.mode("overwrite").parquet(s"$d/hashes")
-      bandIdx.coalesce(1).write.mode("overwrite").parquet(s"$d/bands")
-      shHashes.coalesce(1).write.mode("overwrite").parquet(s"$d/shingles")
-      d
-    })
+  private val curatedCorpusSpool = Spool("curated-corpus")((s, dir, out) => {
+    Tables.documents(s, dir).filter(col("text").isNotNull)
+      .filter(col("doc_id") % 3 =!= 0)
+      .select(col("doc_id"), col("source"), col("text"))
+      .select(col("doc_id"), TextFns.redactPii(col("text")).as("text"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$out/docs")
+    val corpus = s.read.parquet(s"$out/docs")
+    val (hashes, bandIdx, shHashes) =
+      graft.plans.Curation.noveltyArtifacts(corpus)
+    hashes.coalesce(1).write.mode("overwrite").parquet(s"$out/hashes")
+    bandIdx.coalesce(1).write.mode("overwrite").parquet(s"$out/bands")
+    shHashes.coalesce(1).write.mode("overwrite").parquet(s"$out/shingles")
+    out
+  })
 
-  /** Memoized connected-components labeling of the staged verified
+  /** Connected-components labeling of the staged verified
     * near-dup pairs — the cluster-rep artifact every survivor-selection
     * consumer reads (`dedup_survivors`, `dedup_cluster_survivors`,
     * `text_dedup_topk`). The CC DERIVATION itself stays measured by
@@ -678,15 +651,13 @@ object SparkEntry {
     * and serves the (doc_id, cluster_rep) table to every downstream
     * consumer, which is exactly this shape. Deterministic (min-id rep),
     * so value-identical to an inline labeling. */
-  private def clusterRepsSpool(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|cluster-reps", key => {
-      val d = scratchDir(s"cluster-reps-${fnv64Hex(key)}")
-      Cluster.connectedComponents(s.read.parquet(spooledNearDupPairs(s, dir)))
-        .coalesce(1).write.mode("overwrite").parquet(d)
-      d
-    })
+  private val clusterRepsSpool = Spool("cluster-reps")((s, dir, out) => {
+    Cluster.connectedComponents(s.read.parquet(spooledNearDupPairs(s, dir)))
+      .coalesce(1).write.mode("overwrite").parquet(out)
+    out
+  })
 
-  /** Memoized stage 1–7 output of the crawl-to-shards chain
+  /** Stage 1–7 output of the crawl-to-shards chain
     * (Curation.curateStaged over the crawl fixture), staged to parquet —
     * the spool discipline the dedup tiers already follow: the DERIVATION
     * is measured by `curate_to_shards` (which runs the whole chain
@@ -694,16 +665,14 @@ object SparkEntry {
     * artifact a production pipeline would have written between stages
     * anyway. Deterministic, so value-identical to an inline derivation;
     * the diag's oracle still restates the full chain. */
-  private def curateStagedSpool(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|curate-staged", key => {
-      val d = scratchDir(s"curate-staged-${fnv64Hex(key)}")
-      val (crawl, bench) = curateCrawlFixture(s, dir)
-      graft.plans.Curation.curateStaged(crawl, bench)
-        .coalesce(1).write.mode("overwrite").parquet(d)
-      d
-    })
+  private val curateStagedSpool = Spool("curate-staged")((s, dir, out) => {
+    val (crawl, bench) = curateCrawlFixture(s, dir)
+    graft.plans.Curation.curateStaged(crawl, bench)
+      .coalesce(1).write.mode("overwrite").parquet(out)
+    out
+  })
 
-  /** Memoized stage 1–4 artifacts of the crawl-to-shards chain (exact-
+  /** Stage 1–4 artifacts of the crawl-to-shards chain (exact-
     * deduped doc ids, verified near-dup pairs, dropped-bucket report),
     * staged to parquet — the [[curateStagedSpool]] discipline: the
     * DERIVATION stays measured by `curate_to_shards`, which runs the whole
@@ -712,21 +681,19 @@ object SparkEntry {
     * pipeline would have written between stages anyway. Deterministic, so
     * value-identical to an inline derivation; both diag oracles still
     * restate the full chain from the raw fixture. */
-  private def curateDedupSpool(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|curate-dedup", key => {
-      val d = scratchDir(s"curate-dedup-${fnv64Hex(key)}")
-      val (crawl, _) = curateCrawlFixture(s, dir)
-      val (exactDeduped, pairs, report) =
-        graft.plans.Curation.curateDedupStages(crawl)
-      exactDeduped.select(col("doc_id")).coalesce(1)
-        .write.mode("overwrite").parquet(s"$d/docs")
-      pairs.select(col("a"), col("b")).coalesce(1)
-        .write.mode("overwrite").parquet(s"$d/pairs")
-      report.coalesce(1).write.mode("overwrite").parquet(s"$d/report")
-      d
-    })
+  private val curateDedupSpool = Spool("curate-dedup")((s, dir, out) => {
+    val (crawl, _) = curateCrawlFixture(s, dir)
+    val (exactDeduped, pairs, report) =
+      graft.plans.Curation.curateDedupStages(crawl)
+    exactDeduped.select(col("doc_id")).coalesce(1)
+      .write.mode("overwrite").parquet(s"$out/docs")
+    pairs.select(col("a"), col("b")).coalesce(1)
+      .write.mode("overwrite").parquet(s"$out/pairs")
+    report.coalesce(1).write.mode("overwrite").parquet(s"$out/report")
+    out
+  })
 
-  /** Memoized k=8 Lloyd-refined codebook per sf dir, staged to parquet —
+  /** k=8 Lloyd-refined codebook, staged to parquet —
     * the pcaFit / classifier-weights discipline: TRAINING is measured by
     * `kmeans_converged` (which runs the same seed + 3 Lloyd rounds
     * inline); the APPLY gates (`dedup_semantic`, `kmeans_db_index`) read
@@ -734,64 +701,59 @@ object SparkEntry {
     * k-bounded tails. Decimal-carrier Lloyd with id tie-breaks is
     * deterministic, so the staged codebook is value-identical to an
     * inline fit and both oracles still restate the full training chain. */
-  private def kmeansFitSpool(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|kmeans-fit", key => {
-      val d = scratchDir(s"kmeans-fit-${fnv64Hex(key)}")
-      val embs = Tables.embeddings(s, dir).filter(col("embedding").isNotNull)
-      graft.operators.VectorAgg.kmeansLloyd(embs,
-          Similarity.sampledCodebook(embs, codebookSize = 8), maxIters = 3)
-        .select(col("centroid_id"), col("centroid"))
-        .coalesce(1).write.mode("overwrite").parquet(d)
-      d
-    })
+  private val kmeansFitSpool = Spool("kmeans-fit")((s, dir, out) => {
+    val embs = Tables.embeddings(s, dir).filter(col("embedding").isNotNull)
+    graft.operators.VectorAgg.kmeansLloyd(embs,
+        Similarity.sampledCodebook(embs, codebookSize = 8), maxIters = 3)
+      .select(col("centroid_id"), col("centroid"))
+      .coalesce(1).write.mode("overwrite").parquet(out)
+    out
+  })
 
   /** Incrementally-MAINTAINED MinHash band index: the corpus bands written
     * once, the batch's bands APPENDED (never a rebuild) — the artifact
     * shape a continuously-fed 100-TB dedup tier maintains, where
     * re-sketching the corpus per batch is the cost you must not pay.
-    * Memoized per sf dir; deterministic (band rows are pure functions of
-    * the text), so the appended store is value-identical to a fresh
-    * rebuild over corpus ∪ batch — which is exactly what the
-    * `s_minhash_index_append` gate proves against the dedup_minhash
-    * oracle. */
-  private def minhashIndexAppendSpool(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|mh-index-append", key => {
-      val d = scratchDir(s"mh-index-${fnv64Hex(key)}")
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val sh = docs.select(col("doc_id"),
-        TextFns.wordShingles(col("text"), 3).as("sh"))
-      Dedup.minhashBandBuckets(sh, "doc_id", "sh")
-        .write.mode("overwrite").parquet(d)
-      val batch = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      val bsh = batch.select(col("doc_id"),
-        TextFns.wordShingles(col("text"), 3).as("sh"))
-      Dedup.minhashBandBuckets(bsh, "doc_id", "sh")
-        .write.mode("append").parquet(d)
-      d
-    })
+    * Deterministic (band rows are pure functions of the text), so the
+    * appended store is value-identical to a fresh rebuild over corpus ∪
+    * batch — which is exactly what the `s_minhash_index_append` gate
+    * proves against the dedup_minhash oracle. */
+  private val minhashIndexAppendSpool =
+    Spool("mh-index-append")((s, dir, out) => {
+    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+    val sh = docs.select(col("doc_id"),
+      TextFns.wordShingles(col("text"), 3).as("sh"))
+    Dedup.minhashBandBuckets(sh, "doc_id", "sh")
+      .write.mode("overwrite").parquet(out)
+    val batch = docs.select((col("doc_id") + 100000).as("doc_id"),
+      regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
+    val bsh = batch.select(col("doc_id"),
+      TextFns.wordShingles(col("text"), 3).as("sh"))
+    Dedup.minhashBandBuckets(bsh, "doc_id", "sh")
+      .write.mode("append").parquet(out)
+    out
+  })
 
   /** The corpus side's BOTH near-dup artifacts, materialized once per sf
     * dir: `bands/` ([[graft.operators.Dedup.minhashBandBuckets]] rows) and
     * `shingles/` (xxhash64-hashed distinct shingle sets — the verify-side
     * artifact). Together they are everything the asymmetric per-batch
     * probe needs; the batch never touches corpus text. */
-  private def corpusDedupArtifactsSpool(s: SparkSession, dir: String): String =
-    spoolCache.computeIfAbsent(s"$dir|corpus-dedup-artifacts", key => {
-      val d = scratchDir(s"corpus-art-${fnv64Hex(key)}")
-      val sh = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"))
-        .select(col("doc_id"),
-          TextFns.wordShingles(col("text"), 3).as("__sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Dedup.minhashBandBuckets(sh, "doc_id", "__sh")
-        .write.mode("overwrite").parquet(s"$d/bands")
-      sh.select(col("doc_id"),
-          transform(col("__sh"), x => xxhash64(x)).as("sh"))
-        .write.mode("overwrite").parquet(s"$d/shingles")
-      sh.unpersist(blocking = false)
-      d
-    })
+  private val corpusDedupArtifactsSpool =
+    Spool("corpus-dedup-artifacts")((s, dir, out) => {
+    val sh = Tables.documents(s, dir)
+      .select(col("doc_id"), col("text"))
+      .select(col("doc_id"),
+        TextFns.wordShingles(col("text"), 3).as("__sh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Dedup.minhashBandBuckets(sh, "doc_id", "__sh")
+      .write.mode("overwrite").parquet(s"$out/bands")
+    sh.select(col("doc_id"),
+        transform(col("__sh"), x => xxhash64(x)).as("sh"))
+      .write.mode("overwrite").parquet(s"$out/shingles")
+    sh.unpersist(blocking = false)
+    out
+  })
 
   /** The planted MEGA-BUCKET family for the `dedup_*_capped` gates: 40
     * rotations of [[graft.functions.SketchOracleSql.RotationWords]], each
@@ -1383,29 +1345,22 @@ object SparkEntry {
     er.join(a, Seq("sr")).join(b, Seq("tr")).select(col("src"), col("dst"))
   }
 
-  private val sccCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long)]]()
-
   /** The iterative [[graft.operators.Graph.scc]] run is the cost (its
     * fixpoint loops are ~25 tiny jobs); three gates consume the SAME
-    * 500-row result, so it is computed once per sf dir — the
-    * mediaSpool memoization discipline. The cache holds the COLLECTED
-    * rows (bounded: the 500-node fixture), not a checkpointed frame — a
-    * cached RDD would die under the bench's inter-query unpersist sweep
-    * and take every later consumer down with it; a local 500-row table
-    * serves (and broadcasts) from the driver without cluster state.
-    * Keyed on dir ALONE (the bpeLearnedCache discipline): the fixture
-    * derivation is a deterministic pure function of the parquet under
-    * `dir`, so the rows are value-identical across sessions — the former
-    * `System.identityHashCode(session)` key component added no isolation
-    * (identity hashes recycle after GC and can collide) and leaked one
-    * dead entry per retired session. */
+    * 500-row result, so it is spooled once per sf dir. The spool holds the
+    * COLLECTED rows (bounded: the 500-node fixture), not a checkpointed
+    * frame — a cached RDD would die under the bench's inter-query
+    * unpersist sweep and take every later consumer down with it; a local
+    * 500-row table serves (and broadcasts) from the driver without cluster
+    * state. Keyed on dir alone like every spool: the fixture derivation is
+    * a deterministic pure function of the parquet under `dir`, so the rows
+    * are value-identical across sessions. */
+  private val sccRows = Spool("scc-memo")((s, dir, _) =>
+    graft.operators.Graph.scc(sccFixtureEdges(s, dir), idOut = "node")
+      .collect().map(r => (r.getLong(0), r.getLong(1))))
   private def sccMemo(s: SparkSession, dir: String): DataFrame = {
-    val rows = sccCache.computeIfAbsent(dir, _ =>
-        graft.operators.Graph.scc(sccFixtureEdges(s, dir), idOut = "node")
-          .collect().map(r => (r.getLong(0), r.getLong(1))))
     import s.implicits._
-    rows.toSeq.toDF("node", "scc_id")
+    sccRows(s, dir).toSeq.toDF("node", "scc_id")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -1498,21 +1453,9 @@ object SparkEntry {
     // Result read back THROUGH spark.read.jdbc — write.jdbc + read.jdbc
     // both genuinely executed (JdbcSink scaladoc for the knob mapping).
     "s_jdbc_fact_load" -> ((s, dir) => {
-      // derby.log + scratch under the session temp root, never the repo
-      if (System.getProperty("derby.system.home") == null)
-        System.setProperty("derby.system.home",
-          System.getProperty("java.io.tmpdir"))
-      // database booted ONCE per sf dir (memoized — boot + DDL is harness
-      // setup); each call starts from the fresh-table state via TRUNCATE,
-      // which is load-indistinguishable from a new database while skipping
-      // the per-iteration Derby re-creation the gate used to pay
-      val url = spoolCache.computeIfAbsent(s"$dir|derby-fact", _ => {
-        val tag = s"derby-${fnv64Hex(dir)}"
-        val dbPath = scratchDir(tag) + "/ida"
-        val u = s"jdbc:derby:$dbPath;create=true"
-        graft.sources.JdbcSink.ensureFactTable(u)
-        u
-      })
+      // database booted once per sf dir (derbySpool); each call starts
+      // from the fresh-table state via TRUNCATE
+      val url = derbyFact(s, dir)
       graft.sources.JdbcSink.truncateTables(url, "FACT_IDA")
       // bounded quarter-batch: the replay/PK semantics are identical at
       // any batch size; the gate should cost a DB load, not dominate the
@@ -1545,19 +1488,10 @@ object SparkEntry {
     // and the new row inserted, through genuine staging-write + MERGE
     // (JdbcSink.upsertDimGrupo scaladoc).
     "s_jdbc_dim_upsert" -> ((s, dir) => {
-      if (System.getProperty("derby.system.home") == null)
-        System.setProperty("derby.system.home",
-          System.getProperty("java.io.tmpdir"))
-      // memoized boot + per-call TRUNCATE of dim AND staging (see
+      // spooled boot + per-call TRUNCATE of dim AND staging (see
       // s_jdbc_fact_load): the MERGE proof needs empty tables, not a new
       // database
-      val url = spoolCache.computeIfAbsent(s"$dir|derby-dim", _ => {
-        val tag = s"derby-dim-${fnv64Hex(dir)}"
-        val dbPath = scratchDir(tag) + "/ida"
-        val u = s"jdbc:derby:$dbPath;create=true"
-        graft.sources.JdbcSink.ensureDimGrupoTables(u)
-        u
-      })
+      val url = derbyDim(s, dir)
       graft.sources.JdbcSink.truncateTables(url, "DIM_GRUPO", "STG_DIM_GRUPO")
       val dim1 = IdaMart.dimGrupo(IdaMart.records(s, dir)).drop("grupo_key")
       val dim2 = dim1
@@ -1586,18 +1520,9 @@ object SparkEntry {
     // Ingest.startJdbc's anti-join prefilter into the PK-keyed Derby
     // table; the read-back must equal a single load or the PK aborts
     "stream_jdbc_exactly_once" -> ((s, dir) => {
-      if (System.getProperty("derby.system.home") == null)
-        System.setProperty("derby.system.home",
-          System.getProperty("java.io.tmpdir"))
-      // memoized boot + per-call TRUNCATE (see s_jdbc_fact_load): the
+      // spooled boot + per-call TRUNCATE (see s_jdbc_fact_load): the
       // replay proof needs an EMPTY fact table, not a new database
-      val url = spoolCache.computeIfAbsent(s"$dir|derby-stream", _ => {
-        val tag = s"derby-stream-${fnv64Hex(dir)}"
-        val dbPath = scratchDir(tag) + "/ida"
-        val u = s"jdbc:derby:$dbPath;create=true"
-        graft.sources.JdbcSink.ensureFactTable(u)
-        u
-      })
+      val url = derbyStream(s, dir)
       graft.sources.JdbcSink.truncateTables(url, "FACT_IDA")
       val inDir = jdbcStreamFactSpool(s, dir)
       val inSchema = s.read.parquet(inDir).schema
@@ -3710,7 +3635,7 @@ object SparkEntry {
     // text cast to binary) flow through the mapPartitions decode path.
     // The oracle restates signature+payload byte math from documents.text.
     "multimodal_binary_ingest" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "png-blobs", Multimodal.writePngFixture(_, _))
+      val spool = pngBlobs(s, dir)
       Multimodal.decodeStub(Multimodal.readBinaryMedia(s, spool)).toDF()
         .select(col("id"), col("kind"), col("n_bytes"), col("checksum"),
           element_at(col("features"), 1).cast("double").as("f0"))
@@ -3725,7 +3650,7 @@ object SparkEntry {
     // the HEX encoding (injective) because the oracle's sha256 is
     // VARCHAR-only and raw bytes are not valid UTF-8.
     "dedup_binary" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "png-blobs", Multimodal.writePngFixture(_, _))
+      val spool = pngBlobs(s, dir)
       val blobs = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.png").load(spool)
         .select(regexp_extract(col("path"), "blob_(\\d+)\\.png$", 1)
@@ -3747,7 +3672,7 @@ object SparkEntry {
     // at width 1+len%31, zero-padded) from documents.text, so a hash match
     // proves the decode round trip through every filter type.
     "multimodal_png_decode" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "png-real", Multimodal.writeRealPngFixture(_, _))
+      val spool = pngReal(s, dir)
       Multimodal.decodePngFiles(s, spool).toDF()
         .orderBy(col("id"))
     }),
@@ -3759,7 +3684,7 @@ object SparkEntry {
     // resized image's exact integer stats, every one restated by the
     // oracle from the document bytes the fixture encodes
     "multimodal_resize" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "png-real", Multimodal.writeRealPngFixture(_, _))
+      val spool = pngReal(s, dir)
       Multimodal.resizePngFiles(s, spool).toDF()
         .orderBy(col("id"))
     }),
@@ -3770,7 +3695,7 @@ object SparkEntry {
     // Chunk values are pure functions of doc_id, so the oracle restates
     // every removed byte exactly from the documents table
     "multimodal_metadata_strip" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "png-meta", Multimodal.writeMetaPngFixture(_, _))
+      val spool = pngMeta(s, dir)
       Multimodal.stripPngMetadata(s, spool).toDF()
         .orderBy(col("id"))
     }),
@@ -3783,7 +3708,7 @@ object SparkEntry {
     // values are pure functions of (doc_id, text), so the oracle restates
     // every removed byte from the documents table
     "multimodal_wav_metadata_strip" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "wav-meta", Multimodal.writeMetaWavFixture(_, _))
+      val spool = wavMeta(s, dir)
       Multimodal.stripWavMetadata(s, spool).toDF()
         .orderBy(col("id"))
     }),
@@ -3795,7 +3720,7 @@ object SparkEntry {
     // restates every decoded statistic from documents.text alone, so the
     // gate proves a genuine container parse, not byte-math over a blob
     "multimodal_wav_decode" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "wav-real", Multimodal.writeRealWavFixture(_, _))
+      val spool = wavReal(s, dir)
       Multimodal.decodeWavFiles(s, spool).toDF()
         .orderBy(col("id"))
     }),
@@ -3807,7 +3732,7 @@ object SparkEntry {
     // trailing odd sample dropped. Gated on exact integer stats of the
     // downsampled stream, restated from documents.text
     "multimodal_audio_downsample" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "wav-real", Multimodal.writeRealWavFixture(_, _))
+      val spool = wavReal(s, dir)
       Multimodal.downsampleWavFiles(s, spool).toDF()
         .orderBy(col("id"))
     }),
@@ -3819,7 +3744,7 @@ object SparkEntry {
     // restates it as the explode+window islands shape the operator
     // deliberately avoids
     "multimodal_audio_segments" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "wav-real", Multimodal.writeRealWavFixture(_, _))
+      val spool = wavReal(s, dir)
       Multimodal.wavSegments(s, spool).toDF()
         .orderBy(col("id"), col("seg_idx"))
     }),
@@ -3830,7 +3755,7 @@ object SparkEntry {
     // bands are for text; two 32-bit halves keep both engines in
     // non-negative integer arithmetic
     "multimodal_phash" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "png-real", Multimodal.writeRealPngFixture(_, _))
+      val spool = pngReal(s, dir)
       Multimodal.ahashPngFiles(s, spool).toDF()
         .orderBy(col("id"))
     }),
@@ -3844,7 +3769,7 @@ object SparkEntry {
     // actual multi-frame container, replacing the former stride-over-
     // bytes stub as the engine's frame-sampling story
     "multimodal_apng_frames" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "apng-real", Multimodal.writeApngFixture(_, _))
+      val spool = apngReal(s, dir)
       Multimodal.sampleApngFrames(s, spool, stride = 2).toDF()
         .orderBy(col("id"), col("frame_idx"))
     }),
@@ -3855,7 +3780,7 @@ object SparkEntry {
     // exact Hamming verify — the image analog of dedup_minhash, over a
     // genuinely decoded corpus
     "dedup_image_lsh" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "png-neardup", Multimodal.writeNearDupPngFixture(_, _))
+      val spool = pngNearDup(s, dir)
       Multimodal.imageNearDupPairs(
           Multimodal.ahashPngFiles(s, spool).toDF()
             .select(col("id"), col("ahash_a"), col("ahash_b")))
@@ -3868,7 +3793,7 @@ object SparkEntry {
     // banded-LSH candidate join + exact Hamming verify as the image path
     // (the pair stage is hash-generic by design) — never all-pairs
     "dedup_audio_lsh" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "wav-neardup", Multimodal.writeNearDupWavFixture(_, _))
+      val spool = wavNearDup(s, dir)
       Multimodal.imageNearDupPairs(
           Multimodal.audioFingerprint(s, spool).toDF()
             .select(col("id"), col("ahash_a"), col("ahash_b")))
@@ -3883,7 +3808,7 @@ object SparkEntry {
     // fingerprint — no frame explode shuffle — then the SAME banded-LSH
     // candidate join + exact Hamming verify as the image/audio paths
     "dedup_video_lsh" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "apng-neardup", Multimodal.writeNearDupApngFixture(_, _))
+      val spool = apngNearDup(s, dir)
       Multimodal.imageNearDupPairs(
           Multimodal.videoFingerprint(s, spool).toDF()
             .select(col("id"), col("ahash_a"), col("ahash_b")))
@@ -3896,7 +3821,7 @@ object SparkEntry {
     // per-frame-fingerprint -> segment pipeline over genuinely inflated
     // frames, all integer arithmetic
     "multimodal_scene_cuts" -> ((s, dir) => {
-      val spool = mediaSpool(s, dir, "apng-real", Multimodal.writeApngFixture(_, _))
+      val spool = apngReal(s, dir)
       Multimodal.apngSceneCuts(s, spool).toDF()
         .orderBy(col("id"), col("frame_idx"))
     }),
@@ -4268,7 +4193,7 @@ object SparkEntry {
     // window_sliding): same spool/AvailableNow/memory-sink harness as
     // stream_tumbling, each event fanning into size/slide windows
     "stream_sliding" -> ((s, dir) => {
-      val spool = spooledEvents(s, dir, "tumble")
+      val spool = eventsTumble(s, dir)
       val qn = "graft_stream_sliding"
       withStatePartitions(s, 4) {
         val q = graft.streaming.EventsStream.slidingAgg(
@@ -4288,7 +4213,7 @@ object SparkEntry {
     // the production mode is update into an upserting sink); fine for the
     // bounded replay == batch equivalence the oracle states directly
     "stream_topk" -> ((s, dir) => {
-      val spool = spooledEvents(s, dir, "tumble")
+      val spool = eventsTumble(s, dir)
       val qn = "graft_stream_topk"
       withStatePartitions(s, 4) {
         val q = graft.streaming.EventsStream.trendingAgg(
@@ -4305,7 +4230,7 @@ object SparkEntry {
     }),
 
     "stream_tumbling" -> ((s, dir) => {
-      val spool = spooledEvents(s, dir, "tumble")
+      val spool = eventsTumble(s, dir)
       val qn = "graft_stream_tumbling"
       withStatePartitions(s, 4) {
         val q = graft.streaming.EventsStream.tumblingAgg(
@@ -4326,7 +4251,7 @@ object SparkEntry {
     // DETERMINISTIC subset the oracle restates; the trailing windows
     // stay in state awaiting a watermark that never comes
     "stream_append_finalize" -> ((s, dir) => {
-      val spool = spooledEvents(s, dir, "tumble")
+      val spool = eventsTumble(s, dir)
       val qn = "graft_stream_append"
       withStatePartitions(s, 4) {
         val q = graft.streaming.EventsStream.tumblingAgg(
@@ -4386,7 +4311,7 @@ object SparkEntry {
     // stream==batch-on-bounded-input guarantee the other stream gates use.
     "stream_asof_join" -> ((s, dir) => {
       import s.implicits._
-      val spool = spooledEvents(s, dir, "tumble")
+      val spool = eventsTumble(s, dir)
       val tagged = graft.streaming.EventsStream.readEvents(s, spool)
         .filter(col("ts").isNotNull &&
           col("event_type").isin("click", "purchase"))
@@ -4418,7 +4343,7 @@ object SparkEntry {
     // which is exactly what the oracle computes (the batch cdc_merge
     // shape). Serving view filters tombstones.
     "stream_cdc_upsert" -> ((s, dir) => {
-      val spool = spooledEvents(s, dir, "tumble")
+      val spool = eventsTumble(s, dir)
       val storeDir = scratchDir("cdc-upsert") + "/store"
       def replay(): Unit = {
         val cp = scratchDir("cdc-upsert-cp")
@@ -4440,7 +4365,7 @@ object SparkEntry {
 
     "stream_sessionize_closed" -> ((s, dir) => {
       import s.implicits._
-      val spool = spooledEvents(s, dir, "sess", msTrunc = true)
+      val spool = eventsSess(s, dir)
       val typed = graft.streaming.EventsStream.readEvents(s, spool)
         .filter(col("ts").isNotNull)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -4468,7 +4393,7 @@ object SparkEntry {
     // condition bounds the join state (EventsStream.intervalJoin scaladoc).
     // Oracle = the batch interval join (j_stream_interval's SQL).
     "stream_interval_join" -> ((s, dir) => {
-      val spool = spooledEvents(s, dir, "tumble")
+      val spool = eventsTumble(s, dir)
       def side(t: String) = graft.streaming.EventsStream.readEvents(s, spool)
         .filter(col("event_type") === t)
       val qn = "graft_stream_interval"
@@ -4490,7 +4415,7 @@ object SparkEntry {
     // the emitted null set is exactly the unmatched clicks whose window
     // end falls below it — restated by the oracle
     "stream_outer_join" -> ((s, dir) => {
-      val spool = spooledEvents(s, dir, "tumble")
+      val spool = eventsTumble(s, dir)
       def side(t: String) = graft.streaming.EventsStream.readEvents(s, spool)
         .filter(col("event_type") === t)
       val qn = "graft_stream_outer"
@@ -4509,7 +4434,7 @@ object SparkEntry {
     // dropDuplicatesWithinWatermark must collapse it back to one row per
     // event_id. Oracle = the original events table.
     "stream_dedup" -> ((s, dir) => {
-      val spool = spooledEvents(s, dir, "dedup", doubled = true)
+      val spool = eventsDedup(s, dir)
       val qn = "graft_stream_dedup"
       withStatePartitions(s, 4) {
         val q = graft.streaming.EventsStream
@@ -4568,7 +4493,7 @@ object SparkEntry {
     // (dim re-broadcast per micro-batch, no state for the join itself).
     // Oracle = the batch analog; NULL user_ids drop via the inner join.
     "stream_static_join" -> ((s, dir) => {
-      val spool = spooledEvents(s, dir, "tumble")
+      val spool = eventsTumble(s, dir)
       val dim = Tables.events(s, dir).select(col("user_id")).distinct()
         .withColumn("cohort", (col("user_id") % 3).cast("int"))
       val qn = "graft_stream_static"
@@ -4593,7 +4518,7 @@ object SparkEntry {
     // the s7_fact_load shape without the star-key joins).
     "stream_ingest_exactly_once" -> ((s, dir) => {
       val recs = IdaMart.records(s, dir)
-      // spool staging is harness setup (like spooledEvents): memoized per
+      // spool staging is harness setup (a Spool): built once per
       // sf dir, so bench iterations re-run the ingest, not the stage write
       val inDir = ingestRecordsSpool(s, dir)
       val factDir = scratchDir("ingest-store") + "/fact"
@@ -4797,7 +4722,7 @@ object SparkEntry {
     // batch-id anti-join must keep partials single-counted, and the
     // recombined view must equal the one-shot batch aggregate (oracle)
     "stream_matview" -> ((s, dir) => {
-      val spool = spooledEvents(s, dir, "tumble")
+      val spool = eventsTumble(s, dir)
       val storeDir = scratchDir("matview") + "/view"
       def replay(): Unit = {
         val cp = scratchDir("matview-cp")
@@ -5041,7 +4966,7 @@ object SparkEntry {
     // ADC over 2-iter-trained PQ codes ranks them — the billion-vector
     // serving layout (Pq scaladoc); the oracle unrolls the same training
     // rounds. The index (quantizers + cell-partitioned codes) is built
-    // ONCE per sfDir and memoized like spooledEvents: index construction
+    // ONCE per sfDir as a Spool: index construction
     // is the offline build pass of a vector-serving system, not part of
     // the per-query serving cost, and training is deterministic so the
     // staged index is value-identical on every call. The query fn then
@@ -5354,30 +5279,28 @@ object SparkEntry {
       // composed report stages nothing the standalone gates haven't
       val images = stack("images",
         Multimodal.stripPngMetadata(s,
-            mediaSpool(s, dir, "png-meta", Multimodal.writeMetaPngFixture(_, _)))
+            pngMeta(s, dir))
           .toDF()
           .agg(count(lit(1)).as("png_files"),
             sum(col("bytes_removed")).as("png_bytes_removed"),
             count(when(col("pixels_intact"), lit(1))).as("png_pixels_intact"))
           .crossJoin(Multimodal.imageNearDupPairs(
               Multimodal.ahashPngFiles(s,
-                  mediaSpool(s, dir, "png-neardup",
-                    Multimodal.writeNearDupPngFixture(_, _)))
+                  pngNearDup(s, dir))
                 .toDF().select(col("id"), col("ahash_a"), col("ahash_b")))
             .agg(count(lit(1)).as("png_near_dup_pairs"))),
         Seq("png_files", "png_bytes_removed", "png_pixels_intact",
           "png_near_dup_pairs"))
       val audio = stack("audio",
         Multimodal.stripWavMetadata(s,
-            mediaSpool(s, dir, "wav-meta", Multimodal.writeMetaWavFixture(_, _)))
+            wavMeta(s, dir))
           .toDF()
           .agg(count(lit(1)).as("wav_files"),
             sum(col("bytes_removed")).as("wav_bytes_removed"),
             count(when(col("samples_intact"), lit(1))).as("wav_samples_intact"))
           .crossJoin(Multimodal.imageNearDupPairs(
               Multimodal.audioFingerprint(s,
-                  mediaSpool(s, dir, "wav-neardup",
-                    Multimodal.writeNearDupWavFixture(_, _)))
+                  wavNearDup(s, dir))
                 .toDF().select(col("id"), col("ahash_a"), col("ahash_b")))
             .agg(count(lit(1)).as("wav_near_dup_pairs"))),
         Seq("wav_files", "wav_bytes_removed", "wav_samples_intact",

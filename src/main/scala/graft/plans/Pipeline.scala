@@ -139,9 +139,9 @@ object Pipeline {
     try {
       // materialize the cache FIRST: this one job is the only pass over the
       // raw sources — it yields the transformed counter, fires the observe
-      // metrics (extracted), and warms the cache so the fact build's four
-      // concurrent broadcast-dim jobs read blocks instead of racing to
-      // recompute the cold source
+      // metrics (extracted), and warms the cache so the fact build's one
+      // dimension-key pass (IdaMart.dimKeys) and its main pass read blocks
+      // instead of recomputing the cold source
       val transformed = records.count()
       val extracted =
         sheets.map(_._2.get("extracted").asInstanceOf[Long]).sum

@@ -43,9 +43,9 @@ import org.apache.spark.sql.functions._
   * metadata-to-megabytes; a crawl of them is wide). Within one file the
   * StAX parse is a single streaming pass that never materializes the XML
   * tree. The header probe reuses [[Probe.findHeaderRow]] on the first
-  * `maxScan` parsed rows, mirroring [[RawIngest]]'s two-phase read; the
-  * DuckDB oracle reads a committed CSV mirror of the same grid (DuckDB has
-  * no ODS reader) generated from the same source of truth
+  * [[Probe.MaxScan]] parsed rows, mirroring [[RawIngest]]'s two-phase
+  * read; the DuckDB oracle reads a committed CSV mirror of the same grid
+  * (DuckDB has no ODS reader) generated from the same source of truth
   * (tools/make_ods_fixture.py), with grid equality additionally pinned in
   * OdsSpec. Untrusted-input hygiene: DTDs and external entities are
   * disabled on the parser. */
@@ -209,42 +209,22 @@ object Ods {
   }
 
   /** S4-S6 over a REAL ODS container: probe the header row on the first
-    * `maxScan` parsed grid rows ([[Probe.findHeaderRow]] — the same probe
-    * the delimited path uses), then project the data rows under the
+    * [[Probe.MaxScan]] parsed grid rows ([[Probe.findHeaderRow]] — the
+    * same probe the delimited path uses), then project the data rows under the
     * detected column names. Output matches
     * [[RawIngest.readWithDetectedHeader]]: `row_idx` (0-based data row),
     * the detected columns as nullable strings (blank cells -> NULL, like
     * `from_csv`'s empty-cell default — what the W3 forward-fill expects),
-    * and `ARQUIVO_ORIGEM`. */
+    * and `ARQUIVO_ORIGEM`. Single-workbook, like the delimited reader
+    * ([[RawIngest.requireSingleFile]]); [[readSheet]] itself stays
+    * glob-capable for schema-free raw parsing. */
   def readSheetWithDetectedHeader(spark: SparkSession, path: String,
-                                  sheet: String, maxScan: Int = 20): DataFrame = {
-    // single-workbook contract, enforced: over a glob/directory the
-    // per-file row_idx values collide, so the header probe and the
-    // row_idx > idx data filter would interleave grids from different
-    // workbooks (and ARQUIVO_ORIGEM would name the glob for every row).
-    // Multi-workbook ingest loops this reader per file ([[readSheet]]
-    // itself stays glob-capable for schema-free raw parsing).
-    val resolved = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.globStatus(new org.apache.hadoop.fs.Path(path)) match {
-        case null => Array.empty[org.apache.hadoop.fs.FileStatus]
-        case st => st.flatMap {
-          case d if d.isDirectory =>
-            fs.listStatus(d.getPath).filter(_.isFile)
-          case f => Array(f)
-        }
-      }
-    }
-    require(resolved.length == 1,
-      s"readSheetWithDetectedHeader: '$path' resolves to " +
-        s"${resolved.length} files — the detected-header read is " +
-        "single-workbook (per-file row_idx would interleave grids); " +
-        "loop per file for multi-workbook ingest")
+                                  sheet: String): DataFrame = {
+    RawIngest.requireSingleFile(spark, path, "readSheetWithDetectedHeader")
     val parsed = readSheet(spark, path, sheet)
-    val head: Seq[Seq[String]] = parsed.orderBy(col("row_idx")).limit(maxScan)
-      .collect().map(r => r.getSeq[String](1).toSeq).toSeq
-    val idx = Probe.findHeaderRow(head, maxScan)
+    val head: Seq[Seq[String]] = parsed.orderBy(col("row_idx"))
+      .limit(Probe.MaxScan).collect().map(r => r.getSeq[String](1).toSeq).toSeq
+    val idx = Probe.findHeaderRow(head)
     require(idx < head.length, s"header probe found no header in $path!$sheet")
     val names = RawIngest.dedupeNames(head(idx).map(_.trim))
     val fileName = new java.io.File(path).getName

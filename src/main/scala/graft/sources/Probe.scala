@@ -11,13 +11,15 @@ object Probe {
 
   private val monthPattern = "\\d{4}-\\d{2}".r
 
-  /** S6: find the header row in the first `maxScan` raw rows — a row
+  /** Raw rows the header probe reads from the head of a file or sheet. */
+  val MaxScan = 20
+
+  /** S6: find the header row in the first [[MaxScan]] raw rows — a row
     * containing both GRUPO and VARIAVEL tokens, or any `YYYY-MM` cell;
     * defaults to row 8 like the reference
     * (/root/reference/etl/etl_ida.py:259-274). */
-  def findHeaderRow(rows: Seq[Seq[Any]], maxScan: Int = 20,
-                    default: Int = 8): Int = {
-    val scan = rows.take(maxScan)
+  def findHeaderRow(rows: Seq[Seq[Any]], default: Int = 8): Int = {
+    val scan = rows.take(MaxScan)
     scan.indexWhere { cells =>
       val vals = cells.map(c => Option(c).map(_.toString).getOrElse(""))
       val joined = vals.mkString(" ").toUpperCase

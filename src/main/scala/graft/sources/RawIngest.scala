@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * `pd.read_excel(header=None)` probe, then re-read with `header=N`).
   *
   * Spark-first shape:
-  *  - the probe touches only the file head (`limit(maxScan)` on the text
-  *    source — partition 0 of a file scan IS the file head, so this is a
-  *    metadata-sized driver operation no matter how large the file);
+  *  - the probe touches only the file head (`limit(Probe.MaxScan)` on the
+  *    text source — partition 0 of a file scan IS the file head, so this is
+  *    a metadata-sized driver operation no matter how large the file);
   *  - the full read is a narrow text scan + `from_csv` parse. Line numbers
   *    come from `zipWithIndex`, which is deterministic for file-backed
   *    partitions (fixed byte ranges) — they drive the forward-fill order
@@ -59,24 +59,19 @@ object RawIngest {
     * splits it into the most cells wins — a wrong delimiter leaves the
     * header as one cell. The reference gets this tolerance from pandas'
     * spreadsheet reader (/root/reference/etl/etl_ida.py:215-242); here it
-    * is an explicit bounded probe (driver-side, `maxScan` lines). */
-  def detectDelim(spark: SparkSession, path: String, maxScan: Int = 20,
-                  candidates: Seq[String] = defaultDelimCandidates): String =
-    detectDelimFromHead(headLines(spark, path, maxScan), maxScan, candidates)
+    * is an explicit bounded probe (driver-side, [[Probe.MaxScan]] lines). */
+  def detectDelim(spark: SparkSession, path: String): String =
+    detectDelimFromHead(headLines(spark, path))
 
-  private def headLines(spark: SparkSession, path: String,
-                        maxScan: Int): Seq[String] =
-    spark.read.textFile(path).limit(maxScan).collect().toSeq
+  private def headLines(spark: SparkSession, path: String): Seq[String] =
+    spark.read.textFile(path).limit(Probe.MaxScan).collect().toSeq
 
-  private def detectDelimFromHead(head: Seq[String], maxScan: Int,
-                                  candidates: Seq[String]): String = {
-    candidates.foreach(requireSingleChar)
-    candidates.maxBy { d =>
+  private def detectDelimFromHead(head: Seq[String]): String =
+    delimCandidates.maxBy { d =>
       val cells: Seq[Seq[Any]] = head.map(splitQuoted(_, d.charAt(0)))
-      val idx = Probe.findHeaderRow(cells, maxScan, default = -1)
+      val idx = Probe.findHeaderRow(cells, default = -1)
       if (idx < 0) 0 else cells(idx).length
     }
-  }
 
   /** The quote-aware probe splitter and `from_csv`'s `sep` both operate on
     * single characters; a multi-char delimiter would silently split on its
@@ -86,36 +81,26 @@ object RawIngest {
       s"delimiter must be a single character (got '$delim'); " +
         "use \"auto\" for detection")
 
-  /** The default `delim = "auto"` candidate set — ONE definition shared by
-    * [[detectDelim]], [[probeHeader]], [[readWithDetectedHeader]] and
-    * [[readIdaExport]], so a custom candidate set threads through every
-    * "auto" path identically (it used to be honored by `detectDelim` but
-    * silently ignored by the read paths). */
-  val defaultDelimCandidates: Seq[String] = Seq(";", ",", "\t")
+  /** The `delim = "auto"` candidate set, shared by every "auto" path. */
+  private val delimCandidates: Seq[String] = Seq(";", ",", "\t")
 
-  /** S6 over a real file: probe the first `maxScan` physical lines.
+  /** S6 over a real file: probe the first [[Probe.MaxScan]] physical lines.
     * `delim = "auto"` autodetects via [[detectDelim]] over the SAME
     * collected head (one driver probe, not two). */
-  def probeHeader(spark: SparkSession, path: String, delim: String = ";",
-                  maxScan: Int = 20,
-                  candidates: Seq[String] = defaultDelimCandidates)
-      : DetectedHeader =
-    probeHeaderFromHead(headLines(spark, path, maxScan), path, delim,
-      maxScan, candidates)._1
+  def probeHeader(spark: SparkSession, path: String,
+                  delim: String = ";"): DetectedHeader =
+    probeHeaderFromHead(headLines(spark, path), path, delim)._1
 
   /** Shared probe core: returns the detected header AND the resolved
     * delimiter so `readWithDetectedHeader(delim = "auto")` costs one head
     * collect like the literal-delimiter path. */
   private def probeHeaderFromHead(head: Seq[String], path: String,
-                                  delim: String, maxScan: Int,
-                                  candidates: Seq[String])
-      : (DetectedHeader, String) = {
+                                  delim: String): (DetectedHeader, String) = {
     val d =
-      if (delim == "auto")
-        detectDelimFromHead(head, maxScan, candidates)
+      if (delim == "auto") detectDelimFromHead(head)
       else { requireSingleChar(delim); delim }
     val cells: Seq[Seq[Any]] = head.map(splitQuoted(_, d.charAt(0)))
-    val idx = Probe.findHeaderRow(cells, maxScan)
+    val idx = Probe.findHeaderRow(cells)
     require(idx < head.length, s"header probe found no header in $path")
     (DetectedHeader(idx, dedupeNames(cells(idx).map(_.toString.trim))), d)
   }
@@ -139,14 +124,12 @@ object RawIngest {
     * names (all strings — typing happens in the transform stage, like the
     * reference's `dtype=str` re-read). Output columns:
     * `row_idx` (0-based data-row index), the detected columns, and
-    * `ARQUIVO_ORIGEM` (file basename). */
+    * `ARQUIVO_ORIGEM` (file basename). `path` must name exactly one file
+    * ([[requireSingleFile]]). */
   def readWithDetectedHeader(spark: SparkSession, path: String,
-                             delim: String = ";", maxScan: Int = 20,
-                             candidates: Seq[String] = defaultDelimCandidates)
-      : DataFrame = {
-    val (det, d) =
-      probeHeaderFromHead(headLines(spark, path, maxScan), path, delim,
-        maxScan, candidates)
+                             delim: String = ";"): DataFrame = {
+    requireSingleFile(spark, path, "readWithDetectedHeader")
+    val (det, d) = probeHeaderFromHead(headLines(spark, path), path, delim)
     val parseSchema = StructType(
       det.columns.map(StructField(_, StringType, nullable = true)))
     val rowSchema = StructType(Seq(
@@ -169,11 +152,29 @@ object RawIngest {
   /** Raw IDA export -> the canonical wide frame [[graft.plans.IdaTransform]]
     * consumes: id headers renamed to their canonical underscore form, month
     * columns kept verbatim. */
-  def readIdaExport(spark: SparkSession, path: String, delim: String = ";",
-                    candidates: Seq[String] = defaultDelimCandidates)
-      : DataFrame =
-    renameIdaHeaders(
-      readWithDetectedHeader(spark, path, delim, candidates = candidates))
+  def readIdaExport(spark: SparkSession, path: String,
+                    delim: String = ";"): DataFrame =
+    renameIdaHeaders(readWithDetectedHeader(spark, path, delim))
+
+  /** Single-file contract of the detected-header readers, enforced with a
+    * file-system listing (no Spark job). Over a glob or directory the
+    * header probe reads only the first file's head, per-file line or
+    * grid-row numbers collide, so other files' preamble and header rows
+    * would enter as data, and `ARQUIVO_ORIGEM` would name the glob for
+    * every row. Multi-file ingest loops the reader per file. */
+  private[sources] def requireSingleFile(spark: SparkSession, path: String,
+                                         reader: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Option(fs.globStatus(p)).getOrElse(Array.empty).flatMap {
+      case d if d.isDirectory => fs.listStatus(d.getPath).filter(_.isFile)
+      case f => Array(f)
+    }
+    require(files.length == 1,
+      s"$reader: '$path' resolves to ${files.length} files — the " +
+        "detected-header read is single-file (per-file row numbers would " +
+        "interleave); loop per file for multi-file ingest")
+  }
 
   /** Canonical id-header renames, shared by the delimited and ODS raw
     * readers so both feed [[graft.plans.IdaTransform]] identically. */

@@ -16,10 +16,14 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
+  /** The records' month column: the source of `ano` and the in-file
+    * clustering order. */
+  private val DateCol = "ano_mes"
+
   /** Write a fact frame partitioned by year.
     *
     * If the frame already carries an `ano` column it is used verbatim;
-    * otherwise it is derived as `year(dateCol)`.
+    * otherwise it is derived as `year(ano_mes)`.
     *
     * Layout shape at scale: a plain `partitionBy("ano")` write emits one
     * file per (task x year) — at 100 TB with thousands of tasks that is a
@@ -31,12 +35,11 @@ object Sinks {
     * hashing and spreads rows evenly regardless of key skew.
     */
   def writeFactPartitioned(fact: DataFrame, path: String,
-                           dateCol: String = "ano_mes",
                            mode: String = "overwrite",
                            filesPerYear: Int = 8): Unit = {
     val withAno =
       if (fact.columns.contains("ano")) fact
-      else fact.withColumn("ano", year(col(dateCol)))
+      else fact.withColumn("ano", year(col(DateCol)))
     val shuffled = withAno.repartition(col("ano"),
       pmod(spark_partition_id(), lit(filesPerYear)).as("__salt"))
     // clustering rows by month WITHIN each file is what makes the "parquet
@@ -44,8 +47,8 @@ object Sinks {
     // carry year-wide month ranges and prune nothing. Only applicable when
     // the frame still carries the date column (the star fact carries keys).
     val clustered =
-      if (withAno.columns.contains(dateCol))
-        shuffled.sortWithinPartitions(col("ano"), col(dateCol))
+      if (withAno.columns.contains(DateCol))
+        shuffled.sortWithinPartitions(col("ano"), col(DateCol))
       else shuffled
     clustered
       .write.mode(mode)
@@ -71,14 +74,13 @@ object Sinks {
     * at `<path>__compacting` (the error message says so). NOT
     * concurrent-reader-safe — schedule like any maintenance job. */
   def compactFact(spark: org.apache.spark.sql.SparkSession, path: String,
-                  dateCol: String = "ano_mes",
                   filesPerYear: Int = 8): Unit = {
     val target = new org.apache.hadoop.fs.Path(path)
     val staging = new org.apache.hadoop.fs.Path(path + "__compacting")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(staging)) fs.delete(staging, true) // stale prior attempt
     writeFactPartitioned(spark.read.parquet(path), staging.toString,
-      dateCol, mode = "overwrite", filesPerYear = filesPerYear)
+      mode = "overwrite", filesPerYear = filesPerYear)
     require(fs.delete(target, true), s"could not remove $target for swap")
     require(fs.rename(staging, target),
       s"swap rename failed — compacted store preserved at $staging")

@@ -35,7 +35,7 @@ object Ingest {
         // same ano-partitioned layout as the batch pipeline's store, so a
         // store fed by either path prunes year predicates identically
         graft.sources.Sinks.writeFactPartitioned(fresh, factDir,
-          dateCol = "ano_mes", mode = "append")
+          mode = "append")
         ()
       }
       .trigger(Trigger.AvailableNow())

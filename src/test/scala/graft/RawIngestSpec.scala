@@ -137,4 +137,16 @@ class RawIngestSpec extends SparkSpec {
     assert(out.forall(
       _.getAs[String]("arquivo_origem") == "Telefonia_Fixa.csv"))
   }
+
+  test("detected-header read refuses a directory of several exports") {
+    val dir = java.nio.file.Files.createTempDirectory("raw-multi")
+    Seq(smp, scm).foreach { p =>
+      val f = java.nio.file.Paths.get(p)
+      java.nio.file.Files.copy(f, dir.resolve(f.getFileName))
+    }
+    val e = intercept[IllegalArgumentException] {
+      RawIngest.readIdaExport(spark, dir.toString)
+    }
+    assert(e.getMessage.contains("resolves to 2 files"), e.getMessage)
+  }
 }
