@@ -1,36 +1,35 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Fns._
-import graft.functions.{FixedLog, TextFns}
-import graft.operators.{AsofJoin, Cluster, Dedup, Multimodal, RangeJoin, Reshape, Similarity, Skew}
-import graft.plans.{IdaMart, IdaTransform, TaxaVariacao}
-import graft.sources.{RawIngest, Tables}
+import graft.gates.Gates
+import graft.operators.{Cluster, Dedup, Multimodal, Similarity}
+import graft.plans.TaxaVariacao
+import graft.sources.Tables
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2, each with a DuckDB-oracle `oracleSql` twin.
-  *
-  * Conventions (cross-engine exactness, see Fns):
-  *  - aggregates of double measures go through DECIMAL(18,6) and emit DOUBLE;
-  *  - every query ends in a total-order ORDER BY mirrored in the oracle;
-  *  - all computed columns are aliased identically on both sides.
-  */
+/** Driver contract: the public views over the gate registry
+  * ([[graft.gates.Gates]]), the committed fixture paths, the scratch
+  * directories and the staged artifacts ([[Spool]]) the gates read.
+  * Each gate, its Spark plan and its DuckDB oracle are declared once, as a
+  * [[graft.gates.Gate]] in the family file under `graft/gates/`. The
+  * helpers here are the ones two or more families share. */
 object SparkEntry {
 
   /** Flagship query (vw_taxa_variacao analog) on sf0.001. */
   def entry(spark: SparkSession): DataFrame =
     TaxaVariacao(spark, "/root/testdata/sf0.001")
 
-  /** pt-BR month-name CASE for oracle SQL (mirrors Fns.ptBrMonthName). */
-  private val mesNomeSql: String =
-    "CASE mes " + Seq("Janeiro", "Fevereiro", "Março", "Abril", "Maio",
-      "Junho", "Julho", "Agosto", "Setembro", "Outubro", "Novembro",
-      "Dezembro").zipWithIndex
-      .map { case (n, i) => s"WHEN ${i + 1} THEN '$n'" }
-      .mkString(" ") + " END"
+  /** Every gate's Spark plan, by gate name. Built once from the registry;
+    * lazy because the family objects read this object's fixture paths and
+    * spools while they initialize. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Gates.all.map(g => g.name -> g.plan).toMap
+
+  /** Every gate's DuckDB oracle SQL, by gate name (same keys as
+    * [[queries]]). */
+  lazy val oracleSql: Map[String, String] =
+    Gates.all.map(g => g.name -> g.oracleSql).toMap
 
   /** Committed raw-export fixtures dir, resolved against the working
     * directory at class-load and made absolute so the engine and the DuckDB
@@ -114,7 +113,7 @@ object SparkEntry {
   /** Fresh EMPTY scratch dir at a deterministic per-tag path: same tag ->
     * same path, previous contents removed first (so store gates start from
     * an empty dir and checkpoints are fresh per replay, without leaking). */
-  private def scratchDir(tag: String): String = {
+  private[graft] def scratchDir(tag: String): String = {
     val d = scratchRoot.resolve(tag)
     deleteRec(d)
     java.nio.file.Files.createDirectories(d)
@@ -127,7 +126,7 @@ object SparkEntry {
     * `scratchDir`'s wipe-on-reuse would delete the first key's staged data
     * while its cache entry still serves the path — for an index spool that
     * is silently-wrong results, not just a lost file. */
-  private def fnv64Hex(s: String): String = {
+  private[graft] def fnv64Hex(s: String): String = {
     var h = 0xcbf29ce484222325L
     val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     var i = 0
@@ -167,8 +166,14 @@ object SparkEntry {
   private[graft] object Spool {
     private val built = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
     private val declared = scala.collection.mutable.ArrayBuffer.empty[Spool[_ <: AnyRef]]
-    /** Every declared spool, in declaration order. */
-    def all: Seq[Spool[_ <: AnyRef]] = declared.toSeq
+    /** Every declared spool, in declaration order. Most spools are
+      * declared in the family object of the gates that read them, and a
+      * family object declares its spools when it initializes, so this
+      * first forces the gate registry. */
+    def all: Seq[Spool[_ <: AnyRef]] = {
+      val _ = Gates.all
+      declared.toSeq
+    }
     def apply[A <: AnyRef](name: String)(
         build: (SparkSession, String, String) => A): Spool[A] = {
       // the name is the memo key: a duplicate would serve another build
@@ -178,354 +183,6 @@ object SparkEntry {
       sp
     }
   }
-
-  /** Multimodal fixture staging, shared by the standalone gates and the
-    * curate_report images/audio sections. */
-  private def mediaSpool(kind: String)(stage: (DataFrame, String) => Int)
-      : Spool[String] =
-    Spool(kind)((s, dir, out) => { stage(Tables.documents(s, dir), out); out })
-  private val pngBlobs = mediaSpool("png-blobs")(Multimodal.writePngFixture(_, _))
-  private val pngReal = mediaSpool("png-real")(Multimodal.writeRealPngFixture(_, _))
-  private val pngMeta = mediaSpool("png-meta")(Multimodal.writeMetaPngFixture(_, _))
-  private val pngNearDup =
-    mediaSpool("png-neardup")(Multimodal.writeNearDupPngFixture(_, _))
-  private val wavReal = mediaSpool("wav-real")(Multimodal.writeRealWavFixture(_, _))
-  private val wavMeta = mediaSpool("wav-meta")(Multimodal.writeMetaWavFixture(_, _))
-  private val wavNearDup =
-    mediaSpool("wav-neardup")(Multimodal.writeNearDupWavFixture(_, _))
-  private val apngReal = mediaSpool("apng-real")(Multimodal.writeApngFixture(_, _))
-  private val apngNearDup =
-    mediaSpool("apng-neardup")(Multimodal.writeNearDupApngFixture(_, _))
-
-  /** ONE dialect-shared ANSI string for the `f_recursive_cte` gate, used
-    * VERBATIM on both sides: Spark executes it through `spark.sql` (4.x
-    * plans WITH RECURSIVE as UnionLoop/UnionLoopExec) and DuckDB runs it
-    * as the oracle — the front-door parity proof that a Postgres/DuckDB
-    * user's recursive SQL runs unchanged. The recursion generates the
-    * month spine (driver-free, 24 rows); the aggregation joins real
-    * orders against it. The 24-row spine side broadcasts, so the range
-    * join is a broadcast NLJ over one orders scan — at 100 TB you would
-    * pre-bucket orders by month, but the spine side stays tiny at any
-    * scale. Decimal-carrier revenue sum, DOUBLE only at emission. */
-  private val recursiveCteSql =
-    """WITH RECURSIVE spine AS (
-      |  SELECT DATE '1996-01-01' AS month_start
-      |  UNION ALL
-      |  SELECT month_start + INTERVAL 1 MONTH FROM spine
-      |  WHERE month_start < DATE '1997-12-01'
-      |)
-      |SELECT s.month_start, COUNT(o.o_orderkey) AS n_orders,
-      |  CAST(COALESCE(SUM(CAST(o.o_totalprice AS DECIMAL(18,6))), 0)
-      |    AS DOUBLE) AS revenue
-      |FROM spine s LEFT JOIN orders o
-      |  ON o.o_orderdate >= s.month_start
-      |  AND o.o_orderdate < s.month_start + INTERVAL 1 MONTH
-      |GROUP BY s.month_start
-      |ORDER BY s.month_start""".stripMargin
-
-  /** Corpus-learned BPE merge table (training is deterministic, so the
-    * table is value-identical on every call — the pcaFit discipline:
-    * train once, apply per query/iteration). */
-  private val learnedBpeMerges = Spool("bpe-merges")((s, dir, _) =>
-    graft.functions.Bpe.trainMerges(Tables.documents(s, dir), rounds = 8)
-      .map { case (a, b, _) => (a, b) })
-
-  /** IVF-PQ index build (see `ann_ivfpq_topk`). */
-  private val ivfPqIndex = Spool("ivfpq-index")((s, dir, out) => {
-    graft.operators.Pq.writeIvfPqIndex(Tables.embeddings(s, dir), out,
-      iters = 2, ivfIters = 2)
-    out
-  })
-
-  /** Trained-classifier weights (see `quality_classifier_trained_score`):
-    * ≤ vocab-bucket (bucket, w) pairs — metadata, held as plain values
-    * (pcaFit discipline). */
-  private val trainedClassifierWeights = Spool("classifier-weights")(
-    (s, dir, _) =>
-      graft.operators.TextClassifier.trainWeightValues(Tables.documents(s, dir)))
-
-  /** PCA fit (see `embed_pca_project`): the learned component is 64
-    * doubles — metadata, held as plain values so it survives Bench's
-    * between-query cache/RDD cleanup (a cached DataFrame backed by
-    * checkpointed RDDs would not). */
-  private val pcaFit = Spool("pca-fit")((s, dir, _) =>
-    graft.operators.VectorAgg.pcaPowerTop(Tables.embeddings(s, dir))
-      .orderBy(col("dim")).collect().map(_.getDouble(1)))
-
-  /** VERIFIED near-dup pair frame (the planted docs ∪ perturbed
-    * corpus at Jaccard ≥ 0.6), staged to parquet — the offline
-    * artifact every cluster-family consumer reads. In a production dedup
-    * pipeline the MinHash→band→verify pair derivation runs ONCE and its
-    * output feeds many consumers (clustering, survivor selection, recall
-    * audits); re-deriving it inside each of the four cluster-family gates
-    * made every one of them pay (and re-measure) the same upstream
-    * pipeline — the r9 verdict's remaining bench-integrity defect. The
-    * derivation itself is still measured, in isolation, by
-    * `dedup_minhash`; pair staging is deterministic, so the staged frame
-    * is value-identical to an inline derivation and the oracles are
-    * unchanged. */
-  private val spooledNearDupPairs = Spool("neardup-pairs")((s, dir, out) => {
-    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
-      regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-    Dedup.minhashNearDups(docs.unionByName(perturbed), threshold = 0.6)
-      .coalesce(1).write.mode("overwrite").parquet(out)
-    out
-  })
-
-  /** The events fixture rewritten as ONE parquet file for the streaming
-    * gates (a single deterministic micro-batch under AvailableNow), after
-    * `shape`. */
-  private def eventsSpool(name: String)(shape: DataFrame => DataFrame)
-      : Spool[String] =
-    Spool(name)((s, dir, out) => {
-      shape(Tables.events(s, dir)).coalesce(1).write.mode("overwrite")
-        .parquet(out)
-      out
-    })
-  private val eventsTumble = eventsSpool("events-tumble")(identity)
-  private val eventsSess = eventsSpool("events-sess")(
-    _.withColumn("ts", date_trunc("MILLISECOND", col("ts"))))
-  private val eventsDedup = eventsSpool("events-dedup")(ev => ev.unionAll(ev))
-
-  /** EXACT-dedup tier over the planted full-copy corpus (docs ∪
-    * id-shifted copies — the `dedup_exact` gate's corpus), staged to
-    * parquet. Same rationale as [[spooledNearDupPairs]]: in a production
-    * pipeline the dedup tiers materialize once and feed every downstream
-    * consumer; `dedup_exact` still measures the derivation in isolation,
-    * composites (curate_report) read the staged frame. Deterministic, so
-    * value-identical to an inline derivation. */
-  private val spooledExactDups = Spool("exact-dups")((s, dir, out) => {
-    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val copies = docs.select((col("doc_id") + 100000).as("doc_id"),
-      col("text"))
-    Dedup.exact(docs.unionByName(copies))
-      .coalesce(1).write.mode("overwrite").parquet(out)
-    out
-  })
-
-  /** The 3-batch streaming near-dup replay
-    * ([[graft.streaming.NearDupStream]]): one parquet file appended +
-    * one AvailableNow drain per batch — deterministic micro-batch
-    * boundaries by construction (the `stream_checkpoint_resume`
-    * discipline), no reliance on file-listing order. The slicing is the
-    * oracle's ([[graft.functions.SketchOracleSql.streamDedupOracleSql]]):
-    * batch 0 = even organic docs, batch 1 = +100000 exact copies of all
-    * docs, batch 2 = +200000 perturbed ∪ +300000 doubly-perturbed copies.
-    * Returns the store dir. */
-  private def streamDedupReplay(s: SparkSession, dir: String,
-                                root: String): String = {
-    val src = s"$root/src"
-    val store = s"$root/store"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    val slices = streamDedupSliceSpool(s, dir)
-    (0 until 3).foreach { i =>
-      stageSliceFile(slices, i, src)
-      withStatePartitions(s, 8) {
-        val q = graft.streaming.NearDupStream.start(
-          graft.streaming.NearDupStream.readDocs(s, src), store, s"$root/ck")
-        q.processAllAvailable(); q.stop()
-      }
-    }
-    store
-  }
-
-  /** The arrival slices of [[streamDedupSlices]] staged as single-file
-    * parquet — input staging, the [[eventsSpool]] discipline: deriving the
-    * fixture's arrival files from the documents table is harness setup (a
-    * production stream's input FILES simply exist), so bench iterations
-    * re-run the replay — the operator under test — against identical
-    * bytes instead of re-deriving and re-writing the slices per iteration.
-    * One spool for the full corpus, one for the lifecycle gates' `% 3`
-    * subset. */
-  private def sliceSpool(name: String, baseMod: Option[Int]): Spool[String] =
-    Spool(name)((s, dir, out) => {
-      streamDedupSlices(s, dir, baseMod).zipWithIndex.foreach {
-        case (slice, i) => slice.coalesce(1).write.parquet(s"$out/slice=$i")
-      }
-      out
-    })
-  private val streamDedupSliceSpool = sliceSpool("stream-dedup-slices", None)
-  private val streamDedupSliceSpoolMod3 =
-    sliceSpool("stream-dedup-slices-mod3", Some(3))
-
-  /** Copy staged slice `i`'s parquet part file(s) into a stream source
-    * dir under a unique name — the "one file appended per micro-batch"
-    * arrival the AvailableNow replay drains. */
-  private def stageSliceFile(sliceDir: String, i: Int, src: String): Unit = {
-    val from = java.nio.file.Paths.get(s"$sliceDir/slice=$i")
-    val files = java.nio.file.Files.list(from)
-    try files.forEach { p =>
-      val name = p.getFileName.toString
-      if (name.endsWith(".parquet") && !name.startsWith("."))
-        java.nio.file.Files.copy(p,
-          java.nio.file.Paths.get(src, s"slice$i-$name"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } finally files.close()
-  }
-
-  /** The four arrival slices of the stream-dedup fixtures, in batch order
-    * (the first three are [[streamDedupReplay]]'s; the fourth is the
-    * post-retraction batch of the lifecycle gates). `baseMod = Some(m)`
-    * restricts the base corpus to `doc_id % m == 0` — the lifecycle gates
-    * run on the % 3 subset (oracle-memory rationale at
-    * [[graft.functions.SketchOracleSql.streamDedupRetractOracleSql]]). */
-  private def streamDedupSlices(s: SparkSession, dir: String,
-                                baseMod: Option[Int]): Seq[DataFrame] = {
-    val docs0 = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      .filter(col("text").isNotNull)
-    val docs = baseMod.fold(docs0)(m =>
-      docs0.filter(pmod(col("doc_id"), lit(m)) === 0))
-    Seq(
-      docs.filter(pmod(col("doc_id"), lit(2)) === 0),
-      docs.select((col("doc_id") + 100000).as("doc_id"), col("text")),
-      docs.select((col("doc_id") + 200000).as("doc_id"),
-          regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-        .unionByName(docs.select((col("doc_id") + 300000).as("doc_id"),
-          regexp_replace(regexp_replace(col("text"), "\\bdata\\b", "info"),
-            "\\bthe\\b", "thee").as("text"))),
-      docs.select((col("doc_id") + 400000).as("doc_id"), col("text")))
-  }
-
-  /** Recursive local-FS directory copy (the lifecycle gates clone the
-    * staged prefix store before mutating it — retraction/compaction are
-    * destructive, and a spool must stay pristine). */
-  private def copyDir(src: String, dst: String): Unit = {
-    val sp = java.nio.file.Paths.get(src)
-    val dp = java.nio.file.Paths.get(dst)
-    java.nio.file.Files.walk(sp).forEach { p =>
-      val t = dp.resolve(sp.relativize(p))
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  /** PREFIX store of the lifecycle gates: batches 0-2 of the
-    * `% 3`-subset slices applied via the SAME
-    * [[graft.streaming.NearDupStream.applyBatch]] the stream runs — the
-    * production posture (the curated index exists once; admin ops and new
-    * batches run against it), so the gates measure their own tail, not a
-    * rebuild of the prefix the stream gates already measure. */
-  private val streamDedupLifecycleSpool =
-    Spool("stream-dedup-prefix")((s, dir, store) => {
-      val slices = streamDedupSliceSpoolMod3(s, dir)
-      withStatePartitions(s, 8) {
-        (0 until 3).foreach { i =>
-          graft.streaming.NearDupStream.applyBatch(
-            s.read.schema(graft.streaming.NearDupStream.docSchema)
-              .parquet(s"$slices/slice=$i"), i.toLong, store)
-        }
-      }
-      store
-    })
-
-  /** The store-LIFECYCLE tail of the retract/compact gates: clone the
-    * staged prefix store, retract the `% 7` kept docs, optionally compact
-    * physically, then run batch 3 against the live remainder. The
-    * readStream/checkpoint machinery is proven by `stream_dedup_minhash`;
-    * these gates prove the STORE semantics (tombstone anti-join,
-    * compaction value-neutrality). */
-  private def streamDedupLifecycle(s: SparkSession, dir: String,
-                                   root: String,
-                                   compactBeforeLast: Boolean): String = {
-    val store = s"$root/store"
-    copyDir(streamDedupLifecycleSpool(s, dir), store)
-    withStatePartitions(s, 8) {
-      graft.streaming.NearDupStream.retract(
-        graft.streaming.NearDupStream.kept(s, store)
-          .filter(pmod(col("doc_id"), lit(7)) === 0).select("doc_id"), store)
-      if (compactBeforeLast) graft.streaming.NearDupStream.compact(s, store)
-      graft.streaming.NearDupStream.applyBatch(
-        s.read.schema(graft.streaming.NearDupStream.docSchema).parquet(
-          s"${streamDedupSliceSpoolMod3(s, dir)}/slice=3"),
-        3L, store)
-    }
-    store
-  }
-
-  /** [[streamDedupReplay]] store, for the gates that READ the stream's
-    * artifacts (log view) without re-running the replay the main gate
-    * measures. */
-  private val streamDedupSpool = Spool("stream-dedup")(streamDedupReplay)
-
-  /** Staged single-file parquet input for `stream_jdbc_exactly_once` —
-    * the fact rows the streaming replay reads. */
-  private val jdbcStreamFactSpool = Spool("jdbc-stream-fact")((s, dir, out) => {
-    IdaMart.fact(
-        IdaMart.records(s, dir).filter(col("linha_origem") % 4 === 0))
-      .select(col("tempo_key"), col("grupo_key"), col("servico_key"),
-        col("variavel_key"), col("valor"), col("arquivo_origem"),
-        col("linha_origem"), col("hash_registro"))
-      .coalesce(1).write.mode("overwrite").parquet(out)
-    out
-  })
-
-  /** Staged single-file parquet input for `stream_ingest_exactly_once`. */
-  private val ingestRecordsSpool = Spool("ingest-records")((s, dir, out) => {
-    IdaMart.records(s, dir).coalesce(1).write.mode("overwrite").parquet(out)
-    out
-  })
-
-  /** Staged two-batch store (batch B adds a column) for
-    * `s_schema_evolution`. */
-  private val schemaEvoSpool = Spool("schema-evo")((s, dir, out) => {
-    val docs = Tables.documents(s, dir)
-    docs.filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id"), col("text"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=a")
-    docs.filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("text"), col("lang"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=b")
-    out
-  })
-
-  /** Staged bucketed tables for `j_bucketed` (zero-shuffle SMJ layout).
-    * Returns the per-dir table-name SUFFIX: the table names are keyed by
-    * `fnv64Hex(dir)` — fixed global names would let a second sf dir
-    * staged in the same session overwrite the tables while the first
-    * dir's spool still claims "staged", silently serving the wrong dir's
-    * data to `j_bucketed` (r16 ADVICE). */
-  private val bucketedTablesSpool = Spool("bucketed-tables")((s, dir, _) => {
-    val sfx = fnv64Hex(dir)
-    Tables.orders(s, dir).write.mode("overwrite")
-      .bucketBy(8, "o_custkey").sortBy("o_custkey")
-      .saveAsTable(s"graft_orders_b_$sfx")
-    Tables.customer(s, dir).write.mode("overwrite")
-      .bucketBy(8, "c_custkey").sortBy("c_custkey")
-      .saveAsTable(s"graft_customer_b_$sfx")
-    sfx
-  })
-
-  /** Staged user_id-clustered event files for `s_bloom_file_skip`. */
-  private val bloomSkipSpool = Spool("bloomskip")((s, dir, out) => {
-    graft.sources.StatsManifest.writeClustered(
-      Tables.events(s, dir).filter(col("event_id").isNotNull),
-      out, "user_id", nFiles = 8)
-    out
-  })
-
-  /** Embedded Derby database booted with `ensure`'s DDL for the JDBC gates.
-    * Boot + DDL is harness setup; each gate call starts from the
-    * fresh-table state via TRUNCATE, which is load-indistinguishable from
-    * a new database. Returns the JDBC url. */
-  private def derbySpool(name: String)(ensure: String => Unit): Spool[String] =
-    Spool(name)((_, _, out) => {
-      // derby.log + scratch under the session temp root, never the repo
-      if (System.getProperty("derby.system.home") == null)
-        System.setProperty("derby.system.home",
-          System.getProperty("java.io.tmpdir"))
-      val url = s"jdbc:derby:$out/ida;create=true"
-      ensure(url)
-      url
-    })
-  private val derbyFact =
-    derbySpool("derby-fact")(graft.sources.JdbcSink.ensureFactTable(_))
-  private val derbyDim =
-    derbySpool("derby-dim")(graft.sources.JdbcSink.ensureDimGrupoTables(_))
-  private val derbyStream =
-    derbySpool("derby-stream")(graft.sources.JdbcSink.ensureFactTable(_))
 
   /** Force-materialize every declared [[Spool]] for a given sf dir, in
     * declaration order. The bench harness calls this ONCE during warmup,
@@ -542,103 +199,40 @@ object SparkEntry {
     Spool.all.size
   }
 
-  /** Stateful-streaming gates keep one state store per shuffle partition,
-    * with per-micro-batch commit overhead each; a bounded replay should
-    * size that to the replay, not to the continuous-serving default (the
-    * count is baked into the query's checkpoint at start, so it is a
-    * per-query knob). Measured at sf0.1: the stream-stream join gate
-    * dropped 6.7 s → 2.5 s going 32 → 8 state partitions, and a further
-    * 3.5 s → 2.2 s going 8 → 4 (per-partition store-commit overhead still
-    * dominated the bounded replay). */
-  private def withStatePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  // ----- staged artifacts and oracle fragments two or more gate families
+  // read; a helper one family uses lives in that family's file
 
-  /** Crawl-shaped corpus for the curate_to_shards mega-gate: the raw
-    * documents minus the benchmark split (doc_id % 97 == 0), unioned with
-    * planted full copies (+200000 — exact-tier victims; copies OF bench
-    * docs become decontamination victims) and word-perturbed copies
-    * (+300000 — near-tier victims), every crawl doc carrying planted
-    * per-source boilerplate lines the strip stage must remove. Returns
-    * `(crawl(doc_id, source, text), bench(doc_id, text))`. */
-  private def curateCrawlFixture(s: SparkSession,
-                                 dir: String): (DataFrame, DataFrame) = {
-    val raw = Tables.documents(s, dir).filter(col("text").isNotNull)
-      .select(col("doc_id"), col("source"), col("text"))
-    val bench = raw.filter(col("doc_id") % 97 === 0)
-      .select(col("doc_id"), col("text"))
-    // victims planted for every 5th doc — enough to exercise each tier
-    // (doc 0 is % 5 AND % 97: its copy is the decontamination victim)
-    // without tripling the corpus the near-dup sketch has to chew
-    val seed = raw.filter(col("doc_id") % 5 === 0)
-    val crawl = raw.filter(col("doc_id") % 97 =!= 0)
-      .unionByName(seed.select((col("doc_id") + 200000).as("doc_id"),
-        col("source"), col("text")))
-      .unionByName(seed.select((col("doc_id") + 300000).as("doc_id"),
-        col("source"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text")))
-      .select(col("doc_id"), col("source"),
-        concat(col("text"), lit("\nsubscribe to "), col("source"),
-          lit(" updates"), lit("\nall rights reserved")).as("text"))
-    (crawl, bench)
-  }
+  /** Multimodal fixture staging, shared by the standalone gates and the
+    * curate_report images/audio sections. */
+  private[graft] def mediaSpool(kind: String)(stage: (DataFrame, String) => Int)
+      : Spool[String] =
+    Spool(kind)((s, dir, out) => { stage(Tables.documents(s, dir), out); out })
+  private[graft] val pngBlobs = mediaSpool("png-blobs")(Multimodal.writePngFixture(_, _))
+  private[graft] val pngMeta = mediaSpool("png-meta")(Multimodal.writeMetaPngFixture(_, _))
+  private[graft] val pngNearDup =
+    mediaSpool("png-neardup")(Multimodal.writeNearDupPngFixture(_, _))
+  private[graft] val wavMeta = mediaSpool("wav-meta")(Multimodal.writeMetaWavFixture(_, _))
+  private[graft] val wavNearDup =
+    mediaSpool("wav-neardup")(Multimodal.writeNearDupWavFixture(_, _))
 
-  /** Fixture for the incremental-crawl gates: the EXISTING curated corpus
-    * is the SCRUBBED organic docs with doc_id % 3 != 0 (the already-
-    * curated contract — a curated corpus is post-PII-scrub by
-    * definition); the NEW raw batch is the % 3 == 0 docs (novel vs the
-    * corpus) ∪ raw copies of corpus docs with % 4 == 1 (+600000 — exact-
-    * tier victims: scrub(copy) == corpus text) ∪ word-perturbed copies
-    * with % 4 == 2 (+700000 — near-tier victims); bench is the usual
-    * % 97 == 0 split. Returns (batch, corpus, bench). */
-  private def incrementalCrawlFixture(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val raw = Tables.documents(s, dir).filter(col("text").isNotNull)
-      .select(col("doc_id"), col("source"), col("text"))
-    val corpusRaw = raw.filter(col("doc_id") % 3 =!= 0)
-    // the EXISTING curated corpus is an artifact a production pipeline
-    // reads from storage (it was scrubbed when IT was curated) — staged
-    // once per sf dir like the other fixture spools, so the incremental
-    // gates measure the incremental operator, not the fixture's re-scrub
-    // of the whole corpus on every call
-    val corpus = s.read.parquet(s"${curatedCorpusSpool(s, dir)}/docs")
-    val batch = raw.filter(col("doc_id") % 3 === 0)
-      .unionByName(corpusRaw.filter(col("doc_id") % 4 === 1)
-        .select((col("doc_id") + 600000).as("doc_id"), col("source"),
-          col("text")))
-      .unionByName(corpusRaw.filter(col("doc_id") % 4 === 2)
-        .select((col("doc_id") + 700000).as("doc_id"), col("source"),
-          regexp_replace(col("text"), "\\bdata\\b", "info").as("text")))
-    val bench = raw.filter(col("doc_id") % 97 === 0)
-      .select(col("doc_id"), col("text"))
-    (batch, corpus, bench)
-  }
-
-  /** The curated corpus AND its three novelty stores, staged once per sf
-    * dir: `docs/` (the scrubbed corpus — the incremental contract's
-    * input), plus the per-batch probe artifacts a production pipeline
-    * maintains offline by append ([[graft.plans.Curation.noveltyArtifacts]]
-    * — exact-tier hash store, MinHash band index, hashed shingle sets).
-    * Deterministic functions of the corpus text, so probing the stores is
-    * value-identical to the inline derivation (pinned by the
-    * `dedup_incremental_indexed` gate for the band/shingle pair and by
-    * `curate_incremental`'s own oracle, which restates the chain from the
-    * raw fixture); the inline derivation itself stays measured by
-    * `dedup_incremental`. */
-  private val curatedCorpusSpool = Spool("curated-corpus")((s, dir, out) => {
-    Tables.documents(s, dir).filter(col("text").isNotNull)
-      .filter(col("doc_id") % 3 =!= 0)
-      .select(col("doc_id"), col("source"), col("text"))
-      .select(col("doc_id"), TextFns.redactPii(col("text")).as("text"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$out/docs")
-    val corpus = s.read.parquet(s"$out/docs")
-    val (hashes, bandIdx, shHashes) =
-      graft.plans.Curation.noveltyArtifacts(corpus)
-    hashes.coalesce(1).write.mode("overwrite").parquet(s"$out/hashes")
-    bandIdx.coalesce(1).write.mode("overwrite").parquet(s"$out/bands")
-    shHashes.coalesce(1).write.mode("overwrite").parquet(s"$out/shingles")
+  /** VERIFIED near-dup pair frame (the planted docs ∪ perturbed
+    * corpus at Jaccard ≥ 0.6), staged to parquet — the offline
+    * artifact every cluster-family consumer reads. In a production dedup
+    * pipeline the MinHash→band→verify pair derivation runs ONCE and its
+    * output feeds many consumers (clustering, survivor selection, recall
+    * audits); re-deriving it inside each of the four cluster-family gates
+    * made every one of them pay (and re-measure) the same upstream
+    * pipeline — the r9 verdict's remaining bench-integrity defect. The
+    * derivation itself is still measured, in isolation, by
+    * `dedup_minhash`; pair staging is deterministic, so the staged frame
+    * is value-identical to an inline derivation and the oracles are
+    * unchanged. */
+  private[graft] val spooledNearDupPairs = Spool("neardup-pairs")((s, dir, out) => {
+    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+    val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
+      regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
+    Dedup.minhashNearDups(docs.unionByName(perturbed), threshold = 0.6)
+      .coalesce(1).write.mode("overwrite").parquet(out)
     out
   })
 
@@ -651,45 +245,9 @@ object SparkEntry {
     * and serves the (doc_id, cluster_rep) table to every downstream
     * consumer, which is exactly this shape. Deterministic (min-id rep),
     * so value-identical to an inline labeling. */
-  private val clusterRepsSpool = Spool("cluster-reps")((s, dir, out) => {
+  private[graft] val clusterRepsSpool = Spool("cluster-reps")((s, dir, out) => {
     Cluster.connectedComponents(s.read.parquet(spooledNearDupPairs(s, dir)))
       .coalesce(1).write.mode("overwrite").parquet(out)
-    out
-  })
-
-  /** Stage 1–7 output of the crawl-to-shards chain
-    * (Curation.curateStaged over the crawl fixture), staged to parquet —
-    * the spool discipline the dedup tiers already follow: the DERIVATION
-    * is measured by `curate_to_shards` (which runs the whole chain
-    * inline, per iteration), while the stage DIAGNOSTIC reads the staged
-    * artifact a production pipeline would have written between stages
-    * anyway. Deterministic, so value-identical to an inline derivation;
-    * the diag's oracle still restates the full chain. */
-  private val curateStagedSpool = Spool("curate-staged")((s, dir, out) => {
-    val (crawl, bench) = curateCrawlFixture(s, dir)
-    graft.plans.Curation.curateStaged(crawl, bench)
-      .coalesce(1).write.mode("overwrite").parquet(out)
-    out
-  })
-
-  /** Stage 1–4 artifacts of the crawl-to-shards chain (exact-
-    * deduped doc ids, verified near-dup pairs, dropped-bucket report),
-    * staged to parquet — the [[curateStagedSpool]] discipline: the
-    * DERIVATION stays measured by `curate_to_shards`, which runs the whole
-    * chain inline per iteration; the read-only diagnostics (survivor-rule
-    * delta, dropped-mass report) read the staged artifacts a production
-    * pipeline would have written between stages anyway. Deterministic, so
-    * value-identical to an inline derivation; both diag oracles still
-    * restate the full chain from the raw fixture. */
-  private val curateDedupSpool = Spool("curate-dedup")((s, dir, out) => {
-    val (crawl, _) = curateCrawlFixture(s, dir)
-    val (exactDeduped, pairs, report) =
-      graft.plans.Curation.curateDedupStages(crawl)
-    exactDeduped.select(col("doc_id")).coalesce(1)
-      .write.mode("overwrite").parquet(s"$out/docs")
-    pairs.select(col("a"), col("b")).coalesce(1)
-      .write.mode("overwrite").parquet(s"$out/pairs")
-    report.coalesce(1).write.mode("overwrite").parquet(s"$out/report")
     out
   })
 
@@ -701,7 +259,7 @@ object SparkEntry {
     * k-bounded tails. Decimal-carrier Lloyd with id tie-breaks is
     * deterministic, so the staged codebook is value-identical to an
     * inline fit and both oracles still restate the full training chain. */
-  private val kmeansFitSpool = Spool("kmeans-fit")((s, dir, out) => {
+  private[graft] val kmeansFitSpool = Spool("kmeans-fit")((s, dir, out) => {
     val embs = Tables.embeddings(s, dir).filter(col("embedding").isNotNull)
     graft.operators.VectorAgg.kmeansLloyd(embs,
         Similarity.sampledCodebook(embs, codebookSize = 8), maxIters = 3)
@@ -710,116 +268,12 @@ object SparkEntry {
     out
   })
 
-  /** Incrementally-MAINTAINED MinHash band index: the corpus bands written
-    * once, the batch's bands APPENDED (never a rebuild) — the artifact
-    * shape a continuously-fed 100-TB dedup tier maintains, where
-    * re-sketching the corpus per batch is the cost you must not pay.
-    * Deterministic (band rows are pure functions of the text), so the
-    * appended store is value-identical to a fresh rebuild over corpus ∪
-    * batch — which is exactly what the `s_minhash_index_append` gate
-    * proves against the dedup_minhash oracle. */
-  private val minhashIndexAppendSpool =
-    Spool("mh-index-append")((s, dir, out) => {
-    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val sh = docs.select(col("doc_id"),
-      TextFns.wordShingles(col("text"), 3).as("sh"))
-    Dedup.minhashBandBuckets(sh, "doc_id", "sh")
-      .write.mode("overwrite").parquet(out)
-    val batch = docs.select((col("doc_id") + 100000).as("doc_id"),
-      regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-    val bsh = batch.select(col("doc_id"),
-      TextFns.wordShingles(col("text"), 3).as("sh"))
-    Dedup.minhashBandBuckets(bsh, "doc_id", "sh")
-      .write.mode("append").parquet(out)
-    out
-  })
-
-  /** The corpus side's BOTH near-dup artifacts, materialized once per sf
-    * dir: `bands/` ([[graft.operators.Dedup.minhashBandBuckets]] rows) and
-    * `shingles/` (xxhash64-hashed distinct shingle sets — the verify-side
-    * artifact). Together they are everything the asymmetric per-batch
-    * probe needs; the batch never touches corpus text. */
-  private val corpusDedupArtifactsSpool =
-    Spool("corpus-dedup-artifacts")((s, dir, out) => {
-    val sh = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .select(col("doc_id"),
-        TextFns.wordShingles(col("text"), 3).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Dedup.minhashBandBuckets(sh, "doc_id", "__sh")
-      .write.mode("overwrite").parquet(s"$out/bands")
-    sh.select(col("doc_id"),
-        transform(col("__sh"), x => xxhash64(x)).as("sh"))
-      .write.mode("overwrite").parquet(s"$out/shingles")
-    sh.unpersist(blocking = false)
-    out
-  })
-
-  /** The planted MEGA-BUCKET family for the `dedup_*_capped` gates: 40
-    * rotations of [[graft.functions.SketchOracleSql.RotationWords]], each
-    * repeated twice — pairwise-DISTINCT texts (they survive the exact
-    * tier) with an IDENTICAL distinct-shingle set and token multiset, so
-    * every band buckets the whole family into one deterministic width-40
-    * bucket (full rationale on RotationWords). 40 driver-side literal
-    * rows — a fixture, not data. */
-  private def rotationFamily(s: SparkSession): DataFrame = {
-    import s.implicits._
-    val words = graft.functions.SketchOracleSql.RotationWords
-    words.indices.map { r =>
-      val rot = (words.drop(r) ++ words.take(r)).mkString(" ")
-      (graft.functions.SketchOracleSql.RotationFamilyBase + r, rot + " " + rot)
-    }.toDF("doc_id", "text")
-  }
-
-  /** The `dedup_embedding_capped` corpus: embeddings ∪ perturbed copies
-    * (the dedup_embedding corpus) ∪ 40 copies of a constant 0.5-vector
-    * (ids 500000+) — identical vectors carry identical hyperplane
-    * signatures, a guaranteed width-40 bucket in every band. */
-  private def cappedEmbeddingCorpus(s: SparkSession, dir: String): DataFrame = {
-    val embs = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val perturbed = embs.select((col("vec_id") + 100000).as("vec_id"),
-      transform(col("embedding"),
-        (x, i) => when(i === 0, x + lit(0.05f)).otherwise(x)).as("embedding"))
-    val family = s.range(40).select((col("id") + 500000L).as("vec_id"),
-      array_repeat(lit(0.5f), 64).as("embedding"))
-    embs.unionByName(perturbed).unionByName(family)
-  }
-
-  /** The `dedup_*_capped` corpus: the standard planted near-dup corpus
-    * (docs ∪ perturbed copies) plus the rotation mega-bucket family. */
-  private def cappedDedupCorpus(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
-      regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-    docs.unionByName(perturbed).unionByName(rotationFamily(s))
-  }
-
-  /** Shared SQL: normalized records from orders (IdaMart.records). */
-  /** Shared scoring chain of the corpus_curriculum gate family: per doc,
-    * token count, en-stopword count, distinct-token count, and the
-    * integer-milli quality score `(1000·stop) div n + (1000·uniq) div n`.
-    * Factored out so the three round-14 bisection gates view the EXACT
-    * frame the composite consumes (not a restatement that could itself
-    * drift). */
-  private def curriculumScored(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .filter(col("text").isNotNull)
-      .withColumn("__toks", TextFns.tokens(col("text")))
-      .withColumn("__n", size(col("__toks")).cast("long"))
-      .filter(col("__n") > 0)
-      .withColumn("__stop",
-        TextFns.stopwordCount(col("text"), "en").cast("long"))
-      .withColumn("__uniq", size(array_distinct(col("__toks"))).cast("long"))
-      .select(col("doc_id"), col("__n"), col("__stop"), col("__uniq"),
-        expr("(1000 * __stop) div __n + (1000 * __uniq) div __n")
-          .as("score_milli"))
-
   /** SQL mirror of [[graft.operators.Multimodal.fixtureText]] — the
     * planted non-ASCII suffix (é ° 漢, spelled as chr() calls so the
     * oracle string itself stays ASCII on the wire). Ids 3/64/125 carry
     * multi-byte text on EVERY run, so the octet-term oracles below are
     * permanently exercised against byte≠character documents. */
-  private val fixtureTextSql: String =
+  private[graft] val fixtureTextSql: String =
     "CASE WHEN doc_id % 61 = 3 THEN text || chr(233) || chr(176) || " +
       "chr(28450) ELSE text END"
 
@@ -832,7 +286,7 @@ object SparkEntry {
     * list_transform binds the hex string once instead of re-encoding
     * per element). `bs[i]` replaces the former `ascii(substring(text,
     * i, 1))`, which read CODE POINTS and was therefore ASCII-only. */
-  private def fixtureByteCtes(
+  private[graft] def fixtureByteCtes(
       where: String =
         "doc_id < 128 AND text IS NOT NULL AND length(text) > 0"): String =
     s"""src AS (
@@ -849,7 +303,7 @@ object SparkEntry {
        |)""".stripMargin
 
   /** multimodal_metadata_strip oracle — shared with curate_report images. */
-  private val pngStripOracleSql: String =
+  private[graft] val pngStripOracleSql: String =
     """SELECT doc_id AS id,
         |  CAST(6 AS BIGINT) AS n_chunks_before,
         |  CAST(3 AS BIGINT) AS n_chunks_after,
@@ -864,7 +318,7 @@ object SparkEntry {
         |ORDER BY id""".stripMargin
 
   /** multimodal_wav_metadata_strip oracle — shared with curate_report audio. */
-  private val wavStripOracleSql: String =
+  private[graft] val wavStripOracleSql: String =
     // l2 is the BYTE length of the planted ICMT tag (first 16 CHARACTERS
     // of the fixture text, then UTF-8 encoded — chars picked, octets
     // counted, exactly the engine's text.take(16).getBytes)
@@ -882,7 +336,7 @@ object SparkEntry {
         |ORDER BY id""".stripMargin
 
   /** dedup_image_lsh oracle — shared with curate_report images. */
-  private val imageLshOracleSql: String =
+  private[graft] val imageLshOracleSql: String =
     s"""WITH ${fixtureByteCtes()}, base AS (
         |  SELECT doc_id AS id, bs, blen AS len,
         |    CAST(1 + blen % 31 AS INTEGER) AS w,
@@ -942,7 +396,7 @@ object SparkEntry {
         |ORDER BY id_a, id_b""".stripMargin
 
   /** dedup_audio_lsh oracle — shared with curate_report audio. */
-  private val audioLshOracleSql: String =
+  private[graft] val audioLshOracleSql: String =
     // the >= 64 bound is on SAMPLES = payload BYTES (the engine drops
     // decoded streams shorter than 64 samples), hence blen, not length
     s"""WITH ${fixtureByteCtes()}, base AS (
@@ -1000,7 +454,7 @@ object SparkEntry {
 
   /** `dedup_exact`'s oracle — shared with the curate_report dedup
     * section. */
-  private val dedupExactOracleSql: String =
+  private[graft] val dedupExactOracleSql: String =
     """WITH corpus AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL
@@ -1012,267 +466,7 @@ object SparkEntry {
       |GROUP BY content_hash
       |ORDER BY content_hash""".stripMargin
 
-  /** DuckDB restatement of [[curriculumScored]] — one CTE, shared verbatim
-    * by the composite oracle and all three bisection oracles so a
-    * divergence cannot hide in a re-spelling. Every referenced primitive
-    * (the `\\s+` split, the `\\b(...)` stopword alternation, `//`,
-    * list_distinct) also appears in at least one driver-green oracle. */
-  private val curriculumScoredCte: String = {
-    val n = "CAST(len(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+')) AS BIGINT)"
-    val stop = "CAST(len(regexp_extract_all(lower(text), " +
-      "'\\b(the|a|of|and|to|in|is|it|that|for)\\b')) AS BIGINT)"
-    val uniq = "CAST(len(list_distinct(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+'))) AS BIGINT)"
-    s"""scored AS (
-       |  SELECT doc_id, $n AS n_toks, $stop AS n_stop, $uniq AS n_uniq,
-       |    (1000 * $stop) // $n + (1000 * $uniq) // $n AS score_milli
-       |  FROM documents
-       |  WHERE text IS NOT NULL AND $n > 0
-       |)""".stripMargin
-  }
-
-  /** ... + histogram + cumulative-above counts. `before_cnt` is restated
-    * as an inequality SELF-JOIN over the score-domain frame rather than
-    * the r13 `DESC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING`
-    * window — the one primitive combination in the r13 oracle that no
-    * driver-green gate pinned (VERDICT r13 "What's wrong #2"); inequality
-    * joins + SUM(BIGINT) are pinned by many. Same exact math: sum of
-    * counts of strictly-higher scores, 0 for the top class. The frame is
-    * score-domain-sized, so the O(domain²) join is bounded by
-    * construction. */
-  private val curriculumHistCtes: String =
-    s"""$curriculumScoredCte,
-       |hist AS (
-       |  SELECT score_milli, CAST(COUNT(*) AS BIGINT) AS cnt
-       |  FROM scored GROUP BY score_milli
-       |), cum AS (
-       |  SELECT h1.score_milli, h1.cnt,
-       |    CAST(COALESCE(SUM(h2.cnt), 0) AS BIGINT) AS before_cnt
-       |  FROM hist h1 LEFT JOIN hist h2 ON h2.score_milli > h1.score_milli
-       |  GROUP BY h1.score_milli, h1.cnt
-       |)""".stripMargin
-
-  /** ... + the score → stage map. */
-  private val curriculumStageCtes: String =
-    s"""$curriculumHistCtes,
-       |tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS tot FROM hist),
-       |stage_map AS (
-       |  SELECT score_milli,
-       |    CAST((before_cnt * 4) // tot AS BIGINT) + 1 AS stage
-       |  FROM cum CROSS JOIN tot
-       |)""".stripMargin
-
-  /** Shared WITH-chain restating the curate_to_shards mega-gate's stages
-    * 1–7 (scrub → boilerplate strip → exact dedup → MinHash near dedup →
-    * lang/quality → decontamination → curriculum staging), ending at
-    * `cstaged(doc_id, source, text, n_toks, score_milli, stage)`. Every
-    * fragment is a proven gate's restatement: the scrub/dedup/lang/
-    * quality/pack shapes from curate_pipeline, the boilerplate CTEs from
-    * dedup_boilerplate, the HUGEINT MinHash chain from SketchOracleSql
-    * (which requires the `corpus` CTE name), the gram probe from
-    * decontaminate, and the integer-milli score + inequality-join
-    * histogram from corpus_curriculum. */
-  private val curateToShardsCtes: String = {
-    s"""raw0 AS (
-       |  SELECT doc_id, source, text FROM documents WHERE text IS NOT NULL
-       |), crawl0 AS (
-       |  SELECT doc_id, source,
-       |    text || chr(10) || 'subscribe to ' || source || ' updates' ||
-       |      chr(10) || 'all rights reserved' AS text
-       |  FROM (
-       |    SELECT doc_id, source, text FROM raw0 WHERE doc_id % 97 <> 0
-       |    UNION ALL
-       |    SELECT doc_id + 200000, source, text FROM raw0 WHERE doc_id % 5 = 0
-       |    UNION ALL
-       |    SELECT doc_id + 300000, source,
-       |      regexp_replace(text, '\\bdata\\b', 'info', 'g')
-       |    FROM raw0 WHERE doc_id % 5 = 0)
-       |), benchs AS (
-       |  ${curateScrubSql("(SELECT doc_id, text FROM raw0 WHERE doc_id % 97 = 0)", "doc_id")}
-       |), crawls AS (
-       |  ${curateScrubSql("crawl0", "doc_id, source")}
-       |), blines AS (
-       |  SELECT doc_id, generate_subscripts(l, 1) - 1 AS line_no,
-       |         unnest(l) AS line
-       |  FROM (SELECT doc_id, string_split(text, chr(10)) AS l FROM crawls)
-       |), bldf AS (
-       |  SELECT line, COUNT(DISTINCT doc_id) AS ddf FROM blines GROUP BY line
-       |), strip2 AS (
-       |  SELECT c.doc_id, c.source, COALESCE(k.clean_text, '') AS text
-       |  FROM crawls c LEFT JOIN (
-       |    SELECT l.doc_id,
-       |      string_agg(l.line, chr(10) ORDER BY l.line_no) AS clean_text
-       |    FROM blines l JOIN bldf d ON l.line = d.line
-       |    WHERE d.ddf < 10 GROUP BY l.doc_id) k ON c.doc_id = k.doc_id
-       |), dedup2 AS (
-       |  SELECT doc_id, source, text FROM (
-       |    SELECT *, row_number() OVER (
-       |      PARTITION BY md5(regexp_replace(trim(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))
-       |      ORDER BY doc_id) AS rn
-       |    FROM strip2) WHERE rn = 1
-       |), corpus AS (
-       |  SELECT doc_id, text FROM dedup2
-       |),
-       |${graft.functions.SketchOracleSql.minhashCandCtes(3, 64, 16, Some(1024))},
-       |${graft.functions.SketchOracleSql.vpairsCte(0.6)},
-       |near2 AS (
-       |  SELECT * FROM dedup2 WHERE doc_id NOT IN (SELECT b FROM vpairs)
-       |),
-       |${curationTailCtes("near2")}""".stripMargin
-  }
-
-  /** DuckDB restatement of [[graft.functions.TextFns.redactPii]], shared
-    * by the crawl-to-shards and incremental-crawl oracle prefixes. */
-  private def curateScrubSql(inner: String, cols: String): String =
-    s"""SELECT $cols,
-       |    regexp_replace(regexp_replace(regexp_replace(text,
-       |      '${TextFns.urlRe}', '<URL>', 'g'),
-       |      '${TextFns.emailRe}', '<EMAIL>', 'g'),
-       |      '${TextFns.phoneRe}', '<PHONE>', 'g') AS text
-       |  FROM $inner""".stripMargin
-
-  /** Stages 5-7 of the curation oracle: lang/quality filters, benchmark
-    * decontamination (against the `benchs` CTE), integer-milli curriculum
-    * scoring + staging, reading survivors `(doc_id, source, text)` from
-    * `$inputCte`; ends at `cstaged(doc_id, source, text, n_toks,
-    * score_milli, stage)`. Factored (r17) so the one-shot and incremental
-    * composites restate the SAME chain, mirroring the shared
-    * scoreSurvivors + decontamAndStage in [[graft.plans.Curation]]. */
-  private def curationTailCtes(inputCte: String): String = {
-    val scoreExprs = TextFns.stopwords.toSeq.sortBy(_._1).map { case (l, ws) =>
-      s"len(regexp_extract_all(lower(text), '\\b(${ws.mkString("|")})\\b')) AS s_$l"
-    }.mkString(",\n    ")
-    val best = "greatest(s_en, s_de, s_fr, s_es)"
-    val ntoks = "len(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+'))"
-    val nuniq = "len(list_distinct(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+')))"
-    val cn = "CAST(len(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+')) AS BIGINT)"
-    val cstop = "CAST(len(regexp_extract_all(lower(text), " +
-      "'\\b(the|a|of|and|to|in|is|it|that|for)\\b')) AS BIGINT)"
-    val cuniq =
-      "CAST(len(list_distinct(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+'))) AS BIGINT)"
-    s"""lscored AS (
-       |  SELECT doc_id, source, text,
-       |    $scoreExprs
-       |  FROM $inputCte
-       |), langed2 AS (
-       |  SELECT doc_id, source, text FROM lscored
-       |  WHERE text IS NOT NULL
-       |    AND NOT regexp_matches(text, '[\\x{4e00}-\\x{9fff}]')
-       |    AND $best > 0 AND s_en = $best
-       |), qual2 AS (
-       |  SELECT doc_id, source, text FROM langed2
-       |  WHERE $ntoks >= 10 AND CAST($nuniq AS DOUBLE) / $ntoks >= 0.3
-       |), dsh2 AS (
-       |  SELECT doc_id, list_distinct(list_transform(range(1, len(t) - 1),
-       |           i -> array_to_string(t[i:i+2], ' '))) AS dg
-       |  FROM (SELECT doc_id, string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+') AS t
-       |        FROM qual2 WHERE text IS NOT NULL)
-       |), bg2 AS (
-       |  SELECT DISTINCT unnest(dg) AS g FROM (
-       |    SELECT list_distinct(list_transform(range(1, len(t) - 1),
-       |             i -> array_to_string(t[i:i+2], ' '))) AS dg
-       |    FROM (SELECT string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+') AS t
-       |          FROM benchs WHERE text IS NOT NULL))
-       |), contam2 AS (
-       |  SELECT DISTINCT c.doc_id
-       |  FROM (SELECT doc_id, unnest(dg) AS g FROM dsh2) c JOIN bg2 USING (g)
-       |), clean2 AS (
-       |  SELECT * FROM qual2
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM contam2)
-       |), cscored AS (
-       |  SELECT doc_id, source, text, $cn AS n_toks,
-       |    (1000 * $cstop) // $cn + (1000 * $cuniq) // $cn AS score_milli
-       |  FROM clean2 WHERE text IS NOT NULL AND $cn > 0
-       |), chist AS (
-       |  SELECT score_milli, CAST(COUNT(*) AS BIGINT) AS cnt
-       |  FROM cscored GROUP BY score_milli
-       |), ccum AS (
-       |  SELECT h1.score_milli, h1.cnt,
-       |    CAST(COALESCE(SUM(h2.cnt), 0) AS BIGINT) AS before_cnt
-       |  FROM chist h1 LEFT JOIN chist h2 ON h2.score_milli > h1.score_milli
-       |  GROUP BY h1.score_milli, h1.cnt
-       |), ctot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS tot FROM chist),
-       |cstage AS (
-       |  SELECT score_milli,
-       |    CAST((before_cnt * 4) // tot AS BIGINT) + 1 AS stage
-       |  FROM ccum CROSS JOIN ctot
-       |), cstaged AS (
-       |  SELECT s.doc_id, s.source, s.text, s.n_toks, s.score_milli, m.stage
-       |  FROM cscored s JOIN cstage m USING (score_milli)
-       |)""".stripMargin
-  }
-
-  /** Stages 8-9 of the curation oracle: packing per curriculum stage +
-    * the shard assignment, FROM `cstaged` — the manifest's final SELECT,
-    * shared by the one-shot and incremental composite oracles. */
-  private def curateManifestSelectSql(budget: Int = 512,
-                                      nShards: Int = 16): String = {
-    val shardH = graft.functions.SketchOracleSql.fnvFold(
-      "concat('shard|', CAST(stage AS VARCHAR), '|', CAST(bin AS VARCHAR))")
-    s"""binned2 AS (
-       |  SELECT stage, doc_id, n_toks,
-       |    COALESCE(SUM(n_toks) OVER (PARTITION BY stage ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // $budget
-       |      AS bin
-       |  FROM cstaged
-       |)
-       |SELECT stage, CAST(bin AS BIGINT) AS bin, COUNT(*) AS n_docs,
-       |  CAST(SUM(n_toks) AS BIGINT) AS bin_tokens,
-       |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc,
-       |  CAST($shardH % $nShards AS INTEGER) AS shard
-       |FROM binned2 GROUP BY stage, bin ORDER BY stage, bin""".stripMargin
-  }
-
-  /** The incremental-crawl oracle prefix (mirror of
-    * `incrementalCrawlFixture` + [[graft.plans.Curation.curateIncrement]]
-    * stages 1-4): existing curated corpus = SCRUBBED organic docs with
-    * doc_id % 3 <> 0; new raw batch = the % 3 = 0 docs (novel) plus
-    * +600000 exact copies (% 4 = 1) plus +700000 word-perturbed copies
-    * (% 4 = 2); the exact tier joins on the cleaned-content md5, the near
-    * tier reuses the banded-candidate chain over an OFFSET-combined
-    * corpus (corpus ids as-is, surviving batch ids +1000000 — the
-    * incrementalOracleSql equivalence), ending at `novel(doc_id, source,
-    * text)`. */
-  private val curateIncrementalCtes: String = {
-    val cleanMd5 = "md5(regexp_replace(trim(%s.text), " +
-      "'[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))"
-    s"""raw0 AS (
-       |  SELECT doc_id, source, text FROM documents WHERE text IS NOT NULL
-       |), corpus0 AS (
-       |  ${curateScrubSql("(SELECT doc_id, text FROM raw0 WHERE doc_id % 3 <> 0)", "doc_id")}
-       |), batch0 AS (
-       |  SELECT doc_id, source, text FROM raw0 WHERE doc_id % 3 = 0
-       |  UNION ALL
-       |  SELECT doc_id + 600000, source, text FROM raw0
-       |  WHERE doc_id % 3 <> 0 AND doc_id % 4 = 1
-       |  UNION ALL
-       |  SELECT doc_id + 700000, source,
-       |    regexp_replace(text, '\\bdata\\b', 'info', 'g')
-       |  FROM raw0 WHERE doc_id % 3 <> 0 AND doc_id % 4 = 2
-       |), batchs AS (
-       |  ${curateScrubSql("batch0", "doc_id, source")}
-       |), benchs AS (
-       |  ${curateScrubSql("(SELECT doc_id, text FROM raw0 WHERE doc_id % 97 = 0)", "doc_id")}
-       |), ex AS (
-       |  SELECT b.doc_id, MIN(c.doc_id) AS exact_match
-       |  FROM batchs b JOIN corpus0 c
-       |    ON ${cleanMd5.format("b")} = ${cleanMd5.format("c")}
-       |  GROUP BY b.doc_id
-       |), corpus AS (
-       |  SELECT doc_id, text FROM corpus0
-       |  UNION ALL
-       |  SELECT doc_id + 1000000 AS doc_id, text FROM batchs
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM ex)
-       |),
-       |${graft.functions.SketchOracleSql.minhashCandCtes()},
-       |${graft.functions.SketchOracleSql.incrementalNearCtes(0.6, 1000000L)},
-       |novel AS (
-       |  SELECT doc_id, source, text FROM batchs
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM ex)
-       |    AND doc_id NOT IN (SELECT batch_id FROM near)
-       |)""".stripMargin
-  }
-
-  private val recordsSql: String =
+  private[graft] val recordsSql: String =
     """SELECT date_trunc('month', o_orderdate) AS ano_mes,
       |       o_orderpriority AS grupo_economico,
       |       o_orderstatus AS servico,
@@ -1285,7 +479,7 @@ object SparkEntry {
   /** Shared SQL: the S7 idempotent fact load — also (filtered) the oracle
     * for the JDBC round-trip gate (one batch loaded twice == one doubled
     * batch first-wins deduped == one single load). */
-  private def factLoadSql(recordsFilter: String): String =
+  private[graft] def factLoadSql(recordsFilter: String): String =
     s"""WITH records AS ($recordsSql $recordsFilter),
        |doubled AS (SELECT * FROM records UNION ALL SELECT * FROM records),
        |dim_tempo AS (
@@ -1321,10493 +515,4 @@ object SparkEntry {
        |JOIN dim_variavel v ON d.variavel = v.variavel
        |ORDER BY d.hash_registro""".stripMargin
 
-  private lazy val s7FactLoadSql: String = factLoadSql("")
-
-  /** Engine mirror of [[graft.functions.SketchOracleSql]]'s sccCtes
-    * fixture: 50 rank-blocks of 10 over the first 500 docs — forward
-    * chains everywhere, even blocks close the 10-cycle (one SCC each),
-    * even block heads point at the next block's head (condensation DAG
-    * edges). Returns the directed (src, dst) doc-id edge list. */
-  private def sccFixtureEdges(s: SparkSession, dir: String): DataFrame = {
-    val m = Tables.documents(s, dir).select(col("doc_id"))
-      .withColumn("rn", row_number().over(Window.orderBy(col("doc_id"))))
-      .filter(col("rn") <= 500)
-    val chain = m.select(col("rn").as("sr"), (col("rn") + 1).as("tr"))
-      .filter((col("rn") - 1) % 10 < 9)
-    val cycle = m.select(col("rn").as("sr"), (col("rn") - 9).as("tr"))
-      .filter(expr("((rn - 1) div 10) % 2 = 0") && (col("rn") - 1) % 10 === 9)
-    val cross = m.select(col("rn").as("sr"), (col("rn") + 10).as("tr"))
-      .filter(expr("((rn - 1) div 10) % 2 = 0") &&
-        (col("rn") - 1) % 10 === 0 && col("rn") + 10 <= 500)
-    val er = chain.unionByName(cycle).unionByName(cross)
-    val a = m.select(col("rn").as("sr"), col("doc_id").as("src"))
-    val b = m.select(col("rn").as("tr"), col("doc_id").as("dst"))
-    er.join(a, Seq("sr")).join(b, Seq("tr")).select(col("src"), col("dst"))
-  }
-
-  /** The iterative [[graft.operators.Graph.scc]] run is the cost (its
-    * fixpoint loops are ~25 tiny jobs); three gates consume the SAME
-    * 500-row result, so it is spooled once per sf dir. The spool holds the
-    * COLLECTED rows (bounded: the 500-node fixture), not a checkpointed
-    * frame — a cached RDD would die under the bench's inter-query
-    * unpersist sweep and take every later consumer down with it; a local
-    * 500-row table serves (and broadcasts) from the driver without cluster
-    * state. Keyed on dir alone like every spool: the fixture derivation is
-    * a deterministic pure function of the parquet under `dir`, so the rows
-    * are value-identical across sessions. */
-  private val sccRows = Spool("scc-memo")((s, dir, _) =>
-    graft.operators.Graph.scc(sccFixtureEdges(s, dir), idOut = "node")
-      .collect().map(r => (r.getLong(0), r.getLong(1))))
-  private def sccMemo(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    sccRows(s, dir).toSeq.toDF("node", "scc_id")
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ----- flagship: SURVEY §3 E3 (J1-J4, P4-P5, A1-A3, W1-W2, F1-F6, O1)
-    "flagship_taxa_variacao" -> ((s, dir) => TaxaVariacao(s, dir)),
-
-    // ----- A1/A2-class aggregation (TPC-H Q1 shape) on lineitem
-    "q1_agg" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") <= lit("1998-09-01"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sumExact(col("l_quantity")).as("sum_qty"),
-          sumExact(col("l_extendedprice")).as("sum_base_price"),
-          sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")))
-            .as("sum_disc_price"),
-          avgExact(col("l_quantity")).as("avg_qty"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))),
-
-    // ----- J1/J2-class star join: orders |X| customer |X| nation |X| region
-    "j1_star_join" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val n = Tables.nation(s, dir)
-      val r = Tables.region(s, dir)
-      o.join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"), year(col("o_orderdate")).as("ano"))
-        .agg(sumExact(col("o_totalprice")).as("receita"),
-             count(lit(1)).as("n_pedidos"))
-        .orderBy(col("r_name"), col("n_name"), col("ano"))
-    }),
-
-    // ----- S8/A4: dim_tempo build (distinct + surrogate keys + F14/F15)
-    "s8_dim_tempo" -> ((s, dir) =>
-      IdaMart.dimTempo(IdaMart.records(s, dir)).orderBy(col("tempo_key"))),
-
-    // ----- S8/A4: the other three dimension builders, individually
-    // oracle-gated (previously exercised only through s7_fact_load) —
-    // same driver-ranked surrogate keys, same metadata-cardinality bound
-    "s8_dim_grupo" -> ((s, dir) =>
-      IdaMart.dimGrupo(IdaMart.records(s, dir)).orderBy(col("grupo_key"))),
-    "s8_dim_servico" -> ((s, dir) =>
-      IdaMart.dimServico(IdaMart.records(s, dir))
-        .orderBy(col("servico_key"))),
-    "s8_dim_variavel" -> ((s, dir) =>
-      IdaMart.dimVariavel(IdaMart.records(s, dir))
-        .orderBy(col("variavel_key"))),
-
-    // ----- R1: unpivot lineitem measures wide -> long
-    "r1_unpivot" -> ((s, dir) =>
-      Reshape.unpivot(
-        Tables.lineitem(s, dir).filter(col("l_orderkey") % 100 === 0)
-          .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-            col("l_extendedprice"), col("l_discount"), col("l_tax")),
-        ids = Seq("l_orderkey", "l_linenumber"),
-        values = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("variavel"))),
-
-    // ----- W3: forward-fill (pandas ffill analog) over events
-    "w3_forward_fill" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("value", when(col("event_id") % 7 === 0, lit(null))
-          .otherwise(col("value")))
-      Reshape.forwardFill(ev, orderCol = "event_id", fillCols = Seq("value"),
-          partitionCols = Seq("user_id"))
-        .select(col("event_id"), col("user_id"), col("value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ----- S7/J3/F8: idempotent fact load — loading the same batch twice
-    // yields the single-load fact (ON CONFLICT DO NOTHING semantics)
-    "s7_fact_load" -> ((s, dir) => {
-      val recs = IdaMart.records(s, dir)
-      val doubled = recs.unionAll(recs)                     // U1 bag union
-      IdaMart.fact(doubled)
-        .select(col("tempo_key"), col("grupo_key"), col("servico_key"),
-          col("variavel_key"), col("valor").cast("double").as("valor"),
-          col("arquivo_origem"), col("linha_origem"), col("hash_registro"))
-        .orderBy(col("hash_registro"))
-    }),
-
-    // ----- the reference's REAL load boundary, executed: the S7 fact
-    // through an actual JDBC database (embedded Derby — shipped with
-    // Spark) with a real PRIMARY KEY on hash_registro. The SAME batch
-    // loads twice (crash-and-reprocess replay); the anti-join prefilter
-    // must make the second write append ZERO rows or the PK aborts it.
-    // Result read back THROUGH spark.read.jdbc — write.jdbc + read.jdbc
-    // both genuinely executed (JdbcSink scaladoc for the knob mapping).
-    "s_jdbc_fact_load" -> ((s, dir) => {
-      // database booted once per sf dir (derbySpool); each call starts
-      // from the fresh-table state via TRUNCATE
-      val url = derbyFact(s, dir)
-      graft.sources.JdbcSink.truncateTables(url, "FACT_IDA")
-      // bounded quarter-batch: the replay/PK semantics are identical at
-      // any batch size; the gate should cost a DB load, not dominate the
-      // sweep (the full-batch write is the same code path)
-      val fact = IdaMart.fact(
-          IdaMart.records(s, dir).filter(col("linha_origem") % 4 === 0))
-        .select(col("tempo_key"), col("grupo_key"), col("servico_key"),
-          col("variavel_key"), col("valor"), col("arquivo_origem"),
-          col("linha_origem"), col("hash_registro"))
-      graft.sources.JdbcSink.loadIdempotent(fact, url)
-      graft.sources.JdbcSink.loadIdempotent(fact, url) // replay: +0 rows
-      graft.sources.JdbcSink.readTable(s, url)
-        // Derby folds unquoted identifiers to UPPERCASE; re-alias every
-        // column so the driver's sorted-name compare sees the oracle's
-        .select(col("tempo_key").as("tempo_key"),
-          col("grupo_key").as("grupo_key"),
-          col("servico_key").as("servico_key"),
-          col("variavel_key").as("variavel_key"),
-          col("valor").cast("double").as("valor"),
-          col("arquivo_origem").as("arquivo_origem"),
-          col("linha_origem").as("linha_origem"),
-          col("hash_registro").as("hash_registro"))
-        .orderBy(col("hash_registro"))
-    }),
-
-    // ----- S8's real boundary, executed: dimension upsert through a
-    // server-side MERGE (the reference's ON CONFLICT DO UPDATE). Batch 1
-    // inserts the dims; batch 2 carries UPDATED names for every existing
-    // code plus one NEW code — the read-back must show all names updated
-    // and the new row inserted, through genuine staging-write + MERGE
-    // (JdbcSink.upsertDimGrupo scaladoc).
-    "s_jdbc_dim_upsert" -> ((s, dir) => {
-      // spooled boot + per-call TRUNCATE of dim AND staging (see
-      // s_jdbc_fact_load): the MERGE proof needs empty tables, not a new
-      // database
-      val url = derbyDim(s, dir)
-      graft.sources.JdbcSink.truncateTables(url, "DIM_GRUPO", "STG_DIM_GRUPO")
-      val dim1 = IdaMart.dimGrupo(IdaMart.records(s, dir)).drop("grupo_key")
-      val dim2 = dim1
-        .withColumn("grupo_nome", concat(col("grupo_nome"), lit(" v2")))
-        .unionByName(IdaMart.dimGrupo(
-            s.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](
-              org.apache.spark.sql.Row("ZZ_NEW")),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("grupo_economico",
-                org.apache.spark.sql.types.StringType))))
-          ).drop("grupo_key")
-          .withColumn("grupo_nome", concat(col("grupo_nome"), lit(" v2"))))
-      graft.sources.JdbcSink.upsertDimGrupo(dim1, url)
-      graft.sources.JdbcSink.upsertDimGrupo(dim2, url)
-      graft.sources.JdbcSink.readTable(s, url, "DIM_GRUPO")
-        .select(col("grupo_codigo").as("grupo_codigo"),
-          col("grupo_nome").as("grupo_nome"),
-          col("grupo_normalizado").as("grupo_normalizado"),
-          col("ativo").as("ativo"))
-        .orderBy(col("grupo_codigo"))
-    }),
-
-    // ----- streaming → JDBC exactly-once: the stream_ingest_exactly_once
-    // replay proof run against the DATABASE sink — two foreachBatch
-    // replays (fresh checkpoints) of the same spooled fact batch through
-    // Ingest.startJdbc's anti-join prefilter into the PK-keyed Derby
-    // table; the read-back must equal a single load or the PK aborts
-    "stream_jdbc_exactly_once" -> ((s, dir) => {
-      // spooled boot + per-call TRUNCATE (see s_jdbc_fact_load): the
-      // replay proof needs an EMPTY fact table, not a new database
-      val url = derbyStream(s, dir)
-      graft.sources.JdbcSink.truncateTables(url, "FACT_IDA")
-      val inDir = jdbcStreamFactSpool(s, dir)
-      val inSchema = s.read.parquet(inDir).schema
-      def replay(): Unit = {
-        val cp = scratchDir("jdbcstream-cp")
-        val q = graft.streaming.Ingest.startJdbc(
-          s.readStream.schema(inSchema).parquet(inDir), url,
-          "FACT_IDA", cp)
-        q.processAllAvailable(); q.stop()
-      }
-      withStatePartitions(s, 8) { replay(); replay() }
-      graft.sources.JdbcSink.readTable(s, url)
-        .select(col("tempo_key").as("tempo_key"),
-          col("grupo_key").as("grupo_key"),
-          col("servico_key").as("servico_key"),
-          col("variavel_key").as("variavel_key"),
-          col("valor").cast("double").as("valor"),
-          col("arquivo_origem").as("arquivo_origem"),
-          col("linha_origem").as("linha_origem"),
-          col("hash_registro").as("hash_registro"))
-        .orderBy(col("hash_registro"))
-    }),
-
-    // ----- P1/F9: blank filter + whitespace-collapse clean on documents
-    "p1_clean_filter" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("doc_id"), cleanText(col("text")).as("texto_limpo"),
-          upper(col("lang")).as("lang"))
-        .orderBy(col("doc_id"))),
-
-    // ----- F12/P2: locale number parse on synthesized dirty strings
-    "f12_locale_parse" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("bruto",
-          when(col("event_id") % 11 === 0, lit("-"))
-            .when(col("event_id") % 13 === 0, lit(""))
-            .otherwise(concat(
-              regexp_replace(col("value").cast("string"), "\\.", ","),
-              lit("%"))))
-        .select(col("event_id"), col("bruto"),
-          parseLocaleNumber(col("bruto")).as("valor"))
-        .filter(col("valor").isNotNull)                      // P2
-        .orderBy(col("event_id"))),
-
-    // ----- quarantine routing (the scale-grade P1/P2: failing rows are
-    // TAGGED with the first broken rule and side-channeled, not silently
-    // dropped — Quarantine scaladoc). Same planted dirty cells as
-    // f12_locale_parse plus an unparseable 'n/d' marker; the two gates
-    // together cover both sides of the split from one rule set.
-    "p2_quarantine_split" -> ((s, dir) => {
-      val planted = Tables.events(s, dir)
-        .withColumn("bruto",
-          when(col("event_id") % 11 === 0, lit("-"))
-            .when(col("event_id") % 13 === 0, lit(""))
-            .when(col("event_id") % 17 === 0, lit("n/d"))
-            .otherwise(concat(
-              regexp_replace(col("value").cast("string"), "\\.", ","),
-              lit("%"))))
-        .select(col("event_id"), col("bruto"))
-      graft.operators.Quarantine.quarantined(planted, Seq(
-          "blank_cell" -> (trim(col("bruto")).isin("", "-")),
-          "unparseable_value" -> parseLocaleNumber(col("bruto")).isNull))
-        .select(col("event_id"), col("bruto"), col("reason"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ----- S4/S5/S6 end-to-end: raw headerless export from disk -> header
-    // probe -> re-read with detected header -> full transform. The oracle
-    // reads the SAME file with DuckDB (skip = the probed header row).
-    "s4_raw_ingest" -> ((s, _) =>
-      IdaTransform.rawWideToRecords(
-          RawIngest.readIdaExport(s, SparkEntry.rawFixturePath))
-        .orderBy(col("linha_origem"), col("ano_mes"))),
-
-    // ----- the SAME ingest over a comma-delimited quoted-field export,
-    // with the delimiter AUTODETECTED (RawIngest.detectDelim): the
-    // tolerant-reader stage the reference gets from pandas, gated on a
-    // second physical encoding end-to-end (probe -> quoted parse ->
-    // transform); the oracle re-reads the quoted file with delim=','
-    "s4_raw_ingest_quoted" -> ((s, _) =>
-      IdaTransform.rawWideToRecords(
-          RawIngest.readIdaExport(s, SparkEntry.quotedFixturePath,
-            delim = "auto"))
-        .orderBy(col("linha_origem"), col("ano_mes"))),
-
-    // ----- left-semi join: customers with at least one pending order
-    "j_semi" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val o = Tables.orders(s, dir).filter(col("o_orderstatus") === "P")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // ----- left-anti join: customers with no pending order
-    "j_anti" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val o = Tables.orders(s, dir).filter(col("o_orderstatus") === "P")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // ----- deep join pipeline (TPC-H Q3 shape): segment filter + top-10
-    "q3_top_orders" -> ((s, dir) => {
-      val c = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables.orders(s, dir)
-        .filter(col("o_orderdate") < lit("1998-01-01"))
-      val l = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") > lit("1998-01-01"))
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"))
-        .agg(sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    }),
-
-    // ----- 6-way star join (TPC-H Q5 shape): local supplier volume
-    "q5_region_supplier" -> ((s, dir) => {
-      val r = Tables.region(s, dir).filter(col("r_name") === "ASIA")
-      val n = Tables.nation(s, dir)
-      val c = Tables.customer(s, dir)
-      val o = Tables.orders(s, dir)
-      val l = Tables.lineitem(s, dir)
-      val sup = Tables.supplier(s, dir)
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(sup, l("l_suppkey") === sup("s_suppkey") &&
-          c("c_nationkey") === sup("s_nationkey"))
-        .join(broadcast(n), sup("s_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("n_name"))
-        .agg(sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    }),
-
-    // ----- hierarchical aggregation: ROLLUP with subtotals + grand total
-    "a_rollup" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(sumExact(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-        .orderBy(asc_nulls_first("l_returnflag"),
-          asc_nulls_first("l_linestatus"))),
-
-    // ----- CUBE: all grouping-set combinations
-    "a_cube" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(sumExact(col("o_totalprice")).as("total"), count(lit(1)).as("n"))
-        .orderBy(asc_nulls_first("o_orderstatus"),
-          asc_nulls_first("o_orderpriority"))),
-
-    // ----- INTERSECT: users that both clicked and purchased
-    "u2_intersect" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.filter(col("event_type") === "click").select(col("user_id"))
-        .intersect(ev.filter(col("event_type") === "purchase")
-          .select(col("user_id")))
-        .orderBy(col("user_id"))
-    }),
-
-    // ----- EXCEPT: high-value purchasers who never high-value clicked
-    "u3_except" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.filter(col("event_type") === "purchase" && col("value") > 150)
-        .select(col("user_id"))
-        .except(ev.filter(col("event_type") === "click" && col("value") > 150)
-          .select(col("user_id")))
-        .orderBy(col("user_id"))
-    }),
-
-    // ----- approximate distinct (HLL sketch) vs exact. The sketch value
-    // itself is implementation-specific, so the oracle-checked output is
-    // the exact count plus a tolerance flag the oracle pins TRUE — a real
-    // bound check, not a rows-only pass. Band = 20% (4 sigma at rsd=0.05):
-    // HLL++ is hash-deterministic, so for a FIXED dataset the check never
-    // flakes run-to-run, but an unseen scale factor could land a tail
-    // estimate; 4 sigma makes that a <1e-4-per-group event instead of the
-    // ~1e-3 a 15% band allowed.
-    "a_approx_distinct" -> ((s, dir) =>
-      Tables.events(s, dir).groupBy(col("event_type"))
-        .agg(approx_count_distinct(col("user_id")).as("approx_users"),
-          countDistinct(col("user_id")).as("exact_users"))
-        .select(col("event_type"), col("exact_users"),
-          (abs(col("approx_users") - col("exact_users")).cast("double")
-            / col("exact_users") <= 0.20).as("approx_ok"))
-        .orderBy(col("event_type"))),
-
-    // ----- equal-width histogram (profiling family): one stats row
-    // broadcast back over the scan, bin arithmetic in IEEE doubles —
-    // bit-identical across engines because min/max/width/floor are the
-    // same ops in the same order on the same inputs
-    "a_histogram" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir).select(col("l_extendedprice").as("x"))
-      val mm = li.agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
-      li.crossJoin(broadcast(mm))
-        .withColumn("bin",
-          least(floor((col("x") - col("lo")) / ((col("hi") - col("lo")) / 10d)),
-            lit(9L)).cast("int"))
-        .groupBy(col("bin")).agg(count(lit(1)).as("n"))
-        .orderBy(col("bin"))
-    }),
-
-    // ----- approximate percentiles (GK sketch) next to the exact gate:
-    // like a_approx_distinct, the sketch estimate is engine-internal, so
-    // the gate pins the EXACT values plus a tolerance flag on the sketch.
-    // approx_percentile(accuracy=1000) errors by at most 0.1% of rank —
-    // the flag allows rank slack of 1% of rows, value-compared through
-    // the exact quantile at the slacked ranks.
-    "a_approx_percentile" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      // ONE exact-percentile aggregation for band + midpoint (each
-      // percentile() call sorts its group's values independently)
-      val grouped = li.groupBy(col("l_returnflag"))
-        .agg(
-          expr("percentile(l_extendedprice, array(0.49, 0.5, 0.51))").as("q"),
-          expr("approx_percentile(l_extendedprice, 0.5, 1000)").as("ap50"))
-      grouped.select(col("l_returnflag"),
-          element_at(col("q"), 2).as("exact_p50"),
-          (col("ap50") >= element_at(col("q"), 1) &&
-            col("ap50") <= element_at(col("q"), 3)).as("approx_ok"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // ----- semi-structured: JSON props extraction + typed aggregation
-    "f_json_extract" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
-        .filter(col("k").isNotNull)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          max(col("k")).as("max_k"))
-        .orderBy(col("event_type"))),
-
-    // ----- Spark 4 VARIANT path for semi-structured data: parse_json
-    // into the binary VARIANT encoding once, then typed variant_get
-    // extraction — the columnar-shredding-ready successor to per-access
-    // get_json_object string re-parsing (f_json_extract gates that
-    // legacy path; results must agree). Oracle is plain JSON extraction
-    "f_variant_json" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("v", parse_json(col("props")))
-        .withColumn("k", variant_get(col("v"), "$.k", "int"))
-        .filter(col("k").isNotNull)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"))
-        .orderBy(col("event_type"))),
-
-    // ----- as-of join: purchases enriched with latest prior click per user
-    // ----- the NATIVE as-of join (plans/AsofNative): the same semantics
-    // as j_asof planned through the custom LogicalPlan -> Strategy ->
-    // physical merge operator injected via SparkSessionExtensions — one
-    // streaming merge pass per co-partition with O(1) state, sorts and
-    // exchanges declared to EnsureRequirements instead of encoded in a
-    // union+window. Oracle identical to j_asof's: two implementations,
-    // one contract
-    "j_asof_native" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id").as("click_id"),
-          col("value").as("click_value"))
-      graft.plans.AsofNative.join(purchases, clicks, keys = Seq("user_id"),
-          leftTs = "ts", rightTs = "ts",
-          payload = Seq("click_id", "click_value"), tieBreak = "click_id")
-        .select(col("event_id"), col("user_id"), col("value"),
-          col("click_id"), col("click_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ----- STATS-DRIVEN selection, as-of flavor (r13 judge ask 6 — the
-    // trio's completion): the clicks side is far under the broadcast
-    // threshold at gate scales, so autoJoin emits the packed-array
-    // broadcast EQUI-join (zero exchange AND zero sort on the purchases
-    // side — the predicate-join trick range/interval use can't express
-    // "latest per left row" without re-shuffling, so the small side is
-    // reshaped instead: per-key sorted struct array, match =
-    // last qualifying element). A big clicks side takes the native sweep;
-    // both plans and their row-parity are spec-asserted in AsofNativeSpec.
-    // Same oracle as j_asof_native: three implementations, one contract
-    "j_asof_auto" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id").as("click_id"),
-          col("value").as("click_value"))
-      graft.plans.AsofNative.autoJoin(purchases, clicks,
-          keys = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-          payload = Seq("click_id", "click_value"), tieBreak = "click_id")
-        .select(col("event_id"), col("user_id"), col("value"),
-          col("click_id"), col("click_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    "j_asof" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id").as("click_id"),
-          col("value").as("click_value"))
-      AsofJoin.asofJoin(purchases, clicks, keys = Seq("user_id"),
-          leftTs = "ts", rightTs = "ts",
-          payload = Seq("click_id", "click_value"), tieBreak = "click_id")
-        .select(col("event_id"), col("user_id"), col("value"),
-          col("click_id"), col("click_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ----- as-of join with a bounded lookback (pandas merge_asof
-    // `tolerance`): the latest prior click only counts within 30 minutes
-    // of the purchase; staler matches null out. Same one-shuffle
-    // union+window plan — the tolerance is a post-fill projection, not a
-    // second join
-    "j_asof_tolerance" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id").as("click_id"),
-          col("value").as("click_value"))
-      AsofJoin.asofJoin(purchases, clicks, keys = Seq("user_id"),
-          leftTs = "ts", rightTs = "ts",
-          payload = Seq("click_id", "click_value"), tieBreak = "click_id",
-          toleranceMicros = Some(30L * 60 * 1000000))
-        .select(col("event_id"), col("user_id"), col("value"),
-          col("click_id"), col("click_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ----- nearest-direction as-of join (pandas merge_asof
-    // direction='nearest'): whichever click is closest in time on either
-    // side, ties backward — both fills share one exchange (two window
-    // sorts, no range join)
-    "j_asof_nearest" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id").as("click_id"),
-          col("value").as("click_value"))
-      AsofJoin.asofJoinNearest(purchases, clicks, keys = Seq("user_id"),
-          leftTs = "ts", rightTs = "ts",
-          payload = Seq("click_id", "click_value"), tieBreak = "click_id")
-        .select(col("event_id"), col("user_id"), col("value"),
-          col("click_id"), col("click_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ----- range join: events matched to overlapping value bands
-    "j_range" -> ((s, dir) => {
-      import s.implicits._
-      val bands = (0 until 12)
-        .map(i => (i.toLong, i * 20.0, i * 20.0 + 30.0))
-        .toDF("band_id", "lo", "hi")
-      RangeJoin.pointInInterval(
-          Tables.events(s, dir).select(col("event_id"), col("value")),
-          bands, pointCol = "value", loCol = "lo", hiCol = "hi",
-          bucketWidth = 25.0)
-        .select(col("event_id"), col("band_id"), col("value"))
-        .orderBy(col("event_id"), col("band_id"))
-    }),
-
-    // ----- NATIVE keyed range join (LogicalPlan -> Strategy -> SparkPlan,
-    // the AsofNative tier): per-type value bands joined by interval sweep
-    // within key co-partitions — one exchange per side, ZERO interval
-    // replication (the encodable j_range shape explodes intervals into
-    // every bucket they span)
-    "j_range_native" -> ((s, dir) => {
-      import s.implicits._
-      // event_type IS NOT NULL on BOTH sides: the native join's documented
-      // rule matches null keys to each other, while the oracle's equi-join
-      // drops them — the gate must not depend on the fixture never
-      // carrying a null type (r12 advisor)
-      val types = Tables.events(s, dir).select(col("event_type"))
-        .filter(col("event_type").isNotNull).distinct()
-      val bands = types.crossJoin(
-        (0 until 12).map(i => (i.toLong, i * 20.0, i * 20.0 + 30.0))
-          .toDF("band_id", "lo", "hi"))
-      graft.plans.RangeNative.join(
-          Tables.events(s, dir).filter(col("event_type").isNotNull)
-            .select(col("event_id"), col("event_type"), col("value")),
-          bands, keys = Seq("event_type"), pointCol = "value",
-          loCol = "lo", hiCol = "hi", payload = Seq("band_id"))
-        .select(col("event_id"), col("band_id"), col("value"))
-        .orderBy(col("event_id"), col("band_id"))
-    }),
-
-    // ----- STATS-DRIVEN native-vs-broadcast selection: the per-type
-    // bands side is far below the broadcast threshold, so autoJoin emits
-    // the broadcast predicate plan (ZERO exchange on the events side —
-    // strictly better than the sweep's one-per-side); a big interval
-    // side would take the native node (both plans spec-asserted in
-    // RangeNativeSpec). Same results either way — same oracle as
-    // j_range_native
-    "j_range_auto" -> ((s, dir) => {
-      import s.implicits._
-      val types = Tables.events(s, dir).select(col("event_type"))
-        .filter(col("event_type").isNotNull).distinct()
-      val bands = types.crossJoin(
-        (0 until 12).map(i => (i.toLong, i * 20.0, i * 20.0 + 30.0))
-          .toDF("band_id", "lo", "hi"))
-      graft.plans.RangeNative.autoJoin(
-          Tables.events(s, dir).filter(col("event_type").isNotNull)
-            .select(col("event_id"), col("event_type"), col("value")),
-          bands, keys = Seq("event_type"), pointCol = "value",
-          loCol = "lo", hiCol = "hi", payload = Seq("band_id"))
-        .select(col("event_id"), col("band_id"), col("value"))
-        .orderBy(col("event_id"), col("band_id"))
-    }),
-
-    // ----- NATIVE range join, LEFT OUTER: every event emitted — points
-    // past every band (value > 250) and null values ride a null band_id;
-    // same sweep, same one-exchange-per-side plan
-    "j_range_native_outer" -> ((s, dir) => {
-      import s.implicits._
-      val types = Tables.events(s, dir).select(col("event_type"))
-        .filter(col("event_type").isNotNull).distinct()
-      val bands = types.crossJoin(
-        (0 until 12).map(i => (i.toLong, i * 20.0, i * 20.0 + 30.0))
-          .toDF("band_id", "lo", "hi"))
-      graft.plans.RangeNative.join(
-          Tables.events(s, dir).filter(col("event_type").isNotNull)
-            .select(col("event_id"), col("event_type"), col("value")),
-          bands, keys = Seq("event_type"), pointCol = "value",
-          loCol = "lo", hiCol = "hi", payload = Seq("band_id"),
-          outer = true)
-        .select(col("event_id"), col("band_id"), col("value"))
-        .orderBy(col("event_id"), col("band_id"))
-    }),
-
-    // ----- NATIVE keyed interval-overlap join (the third operator on the
-    // AsofNative tier): campaign-vs-session shape WITH its equi-key
-    // declared — plane-sweep merge within event_type co-partitions, one
-    // exchange per side, ZERO replication (the encodable
-    // j_interval_overlap shape replicates BOTH sides into time cells and
-    // needs an ownership rule for exactly-once pairs)
-    "j_interval_native" -> ((s, dir) => {
-      // null-key filter for the same reason as j_range_native above
-      val ev = Tables.events(s, dir).filter(col("event_type").isNotNull)
-        .withColumn("us", unix_micros(col("ts")))
-      val left = ev.filter(col("event_id") % 50 === 0)
-        .select(col("event_type"), col("event_id").as("l_id"),
-          col("us").as("l_lo"), (col("us") + 1800000000L).as("l_hi"))
-      val right = ev.filter(col("event_id") % 137 === 0)
-        .select(col("event_type"), col("event_id").as("r_id"),
-          col("us").as("r_lo"), (col("us") + 2700000000L).as("r_hi"))
-      graft.plans.IntervalNative.join(left, right, keys = Seq("event_type"),
-          lLoCol = "l_lo", lHiCol = "l_hi", rLoCol = "r_lo", rHiCol = "r_hi",
-          payload = Seq("r_id", "r_lo", "r_hi"))
-        .select(col("event_type"), col("l_id"), col("r_id"),
-          (least(col("l_hi"), col("r_hi")) -
-            greatest(col("l_lo"), col("r_lo"))).as("overlap_us"))
-        .orderBy(col("l_id"), col("r_id"))
-    }),
-
-    // ----- STATS-DRIVEN selection, interval flavor (same rule; the
-    // filtered right side is small at gate scales, so the broadcast
-    // predicate plan carries the gate — the empty-interval and null-key
-    // conjuncts reproduce the sweep's documented semantics exactly)
-    "j_interval_auto" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).filter(col("event_type").isNotNull)
-        .withColumn("us", unix_micros(col("ts")))
-      val left = ev.filter(col("event_id") % 50 === 0)
-        .select(col("event_type"), col("event_id").as("l_id"),
-          col("us").as("l_lo"), (col("us") + 1800000000L).as("l_hi"))
-      val right = ev.filter(col("event_id") % 137 === 0)
-        .select(col("event_type"), col("event_id").as("r_id"),
-          col("us").as("r_lo"), (col("us") + 2700000000L).as("r_hi"))
-      graft.plans.IntervalNative.autoJoin(left, right,
-          keys = Seq("event_type"),
-          lLoCol = "l_lo", lHiCol = "l_hi", rLoCol = "r_lo", rHiCol = "r_hi",
-          payload = Seq("r_id", "r_lo", "r_hi"))
-        .select(col("event_type"), col("l_id"), col("r_id"),
-          (least(col("l_hi"), col("r_hi")) -
-            greatest(col("l_lo"), col("r_lo"))).as("overlap_us"))
-        .orderBy(col("l_id"), col("r_id"))
-    }),
-
-    // ----- NATIVE interval join, LEFT OUTER (r12 judge ask 6): the
-    // enrich-every-point production shape — every left interval emitted,
-    // unmatched ones null-padded on eviction/key-change/stream-end in the
-    // same sweep, same one-exchange-per-side plan, state still bounded by
-    // max simultaneously open intervals
-    "j_interval_native_outer" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).filter(col("event_type").isNotNull)
-        .withColumn("us", unix_micros(col("ts")))
-      val left = ev.filter(col("event_id") % 50 === 0)
-        .select(col("event_type"), col("event_id").as("l_id"),
-          col("us").as("l_lo"), (col("us") + 1800000000L).as("l_hi"))
-      val right = ev.filter(col("event_id") % 137 === 0)
-        .select(col("event_type"), col("event_id").as("r_id"),
-          col("us").as("r_lo"), (col("us") + 2700000000L).as("r_hi"))
-      graft.plans.IntervalNative.join(left, right, keys = Seq("event_type"),
-          lLoCol = "l_lo", lHiCol = "l_hi", rLoCol = "r_lo", rHiCol = "r_hi",
-          payload = Seq("r_id", "r_lo", "r_hi"), outer = true)
-        .select(col("event_type"), col("l_id"), col("r_id"),
-          when(col("r_id").isNull, lit(null).cast("long"))
-            .otherwise(least(col("l_hi"), col("r_hi")) -
-              greatest(col("l_lo"), col("r_lo"))).as("overlap_us"))
-        .orderBy(col("l_id"), col("r_id"))
-    }),
-
-    // ----- O1-class top-k with deterministic tiebreak
-    "o1_topk" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(10)),
-
-    // ----- U1: set union (distinct) across heterogeneous sources
-    "u1_union" -> ((s, dir) =>
-      Tables.orders(s, dir).select(col("o_orderpriority").as("nome"))
-        .unionByName(Tables.events(s, dir).select(col("event_type").as("nome")))
-        .distinct()
-        .orderBy(col("nome"))),
-
-    // ----- A4/A5: distinct-set extraction + run statistics counters
-    "a4_distinct_stats" -> ((s, dir) =>
-      Tables.orders(s, dir).agg(
-        count(lit(1)).as("n_records"),
-        countDistinct(col("o_custkey")).as("n_customers"),
-        countDistinct(monthKey(col("o_orderdate"))).as("n_months"),
-        countDistinct(col("o_orderpriority")).as("n_groups"))),
-
-    // ----- R2: manual pivot (MAX/AVG of CASE) — daily series per event type
-    "r2_pivot" -> ((s, dir) => {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val aggs = types.map { t =>
-        (sum(when(col("event_type") === t, dec(col("value")))).cast("double") /
-          count(when(col("event_type") === t, lit(1)))).as(t)
-      }
-      Tables.events(s, dir)
-        .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("dia"))
-        .agg(aggs.head, aggs.tail: _*)
-        .orderBy(col("dia"))
-    }),
-
-    // ===== extensions: LLM training-data pipeline operators =====
-
-    // ----- token counting: whitespace + BPE-ish subword proxy
-    "text_tokens" -> ((s, dir) =>
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextFns.tokenCount(col("text")).as("n_tokens"),
-        TextFns.bpeishCount(col("text")).as("n_bpe"),
-        length(col("text")).as("n_chars_obs"))
-        .orderBy(col("doc_id"))),
-
-    // ----- quality-scoring signals; the token array is staged once as a
-    // column (same HOF/CSE rationale as text_langid — TextFns.stopwordHits)
-    "text_quality" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .withColumn("__toks", TextFns.tokens(col("text")))
-        .withColumn("__n", when(col("__toks").isNotNull, size(col("__toks"))))
-        .select(col("doc_id"),
-          col("__n").as("n_tokens"),
-          TextFns.punctCount(col("text")).as("n_punct"),
-          (when(col("__toks").isNotNull, size(array_distinct(col("__toks"))))
-            .cast("double") / col("__n")).as("uniq_ratio"),
-          (length(regexp_replace(trim(col("text")), "\\s+", ""))
-            .cast("double") / col("__n")).as("mean_token_len"),
-          (TextFns.stopwordCount(col("text"), "en").cast("double") / col("__n"))
-            .as("stopword_ratio"))
-        .orderBy(col("doc_id"))),
-
-    // ----- interval join (batch form of the stream-stream join): clicks
-    // paired with the same user's purchases within the following hour
-    "j_stream_interval" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      graft.streaming.EventsStream.intervalJoin(
-        ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase"))
-        .orderBy(col("user_id"), col("l_id"), col("r_id"))
-    }),
-
-    // ----- SCD2 dimension historization: event_type runs per user become
-    // [valid_from, valid_to) intervals with is_current (Kimball type-2)
-    // null-ts guard on BOTH sides: Spark windows order NULLS FIRST,
-    // DuckDB NULLS LAST — a regenerated fixture with a null timestamp
-    // would otherwise diverge silently (same rule sessionize applies)
-    "scd2_history" -> ((s, dir) =>
-      graft.operators.Scd2.fromChangeLog(
-        Tables.events(s, dir)
-          .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-          .filter(col("ts").isNotNull),
-        keyCol = "user_id", orderCols = Seq("ts", "event_id"),
-        attrCol = "event_type")
-        .orderBy(col("user_id"), col("valid_from"), col("event_type"))),
-
-    // ----- context-window sequence packing: cumulative-chunk bins per
-    // source shard (partitioned window — no global single-reducer sort)
-    "pack_sequences" -> ((s, dir) =>
-      graft.operators.Packing.packStats(
-        Tables.documents(s, dir).select(col("source"), col("doc_id"), col("text")),
-        budget = 512)
-        .orderBy(col("source"), col("bin"))),
-
-    // ----- first-fit-DECREASING packing (pack_sequences covers arrival
-    // order): longest documents bin first, so budget overshoot concentrates
-    // in the early bins — the same one-window plan on a different
-    // intra-shard order
-    "pack_ffd" -> ((s, dir) =>
-      graft.operators.Packing.packStats(
-        Tables.documents(s, dir).select(col("source"), col("doc_id"), col("text")),
-        budget = 512, longestFirst = true)
-        .orderBy(col("source"), col("bin"))),
-
-    // ----- packing under SUBWORD budgets: same exclusive-prefix binning,
-    // token unit = BPE count (Bpe.tokenCount) — context-window budgets in
-    // the unit a trainer actually bills
-    "pack_sequences_bpe" -> ((s, dir) =>
-      graft.operators.Packing.packStats(
-        Tables.documents(s, dir).select(col("source"), col("doc_id"), col("text")),
-        budget = 512, tokenCount = graft.functions.Bpe.tokenCount)
-        .orderBy(col("source"), col("bin"))),
-
-    // ----- packing under the LEARNED subword vocabulary: the
-    // training→application composition the verdict asked for —
-    // text_bpe_train's 8 learned merges (memoized per dataset) drive the
-    // token budget instead of the fixed table; the oracle re-derives the
-    // same merges in SQL and applies them as data-dependent replaces
-    "pack_sequences_bpe_learned" -> ((s, dir) =>
-      graft.operators.Packing.packStats(
-        Tables.documents(s, dir).select(col("source"), col("doc_id"), col("text")),
-        budget = 512,
-        tokenCount = c =>
-          graft.functions.Bpe.tokenCountWith(c, learnedBpeMerges(s, dir)))
-        .orderBy(col("source"), col("bin"))),
-
-    // ----- materialized packed sequences: bin members concatenated in
-    // doc order with a separator (the artifact a trainer consumes)
-    "pack_concat" -> ((s, dir) =>
-      graft.operators.Packing.packConcat(
-        Tables.documents(s, dir).select(col("source"), col("doc_id"), col("text")),
-        budget = 512)
-        .orderBy(col("source"), col("bin"))),
-
-    // ----- Gopher-style repetition quality signals (top-token fraction,
-    // duplicate-bigram fraction, symbol ratio, repetitive flag)
-    "quality_repetition" -> ((s, dir) =>
-      graft.operators.Repetition.signals(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")))
-        .orderBy(col("doc_id"))),
-
-    // ----- FUSED quality pass (r12 judge stretch 8): Gopher drop rules +
-    // repetition + token entropy off ONE tokenize and ONE gram aggregate,
-    // replacing three separate corpus scans (each of which re-tokenized
-    // text); the measured speedup vs the three gates summed is in SCALE.md
-    "quality_fused" -> ((s, dir) =>
-      graft.operators.Repetition.fusedSignals(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")))),
-
-    // ----- language-ID heuristic (stopword argmax + CJK charset probe);
-    // hits materialized once as a column — see TextFns.stopwordHits
-    "text_langid" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .withColumn("__hits", TextFns.stopwordHits(col("text")))
-        .select(col("doc_id"),
-          TextFns.langIdFrom(col("text"), col("__hits")).as("lang_pred"))
-        .orderBy(col("doc_id"))),
-
-    // ----- language-ID evaluation: confusion matrix of the detector
-    // against the ground-truth lang column, with per-truth-class recall
-    // in exact millis — the eval a pipeline runs before trusting langid
-    // for routing/filtering. |langs|^2-bounded output; one corpus scan
-    "text_langid_confusion" -> ((s, dir) => {
-      val pred = Tables.documents(s, dir)
-        .filter(col("text").isNotNull)
-        .withColumn("__hits", TextFns.stopwordHits(col("text")))
-        .select(col("lang"),
-          TextFns.langIdFrom(col("text"), col("__hits")).as("lang_pred"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("lang"))
-      pred.groupBy(col("lang"), col("lang_pred"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("__cls", sum(col("n")).over(w))
-        .select(col("lang"), col("lang_pred"), col("n"),
-          expr("(1000 * n) div __cls").as("recall_milli"))
-        .orderBy(col("lang"), col("lang_pred"))
-    }),
-
-    // ----- datetime-function parity: the calendar surface a mart's date
-    // dimension and partition logic lean on — year/quarter/month/day,
-    // ISO day-of-week and week number, day-of-year, month start/end,
-    // clamped month arithmetic (Jan 31 + 1 mo = end of Feb on BOTH
-    // engines), and day arithmetic against a fixed anchor — all pinned
-    // value-exactly per row against the oracle's spellings (Spark
-    // weekday()+1 == DuckDB isodow; Spark weekofyear == DuckDB ISO
-    // week()). Narrow one-scan projection
-    "f_datetime_family" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"),
-          year(col("o_orderdate")).as("y"),
-          quarter(col("o_orderdate")).as("q"),
-          month(col("o_orderdate")).as("m"),
-          dayofmonth(col("o_orderdate")).as("d"),
-          dayofyear(col("o_orderdate")).as("doy"),
-          (weekday(col("o_orderdate")) + lit(1)).as("iso_dow"),
-          weekofyear(col("o_orderdate")).as("iso_week"),
-          to_date(date_trunc("month", col("o_orderdate"))).as("mon_start"),
-          last_day(col("o_orderdate")).as("mon_end"),
-          add_months(col("o_orderdate"), 2).as("plus2m"),
-          datediff(col("o_orderdate"), to_date(lit("1995-01-01")))
-            .as("days_since"))
-        .orderBy(col("o_orderkey"))),
-
-    // ----- string-function parity, f_datetime_family's sibling: pad /
-    // translate / replace / find / slice / repeat / reverse / ascii /
-    // printf spellings pinned value-exactly per customer row against the
-    // oracle dialect (Spark instr == DuckDB strpos; format_string ==
-    // printf). Narrow one-scan projection
-    "f_string_family" -> ((s, dir) =>
-      Tables.customer(s, dir)
-        .select(col("c_custkey"),
-          lpad(col("c_name"), 25, "*").as("pad_l"),
-          rpad(col("c_name"), 25, "-").as("pad_r"),
-          translate(col("c_name"), "aeiou", "01234").as("xlate"),
-          regexp_replace(col("c_name"), "#", "-").as("repl"),
-          instr(col("c_name"), "0").cast("int").as("find0"),
-          substring(col("c_name"), 1, 5).as("first5"),
-          substring(col("c_name"), -5, 5).as("last5"),
-          repeat(substring(col("c_name"), 1, 2), 3).as("rep3"),
-          reverse(col("c_name")).as("rev"),
-          ascii(col("c_name")).as("first_byte"),
-          format_string("cust-%07d", col("c_custkey")).as("padded_id"),
-          length(col("c_name")).as("len"))
-        .orderBy(col("c_custkey"))),
-
-    // ----- regex-function parity, the sixth function-family gate —
-    // restricted to the Java-regex ∩ RE2 shared dialect (literal
-    // alternation, char classes, \d, bounded quantifiers, anchors; no
-    // backrefs/lookarounds, which RE2 lacks BY DESIGN): group extract,
-    // extract_all count, rlike/regexp_matches, LIKE and ILIKE, regex
-    // split arity, and global regexp_replace (DuckDB needs the 'g' flag
-    // to match Spark's replace-all default). Narrow one-scan projection
-    "f_regex_family" -> ((s, dir) =>
-      Tables.customer(s, dir)
-        .select(col("c_custkey"),
-          regexp_extract(col("c_name"), "Customer#(\\d+)", 1).as("ext"),
-          size(expr("regexp_extract_all(c_name, '\\\\d+', 0)")).as("ndig"),
-          col("c_name").rlike("0{3}").as("has000"),
-          col("c_name").rlike("^Customer#\\d+$").as("anchored"),
-          expr("c_name ilike 'cust%'").as("ilk"),
-          col("c_name").like("Customer#00%").as("lk"),
-          size(split(col("c_name"), "#")).as("nsplit"),
-          regexp_replace(col("c_name"), "\\d+", "N").as("repl"))
-        .orderBy(col("c_custkey"))),
-
-    // ----- timestamp-function parity (f_datetime_family pinned the DATE
-    // surface; this pins TIME-of-day over real micro-precision instants,
-    // UTC session == DuckDB naive): hour/minute/whole-second extraction,
-    // micros-within-the-minute (Spark's fractional extract(SECOND)
-    // decimal ×1e6 == DuckDB microsecond()), hour truncation, anchored
-    // second deltas (timestampdiff == date_diff), strftime formatting,
-    // and a whole-second make_timestamp rebuild from the parts. Narrow
-    // one-scan projection
-    "f_timestamp_family" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .select(col("event_id"),
-          hour(col("ts")).as("h"),
-          minute(col("ts")).as("mi"),
-          second(col("ts")).as("sec_i"),
-          expr("CAST(extract(SECOND FROM ts) * 1000000 AS BIGINT)")
-            .as("micros_min"),
-          date_trunc("hour", col("ts")).as("trunc_h"),
-          expr("timestampdiff(SECOND, TIMESTAMP'2024-01-01 00:00:00', ts)")
-            .as("secs_since"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm").as("fmt_min"),
-          make_timestamp(year(col("ts")), month(col("ts")),
-            dayofmonth(col("ts")), hour(col("ts")), minute(col("ts")),
-            second(col("ts"))).as("rebuilt"))
-        .orderBy(col("event_id"))),
-
-    // ----- math/bit-function parity, the third function-family gate:
-    // remainder vs pmod on NEGATIVE dividends (Spark % and DuckDB % are
-    // both sign-of-dividend; pmod is restated as ((v%k)+k)%k), truncating
-    // integer `div` restated through the exact-multiple identity
-    // (v - v%7)//7, bit ops / shifts / bit_count on BIGINT two's
-    // complement, factorial through the HUGEINT->BIGINT cast (checklist
-    // rule 7), ceil/floor of DOUBLE through the BIGINT cast (Spark
-    // returns LONG, DuckDB DOUBLE — the cast is the shared type), IEEE
-    // sqrt (correctly rounded on both engines), greatest/least, and hex
-    // spelling equality. Narrow one-scan projection
-    "f_math_family" -> ((s, dir) => {
-      val v = col("o_custkey") - lit(750)
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"),
-          abs(v).as("abs_v"),
-          signum(v).cast("int").as("sign_v"),
-          (v % 7).as("rem7"),
-          pmod(v, lit(7)).as("pmod7"),
-          expr("(o_custkey - 750) div 7").as("tdiv7"),
-          (col("o_orderkey").bitwiseAND(lit(255L))).as("band"),
-          (col("o_orderkey").bitwiseOR(col("o_custkey"))).as("bor"),
-          (col("o_orderkey").bitwiseXOR(col("o_custkey"))).as("bxor"),
-          shiftleft(col("o_orderkey") % 1024, 3).as("shl3"),
-          shiftright(col("o_orderkey"), 2).as("shr2"),
-          bit_count(col("o_orderkey")).cast("int").as("bcnt"),
-          factorial((col("o_orderkey") % 13).cast("int")).as("fact"),
-          ceil(col("o_totalprice")).cast("long").as("ceil_p"),
-          floor(col("o_totalprice")).cast("long").as("floor_p"),
-          sqrt(col("o_totalprice")).as("sq"),
-          greatest(col("o_orderkey"), col("o_custkey"), lit(1000L))
-            .as("gmax"),
-          least(col("o_orderkey"), col("o_custkey"), lit(1000L)).as("lmin"),
-          hex(col("o_orderkey")).as("hexk"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // ----- collection-function parity, the fourth function-family gate:
-    // sequence/range construction, size, fold (aggregate ==
-    // list_sum+CAST off HUGEINT), max, membership, position (Spark emits
-    // 0 for absent, DuckDB NULL — COALESCE is the shared spelling),
-    // slice, reverse, lambda transform/filter, distinct (NOT
-    // order-preserving in DuckDB — both sides sort), zip_with (restated
-    // as an index transform), and flatten. Arrays are emitted as joined
-    // strings (the f_higher_order emission precedent — scalars/VARCHAR
-    // only cross the driver compare); k >= 2 keeps every emitted array
-    // nonempty, because array_to_string([]) is NULL on DuckDB but '' on
-    // Spark. Narrow one-scan projection
-    "f_array_family" -> ((s, dir) => {
-      val k = (pmod(col("o_orderkey"), lit(5)) + lit(2)).cast("int")
-      // the array is MATERIALIZED once as a named column: 11 of the 13
-      // expressions are higher-order functions, which are excluded from
-      // whole-stage codegen and common-subexpression elimination, so the
-      // inline form re-built sequence(1,k) per expression per row
-      // (13 generator evaluations/row); as a non-cheap multi-referenced
-      // alias it survives CollapseProject and evaluates once. Measured at
-      // sf0.1: timing-neutral (the per-row cost is the array_join string
-      // building, not the small-int generator) — kept for the 12 redundant
-      // evaluations/row it removes, which matters once k is corpus-derived
-      // instead of pmod-5-bounded
-      val arr = col("__arr")
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"), sequence(lit(1), k).as("__arr"))
-        .select(col("o_orderkey"),
-          size(arr).as("n_el"),
-          aggregate(arr, lit(0L), (a, x) => a + x).as("s"),
-          array_max(arr).cast("long").as("mx"),
-          array_contains(arr, 3).as("has3"),
-          array_position(arr, 5).cast("long").as("pos5"),
-          array_join(slice(arr, 2, 3), ",").as("str_slice"),
-          array_join(reverse(arr), ",").as("str_rev"),
-          array_join(transform(arr, x => x * x), ",").as("str_sq"),
-          array_join(filter(arr, x => x % 2 === 0), ",").as("str_even"),
-          array_join(array_sort(array_distinct(concat(arr, arr))), ",")
-            .as("str_dist"),
-          array_join(zip_with(arr, reverse(arr), (x, y) => x * y), ",")
-            .as("str_zip"),
-          array_join(flatten(array(arr, arr)), ",").as("str_flat"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // ----- Cohen's kappa: chance-corrected agreement between the langid
-    // detector and the ground-truth lang column — the metric a labeling
-    // pipeline reports where raw accuracy flatters skewed label
-    // distributions (Cohen 1960). Same prediction chain as
-    // text_langid_confusion (driver-green); the kappa identity is kept in
-    // EXACT integers — kappa = (N·agree − Σ row_k·col_k) / (N² − Σ
-    // row_k·col_k) — with ONE mirrored IEEE division at emission. The
-    // |langs|-sized marginal frames broadcast; one corpus scan
-    "a_cohens_kappa" -> ((s, dir) => {
-      val cells = Tables.documents(s, dir)
-        .filter(col("text").isNotNull)
-        .withColumn("__hits", TextFns.stopwordHits(col("text")))
-        .select(col("lang"),
-          TextFns.langIdFrom(col("text"), col("__hits")).as("lang_pred"))
-        .groupBy(col("lang"), col("lang_pred"))
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true) // three tiny consumers, one corpus pass
-      val tot = cells.agg(sum(col("n")).as("n_items"),
-        sum(when(col("lang") === col("lang_pred"), col("n"))
-          .otherwise(lit(0L))).as("n_agree"))
-      val rows = cells.groupBy(col("lang").as("label"))
-        .agg(sum(col("n")).as("r"))
-      val cols = cells.groupBy(col("lang_pred").as("label"))
-        .agg(sum(col("n")).as("c"))
-      val pe = rows.join(cols, Seq("label"))
-        .agg(coalesce(sum(col("r") * col("c")), lit(0L)).as("pe_num"))
-      tot.crossJoin(broadcast(pe))
-        .select(col("n_items"), col("n_agree"), col("pe_num"),
-          ((col("n_items") * col("n_agree") - col("pe_num")).cast("double") /
-            (col("n_items") * col("n_items") - col("pe_num")).cast("double"))
-            .as("kappa"))
-    }),
-
-    // ----- vocabulary build: explode tokens -> corpus-wide top-k by freq
-    "text_vocab_topk" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(explode(TextFns.tokens(lower(col("text")))).as("token"))
-        .filter(col("token") =!= "")
-        .groupBy(col("token"))
-        .agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("token"))
-        .limit(100)),
-
-    // ----- exact percentiles (sort-based interpolation) per group
-    "a_percentile" -> ((s, dir) =>
-      Tables.events(s, dir).groupBy(col("event_type"))
-        .agg(expr("percentile(value, 0.5)").as("p50"),
-          expr("percentile(value, 0.95)").as("p95"))
-        .orderBy(col("event_type"))),
-
-    // ----- document fingerprint: rolling polynomial hash
-    "text_fingerprint" -> ((s, dir) =>
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextFns.fingerprint(col("text")).as("fp"))
-        .orderBy(col("doc_id"))),
-
-    // ----- exact dedup over a corpus with planted full copies
-    "dedup_exact" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val copies = docs.select((col("doc_id") + 100000).as("doc_id"), col("text"))
-      Dedup.exact(docs.unionByName(copies))
-        .orderBy(col("content_hash"))
-    }),
-
-    // ----- MinHash+LSH near-dup pairs (planted perturbed copies); oracle
-    // restates FNV-1a64 + lane arithmetic in HUGEINT (SketchOracleSql)
-    "dedup_minhash" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      Dedup.minhashNearDups(docs.unionByName(perturbed), threshold = 0.6)
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // ----- the same sketch→band→verify tier over a corpus with PLANTED
-    // multi-byte documents (the multimodal fixture suffix on doc_id % 61
-    // == 3) AND a planted VERTICAL-TAB document (doc_id % 61 == 5 gets
-    // "vt<VT>split marker" (U+000B spelled \u000B) — the one character where Java \s and
-    // RE2 \s differ, r16 ADVICE): proves the r16 byte-true FNV oracle
-    // fold — and the explicit-whitespace-class tokenization parity it
-    // leans on — cross-engine, instead of guarding the assumption away
-    // (the r14 ascii_guard this gate retired)
-    "dedup_minhash_nonascii" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"),
-        when(col("doc_id") % 61 === 3,
-          concat(col("text"), lit(Multimodal.NonAsciiSuffix)))
-          .when(col("doc_id") % 61 === 5,
-            concat(col("text"), lit("\nvt\u000Bsplit marker")))
-          .otherwise(col("text")).as("text"))
-      val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      Dedup.minhashNearDups(docs.unionByName(perturbed), threshold = 0.6)
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // ----- LSH recall evaluation: of the PLANTED near-dup pairs whose
-    // exact shingle Jaccard clears the threshold, what fraction did the
-    // banded MinHash index actually surface as candidates? Ground truth is
-    // restricted to the planted pair set, so the exact verification stays
-    // O(n) — the evaluation discipline that still works when all-pairs is
-    // impossible (the same bounded-truth shape as ann_recall_report)
-    "dedup_lsh_recall_report" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      val sh = docs.unionByName(perturbed)
-        .select(col("doc_id"),
-          graft.functions.TextFns.wordShingles(col("text"), 3).as("__sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cands = Dedup.minhashCandidatesFromShingles(sh, "doc_id", "__sh")
-      val sets = sh.select(col("doc_id"),
-        transform(col("__sh"), x => xxhash64(x)).as("sh"))
-      val truth = docs
-        .select(col("doc_id").as("a"), (col("doc_id") + 100000).as("b"))
-        .join(sets.select(col("doc_id").as("a"), col("sh").as("sh_a")), Seq("a"))
-        .join(sets.select(col("doc_id").as("b"), col("sh").as("sh_b")), Seq("b"))
-        .filter(size(col("sh_a")) > 0 && size(col("sh_b")) > 0)
-        .filter(graft.functions.TextExprs
-          .jaccardSim(col("sh_a"), col("sh_b")) >= 0.6)
-        .select(col("a"), col("b"))
-      // n_true and n_hit come from ONE pass over the truth frame (a left
-      // join marks hits), so the exact-verify joins never re-execute
-      truth
-        .join(cands.withColumn("__hit", lit(1)), Seq("a", "b"), "left")
-        .agg(count(lit(1)).as("n_true"), count(col("__hit")).as("n_hit"))
-        .crossJoin(cands.agg(count(lit(1)).as("n_candidates")))
-        .select(col("n_true"), col("n_candidates"), col("n_hit"),
-          round(col("n_hit").cast("double") / col("n_true"), 6).as("recall"))
-    }),
-
-    // ----- connected-components clustering of the verified MinHash pairs:
-    // transitive near-dup chains collapse to one canonical rep per cluster.
-    // Pairs come from the staged per-sfDir spool (spooledNearDupPairs) —
-    // the production fan-out shape where one pair derivation feeds many
-    // consumers; this gate measures the CC operator itself.
-    "dedup_cluster" -> ((s, dir) =>
-      Cluster.connectedComponents(s.read.parquet(spooledNearDupPairs(s, dir)))
-        .orderBy(col("doc_id"))),
-
-    // ----- sliding-window aggregation (1h windows every 30min): each
-    // event lands in exactly size/slide windows — bounded row expansion
-    "window_sliding" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sumExact(col("value")).as("total"))
-        .select(col("window.start").as("window_start"), col("event_type"),
-          col("n"), col("total"))
-        .orderBy(col("window_start"), col("event_type"))),
-
-    // ----- rolling aggregate with an explicit row frame: per-user moving
-    // average of the last 3 events (decimal-exact carrier)
-    "w_rolling_avg" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id")).rowsBetween(-2, 0)
-      Tables.events(s, dir)
-        .filter(col("ts").isNotNull) // NULLS FIRST/LAST parity guard
-        .select(col("user_id"), col("event_id"), col("ts"),
-          (sum(col("value").cast("decimal(18,6)")).over(w).cast("double") /
-            count(lit(1)).over(w)).as("rolling_avg"))
-        .orderBy(col("user_id"), col("ts"), col("event_id"))
-    }),
-
-    // ----- exact rolling median over a bounded row frame (the robust
-    // central-tendency signal rolling_avg can't give on skewed values):
-    // Spark has no exact windowed median, so the 7-row frame collects to a
-    // sorted array and the median is the explicit middle-element formula —
-    // bounded memory per row (frame size is a constant), and the SAME
-    // formula restated in DuckDB keeps even-count interpolation
-    // bit-identical (both engines compute (a+b)/2 in IEEE doubles)
-    "w_rolling_median" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id")).rowsBetween(-6, 0)
-      val arr = sort_array(collect_list(col("value")).over(w))
-      val n = size(arr)
-      val mid = ((n + lit(1)) / lit(2)).cast("int")
-      val median = when(n % 2 === 1, element_at(arr, mid))
-        .otherwise((element_at(arr, (n / lit(2)).cast("int")) +
-          element_at(arr, (n / lit(2)).cast("int") + 1)) / 2.0)
-      Tables.events(s, dir)
-        .filter(col("ts").isNotNull && col("value").isNotNull)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          median.as("rolling_median"))
-        .orderBy(col("user_id"), col("ts"), col("event_id"))
-    }),
-
-    // ----- full outer join: per-user click vs purchase activity, users
-    // appearing on either side survive with zero-coalesced counts
-    "j_full_outer" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      def byType(t: String, as: String) =
-        ev.filter(col("event_type") === t)
-          .groupBy(col("user_id")).agg(count(lit(1)).as(as))
-      byType("click", "n_clicks")
-        .join(byType("purchase", "n_purchases"), Seq("user_id"), "full_outer")
-        .select(col("user_id"),
-          coalesce(col("n_clicks"), lit(0L)).as("n_clicks"),
-          coalesce(col("n_purchases"), lit(0L)).as("n_purchases"))
-        .orderBy(col("user_id"))
-    }),
-
-    // ----- skew toolkit: salted join on a deliberately hot key.
-    // l_returnflag has 3 values, so a plain shuffle join would put ~1/3 of
-    // lineitem on a single reducer; Skew.saltedJoin fans each hot key over
-    // 8 salt lanes. The salt is a deterministic hash and drops out of the
-    // result, so the oracle is simply the UNSALTED join — result equality
-    // to the plain join IS the correctness property.
-    "j_skewed_salted" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_returnflag"), col("l_orderkey"), col("l_quantity"))
-      val flagStats = li.groupBy(col("l_returnflag"))
-        .agg(avgExact(col("l_quantity")).as("flag_avg_qty"))
-      Skew.saltedJoin(li, flagStats, key = "l_returnflag", n = 8,
-          leftSaltSource = col("l_orderkey"))
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_total"),
-          count(when(col("l_quantity") > col("flag_avg_qty"), lit(1)))
-            .as("n_above"),
-          max(col("flag_avg_qty")).as("flag_avg_qty"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // ----- schema evolution: a store written by two pipeline versions
-    // (batch B added a column) read back as ONE table via mergeSchema —
-    // old-batch rows surface the new column as NULL. The staged layout is
-    // what a long-lived ingest dir actually looks like after a schema
-    // change; staging memoized like the other spools.
-    "s_schema_evolution" -> ((s, dir) => {
-      val store = schemaEvoSpool(s, dir)
-      s.read.option("mergeSchema", "true").parquet(store)
-        .select(col("doc_id"), col("text"), col("lang"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- bucketed co-located join: both sides staged ONCE as tables
-    // bucketed on the join key (the zero-shuffle layout for recurring big
-    // joins at scale; staging memoized like the streaming spools —
-    // ScaleSpec asserts the no-Exchange plan, this gates the results)
-    "j_bucketed" -> ((s, dir) => {
-      val sfx = bucketedTablesSpool(s, dir)
-      // merge hint: without it the small dim side would broadcast (64 MB
-      // threshold) and the co-located sort-merge path — the layout under
-      // test — would never plan; with bucketed scans on both sides the
-      // SMJ needs zero exchanges
-      s.table(s"graft_orders_b_$sfx").hint("merge")
-        .join(s.table(s"graft_customer_b_$sfx").hint("merge"),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_orders"),
-          sumExact(col("o_totalprice")).as("receita"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    // ----- spatial radius join via the fixed-grid bin join
-    // (operators/SpatialJoin): customers and suppliers get deterministic
-    // planar coordinates on a 2^20 grid via Knuth multiplicative spreads
-    // ((key * oddConst) mod 2^20 — exact BIGINT on any engine, and the
-    // resulting low-discrepancy lattice fills the plane uniformly, which
-    // FNV of these short sequential key strings measurably does NOT: its
-    // x/y salt variants come out near-anti-correlated and collapse onto
-    // diagonal lines). The fixture carries no native geometry — same
-    // synthesis precedent as j_fuzzy_block's phones. All pairs within L2
-    // radius 10000 match through the 3x3 cell-neighborhood equi-join —
-    // never all-pairs. The ORACLE is the brute-force cross-join distance
-    // filter: stating the semantics without the grid is exactly what
-    // proves the grid is pure optimization. dist2 exact integer
-    "j_spatial_grid" -> ((s, dir) => {
-      val M = 1L << 20
-      def coord(mult: Long, k: Column) =
-        pmod(k.cast("long") * lit(mult), lit(M))
-      val cust = Tables.customer(s, dir).select(col("c_custkey"),
-        coord(2654435761L, col("c_custkey")).as("cx"),
-        coord(2246822519L, col("c_custkey")).as("cy"))
-      val supp = Tables.supplier(s, dir).select(col("s_suppkey"),
-        coord(3266489917L, col("s_suppkey")).as("sx"),
-        coord(668265263L, col("s_suppkey")).as("sy"))
-      graft.operators.SpatialJoin.radiusJoin(cust, supp,
-          lx = col("cx"), ly = col("cy"), rx = col("sx"), ry = col("sy"),
-          radius = 10000L)
-        .select(col("s_suppkey"), col("c_custkey"), col("dist2"))
-        .orderBy(col("s_suppkey"), col("c_custkey"))
-    }),
-
-    // ----- blocked fuzzy join: entity matching by edit distance WITHOUT
-    // the all-pairs cross product — candidates share a deterministic
-    // blocking key (the 7-char prefix here; production stacks several
-    // blocking keys), exact Levenshtein verifies inside blocks. Record
-    // strings are synthesized phone-style from keys (the fixture carries
-    // no string attribute with blocking-grade cardinality — same
-    // precedent as f12_locale_parse's dirty strings), and the probe side
-    // is a planted last-digit perturbation of every third customer, so
-    // recall is known by construction.
-    "j_fuzzy_block" -> ((s, dir) => {
-      def phone(key: Column) = {
-        // multiplicative spread (Knuth 2654435761) so the 7-char blocking
-        // prefix has per-entity cardinality — sequential keys would pile
-        // everyone into a handful of giant blocks; exact BIGINT arithmetic
-        // reproduces in any engine
-        val k = lpad(((key.cast("bigint") * lit(2654435761L)) % 1000000000L)
-          .cast("string"), 9, "0")
-        concat(substring(k, 1, 3), lit("-"), substring(k, 4, 3),
-          lit("-"), substring(k, 7, 3))
-      }
-      val c = Tables.customer(s, dir)
-        .select(col("c_custkey"), phone(col("c_custkey")).as("c_phone"))
-      val lastDigit = substring(col("c_phone"), -1, 1).cast("int")
-      val perturbed = c.filter(col("c_custkey") % 3 === 0)
-        .select((col("c_custkey") + 1000000).as("alt_key"),
-          concat(
-            expr("substring(c_phone, 1, length(c_phone) - 1)"),
-            ((lastDigit + 1) % 10).cast("string")).as("alt_phone"))
-      val l = c.withColumn("blk", substring(col("c_phone"), 1, 7))
-      val r = perturbed.withColumn("blk", substring(col("alt_phone"), 1, 7))
-      l.join(r, Seq("blk"))
-        .withColumn("dist", levenshtein(col("c_phone"), col("alt_phone")))
-        .filter(col("dist") <= 1)
-        .select(col("c_custkey"), col("alt_key"), col("dist"))
-        .orderBy(col("c_custkey"), col("alt_key"))
-    }),
-
-    // ----- Flesch reading-ease quality signal (Flesch 1948): syllables
-    // approximated as vowel-group runs, sentences as [.!?] runs — all
-    // collapse-and-count string expressions, scan-bound at any scale.
-    // Pre-existing '#' is scrubbed so the count marker is unambiguous
-    // (the Bpe delimiter discipline); floors guard zero sentences.
-    "quality_readability" -> ((s, dir) => {
-      def runs(c: Column, pattern: String) = {
-        val collapsed = regexp_replace(c, pattern, "#")
-        (length(collapsed) -
-          length(call_function("replace", collapsed, lit("#"), lit(""))))
-          .cast("double")
-      }
-      val t = regexp_replace(lower(col("text")), "#", "")
-      val words = size(split(trim(t), "\\s+")).cast("double")
-      val syllables = runs(t, "[aeiouy]+")
-      val sentences = greatest(runs(t, "[.!?]+"), lit(1.0))
-      Tables.documents(s, dir)
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("doc_id"),
-          round(lit(206.835) - lit(1.015) * (words / sentences) -
-            lit(84.6) * (syllables / words), 6).as("flesch"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- composite Gopher-style rule battery (Rae et al. 2021, "Scaling
-    // Language Models: Methods, Analysis & Insights from Training Gopher",
-    // App. A): word-count bounds, mean word length, symbol-to-word ratio,
-    // bullet/ellipsis line fractions, alphabetic-word fraction, stopword
-    // presence — the document-level drop rules production pretraining
-    // pipelines apply BEFORE any model-based scoring. Every signal is a
-    // narrow per-row expression (one scan, no shuffle before the output
-    // sort); `pass` is computed from the unrounded doubles in both engines
-    // so the emitted rounded columns can't flip the flag.
-    "quality_gopher_rules" -> ((s, dir) => {
-      // the three tokenizations materialize ONCE as projection columns:
-      // higher-order-function subtrees are excluded from whole-stage
-      // codegen AND common-subexpression elimination (TextFns.stopwordHits
-      // scaladoc), so referencing an inline `split` from every signal
-      // would re-split the document per signal — measured 3.2 s -> sub-1 s
-      // at sf0.1 for this entry. CollapseProject keeps non-cheap aliases
-      // with multiple references, so the staged shape survives the
-      // optimizer.
-      val staged = Tables.documents(s, dir)
-        .filter(col("text").isNotNull && trim(col("text")) =!= "")
-        .select(col("doc_id"), col("text"),
-          split(trim(lower(col("text"))), "\\s+").as("__words"),
-          split(lower(col("text")), "[^a-z0-9_]+").as("__toks"),
-          split(col("text"), "\n").as("__lines"))
-      val nWords = size(col("__words")).cast("double")
-      val meanLen =
-        length(regexp_replace(trim(col("text")), "\\s+", "")).cast("double") /
-          nWords
-      val nSym =
-        (length(col("text")) -
-          length(call_function("replace", col("text"), lit("#"), lit(""))))
-          .cast("double") +
-        (length(col("text")) -
-          length(call_function("replace", col("text"), lit("..."), lit("")))) / 3
-      val symbolRatio = nSym / nWords
-      val bulletFrac =
-        size(filter(col("__lines"), l => l.rlike("^\\s*[-*•]"))).cast("double") /
-          size(col("__lines"))
-      val ellipsisFrac =
-        size(filter(col("__lines"), l => l.rlike("\\.\\.\\.\\s*$")))
-          .cast("double") / size(col("__lines"))
-      val alphaFrac =
-        size(filter(col("__words"), w => w.rlike("[a-z]"))).cast("double") /
-          nWords
-      val gopherStops =
-        Seq("the", "be", "to", "of", "and", "that", "have", "with")
-      val stopHits = size(filter(array(gopherStops.map(lit): _*),
-        sw => array_contains(col("__toks"), sw)))
-      // Gopher's canonical stopword rule is >= 2 of the 8; the synthetic
-      // corpus vocabulary contains only {the, a} as function words (every
-      // other battery word has zero corpus hits), so the composite here
-      // requires >= 1 to keep the rule discriminative (76% of docs carry
-      // 'the'); consumers wanting the canonical cut apply stop_hits >= 2
-      val minStopHits = 1
-      staged
-        .select(col("doc_id"),
-          size(col("__words")).cast("bigint").as("n_words"),
-          round(meanLen, 6).as("mean_word_len"),
-          round(symbolRatio, 6).as("symbol_ratio"),
-          round(bulletFrac, 6).as("bullet_frac"),
-          round(ellipsisFrac, 6).as("ellipsis_frac"),
-          round(alphaFrac, 6).as("alpha_frac"),
-          stopHits.cast("bigint").as("stop_hits"),
-          (nWords >= 50 && nWords <= 100000 &&
-            meanLen >= 3 && meanLen <= 10 &&
-            symbolRatio <= 0.1 && bulletFrac <= 0.9 &&
-            ellipsisFrac <= 0.3 && alphaFrac >= 0.8 &&
-            stopHits >= minStopHits).as("pass"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- character-entropy quality signal: low-entropy docs are
-    // boilerplate/repetition, high-entropy ones binary debris — the
-    // cheap complement of the LM filter. Per-term decimal carrier makes
-    // the per-doc sum merge-order invariant (LangModel's discipline).
-    // The per-term p·ln(p) goes through [[FixedLog]] — with one quantized
-    // term per (doc, char-class) a libm-ulp flip at a 0.5e-6 boundary is
-    // an expected-count event at corpus scale (the DSIR r10–r11 lesson),
-    // so the ln must be engine-exact, not margin-argued: p = c/n with
-    // integer c, n, hence p·ln(p) = -(c·(fixedLn(n)-fixedLn(c)))/n, all
-    // integer ops until the final 1e-6 quantization.
-    "quality_entropy" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .filter(col("text").isNotNull && length(col("text")) > 0)
-      val chars = docs
-        .select(col("doc_id"), length(col("text")).cast("long").as("n"),
-          explode(split(col("text"), "")).as("ch"))
-        .filter(col("ch") =!= "") // Java split(..., -1) trailing empty
-      val counts = chars.groupBy(col("doc_id"), col("n"), col("ch"))
-        .agg(count(lit(1)).as("c"))
-      // the fixed-point ln chain (~12 decimal mul/div steps) runs on the
-      // SMALL frames — ln(n) per doc, ln(c) per DISTINCT count value —
-      // and broadcast-joins back, not once per (doc, char) row (measured:
-      // the per-row chain cost 4.1 s at sf0.1; this shape restores the
-      // pre-retrofit cost with identical values by construction)
-      val nLn = broadcast(FixedLog.withLn(
-        docs.select(col("doc_id"), length(col("text")).cast("long").as("__nv")),
-        "__nv", "__lnn").select(col("doc_id"), col("__lnn")))
-      val cLn = broadcast(FixedLog.withLn(
-        counts.select(col("c")).distinct(), "c", "__lnc"))
-      val fixed = counts.join(nLn, Seq("doc_id")).join(cLn, Seq("c"))
-        .withColumn("__pos12", col("__lnn") - col("__lnc")) // -ln(p)·1e12 ≥ 0
-        .withColumn("__t12", expr(
-          "CAST((CAST(c AS DECIMAL(38,0)) * __pos12) div n AS BIGINT)"))
-      FixedLog.withS12ToDec6(fixed, "__t12", "__tq")
-        .withColumn("__t", (-col("__tq")).cast("decimal(18,6)"))
-        .groupBy(col("doc_id"))
-        .agg(max(col("n")).cast("bigint").as("n_chars"),
-          round(-sum(col("__t")).cast("double") / lit(0.6931471805599453), 6)
-            .as("entropy"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- skew toolkit: salted two-phase aggregation on the same hot
-    // key. Partial sums go through the DECIMAL(18,6) carrier, so the
-    // two-phase result is bit-identical to a one-phase aggregate — which
-    // is exactly what the oracle computes.
-    "a_skewed_salted" -> ((s, dir) =>
-      Skew.saltedAgg(
-          Tables.lineitem(s, dir)
-            .select(col("l_returnflag"), col("l_linestatus"),
-              col("l_orderkey"), col("l_quantity")),
-          key = Seq("l_returnflag", "l_linestatus"), n = 8,
-          saltSource = col("l_orderkey"),
-          aggs = Seq(
-            ("sum_qty", dec(col("l_quantity")), (c: Column) => sum(c),
-              (c: Column) => sum(c)),
-            ("n", lit(1), (c: Column) => count(c), (c: Column) => sum(c))))
-        .select(col("l_returnflag"), col("l_linestatus"),
-          col("sum_qty").cast("double").as("sum_qty"),
-          col("n").cast("bigint").as("n"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))),
-
-    // ----- TPC-H q18 shape: HAVING-gated semi join (large-quantity
-    // orders), broadcast of the small filtered aggregate side
-    "q18_large_orders" -> ((s, dir) => {
-      val big = Tables.lineitem(s, dir)
-        .groupBy(col("l_orderkey"))
-        .agg(sumExact(col("l_quantity")).as("sum_qty"))
-        .filter(col("sum_qty") > 250d)
-      Tables.orders(s, dir)
-        .join(big, col("o_orderkey") === col("l_orderkey"))
-        .join(broadcast(Tables.customer(s, dir)
-          .select(col("c_custkey"), col("c_name"))),
-          col("o_custkey") === col("c_custkey"))
-        .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-          col("o_totalprice"), col("sum_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(20)
-    }),
-
-    // ----- TPC-H q17 shape: correlated scalar subquery, decorrelated to
-    // a per-partkey threshold aggregate over the brand-pruned lineitem
-    "q17_small_qty" -> ((s, dir) => {
-      val brandParts = Tables.part(s, dir)
-        .filter(col("p_brand") === "Brand#4").select(col("p_partkey"))
-      val brandLi = Tables.lineitem(s, dir)
-        .join(broadcast(brandParts), col("l_partkey") === col("p_partkey"))
-      val thr = brandLi.groupBy(col("l_partkey"))
-        .agg((lit(0.2) * avgExact(col("l_quantity"))).as("qty_thr"))
-      brandLi.join(thr, Seq("l_partkey"))
-        .filter(col("l_quantity") < col("qty_thr"))
-        .agg((sumExact(col("l_extendedprice")) / 7.0d).as("avg_yearly"))
-    }),
-
-    // ----- TPC-H q4 shape: EXISTS subquery decorrelated to a left-semi
-    // join with a non-equi conjunct (any line shipped after order date)
-    "q4_order_priority" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("1997-07-01") &&
-          col("o_orderdate") < lit("1997-10-01"))
-      val l = Tables.lineitem(s, dir)
-      o.join(l, o("o_orderkey") === l("l_orderkey") &&
-          l("l_shipdate") > o("o_orderdate"), "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // ----- TPC-H q13 shape: left outer join preserved through a two-level
-    // aggregation (order-count distribution incl. zero-order customers)
-    "q13_cust_dist" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-        .filter(col("o_orderpriority") =!= "1-URGENT")
-        .select(col("o_custkey"), col("o_orderkey"))
-      Tables.customer(s, dir).select(col("c_custkey"))
-        .join(o, col("c_custkey") === col("o_custkey"), "left_outer")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-
-    // ----- TPC-H q16 shape: NOT IN anti-join (suppkey is non-null, so
-    // NOT IN == NOT EXISTS == left_anti) feeding a distinct-count rollup
-    "q16_supplier_parts" -> ((s, dir) => {
-      val excluded = Tables.supplier(s, dir)
-        .filter(col("s_acctbal") < 500d).select(col("s_suppkey"))
-      val li = Tables.lineitem(s, dir)
-        .join(broadcast(excluded), col("l_suppkey") === col("s_suppkey"),
-          "left_anti")
-      val p = Tables.part(s, dir).filter(col("p_brand") =!= "Brand#1")
-      li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
-          col("p_size"))
-    }),
-
-    // ----- TPC-H q19 shape: disjunctive mixed-table predicate ANDed onto
-    // the join — the part-side conjuncts push to the broadcast build side
-    "q19_disjunctive_rev" -> ((s, dir) => {
-      val l = Tables.lineitem(s, dir)
-      val p = Tables.part(s, dir)
-      l.join(broadcast(p), col("l_partkey") === col("p_partkey") && (
-          (col("p_brand") === "Brand#1" && col("p_size").between(1, 5) &&
-            col("l_quantity").between(1, 11)) ||
-          (col("p_brand") === "Brand#2" && col("p_size").between(1, 10) &&
-            col("l_quantity").between(10, 20)) ||
-          (col("p_brand") === "Brand#3" && col("p_size").between(1, 15) &&
-            col("l_quantity").between(20, 30))))
-        .agg(sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .as("revenue"))
-    }),
-
-    // ----- TPC-H q22 shape: scalar subquery (global exact average,
-    // broadcast single row) + anti join against orders
-    "q22_idle_custs" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val avgBal = c.filter(col("c_acctbal") > 0d)
-        .agg(avgExact(col("c_acctbal")).as("avg_bal"))
-      c.join(broadcast(avgBal), col("c_acctbal") > col("avg_bal"))
-        .join(Tables.orders(s, dir).select(col("o_custkey")),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("numcust"),
-          sumExact(col("c_acctbal")).as("totacctbal"))
-        .orderBy(col("c_nationkey"))
-    }),
-
-    // ----- TPC-H q2 shape: groupwise-min (correlated MIN subquery
-    // decorrelated to a per-key aggregate + equality join back)
-    "q2_min_cost_supp" -> ((s, dir) => {
-      val p = Tables.part(s, dir).filter(col("p_size") === 10)
-        .select(col("p_partkey"), col("p_name"))
-      val li = Tables.lineitem(s, dir)
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .select(col("l_partkey"), col("l_suppkey"), col("l_extendedprice"),
-          col("p_partkey"), col("p_name"))
-      // groupwise-min as a window over l_partkey: one scan + one shuffle,
-      // where the aggregate-then-join-back decorrelation executed the
-      // scan+broadcast-join subtree twice (once per consumer)
-      li.withColumn("min_price",
-          min(col("l_extendedprice")).over(Window.partitionBy(col("l_partkey"))))
-        .filter(col("l_extendedprice") === col("min_price"))
-        .join(broadcast(Tables.supplier(s, dir)
-          .select(col("s_suppkey"), col("s_name"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("p_partkey"), col("p_name"), col("s_suppkey"),
-          col("s_name"), col("min_price"))
-        .distinct()
-        .orderBy(col("p_partkey"), col("s_suppkey"))
-    }),
-
-    // ----- one-scan exact table profile (per-column nulls/distincts/
-    // min/max) over lineitem's int and string columns
-    "profile_table" -> ((s, dir) =>
-      graft.operators.Profile.profile(Tables.lineitem(s, dir),
-        Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-          "l_returnflag", "l_linestatus"))
-        .orderBy(col("column"))),
-
-    // ----- composed LLM curation pipeline: scrub -> exact dedup ->
-    // decontaminate -> language filter -> quality filter -> packing
-    "curate_pipeline" -> ((s, dir) =>
-      graft.plans.Curation.curate(
-        Tables.documents(s, dir).select(col("doc_id"), col("source"), col("text")))
-        .orderBy(col("source"), col("bin"))),
-
-    // ----- the crawl-to-shards MEGA-GATE (r15 judge stretch 7): the whole
-    // training-data chain — boilerplate strip, exact+near dedup, lang/
-    // quality filter, benchmark decontamination, curriculum staging,
-    // context-window packing, shard manifest — over a crawl-shaped corpus
-    // with planted victims for every dedup tier (full copies +200000,
-    // word-perturbed copies +300000, per-source boilerplate lines on every
-    // crawl doc; the benchmark split stays pristine). Every stage is an
-    // individually gated operator; the oracle restates the entire chain.
-    "curate_to_shards" -> ((s, dir) => {
-      val (crawl, bench) = curateCrawlFixture(s, dir)
-      graft.plans.Curation.curateToShards(crawl, bench)
-        .orderBy(col("stage"), col("bin"))
-    }),
-    // stage diagnostic (the bisectable-at-birth rule): the surviving docs
-    // with their curriculum stage, BEFORE packing — a red composite with a
-    // green diag isolates the divergence to pack/manifest; a red diag
-    // points into the filter chain
-    "curate_to_shards_diag_staged" -> ((s, dir) => {
-      // reads the staged stage-7 artifact (spool-memoized; the chain
-      // derivation is measured by curate_to_shards, which runs it inline)
-      s.read.parquet(curateStagedSpool(s, dir))
-        .select(col("doc_id"), col("score_milli"), col("stage"),
-          col("shuffle_bucket"))
-        .orderBy(col("doc_id"))
-    }),
-    // the composite's SECOND output (r16 verdict #1): the near-dedup
-    // mega-bucket report, aggregated to one always-present row. On the
-    // organic crawl fixture it must read (0, 0, 0) at the default cap —
-    // the guard must never eat real pairs on clean data — and the oracle
-    // restates the same width rule, so a bucket that ever grows past the
-    // cap shows up as non-zero on BOTH engines, never silently
-    "curate_to_shards_dropped" -> ((s, dir) => {
-      // reads the staged stage-4 report artifact (spool-memoized; the
-      // chain derivation is measured by curate_to_shards, which runs it
-      // inline — re-deriving stages 1–4 here charged this read-only gate
-      // ~1.4 s of scrub/strip/sketch it only aggregates three longs from)
-      s.read.parquet(s"${curateDedupSpool(s, dir)}/report")
-        .agg(count(lit(1)).as("n_buckets"),
-          coalesce(sum(col("width")), lit(0L)).as("n_docs"),
-          coalesce(sum(col("pairs_dropped")), lit(0L)).as("pairs_dropped"))
-    }),
-
-    // ----- survivor-rule equivalence diagnostic (r16 next-round #6): the
-    // mega-gate's greedy min-id near-dup rule INTENTIONALLY differs from
-    // component-wise survivor selection (documented on curateToShards);
-    // this read-only gate measures that semantic delta on every driver
-    // run — greedy keeps any doc that only ever pairs as the SMALLER id,
-    // component-wise keeps only each cluster's min member, so
-    // greedy >= component and n_common == component_survivors
-    "curate_survivor_rule_diag" -> ((s, dir) => {
-      // reads the staged stage-4 artifacts (spool-memoized, the
-      // diag_staged discipline): the chain derivation is measured by
-      // curate_to_shards; this read-only gate compares survivor RULES
-      // over the exact pair frame the composite consumes. Parquet scans
-      // replace the former localCheckpoints — each count subtree re-reads
-      // a narrow id file instead of re-deriving stages 1–4 (was ~4.9 s,
-      // all but ~1.2 s of it the re-derivation).
-      val base = curateDedupSpool(s, dir)
-      val docs = s.read.parquet(s"$base/docs")
-      val pairsC = s.read.parquet(s"$base/pairs")
-      val greedy = docs.join(pairsC.select(col("b").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      val cc = Cluster.connectedComponents(pairsC)
-      val comp = docs.join(
-        cc.filter(col("doc_id") =!= col("cluster_rep")).select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
-      docs.agg(count(lit(1)).as("n_exact_deduped"))
-        .crossJoin(greedy.agg(count(lit(1)).as("greedy_survivors")))
-        .crossJoin(comp.agg(count(lit(1)).as("component_survivors")))
-        .crossJoin(greedy.join(comp, Seq("doc_id"))
-          .agg(count(lit(1)).as("n_common")))
-    }),
-
-    // ----- INCREMENTAL crawl-to-shards (r16 verdict next-round #4): a new
-    // crawl batch curated against an EXISTING curated corpus — batch docs
-    // dropped on exact corpus hash or corpus near-match >= 0.6 (asymmetric
-    // band join, no self-join), survivors through the stage 5–9 chain
-    "curate_incremental" -> ((s, dir) => {
-      val (batch, _, bench) = incrementalCrawlFixture(s, dir)
-      // the per-batch PRODUCTION form: the corpus side's novelty stores
-      // (hashes / band index / shingle sets) are the staged offline
-      // artifacts (curatedCorpusSpool) — the batch pays its own scrub +
-      // sketch + keyed probes, never a re-sketch of the whole corpus
-      // (value-identical to the inline form; the oracle still restates
-      // the chain from the raw fixture)
-      val a = curatedCorpusSpool(s, dir)
-      graft.plans.Curation.curateIncrementFromArtifacts(batch,
-          s.read.parquet(s"$a/hashes"), s.read.parquet(s"$a/bands"),
-          s.read.parquet(s"$a/shingles"), bench)._1
-        .orderBy(col("stage"), col("bin"))
-    }),
-    // novelty diagnostic (bisectable at birth): one verdict row per batch
-    // doc — dup_exact (corpus min-id match), dup_near (best corpus match
-    // + jaccard), or novel
-    "curate_incremental_diag_novelty" -> ((s, dir) => {
-      val (batch, _, _) = incrementalCrawlFixture(s, dir)
-      // verdicts only — never build the stage 5-9 tail this gate ignores;
-      // same staged corpus stores as curate_incremental
-      val a = curatedCorpusSpool(s, dir)
-      graft.plans.Curation.incrementNoveltyFromArtifacts(batch,
-          s.read.parquet(s"$a/hashes"), s.read.parquet(s"$a/bands"),
-          s.read.parquet(s"$a/shingles"))._2
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- benchmark decontamination: corpus docs sharing word 3-grams
-    // with the doc_id % 97 == 0 benchmark split (broadcast bench grams)
-    "decontaminate" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val bench = docs.filter(col("doc_id") % 97 === 0)
-      val corpus = docs.filter(col("doc_id") % 97 =!= 0)
-      graft.operators.Decontaminate.overlap(corpus, bench, n = 3)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- combined exact + fuzzy decontamination: the perturbed %97
-    // subset stands in for a PARAPHRASED eval benchmark — exact 3-gram
-    // overlap catches verbatim reuse, the MinHash probe catches the
-    // paraphrases; one verdict row per contaminated doc, clean docs absent
-    "decontaminate_fuzzy" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val bench = docs.filter(col("doc_id") % 97 === 0)
-        .select((col("doc_id") + 100000).as("doc_id"),
-          regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      graft.operators.Decontaminate.fuzzyVerdict(docs, bench, threshold = 0.6)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- incremental dedup: the perturbed batch matched against the
-    // existing corpus asymmetrically (no self-join; best match per doc)
-    "dedup_incremental" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val batch = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      Dedup.incrementalNearDups(batch, docs, threshold = 0.6)
-        .orderBy(col("batch_id"))
-    }),
-
-    // ----- the indexed form of incremental dedup: the batch probes the
-    // corpus's STORED band + hashed-shingle artifacts (materialized once,
-    // per the band-index discipline) — per-batch cost is the batch's own
-    // sketch plus two co-partitioned joins against the stores; value-
-    // identical to the inline form, proven by reusing its oracle verbatim
-    "dedup_incremental_indexed" -> ((s, dir) => {
-      val art = corpusDedupArtifactsSpool(s, dir)
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val batch = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      Dedup.incrementalNearDupsFromArtifacts(batch,
-          s.read.parquet(s"$art/bands"), s.read.parquet(s"$art/shingles"),
-          threshold = 0.6)
-        .orderBy(col("batch_id"))
-    }),
-
-    // ----- the composite a real pipeline runs (r6 verdict suggestion):
-    // cluster labels feed BOTH the per-doc rep column and the keep/drop
-    // verdict in one pass — this entry gates the shared-frame finish over
-    // the staged pair spool (label once, annotate the whole corpus).
-    "dedup_cluster_survivors" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      val corpus = docs.unionByName(perturbed)
-      // cluster labels from the staged CC artifact (clusterRepsSpool —
-      // the operator itself stays measured by dedup_cluster); the spool
-      // read replaces both the inline CC rounds and the former
-      // localCheckpoint (a parquet scan re-reads cheaply per consumer)
-      val cc = s.read.parquet(clusterRepsSpool(s, dir))
-      corpus.select(col("doc_id"))
-        .join(cc.withColumnRenamed("doc_id", "__cid"),
-          col("doc_id") === col("__cid"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_rep"), col("doc_id")).as("cluster_rep"),
-          (col("__cid").isNull || col("__cid") === col("cluster_rep"))
-            .as("survives"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- the final dedup keep/drop decision: corpus minus non-rep
-    // cluster members (singletons survive by absence from the pair graph);
-    // pairs from the staged spool, like the rest of the cluster family
-    "dedup_survivors" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      val corpus = docs.unionByName(perturbed)
-      // staged CC labels (clusterRepsSpool) — dedup_cluster measures CC
-      val cc = s.read.parquet(clusterRepsSpool(s, dir))
-      val losers = cc.filter(col("doc_id") =!= col("cluster_rep")).select("doc_id")
-      corpus.join(losers, Seq("doc_id"), "left_anti")
-        .select(col("doc_id")).orderBy(col("doc_id"))
-    }),
-
-    // ----- exact duplicate-SPAN detection (Lee et al. 2022 contract,
-    // windowed-fingerprint restatement): maximal cross-doc duplicated
-    // token spans over the planted corpus — originals and their perturbed
-    // copies share long runs, split where `data`->`info` edits break them
-    "dedup_substring_spans" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      graft.operators.SubstringDedup.duplicateSpans(docs.unionByName(perturbed))
-        .orderBy(col("doc_id"), col("span_start"))
-    }),
-
-    // ----- SimHash near-dup pairs (same planted corpus)
-    "dedup_simhash" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      Dedup.simhashNearDups(docs.unionByName(perturbed), maxHamming = 3)
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // ----- capped near-dup tier (r16 verdict #1): the standard planted
-    // corpus PLUS the width-40 rotation mega-bucket family; the cap (16)
-    // excludes the family's over-wide buckets from pair generation while
-    // the organic perturbed-copy pairs still verify, and the report gates
-    // pin the guard's accounting — nothing is ever dropped silently
-    "dedup_minhash_capped" -> ((s, dir) => {
-      val (pairs, _) = Dedup.minhashNearDupsCapped(cappedDedupCorpus(s, dir),
-        threshold = 0.6, maxBucketWidth = 16)
-      pairs.orderBy(col("a"), col("b"))
-    }),
-    // per-band aggregate (the engine's bucket id is a Murmur3 hash the
-    // oracle deliberately never restates; the per-band totals are
-    // hash-free): every band must report exactly the one width-40 family
-    // bucket and its 780 forgone pairs
-    "dedup_minhash_capped_report" -> ((s, dir) => {
-      val (_, dropped) = Dedup.minhashNearDupsCapped(cappedDedupCorpus(s, dir),
-        threshold = 0.6, maxBucketWidth = 16)
-      dropped.groupBy(col("band"))
-        .agg(count(lit(1)).as("n_buckets"), sum(col("width")).as("n_docs"),
-          sum(col("pairs_dropped")).as("pairs_dropped"))
-        .orderBy(col("band"))
-    }),
-    "dedup_simhash_capped" -> ((s, dir) => {
-      val (pairs, _) = Dedup.simhashNearDupsCapped(cappedDedupCorpus(s, dir),
-        maxHamming = 3, maxBucketWidth = 16)
-      pairs.orderBy(col("a"), col("b"))
-    }),
-    // raw report rows — the SimHash bucket id IS the band's 16 signature
-    // bits (engine-equal), so band/bucket/width/pairs_dropped restate 1:1
-    "dedup_simhash_capped_report" -> ((s, dir) => {
-      val (_, dropped) = Dedup.simhashNearDupsCapped(cappedDedupCorpus(s, dir),
-        maxHamming = 3, maxBucketWidth = 16)
-      dropped.orderBy(col("band"), col("bucket"))
-    }),
-
-    // ----- incrementally-MAINTAINED band index: candidates from the
-    // stored corpus-bands + APPENDED batch-bands (no rebuild), verified
-    // with exact Jaccard — must equal dedup_minhash exactly (the append
-    // path is value-identical to a fresh rebuild, proven by oracle, not
-    // asserted). This is the artifact-maintenance discipline of a
-    // continuously-fed dedup tier: per-batch cost is the batch's sketch
-    // plus one co-partitioned join against the store.
-    "s_minhash_index_append" -> ((s, dir) => {
-      val bands = s.read.parquet(minhashIndexAppendSpool(s, dir))
-      val l = bands.select(col("doc_id").as("a"), col("band"), col("bucket"))
-      val r = bands.select(col("doc_id").as("b"), col("band"), col("bucket"))
-      val cands = l.join(r, Seq("band", "bucket")).filter(col("a") < col("b"))
-        .select("a", "b").distinct()
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val corpus = docs.unionByName(
-        docs.select((col("doc_id") + 100000).as("doc_id"),
-          regexp_replace(col("text"), "\\bdata\\b", "info").as("text")))
-      val hashed = corpus.select(col("doc_id"),
-        transform(TextFns.wordShingles(col("text"), 3),
-          x => xxhash64(x)).as("sh"))
-      Dedup.ngramJaccardVerify(cands, hashed, "doc_id", threshold = 0.6)
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // ----- character-5-gram Jaccard dedup over LSH candidates
-    "dedup_ngram_jaccard" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      val corpus = docs.unionByName(perturbed)
-      val cands = Dedup.minhashCandidates(corpus, "doc_id", "text")
-      val charGrams = corpus.select(col("doc_id"),
-        transform(graft.functions.TextExprs.charShingles(col("text"), 5),
-          s => xxhash64(s)).as("sh"))
-      Dedup.ngramJaccardVerify(cands, charGrams, "doc_id", threshold = 0.5)
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // ----- capped embedding near-dup tier: like SimHash, the hyperplane
-    // band key space is FIXED (256 values per band at the defaults), so
-    // bucket width grows linearly with corpus size — the guard is
-    // load-bearing at scale; the planted family is 40 copies of one
-    // CONSTANT vector (identical signatures -> one width-40 bucket per
-    // band), dropped by the cap while perturbed-copy pairs still verify
-    "dedup_embedding_capped" -> ((s, dir) => {
-      val (pairs, _) = Dedup.embeddingNearDupsCapped(
-        cappedEmbeddingCorpus(s, dir), threshold = 0.98, maxBucketWidth = 16)
-      pairs.orderBy(col("a"), col("b"))
-    }),
-    "dedup_embedding_capped_report" -> ((s, dir) => {
-      val (_, dropped) = Dedup.embeddingNearDupsCapped(
-        cappedEmbeddingCorpus(s, dir), threshold = 0.98, maxBucketWidth = 16)
-      dropped.orderBy(col("band"), col("key"))
-    }),
-
-    // ----- embedding near-dup pairs (planted perturbed vectors)
-    "dedup_embedding" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val perturbed = embs.select((col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"),
-          (x, i) => when(i === 0, x + lit(0.05f)).otherwise(x)).as("embedding"))
-      Dedup.embeddingNearDups(embs.unionByName(perturbed), threshold = 0.98)
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // ----- the embedding tier's per-batch probe: NEW vectors (the
-    // perturbed copies) vs the EXISTING corpus through an asymmetric
-    // hyperplane-band join — completes the incremental trio (MinHash
-    // text probe, IVF append, embedding probe)
-    "dedup_embedding_incremental" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val batch = embs.select((col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"),
-          (x, i) => when(i === 0, x + lit(0.05f)).otherwise(x)).as("embedding"))
-      Dedup.incrementalEmbeddingNearDups(batch, embs, threshold = 0.98)
-        .orderBy(col("batch_id"))
-    }),
-
-    // ----- PCA top component by fixed power iteration: the covariance
-    // action computed per round as one narrow dot + one per-dim decimal
-    // aggregation — C never materializes, driver state is the 1-row
-    // normalized vector (VectorAgg.pcaPowerTop scaladoc); the oracle
-    // unrolls the identical rounds
-    "embed_pca_power" -> ((s, dir) =>
-      graft.operators.VectorAgg.pcaPowerTop(Tables.embeddings(s, dir))
-        .orderBy(col("dim"))),
-
-    // ----- apply the learned component: per-vector projection score
-    // (whitening/decorrelation apply step). The FIT is memoized per sfDir
-    // like the IVF-PQ index (training is deterministic, the component is
-    // 64 doubles — an offline model artifact); the APPLY is a narrow
-    // literal-vector dot, which is the production shape: fit once, project
-    // every shard. Collected doubles round-trip exactly through lit(), so
-    // the memoized path is value-identical to inline training.
-    "embed_pca_project" -> ((s, dir) => {
-      val loadings = pcaFit(s, dir)
-      val vlit = array(loadings.toSeq.map(lit): _*)
-      Tables.embeddings(s, dir).filter(col("embedding").isNotNull)
-        .select(col("vec_id"),
-          graft.functions.VectorFns
-            .dot(col("embedding").cast("array<double>"), vlit).as("pc1"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // ----- per-label embedding centroids (k-means update step / mean
-    // pooling): decimal-carrier per-dim sums. Verified in exploded
-    // (label, dim, m) form: the driver's verifier cannot sort/hash
-    // array-valued cells, so array outputs are posexploded to scalar rows
-    // for the gate (the operator itself still returns arrays).
-    "embed_centroids" -> ((s, dir) =>
-      graft.operators.VectorAgg.centroids(Tables.embeddings(s, dir))
-        .select(col("label"), col("n_vecs"),
-          posexplode(col("centroid")).as(Seq("dim", "m")))
-        .orderBy(col("label"), col("dim"))),
-
-    // ----- Johnson-Lindenstrauss random projection 64d -> 8d (narrow,
-    // zero-shuffle; seeded plane matrix shared with the LSH paths);
-    // exploded to (vec_id, dim, d) scalar rows for the gate
-    "embed_project" -> ((s, dir) =>
-      graft.operators.VectorAgg.project(Tables.embeddings(s, dir),
-        graft.functions.VectorFns.randomPlanes(8, 64))
-        .select(col("vec_id"), posexplode(col("projected")).as(Seq("dim", "d")))
-        .orderBy(col("vec_id"), col("dim"))),
-
-    // ----- one distributed k-means Lloyd step from the deterministic
-    // IVF codebook sample (L2 argmin assignment + decimal-carrier means);
-    // exploded to (centroid_id, dim, m) scalar rows for the gate
-    "kmeans_step" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val cents = Similarity.sampledCodebook(embs, codebookSize = 8)
-      graft.operators.VectorAgg.kmeansStep(embs, cents)
-        .select(col("centroid_id"), col("n_assigned"),
-          posexplode(col("centroid")).as(Seq("dim", "m")))
-        .orderBy(col("centroid_id"), col("dim"))
-    }),
-
-    // ----- Lloyd's k-means to convergence (3 rounds here; each round is
-    // assignment + decimal-carrier means, checkpointed — the iterative
-    // twin of kmeans_step, same loop discipline as connectedComponents);
-    // exploded to (centroid_id, dim, m) scalar rows for the gate
-    "kmeans_converged" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val cents = Similarity.sampledCodebook(embs, codebookSize = 8)
-      // materializeLast=false: this gate consumes the result exactly once
-      // (the bench/oracle action), so the final Lloyd round rides that
-      // action instead of its own checkpoint job — same rounds, same
-      // values, one fewer driver round trip per execution
-      graft.operators.VectorAgg.kmeansLloyd(embs, cents, maxIters = 3,
-          materializeLast = false)
-        .select(col("centroid_id"), col("n_assigned"),
-          posexplode(col("centroid")).as(Seq("dim", "m")))
-        .orderBy(col("centroid_id"), col("dim"))
-    }),
-
-    // ----- semantic dedup (SemDeDup, Abbas et al. 2023, arXiv:2303.09540,
-    // simplified to one representative per semantic cluster): converged
-    // k-means cells, then each cluster keeps only the vector CLOSEST to
-    // its centroid. Broadcast centroids, map-side argmin at both levels —
-    // the corpus is scanned once and never self-joined
-    "dedup_semantic" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir).filter(col("embedding").isNotNull)
-      // APPLY gate: reads the staged Lloyd codebook (kmeansFitSpool — the
-      // pcaFit train-once discipline; training itself is measured by
-      // kmeans_converged) and measures assignment + representative pick
-      val cents = s.read.parquet(kmeansFitSpool(s, dir))
-        .select(col("centroid_id"), col("centroid").as("c_vec"))
-      embs.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("centroid_id"),
-          graft.functions.VectorFns.l2DistSq(col("embedding"), col("c_vec"))
-            .as("dist"))
-        .groupBy(col("vec_id"))
-        .agg(min_by(struct(col("centroid_id"), col("dist")),
-          struct(col("dist"), col("centroid_id"))).as("__b"))
-        .select(col("vec_id"), col("__b.centroid_id").as("centroid_id"),
-          col("__b.dist").as("dist"))
-        .groupBy(col("centroid_id"))
-        .agg(min_by(struct(col("vec_id"), col("dist")),
-          struct(col("dist"), col("vec_id"))).as("__r"))
-        .select(col("centroid_id"), col("__r.vec_id").as("rep_vec_id"),
-          round(col("__r.dist"), 6).as("dist"))
-        .orderBy(col("centroid_id"))
-    }),
-
-    // ----- MIPS -> L2 reduction (Bachrach et al., RecSys 2014): augment
-    // data vectors with sqrt(M^2-|x|^2) and queries with 0, and nearest
-    // neighbor under L2 becomes max inner product — the transform that
-    // lets one metric index serve recommendation-style dot-product
-    // queries. The engine RANKS by the augmented distance (written as
-    // l2DistSq(q,x) + (M^2-|x|^2), exactly the augmented L2^2); the
-    // oracle ranks by the inner product directly — the gate holds only
-    // if the reduction preserves the ordering
-    "embed_mips_transform" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir).filter(col("embedding").isNotNull)
-      val withN2 = embs.select(col("vec_id"), col("embedding"),
-        graft.functions.VectorFns.dot(col("embedding"), col("embedding"))
-          .as("n2"))
-      val q = embs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      val scored = withN2
-        .crossJoin(broadcast(withN2.agg(max(col("n2")).as("m2"))))
-        .crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (graft.functions.VectorFns.l2DistSq(col("q_emb"), col("embedding"))
-            + (col("m2") - col("n2"))).as("aug_d2"),
-          graft.functions.VectorFns.dot(col("q_emb"), col("embedding"))
-            .as("dot"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("aug_d2"), col("vec_id"))
-      scored.withColumn("rank", row_number().over(w).cast("int"))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("vec_id"), col("dot"), col("rank"))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ----- Davies-Bouldin clustering quality (Davies & Bouldin 1979):
-    // per cluster, scatter s_i = mean distance to the centroid and the
-    // worst separation ratio max_{j!=i}(s_i+s_j)/d_ij — the eval metric
-    // the kmeans family lacked (ANN and LSH have their recall reports).
-    // Everything after the one assignment pass is k-bounded; per-row
-    // sqrt distances quantize through the decimal carrier so the scatter
-    // sum is merge-order invariant
-    "kmeans_db_index" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir).filter(col("embedding").isNotNull)
-      // APPLY gate: staged Lloyd codebook (kmeansFitSpool), same
-      // train-once discipline as dedup_semantic — the gate measures the
-      // assignment pass and the k-bounded DB-index tail
-      val cents = s.read.parquet(kmeansFitSpool(s, dir))
-        .select(col("centroid_id"), col("centroid").as("c_vec"))
-      val asg = embs.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("centroid_id"),
-          graft.functions.VectorFns.l2DistSq(col("embedding"), col("c_vec"))
-            .as("d2"))
-        .groupBy(col("vec_id"))
-        .agg(min_by(struct(col("centroid_id"), col("d2")),
-          struct(col("d2"), col("centroid_id"))).as("__b"))
-        .select(col("__b.centroid_id").as("centroid_id"),
-          col("__b.d2").as("d2"))
-      val sc = asg
-        .select(col("centroid_id"),
-          sqrt(col("d2")).cast("decimal(18,6)").as("__d"))
-        .groupBy(col("centroid_id"))
-        .agg(count(lit(1)).as("n_assigned"),
-          (sum(col("__d")).cast("double") / count(lit(1))).as("si"))
-      val ci = cents.select(col("centroid_id").as("i"), col("c_vec").as("vi"))
-      val cj = cents.select(col("centroid_id").as("j"), col("c_vec").as("vj"))
-      val dsep = ci.crossJoin(cj).filter(col("i") =!= col("j"))
-        .select(col("i"), col("j"),
-          sqrt(graft.functions.VectorFns.l2DistSq(col("vi"), col("vj")))
-            .as("dij"))
-      dsep
-        .join(sc.select(col("centroid_id").as("i"), col("n_assigned"),
-          col("si")), Seq("i"))
-        .join(sc.select(col("centroid_id").as("j"), col("si").as("sj")),
-          Seq("j"))
-        .groupBy(col("i").as("centroid_id"), col("n_assigned"), col("si"))
-        .agg(max((col("si") + col("sj")) / col("dij")).as("db_component"))
-        .select(col("centroid_id"), col("n_assigned"),
-          col("si").as("scatter"), col("db_component"))
-        .orderBy(col("centroid_id"))
-    }),
-
-    // ----- int8 scalar quantization of embeddings (narrow, zero-shuffle;
-    // floor(x+0.5) semantics are engine-agnostic where round() is not);
-    // exploded to (vec_id, dim, q) scalar rows for the gate —
-    // posexplode_outer keeps scale-0 vectors (NULL qvec) as one NULL row
-    "embed_quantize" -> ((s, dir) =>
-      graft.operators.VectorAgg.quantizeInt8(Tables.embeddings(s, dir))
-        .select(col("vec_id"), col("scale"), col("recon_err"),
-          posexplode_outer(col("qvec")).as(Seq("dim", "q")))
-        .orderBy(col("vec_id"), col("dim"))),
-
-    // ----- ANN: exact brute-force cosine top-k (baseline)
-    "ann_brute_topk" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val queries = embs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      Similarity.bruteForceTopK(embs, queries, k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ----- contrastive hard-negative mining (ANCE-style): per query the
-    // top-1 same-label positive and top-1 different-label negative, with
-    // the informativeness margin — the training-pair miner for embedding
-    // models, a dual-rank tail over the ANN candidate frame
-    "embed_hard_negatives" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val queries = embs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").as("q_embedding"), col("label").as("q_label"))
-      Similarity.hardNegativeTriplets(embs, queries)
-        .orderBy(col("query_id"))
-    }),
-
-    // ----- ANN: LSH-bucketed approximate top-k (the scale path)
-    "ann_lsh_topk" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val queries = embs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      Similarity.lshTopK(embs, queries, k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ----- ANN: radius (range) search — "everything within cosine tau",
-    // the dedup/retrieval primitive top-k can't express (result size is
-    // data-driven, not k-bounded). Same banded LSH prefilter as
-    // ann_lsh_topk; the exact cosine filter replaces the rank cut, so the
-    // plan never materializes more than the candidate set (Similarity
-    // .rangeSearch scaladoc)
-    "ann_range_search" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val queries = embs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      Similarity.rangeSearch(embs, queries, tau = 0.25)
-        .orderBy(col("query_id"), col("vec_id"))
-    }),
-
-    // ----- ANN: radius search over the IVF structure — the indexed twin
-    // of ann_range_search, completing the serving matrix (top-k AND
-    // radius on both the LSH and IVF paths); probed cells bound the work
-    // exactly as in ann_ivf_topk (Similarity.ivfRangeSearch scaladoc)
-    "ann_ivf_range" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val queries = embs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      Similarity.ivfRangeSearch(embs, queries, tau = 0.2)
-        .orderBy(col("query_id"), col("vec_id"))
-    }),
-
-    // ----- ANN: IVF with a MATERIALIZED index — the actual at-scale path:
-    // the assigned corpus is written partitioned by centroid_id, and the
-    // probe reads only the probed cells' directories (partition pruning,
-    // asserted in ScaleSpec). Same result as ann_ivf_topk by construction
-    // (identical codebook, assignment, probe set, re-rank), so it shares
-    // that oracle. The index build inside the query fn is the honest cost
-    // of the materialized path at this scale.
-    "ann_ivf_indexed" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val queries = embs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      val idx = scratchDir("ivf-idx")
-      val cents = Similarity.writeIvfIndex(embs, idx)
-      Similarity.ivfTopKIndexed(idx, cents, queries, k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ----- ANN index APPEND (the IVF twin of the MinHash band-index
-    // append): build on the % 3 <> 0 subset, append the % 3 == 0 batch
-    // against the SAME codebook, probe the combined index — equal to a
-    // full rebuild with that codebook, which is what the oracle restates
-    "ann_ivf_append" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val queries = embs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").as("q_embedding"))
-      val idx = scratchDir("ivf-idx-append")
-      val cents = Similarity.writeIvfIndex(
-        embs.filter(col("vec_id") % 3 =!= 0), idx)
-      Similarity.appendIvfIndex(embs.filter(col("vec_id") % 3 === 0),
-        cents, idx)
-      Similarity.ivfTopKIndexed(idx, cents, queries, k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ----- ANN: IVF coarse-quantized top-k (cell-pruned probe)
-    "ann_ivf_topk" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val queries = embs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      Similarity.ivfTopK(embs, queries, k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ----- multimodal over REAL binary files: PNG-signature-prefixed
-    // blobs staged to disk once per sfDir (fixture setup, 128 bounded
-    // files), read back through Spark's distributed `binaryFile` source,
-    // ids recovered from file names, then the SAME stubbed decode as
-    // multimodal_features — the gate that proves genuine file bytes (not
-    // text cast to binary) flow through the mapPartitions decode path.
-    // The oracle restates signature+payload byte math from documents.text.
-    "multimodal_binary_ingest" -> ((s, dir) => {
-      val spool = pngBlobs(s, dir)
-      Multimodal.decodeStub(Multimodal.readBinaryMedia(s, spool)).toDF()
-        .select(col("id"), col("kind"), col("n_bytes"), col("checksum"),
-          element_at(col("features"), 1).cast("double").as("f0"))
-        .orderBy(col("id"))
-    }),
-
-    // ----- exact BINARY dedup: SHA-256 content digests over real on-disk
-    // blobs (the byte-level dedup a multimodal corpus runs before any
-    // perceptual hash) — the corpus is the staged blob fixture unioned
-    // with an id-shifted copy, so every payload has exactly one planted
-    // duplicate; keeper = min id per digest (first-wins). Digests hash
-    // the HEX encoding (injective) because the oracle's sha256 is
-    // VARCHAR-only and raw bytes are not valid UTF-8.
-    "dedup_binary" -> ((s, dir) => {
-      val spool = pngBlobs(s, dir)
-      val blobs = s.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png").load(spool)
-        .select(regexp_extract(col("path"), "blob_(\\d+)\\.png$", 1)
-          .cast("long").as("id"), col("content"))
-      val doubled = blobs.unionByName(
-        blobs.select((col("id") + 100000).as("id"), col("content")))
-      doubled
-        .select(col("id"), sha2(hex(col("content")), 256).as("digest"))
-        .groupBy(col("digest"))
-        .agg(count(lit(1)).as("n_copies"), min(col("id")).as("keeper_id"))
-        .orderBy(col("digest"))
-    }),
-
-    // ----- multimodal REAL image decode: fully valid grayscale PNGs
-    // (zlib IDAT, per-row filters cycling through all five types, CRCs)
-    // staged once per sfDir, read via the distributed binaryFile source,
-    // decoded by the pure-JVM PngCodec — inflate + unfilter, no stub. The
-    // oracle restates the deterministic pixel layout (text bytes row-major
-    // at width 1+len%31, zero-padded) from documents.text, so a hash match
-    // proves the decode round trip through every filter type.
-    "multimodal_png_decode" -> ((s, dir) => {
-      val spool = pngReal(s, dir)
-      Multimodal.decodePngFiles(s, spool).toDF()
-        .orderBy(col("id"))
-    }),
-
-    // ----- REAL image resize (the vision-pipeline preprocessing step the
-    // survey's multimodal tier names): 2x2 box-filter downscale of the
-    // genuinely decoded PNG pixels in the codec seam — each output pixel
-    // the floor-mean of its block, ragged edge cropped — gated on the
-    // resized image's exact integer stats, every one restated by the
-    // oracle from the document bytes the fixture encodes
-    "multimodal_resize" -> ((s, dir) => {
-      val spool = pngReal(s, dir)
-      Multimodal.resizePngFiles(s, spool).toDF()
-        .orderBy(col("id"))
-    }),
-
-    // ----- multimodal metadata scrub (the EXIF-strip analog): PNGs carry
-    // PII in ancillary chunks (author emails, timestamps); the scrub
-    // drops every ancillary chunk and proves the pixel data survived.
-    // Chunk values are pure functions of doc_id, so the oracle restates
-    // every removed byte exactly from the documents table
-    "multimodal_metadata_strip" -> ((s, dir) => {
-      val spool = pngMeta(s, dir)
-      Multimodal.stripPngMetadata(s, spool).toDF()
-        .orderBy(col("id"))
-    }),
-
-    // ----- WAV metadata scrub (r13 judge stretch 8 — the privacy pass
-    // now covers BOTH shipped binary formats): staged WAVs carry planted
-    // LIST/INFO provenance tags (software, author, a comment quoting the
-    // document's leading text); the scrub drops every non-essential RIFF
-    // chunk and proves the PCM stream survived sample-for-sample. Tag
-    // values are pure functions of (doc_id, text), so the oracle restates
-    // every removed byte from the documents table
-    "multimodal_wav_metadata_strip" -> ((s, dir) => {
-      val spool = wavMeta(s, dir)
-      Multimodal.stripWavMetadata(s, spool).toDF()
-        .orderBy(col("id"))
-    }),
-
-    // ----- multimodal: REAL audio decode — stage fully valid PCM16 WAV
-    // files (RIFF + fmt + LIST + data, samples derived from the document
-    // bytes), read them back through the distributed binaryFile source,
-    // and parse them with the pure-JVM WavCodec chunk walk; the oracle
-    // restates every decoded statistic from documents.text alone, so the
-    // gate proves a genuine container parse, not byte-math over a blob
-    "multimodal_wav_decode" -> ((s, dir) => {
-      val spool = wavReal(s, dir)
-      Multimodal.decodeWavFiles(s, spool).toDF()
-        .orderBy(col("id"))
-    }),
-
-    // ----- REAL audio resample (multimodal_resize's audio sibling):
-    // decimate-by-two with a 2-tap box filter over the genuinely decoded
-    // PCM16 stream — each output sample the floor-mean of an input pair
-    // (Math.floorDiv == the oracle's flooring // on negative sums),
-    // trailing odd sample dropped. Gated on exact integer stats of the
-    // downsampled stream, restated from documents.text
-    "multimodal_audio_downsample" -> ((s, dir) => {
-      val spool = wavReal(s, dir)
-      Multimodal.downsampleWavFiles(s, spool).toDF()
-        .orderBy(col("id"))
-    }),
-
-    // ----- VAD-lite silence-split segmentation over the SAME real PCM16
-    // decode: active samples (|s| >= 8192) coalesce across quiet gaps
-    // shorter than 4 samples; a longer quiet run closes the utterance
-    // span. One sequential pass inside the decoder seam — the oracle
-    // restates it as the explode+window islands shape the operator
-    // deliberately avoids
-    "multimodal_audio_segments" -> ((s, dir) => {
-      val spool = wavReal(s, dir)
-      Multimodal.wavSegments(s, spool).toDF()
-        .orderBy(col("id"), col("seg_idx"))
-    }),
-
-    // ----- perceptual average-hash fingerprints through the REAL PNG
-    // decode (same staged fixture as multimodal_png_decode): the 8x8
-    // grid-sample aHash is the image near-dup candidate key, as MinHash
-    // bands are for text; two 32-bit halves keep both engines in
-    // non-negative integer arithmetic
-    "multimodal_phash" -> ((s, dir) => {
-      val spool = pngReal(s, dir)
-      Multimodal.ahashPngFiles(s, spool).toDF()
-        .orderBy(col("id"))
-    }),
-
-    // ----- REAL video-style frame sampling: stage fully valid ANIMATED
-    // PNGs (acTL/fcTL/fdAT, each frame its own zlib stream; doc bytes
-    // laid out 32 per 8x4 frame), read via the distributed binaryFile
-    // source, decode every frame with PngCodec.decodeApng, and emit
-    // every 2nd frame with its fcTL delay and exact pixel stats — the
-    // decode -> frame-sample -> per-frame-features pipeline for an
-    // actual multi-frame container, replacing the former stride-over-
-    // bytes stub as the engine's frame-sampling story
-    "multimodal_apng_frames" -> ((s, dir) => {
-      val spool = apngReal(s, dir)
-      Multimodal.sampleApngFrames(s, spool, stride = 2).toDF()
-        .orderBy(col("id"), col("frame_idx"))
-    }),
-
-    // ----- IMAGE near-dup detection end-to-end: stage real PNGs plus
-    // planted near-dup variants (pixel 0 forced to 0xFF, id+100000),
-    // decode + perceptual-hash every file, banded-LSH candidate join,
-    // exact Hamming verify — the image analog of dedup_minhash, over a
-    // genuinely decoded corpus
-    "dedup_image_lsh" -> ((s, dir) => {
-      val spool = pngNearDup(s, dir)
-      Multimodal.imageNearDupPairs(
-          Multimodal.ahashPngFiles(s, spool).toDF()
-            .select(col("id"), col("ahash_a"), col("ahash_b")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // ----- AUDIO near-dup detection end-to-end: stage real WAVs plus
-    // planted near-dup variants (sample 0 forced to -32768, id+100000),
-    // decode + 64-window energy-profile fingerprint, then the SAME
-    // banded-LSH candidate join + exact Hamming verify as the image path
-    // (the pair stage is hash-generic by design) — never all-pairs
-    "dedup_audio_lsh" -> ((s, dir) => {
-      val spool = wavNearDup(s, dir)
-      Multimodal.imageNearDupPairs(
-          Multimodal.audioFingerprint(s, spool).toDF()
-            .select(col("id"), col("ahash_a"), col("ahash_b")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // ----- VIDEO temporal near-dup (r12 judge stretch 9), completing the
-    // near-dup matrix (text/image/audio/embedding/video): stage real
-    // APNGs plus planted near-dup variants (frame 0 pixel 0 forced to
-    // 0xFF, id+100000), decode in the per-partition seam, fold the
-    // ORDERED frame-brightness sequence into a 64-window temporal
-    // fingerprint — no frame explode shuffle — then the SAME banded-LSH
-    // candidate join + exact Hamming verify as the image/audio paths
-    "dedup_video_lsh" -> ((s, dir) => {
-      val spool = apngNearDup(s, dir)
-      Multimodal.imageNearDupPairs(
-          Multimodal.videoFingerprint(s, spool).toDF()
-            .select(col("id"), col("ahash_a"), col("ahash_b")))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // ----- per-frame video features over the SAME decoded APNG fixture:
-    // frame aHash (threshold vs integer mean gray), L1 delta to the
-    // previous frame, and the scene-cut decision — the decode ->
-    // per-frame-fingerprint -> segment pipeline over genuinely inflated
-    // frames, all integer arithmetic
-    "multimodal_scene_cuts" -> ((s, dir) => {
-      val spool = apngReal(s, dir)
-      Multimodal.apngSceneCuts(s, spool).toDF()
-        .orderBy(col("id"), col("frame_idx"))
-    }),
-
-    // ----- multimodal: binary columns + stubbed decode -> features
-    "multimodal_features" -> ((s, dir) => {
-      val media = Multimodal.mediaFromDocuments(Tables.documents(s, dir))
-      Multimodal.decodeStub(media).toDF()
-        .select(col("id"), col("kind"), col("n_bytes"), col("checksum"),
-          element_at(col("features"), 1).cast("double").as("f0"))
-        .orderBy(col("id"))
-    }),
-
-    // ----- multimodal: stride-sampled frames from binary payloads
-    // (frames emitted hex-encoded: DuckDB cannot slice BLOBs, but hex is a
-    // faithful byte-level representation both engines agree on)
-    "multimodal_frames" -> ((s, dir) =>
-      Multimodal.frameSampleStub(
-          Multimodal.mediaFromDocuments(Tables.documents(s, dir)),
-          stride = 64, frameLen = 16)
-        .select(col("id"), col("kind"), col("frame_idx"),
-          hex(col("frame_bytes")).as("frame_hex"))
-        .orderBy(col("id"), col("frame_idx"))),
-
-    // ----- batch tumbling-window aggregation (streaming analog has tests)
-    "window_tumbling" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sumExact(col("value")).as("total"))
-        .select(col("w.start").as("window_start"), col("event_type"),
-          col("n"), col("total"))
-        .orderBy(col("window_start"), col("event_type"))),
-
-    // ----- batch sessionization: gap-break sessions INCLUDING the ones
-    // still open at end-of-input (the flush a bounded streaming run never
-    // delivers — see EventsStream.sessionizeBatch)
-    "sessionize_batch" -> ((s, dir) =>
-      graft.streaming.EventsStream.sessionizeBatch(Tables.events(s, dir))
-        .orderBy(col("user_id"), col("session_seq"))),
-
-    // ----- rule-based sentence segmentation: terminator-delimited spans
-    // via ONE regexp_extract_all (the pattern avoids lookbehind, which
-    // RE2 — DuckDB's engine — lacks), trimmed and re-indexed densely.
-    // Narrow generate, no shuffle; the upstream step text_chunk's
-    // window/stride chunking composes after it
-    "text_sentence_split" -> ((s, dir) =>
-      // the fixture corpus is punctuation-free, so the gate first derives
-      // a punctuated variant (a '.' after every 'table'/'value' token —
-      // deterministic, mirrored in the oracle) and segments THAT; on
-      // unpunctuated input the splitter correctly yields one span
-      Tables.documents(s, dir).filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          regexp_replace(col("text"), "\\b(table|value)\\b", "$1.")
-            .as("__t"))
-        .select(col("doc_id"),
-          posexplode(filter(
-            transform(
-              regexp_extract_all(col("__t"), lit("[^.!?]+[.!?]*"), lit(0)),
-              x => trim(x)),
-            x => length(x) > 0)).as(Seq("sent_idx", "sentence")))
-        .withColumn("n_chars", length(col("sentence")))
-        .orderBy(col("doc_id"), col("sent_idx"))),
-
-    // ----- context-window chunking: 64-token windows, stride 48 (16-token
-    // overlap) — narrow generate, no shuffle; short tails kept
-    "text_chunk" -> ((s, dir) =>
-      Reshape.chunkTokens(Tables.documents(s, dir), "doc_id", "text",
-          window = 64, stride = 48)
-        .orderBy(col("doc_id"), col("chunk_idx"))),
-
-    // ----- curation: keep the 5 highest-quality docs per language
-    // (token-diversity score, deterministic doc_id tie-break); the
-    // rank-filter plans as WindowGroupLimit — per-partition top-k BEFORE
-    // the shuffle, so the exchange carries O(strata x k) rows
-    "curate_topk_per_lang" -> ((s, dir) => {
-      val scored = Tables.documents(s, dir)
-        .withColumn("__toks", TextFns.tokens(col("text")))
-        .select(col("doc_id"), col("lang"),
-          (size(array_distinct(col("__toks"))).cast("double") /
-            when(col("__toks").isNotNull, size(col("__toks"))))
-            .as("uniq_ratio"))
-      graft.operators.Sampling.topKPerGroup(scored, "lang", "uniq_ratio",
-          k = 5, tieBreak = "doc_id")
-        .orderBy(col("lang"), col("uniq_ratio").desc, col("doc_id"))
-    }),
-
-    // ----- training-shard assignment: the LAST step of a curation
-    // pipeline — deterministic hash sharding of the corpus into 16
-    // output shards plus the per-shard balance report a shard writer
-    // publishes (doc/token/char totals and each shard's share of docs).
-    // The assignment is a narrow projection (no shuffle of the corpus at
-    // any scale beyond the 16-row aggregate); hash sharding keeps shards
-    // statistically balanced without a global sort
-    "corpus_shards" -> ((s, dir) => {
-      val nShards = 16
-      Tables.documents(s, dir)
-        .filter(col("text").isNotNull)
-        .select(
-          pmod(graft.functions.HashExprs.fnv1a64Col(
-            concat_ws("|", lit("shard"), col("doc_id").cast("string"))),
-            lit(nShards.toLong)).cast("int").as("shard"),
-          size(split(trim(col("text")), "\\s+")).as("__toks"),
-          length(col("text")).as("__chars"))
-        .groupBy(col("shard"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("__toks").cast("long")).as("n_tokens"),
-          sum(col("__chars").cast("long")).as("n_chars"))
-        .orderBy(col("shard"))
-    }),
-
-    // ----- weighted corpus mixing (training-mix step): 2.0 epochs of the
-    // "wiki" slice (en docs) + 0.5 epochs of the full "web" corpus, every
-    // row tagged (source, epoch); fractional epochs are deterministic hash
-    // samples so the mix reproduces row-for-row
-    "corpus_mix" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("lang"))
-      graft.operators.Sampling.mixCorpora(
-          Seq(("wiki", docs.filter(col("lang") === "en"), 2.0),
-            ("web", docs, 0.5)),
-          keyCol = "doc_id")
-        .select(col("source"), col("epoch"), col("doc_id"), col("lang"))
-        .orderBy(col("source"), col("epoch"), col("doc_id"))
-    }),
-
-    // ----- DoReMi-style domain reweighting step (Xie et al.,
-    // arXiv:2305.10429; the update is Hedge/multiplicative-weights,
-    // Freund-Schapire 1997): new mixture alpha_i proportional to
-    // exp(eta * excess_loss_i), smoothed toward uniform by c. Excess here
-    // is the deterministic per-domain proxy (domain mean tokens/doc minus
-    // corpus mean) restated over the common denominator n_i*N so it is an
-    // IEEE quotient of EXACT integers — bit-identical cross-engine; exp
-    // is emission-only on those bit-identical inputs and truncates
-    // through the DECIMAL(18,6) carrier, so the normalization sum is an
-    // exact decimal sum (merge-order invariant) and alpha is a fixed
-    // IEEE op tree on bit-identical operands. Shape: one corpus-scan
-    // aggregate -> a |domains|-row frame; everything after is
-    // metadata-sized at any corpus size
-    "corpus_doremi_step" -> ((s, dir) => {
-      val toks = size(split(trim(col("text")), "\\s+")).cast("long")
-      val per = Tables.documents(s, dir).filter(col("text").isNotNull)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(toks).as("t"))
-      val tot = per.agg(sum(col("n")).as("nn"), sum(col("t")).as("tt"),
-        count(lit(1)).as("k"))
-      val excess = (col("t") * col("nn") - col("n") * col("tt")).cast("double") /
-        (col("n") * col("nn")).cast("double")
-      val frame = per.crossJoin(broadcast(tot))
-        .withColumn("__w",
-          exp(lit(0.5) * excess).cast("decimal(18,6)"))
-      val z = frame.agg(sum(col("__w")).as("Z"))
-      frame.crossJoin(broadcast(z))
-        .select(col("lang"), col("n").as("n_docs"), excess.as("excess"),
-          (lit(0.875) * (col("__w").cast("double") / col("Z").cast("double"))
-            + lit(0.125) / col("k").cast("double")).as("alpha"))
-        .orderBy(col("lang"))
-    }),
-
-    // ----- DSIR importance selection (Xie et al. 2023): hashed-bigram
-    // target-vs-raw log-ratio weights, top-k TakeOrdered selection — the
-    // curation step that decides which crawl docs enter training. Target
-    // slice = lang 'en'; ONE explode pass, <=256-row broadcast model
-    // (Dsir scaladoc)
-    "corpus_dsir_select" -> ((s, dir) =>
-      graft.operators.Dsir.select(Tables.documents(s, dir),
-        targetFilter = "lang = 'en'", k = 100)),
-
-    // ----- DSIR importance RESAMPLING — the paper's actual sampling step:
-    // Gumbel-top-k over the same weights draws k docs without replacement
-    // with probability proportional to exp(weight), with deterministic
-    // hash-derived Gumbel noise (rerun-stable, engine-restatable)
-    "corpus_dsir_resample" -> ((s, dir) =>
-      graft.operators.Dsir.resample(Tables.documents(s, dir),
-        targetFilter = "lang = 'en'", k = 100)),
-
-    // ----- DSIR driver-side bisection (r12 judge ask 1): read-only views
-    // of the shared pipeline's stages — tokenize, FNV bucket fold, fitted
-    // model, per-doc exact weights — each restated from the same oracle
-    // CTE chain, all-integer outputs. After three rounds of
-    // local-pass/driver-fail on the two selection gates, the FIRST red
-    // row among these names the divergent stage in the driver's own
-    // correctness artifact (all green + selection red ⇒ the double
-    // cast / LIMIT boundary / comparator). Permanent regression armor.
-    "corpus_dsir_diag_tokens" -> ((s, dir) =>
-      graft.operators.Dsir.diagTokens(Tables.documents(s, dir),
-        targetFilter = "lang = 'en'")),
-    "corpus_dsir_diag_buckets" -> ((s, dir) =>
-      graft.operators.Dsir.diagBuckets(Tables.documents(s, dir),
-        targetFilter = "lang = 'en'")),
-    "corpus_dsir_diag_model" -> ((s, dir) =>
-      graft.operators.Dsir.diagModel(Tables.documents(s, dir),
-        targetFilter = "lang = 'en'")),
-    "corpus_dsir_diag_weights" -> ((s, dir) =>
-      graft.operators.Dsir.diagWeights(Tables.documents(s, dir),
-        targetFilter = "lang = 'en'")),
-    "corpus_dsir_diag_gumbel" -> ((s, dir) =>
-      graft.operators.Dsir.diagGumbel(Tables.documents(s, dir))),
-
-    // ----- round-14 truth-table gates (r13 judge ask 1): the r13
-    // bisection pinned the divergence between the green model and the red
-    // weight sum; these two cut that segment in three. diag_cells folds
-    // the per-(doc,bucket) grid per doc (two independent integer
-    // functionals — catches cell permutations the r13 marginal gates
-    // can't); diag_w12 is the per-doc integer weight spine SUM(c*lr12),
-    // scale-12 BIGINT, zero decimal types. Read red rows as: cells ⇒ the
-    // grid; cells green + w12 red ⇒ model join / integer sum; w12 green +
-    // weights red ⇒ the final dec6 quantization text.
-    "corpus_dsir_diag_cells" -> ((s, dir) =>
-      graft.operators.Dsir.diagCells(Tables.documents(s, dir),
-        targetFilter = "lang = 'en'")),
-    "corpus_dsir_diag_w12" -> ((s, dir) =>
-      graft.operators.Dsir.diagW12(Tables.documents(s, dir),
-        targetFilter = "lang = 'en'")),
-
-    // ----- FixedLog self-test gate (r12 judge ask 5): ln and expNeg over
-    // a literal spine of boundary values, emitted as BIGINTs — pins the
-    // DuckDB restatement text against the Spark implementation on the
-    // DRIVER's DuckDB build, so an engine-arithmetic divergence gets its
-    // own red row instead of surfacing as a composite-gate mystery
-    "f_fixedlog_table" -> ((s, _) => {
-      import s.implicits._
-      val spine = FixedLog.TableSpine.toDF("n")
-      val l = FixedLog.withLn(spine, "n", "ln12")
-      FixedLog.withExpNeg(l, "ln12", "en12")
-        .select(col("n"), col("ln12"), col("en12"))
-        .orderBy(col("n"))
-    }),
-
-    // ----- PII scrubbing over a corpus with planted contact strings
-    // (fixtures carry no PII, so every 5th doc gets a deterministic
-    // synthetic contact block — the planted-input pattern the dedup
-    // queries use); output = redacted text + per-category counts
-    "text_scrub" -> ((s, dir) => {
-      val planted = Tables.documents(s, dir).select(col("doc_id"),
-        concat(col("text"), when(col("doc_id") % 5 === 0,
-          concat(lit(" Contact user"), col("doc_id"),
-            lit("@example.com via https://site"), col("doc_id"),
-            lit(".example/page?ref=1 or +55 11 91234-5678")))
-          .otherwise(lit(""))).as("text"))
-      planted.select(col("doc_id"),
-        TextFns.redactPii(col("text")).as("texto_limpo"),
-        TextFns.patternCount(col("text"), TextFns.urlRe).as("n_urls"),
-        TextFns.patternCount(col("text"), TextFns.emailRe).as("n_emails"),
-        TextFns.patternCount(col("text"), TextFns.phoneRe).as("n_phones"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- promo revenue share (TPC-H Q14 shape): part |X| lineitem with
-    // conditional aggregation — the broadcast side is chosen by size, and
-    // the month filter prunes the lineitem scan (PushedFilters)
-    "q14_promo" -> ((s, dir) => {
-      val l = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1997-09-01") &&
-          col("l_shipdate") < lit("1997-10-01"))
-      val p = Tables.part(s, dir)
-      l.join(p, l("l_partkey") === p("p_partkey"))
-        .agg((lit(100.0) *
-          sum(when(col("p_type").startsWith("PROMO"),
-            dec(col("l_extendedprice") * (lit(1) - col("l_discount"))))
-            .otherwise(dec(lit(0)))).cast("double") /
-          sumExact(col("l_extendedprice") * (lit(1) - col("l_discount"))))
-          .as("promo_revenue_pct"))
-    }),
-
-    // ----- deterministic stratified sampling (sampleBy analog): per-lang
-    // keep fractions keyed on a row hash — reproducible across cluster
-    // sizes and retries, unlike rand() sampling (Sampling scaladoc)
-    "sample_stratified" -> ((s, dir) =>
-      graft.operators.Sampling.stratifiedHashSample(
-          Tables.documents(s, dir).select(col("doc_id"), col("lang")),
-          keyCol = "doc_id", stratumCol = "lang",
-          fractions = Map("en" -> 0.5, "de" -> 0.25, "zh" -> 1.0, "fr" -> 0.0))
-        .orderBy(col("doc_id"))),
-
-    // ----- deterministic global training shuffle: shard by FNV(id) mod N,
-    // order within each shard by (hash, id) — the reproducible-epoch
-    // discipline (same corpus -> same shard files -> same batch order on
-    // any cluster size / retry). Shard assignment and in-shard position
-    // are pure hash arithmetic: zero driver state, one shuffle on the
-    // shard key, and the per-shard sort is exactly the write-side
-    // sortWithinPartitions a shard-file writer would run
-    "corpus_shuffle" -> ((s, dir) => {
-      val nShards = 8
-      val h = graft.functions.HashExprs.fnv1a64Col(col("doc_id").cast("string"))
-      Tables.documents(s, dir).select(col("doc_id"))
-        .withColumn("__h", h)
-        .withColumn("shard", pmod(col("__h"), lit(nShards)).cast("int"))
-        .withColumn("pos", row_number().over(
-          Window.partitionBy(col("shard")).orderBy(col("__h"), col("doc_id"))))
-        .select(col("shard"), col("pos"), col("doc_id"))
-        .orderBy(col("shard"), col("pos"))
-    }),
-
-    // ----- E2 end-to-end: catalog discovery -> header-probed raw reads ->
-    // transform -> idempotent partitioned fact load -> read the store back.
-    // The oracle re-derives the identical fact from the SAME raw files.
-    // data_processamento (F18 wall-clock lineage) is excluded like s7.
-    "e2_lifecycle" -> ((s, _) => {
-      val factPath = scratchDir("e2") + "/fact"
-      val cfg = graft.model.EngineConfig(
-        anosAlvo = Seq(2023), servicosAlvo = Seq("SMP", "SCM"))
-      val stats = graft.plans.Pipeline.lifecycle(s, fixturesDir, cfg, factPath)
-      require(stats.errors.isEmpty, s"lifecycle errors: ${stats.errors}")
-      require(stats.resources == rawFixtures.size, "discovery missed a fixture")
-      graft.sources.Sinks.readFact(s, factPath)
-        .select(col("tempo_key"), col("grupo_key"), col("servico_key"),
-          col("variavel_key"), col("valor").cast("double").as("valor"),
-          col("arquivo_origem"), col("linha_origem"), col("hash_registro"),
-          col("ano"))
-        .orderBy(col("hash_registro"))
-    }),
-
-    // ----- E2 over a SHEET CONTAINER: the reference's actual input is a
-    // multi-sheet ODS workbook read sheet-by-service
-    // (/root/reference/etl/etl_ida.py:171-257); here the container is a
-    // directory of named sheets and discovery -> sheet resolution ->
-    // header-probed read -> ffill transform -> partitioned fact load runs
-    // end-to-end over ONLY the mapped Telefonia_Fixa sheet. The decoy
-    // Notas sheet in the same container would fail the header probe if the
-    // selection logic ever regressed (errors surface via the require).
-    "e2_lifecycle_sheets" -> ((s, _) => {
-      val factPath = scratchDir("e2-sheets") + "/fact"
-      val cfg = graft.model.EngineConfig(
-        anosAlvo = Seq(2023), servicosAlvo = Seq("STFC"))
-      val stats = graft.plans.Pipeline.lifecycle(s, fixturesDir, cfg, factPath)
-      require(stats.errors.isEmpty, s"lifecycle errors: ${stats.errors}")
-      require(stats.resources == 1,
-        s"expected exactly the workbook resource, saw ${stats.resources}")
-      graft.sources.Sinks.readFact(s, factPath)
-        .select(col("tempo_key"), col("grupo_key"), col("servico_key"),
-          col("variavel_key"), col("valor").cast("double").as("valor"),
-          col("arquivo_origem"), col("linha_origem"), col("hash_registro"),
-          col("ano"))
-        .orderBy(col("hash_registro"))
-    }),
-
-    // ----- E2 over a REAL ODS CONTAINER: the reference's literal input
-    // format (a zip of XML parts, read sheet-by-service via pandas/odf —
-    // etl_ida.py:171-257). Discovery finds the committed .ods resource,
-    // the pure-JVM zip+StAX reader (sources/Ods.scala) parses ONLY the
-    // mapped Telefonia_Fixa sheet (merged->covered cells to blanks for
-    // the W3 ffill, run-length empties expanded lazily so the ~17G-cell
-    // LibreOffice trailing padding costs O(1)), and the standard
-    // probe->transform->partitioned-fact-load path runs unchanged. The
-    // decoy Notas sheet would fail the header probe if sheet selection
-    // ever regressed.
-    "e2_lifecycle_ods" -> ((s, _) => {
-      val factPath = scratchDir("e2-ods") + "/fact"
-      val cfg = graft.model.EngineConfig(
-        anosAlvo = Seq(2024), servicosAlvo = Seq("STFC"))
-      val stats = graft.plans.Pipeline.lifecycle(s, fixturesDir, cfg, factPath)
-      require(stats.errors.isEmpty, s"lifecycle errors: ${stats.errors}")
-      require(stats.resources == 1,
-        s"expected exactly the ODS resource, saw ${stats.resources}")
-      graft.sources.Sinks.readFact(s, factPath)
-        .select(col("tempo_key"), col("grupo_key"), col("servico_key"),
-          col("variavel_key"), col("valor").cast("double").as("valor"),
-          col("arquivo_origem"), col("linha_origem"), col("hash_registro"),
-          col("ano"))
-        .orderBy(col("hash_registro"))
-    }),
-
-    // ----- TRUE streaming path, driver-gated: the events fixture staged to
-    // a one-file spool dir, consumed via readStream -> watermarked tumbling
-    // agg -> memory sink under Trigger.AvailableNow. The oracle is the
-    // batch analog's SQL — stream == batch on bounded input is exactly the
-    // guarantee Structured Streaming makes, so the DuckDB gate now covers
-    // the readStream plan itself, not only its batch twin.
-    // ----- true-streaming SLIDING windows (the streaming form of
-    // window_sliding): same spool/AvailableNow/memory-sink harness as
-    // stream_tumbling, each event fanning into size/slide windows
-    "stream_sliding" -> ((s, dir) => {
-      val spool = eventsTumble(s, dir)
-      val qn = "graft_stream_sliding"
-      withStatePartitions(s, 4) {
-        val q = graft.streaming.EventsStream.slidingAgg(
-            graft.streaming.EventsStream.readEvents(s, spool))
-          .writeStream.outputMode("complete").format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.stop()
-      }
-      s.table(qn).orderBy(col("window_start"), col("event_type"))
-    }),
-
-    // ----- streaming trending top-k: the stream maintains per-(window,
-    // user) counts and the top-3 cut ranks the MATERIALIZED aggregate at
-    // serving time (no sorts mid-stream; EventsStream.trendingAgg
-    // scaladoc). This gate replays in COMPLETE mode, which retains all
-    // window state (watermark eviction applies only in update/append —
-    // the production mode is update into an upserting sink); fine for the
-    // bounded replay == batch equivalence the oracle states directly
-    "stream_topk" -> ((s, dir) => {
-      val spool = eventsTumble(s, dir)
-      val qn = "graft_stream_topk"
-      withStatePartitions(s, 4) {
-        val q = graft.streaming.EventsStream.trendingAgg(
-            graft.streaming.EventsStream.readEvents(s, spool))
-          .writeStream.outputMode("complete").format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.stop()
-      }
-      val w = Window.partitionBy(col("window_start"))
-        .orderBy(col("n").desc, col("user_id"))
-      s.table(qn).withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .orderBy(col("window_start"), col("rank"))
-    }),
-
-    "stream_tumbling" -> ((s, dir) => {
-      val spool = eventsTumble(s, dir)
-      val qn = "graft_stream_tumbling"
-      withStatePartitions(s, 4) {
-        val q = graft.streaming.EventsStream.tumblingAgg(
-            graft.streaming.EventsStream.readEvents(s, spool))
-          .writeStream.outputMode("complete").format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.stop()
-      }
-      s.table(qn).orderBy(col("window_start"), col("event_type"))
-    }),
-
-    // ----- APPEND-mode window finalization: with a watermark, append
-    // mode emits a window exactly once, when the watermark passes its
-    // end — the production emission contract (complete mode, which the
-    // other window gates use for bounded replay, re-emits everything).
-    // On a bounded run the final watermark is max(ts) - delay, so the
-    // emitted set is precisely the windows with end <= that bound — a
-    // DETERMINISTIC subset the oracle restates; the trailing windows
-    // stay in state awaiting a watermark that never comes
-    "stream_append_finalize" -> ((s, dir) => {
-      val spool = eventsTumble(s, dir)
-      val qn = "graft_stream_append"
-      withStatePartitions(s, 4) {
-        val q = graft.streaming.EventsStream.tumblingAgg(
-            graft.streaming.EventsStream.readEvents(s, spool))
-          .writeStream.outputMode("append").format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.stop()
-      }
-      s.table(qn).orderBy(col("window_start"), col("event_type"))
-    }),
-
-    // ----- checkpoint RESUME across a real stop/restart: run the
-    // tumbling aggregation over HALF the events, stop the query, land
-    // the second half in the source dir, and restart from the SAME
-    // checkpoint. The file source's commit log skips the already-read
-    // half, so the final table equals the batch aggregate over ALL
-    // events only if the first run's window state was genuinely
-    // recovered from the state store — the crash-recovery contract the
-    // fresh-checkpoint replay gates (stream_ingest_exactly_once) do not
-    // cover. Memory sink permits checkpoint recovery in complete mode
-    // precisely because the table is recomputed from recovered state
-    "stream_checkpoint_resume" -> ((s, dir) => {
-      val root = scratchDir("ckresume")
-      val src = s"$root/src"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-      val ev = Tables.events(s, dir)
-      val qn = "graft_stream_ckresume"
-      def drainOnce(): Unit = withStatePartitions(s, 4) {
-        val q = graft.streaming.EventsStream.tumblingAgg(
-            graft.streaming.EventsStream.readEvents(s, src))
-          .writeStream.outputMode("complete").format("memory").queryName(qn)
-          .option("checkpointLocation", s"$root/ck")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.stop()
-      }
-      ev.filter(pmod(col("event_id"), lit(2)) === 0)
-        .coalesce(1).write.mode("append").parquet(src)
-      drainOnce() // first incarnation: half the data, state checkpointed
-      ev.filter(pmod(col("event_id"), lit(2)) === 1)
-        .coalesce(1).write.mode("append").parquet(src)
-      drainOnce() // restart: only the new file reads; state must resume
-      s.table(qn).orderBy(col("window_start"), col("event_type"))
-    }),
-
-    // ----- custom-state streaming (flatMapGroupsWithState sessionization),
-    // driver-gated. A bounded AvailableNow run emits only sessions CLOSED
-    // by a later event — each user's last session stays open in the state
-    // store (EventsStream.sessionize scaladoc) — so the oracle states
-    // "all sessions except each user's last". Input ts is pre-truncated to
-    // ms in the spool (SessionState keeps ms), and the oracle truncates
-    // identically, so gap-boundary arithmetic is bit-equal on both engines.
-    // ----- streaming as-of enrichment, driver-gated: clicks + purchases
-    // union-tagged into ONE spooled stream; per-user O(1) state carries
-    // the latest click across micro-batches
-    // (EventsStream.streamAsofEnrich). A bounded replay equals the batch
-    // as-of join, which is exactly what the oracle states — the same
-    // stream==batch-on-bounded-input guarantee the other stream gates use.
-    "stream_asof_join" -> ((s, dir) => {
-      import s.implicits._
-      val spool = eventsTumble(s, dir)
-      val tagged = graft.streaming.EventsStream.readEvents(s, spool)
-        .filter(col("ts").isNotNull &&
-          col("event_type").isin("click", "purchase"))
-        .select(col("user_id"), col("ts"),
-          when(col("event_type") === "click", lit(0)).otherwise(lit(1))
-            .as("side"),
-          col("event_id").as("tie"), col("event_id").as("a"),
-          col("value").as("v"))
-        .as[graft.streaming.EventsStream.AsofEvent]
-      val qn = "graft_stream_asof"
-      withStatePartitions(s, 4) {
-        val q = graft.streaming.EventsStream.streamAsofEnrich(tagged).toDF()
-          .writeStream.outputMode("append").format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.stop()
-      }
-      s.table(qn)
-        .select(col("event_id"), col("user_id"), col("value"),
-          col("click_id"), col("click_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ----- streaming CDC apply, driver-gated: the event feed as a change
-    // stream (error -> delete tombstone, else upsert) merged into a keyed
-    // store per micro-batch, latest-(ts,event_id)-wins, tombstones
-    // retained for batching-invariance (CdcUpsert scaladoc). The SAME
-    // feed replays through TWO runs with fresh checkpoints — the
-    // crash-and-reprocess case — and the store must equal a single apply,
-    // which is exactly what the oracle computes (the batch cdc_merge
-    // shape). Serving view filters tombstones.
-    "stream_cdc_upsert" -> ((s, dir) => {
-      val spool = eventsTumble(s, dir)
-      val storeDir = scratchDir("cdc-upsert") + "/store"
-      def replay(): Unit = {
-        val cp = scratchDir("cdc-upsert-cp")
-        val changes = graft.streaming.EventsStream.readEvents(s, spool)
-          .filter(col("user_id").isNotNull)
-          .select(col("user_id").as("key"), col("ts"), col("event_id"),
-            when(col("event_type") === "error", lit("delete"))
-              .otherwise(lit("upsert")).as("op"),
-            col("value"))
-        val q = graft.streaming.CdcUpsert.start(changes, storeDir, cp)
-        q.processAllAvailable(); q.stop()
-      }
-      withStatePartitions(s, 8) { replay(); replay() }
-      graft.streaming.CdcUpsert.latest(s, storeDir)
-        .select(col("key"), col("value").as("last_value"),
-          col("ts").as("last_ts"), col("event_id").as("last_event_id"))
-        .orderBy(col("key"))
-    }),
-
-    "stream_sessionize_closed" -> ((s, dir) => {
-      import s.implicits._
-      val spool = eventsSess(s, dir)
-      val typed = graft.streaming.EventsStream.readEvents(s, spool)
-        .filter(col("ts").isNotNull)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-        .as[graft.streaming.EventsStream.Event]
-      val qn = "graft_stream_sessions"
-      // timeoutOnIdle=false: a bounded AvailableNow replay must not leave a
-      // ProcessingTimeTimeout armed (see EventsStream.sessionize scaladoc)
-      withStatePartitions(s, 4) {
-        val q = graft.streaming.EventsStream
-          .sessionize(typed, timeoutOnIdle = false)
-          .toDF()
-          .writeStream.outputMode("append").format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.stop()
-      }
-      s.table(qn)
-        .select(col("user_id"), col("n_events").cast("bigint").as("n_events"),
-          col("start").as("session_start"), col("end").as("session_end"))
-        .orderBy(col("user_id"), col("session_start"))
-    }),
-
-    // ----- stream-stream interval join, driver-gated: both sides are the
-    // SAME watermarked stream filtered to click/purchase; the time-range
-    // condition bounds the join state (EventsStream.intervalJoin scaladoc).
-    // Oracle = the batch interval join (j_stream_interval's SQL).
-    "stream_interval_join" -> ((s, dir) => {
-      val spool = eventsTumble(s, dir)
-      def side(t: String) = graft.streaming.EventsStream.readEvents(s, spool)
-        .filter(col("event_type") === t)
-      val qn = "graft_stream_interval"
-      withStatePartitions(s, 4) {
-        val q = graft.streaming.EventsStream
-          .intervalJoin(side("click"), side("purchase"))
-          .writeStream.outputMode("append").format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.stop()
-      }
-      s.table(qn).orderBy(col("user_id"), col("l_id"), col("r_id"))
-    }),
-
-    // ----- streaming LEFT-OUTER interval join: matches emit immediately;
-    // a click with NO purchase within the hour emits with null right
-    // columns when its join window closes under the watermark (the null
-    // row IS the state eviction). Bounded-run finalization contract as
-    // stream_append_finalize: the final watermark is max(ts) - 2h, so
-    // the emitted null set is exactly the unmatched clicks whose window
-    // end falls below it — restated by the oracle
-    "stream_outer_join" -> ((s, dir) => {
-      val spool = eventsTumble(s, dir)
-      def side(t: String) = graft.streaming.EventsStream.readEvents(s, spool)
-        .filter(col("event_type") === t)
-      val qn = "graft_stream_outer"
-      withStatePartitions(s, 4) {
-        val q = graft.streaming.EventsStream
-          .intervalJoinOuter(side("click"), side("purchase"))
-          .writeStream.outputMode("append").format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.stop()
-      }
-      s.table(qn).orderBy(col("user_id"), col("l_id"), col("r_id"))
-    }),
-
-    // ----- streaming exact dedup, driver-gated: the spool holds the fixture
-    // DOUBLED (two byte-identical file copies — the replayed-input case);
-    // dropDuplicatesWithinWatermark must collapse it back to one row per
-    // event_id. Oracle = the original events table.
-    "stream_dedup" -> ((s, dir) => {
-      val spool = eventsDedup(s, dir)
-      val qn = "graft_stream_dedup"
-      withStatePartitions(s, 4) {
-        val q = graft.streaming.EventsStream
-          .dedupStream(graft.streaming.EventsStream.readEvents(s, spool))
-          .writeStream.outputMode("append").format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.stop()
-      }
-      s.table(qn).select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"), col("props"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ----- streaming NEAR-dup dedup, driver-gated: the continuous form
-    // of the MinHash tier — three deterministic arrival batches, each
-    // exact-tier'd vs the kept store, within-batch LSH-deduped, and
-    // probed against the STORED band + shingle-hash index, survivors
-    // APPENDED to the index (never rebuilt). This gate runs the full
-    // replay (measured); the log gate reads the memoized store.
-    "stream_dedup_minhash" -> ((s, dir) => {
-      val store = streamDedupReplay(s, dir, scratchDir("streamdedup"))
-      graft.streaming.NearDupStream.kept(s, store)
-        .select(col("doc_id"), col("batch")).orderBy(col("doc_id"))
-    }),
-    // the stream's audit artifact: one kept/dup_exact/dup_near verdict
-    // row per processed doc (bisectable at birth: a red kept gate with a
-    // green log isolates to the store writes; red verdicts point at the
-    // tiers)
-    "stream_dedup_minhash_log" -> ((s, dir) => {
-      val store = streamDedupSpool(s, dir)
-      graft.streaming.NearDupStream.log(s, store)
-        .select(col("doc_id"), col("batch"), col("verdict"))
-        .orderBy(col("doc_id"))
-    }),
-    // ----- index-lifecycle gates: RETRACTION (tombstones — the
-    // right-to-be-forgotten path) and COMPACTION (physical purge +
-    // small-file merge). Same chain, with/without the compact step before
-    // the final batch; the oracle is shared VERBATIM — compaction must be
-    // value-neutral, proven on every driver run, not argued.
-    "stream_dedup_retract" -> ((s, dir) => {
-      val store = streamDedupLifecycle(s, dir,
-        scratchDir("streamdedup-retract"), compactBeforeLast = false)
-      graft.streaming.NearDupStream.kept(s, store)
-        .select(col("doc_id"), col("batch")).orderBy(col("doc_id"))
-    }),
-    "stream_dedup_compact" -> ((s, dir) => {
-      val store = streamDedupLifecycle(s, dir,
-        scratchDir("streamdedup-compact"), compactBeforeLast = true)
-      graft.streaming.NearDupStream.kept(s, store)
-        .select(col("doc_id"), col("batch")).orderBy(col("doc_id"))
-    }),
-
-    // ----- stream-static enrichment join, driver-gated: the event stream
-    // joins a BROADCAST batch dimension (per-user cohort) before a
-    // complete-mode aggregate — the standard streaming enrichment shape
-    // (dim re-broadcast per micro-batch, no state for the join itself).
-    // Oracle = the batch analog; NULL user_ids drop via the inner join.
-    "stream_static_join" -> ((s, dir) => {
-      val spool = eventsTumble(s, dir)
-      val dim = Tables.events(s, dir).select(col("user_id")).distinct()
-        .withColumn("cohort", (col("user_id") % 3).cast("int"))
-      val qn = "graft_stream_static"
-      withStatePartitions(s, 4) {
-        val q = graft.streaming.EventsStream.readEvents(s, spool)
-          .join(broadcast(dim), Seq("user_id"))
-          .groupBy(col("cohort"))
-          .agg(count(lit(1)).as("n"), sumExact(col("value")).as("total"))
-          .writeStream.outputMode("complete").format("memory").queryName(qn)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.stop()
-      }
-      s.table(qn).orderBy(col("cohort"))
-    }),
-
-    // ----- foreachBatch exactly-once ingest, driver-gated: the normalized
-    // records spooled once, then the SAME input replayed through TWO
-    // foreachBatch runs (fresh checkpoint each — the crash-and-reprocess
-    // case) into one partitioned store. The anti-join in Ingest must make
-    // the second run append NOTHING, so the store equals a single load —
-    // which is exactly what the oracle computes (hash + first-wins dedup,
-    // the s7_fact_load shape without the star-key joins).
-    "stream_ingest_exactly_once" -> ((s, dir) => {
-      val recs = IdaMart.records(s, dir)
-      // spool staging is harness setup (a Spool): built once per
-      // sf dir, so bench iterations re-run the ingest, not the stage write
-      val inDir = ingestRecordsSpool(s, dir)
-      val factDir = scratchDir("ingest-store") + "/fact"
-      def replay(): Unit = {
-        val cp = scratchDir("ingest-cp")
-        val q = graft.streaming.Ingest.start(
-          s.readStream.schema(recs.schema).parquet(inDir), factDir, cp)
-        q.processAllAvailable(); q.stop()
-      }
-      withStatePartitions(s, 8) { replay(); replay() }
-      s.read.parquet(factDir)
-        .select(col("ano_mes"), col("grupo_economico"), col("servico"),
-          col("variavel"), col("valor").cast("double").as("valor"),
-          col("arquivo_origem"), col("linha_origem"), col("hash_registro"))
-        .orderBy(col("hash_registro"))
-    }),
-
-    // ----- keyed-snapshot reconciliation (data diff): two per-user
-    // latest-state snapshots built from disjoint halves of the event
-    // window, diffed on the key — output bounded by the CHANGE set
-    // (StoreDiff scaladoc). All three statuses populated by construction.
-    "s_store_diff" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      def latest(df: DataFrame) = df
-        .withColumn("__rn", row_number().over(
-          Window.partitionBy(col("user_id"))
-            .orderBy(col("ts").desc, col("event_id").desc)))
-        .filter(col("__rn") === 1)
-        .select(col("user_id"), col("value"), col("event_id"))
-      val cut = lit("2024-01-16").cast("timestamp")
-      graft.operators.StoreDiff.diff(
-          latest(ev.filter(col("ts") < cut)),
-          latest(ev.filter(col("ts") >= cut)),
-          keys = Seq("user_id"), valueCols = Seq("value", "event_id"))
-        .orderBy(col("user_id"))
-    }),
-
-    // ----- small-file compaction (the OPTIMIZE maintenance op): the fact
-    // store fragmented across two separate fan-out appends, then
-    // compacted to one file per year partition with a staged
-    // rewrite-and-swap (Sinks.compactFact). The gate is content identity
-    // through the rewrite; ScaleSpec asserts the file-count collapse
-    "s_compaction" -> ((s, dir) => {
-      val deduped = IdaMart.firstWinsDedup(
-        IdaMart.hashRecords(IdaMart.records(s, dir)),
-        Seq("hash_registro"), Seq("arquivo_origem", "linha_origem"))
-      val factDir = scratchDir("compact-store") + "/fact"
-      (0 until 2).foreach { i =>
-        graft.sources.Sinks.writeFactPartitioned(
-          deduped.filter(pmod(col("linha_origem"), lit(2)) === i),
-          factDir, mode = "append")
-      }
-      graft.sources.Sinks.compactFact(s, factDir, filesPerYear = 1)
-      graft.sources.Sinks.readFact(s, factDir)
-        .select(col("ano_mes"), col("grupo_economico"), col("servico"),
-          col("variavel"), col("valor").cast("double").as("valor"),
-          col("arquivo_origem"), col("linha_origem"), col("hash_registro"))
-        .orderBy(col("hash_registro"))
-    }),
-
-    // ----- TPC-H Q6 shape: tight-range forecast-revenue scan — every
-    // predicate pushes into the parquet scan, the agg is one decimal sum
-    "q6_forecast_revenue" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-          col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-        .agg(sumExact(col("l_extendedprice") * col("l_discount"))
-          .as("revenue"))),
-
-    // ----- TPC-H Q7 shape: bilateral trade volume between two nations by
-    // ship year — two broadcast nation lookups on opposite sides of the
-    // fact, the big joins shuffle on their natural keys
-    "q7_nation_volume" -> ((s, dir) => {
-      val n = Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"))
-      val pair = Seq("NATION_1", "NATION_2")
-      Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(Tables.supplier(s, dir), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(n.select(col("n_nationkey").as("__snk"),
-          col("n_name").as("supp_nation"))), col("s_nationkey") === col("__snk"))
-        .join(broadcast(n.select(col("n_nationkey").as("__cnk"),
-          col("n_name").as("cust_nation"))), col("c_nationkey") === col("__cnk"))
-        .filter(col("supp_nation").isin(pair: _*) &&
-          col("cust_nation").isin(pair: _*) &&
-          col("supp_nation") =!= col("cust_nation"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).as("l_year"))
-        .agg(sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .as("volume"))
-        .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-    }),
-
-    // ----- TPC-H Q10 shape: returned-item revenue per customer, top 20 —
-    // deterministic under the (revenue DESC, custkey) total order;
-    // TakeOrdered carries only 20 rows per partition to the driver
-    "q10_returned_items" -> ((s, dir) =>
-      Tables.customer(s, dir)
-        .join(Tables.orders(s, dir), col("c_custkey") === col("o_custkey"))
-        .join(Tables.lineitem(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(Tables.nation(s, dir)),
-          col("c_nationkey") === col("n_nationkey"))
-        .filter(col("l_returnflag") === "R" &&
-          col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
-        .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-        .agg(sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)),
-
-    // ----- TPC-H Q15 shape: the top supplier(s) by period revenue — the
-    // max is a broadcast 1-row frame, not a second scan of lineitem
-    "q15_top_supplier" -> ((s, dir) => {
-      // checkpointed: the per-supplier revenue frame (bounded by supplier
-      // count) feeds BOTH the max probe and the join — without it the
-      // lineitem scan+agg subtree would execute twice
-      val revenue = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
-        .groupBy(col("l_suppkey"))
-        .agg(sumExact(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .as("total_revenue"))
-        .localCheckpoint(true)
-      val top = revenue.agg(max(col("total_revenue")).as("__max"))
-      Tables.supplier(s, dir)
-        .join(revenue, col("s_suppkey") === col("l_suppkey"))
-        .crossJoin(broadcast(top))
-        .filter(col("total_revenue") === col("__max"))
-        .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
-        .orderBy(col("s_suppkey"))
-    }),
-
-    // ----- referential-integrity audit: orphan foreign keys counted per
-    // relation edge in one pass each — the data-quality check a mart load
-    // runs before trusting its joins. Anti-join probes read only the key
-    // columns (column pruning); counts assemble into one metadata-sized
-    // report
-    // ----- k-anonymity / l-diversity audit (Sweeney 2002; Machanavajjhala
-    // 2006): per quasi-identifier group, size + distinct sensitive values
-    // + the k-anonymous verdict — the relational privacy gate a curated
-    // dataset passes before release (Privacy scaladoc; one hash-partial
-    // aggregate, no windows/joins). QI here = (nation, market segment),
-    // sensitive = account balance, k = 10.
-    "privacy_k_anonymity" -> ((s, dir) =>
-      graft.operators.Privacy.kAnonymityAudit(Tables.customer(s, dir),
-          Seq("c_nationkey", "c_mktsegment"), "c_acctbal", k = 10)
-        .orderBy(col("c_nationkey"), col("c_mktsegment"))),
-
-    // ----- ε-DP count release: Laplace mechanism with deterministic
-    // inverse-CDF noise from the hash-derived uniform (the Gumbel-trick
-    // discipline of corpus_dsir_resample) — the ln is FixedLog integer
-    // arithmetic (engine-exact), DECIMAL(18,6) by integer quantization
-    "privacy_dp_laplace" -> ((s, dir) =>
-      graft.operators.Privacy.dpLaplaceCounts(Tables.documents(s, dir),
-          "lang", epsilon = 0.5)
-        .orderBy(col("lang"))),
-
-    "audit_orphans" -> ((s, dir) => {
-      def orphans(name: String, child: DataFrame, fk: String,
-                  parent: DataFrame, pk: String) =
-        child.select(col(fk).as("k"))
-          .join(parent.select(col(pk).as("k")), Seq("k"), "left_anti")
-          .agg(count(lit(1)).as("n_orphans"))
-          .select(lit(name).as("relation"), col("n_orphans"))
-      orphans("lineitem->orders", Tables.lineitem(s, dir), "l_orderkey",
-          Tables.orders(s, dir), "o_orderkey")
-        .unionByName(orphans("orders->customer", Tables.orders(s, dir),
-          "o_custkey", Tables.customer(s, dir), "c_custkey"))
-        .unionByName(orphans("customer->nation", Tables.customer(s, dir),
-          "c_nationkey", Tables.nation(s, dir), "n_nationkey"))
-        .orderBy(col("relation"))
-    }),
-
-    // ----- out-of-orderness profile: how late each event arrives behind
-    // the running event-time high-watermark of its type, in ARRIVAL
-    // (event_id) order — the measurement that sizes a streaming
-    // watermark. One window shuffle; everything else is arithmetic on
-    // epoch-µs integers (identical frames in both engines)
-    "stream_lateness_profile" -> ((s, dir) => {
-      val w = Window.partitionBy(col("event_type")).orderBy(col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      Tables.events(s, dir)
-        .withColumn("ts_us", unix_micros(col("ts")))
-        .withColumn("late_us",
-          greatest(coalesce(max(col("ts_us")).over(w) - col("ts_us"), lit(0L)),
-            lit(0L)))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          count(when(col("late_us") > 30L * 60 * 1000 * 1000, lit(1)))
-            .as("n_late_30m"),
-          max(col("late_us")).as("max_late_us"))
-        .orderBy(col("event_type"))
-    }),
-
-    // ----- incrementally-maintained aggregate view (MatView): the stream
-    // replayed TWICE from fresh checkpoints over the same spool — the
-    // batch-id anti-join must keep partials single-counted, and the
-    // recombined view must equal the one-shot batch aggregate (oracle)
-    "stream_matview" -> ((s, dir) => {
-      val spool = eventsTumble(s, dir)
-      val storeDir = scratchDir("matview") + "/view"
-      def replay(): Unit = {
-        val cp = scratchDir("matview-cp")
-        val q = graft.streaming.MatView.start(
-          graft.streaming.EventsStream.readEvents(s, spool), storeDir, cp)
-        q.processAllAvailable(); q.stop()
-      }
-      withStatePartitions(s, 4) { replay(); replay() }
-      graft.streaming.MatView.readView(s, storeDir)
-        .orderBy(col("event_type"), col("day"))
-    }),
-
-    // ----- star-contraction gate: a planted CHAIN pair graph (consecutive
-    // doc-id ranks, broken every 50 ranks) whose diameter far exceeds the
-    // propagation budget — connectedComponents MUST take the
-    // large-star/small-star fallback (Cluster.starContract), the code path
-    // that saves a pathological graph at 100 TB. Oracle = min doc_id per
-    // 50-rank segment (chains follow rank order by construction).
-    "dedup_cluster_chain" -> ((s, dir) => {
-      val n = Tables.documents(s, dir).select(col("doc_id"))
-        .withColumn("rn", row_number().over(Window.orderBy(col("doc_id"))))
-      val a = n.select(col("doc_id").as("a"), col("rn"))
-      val b = n.select(col("doc_id").as("b"), (col("rn") - 1).as("rn"))
-      // pair rank r with r+1 except across 50-rank boundaries -> chains of
-      // length 50, diameter 49 >> maxIters=1: the one propagation round
-      // proves non-convergence at minimum cost, then the star fallback does
-      // the actual work (which is the code path under test)
-      val pairs = a.join(b, Seq("rn")).filter(col("rn") % 50 =!= 0)
-        .select(col("a"), col("b"))
-      Cluster.connectedComponents(pairs, maxIters = 1)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- subword token budgets: BPE token counting as a chain of
-    // codegen'd string expressions — no UDF, no explode, scan-bound at any
-    // scale (Bpe scaladoc); the oracle restates the identical merge chain
-    // ----- BPE merge TRAINING (Sennrich 2016): learn the merge table from
-    // the corpus — one corpus pass builds the word-frequency dictionary,
-    // each round is a pair-count aggregate + argmax over the dictionary
-    // only (Bpe.trainMerges scaladoc); the oracle unrolls the identical
-    // rounds with data-dependent replaces. 8 rounds keeps the unrolled
-    // oracle readable while exercising multi-level merges (later ranks
-    // consume earlier ranks' products).
-    "text_bpe_train" -> ((s, dir) => {
-      import s.implicits._
-      graft.functions.Bpe.trainMerges(Tables.documents(s, dir), rounds = 8)
-        .zipWithIndex
-        .map { case ((a, b, n), i) => (i + 1, a, b, n) }
-        .toDF("merge_rank", "lhs", "rhs", "n")
-        .orderBy(col("merge_rank"))
-    }),
-
-    // ----- unigram-LM tokenizer training, one hard-EM step (Kudo 2018 —
-    // the SentencePiece family next to BPE's merge training): substring
-    // seed model -> Viterbi segmentation of the DISTINCT-word frame ->
-    // re-estimated subword probabilities. Exact micro-nat DP in a native
-    // expression; the oracle unrolls the identical DP over positions
-    // (Unigram scaladoc)
-    "text_unigram_step" -> ((s, dir) =>
-      graft.operators.Unigram.emStep(Tables.documents(s, dir))),
-
-    // ----- the EM loop iterated (2 rounds, kmeans_converged pairing):
-    // model re-estimates from round-1 counts with the add-1 character
-    // floor (Kudo's alphabet-closure requirement), then re-segments
-    "text_unigram_em" -> ((s, dir) =>
-      graft.operators.Unigram.emTrain(Tables.documents(s, dir), rounds = 2)),
-
-    // ----- APPLY the EM-trained unigram tokenizer: per-document token
-    // counts under the 2-round model — train and apply now both gated
-    // (the BPE family's tokenCount/bpeTrain pairing). Distinct words
-    // segment once; documents join multiplicities back (Unigram
-    // .tokenCounts scaladoc); oracle reads counts off the final round's
-    // backtrack hops
-    "text_unigram_tokens" -> ((s, dir) =>
-      graft.operators.Unigram.tokenCounts(
-        Tables.documents(s, dir), "doc_id", "text", rounds = 2)),
-
-    "text_bpe_tokens" -> ((s, dir) =>
-      Tables.documents(s, dir).filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          graft.functions.Bpe.tokenCount(col("text")).as("n_bpe_tokens"))
-        .orderBy(col("doc_id"))),
-
-    // ----- tokenizer fertility audit: tokens-per-word (fertility) and
-    // chars-per-token (compression) per language — the standard check
-    // that a tokenizer doesn't tax some languages with 3x the sequence
-    // length (Rust et al., ACL 2021). One corpus scan, map-side partial
-    // aggregation into ~|langs| groups; ratios as exact integer millis
-    // (positive-long `div` == DuckDB `//`, no float divergence channel)
-    "tokenizer_fertility" -> ((s, dir) => {
-      val perDoc = Tables.documents(s, dir).filter(col("text").isNotNull)
-        .select(col("lang"),
-          graft.functions.Bpe.tokenCount(col("text")).cast("long").as("bpe"),
-          TextFns.tokenCount(col("text")).cast("long").as("words"),
-          length(col("text")).cast("long").as("chars"))
-      perDoc.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("bpe")).as("bpe_tokens"),
-          sum(col("words")).as("words"),
-          sum(col("chars")).as("chars"))
-        .select(col("lang"), col("n_docs"), col("bpe_tokens"), col("words"),
-          col("chars"),
-          expr("(bpe_tokens * 1000) div words").as("fertility_milli"),
-          expr("(chars * 1000) div bpe_tokens").as("chars_per_token_milli"))
-        .orderBy(col("lang"))
-    }),
-
-    // ----- WordPiece (BERT-style) greedy MaxMatch segmentation — the
-    // third tokenizer family next to BPE and the unigram LM. Segments
-    // DISTINCT words only (cost ∝ corpus vocabulary, not corpus size),
-    // joins word frequencies back for piece counts (functions/WordPiece
-    // scaladoc; the oracle replays the greedy fold as a recursive CTE)
-    "text_wordpiece" -> ((s, dir) =>
-      graft.functions.WordPiece.pieceCounts(
-        Tables.documents(s, dir), "text", k = 40)),
-
-    // ----- BM25 ranked retrieval (corpus search next to the ANN family):
-    // narrow per-doc tf columns, one broadcast stats row, top-k — no
-    // corpus-wide token explode/shuffle (Retrieval scaladoc)
-    "text_bm25_topk" -> ((s, dir) =>
-      graft.operators.Retrieval.bm25TopK(Tables.documents(s, dir),
-          "doc_id", "text", terms = Seq("vector", "join", "stream"), k = 20)
-        .orderBy(col("score_r").desc, col("doc_id"))),
-
-    // ----- dedup-aware retrieval: the serving-time composition of ranked
-    // search and near-dup resolution — top-k results that never show two
-    // near-duplicates (one representative per cluster, the best-scored
-    // one). BM25 candidates (k=40) joined to the connected-components
-    // cluster reps; rank-1 per cluster survives; final top-10. Everything
-    // composes from driver-green machinery (bm25TopK, the spooled
-    // verified pairs, Cluster.connectedComponents); the candidate frame
-    // is k rows, so the window and join cost nothing at any corpus scale
-    "text_dedup_topk" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      val scored = graft.operators.Retrieval.bm25TopK(
-          docs.unionByName(perturbed), "doc_id", "text",
-          terms = Seq("vector", "join", "stream"), k = 40)
-        .select(col("doc_id"), col("score_r"))
-      // staged CC labels (clusterRepsSpool) — dedup_cluster measures CC
-      val reps = s.read.parquet(clusterRepsSpool(s, dir))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("rep"))
-        .orderBy(col("score_r").desc, col("doc_id"))
-      scored.join(reps, Seq("doc_id"), "left")
-        .withColumn("rep", coalesce(col("cluster_rep"), col("doc_id")))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select(col("doc_id"), col("rep").as("cluster_rep"), col("score_r"))
-        .orderBy(col("score_r").desc, col("doc_id"))
-        .limit(10)
-    }),
-
-    // ----- passage retrieval (the RAG serving shape): BM25 over CHUNKS
-    // instead of whole documents — a long document's one relevant passage
-    // outranks a short document's diffuse mentions, and the result carries
-    // (doc_id, chunk_idx) provenance for citation. Chunking and scoring
-    // compose from the gated text_chunk + text_bm25_topk machinery; the
-    // synthetic chunk_id (doc_id * 10^6 + chunk_idx) gives BM25 its total
-    // tie-break order and splits back losslessly (chunk counts are
-    // window/stride-bounded far below 10^6)
-    "rag_chunk_topk" -> ((s, dir) => {
-      val chunks = Reshape.chunkTokens(Tables.documents(s, dir),
-          "doc_id", "text", window = 64, stride = 48)
-        .select((col("doc_id") * 1000000L + col("chunk_idx")).as("chunk_id"),
-          col("chunk_text"))
-      graft.operators.Retrieval.bm25TopK(chunks, "chunk_id", "chunk_text",
-          terms = Seq("vector", "join", "stream"), k = 20)
-        .select(col("chunk_id"),
-          expr("chunk_id div 1000000").as("doc_id"),
-          expr("chunk_id % 1000000").as("chunk_idx"),
-          col("dl"), col("tf_vector"), col("tf_join"), col("tf_stream"),
-          col("score_r"))
-        .orderBy(col("score_r").desc, col("chunk_id"))
-    }),
-
-    // ----- hybrid retrieval: reciprocal-rank fusion (Cormack 2009) of
-    // the BM25 lexical top-20 and the cosine-ANN semantic top-20 for one
-    // query (terms + vec 0) — the serving-side merge of the two ranking
-    // families this engine already gates separately. Ranks are recomputed
-    // over the ROUNDED lexical score (deterministic tie-break by id), the
-    // fusion is exact rank arithmetic (Retrieval.rrfFuse scaladoc).
-    "text_hybrid_rrf" -> ((s, dir) => {
-      val lex = graft.operators.Retrieval.bm25TopK(Tables.documents(s, dir),
-          "doc_id", "text", terms = Seq("vector", "join", "stream"), k = 20)
-        .select(col("doc_id"), row_number().over(
-            Window.orderBy(col("score_r").desc, col("doc_id")))
-          .as("lex_rank"))
-      val embs = Tables.embeddings(s, dir)
-      val sem = Similarity.bruteForceTopK(embs,
-          embs.filter(col("vec_id") === 0)
-            .select(col("vec_id").as("query_id"),
-              col("embedding").as("q_embedding")), k = 20)
-        .select(col("vec_id").as("doc_id"), col("rank").as("sem_rank"))
-      graft.operators.Retrieval.rrfFuse(lex, sem, "doc_id",
-          "lex_rank", "sem_rank", k = 10)
-        .orderBy(col("rrf").desc, col("doc_id"))
-    }),
-
-    // ----- PMI collocations (Church & Hanks 1990): top multiword
-    // expressions by pointwise mutual information with a support floor —
-    // vocabulary-bounded aggregates, TakeOrdered top-k (Retrieval scaladoc)
-    "text_collocations" -> ((s, dir) =>
-      graft.operators.Retrieval.collocationsTopK(
-        Tables.documents(s, dir), "doc_id", "text", minCount = 5, k = 30)),
-
-    // ----- product quantization: per-subspace Lloyd-trained codebooks,
-    // integer codes per (vector, subspace) — the billion-vector
-    // compression path next to IVF (Pq scaladoc)
-    "pq_encode" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      // codebooks train on a deterministic FNV quarter-sample, the full
-      // corpus is encoded (same discipline as ann_ivfpq_topk)
-      val books = graft.operators.Pq.train(
-        graft.operators.Pq.trainSample(embs, "vec_id", 3L),
-        m = 4, k = 8, iters = 1)
-      graft.operators.Pq.encode(embs, books, m = 4)
-        .orderBy(col("vec_id"), col("subspace"))
-    }),
-
-    // ----- PQ asymmetric-distance search: query x codebook lookup table,
-    // decimal-carrier distance sums over stored codes — floats never
-    // re-read at search time
-    "ann_pq_topk" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val books = graft.operators.Pq.train(
-        graft.operators.Pq.trainSample(embs, "vec_id", 3L),
-        m = 4, k = 8, iters = 1)
-      val codes = graft.operators.Pq.encode(embs, books, m = 4)
-      // cast-then-collect instead of getSeq[Float]: stays correct if the
-      // fixture's element type ever becomes double (float->double is exact,
-      // so values are unchanged either way — the r8 events-encoding lesson)
-      val qvec = embs.filter(col("vec_id") === 3L)
-        .select(col("embedding").cast("array<double>"))
-        .head().getSeq[Double](0).toSeq
-      graft.operators.Pq.adcTopK(codes, books, qvec, m = 4, k = 50)
-    }),
-
-    // ----- IVF-PQ: TRAINED coarse cells (2 Lloyd rounds) prune candidates,
-    // ADC over 2-iter-trained PQ codes ranks them — the billion-vector
-    // serving layout (Pq scaladoc); the oracle unrolls the same training
-    // rounds. The index (quantizers + cell-partitioned codes) is built
-    // ONCE per sfDir as a Spool: index construction
-    // is the offline build pass of a vector-serving system, not part of
-    // the per-query serving cost, and training is deterministic so the
-    // staged index is value-identical on every call. The query fn then
-    // measures the real serving path — probe, partition-pruned code read,
-    // broadcast-LUT ADC. (ann_ivf_indexed keeps its build in-query as the
-    // honest build+probe cost; this entry is the serve-many-queries shape.)
-    "ann_ivfpq_topk" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val queries = embs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-      graft.operators.Pq.ivfPqTopKIndexed(ivfPqIndex(s, dir), queries, k = 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ----- index-quality measurement for the IVF-PQ serving path: the
-    // same recall@5-vs-brute-truth discipline as ann_recall_report, so the
-    // indexed path's approximation (coarse-cell pruning + ADC ranking) is
-    // quantified like LSH's — the number that decides nProbe/m before an
-    // index ships. Ground truth stays top-k-bounded, never all-pairs.
-    // Measured ~0.18 mean recall@5 on this fixture: UNIFORM-RANDOM vectors
-    // are PQ's worst case (no cluster structure for the 4x8 codebook to
-    // exploit), so the report correctly shows quantization error dominating
-    // — exactly the signal that tells an operator to raise m/nProbe or
-    // re-rank with exact distances before shipping this config.
-    "ann_ivfpq_recall_report" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val queries = embs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").as("q_embedding"))
-      val brute = Similarity.bruteForceTopK(embs, queries, k = 5)
-        .select(col("query_id"), col("vec_id"))
-      val approx = graft.operators.Pq
-        .ivfPqTopKIndexed(ivfPqIndex(s, dir), queries, k = 5)
-        .select(col("query_id"), col("vec_id"))
-      val hits = brute.join(approx, Seq("query_id", "vec_id"), "left_semi")
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_hits"))
-      queries.select(col("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double") / lit(5.0))
-            .as("recall_at_5"))
-        .orderBy(col("query_id"))
-    }),
-
-    // ----- correlation/covariance from EXACT decimal sums: native corr()
-    // accumulates doubles in partition order (non-deterministic across
-    // cluster sizes and engines); the moment sums (Σx, Σy, Σxy, Σx², Σy²)
-    // are exact in the decimal carrier, so the derived statistics are
-    // bit-identical at any partition count — the same determinism contract
-    // as every other aggregate here
-    "a_corr_stats" -> ((s, dir) => {
-      val x = col("l_quantity")
-      val y = col("l_extendedprice")
-      val n = col("n").cast("double")
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-          sumExact(x).as("sx"), sumExact(y).as("sy"),
-          sumExact(x * y).as("sxy"),
-          sumExact(x * x).as("sxx"), sumExact(y * y).as("syy"))
-        .select(col("l_returnflag"),
-          col("n"),
-          round((col("sxy") / n - col("sx") / n * (col("sy") / n)), 6)
-            .as("covar_pop"),
-          round((col("sxy") / n - col("sx") / n * (col("sy") / n)) /
-            (sqrt(col("sxx") / n - (col("sx") / n) * (col("sx") / n)) *
-             sqrt(col("syy") / n - (col("sy") / n) * (col("sy") / n))), 6)
-            .as("corr"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // ----- Welch's unequal-variance t-test (Welch 1947) — the mean-shift
-    // companion to a_ks_test's distribution-shape test: one conditional-
-    // aggregation pass collects both groups' exact moments (counts +
-    // decimal-carrier sums of x and x*x — the a_corr_stats discipline),
-    // then t, the Welch-Satterthwaite dof, and the alpha=.05 decision are
-    // a fixed IEEE op tree on bit-identical doubles, emitted RAW. One
-    // scan, one 1-row reduce — trivially 100-TB-shaped
-    // ----- Poisson bootstrap of the mean (Chamandy et al. 2012): all 32
-    // deterministic resamples off ONE scan as stacked aggregates; weights
-    // are Poisson(1) draws from pinned-integer hash thresholds (the DSIR
-    // Gumbel discipline), value carrier is exact cents — the only float
-    // op is the final BIGINT/BIGINT mean division (Drift scaladoc)
-    "a_bootstrap_poisson" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .filter(col("event_type") === "purchase" && col("value").isNotNull)
-        .select(col("event_id"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("v_cents"))
-      graft.operators.Drift.poissonBootstrapMeans(ev, "event_id", "v_cents",
-        b = 32)
-    }),
-
-    "a_welch_ttest" -> ((s, dir) => {
-      // EXACT-INTEGER moments in anchored cents: prices are 2-decimal, so
-      // xi = floor(x*100 + 0.5) - 5_000_000 is an exact BIGINT identical
-      // on both engines (multiply/add correctly rounded on identical
-      // doubles, floor exact). Two earlier float formulations MEASURABLY
-      // diverged here: scale-6 decimal sums of raw squares exceed 2^53
-      // unscaled (the a_linreg decimal->double rule), and a /2^10-scaled
-      // variant mass-produced exact scale-6 ties (x/1024 has 6 fractional
-      // bits) where Spark's string-based decimal cast and DuckDB's binary
-      // rounding disagree. Integer moments dodge both: sums are BIGINT /
-      // DECIMAL(,0) — scale-0 casts to double are plain integer
-      // conversions, correctly rounded everywhere. t/dof are shift/scale
-      // invariant; means map back at emission
-      val xi = (floor(col("l_extendedprice") * lit(100.0) + lit(0.5))
-        .cast("long") - lit(5000000L))
-      val fA = col("l_returnflag") === "A"
-      val fR = col("l_returnflag") === "R"
-      val m = Tables.lineitem(s, dir)
-        .filter(col("l_returnflag").isin("A", "R"))
-        .agg(
-          count(when(fA, lit(1))).cast("double").as("n1"),
-          count(when(fR, lit(1))).cast("double").as("n2"),
-          sum(when(fA, xi)).cast("double").as("sx1"),
-          sum(when(fR, xi)).cast("double").as("sx2"),
-          sum(when(fA, (xi * xi).cast("decimal(20,0)"))).cast("double")
-            .as("sxx1"),
-          sum(when(fR, (xi * xi).cast("decimal(20,0)"))).cast("double")
-            .as("sxx2"))
-      val mu1 = col("sx1") / col("n1"); val mu2 = col("sx2") / col("n2")
-      val v1 = (col("sxx1") - col("sx1") * col("sx1") / col("n1")) /
-        (col("n1") - lit(1.0))
-      val v2 = (col("sxx2") - col("sx2") * col("sx2") / col("n2")) /
-        (col("n2") - lit(1.0))
-      val se1 = v1 / col("n1"); val se2 = v2 / col("n2")
-      // t and dof computed entirely in the scaled units (both are
-      // shift/scale invariant statistics); means mapped back at emission
-      val t = (mu1 - mu2) / sqrt(se1 + se2)
-      val dof = (se1 + se2) * (se1 + se2) /
-        (se1 * se1 / (col("n1") - lit(1.0)) +
-          se2 * se2 / (col("n2") - lit(1.0)))
-      m.select(col("n1").cast("long").as("n1"),
-        col("n2").cast("long").as("n2"),
-        (mu1 / lit(100.0) + lit(50000.0)).as("mean1"),
-        (mu2 / lit(100.0) + lit(50000.0)).as("mean2"),
-        t.as("t_stat"), dof.as("dof"),
-        (abs(t) > lit(1.96)).as("reject_h0"))
-    }),
-
-    // ----- two-sample Kolmogorov-Smirnov drift test, EXACT: D =
-    // max_x |F1(x) - F2(x)| restated over the common denominator n1*n2,
-    // so the scan maximizes the INTEGER |c1*n2 - c2*n1| (c_i = cumulative
-    // counts at each distinct value) and divides once at emission — IEEE
-    // division of exact integers is correctly rounded, so ks_d is
-    // bit-identical across engines with no carrier needed (all magnitudes
-    // < 2^53 by construction: counts x counts). The decision bound is the
-    // classic large-sample critical value c(.05)*sqrt((n1+n2)/(n1*n2)) —
-    // sqrt is IEEE-exact on both engines. Shape: one value-keyed count
-    // aggregate, one global cumsum window (at 100 TB: the two-pass
-    // range-partitioned prefix-sum restatement, same note as
-    // w_abc_classification), one 1-row broadcast of totals. Complements
-    // quality_kl_drift (binned, distributional) with the exact
-    // order-statistic test a feature-drift monitor actually runs
-    "a_ks_test" -> ((s, dir) =>
-      graft.operators.Drift.ksTest(
-        Tables.orders(s, dir)
-          .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW")),
-        value = col("o_totalprice"),
-        isA = col("o_orderpriority") === "1-URGENT")),
-
-    // ----- Pearson chi-squared independence test, EXACT: each cell term
-    // restated over the common denominator as (O*N - R*C)^2 * 10^6 div
-    // (N*R*C) in DECIMAL(38,0) integral arithmetic — bit-identical on any
-    // engine by construction (the a_ks_test/a_welch_ttest discipline for
-    // CATEGORICAL drift). One corpus-wide count aggregate; all remaining
-    // math on the category-bounded cell grid. Critical value is
-    // chi2(.05, dof=8) for the 5x3 grid, in micro-units
-    "a_chi2_test" -> ((s, dir) =>
-      graft.operators.Drift.chi2Test(
-        Tables.events(s, dir)
-          .filter(col("event_type").isNotNull && col("value").isNotNull),
-        rowKey = col("event_type"),
-        colKey = when(col("value") < 100.0, "low")
-          .when(col("value") < 300.0, "mid").otherwise("high"),
-        critMicro = 15507313L)
-        .orderBy(col("rk"), col("ck"))),
-
-    // ----- Cramér's V effect size over the same contingency grid: at
-    // corpus scale ANY dependence is chi2-significant, so the monitor
-    // thresholds association STRENGTH — v2 stays integer micro-units
-    // (chi2_micro div (n*min(r-1,c-1))); the one emitted v is a single
-    // IEEE sqrt of that exact integer
-    "a_cramers_v" -> ((s, dir) =>
-      graft.operators.Drift.cramersV(
-        Tables.events(s, dir)
-          .filter(col("event_type").isNotNull && col("value").isNotNull),
-        rowKey = col("event_type"),
-        colKey = when(col("value") < 100.0, "low")
-          .when(col("value") < 300.0, "mid").otherwise("high"))),
-
-    // ----- first-digit Benford conformance audit (Newcomb 1881, Benford
-    // 1938) — the classic fabricated-data screen for financial columns:
-    // expected digit shares are the NINE shared micro-literals
-    // round(log10(1+1/d)*1e6) (they telescope to exactly 1e6), the grid
-    // is completed to all nine digits, and the chi2-style statistic is
-    // exact integer micro-units end-to-end (DECIMAL(38,0)/HUGEINT
-    // squares, one integral div per digit — the a_chi2_test discipline)
-    "audit_benford" -> ((s, dir) => {
-      import s.implicits._
-      val probs = Seq(301030L, 176091L, 124939L, 96910L, 79181L, 66947L,
-        57992L, 51153L, 45757L)
-      val counts = Tables.orders(s, dir)
-        .select(substring(floor(col("o_totalprice")).cast("long")
-          .cast("string"), 1, 1).cast("int").as("digit"))
-        .groupBy(col("digit")).agg(count(lit(1)).as("o"))
-      val digits = (1 to 9).map(d => (d, probs(d - 1)))
-        .toDF("digit", "p_micro")
-      // the chi2 base is the count of rows with a SIGNIFICANT leading
-      // digit (the 1-9 grid) — summing ALL of `counts` would include
-      // digit-0/unparsable groups the grid never observes and silently
-      // diverge from the oracle's SUM over the grid
-      val grid0 = digits.join(counts, Seq("digit"), "left")
-        .select(col("digit"), col("p_micro"),
-          coalesce(col("o"), lit(0L)).as("o"))
-      val grid = grid0
-        .crossJoin(broadcast(grid0.agg(sum(col("o")).as("n"))))
-        .withColumn("e_micro", expr("CAST(n AS BIGINT) * p_micro"))
-        .withColumn("term_micro", expr(
-          "(CAST(o AS DECIMAL(38,0)) * 1000000 - e_micro) *" +
-          " (CAST(o AS DECIMAL(38,0)) * 1000000 - e_micro)" +
-          " div CAST(e_micro AS DECIMAL(38,0))"))
-      grid
-        .select(col("digit"), col("o"), col("e_micro"), col("term_micro"),
-          sum(col("term_micro"))
-            .over(Window.partitionBy()).as("chi2_micro"))
-        .withColumn("reject_h0", col("chi2_micro") > lit(15507313L))
-        .orderBy(col("digit"))
-    }),
-
-    // ----- the data-profiling FRONT DOOR (r12 judge ask 7): the whole
-    // audit family — Benford, chi2 + Cramér's V, histogram, heavy
-    // hitters, global stats — off ONE scan of orders via a single
-    // grouping-sets aggregation (Expand feeds partial aggs of bounded
-    // cardinality, so map-side combine collapses it before the one
-    // shuffle; scan IO paid once — the first call a curation user makes)
-    "profile_all" -> ((s, dir) =>
-      graft.operators.Profile.profileAll(Tables.orders(s, dir),
-        priceCol = "o_totalprice", catCol = "o_orderpriority",
-        keyCol = "o_custkey")),
-
-    // ----- corpus-curation session report (r13 judge stretch 7): the one
-    // artifact a data engineer hands to a pretraining lead — per section
-    // (profile / quality / dedup / contamination), exact BIGINT counts off
-    // the ALREADY-GATED operators, each component invoked exactly once and
-    // reduced by exactly one aggregate, stacked to (section, metric,
-    // value) rows and UNION'd. No new oracle primitive: every section's
-    // source frame is an individually driver-green gate, and the report
-    // only counts it (the bisectable-at-birth rule's composition case —
-    // the components ARE the stage diagnostics). CurationSpec asserts the
-    // composed plan scans `documents` exactly as often as the four
-    // components do standalone — composition re-computes nothing.
-    "curate_report" -> ((s, dir) => {
-      def stack(section: String, aggd: org.apache.spark.sql.DataFrame,
-                metrics: Seq[String]): org.apache.spark.sql.DataFrame =
-        aggd.select(explode(array(metrics.map(m =>
-            struct(lit(section).as("section"), lit(m).as("metric"),
-              col(m).cast("long").as("value"))): _*)).as("kv"))
-          .select(col("kv.section"), col("kv.metric"), col("kv.value"))
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("text"))
-      val dt = docs.select(col("doc_id"), col("text"))
-      val profile = stack("profile", docs.agg(
-          count(lit(1)).as("n_docs"),
-          count(when(col("text").isNull || trim(col("text")) === "", lit(1)))
-            .as("n_blank_or_null"),
-          countDistinct(col("lang")).as("n_langs"),
-          sum(length(col("text"))).as("total_chars")),
-        Seq("n_docs", "n_blank_or_null", "n_langs", "total_chars"))
-      val quality = stack("quality",
-        graft.operators.Repetition.fusedSignals(dt).agg(
-          count(lit(1)).as("n_scored"),
-          count(when(col("pass"), lit(1))).as("n_pass"),
-          count(when(coalesce(col("repetitive"), lit(false)), lit(1)))
-            .as("n_repetitive")),
-        Seq("n_scored", "n_pass", "n_repetitive"))
-      // dedup audits read the STAGED dedup-tier artifacts — the exact-tier
-      // frame (spooledExactDups: docs ∪ planted full copies, the
-      // dedup_exact corpus) and the verified near-dup pair frame
-      // (spooledNearDupPairs: docs ∪ word-perturbed copies at Jaccard
-      // ≥ 0.6, the dedup_minhash corpus) — NOT a re-derivation: in a
-      // production pipeline the dedup tiers materialize once and every
-      // consumer (clustering, survivor selection, this report) reads the
-      // artifact. The derivations stay measured in isolation by
-      // dedup_exact / dedup_minhash; staging is deterministic, so the
-      // counts are value-identical to the former inline recompute (which
-      // made the composite pay the whole shingle→band→verify pipeline
-      // over a doubled corpus on every run — the r15 verdict's
-      // curate_report perf flag).
-      val dedup = stack("dedup",
-        s.read.parquet(spooledExactDups(s, dir)).agg(
-            count(lit(1)).as("n_unique_texts"),
-            sum(col("n_copies") - 1).as("exact_dup_docs"))
-          .crossJoin(s.read.parquet(spooledNearDupPairs(s, dir))
-            .agg(count(lit(1)).as("near_dup_pairs"))),
-        Seq("n_unique_texts", "exact_dup_docs", "near_dup_pairs"))
-      val contamination = stack("contamination",
-        graft.operators.Decontaminate.overlap(
-            dt.filter(col("doc_id") % 97 =!= 0),
-            dt.filter(col("doc_id") % 97 === 0), n = 3)
-          .agg(count(lit(1)).as("n_contaminated_docs"),
-            sum(col("n_hits")).as("total_ngram_hits")),
-        Seq("n_contaminated_docs", "total_ngram_hits"))
-      // multimodal sections (r14 judge stretch 7): the report now covers
-      // the full modality matrix — per binary format, scrub verification
-      // counts (files, bytes removed, streams intact) off the gated
-      // metadata-strip operators plus the near-dup pair count off the
-      // gated LSH detectors; fixture staging is spool-memoized, so the
-      // composed report stages nothing the standalone gates haven't
-      val images = stack("images",
-        Multimodal.stripPngMetadata(s,
-            pngMeta(s, dir))
-          .toDF()
-          .agg(count(lit(1)).as("png_files"),
-            sum(col("bytes_removed")).as("png_bytes_removed"),
-            count(when(col("pixels_intact"), lit(1))).as("png_pixels_intact"))
-          .crossJoin(Multimodal.imageNearDupPairs(
-              Multimodal.ahashPngFiles(s,
-                  pngNearDup(s, dir))
-                .toDF().select(col("id"), col("ahash_a"), col("ahash_b")))
-            .agg(count(lit(1)).as("png_near_dup_pairs"))),
-        Seq("png_files", "png_bytes_removed", "png_pixels_intact",
-          "png_near_dup_pairs"))
-      val audio = stack("audio",
-        Multimodal.stripWavMetadata(s,
-            wavMeta(s, dir))
-          .toDF()
-          .agg(count(lit(1)).as("wav_files"),
-            sum(col("bytes_removed")).as("wav_bytes_removed"),
-            count(when(col("samples_intact"), lit(1))).as("wav_samples_intact"))
-          .crossJoin(Multimodal.imageNearDupPairs(
-              Multimodal.audioFingerprint(s,
-                  wavNearDup(s, dir))
-                .toDF().select(col("id"), col("ahash_a"), col("ahash_b")))
-            .agg(count(lit(1)).as("wav_near_dup_pairs"))),
-        Seq("wav_files", "wav_bytes_removed", "wav_samples_intact",
-          "wav_near_dup_pairs"))
-      profile.unionByName(quality).unionByName(dedup)
-        .unionByName(contamination).unionByName(images).unionByName(audio)
-        .orderBy(col("section"), col("metric"))
-    }),
-
-    // ----- Mann-Whitney U rank-sum test with midrank ties, EXACT in
-    // half-unit integers (2*midrank = 2*lt + eq + 1): the nonparametric
-    // mean-shift companion to a_welch_ttest, same sample split as
-    // a_ks_test; z is a mirrored IEEE tree over the exact integer
-    // moments, 2^53-guarded inside the emitted column
-    "a_mannwhitney" -> ((s, dir) =>
-      graft.operators.Drift.mannWhitneyU(
-        Tables.orders(s, dir)
-          .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW")),
-        value = col("o_totalprice"),
-        isA = col("o_orderpriority") === "1-URGENT")),
-
-    // ----- Spearman rank correlation per event_type (value vs time —
-    // the monotone-trend drift screen): exact integer midrank moments
-    // via the doubled-midrank trick, rho as a mirrored IEEE tree over
-    // BIGINT→double casts (correctly-rounded int64 conversions on both
-    // engines; no decimal-rescale risk)
-    "a_spearman" -> ((s, dir) =>
-      graft.operators.Drift.spearman(Tables.events(s, dir),
-          group = col("event_type"), x = col("ts"), y = col("value"))
-        .withColumnRenamed("g", "event_type")
-        .orderBy(col("event_type"))),
-
-    // ----- Cohen's d effect size, URGENT vs LOW order values — the
-    // "how big is the shift, in pooled standard deviations" companion to
-    // a_mannwhitney's rejection decision: integer-unit quantized BIGINT
-    // moments, one mirrored IEEE tree (int64->double casts are correctly
-    // rounded at any magnitude — no decimal-rescale divergence)
-    "a_cohens_d" -> ((s, dir) =>
-      graft.operators.Drift.cohensD(
-        Tables.orders(s, dir)
-          .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW")),
-        value = col("o_totalprice"),
-        isA = col("o_orderpriority") === "1-URGENT")),
-
-    // ----- Wilcoxon signed-rank on the calendar-paired click/purchase
-    // daily counts — the within-pair test completing the nonparametric
-    // battery (MW two-sample, KW k-sample, this one paired): doubled
-    // midranks over |diff|, zero diffs dropped, integer moments, the
-    // tie-corrected normal z as one mirrored IEEE tree
-    "a_wilcoxon" -> ((s, dir) =>
-      graft.operators.Drift.wilcoxonSignedRank(Tables.events(s, dir),
-        group = col("event_type"), ts = col("ts"),
-        keyA = "click", keyB = "purchase")),
-
-    // ----- Kruskal-Wallis H across the five event_type value
-    // distributions — the k-group extension of a_mannwhitney, completing
-    // the nonparametric family: exact doubled-midrank BIGINT moments off
-    // the value-keyed aggregate, the per-group square term floor-divided
-    // once in the decimal carrier (deterministic sub-ULP quantization —
-    // never a partition-ordered float sum), H and tie-corrected H as
-    // mirrored IEEE trees
-    "a_kruskal_wallis" -> ((s, dir) =>
-      graft.operators.Drift.kruskalWallis(Tables.events(s, dir),
-        group = col("event_type"), value = col("value"))),
-
-    // ----- Kendall tau-b per event_type between the daily count and the
-    // daily value mass — a_spearman's pairwise-ordering sibling, computed
-    // on the calendar-bounded daily frame so the quadratic pair stage is
-    // |days|² per group at ANY corpus scale; pair counts exact BIGINT,
-    // tau one mirrored IEEE tree at emission
-    "a_kendall_tau" -> ((s, dir) =>
-      graft.operators.Drift.kendallDaily(Tables.events(s, dir),
-          group = col("event_type"), ts = col("ts"), value = col("value"))
-        .withColumnRenamed("g", "event_type")
-        .orderBy(col("event_type"))),
-
-    // ----- Gini concentration of document length per lang (the corpus
-    // report's "how concentrated are the bytes" line): rank-weighted
-    // identity over the ascending sort, exact BIGINT moments, tie-order
-    // invariant by construction; one rank window + one hash aggregate
-    "a_gini" -> ((s, dir) =>
-      graft.operators.Drift.gini(Tables.documents(s, dir),
-          group = col("lang"), x = col("n_chars"), tie = col("doc_id"))
-        .withColumnRenamed("g", "lang")
-        .orderBy(col("lang"))),
-
-    // ----- daily-series autocorrelation at lags 1..7 per event_type (the
-    // seasonality/burst screen): calendar-joined lag pairs — missing days
-    // drop pairs, never mis-align — with exact BIGINT count moments and
-    // the spearman-style IEEE emission tree
-    "ts_acf" -> ((s, dir) =>
-      graft.operators.TimeSeries.acfDaily(Tables.events(s, dir),
-          group = col("event_type"), ts = col("ts"), maxLag = 7)
-        .withColumnRenamed("g", "event_type")
-        .orderBy(col("event_type"), col("lag"))),
-
-    // ----- lagged cross-correlation between the click and purchase daily
-    // series at signed lags -3..3 (ts_acf's two-series sibling — the
-    // lead/lag screen: the argmax lag estimates purchase's delay behind
-    // click); same calendar-join exactness story
-    "ts_cross_corr" -> ((s, dir) =>
-      graft.operators.TimeSeries.crossCorrDaily(Tables.events(s, dir),
-          group = col("event_type"), ts = col("ts"),
-          keyA = "click", keyB = "purchase", maxLag = 3)
-        .orderBy(col("lag"))),
-
-    // ----- keyed pseudonymization (GDPR Art. 4(5)): user ids replaced by
-    // seed-prefixed SHA-256 tokens — joins/group-bys still work on the
-    // token, re-identification needs the seed; NULL ids stay NULL, never
-    // a shared hash-of-empty bucket. Narrow codegen projection, no state
-    "privacy_pseudonymize" -> ((s, dir) =>
-      graft.operators.Privacy.pseudonymize(
-          Tables.events(s, dir)
-            .select(col("event_id"), col("user_id"), col("event_type")),
-          idCol = "user_id", seed = "graft-pii-v1")
-        .orderBy(col("event_id"))),
-
-    // ----- exact OLS per group from moment sums (the a_corr_stats
-    // discipline): slope/intercept/R^2 of value vs time computed from six
-    // decimal-carrier moments — native regr_slope accumulates doubles in
-    // partition order (non-deterministic); moment sums are exact decimals
-    // cast ONCE to double, the derived stats are a fixed IEEE op tree,
-    // and emission quantizes through the DECIMAL(18,6) carrier, never
-    // round(). One hash-partial groupBy at any scale
-    "a_linreg" -> ((s, dir) => {
-      // x = days since the dataset's FIRST day (integer, tens) — the
-      // anchor keeps every moment's decimal sum under 2^53 unscaled,
-      // where decimal->double casts are correctly rounded on BOTH
-      // engines (measured: scale-12 / epoch-day moments exceed that and
-      // DuckDB's unscaled-divide conversion drifts). Moments are exact:
-      // integer sums, scale-6 decimal sums, and decimal*int products —
-      // never a per-row decimal cast of a double product (also measured
-      // diverging: the cast itself is a tie-rounding site). Derived
-      // stats are a mirrored fixed IEEE op tree on bit-identical inputs,
-      // emitted RAW (a DECIMAL(18,6) cast of an arbitrary quotient can
-      // land a scale-7 tie where the engines' rounding styles disagree —
-      // the third measured divergence on this query). r^2 is deliberately
-      // absent: sum(y^2) needs scale-12 sums that break the 2^53 bound;
-      // correlation is gated by a_corr_stats
-      val base = Tables.events(s, dir)
-        .filter(col("ts").isNotNull && col("value").isNotNull)
-        .select(col("event_type"), to_date(col("ts")).as("day"),
-          col("value").as("y"))
-      val ev = base
-        .crossJoin(broadcast(base.agg(min(col("day")).as("__d0"))))
-        .select(col("event_type"),
-          datediff(col("day"), col("__d0")).as("xi"), col("y"))
-      val n = col("n").cast("double")
-      val sNum = n * col("sxy") - col("sx") * col("sy")
-      val sDen = n * col("sxx") - col("sx") * col("sx")
-      val slope = sNum / sDen
-      ev.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("xi")).cast("double").as("sx"),
-          sumExact(col("y")).as("sy"),
-          sum(dec(col("y")) * col("xi")).cast("double").as("sxy"),
-          sum((col("xi") * col("xi")).cast("long")).cast("double").as("sxx"))
-        .select(col("event_type"), col("n"),
-          slope.as("slope"),
-          ((col("sy") - slope * col("sx")) / n).as("intercept"))
-        .orderBy(col("event_type"))
-    }),
-
-    // ----- ranking window family: NTILE quartiles + percent_rank +
-    // cume_dist per event_type (deterministic: total order on
-    // (value, event_id) within each partition)
-    "w_rank_family" -> ((s, dir) => {
-      // explicit NULLS FIRST: Spark defaults ascending windows to NULLS
-      // FIRST but DuckDB to NULLS LAST — the gate must not depend on the
-      // fixture happening to contain no NULL values
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(col("value").asc_nulls_first, col("event_id"))
-      Tables.events(s, dir)
-        .filter(col("event_id") % 20 === 0)
-        .select(col("event_id"), col("event_type"), col("value"),
-          ntile(4).over(w).as("quartile"),
-          round(percent_rank().over(w), 6).as("pct_rank"),
-          round(cume_dist().over(w), 6).as("cume"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ----- bigram-LM quality scoring (CCNet-style perplexity filter):
-    // add-k smoothed corpus model, per-doc avg negative log likelihood
-    "quality_lm_nll" -> ((s, dir) =>
-      graft.operators.LangModel.bigramNll(Tables.documents(s, dir))
-        .orderBy(col("doc_id"))),
-
-    // ----- Zipf-law fit of the token-frequency curve (corpus-health
-    // screen: s ≈ 1 for natural language): OLS of ln(freq) on ln(rank)
-    // over the top-256 vocab rows, FixedLog integer logs, exact BIGINT
-    // moments, one mirrored IEEE emission tree
-    "text_zipf_fit" -> ((s, dir) =>
-      graft.operators.LangModel.zipfFit(Tables.documents(s, dir))),
-
-    // ----- fastText-style hashed linear quality classifier: token ->
-    // hash bucket -> broadcast weight row, score = sigmoid(mean weight).
-    // The weight table is a deterministic stand-in for trained params —
-    // swapping in a real model is a parquet read of the same schema
-    "quality_classifier" -> ((s, dir) =>
-      graft.operators.TextClassifier.hashedLinearScore(Tables.documents(s, dir))
-        .orderBy(col("doc_id"))),
-
-    // ----- TRAIN the classifier's bucket weights: 3 rounds of full-batch
-    // gradient descent on hashed bag-of-words features, lang='en' labels —
-    // the missing half of quality_classifier's stand-in weight table.
-    // Elliott fast-sigmoid link keeps every intermediate probability
-    // rational (bit-identical cross-engine); z and gradient sums ride the
-    // decimal carrier, so training is partition-order invariant
-    // (TextClassifier.train scaladoc; oracle unrolls the rounds)
-    "quality_classifier_train" -> ((s, dir) =>
-      graft.operators.TextClassifier.train(Tables.documents(s, dir))),
-
-    // ----- serve with the TRAINED model (train→apply composition, the
-    // pack_sequences_bpe_learned pattern): per-doc score under the
-    // full-precision trained weights via the SAME rational Elliott link
-    // as training (a measured 1-ulp libm exp divergence flips the
-    // 6-decimal rounding on ~0.6% of docs — monotone either way, so
-    // rankings translate). Weights are memoized per dataset (training is
-    // deterministic, so values are identical on every call): training
-    // cost is measured by quality_classifier_train; THIS gate measures
-    // serving, which is the production split
-    "quality_classifier_trained_score" -> ((s, dir) =>
-      graft.operators.TextClassifier.scoreWith(Tables.documents(s, dir),
-        trainedClassifierWeights(s, dir).toSeq)),
-
-    // ----- calibration audit over the trained classifier: the decile
-    // reliability table behind expected calibration error — per
-    // confidence bin, count / positives / exact confidence mass in
-    // micro-units (the score's own DECIMAL(18,6) carrier, a lossless
-    // double round-trip, so every measure is an integer). The audit an
-    // ML-data pipeline runs before trusting classifier thresholds for
-    // corpus filtering. Bins are MILLI-sized (floor(score·1000) on the
-    // identical double both engines produced, clamped so score = 1.0
-    // joins the top bin): the 3-round model's scores concentrate near
-    // 0.5, and decile bins would collapse the whole table to one row
-    "quality_calibration_ece" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      graft.operators.TextClassifier.scoreWith(docs,
-          trainedClassifierWeights(s, dir).toSeq)
-        .join(docs.select(col("doc_id"),
-          // when/otherwise, not a bare cast: (lang === 'en') is NULL for
-          // null-lang docs and sum() would skip them, while the oracle's
-          // CASE ... ELSE 0 counts them as 0 — a bin holding only
-          // null-lang docs would emit n_pos NULL vs the oracle's 0
-          when(col("lang") === "en", lit(1L)).otherwise(lit(0L)).as("y")),
-          Seq("doc_id"))
-        .withColumn("bin",
-          least(floor(col("score") * lit(1000)).cast("long"), lit(999L)))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"),
-          (sum(col("score").cast("decimal(18,6)")) * lit(1000000L))
-            .cast("long").as("conf_micro"))
-        .orderBy(col("bin"))
-    }),
-
-    // ----- token-distribution KL drift between corpus slices (even vs odd
-    // doc ids stand in for week-over-week crawls): add-1 smoothing over
-    // the union vocabulary, decimal-carrier sums, both directions
-    "quality_kl_drift" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      graft.operators.LangModel.tokenKlDivergence(
-        docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1))
-    }),
-
-    // ----- temperature-rebalanced multilingual sampling (XLM-R alpha=1/2
-    // closed form): rare languages keep ~100%, head languages sample down
-    // to sqrt; keep/drop is the deterministic hash-bucket contract shared
-    // with every sampling gate
-    "corpus_temperature" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("lang"))
-      val kept = graft.operators.Sampling
-        .temperatureSample(docs, keyCol = "doc_id", stratumCol = "lang")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_sampled"), max(col("keep_rate")).as("__r"))
-      docs.groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
-        .join(kept, Seq("lang"))
-        .select(col("lang"), col("n_docs"), col("n_sampled"),
-          round(col("__r"), 6).as("keep_rate"))
-        .orderBy(col("lang"))
-    }),
-
-    // ----- token-budget mix planner: given a total training-token budget
-    // and per-language token counts, allocate per-language quotas under
-    // sqrt-temperature rebalancing (the alpha = 1/2 XLM-R rule, as in
-    // corpus_temperature) and report how many epochs of each source the
-    // quota buys — the planning artifact behind mixCorpora's weights. The
-    // weight is the INTEGER sqrt (floor of the correctly-rounded IEEE
-    // sqrt — identical double, identical floor on both engines), so the
-    // whole allocation is exact integer div arithmetic. One grouped count
-    // over the corpus; marginals broadcast
-    "corpus_token_budget" -> ((s, dir) => {
-      val budget = 1000000L
-      // two consumers (the rows and their weight total): eager
-      // localCheckpoint of the ~|langs|-row frame so the corpus
-      // aggregation subtree runs once (the Dsir dual-consumer discipline)
-      val toks = Tables.documents(s, dir)
-        .filter(col("text").isNotNull)
-        .groupBy(col("lang"))
-        .agg(sum(size(TextFns.tokens(col("text"))).cast("long"))
-          .as("n_tokens"))
-        .filter(col("n_tokens") > 0)
-        .withColumn("w_isqrt",
-          floor(sqrt(col("n_tokens").cast("double"))).cast("long"))
-        .localCheckpoint(true)
-      val tot = toks.agg(sum(col("w_isqrt")).as("__s"))
-      toks.crossJoin(broadcast(tot))
-        .select(col("lang"), col("n_tokens"), col("w_isqrt"),
-          expr(s"(${budget}L * w_isqrt) div __s").as("quota_tokens"),
-          expr(s"(1000L * ((${budget}L * w_isqrt) div __s)) div n_tokens")
-            .as("epochs_milli"))
-        .orderBy(col("lang"))
-    }),
-
-    // ----- deterministic train/val/test split: hash-banded, a pure
-    // function of the data — rows can never migrate between train and
-    // test across re-runs/retries/cluster sizes (Sampling.splitAssign)
-    "split_train_val_test" -> ((s, dir) =>
-      graft.operators.Sampling.splitAssign(
-          Tables.documents(s, dir).select(col("doc_id"), col("lang")),
-          keyCol = "doc_id",
-          bands = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .orderBy(col("doc_id"))),
-
-    // ----- contamination audit: near-dup pairs that STRADDLE the
-    // train/val/test boundary. Hash splits are content-blind, so a doc and
-    // its near-copy land in different splits independently — every planted
-    // perturbed pair here is a potential eval leak; the audit joins the
-    // dedup_minhash verified pairs against the split_train_val_test
-    // assignment and keeps the cross-split ones (detector-agnostic: any
-    // (a, b) pair frame composes)
-    "split_leakage_audit" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val perturbed = docs.select((col("doc_id") + 100000).as("doc_id"),
-        regexp_replace(col("text"), "\\bdata\\b", "info").as("text"))
-      val corpus = docs.unionByName(perturbed)
-      val pairs = graft.operators.Dedup
-        .minhashNearDups(corpus, threshold = 0.6).select(col("a"), col("b"))
-      val splits = graft.operators.Sampling.splitAssign(
-        corpus.select(col("doc_id")), keyCol = "doc_id",
-        bands = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-      graft.operators.Sampling.splitLeakage(pairs, splits)
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // ----- curriculum staging: quality tiers without a global sort (the
-    // NTILE formulation is a single-partition bottleneck at 100 TB; the
-    // stage here is a pure function of the integer-milli score via a
-    // score-domain histogram CDF — Sampling.curriculumStages). Score =
-    // stopword-density millis + distinct-token-ratio millis, both exact
-    "corpus_curriculum" -> ((s, dir) => {
-      graft.operators.Sampling
-        .curriculumStages(curriculumScored(s, dir).select(
-            col("doc_id"), col("score_milli")),
-          keyCol = "doc_id", scoreCol = "score_milli", stages = 4)
-        .select(col("doc_id"), col("score_milli"), col("stage"),
-          col("shuffle_bucket"))
-        .orderBy(col("stage"), col("shuffle_bucket"), col("doc_id"))
-    }),
-
-    // ----- corpus_curriculum bisection (r13 judge ask 2 — the gate
-    // shipped red on the driver without stage diagnostics, repeating the
-    // DSIR mistake). Three read-only views of the shared chain, all-BIGINT
-    // outputs: diag_score isolates tokenize/stopword/distinct/div per doc;
-    // diag_hist isolates the score histogram + cumulative-above counts
-    // (the stage whose oracle previously used a DESC window frame no green
-    // gate pins — restated as an inequality self-join of driver-proven
-    // primitives, as is the production oracle now); diag_stages isolates
-    // the score->stage map (<=|score domain| rows). First red row in the
-    // driver artifact names the divergent stage.
-    "corpus_curriculum_diag_score" -> ((s, dir) =>
-      curriculumScored(s, dir)
-        .select(col("doc_id"), col("__n").as("n_toks"),
-          col("__stop").as("n_stop"), col("__uniq").as("n_uniq"),
-          col("score_milli"))
-        .orderBy(col("doc_id"))),
-    "corpus_curriculum_diag_hist" -> ((s, dir) =>
-      graft.operators.Sampling
-        .curriculumHist(curriculumScored(s, dir), "score_milli")
-        .select(col("score_milli"), col("__cnt").as("cnt"),
-          col("__before").as("before_cnt"))
-        .orderBy(col("score_milli"))),
-    "corpus_curriculum_diag_stages" -> ((s, dir) =>
-      graft.operators.Sampling
-        .curriculumStageMap(curriculumScored(s, dir), "score_milli", 4)
-        .orderBy(col("score_milli"))),
-    // r15 column-coverage gates (VERDICT r14 ask 1 — the r14 truth table
-    // covered every pipeline STAGE but not every output COLUMN; the red
-    // lived in the emitted shuffle_bucket, the one value no green gate
-    // pinned exactly): diag_bucket pins the seed-prefixed FNV bucket
-    // per-row (the corpus_shuffle green pins only the BARE-id fold);
-    // diag_join is the composite minus that column, isolating the
-    // join/order/emission step
-    "corpus_curriculum_diag_bucket" -> ((s, dir) =>
-      graft.operators.Sampling
-        .curriculumStages(curriculumScored(s, dir).select(
-            col("doc_id"), col("score_milli")),
-          keyCol = "doc_id", scoreCol = "score_milli", stages = 4)
-        .select(col("doc_id"), col("shuffle_bucket"))
-        .orderBy(col("doc_id"))),
-    "corpus_curriculum_diag_join" -> ((s, dir) =>
-      graft.operators.Sampling
-        .curriculumStages(curriculumScored(s, dir).select(
-            col("doc_id"), col("score_milli")),
-          keyCol = "doc_id", scoreCol = "score_milli", stages = 4)
-        .select(col("doc_id"), col("score_milli"), col("stage"))
-        .orderBy(col("doc_id"))),
-
-    // ----- curriculum-ordered packing (VERDICT r14 stretch 8): the last
-    // mile of the training-data story — stage-then-bucket curriculum order
-    // feeding the exclusive-prefix token binning, pure composition of two
-    // green operators (curriculumStages x packBins' window shape, pinned
-    // by pack_sequences). Every output column is covered by the r15 truth
-    // table: n_toks by diag_score, stage by diag_stages/_join,
-    // shuffle_bucket by diag_bucket, bin by the pack_sequences-green
-    // window frame over those
-    "corpus_curriculum_pack" -> ((s, dir) => {
-      val staged = graft.operators.Sampling.curriculumStages(
-        curriculumScored(s, dir).select(
-          col("doc_id"), col("__n").as("n_toks"), col("score_milli")),
-        keyCol = "doc_id", scoreCol = "score_milli", stages = 4)
-      graft.operators.Packing.packBinsOrdered(staged,
-          shardCol = "stage", orderCols = Seq("shuffle_bucket", "doc_id"),
-          nToksCol = "n_toks", budget = 512)
-        .select(col("doc_id"), col("stage"), col("shuffle_bucket"),
-          col("n_toks"), col("bin"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- native Catalyst expressions through the SQL front door: the
-    // SparkSessionExtensions registration (GraftExtensions) plans the SAME
-    // expression nodes from SQL text as the Column helpers do
-    // shingles run over a 64-char prefix: the gate proves the SQL
-    // registration plans the native nodes, not shingle throughput (the
-    // text_* entries own that) — full-text distinct-shingle sets tripled
-    // the gate's cost for no extra signal
-    "f_sql_extension" -> ((s, dir) => {
-      Tables.documents(s, dir).createOrReplaceTempView("documents")
-      s.sql("""SELECT doc_id, fnv1a64(text) AS h64,
-              |  size(char_shingles(substring(text, 1, 64), 5)) AS n_sh5
-              |FROM documents WHERE text IS NOT NULL
-              |ORDER BY doc_id""".stripMargin)
-    }),
-
-    // ----- non-hierarchical GROUPING SETS (rollup/cube cover the
-    // hierarchical forms): two independent one-dimension aggregates in a
-    // single pass, via the SQL front door — the DataFrame API deliberately
-    // has no grouping-sets builder
-    "a_grouping_sets" -> ((s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders")
-      s.sql("""SELECT o_orderstatus, o_orderpriority,
-              |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total,
-              |  COUNT(*) AS n
-              |FROM orders
-              |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-              |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"""
-        .stripMargin)
-    }),
-
-    // ----- ANSI recursive CTE through the SQL front door: the IDENTICAL
-    // string the DuckDB oracle runs (see recursiveCteSql scaladoc)
-    "f_recursive_cte" -> ((s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders")
-      s.sql(recursiveCteSql)
-    }),
-
-    // ----- ordered funnel analysis: view -> click -> purchase, each step
-    // strictly after the previous one for the same user. ONE scan and ONE
-    // user_id exchange: the three stage timestamps are stacked window mins
-    // over the same partitioning (each referencing the previous stage's
-    // result), then a single global distinct-count — no per-stage joins or
-    // re-scans at any scale
-    "funnel_steps" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-      Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_type"))
-        .withColumn("t_view",
-          min(when(col("event_type") === "view", col("ts"))).over(w))
-        .withColumn("t_click",
-          min(when(col("event_type") === "click" && col("ts") > col("t_view"),
-            col("ts"))).over(w))
-        .withColumn("t_purchase",
-          min(when(col("event_type") === "purchase" &&
-            col("ts") > col("t_click"), col("ts"))).over(w))
-        .agg(
-          countDistinct(when(col("t_view").isNotNull, col("user_id"))).as("v"),
-          countDistinct(when(col("t_click").isNotNull, col("user_id"))).as("c"),
-          countDistinct(when(col("t_purchase").isNotNull, col("user_id")))
-            .as("p"))
-        .select(explode(array(
-          struct(lit(1).as("step"), lit("view").as("stage"),
-            col("v").as("users")),
-          struct(lit(2).as("step"), lit("click").as("stage"),
-            col("c").as("users")),
-          struct(lit(3).as("step"), lit("purchase").as("stage"),
-            col("p").as("users")))).as("r"))
-        .select(col("r.step").as("step"), col("r.stage").as("stage"),
-          col("r.users").as("users"))
-        .orderBy(col("step"))
-    }),
-
-    // ----- CDC apply (MERGE semantics): the events feed replayed as a
-    // change log — error rows are deletes, everything else upserts; the
-    // LATEST change per key wins and deleted keys leave the snapshot.
-    // ONE shuffle on the merge key serves both window passes (rank and
-    // change count share the partitioning); the full-partition count is
-    // what rules out a WindowGroupLimit prune — drop n_changes and the
-    // rank-only form would prune losers map-side
-    "cdc_merge" -> ((s, dir) => {
-      val w = Window.partitionBy(col("key"))
-        .orderBy(col("ts").desc, col("event_id").desc)
-      Tables.events(s, dir)
-        .select(col("user_id").as("key"), col("ts"), col("event_id"),
-          when(col("event_type") === "error", lit("delete"))
-            .otherwise(lit("upsert")).as("op"),
-          col("value"))
-        .withColumn("__rn", row_number().over(w))
-        .withColumn("n_changes",
-          count(lit(1)).over(Window.partitionBy(col("key"))))
-        .filter(col("__rn") === 1 && col("op") === "upsert")
-        .select(col("key"), col("value").as("last_value"), col("n_changes"))
-        .orderBy(col("key"))
-    }),
-
-    // ----- time-RANGE window frame (vs w_rolling_avg's ROWS frame): per
-    // user, sum of activity in the trailing 10 minutes. Both engines frame
-    // over the SAME integer epoch-microseconds order key, so peer-row and
-    // boundary semantics are identical by construction
-    "w_range_frame" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
-        .rangeBetween(-600L * 1000 * 1000, Window.currentRow)
-      Tables.events(s, dir)
-        .withColumn("ts_us", unix_micros(col("ts")))
-        .select(col("user_id"), col("event_id"), col("ts"),
-          sum(col("value").cast("decimal(18,6)")).over(w)
-            .cast("double").as("range_sum"),
-          count(lit(1)).over(w).as("n_in_range"))
-        .orderBy(col("user_id"), col("ts"), col("event_id"))
-    }),
-
-    // ----- gaps-and-islands: maximal runs of CONSECUTIVE active days per
-    // user via the row_number offset trick (day - rank is constant within
-    // a run) — one window shuffle on the user key, then a metadata-sized
-    // island aggregate
-    "w_islands" -> ((s, dir) => {
-      val days = Tables.events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("day"))
-        .distinct()
-      val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-      days
-        .withColumn("__grp", datediff(col("day"), lit("2024-01-01").cast("date"))
-          - row_number().over(w))
-        .groupBy(col("user_id"), col("__grp"))
-        .agg(min(col("day")).as("start_day"), max(col("day")).as("end_day"),
-          count(lit(1)).as("n_days"))
-        .select(col("user_id"), col("start_day"), col("end_day"), col("n_days"))
-        .orderBy(col("user_id"), col("start_day"))
-    }),
-
-    // ----- dynamic pivot (r2 covers the fixed-column form): the pivot
-    // columns are DISCOVERED from the data — a bounded driver-side
-    // distinct (languages are metadata-cardinality by contract), then the
-    // same one-shuffle pivot aggregate
-    "r3_pivot_dynamic" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val langs = docs.select(col("lang")).distinct()
-        .limit(100).collect().map(_.getString(0)).sorted.toSeq
-      require(langs.length < 100, "pivot width must stay metadata-sized")
-      docs.groupBy(col("source"))
-        .pivot("lang", langs)
-        .agg(count(lit(1)))
-        .na.fill(0L, langs)
-        .orderBy(col("source"))
-    }),
-
-    // ----- forward as-of join: each purchase enriched with the EARLIEST
-    // at-or-after click — the same single-pass union+window plan as j_asof
-    // on the reversed order (no range self-join in either direction)
-    "j_asof_forward" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id").as("click_id"),
-          col("value").as("click_value"))
-      AsofJoin.asofJoin(purchases, clicks, keys = Seq("user_id"),
-          leftTs = "ts", rightTs = "ts",
-          payload = Seq("click_id", "click_value"), tieBreak = "click_id",
-          direction = "forward")
-        .select(col("event_id"), col("user_id"), col("value"),
-          col("click_id"), col("click_value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ----- z-score outlier screen: per-type mean/std from EXACT moment
-    // sums (the a_corr_stats determinism contract), outliers flagged at
-    // |z| > 2 — group stats broadcast back, so the screen is one narrow
-    // pass plus a metadata-sized join
-    "a_zscore_outliers" -> ((s, dir) => {
-      val x = col("value")
-      val n = col("n").cast("double")
-      val stats = Tables.events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sumExact(x).as("sx"), sumExact(x * x).as("sxx"))
-        .select(col("event_type"),
-          (col("sx") / n).as("mean"),
-          sqrt(col("sxx") / n - (col("sx") / n) * (col("sx") / n)).as("std"))
-      Tables.events(s, dir)
-        .join(broadcast(stats), Seq("event_type"))
-        .select(col("event_type"), col("event_id"),
-          round((x - col("mean")) / col("std"), 6).as("z"))
-        .filter(abs((x - col("mean")) / col("std")) > 2.0)
-        .orderBy(col("event_id"))
-    }),
-
-    // ----- weighted mean (sum(x*w)/sum(w) per group), both sums through
-    // the decimal carrier — one partial-aggregated shuffle
-    "a_weighted_avg" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"))
-        .agg(sumExact(col("l_extendedprice") * col("l_quantity")).as("swx"),
-          sumExact(col("l_quantity")).as("sw"))
-        .select(col("l_returnflag"),
-          round(col("swx") / col("sw"), 6).as("weighted_avg_price"))
-        .orderBy(col("l_returnflag"))),
-
-    // ----- bag-semantics EXCEPT ALL (u3 covers set semantics): per-row
-    // multiplicity survives — one hash-partitioned count diff, no distinct
-    "u4_except_all" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.filter(col("event_type").isin("view", "click"))
-        .select(col("user_id"), col("event_type"))
-        .exceptAll(ev
-          .filter(col("event_type") === "click" && col("event_id") % 2 === 0)
-          .select(col("user_id"), col("event_type")))
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("user_id"), col("event_type"))
-    }),
-
-    // ----- share-of-total window (ratio_to_report): each order's share of
-    // its customer's total spend — an unbounded partition frame over the
-    // decimal-exact denominator
-    "w_share_of_total" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-      Tables.orders(s, dir)
-        .filter(col("o_custkey") % 100 === 0)
-        .select(col("o_custkey"), col("o_orderkey"),
-          round(col("o_totalprice").cast("decimal(18,6)")
-            .cast("double") /
-            sum(col("o_totalprice").cast("decimal(18,6)")).over(w)
-              .cast("double"), 6).as("share"))
-        .orderBy(col("o_custkey"), col("o_orderkey"))
-    }),
-
-    // ----- equi-DEPTH histogram (a_histogram covers equi-width): quartile
-    // buckets via ntile over a total (value, id) order, per-bucket
-    // count/min/max — the sort is the one wide step, bucket stats
-    // partial-aggregate
-    "a_histogram_eqdepth" -> ((s, dir) => {
-      val w = Window.orderBy(col("o_totalprice"), col("o_orderkey"))
-      Tables.orders(s, dir)
-        .filter(col("o_orderkey") % 40 === 0)
-        .select(col("o_orderkey"), col("o_totalprice"),
-          ntile(4).over(w).as("bucket"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"),
-          min(col("o_totalprice")).as("lo"),
-          max(col("o_totalprice")).as("hi"))
-        .orderBy(col("bucket"))
-    }),
-
-    // ----- TF-IDF keyword extraction: top-3 terms per document by
-    // tf x ln((N+1)/(df+1)), ranked on the ROUNDED score with a term-name
-    // tiebreak so the order is engine-independent. Corpus stats flow
-    // through one (doc,term) aggregation; df is a second metadata-sized
-    // agg; N rides a broadcast 1-row frame (no driver action). The top-3
-    // rank plans as WindowGroupLimit — per-partition pruning before the
-    // shuffle
-    "text_tfidf_topk" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      // the (doc, term) frame feeds BOTH the df aggregate and the scored
-      // join; localCheckpoint (the [[graft.operators.Dsir]] discipline)
-      // truncates the lineage so the tokenize+explode+agg subtree runs
-      // ONCE instead of once per consumer — r12's driver bench showed a
-      // bimodal 1.6 s / 19 s profile consistent with the un-checkpointed
-      // subtree being re-planned (and its broadcast rebuilt) per run
-      val tf = docs
-        .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("term"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true)
-      val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val n = docs.agg(count(lit(1)).as("n_docs"))
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(col("tfidf").desc, col("term").asc)
-      // idf = ln((N+1)/(df+1)) over INTEGER operands → [[FixedLog]]: the
-      // per-term 6-decimal score is produced by integer arithmetic both
-      // engines compute identically (ranking happens on the emitted
-      // rounded value, so a libm-ulp idf flip would reorder ranks)
-      // the ln chain runs on the 1-row totals frame and the vocab-sized
-      // document-frequency frame, NOT per (doc, term) row (measured: the
-      // per-row chain cost 4.5 s at sf0.1; identical values by
-      // construction, and the tf⋈df join was already there)
-      val nLn = FixedLog.withLn(
-        n.withColumn("__np1", (col("n_docs") + lit(1)).cast("long")),
-        "__np1", "__lnn")
-      val dfLn = FixedLog.withLn(
-        dfreq.withColumn("__dfp1", (col("df") + lit(1)).cast("long")),
-        "__dfp1", "__lnd")
-      val scored1 = tf.join(dfLn, Seq("term"))
-        .crossJoin(broadcast(nLn))
-        .withColumn("__s12", expr(
-          "CAST(tf AS DECIMAL(38,0)) * (__lnn - __lnd)"))
-      FixedLog.withS12ToDec6(scored1, "__s12", "__tq")
-        .select(col("doc_id"), col("term"),
-          col("__tq").cast("double").as("tfidf"))
-        .withColumn("term_rank", row_number().over(w))
-        .filter(col("term_rank") <= 3)
-        .select(col("doc_id"), col("term_rank"), col("term"), col("tfidf"))
-        .orderBy(col("doc_id"), col("term_rank"))
-    }),
-
-    // ----- date-spine gap fill: daily per-type counts with missing days
-    // materialized as zero rows. The spine is days x event types —
-    // metadata cardinality, broadcast side of the left join; the fact side
-    // partial-aggregates before its one shuffle
-    "r_gap_fill" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val daily = ev.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n"))
-      val spine = ev
-        .agg(to_date(min(col("ts"))).as("d0"), to_date(max(col("ts"))).as("d1"))
-        .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      val types = ev.select(col("event_type")).distinct()
-      broadcast(types.crossJoin(spine))
-        .join(daily, Seq("event_type", "day"), "left")
-        .select(col("event_type"), col("day"),
-          coalesce(col("n"), lit(0L)).as("n"))
-        .orderBy(col("event_type"), col("day"))
-    }),
-
-    // ----- cohort retention: users grouped by signup week, counted in each
-    // later activity week. Both sides key on user_id (cohort assignment +
-    // activity distinct + join), so one shuffle partitioning serves the
-    // whole matrix; the final (cohort, offset) agg is metadata-cardinality
-    "cohort_retention" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val cohorts = ev.filter(col("event_type") === "signup")
-        .groupBy(col("user_id"))
-        .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
-      val activity = ev.select(col("user_id"),
-          date_trunc("week", col("ts")).cast("date").as("activity_week"))
-        .distinct()
-      cohorts.join(activity, Seq("user_id"))
-        .filter(col("activity_week") >= col("cohort_week"))
-        .groupBy(col("cohort_week"),
-          (datediff(col("activity_week"), col("cohort_week")) / 7)
-            .cast("int").as("week_offset"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-        .orderBy(col("cohort_week"), col("week_offset"))
-    }),
-
-    // ----- PageRank over the verified near-dup pair graph (fixed unrolled
-    // rounds, decimal-carrier mass sums): the graph-centrality keep signal
-    // — hub documents rank above leaf variants within a cluster. Same
-    // staged pair spool as dedup_cluster; the oracle unrolls the identical
-    // rounds in SQL
-    "graph_pagerank" -> ((s, dir) =>
-      Cluster.pagerank(s.read.parquet(spooledNearDupPairs(s, dir)), iters = 3)
-        .orderBy(col("doc_id"))),
-
-    // ----- HITS hubs & authorities (sixth graph signal: walk-count
-    // centrality) — unnormalized integer rounds are exact walk counts,
-    // so the scores are BIGINTs with no float-normalization channel
-    "graph_hits" -> ((s, dir) =>
-      Cluster.hits(s.read.parquet(spooledNearDupPairs(s, dir)), iters = 2)
-        .orderBy(col("doc_id"))),
-
-    // ----- single-source BFS hop distances (fifth graph signal:
-    // reachability DEPTH; Graph.bfsHops scaladoc) over the planted
-    // 50-rank CHAIN graph (the dedup_cluster_chain fixture — the near-dup
-    // twin graph has diameter 1, which would leave the frontier rounds
-    // untested). Source = smallest node id; 4 rounds walk exactly 5 nodes
-    // down the first chain; oracle unrolls the identical integer rounds
-    "graph_bfs_hops" -> ((s, dir) => {
-      val n = Tables.documents(s, dir).select(col("doc_id"))
-        .withColumn("rn", row_number().over(Window.orderBy(col("doc_id"))))
-      val a = n.select(col("doc_id").as("a"), col("rn"))
-      val b = n.select(col("doc_id").as("b"), (col("rn") - 1).as("rn"))
-      val pairs = a.join(b, Seq("rn")).filter(col("rn") % 50 =!= 0)
-        .select(col("a"), col("b"))
-      graft.operators.Graph.bfsHops(pairs, rounds = 4)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- strongly-connected components (sixth graph signal: DIRECTED
-    // cycles, which undirected CC structurally overcounts) via Orzan's
-    // coloring / distributed FW-BW (Graph.scc scaladoc) over a planted
-    // condensation: 25 ten-node cycle SCCs + 250 singletons joined by DAG
-    // edges that must NOT merge. Oracle computes the same canonical
-    // min-member ids from a recursive-CTE mutual-reachability closure —
-    // algorithm-vs-specification, the dedup_cluster_chain discipline
-    "graph_scc" -> ((s, dir) =>
-      sccMemo(s, dir).withColumnRenamed("node", "doc_id")
-        .withColumn("scc_size",
-          count(lit(1)).over(Window.partitionBy(col("scc_id"))))
-        .orderBy(col("doc_id"))),
-
-    // ----- graph_scc truth table, stage 1: the planted edge list itself
-    // (fixture construction pinned independently of the algorithm)
-    "graph_scc_diag_edges" -> ((s, dir) =>
-      sccFixtureEdges(s, dir).orderBy(col("src"), col("dst"))),
-
-    // ----- graph_scc truth table, stage 2: the component size histogram
-    // (isolates the size-count fold from the per-node id fold)
-    "graph_scc_diag_sizes" -> ((s, dir) =>
-      sccMemo(s, dir)
-        .groupBy(col("scc_id")).agg(count(lit(1)).as("scc_size"))
-        .groupBy(col("scc_size")).agg(count(lit(1)).as("n_sccs"))
-        .orderBy(col("scc_size"))),
-
-    // ----- condensation DAG: edges lifted to the component level and
-    // intra-component edges dropped — what SCC is FOR downstream (rank
-    // the condensation, not the raw cyclic graph: PageRank on a graph
-    // with link rings double-counts exactly what this collapses). Pure
-    // composition of the gated scc ids with the gated edge list
-    "graph_scc_condensation" -> ((s, dir) => {
-      val sc = sccMemo(s, dir)
-      val e = sccFixtureEdges(s, dir)
-      e.join(sc.select(col("node").as("src"), col("scc_id").as("scc_src")),
-          Seq("src"))
-        .join(sc.select(col("node").as("dst"), col("scc_id").as("scc_dst")),
-          Seq("dst"))
-        .filter(col("scc_src") =!= col("scc_dst"))
-        .select(col("scc_src"), col("scc_dst")).distinct()
-        .orderBy(col("scc_src"), col("scc_dst"))
-    }),
-
-    // ----- longest-path topological levels of the condensation — the
-    // scheduling depth a pipeline planner reads off the SCC DAG (level-k
-    // components can all run once level-<k finished). Iterative
-    // Bellman-Ford-on-a-DAG with loud cycle detection; oracle walks the
-    // same levels as a recursive CTE and takes MAX per component
-    "graph_topo_levels" -> ((s, dir) => {
-      val sc = sccMemo(s, dir)
-      val e = sccFixtureEdges(s, dir)
-      val cond = e
-        .join(sc.select(col("node").as("src"), col("scc_id").as("cs")),
-          Seq("src"))
-        .join(sc.select(col("node").as("dst"), col("scc_id").as("cd")),
-          Seq("dst"))
-        .filter(col("cs") =!= col("cd"))
-        .select(col("cs").as("src"), col("cd").as("dst")).distinct()
-      // seed the FULL component universe: an isolated SCC (touching no
-      // condensation edge) belongs at level 0, exactly as the oracle's
-      // recursive CTE seeds every scc_id — without the universe the
-      // engine would silently drop it (agreeing with the oracle only
-      // while the fixture happens to have none)
-      graft.operators.Graph.topoLevels(cond,
-          nodes0 = Some(sc.select(col("scc_id")).distinct()))
-        .withColumnRenamed("node", "scc_id")
-        .orderBy(col("scc_id"))
-    }),
-
-    // ----- Unicode canonicalization (UAX #15): NFC composition + accent
-    // folding as native expressions over PLANTED composed/decomposed
-    // variants (the fixtures are ASCII, so the multilingual inputs are
-    // planted deterministically like f12's dirty cells) — the step that
-    // makes byte equality match visual equality before hashing/dedup
-    // (UnicodeFns scaladoc). nfc_len < raw_len proves real composition.
-    "text_unicode_normalize" -> ((s, dir) => {
-      import graft.functions.UnicodeFns
-      val planted = Tables.documents(s, dir)
-        .filter(col("doc_id") < 200)
-        .select(col("doc_id"),
-          element_at(array(
-            lit("cafe\u0301 cliente"), // decomposed: e + combining acute
-            lit("a\u0327c\u0327a\u0303o"), // decomposed cedillas + tilde
-            lit("a\u00e7\u00e3o \u00e1gua"), // pre-composed
-            lit("plain ascii")), (pmod(col("doc_id"), lit(4)) + 1).cast("int"))
-            .as("raw"))
-      planted.select(col("doc_id"),
-        length(col("raw")).as("raw_len"),
-        UnicodeFns.nfc(col("raw")).as("nfc"),
-        length(UnicodeFns.nfc(col("raw"))).as("nfc_len"),
-        UnicodeFns.stripAccents(col("raw")).as("folded"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- accent-insensitive equi-join: variant spellings (composed,
-    // decomposed, unaccented, case-shifted) of the same name join one
-    // canonical broadcast dimension through fold = strip_accents(lower())
-    // — the reference's F10 name standardization done right for web text
-    // (its upper/underscore rule works only because pt-BR spreadsheets
-    // arrive pre-composed). Every planted variant MUST survive the join.
-    "j_unaccent_join" -> ((s, dir) => {
-      import s.implicits._
-      val variants = Tables.documents(s, dir).select(col("doc_id"),
-        element_at(array(
-          lit("Informa\u00e7\u00e3o"), // composed
-          lit("informac\u0327a\u0303o"), // decomposed
-          lit("INFORMACAO"), // unaccented upper
-          lit("Relat\u00f3rio"), // composed
-          lit("relato\u0301rio"), // decomposed
-          lit("relatorio")), (pmod(col("doc_id"), lit(6)) + 1).cast("int"))
-          .as("raw"))
-      val dim = Seq(("informacao", 1), ("relatorio", 2))
-        .toDF("canonical", "dim_key")
-      variants
-        .withColumn("canonical",
-          graft.functions.UnicodeFns.stripAccents(lower(col("raw"))))
-        .join(broadcast(dim), Seq("canonical"))
-        .groupBy(col("canonical"), col("dim_key"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("raw")).as("n_variants"))
-        .orderBy(col("canonical"))
-    }),
-
-    // ----- TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank
-    // over the word-adjacency graph, top-k by rank — a pure composition
-    // of the token pass with Cluster.pagerank; per-round cost bounded by
-    // the VOCABULARY graph, not the corpus (TextRank scaladoc)
-    "text_textrank" -> ((s, dir) =>
-      graft.operators.TextRank.keywords(Tables.documents(s, dir), k = 50)),
-
-    // ----- RAKE keyphrase extraction (Rose et al. 2010): stopword-free
-    // token runs scored by summed deg/freq word scores in exact integer
-    // millis — the multi-word companion to text_textrank (TextRank.rake)
-    "text_keyphrase_rake" -> ((s, dir) =>
-      graft.operators.TextRank.rake(Tables.documents(s, dir),
-        stop = TextFns.stopwords("en"), k = 20)),
-
-    // ----- community detection over the same pair graph (synchronous
-    // label propagation, fixed rounds): dense near-dup FAMILIES vs the
-    // connectivity-only clusters CC yields — the third graph signal next
-    // to centrality (pagerank) and reachability (dedup_cluster). Same
-    // staged spool; the oracle unrolls the identical rounds
-    "graph_label_prop" -> ((s, dir) =>
-      Cluster.labelPropagation(
-          s.read.parquet(spooledNearDupPairs(s, dir)), iters = 3)
-        .orderBy(col("doc_id"))),
-
-    // ----- k-core peeling over the same pair graph (fourth graph signal:
-    // density — chains survive CC and score zero triangles, but no chain
-    // node survives the 2-core). Fixed unrolled peeling rounds; degree
-    // within the surviving core (Graph.kCore scaladoc)
-    "graph_kcore" -> ((s, dir) =>
-      graft.operators.Graph.kCore(
-          s.read.parquet(spooledNearDupPairs(s, dir)), k = 2, rounds = 3)
-        .orderBy(col("doc_id"))),
-
-    // ----- second-order node similarity over the near-dup graph:
-    // common-neighbor Jaccard (Liben-Nowell/Kleinberg link prediction) —
-    // pairs similar to the same documents even without a direct edge
-    "graph_jaccard" -> ((s, dir) =>
-      graft.operators.Graph.jaccardSimilarity(
-          s.read.parquet(spooledNearDupPairs(s, dir)), minCommon = 2)
-        .orderBy(col("u"), col("v"))),
-
-    // ----- per-language percentile calibration of a quality score: raw
-    // token-diversity ratios are not comparable across languages, their
-    // within-language percent_rank is — the normalization step before a
-    // single corpus-wide quality threshold. One window shuffle on lang
-    "quality_rank_norm" -> ((s, dir) => {
-      val w = Window.partitionBy(col("lang"))
-        .orderBy(col("uniq_ratio"), col("doc_id"))
-      Tables.documents(s, dir)
-        .withColumn("__toks", TextFns.tokens(col("text")))
-        .select(col("doc_id"), col("lang"),
-          (size(array_distinct(col("__toks"))).cast("double") /
-            when(col("__toks").isNotNull, size(col("__toks"))))
-            .as("uniq_ratio"))
-        .withColumn("q_norm", round(percent_rank().over(w), 6))
-        .select(col("doc_id"), col("lang"),
-          round(col("uniq_ratio"), 6).as("uniq_ratio"), col("q_norm"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- quality-weighted importance sampling: each document survives
-    // with probability equal to its own uniq-token ratio — the corpus
-    // resampling step that upweights clean text. The keep decision is a
-    // pure function of (doc_id, weight): deterministic across retries,
-    // partition counts, and engines (Sampling.weightedHashSample)
-    "sample_weighted" -> ((s, dir) => {
-      val scored = Tables.documents(s, dir)
-        .withColumn("__toks", TextFns.tokens(col("text")))
-        .select(col("doc_id"),
-          (size(array_distinct(col("__toks"))).cast("double") /
-            when(col("__toks").isNotNull, size(col("__toks"))))
-            .as("weight"))
-      graft.operators.Sampling.weightedHashSample(
-          scored, keyCol = "doc_id", weight = col("weight"), seed = "graft-w")
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- chunk-granularity dedup (the line-level dedup of C4/RefinedWeb
-    // re-expressed over token chunks): non-overlapping 32-token chunks,
-    // the globally-first occurrence of each chunk hash survives. One
-    // hash-partitioned window over (chunk-hash) — the shuffle carries
-    // md5 digests, never the chunk text twice
-    "dedup_chunks" -> ((s, dir) => {
-      val chunks = Reshape.chunkTokens(
-          Tables.documents(s, dir).select(col("doc_id"), col("text")),
-          "doc_id", "text", window = 32, stride = 32)
-        .select(col("doc_id"), col("chunk_idx"),
-          md5(col("chunk_text")).as("__h"))
-      val w = Window.partitionBy(col("__h"))
-        .orderBy(col("doc_id"), col("chunk_idx"))
-      chunks.withColumn("__rn", row_number().over(w))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_chunks"),
-          count(when(col("__rn") === 1, lit(1))).as("n_kept"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- content-defined chunking dedup (LBFS/FastCDC boundaries): chunk
-    // edges picked by a sliding-window hash, so an edit re-syncs after one
-    // window instead of shifting every downstream chunk the way the
-    // fixed-size dedup_chunks grid does. Narrow higher-order exprs chunk;
-    // one digest-only window dedups (operators/CdcChunk scaladoc)
-    "dedup_cdc_chunks" -> ((s, dir) =>
-      graft.operators.CdcChunk.dedupStats(
-          Tables.documents(s, dir).select(col("doc_id"), col("text")))
-        .orderBy(col("doc_id"))),
-
-    // ----- content-addressed chunk store round trip (the LBFS/backup
-    // architecture CDC boundaries serve): recipes + deduplicated store
-    // written to parquet, read back, every doc reassembled in recipe
-    // order — a digest collision or lost chunk flips `match` false
-    // (CdcChunk.storeRoundTrip scaladoc)
-    "s_cdc_store_roundtrip" -> ((s, dir) =>
-      graft.operators.CdcChunk.storeRoundTrip(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")),
-        scratchDir("cdc-store"))),
-
-    // ----- exact per-group mode with a deterministic tiebreak (smallest
-    // value wins): count-per-(group,value) partial-aggregates map-side, so
-    // the shuffle carries one row per distinct pair, then a k-row window
-    // picks the winner — no sort of the raw table at any scale
-    "a_mode" -> ((s, dir) => {
-      val w = Window.partitionBy(col("l_returnflag"))
-        .orderBy(col("n").desc, col("l_quantity").asc)
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"), col("l_quantity"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select(col("l_returnflag"), col("l_quantity").as("mode_qty"),
-          col("n").as("n_occurrences"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // ----- INTERSECT ALL (bag semantics): multiplicity-preserving
-    // intersection — one shuffle on the row value, min(count) per side
-    "u5_intersect_all" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.filter(col("event_type").isin("view", "click"))
-        .select(col("user_id"), col("event_type"))
-        .intersectAll(ev
-          .filter(col("event_id") % 2 === 0)
-          .select(col("user_id"), col("event_type")))
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("user_id"), col("event_type"))
-    }),
-
-    // ----- declarative data-quality expectation suite (deequ-style): all
-    // constraint metrics from ONE aggregation pass over the table (the
-    // count-distinct shares the scan via Expand), then pivoted to one row
-    // per constraint with its pass verdict — the audit a 100 TB load runs
-    // before publishing a partition
-    "audit_expectations" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .agg(
-          count(lit(1)).as("n_rows"),
-          count(col("l_shipdate")).as("n_shipdate"),
-          count(when(col("l_returnflag").isin("A", "N", "R"), lit(1)))
-            .as("n_flag_in_domain"),
-          count(when(col("l_quantity") >= 0, lit(1))).as("n_qty_nonneg"),
-          count(when(col("l_discount").between(0, 1), lit(1)))
-            .as("n_disc_in_range"),
-          countDistinct(col("l_orderkey"), col("l_linenumber"))
-            .as("n_distinct_pk"))
-        .selectExpr(
-          """stack(5,
-            |  'completeness:l_shipdate',       n_shipdate,
-            |  'domain:l_returnflag in (A,N,R)', n_flag_in_domain,
-            |  'nonneg:l_quantity',             n_qty_nonneg,
-            |  'range:l_discount in [0,1]',     n_disc_in_range,
-            |  'unique:(l_orderkey,l_linenumber)', n_distinct_pk
-            |) as (check_name, n_satisfied)""".stripMargin,
-          "n_rows")
-        .select(col("check_name"), col("n_satisfied"),
-          (col("n_satisfied") === col("n_rows")).as("pass"))
-        .orderBy(col("check_name"))
-    }),
-
-    // ----- higher-order array functions (lambda pipeline, zero explode):
-    // per-vector stats via transform/filter/aggregate directly on the
-    // embedding array — integer-exact metrics (floor-milli units) so the
-    // fold order can't perturb a hash gate. The array never unnests, so
-    // the op is a narrow map at any scale.
-    "f_higher_order" -> ((s, dir) => {
-      val milli = transform(col("embedding"),
-        x => floor(abs(x.cast("double")) * 1000).cast("long"))
-      Tables.embeddings(s, dir)
-        .filter(col("vec_id") % 20 === 0)
-        .select(col("vec_id"),
-          size(filter(col("embedding"), x => x > 0)).as("n_pos"),
-          aggregate(milli, lit(0L), (acc, x) => acc + x).as("l1_milli"),
-          array_max(milli).as("max_milli"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // ----- URL canonicalization dedup (the CommonCrawl-style near-alias
-    // collapse): lowercase, strip query/fragment and trailing slash, then
-    // first-occurrence-wins exact dedup on the canonical form — one
-    // shuffle on the canonical key
-    "dedup_url" -> ((s, dir) => {
-      val url = concat(lit("HTTPS://CDN-"), upper(col("source")),
-        lit(".Example.COM/doc/"), (col("doc_id") % 40).cast("string"),
-        when(col("doc_id") % 3 === 0, lit("?utm_source=feed"))
-          .when(col("doc_id") % 3 === 1, lit("#frag"))
-          .otherwise(lit("/")))
-      Tables.documents(s, dir)
-        .withColumn("canonical_url",
-          rtrim(regexp_replace(lower(url), "[?#].*$", ""), "/"))
-        .groupBy(col("canonical_url"))
-        .agg(min(col("doc_id")).as("survivor_doc_id"),
-          count(lit(1)).as("n_aliases"))
-        .orderBy(col("canonical_url"))
-    }),
-
-    // ----- Bloom-filter semi-join reduction: the build side folds to one
-    // broadcastable bit-vector row that drops probe rows BEFORE the join
-    // shuffle (what runtime row-level filtering injects, made declarative
-    // and deterministic). False positives die in the real join, so the
-    // oracle is simply the plain join — the gate proves the composition is
-    // lossless
-    "j_bloom_prefilter" -> ((s, dir) => {
-      val cust = Tables.customer(s, dir)
-        .filter(col("c_mktsegment") === "BUILDING")
-      val pre = graft.operators.Bloom.prefilter(
-        Tables.orders(s, dir), "o_custkey",
-        cust.select(col("c_custkey")), "c_custkey")
-      pre.join(broadcast(cust), pre("o_custkey") === cust("c_custkey"))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,6)")).cast("double")
-            .as("revenue"))
-        .orderBy(col("o_orderstatus"))
-    }),
-
-    // ----- count-min-sketch heavy hitters: frequency estimates from a
-    // bounded depth×width grid (fixed memory at ANY key cardinality), MIN
-    // over a key's buckets; the gate pins the estimates exactly AND the
-    // sketch's one-sided error guarantee (never undercounts)
-    "a_heavy_hitters" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("user_id"))
-      val grid = graft.operators.CountMin.sketch(ev, "user_id",
-        depth = 3, width = 256)
-      val top = ev.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_exact"))
-        .orderBy(col("n_exact").desc, col("user_id")).limit(5)
-      graft.operators.CountMin.estimate(top.select(col("user_id")),
-          "user_id", grid, depth = 3, width = 256)
-        .join(broadcast(top), Seq("user_id"))
-        .select(col("user_id"), col("n_exact"), col("cms_estimate"),
-          (col("cms_estimate") >= col("n_exact")).as("never_undercounts"))
-        .orderBy(col("n_exact").desc, col("user_id"))
-    }),
-
-    // ----- distributed triangle counting over a planted graph: ranks of
-    // documents in 10-rank segments, edges (r,r+1) and (r,r+2) — every
-    // interior rank closes a triangle. Orientation low→high counts each
-    // triangle exactly once from its smallest vertex (wedge join + closure
-    // join, two shuffles; degree-orientation drops in for skewed graphs)
-    "graph_triangles" -> ((s, dir) => {
-      val v = Tables.documents(s, dir).select(col("doc_id"))
-        .withColumn("rn",
-          row_number().over(Window.partitionBy(singlePartitionKey(col("doc_id")))
-            .orderBy(col("doc_id"))) - 1)
-        .select(col("rn"))
-      def within(k: Int, segCap: Int) = v
-        .select(col("rn").as("src"), (col("rn") + k).as("dst"))
-        .join(v.select(col("rn").as("dst")), Seq("dst"))
-        .filter(col("src") % 10 < segCap)
-      graft.operators.Graph.triangleCount(
-        within(1, 9).unionByName(within(2, 8)))
-    }),
-
-    // ----- bounded-horizon EWMA (α=0.3 over the last 8 observations): the
-    // time-series smoother as ONE partitioned window with 8 stacked lags —
-    // exact rational weights 7^j/10^j carried in decimals (no pow(), no
-    // libm drift), final IEEE division only at emission
-    "w_ewma" -> ((s, dir) => {
-      val wspec = Window.partitionBy(col("event_type")).orderBy(col("event_id"))
-      val base = Tables.events(s, dir)
-        .filter(col("event_id") % 20 === 0)
-        .select(col("event_type"), col("event_id"),
-          col("value").cast("decimal(18,6)").as("v"))
-      val terms = (0 until EwmaK).map { j =>
-        val lagV = if (j == 0) col("v") else lag(col("v"), j).over(wspec)
-        (coalesce(lagV * lit(ewmaWeightNum(j)), lit(0).cast("decimal(18,6)")),
-          when(lagV.isNotNull, lit(ewmaWeightNum(j))).otherwise(lit(0L)))
-      }
-      base.select(col("event_type"), col("event_id"),
-          (terms.map(_._1).reduce(_ + _).cast("double") /
-            terms.map(_._2).reduce(_ + _).cast("double")).as("ewma"))
-        .orderBy(col("event_type"), col("event_id"))
-    }),
-
-    // ----- date-spine resample + linear interpolation: regularize an
-    // irregular daily series (planted sparsity: only days 1,4,...,28
-    // observed) onto the dense per-type spine — the pre-processing that
-    // makes rolling/EWMA spacing assumptions true on real feeds. Daily
-    // means via the decimal carrier; interpolation is fixed-shape IEEE
-    // arithmetic, bit-identical in DuckDB
-    // ----- Holt linear-trend smoothing per event type over the daily
-    // series: final level/trend + 3-step forecast; sequential in time,
-    // parallel across keys. Fixed-point micro-unit state — exact integer
-    // recurrence, engine-identical by construction (TimeSeries
-    // .holtLinear scaladoc records the two float restatements that
-    // measurably diverged cross-engine); oracle = recursive CTE
-    "ts_holt_linear" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .filter(col("ts").isNotNull)
-        .withColumn("day", to_date(col("ts")))
-        .groupBy(col("event_type"), col("day"))
-        .agg(sum((col("value").cast("decimal(18,6)") * 1000000)
-            .cast("long")).as("__sm"),
-          count(col("value")).as("__cnt"))
-        // exact floor(micro_sum / count): the daily mean in micro-units
-        .select(col("event_type"), col("day"),
-          ((col("__sm") - pmod(col("__sm"), col("__cnt"))) / col("__cnt"))
-            .cast("long").as("v"))
-      graft.operators.TimeSeries.holtLinear(daily)
-        .orderBy(col("event_type"))
-    }),
-
-    // ----- classical additive decomposition of the same daily series:
-    // centered-7-day-MA trend + day-of-week seasonal + residual, all in
-    // exact micro-unit integer arithmetic (ts_holt_linear's discipline)
-    "ts_seasonal_decompose" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .filter(col("ts").isNotNull)
-        .withColumn("day", to_date(col("ts")))
-        .groupBy(col("event_type"), col("day"))
-        .agg(sum((col("value").cast("decimal(18,6)") * 1000000)
-            .cast("long")).as("__sm"),
-          count(col("value")).as("__cnt"))
-        .select(col("event_type"), col("day"),
-          ((col("__sm") - pmod(col("__sm"), col("__cnt"))) / col("__cnt"))
-            .cast("long").as("v"))
-      graft.operators.TimeSeries.seasonalDecompose(daily)
-        .orderBy(col("event_type"), col("day"))
-    }),
-
-    // ----- ABC / Pareto classification of brands by revenue share: rank
-    // by revenue, cumulative share thresholds 80/95% split the catalog
-    // into A/B/C — the inventory-policy classifier every warehouse runs.
-    // The cumulative sum stays DECIMAL through the window (a double
-    // cumsum's addition order is engine-internal — DuckDB's windowed SUM
-    // uses segment trees); one IEEE division per row at emission. The
-    // global window is |brands|-sized (25 here) — bounded key cardinality
-    // by construction, never corpus-sized
-    "w_abc_classification" -> ((s, dir) => {
-      val rev = Tables.lineitem(s, dir)
-        .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .cast("decimal(18,6)")).as("__rev"))
-      val w = Window.orderBy(col("__rev").desc, col("p_brand"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val share = col("__cum").cast("double") / col("__tot").cast("double")
-      rev
-        .withColumn("__cum", sum(col("__rev")).over(w))
-        .crossJoin(broadcast(rev.agg(sum(col("__rev")).as("__tot"))))
-        .select(col("p_brand"), col("__rev").cast("double").as("revenue"),
-          share.as("cum_share"),
-          when(share <= 0.8, "A").when(share <= 0.95, "B").otherwise("C")
-            .as("abc_class"))
-        .orderBy(col("revenue").desc, col("p_brand"))
-    }),
-
-    // ----- cumulative DISTINCT users per event type over time. A naive
-    // COUNT(DISTINCT) OVER (ROWS UNBOUNDED PRECEDING) re-scans growing
-    // state per row (and Spark refuses it outright); the scalable
-    // restatement is the first-occurrence transform — each user
-    // contributes exactly at MIN(day), so the running total of per-day
-    // first-seen counts IS the cumulative distinct count. One (type,
-    // user) aggregate + one tiny per-day window; no distinct state grows
-    // with history at any scale
-    "w_cumulative_distinct" -> ((s, dir) => {
-      val perDay = Tables.events(s, dir)
-        .filter(col("ts").isNotNull && col("user_id").isNotNull)
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(min(to_date(col("ts"))).as("day"))
-        .groupBy(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("new_users"))
-      perDay
-        .withColumn("cum_users",
-          sum(col("new_users")).over(Window.partitionBy(col("event_type"))
-            .orderBy(col("day"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .orderBy(col("event_type"), col("day"))
-    }),
-
-    // ----- Hampel/MAD robust anomaly flags over the decomposition
-    // residuals: 50%-breakdown median/MAD threshold, exact micro-unit
-    // residuals, IEEE-exact median interpolation on both engines
-    "ts_anomaly_mad" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .filter(col("ts").isNotNull)
-        .withColumn("day", to_date(col("ts")))
-        .groupBy(col("event_type"), col("day"))
-        .agg(sum((col("value").cast("decimal(18,6)") * 1000000)
-            .cast("long")).as("__sm"),
-          count(col("value")).as("__cnt"))
-        .select(col("event_type"), col("day"),
-          ((col("__sm") - pmod(col("__sm"), col("__cnt"))) / col("__cnt"))
-            .cast("long").as("v"))
-      graft.operators.TimeSeries.madAnomalies(daily)
-        .orderBy(col("event_type"), col("day"))
-    }),
-
-    // ----- offline CUSUM change-point per type over the same daily
-    // series: the max-|CUSUM| split restated over the common denominator
-    // (D_k = n*P_k - k*T) so the detector is exact BIGINT end-to-end —
-    // "when did this series shift" for a drift monitor, ties to the
-    // earliest day
-    "ts_changepoint" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .filter(col("ts").isNotNull)
-        .withColumn("day", to_date(col("ts")))
-        .groupBy(col("event_type"), col("day"))
-        .agg(sum((col("value").cast("decimal(18,6)") * 1000000)
-            .cast("long")).as("__sm"),
-          count(col("value")).as("__cnt"))
-        .select(col("event_type"), col("day"),
-          ((col("__sm") - pmod(col("__sm"), col("__cnt"))) / col("__cnt"))
-            .cast("long").as("v"))
-      graft.operators.TimeSeries.cusumChangePoint(daily)
-        .orderBy(col("event_type"))
-    }),
-
-    "ts_resample" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .filter(col("ts").isNotNull)
-        .withColumn("day", to_date(col("ts")))
-        .filter(dayofmonth(col("day")) % 3 === 1)
-        .groupBy(col("event_type"), col("day"))
-        .agg(avgExact(col("value")).as("v"))
-      graft.operators.TimeSeries.resampleLinear(daily)
-        .orderBy(col("event_type"), col("day"))
-    }),
-
-    // ----- TPC-H Q8 shape: national market share — ratio of two
-    // conditional decimal sums inside one 8-way star join (region-pruned
-    // customers, type-pruned parts, broadcast dims); IEEE division only at
-    // emission
-    "q8_market_share" -> ((s, dir) => {
-      val nat = Tables.nation(s, dir)
-      val volume = col("l_extendedprice") * (lit(1) - col("l_discount"))
-      Tables.lineitem(s, dir)
-        .join(Tables.part(s, dir).filter(col("p_type") === "STANDARD"),
-          col("l_partkey") === col("p_partkey"))
-        .join(Tables.orders(s, dir)
-          .filter(year(col("o_orderdate")).between(1996, 1997)),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nat.select(col("n_nationkey").as("__cnk"),
-          col("n_regionkey"))), col("c_nationkey") === col("__cnk"))
-        .join(broadcast(Tables.region(s, dir)
-          .filter(col("r_name") === "AMERICA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .join(Tables.supplier(s, dir), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(nat.select(col("n_nationkey").as("__snk"),
-          col("n_name").as("supp_nation"))),
-          col("s_nationkey") === col("__snk"))
-        .groupBy(year(col("o_orderdate")).as("o_year"))
-        .agg((sum(when(col("supp_nation") === "NATION_3", dec(volume))
-            .otherwise(lit(0))).cast("double") /
-          sum(dec(volume)).cast("double")).as("mkt_share"))
-        .orderBy(col("o_year"))
-    }),
-
-    // ----- TPC-H Q9 shape (adapted: profit margin vs part list price —
-    // the fixture has no partsupp, so p_retailprice stands in for
-    // ps_supplycost): per supplier-nation per year, exact decimal
-    // difference-of-products sum
-    "q9_product_profit" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .join(Tables.part(s, dir).filter(col("p_name").contains("widget")),
-          col("l_partkey") === col("p_partkey"))
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.supplier(s, dir), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(Tables.nation(s, dir)),
-          col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name").as("nation"),
-          year(col("o_orderdate")).as("o_year"))
-        .agg(sum(dec(col("l_extendedprice") * (lit(1) - col("l_discount"))) -
-            dec(col("p_retailprice") * col("l_quantity")))
-          .cast("double").as("sum_profit"))
-        .orderBy(col("nation"), col("o_year").desc)
-    }),
-
-    // ----- TPC-H Q11 shape (adapted to lineitem×part stock value): parts
-    // whose aggregate value exceeds 1/10000 of the global total — the
-    // scalar-subquery threshold carried as an EXACT decimal comparison
-    // (value*10000 > total: no double rounding in the predicate)
-    "q11_important_stock" -> ((s, dir) => {
-      val valued = Tables.lineitem(s, dir)
-        .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
-        .select(col("p_partkey"),
-          dec(col("p_retailprice") * col("l_quantity")).as("__v"))
-      val perPart = valued.groupBy(col("p_partkey"))
-        .agg(sum(col("__v")).as("__value"))
-      val total = valued.agg(sum(col("__v")).as("__total"))
-      perPart.crossJoin(broadcast(total))
-        .filter(col("__value") * 10000 > col("__total"))
-        .select(col("p_partkey"), col("__value").cast("double")
-          .as("stock_value"))
-        .orderBy(col("stock_value").desc, col("p_partkey"))
-    }),
-
-    // ----- TPC-H Q12 shape (adapted: delay class from ship-vs-order date
-    // — the fixture has no shipmode/receiptdate): priority mix per delay
-    // class, one join + one agg
-    "q12_ship_delay" -> ((s, dir) => {
-      val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      Tables.lineitem(s, dir)
-        .filter(year(col("l_shipdate")) === 1996)
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .withColumn("delay_class",
-          when(datediff(col("l_shipdate"), col("o_orderdate")) > 60,
-            lit("SLOW")).otherwise(lit("FAST")))
-        .groupBy(col("delay_class"))
-        .agg(count(when(high, lit(1))).as("high_line_count"),
-          count(when(!high, lit(1))).as("low_line_count"))
-        .orderBy(col("delay_class"))
-    }),
-
-    // ----- TPC-H Q20 shape (adapted): suppliers in NATION_5 whose 1996
-    // STANDARD-part shipped quantity clears a threshold — HAVING-gated
-    // aggregate subquery feeding a left-semi join
-    "q20_heavy_suppliers" -> ((s, dir) => {
-      val heavy = Tables.lineitem(s, dir)
-        .filter(year(col("l_shipdate")) === 1996)
-        .join(Tables.part(s, dir).filter(col("p_type") === "STANDARD"),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(dec(col("l_quantity"))).as("__qty"))
-        .filter(col("__qty") > 100)
-      Tables.supplier(s, dir)
-        .join(broadcast(Tables.nation(s, dir)
-          .filter(col("n_name") === "NATION_5")),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(heavy, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select(col("s_name"))
-        .orderBy(col("s_name"))
-    }),
-
-    // ----- TPC-H Q21 shape (adapted lateness predicate): suppliers whose
-    // line was the ONLY late one in a multi-supplier finished order —
-    // EXISTS decorrelated to a conditioned left-semi, NOT EXISTS to a
-    // conditioned left-anti, both on the order key
-    "q21_waiting_suppliers" -> ((s, dir) => {
-      val late = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir).filter(col("o_orderstatus") === "F")
-          .select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .filter(datediff(col("l_shipdate"), col("o_orderdate")) > 60)
-        .select(col("l_orderkey"), col("l_suppkey")).distinct()
-      val others = Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("__o"), col("l_suppkey").as("__s"))
-        .distinct()
-      val lateOthers = late
-        .select(col("l_orderkey").as("__o"), col("l_suppkey").as("__s"))
-      val cand = late
-        .join(others, col("l_orderkey") === col("__o") &&
-          col("__s") =!= col("l_suppkey"), "left_semi")
-        .join(lateOthers, col("l_orderkey") === col("__o") &&
-          col("__s") =!= col("l_suppkey"), "left_anti")
-      cand.join(Tables.supplier(s, dir),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_name"))
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name"))
-        .limit(10)
-    }),
-
-    // ----- file-stats manifest data skipping (Iceberg manifests / Delta
-    // add-file stats): orders staged CLUSTERED on o_orderdate, a
-    // |files|-row (min,max,rows) manifest built in one pass, and the 1996
-    // range query opens only stat-overlapping files — stats prune FILES,
-    // the exact predicate prunes rows. StatsManifestSpec asserts
-    // files_read < files_total; the gate is semantic identity with the
-    // plain scan (sources/StatsManifest scaladoc)
-    "s_manifest_prune" -> ((s, dir) => {
-      val store = scratchDir("manifest-store")
-      graft.sources.StatsManifest.writeClustered(
-        Tables.orders(s, dir), store, "o_orderdate", nFiles = 8)
-      val manifest = graft.sources.StatsManifest.build(s, store, "o_orderdate")
-      val lo = to_timestamp(lit("1996-01-01"))
-      val hi = to_timestamp(lit("1997-01-01"))
-      val (scan, _, _) = graft.sources.StatsManifest.prunedScan(
-        s, manifest, "o_orderdate", lo, hi)
-      scan.groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,6)")).cast("double")
-            .as("total"))
-        .orderBy(col("month"))
-    }),
-
-    // ----- Z-order (Morton) clustering key: the multi-dimensional layout
-    // primitive — literal-shift bit interleave of two normalized dims, so
-    // parquet min/max stats prune on EITHER column (see operators/ZOrder;
-    // the layout win itself is asserted in ZOrderSpec's bounding-box test)
-    "s_zorder" -> ((s, dir) => {
-      val day = datediff(col("o_orderdate"), to_date(lit("1995-01-01")))
-      val z = graft.operators.ZOrder.zValue(
-        Seq(pmod(col("o_custkey"), lit(1024)), pmod(day, lit(1024))),
-        bits = 10)
-      Tables.orders(s, dir)
-        .filter(col("o_orderkey") % 97 === 0)
-        .select(col("o_orderkey"), z.as("zval"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // ----- index-quality measurement: recall@5 of the LSH-bucketed path
-    // against exhaustive cosine ground truth, per query — the acceptance
-    // metric that decides nProbe/band settings before an index ships.
-    // Reuses both gated pipelines and counts the overlap of their top-k
-    // sets; ground-truth side stays top-k-bounded, never all-pairs.
-    "ann_recall_report" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val queries = embs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").as("q_embedding"))
-      val brute = Similarity.bruteForceTopK(embs, queries, k = 5)
-        .select(col("query_id"), col("vec_id"))
-      val approx = Similarity.lshTopK(embs, queries, k = 5)
-        .select(col("query_id"), col("vec_id"))
-      val hits = brute.join(approx, Seq("query_id", "vec_id"), "left_semi")
-        .groupBy(col("query_id")).agg(count(lit(1)).as("n_hits"))
-      queries.select(col("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          (coalesce(col("n_hits"), lit(0L)).cast("double") / lit(5.0))
-            .as("recall_at_5"))
-        .orderBy(col("query_id"))
-    }),
-
-    // ----- matryoshka truncation audit: recall@5 of TRUNCATED-dimension
-    // cosine search against the full-dimension brute-force truth — the
-    // serving question MRL embeddings pose (how many dims can be dropped
-    // before retrieval degrades). Truncation is a slice; each dimension
-    // tier reuses the gated brute-force ranker; at scale the truth frame
-    // is persisted once and every tier is a broadcast-sized top-k join
-    "embed_matryoshka_recall" -> ((s, dir) => {
-      val embs = Tables.embeddings(s, dir)
-      val queries = embs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"),
-          col("embedding").as("q_embedding"))
-      val truth = Similarity.bruteForceTopK(embs, queries, k = 5)
-        .select(col("query_id"), col("vec_id"))
-      Seq(64, 32, 16).map { d =>
-        val embsD = embs.select(col("vec_id"),
-          slice(col("embedding"), 1, d).as("embedding"))
-        val qD = queries.select(col("query_id"),
-          slice(col("q_embedding"), 1, d).as("q_embedding"))
-        val approx = Similarity.bruteForceTopK(embsD, qD, k = 5)
-          .select(col("query_id"), col("vec_id"))
-        val hits = truth.join(approx, Seq("query_id", "vec_id"), "left_semi")
-          .groupBy(col("query_id")).agg(count(lit(1)).as("n_hits"))
-        queries.select(col("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(lit(d.toLong).as("dims"), col("query_id"),
-            coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-            (coalesce(col("n_hits"), lit(0L)).cast("double") / lit(5.0))
-              .as("recall_at_5"))
-      }.reduce(_ unionByName _)
-        .orderBy(col("dims").desc, col("query_id"))
-    }),
-
-    // ----- window value-function family: LEAD, running FIRST_VALUE,
-    // forward LAST_VALUE, and NTH_VALUE over explicit row frames — pure
-    // value picks on a unique order key, so cross-engine determinism needs
-    // no carriers
-    "w_value_family" -> ((s, dir) => {
-      val w = Window.partitionBy(col("event_type")).orderBy(col("event_id"))
-      Tables.events(s, dir)
-        .filter(col("event_id") % 20 === 0)
-        .select(col("event_type"), col("event_id"), col("value"),
-          lead(col("value"), 2).over(w).as("lead2"),
-          first(col("value")).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .as("first_cum"),
-          last(col("value")).over(
-            w.rowsBetween(Window.currentRow, Window.unboundedFollowing))
-            .as("last_fwd"),
-          nth_value(col("value"), 3).over(
-            w.rowsBetween(Window.unboundedPreceding,
-              Window.unboundedFollowing)).as("third_of_type"))
-        .orderBy(col("event_type"), col("event_id"))
-    }),
-
-    // ----- sub-document duplication: asymmetric containment |A∩B|/|A| on
-    // planted prefix-copies (+ a marker tail so containment is < 1 but
-    // high) — catches a chunk pasted inside a larger doc, which symmetric
-    // Jaccard misses; pair source is the planted truncation map (the
-    // verify operator is candidate-source-agnostic)
-    "dedup_containment" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .filter(col("text").isNotNull && length(col("text")) >= 20)
-        .select(col("doc_id"), col("text"))
-      val half = docs.select((col("doc_id") + 200000).as("doc_id"),
-        concat(col("text").substr(lit(1), floor(length(col("text")) / 2)
-          .cast("int")), lit(" <tail-marker>")).as("text"))
-      val corpus = docs.unionByName(half)
-      val pairs = docs.select((col("doc_id") + 200000).as("a"),
-        col("doc_id").as("b"))
-      val charGrams = corpus.select(col("doc_id"),
-        transform(graft.functions.TextExprs.charShingles(col("text"), 5),
-          sh => xxhash64(sh)).as("sh"))
-      Dedup.containmentVerify(pairs, charGrams, "doc_id", threshold = 0.8)
-        .orderBy(col("a"), col("b"))
-    }),
-
-    // ----- line-level boilerplate removal (CCNet paragraph dedup / C4
-    // boilerplate stripping): lines occurring in >= 10 distinct docs are
-    // corpus chrome and get stripped; unique body lines survive in order.
-    // Fixture texts are single-line and distinct, so the planted footers
-    // (per-source nav line, df=25 at sf0.01; global legal line, df=|docs|)
-    // are exactly the boilerplate and every body survives — removal is
-    // verified by exact reassembled text, not just counts
-    "dedup_boilerplate" -> ((s, dir) => {
-      val planted = Tables.documents(s, dir)
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          concat(col("text"),
-            lit("\nsubscribe to "), col("source"), lit(" updates"),
-            lit("\nall rights reserved")).as("text"))
-      Dedup.boilerplateLines(planted, minDocFreq = 10)
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- interval × interval overlap join (campaign-vs-session shape):
-    // cell-replicated equi-join bounded by per-cell density — never the
-    // cross product — with exactly-once pair ownership by the
-    // intersection-start cell (no distinct pass); see
-    // RangeJoin.intervalOverlap
-    "j_interval_overlap" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).withColumn("us", unix_micros(col("ts")))
-      val left = ev.filter(col("event_id") % 50 === 0)
-        .select(col("event_id").as("l_id"), col("us").as("l_lo"),
-          (col("us") + 1800000000L).as("l_hi"))
-      val right = ev.filter(col("event_id") % 137 === 0)
-        .select(col("event_id").as("r_id"), col("us").as("r_lo"),
-          (col("us") + 2700000000L).as("r_hi"))
-      graft.operators.RangeJoin.intervalOverlap(left, right,
-          "l_lo", "l_hi", "r_lo", "r_hi", bucketWidth = 3.6e9)
-        .select(col("l_id"), col("r_id"),
-          (least(col("l_hi"), col("r_hi")) -
-            greatest(col("l_lo"), col("r_lo"))).as("overlap_us"))
-        .orderBy(col("l_id"), col("r_id"))
-    }),
-
-    // ----- conditional/selective aggregate family: count_if, bool_and,
-    // bool_or, max_by/min_by (arg-max on the unique event_id key, so the
-    // pick is deterministic) — one agg pass, no self-joins
-    "a_agg_family" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(count_if(col("value") > 100).as("n_big"),
-          bool_and(col("value").isNotNull).as("all_valued"),
-          bool_or(col("value") > 900).as("any_huge"),
-          max_by(unix_micros(col("ts")), col("event_id")).as("us_of_last"),
-          min_by(unix_micros(col("ts")), col("event_id")).as("us_of_first"))
-        .orderBy(col("event_type"))),
-
-    // ----- dynamic partition overwrite: correct ONE day's partition in a
-    // day-partitioned store and leave every other partition's files
-    // untouched (partitionOverwriteMode=dynamic — the lakehouse
-    // backfill/correction op); gate = the re-read store equals the events
-    // table with that day's values doubled
-    // ----- snapshot isolation + TIME TRAVEL: three commits (append,
-    // append, logical overwrite) into a transaction-logged store, then
-    // each historical version read back AS OF its commit — the overwrite
-    // must leave versions 1-2 readable (immutable files + log replay,
-    // SnapshotStore scaladoc)
-    // ----- WRITE-AUDIT-PUBLISH: stage each batch outside the log, audit
-    // the staged bytes, publish (metadata-only commit) only on pass. The
-    // clean batch publishes; the batch with planted NULL-text rows fails
-    // its audit and is discarded — the final table must contain exactly
-    // base + clean batch, proving staged data never leaked to readers
-    "s_write_audit_publish" -> ((s, dir) => {
-      val store = scratchDir("wap") + "/tbl"
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-      graft.sources.SnapshotStore.commitAppend(
-        docs.filter(col("doc_id") % 3 === 0), store)
-      def audit(branch: String): Long =
-        graft.sources.SnapshotStore.readBranch(s, store, branch)
-          .filter(col("text").isNull).count()
-      graft.sources.SnapshotStore.stageBranch(
-        docs.filter(col("doc_id") % 3 === 1), store, "batch-a")
-      require(audit("batch-a") == 0, "clean batch must pass its audit")
-      graft.sources.SnapshotStore.publishBranch(store, "batch-a")
-      graft.sources.SnapshotStore.stageBranch(
-        docs.filter(col("doc_id") % 3 === 2)
-          .withColumn("text",
-            when(col("doc_id") % 7 === 0, lit(null: String))
-              .otherwise(col("text"))),
-        store, "batch-b")
-      require(audit("batch-b") > 0, "the planted violations must be seen")
-      graft.sources.SnapshotStore.discardBranch(store, "batch-b")
-      graft.sources.SnapshotStore.snapshotAt(s, store,
-          graft.sources.SnapshotStore.currentVersion(store))
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- zero-copy SHALLOW CLONE: the clone's first commit references
-    // the source's live files (no data movement — spec pins that no new
-    // parquet appears); writes then diverge independently. The gate
-    // appends only to the clone and reads both tables — the source must
-    // be unaffected, the clone must see base + its own append
-    "s_clone_shallow" -> ((s, dir) => {
-      val root = scratchDir("clone")
-      val src = s"$root/src"
-      val tgt = s"$root/tgt"
-      val ev = Tables.events(s, dir).select(col("event_id"), col("value"))
-      graft.sources.SnapshotStore.commitAppend(
-        ev.filter(col("event_id") % 4 === 0), src)
-      graft.sources.SnapshotStore.cloneShallow(src, tgt)
-      graft.sources.SnapshotStore.commitAppend(
-        ev.filter(col("event_id") % 4 === 1), tgt)
-      def state(tag: String, store: String) =
-        graft.sources.SnapshotStore.snapshotAt(s, store,
-            graft.sources.SnapshotStore.currentVersion(store))
-          .agg(count(lit(1)).as("n"), sumExact(col("value")).as("total"))
-          .select(lit(tag).as("table_tag"), col("n"), col("total"))
-      state("clone", tgt).unionByName(state("source", src))
-        .orderBy(col("table_tag"))
-    }),
-
-    "s_time_travel" -> ((s, dir) => {
-      val store = scratchDir("timetravel") + "/tbl"
-      val ev = Tables.events(s, dir).select(col("event_id"), col("value"))
-      graft.sources.SnapshotStore.commitAppend(
-        ev.filter(col("event_id") % 3 === 0), store)
-      graft.sources.SnapshotStore.commitAppend(
-        ev.filter(col("event_id") % 3 === 1), store)
-      graft.sources.SnapshotStore.commitOverwrite(
-        ev.filter(col("event_id") % 3 === 2), store)
-      (1 to 3).map(v =>
-          graft.sources.SnapshotStore.snapshotAt(s, store, v)
-            .agg(count(lit(1)).as("n"), sumExact(col("value")).as("total"))
-            .select(lit(v).as("version"), col("n"), col("total")))
-        .reduce(_ unionByName _)
-        .orderBy(col("version"))
-    }),
-
-    // ----- per-file BLOOM data skipping (sources/BloomSkip): the store
-    // is clustered on user_id, so event_id — the point-lookup key — is
-    // scattered and file [min,max] intervals cover most probes; the
-    // bloom strictly beats min/max here (asserted in BloomSkipSpec,
-    // along with zero false negatives). The per-file bloom
-    // admits only the files that can contain the probed keys (false
-    // positives cost I/O, never correctness); the gate requires that
-    // files were actually skipped, and the oracle states the lookup
-    // semantics directly
-    "s_bloom_file_skip" -> ((s, dir) => {
-      val store = bloomSkipSpool(s, dir)
-      val manifest = graft.sources.BloomSkip.build(s, store, "event_id")
-      val (df, read, total) = graft.sources.BloomSkip.lookupScan(
-        s, store, manifest, "event_id", Seq(7L, 123L, 876L))
-      require(read < total, s"bloom pruned nothing ($read of $total files)")
-      df.select(col("event_id"), col("event_type"),
-          col("value").cast("double").as("value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // ----- incremental consumption between snapshots (Iceberg
-    // incremental append scan / Delta CDF appends): a consumer that last
-    // saw version `from` catches up by reading ONLY the files added in
-    // (from, to] and still live at `to` — resolved from the log, never by
-    // diffing snapshots. The second window pins the net-changes rule: v3's
-    // batch is added inside (2,4] but v4's overwrite removes it, so the
-    // catch-up sees only v4's data
-    "s_incremental_read" -> ((s, dir) => {
-      val store = scratchDir("increread") + "/tbl"
-      val ev = Tables.events(s, dir).select(col("event_id"), col("value"))
-      (0 to 2).foreach(m => graft.sources.SnapshotStore.commitAppend(
-        ev.filter(col("event_id") % 4 === m), store))
-      graft.sources.SnapshotStore.commitOverwrite(
-        ev.filter(col("event_id") % 4 === 3), store)
-      def window(tag: String, from: Int, to: Int) =
-        graft.sources.SnapshotStore.readIncremental(s, store, from, to)
-          .agg(count(lit(1)).as("n"), sumExact(col("value")).as("total"))
-          .select(lit(tag).as("step"), col("n"), col("total"))
-      window("v1->v3", 1, 3).unionByName(window("v2->v4", 2, 4))
-        .orderBy(col("step"))
-    }),
-
-    // ----- retention vacuum: after append/append/overwrite, physically
-    // delete every file unreferenced past the horizon (require(dead
-    // .nonEmpty) makes the deletion part of the gate), then the retained
-    // head version must still read in full — the storage bound that makes
-    // time travel affordable, and the step that makes an erasure FINAL
-    "s_vacuum_retention" -> ((s, dir) => {
-      val store = scratchDir("vacuum") + "/tbl"
-      val ev = Tables.events(s, dir).select(col("event_id"), col("value"))
-      graft.sources.SnapshotStore.commitAppend(
-        ev.filter(col("event_id") % 3 === 0), store)
-      graft.sources.SnapshotStore.commitAppend(
-        ev.filter(col("event_id") % 3 === 1), store)
-      graft.sources.SnapshotStore.commitOverwrite(
-        ev.filter(col("event_id") % 3 === 2), store)
-      val dead = graft.sources.SnapshotStore.vacuum(store, retainFrom = 3)
-      require(dead.nonEmpty,
-        "vacuum found nothing to delete after an overwrite — broken replay")
-      graft.sources.SnapshotStore.snapshotAt(s, store, 3)
-        .agg(count(lit(1)).as("n"), sumExact(col("value")).as("total"))
-    }),
-
-    // ----- GDPR/LGPD keyed erasure over a partitioned store: rewrite
-    // ONLY the partitions that can contain the subjects' rows (partition
-    // pruning on the same mod rule that laid the store out), keep
-    // untouched partitions' files byte-identical, and null-safely keep
-    // null-keyed rows (Erasure scaladoc — incl. the emptied-partition
-    // edge dynamic overwrite misses)
-    "s_gdpr_delete" -> ((s, dir) => {
-      val store = scratchDir("gdpr") + "/store"
-      val victims = Seq(1L, 5L, 9L)
-      Tables.events(s, dir)
-        .withColumn("cohort", pmod(col("user_id"), lit(8)).cast("int"))
-        .write.partitionBy("cohort").mode("overwrite").parquet(store)
-      graft.sources.Erasure.eraseFromStore(s, store, "cohort",
-        affectedPartitions = victims.map(_ % 8).distinct,
-        keep = !coalesce(col("user_id").isin(victims: _*), lit(false)))
-      s.read.parquet(store)
-        .groupBy(col("cohort"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("user_id")).as("n_users"),
-          sumExact(col("value")).as("total"))
-        .orderBy(col("cohort"))
-    }),
-
-    // ----- dynamic partition pruning: a day-partitioned fact joined to a
-    // filtered on-disk dim whose qualifying keys are unknowable at plan
-    // time — Spark inserts a dynamicpruning subquery into the fact scan's
-    // PartitionFilters, so only the 3 qualifying day directories are read
-    // (the plan feature that turns a 100-TB star-join scan into a
-    // 3-partition scan; plan shape + scanned-partition count pinned in
-    // DppSpec). The gate's value is the MECHANISM — the result itself is
-    // an ordinary filtered aggregate the oracle restates directly
-    "s_dpp_prune" -> ((s, dir) => {
-      val store = scratchDir("dpp")
-      val ev = Tables.events(s, dir).withColumn("day", to_date(col("ts")))
-      ev.write.partitionBy("day").mode("overwrite").parquet(store + "/fact")
-      // the dim predicate must be a genuine comparison (tag = 'pick'): a
-      // bare boolean column simplifies to an attribute reference, which
-      // the DPP rule's isLikelySelective test rejects — no pruning
-      ev.select(col("day")).filter(col("day").isNotNull).distinct()
-        .orderBy(col("day")).limit(3)
-        .withColumn("tag", lit("pick"))
-        .write.mode("overwrite").parquet(store + "/dim")
-      val fact = s.read.parquet(store + "/fact")
-      val d = s.read.parquet(store + "/dim").filter(col("tag") === "pick")
-      fact.join(d.select(col("day")), Seq("day"))
-        .groupBy(col("day"))
-        .agg(count(lit(1)).as("n"), sumExact(col("value")).as("total"))
-        .orderBy(col("day"))
-    }),
-
-    // ----- partition-spec EVOLUTION (Iceberg-style): legacy data stays
-    // month-partitioned, new data is day-partitioned, and ONE read path
-    // serves both by translating the predicate per layout — month
-    // pruning + residual day filter on the legacy store, direct day
-    // pruning on the current one (old data keeps its coarser pruning
-    // granularity; nothing is rewritten). Pruned-directory sets are
-    // pinned in PartitionEvolutionSpec
-    "s_partition_evolution" -> ((s, dir) => {
-      val root = scratchDir("partevo")
-      val ev = Tables.events(s, dir).filter(col("ts").isNotNull)
-        .withColumn("day", to_date(col("ts")))
-      val d0 = ev.agg(min(col("day"))).collect().head.getDate(0).toLocalDate
-      val cut = java.sql.Date.valueOf(d0.plusDays(15))
-      ev.filter(col("day") < lit(cut)).drop("day")
-        .withColumn("month", date_format(to_date(col("ts")), "yyyy-MM"))
-        .write.partitionBy("month").mode("overwrite").parquet(s"$root/legacy")
-      ev.filter(col("day") >= lit(cut))
-        .write.partitionBy("day").mode("overwrite").parquet(s"$root/current")
-      val lo = java.sql.Date.valueOf(d0.plusDays(10))
-      val hi = java.sql.Date.valueOf(d0.plusDays(20))
-      val months = Iterator.iterate(d0.plusDays(10))(_.plusDays(1))
-        .takeWhile(!_.isAfter(d0.plusDays(20)))
-        .map(d => f"${d.getYear}%04d-${d.getMonthValue}%02d").toSeq.distinct
-      val legacy = s.read.parquet(s"$root/legacy")
-        .filter(col("month").isin(months: _*)) // partition prune (coarse)
-        .filter(to_date(col("ts")).between(lit(lo), lit(hi))) // residual
-        .select(col("event_id"), to_date(col("ts")).as("day"), col("value"))
-      val current = s.read.parquet(s"$root/current")
-        .filter(col("day").between(lit(lo), lit(hi))) // partition prune
-        .select(col("event_id"), col("day"), col("value"))
-      legacy.unionByName(current)
-        .groupBy(col("day"))
-        .agg(count(lit(1)).as("n"), sumExact(col("value")).as("total"))
-        .orderBy(col("day"))
-    }),
-
-    // ----- lakehouse: merge-on-read deletes via DELETION VECTORS — two
-    // delete transactions write key sidecars (base files untouched, the
-    // complement of s_gdpr_delete's copy-on-write rewrite); the read
-    // subtracts the broadcast union of sidecars from the base scan.
-    // No-rewrite + compaction-equivalence proven in DeletionVectorsSpec
-    "s_deletion_vectors" -> ((s, dir) => {
-      val store = scratchDir("dv") + "/store"
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      graft.sources.DeletionVectors.writeBase(docs, store)
-      graft.sources.DeletionVectors.deleteKeys(
-        docs.filter(pmod(col("doc_id"), lit(7)) === 3), store, txnId = 1)
-      graft.sources.DeletionVectors.deleteKeys(
-        docs.filter(pmod(col("doc_id"), lit(11)) === 5), store, txnId = 2)
-      graft.sources.DeletionVectors.readMerged(s, store)
-        .orderBy(col("doc_id"))
-    }),
-
-    "s_dynamic_overwrite" -> ((s, dir) => {
-      val store = scratchDir("dynover") + "/store"
-      val ev = Tables.events(s, dir)
-        .withColumn("day", to_date(col("ts")))
-      ev.write.partitionBy("day").mode("overwrite").parquet(store)
-      val target = ev.agg(min(col("day"))).collect().head.getDate(0)
-      ev.filter(col("day") === lit(target))
-        .withColumn("value", col("value") * 2)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day").parquet(store)
-      s.read.parquet(store)
-        .groupBy(col("day"))
-        .agg(count(lit(1)).as("n"), sumExact(col("value")).as("total"))
-        .orderBy(col("day"))
-    }),
-
-    // ----- JSONL interchange round-trip: the de-facto training-corpus
-    // wire format (one JSON object per line). Write the documents table as
-    // JSONL, re-read with an EXPLICIT schema (schema-on-read without an
-    // inference pass — an inference scan doubles the read at 100 TB), and
-    // gate full row identity against the parquet original: text, ids and
-    // counts must survive the serialization byte-for-byte
-    "s_jsonl_roundtrip" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("n_chars"))
-      val out = scratchDir("jsonl") + "/docs"
-      docs.write.mode("overwrite").json(out)
-      s.read.schema(docs.schema).json(out).orderBy(col("doc_id"))
-    }),
-
-    // ----- ORC round-trip (the second columnar format next to parquet —
-    // a lakehouse ingests both): corpus written lang-PARTITIONED as ORC,
-    // read back through a partition filter, so the gate covers the ORC
-    // writer/reader path AND directory-level partition pruning on it
-    // (only the en/de partitions are listed; ScaleSpec asserts the
-    // pruned scan). String/int fidelity is row-for-row vs parquet truth.
-    "s_orc_roundtrip" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("n_chars"))
-      val out = scratchDir("orc") + "/docs"
-      docs.write.mode("overwrite").partitionBy("lang").orc(out)
-      s.read.orc(out)
-        .filter(col("lang").isin("en", "de"))
-        .select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // ----- re-aggregatable sketch partials (the warehouse rollup
-    // discipline): per-(type, day) HLL sketches stored as binary state,
-    // merged per type with hll_union_agg — distinct-count rollups without
-    // re-reading the fact table. Estimate gated by a 5% band around the
-    // exact count (same contract as a_approx_distinct: the sketch bytes
-    // are engine-internal by design)
-    "a_hll_partials" -> ((s, dir) => {
-      val partials = Tables.events(s, dir)
-        .withColumn("day", to_date(col("ts")))
-        .groupBy(col("event_type"), col("day"))
-        .agg(hll_sketch_agg(col("user_id")).as("sk"),
-          countDistinct(col("user_id")).as("__d"))
-      val exact = Tables.events(s, dir).groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("exact_users"))
-      partials.groupBy(col("event_type"))
-        .agg(hll_sketch_estimate(hll_union_agg(col("sk")))
-          .as("__approx"), count(lit(1)).as("n_partials"))
-        .join(exact, Seq("event_type"))
-        .select(col("event_type"), col("n_partials"), col("exact_users"),
-          (abs(col("__approx") - col("exact_users")).cast("double") /
-            col("exact_users") <= 0.05).as("merge_ok"))
-        .orderBy(col("event_type"))
-    }),
-
-    // ----- theta sketch set algebra (Apache DataSketches): distinct-user
-    // union / intersection / difference across behavior segments computed
-    // on SKETCH STATE, never re-reading raw keys — the set arithmetic HLL
-    // cannot do (HLL unions but never intersects/differences). The
-    // audience-overlap primitive at 100 TB: one sketch per segment, set
-    // ops compose on the driver-sized state. Estimates gated by the 5%
-    // band around the exact rollup (a_hll_partials contract; at gate
-    // scale theta runs in exact mode, so the band is tight by design).
-    "a_theta_setops" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .filter(col("user_id").isNotNull &&
-          col("event_type").isin("click", "purchase"))
-      val sk = ev.groupBy(col("event_type"))
-        .agg(theta_sketch_agg(col("user_id")).as("sk"),
-          countDistinct(col("user_id")).as("exact"))
-      val a = sk.filter(col("event_type") === "click")
-        .select(col("sk").as("ska"), col("exact").as("n_click_users"))
-      val b = sk.filter(col("event_type") === "purchase")
-        .select(col("sk").as("skb"), col("exact").as("n_purchase_users"))
-      val ex = ev.groupBy(col("user_id")).agg(
-          max(when(col("event_type") === "click", 1).otherwise(0)).as("c"),
-          max(when(col("event_type") === "purchase", 1).otherwise(0)).as("p"))
-        .agg(count(lit(1)).as("exact_union"),
-          sum(when(col("c") === 1 && col("p") === 1, 1L).otherwise(0L))
-            .as("exact_inter"),
-          sum(when(col("c") === 1 && col("p") === 0, 1L).otherwise(0L))
-            .as("exact_click_only"))
-      // empty-set edge: theta ops over no rows estimate NULL/0 and the
-      // relative band is undefined — exact-zero demands estimate zero
-      def ok(est: Column, exact: Column) = {
-        val e = coalesce(est.cast("double"), lit(0.0))
-        when(exact === 0, e === 0.0).otherwise(abs(e - exact) / exact <= 0.05)
-      }
-      a.crossJoin(b).crossJoin(broadcast(ex))
-        .select(col("n_click_users"), col("n_purchase_users"),
-          col("exact_union"), col("exact_inter"), col("exact_click_only"),
-          ok(theta_sketch_estimate(theta_union(col("ska"), col("skb"))),
-            col("exact_union")).as("union_ok"),
-          ok(theta_sketch_estimate(theta_intersection(col("ska"), col("skb"))),
-            col("exact_inter")).as("inter_ok"),
-          ok(theta_sketch_estimate(theta_difference(col("ska"), col("skb"))),
-            col("exact_click_only")).as("diff_ok"))
-    }),
-
-    // ----- built-in session_window sessionization (the declarative twin
-    // of the flatMapGroupsWithState path): one groupBy, Spark merges
-    // gap-bounded windows internally; oracle is the gaps-and-islands
-    // restatement with the >= break matching session_window's exclusive
-    // end
-    "sessionize_builtin" -> ((s, dir) =>
-      Tables.events(s, dir).filter(col("ts").isNotNull)
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "30 minutes").as("__sw"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          sumExact(col("value")).as("total_value"))
-        .select(col("user_id"), col("n_events"), col("session_start"),
-          col("session_end"), col("total_value"))
-        .orderBy(col("user_id"), col("session_start")))
-  )
-
-  /** EWMA horizon and exact decimal weights: 0.7^j = ewmaWeightNum(j)/10^7
-    * for j < [[EwmaK]] — integer numerators so both engines carry the
-    * weighted sum exactly (see `w_ewma`). */
-  private val EwmaK = 8
-  private def ewmaWeightNum(j: Int): Long =
-    (BigInt(7).pow(j) * BigInt(10).pow(EwmaK - 1 - j)).toLong
-
-  def oracleSql: Map[String, String] = Map(
-    "flagship_taxa_variacao" -> TaxaVariacao.oracleSql,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) / COUNT(l_quantity) AS avg_qty,
-        |  COUNT(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "j1_star_join" ->
-      """SELECT r_name, n_name, CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS ano,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS receita,
-        |  COUNT(*) AS n_pedidos
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name, ano
-        |ORDER BY r_name, n_name, ano""".stripMargin,
-
-    "s8_dim_tempo" ->
-      s"""WITH months AS (
-         |  SELECT DISTINCT date_trunc('month', o_orderdate) AS ano_mes FROM orders
-         |), base AS (
-         |  SELECT CAST(ROW_NUMBER() OVER (ORDER BY ano_mes) AS INTEGER) AS tempo_key,
-         |         CAST(ano_mes AS DATE) AS ano_mes,
-         |         CAST(EXTRACT(year FROM ano_mes) AS INTEGER) AS ano,
-         |         CAST(EXTRACT(month FROM ano_mes) AS INTEGER) AS mes,
-         |         CAST(EXTRACT(quarter FROM ano_mes) AS INTEGER) AS trimestre,
-         |         CAST(FLOOR((EXTRACT(month FROM ano_mes) - 1) / 6) + 1 AS INTEGER) AS semestre
-         |  FROM months
-         |)
-         |SELECT tempo_key, ano_mes, ano, mes, $mesNomeSql AS mes_nome,
-         |       trimestre, semestre
-         |FROM base ORDER BY tempo_key""".stripMargin,
-
-    "s8_dim_grupo" ->
-      """WITH ks AS (
-        |  SELECT DISTINCT o_orderpriority AS k FROM orders
-        |  WHERE o_orderpriority IS NOT NULL
-        |)
-        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY k) AS INTEGER) AS grupo_key,
-        |  k AS grupo_codigo, k AS grupo_nome,
-        |  upper(regexp_replace(k, '[^A-Za-z0-9]+', '_', 'g'))
-        |    AS grupo_normalizado,
-        |  TRUE AS ativo
-        |FROM ks ORDER BY grupo_key""".stripMargin,
-
-    "s8_dim_servico" ->
-      """WITH ks AS (
-        |  SELECT DISTINCT o_orderstatus AS k FROM orders
-        |  WHERE o_orderstatus IS NOT NULL
-        |)
-        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY k) AS INTEGER)
-        |    AS servico_key,
-        |  k AS servico_codigo, k AS servico_nome,
-        |  'Servico ' || k AS servico_descricao,
-        |  TRUE AS ativo
-        |FROM ks ORDER BY servico_key""".stripMargin,
-
-    "s8_dim_variavel" ->
-      """WITH ks AS (SELECT DISTINCT 'TOTALPRICE' AS k FROM orders)
-        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY k) AS INTEGER)
-        |    AS variavel_key,
-        |  k AS variavel_codigo, k AS variavel_nome,
-        |  'Variavel ' || k AS variavel_descricao,
-        |  TRUE AS ativo
-        |FROM ks ORDER BY variavel_key""".stripMargin,
-
-    "r1_unpivot" ->
-      """WITH src AS (
-        |  SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice,
-        |         l_discount, l_tax
-        |  FROM lineitem WHERE l_orderkey % 100 = 0
-        |)
-        |SELECT l_orderkey, l_linenumber, variavel, valor FROM (
-        |  SELECT l_orderkey, l_linenumber, 'l_quantity' AS variavel, l_quantity AS valor FROM src
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM src
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM src
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM src
-        |)
-        |ORDER BY l_orderkey, l_linenumber, variavel""".stripMargin,
-
-    "w3_forward_fill" ->
-      """SELECT event_id, user_id,
-        |  LAST_VALUE(CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END IGNORE NULLS)
-        |    OVER (PARTITION BY user_id ORDER BY event_id
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value
-        |FROM events
-        |ORDER BY event_id""".stripMargin,
-
-    "s7_fact_load" -> s7FactLoadSql,
-
-    // the JDBC round trip loads ONE batch twice (replay) instead of one
-    // doubled batch — first-wins dedup makes both equal to a single
-    // load, so the oracle is the s7 statement over the gate's bounded
-    // quarter-batch
-    "s_jdbc_fact_load" -> factLoadSql("WHERE o_orderkey % 4 = 0"),
-
-    // double streaming replay == one load (the exactly-once contract)
-    "stream_jdbc_exactly_once" -> factLoadSql("WHERE o_orderkey % 4 = 0"),
-
-    // final state after batch 1 (insert) + batch 2 (updated names + one
-    // new code): every code carries the v2 name, ZZ_NEW inserted
-    "s_jdbc_dim_upsert" ->
-      """WITH codes AS (
-        |  SELECT DISTINCT o_orderpriority AS grupo_codigo FROM orders
-        |  WHERE o_orderpriority IS NOT NULL
-        |  UNION ALL SELECT 'ZZ_NEW'
-        |)
-        |SELECT grupo_codigo,
-        |  grupo_codigo || ' v2' AS grupo_nome,
-        |  upper(regexp_replace(grupo_codigo, '[^A-Za-z0-9]+', '_', 'g'))
-        |    AS grupo_normalizado,
-        |  TRUE AS ativo
-        |FROM codes ORDER BY grupo_codigo""".stripMargin,
-
-    "p1_clean_filter" ->
-      """SELECT doc_id,
-        |  regexp_replace(trim(text), '\s+', ' ', 'g') AS texto_limpo,
-        |  upper(lang) AS lang
-        |FROM documents
-        |WHERE text IS NOT NULL AND trim(text) <> ''
-        |ORDER BY doc_id""".stripMargin,
-
-    "f12_locale_parse" ->
-      """WITH dirty AS (
-        |  SELECT event_id,
-        |    CASE WHEN event_id % 11 = 0 THEN '-'
-        |         WHEN event_id % 13 = 0 THEN ''
-        |         ELSE replace(CAST(value AS VARCHAR), '.', ',') || '%'
-        |    END AS bruto
-        |  FROM events
-        |)
-        |SELECT event_id, bruto,
-        |  TRY_CAST(replace(replace(trim(bruto), '%', ''), ',', '.') AS DOUBLE) AS valor
-        |FROM dirty
-        |WHERE TRY_CAST(replace(replace(trim(bruto), '%', ''), ',', '.') AS DOUBLE) IS NOT NULL
-        |ORDER BY event_id""".stripMargin,
-
-    // first-match rule order restated: blank before unparseable
-    "p2_quarantine_split" ->
-      """WITH dirty AS (
-        |  SELECT event_id,
-        |    CASE WHEN event_id % 11 = 0 THEN '-'
-        |         WHEN event_id % 13 = 0 THEN ''
-        |         WHEN event_id % 17 = 0 THEN 'n/d'
-        |         ELSE replace(CAST(value AS VARCHAR), '.', ',') || '%'
-        |    END AS bruto
-        |  FROM events
-        |)
-        |SELECT event_id, bruto,
-        |  CASE WHEN trim(bruto) IN ('', '-') THEN 'blank_cell'
-        |       WHEN TRY_CAST(replace(replace(trim(bruto), '%', ''), ',', '.')
-        |            AS DOUBLE) IS NULL THEN 'unparseable_value'
-        |  END AS reason
-        |FROM dirty
-        |WHERE trim(bruto) IN ('', '-')
-        |  OR TRY_CAST(replace(replace(trim(bruto), '%', ''), ',', '.')
-        |     AS DOUBLE) IS NULL
-        |ORDER BY event_id""".stripMargin,
-
-    "j_semi" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "j_anti" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q3_top_orders" ->
-      """SELECT l_orderkey, o_orderdate,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q5_region_supplier" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "a_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
-        |  COUNT(*) AS n
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "a_cube" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total,
-        |  COUNT(*) AS n
-        |FROM orders
-        |GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-
-    // the sketch estimate is engine-internal; the oracle pins the exact
-    // count and asserts the estimate landed inside the tolerance band
-    "a_approx_distinct" ->
-      """SELECT event_type, COUNT(DISTINCT user_id) AS exact_users,
-        |  TRUE AS approx_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "u2_intersect" ->
-      """SELECT user_id FROM events WHERE event_type = 'click'
-        |INTERSECT
-        |SELECT user_id FROM events WHERE event_type = 'purchase'
-        |ORDER BY user_id""".stripMargin,
-
-    "u3_except" ->
-      """SELECT user_id FROM events WHERE event_type = 'purchase' AND value > 150
-        |EXCEPT
-        |SELECT user_id FROM events WHERE event_type = 'click' AND value > 150
-        |ORDER BY user_id""".stripMargin,
-
-    "f_json_extract" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(k) AS BIGINT) AS sum_k, MAX(k) AS max_k
-        |FROM (SELECT event_type,
-        |        CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-        |      FROM events)
-        |WHERE k IS NOT NULL
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // the VARIANT path must agree with plain JSON extraction
-    "f_variant_json" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(k) AS BIGINT) AS sum_k, MIN(k) AS min_k
-        |FROM (SELECT event_type,
-        |        CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-        |      FROM events)
-        |WHERE k IS NOT NULL
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "j_asof" -> AsofJoin.oracleSql,
-
-    // the native operator states the SAME contract as the union+window
-    // plan — one oracle, two engine implementations
-    "j_asof_native" -> AsofJoin.oracleSql,
-    "j_asof_auto" -> AsofJoin.oracleSql,
-
-    "stream_asof_join" ->
-      graft.streaming.EventsStream.streamAsofOracleSql,
-
-    "j_asof_tolerance" ->
-      AsofJoin.toleranceOracleSql(30L * 60 * 1000000),
-
-    "j_asof_nearest" -> AsofJoin.nearestOracleSql,
-
-    "j_range" ->
-      """WITH bands AS (
-        |  SELECT i AS band_id, i * 20.0 AS lo, i * 20.0 + 30.0 AS hi
-        |  FROM range(0, 12) t(i)
-        |)
-        |SELECT event_id, band_id, value
-        |FROM events JOIN bands ON value >= lo AND value <= hi
-        |ORDER BY event_id, band_id""".stripMargin,
-
-    "j_range_native" ->
-      """WITH types AS (SELECT DISTINCT event_type FROM events),
-        |bands AS (
-        |  SELECT t.event_type, CAST(i AS BIGINT) AS band_id,
-        |    i * 20.0 AS lo, i * 20.0 + 30.0 AS hi
-        |  FROM types t CROSS JOIN range(0, 12) r(i)
-        |)
-        |SELECT e.event_id, b.band_id, e.value
-        |FROM events e JOIN bands b
-        |  ON e.event_type = b.event_type
-        | AND e.value >= b.lo AND e.value <= b.hi
-        |ORDER BY e.event_id, b.band_id""".stripMargin,
-
-    "j_range_native_outer" ->
-      """WITH types AS (SELECT DISTINCT event_type FROM events
-        |               WHERE event_type IS NOT NULL),
-        |bands AS (
-        |  SELECT t.event_type, CAST(i AS BIGINT) AS band_id,
-        |    i * 20.0 AS lo, i * 20.0 + 30.0 AS hi
-        |  FROM types t CROSS JOIN range(0, 12) r(i)
-        |)
-        |SELECT e.event_id, b.band_id, e.value
-        |FROM events e LEFT JOIN bands b
-        |  ON e.event_type = b.event_type
-        | AND e.value >= b.lo AND e.value <= b.hi
-        |WHERE e.event_type IS NOT NULL
-        |ORDER BY e.event_id, b.band_id""".stripMargin,
-
-    // autoJoin selection gates: identical semantics to the native inner
-    // gates by construction, so the oracles are the same SQL
-    "j_range_auto" ->
-      """WITH types AS (SELECT DISTINCT event_type FROM events
-        |               WHERE event_type IS NOT NULL),
-        |bands AS (
-        |  SELECT t.event_type, CAST(i AS BIGINT) AS band_id,
-        |    i * 20.0 AS lo, i * 20.0 + 30.0 AS hi
-        |  FROM types t CROSS JOIN range(0, 12) r(i)
-        |)
-        |SELECT e.event_id, b.band_id, e.value
-        |FROM events e JOIN bands b
-        |  ON e.event_type = b.event_type
-        | AND e.value >= b.lo AND e.value <= b.hi
-        |WHERE e.event_type IS NOT NULL
-        |ORDER BY e.event_id, b.band_id""".stripMargin,
-
-    "j_interval_auto" ->
-      """WITH l AS (
-        |  SELECT event_type, event_id AS l_id, epoch_us(ts) AS l_lo,
-        |    epoch_us(ts) + 1800000000 AS l_hi
-        |  FROM events WHERE event_id % 50 = 0 AND event_type IS NOT NULL
-        |), r AS (
-        |  SELECT event_type, event_id AS r_id, epoch_us(ts) AS r_lo,
-        |    epoch_us(ts) + 2700000000 AS r_hi
-        |  FROM events WHERE event_id % 137 = 0 AND event_type IS NOT NULL
-        |)
-        |SELECT l.event_type, l_id, r_id,
-        |  LEAST(l_hi, r_hi) - GREATEST(l_lo, r_lo) AS overlap_us
-        |FROM l JOIN r ON l.event_type = r.event_type
-        |  AND l_lo <= r_hi AND r_lo <= l_hi
-        |ORDER BY l_id, r_id""".stripMargin,
-
-    "j_interval_native" ->
-      """WITH l AS (
-        |  SELECT event_type, event_id AS l_id, epoch_us(ts) AS l_lo,
-        |    epoch_us(ts) + 1800000000 AS l_hi
-        |  FROM events WHERE event_id % 50 = 0
-        |), r AS (
-        |  SELECT event_type, event_id AS r_id, epoch_us(ts) AS r_lo,
-        |    epoch_us(ts) + 2700000000 AS r_hi
-        |  FROM events WHERE event_id % 137 = 0
-        |)
-        |SELECT l.event_type, l_id, r_id,
-        |  LEAST(l_hi, r_hi) - GREATEST(l_lo, r_lo) AS overlap_us
-        |FROM l JOIN r ON l.event_type = r.event_type
-        |  AND l_lo <= r_hi AND r_lo <= l_hi
-        |ORDER BY l_id, r_id""".stripMargin,
-
-    "j_interval_native_outer" ->
-      """WITH l AS (
-        |  SELECT event_type, event_id AS l_id, epoch_us(ts) AS l_lo,
-        |    epoch_us(ts) + 1800000000 AS l_hi
-        |  FROM events WHERE event_id % 50 = 0 AND event_type IS NOT NULL
-        |), r AS (
-        |  SELECT event_type, event_id AS r_id, epoch_us(ts) AS r_lo,
-        |    epoch_us(ts) + 2700000000 AS r_hi
-        |  FROM events WHERE event_id % 137 = 0 AND event_type IS NOT NULL
-        |)
-        |SELECT l.event_type, l_id, r_id,
-        |  CASE WHEN r_id IS NULL THEN NULL
-        |       ELSE LEAST(l_hi, r_hi) - GREATEST(l_lo, r_lo) END AS overlap_us
-        |FROM l LEFT JOIN r ON l.event_type = r.event_type
-        |  AND l_lo <= r_hi AND r_lo <= l_hi
-        |ORDER BY l_id, r_id""".stripMargin,
-
-    "o1_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "u1_union" ->
-      """SELECT nome FROM (
-        |  SELECT o_orderpriority AS nome FROM orders
-        |  UNION
-        |  SELECT event_type FROM events
-        |) ORDER BY nome""".stripMargin,
-
-    "a4_distinct_stats" ->
-      """SELECT COUNT(*) AS n_records,
-        |  COUNT(DISTINCT o_custkey) AS n_customers,
-        |  COUNT(DISTINCT strftime(o_orderdate, '%Y-%m')) AS n_months,
-        |  COUNT(DISTINCT o_orderpriority) AS n_groups
-        |FROM orders""".stripMargin,
-
-    "r2_pivot" -> {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val cols = types.map { t =>
-        s"""  CAST(SUM(CASE WHEN event_type = '$t' THEN CAST(value AS DECIMAL(18,6)) END) AS DOUBLE)
-           |    / COUNT(CASE WHEN event_type = '$t' THEN 1 END) AS $t""".stripMargin
-      }.mkString(",\n")
-      s"""SELECT strftime(ts, '%Y-%m-%d') AS dia,
-         |$cols
-         |FROM events
-         |GROUP BY dia
-         |ORDER BY dia""".stripMargin
-    },
-
-    "text_tokens" ->
-      s"""SELECT doc_id,
-         |  len(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+')) AS n_tokens,
-         |  len(regexp_extract_all(lower(text), '${TextFns.bpePattern}')) AS n_bpe,
-         |  length(text) AS n_chars_obs
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "text_quality" ->
-      """SELECT doc_id,
-        |  len(string_split_regex(trim(text), '\s+')) AS n_tokens,
-        |  len(regexp_extract_all(lower(text), '[^a-z0-9\s]')) AS n_punct,
-        |  CAST(len(list_distinct(string_split_regex(trim(text), '\s+'))) AS DOUBLE)
-        |    / len(string_split_regex(trim(text), '\s+')) AS uniq_ratio,
-        |  CAST(length(regexp_replace(trim(text), '\s+', '', 'g')) AS DOUBLE)
-        |    / len(string_split_regex(trim(text), '\s+')) AS mean_token_len,
-        |  CAST(len(regexp_extract_all(lower(text), '\b(the|a|of|and|to|in|is|it|that|for)\b')) AS DOUBLE)
-        |    / len(string_split_regex(trim(text), '\s+')) AS stopword_ratio
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "j_stream_interval" ->
-      """SELECT l.user_id, l.event_id AS l_id, r.event_id AS r_id,
-        |  l.ts AS l_ts, r.ts AS r_ts
-        |FROM events l JOIN events r
-        |  ON l.user_id = r.user_id
-        |  AND r.ts > l.ts AND r.ts <= l.ts + INTERVAL 1 HOUR
-        |WHERE l.event_type = 'click' AND r.event_type = 'purchase'
-        |ORDER BY l.user_id, l_id, r_id""".stripMargin,
-
-    "scd2_history" ->
-      """WITH marked AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events WHERE ts IS NOT NULL
-        |), changes AS (
-        |  SELECT user_id, ts, event_id, event_type FROM marked
-        |  WHERE rn = 1 OR event_type IS DISTINCT FROM prev
-        |)
-        |SELECT user_id, event_type, ts AS valid_from,
-        |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
-        |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL AS is_current
-        |FROM changes ORDER BY user_id, valid_from""".stripMargin,
-
-    "pack_sequences" ->
-      """WITH toks AS (
-        |  SELECT source, doc_id, len(string_split_regex(trim(text), '\s+')) AS n_toks
-        |  FROM documents
-        |), binned AS (
-        |  SELECT source, doc_id, n_toks,
-        |    COALESCE(SUM(n_toks) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS bin
-        |  FROM toks
-        |)
-        |SELECT source, CAST(bin AS BIGINT) AS bin, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_toks) AS BIGINT) AS bin_tokens,
-        |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-        |FROM binned GROUP BY source, bin ORDER BY source, bin""".stripMargin,
-
-    // same binning restated over the (n_toks DESC, doc_id) order — NULLS
-    // LAST made explicit (Spark DESC defaults there; DuckDB's default is a
-    // session setting)
-    "pack_ffd" ->
-      """WITH toks AS (
-        |  SELECT source, doc_id, len(string_split_regex(trim(text), '\s+')) AS n_toks
-        |  FROM documents
-        |), binned AS (
-        |  SELECT source, doc_id, n_toks,
-        |    COALESCE(SUM(n_toks) OVER (PARTITION BY source
-        |      ORDER BY n_toks DESC NULLS LAST, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS bin
-        |  FROM toks
-        |)
-        |SELECT source, CAST(bin AS BIGINT) AS bin, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_toks) AS BIGINT) AS bin_tokens,
-        |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-        |FROM binned GROUP BY source, bin ORDER BY source, bin""".stripMargin,
-
-    "quality_rank_norm" ->
-      """WITH scored AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(list_distinct(string_split_regex(trim(text), '\s+'))) AS DOUBLE)
-        |      / len(string_split_regex(trim(text), '\s+')) AS uniq_ratio
-        |  FROM documents
-        |)
-        |SELECT doc_id, lang, ROUND(uniq_ratio, 6) AS uniq_ratio,
-        |  ROUND(percent_rank() OVER (PARTITION BY lang
-        |    ORDER BY uniq_ratio, doc_id), 6) AS q_norm
-        |FROM scored
-        |ORDER BY doc_id""".stripMargin,
-
-    // same binning as pack_sequences; n_toks = the BPE chain's delimiter
-    // count (NULL text -> NULL n_toks occupying a budget-free slot)
-    "pack_sequences_bpe" ->
-      s"""WITH toks AS (
-         |  SELECT source, doc_id,
-         |    ${graft.functions.Bpe.countOfMergedSql} AS n_toks
-         |  FROM (SELECT source, doc_id, ${graft.functions.Bpe.mergedSql("text")} AS m
-         |        FROM documents)
-         |), binned AS (
-         |  SELECT source, doc_id, n_toks,
-         |    COALESCE(SUM(n_toks) OVER (PARTITION BY source ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS bin
-         |  FROM toks
-         |)
-         |SELECT source, CAST(bin AS BIGINT) AS bin, COUNT(*) AS n_docs,
-         |  CAST(SUM(n_toks) AS BIGINT) AS bin_tokens,
-         |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-         |FROM binned GROUP BY source, bin ORDER BY source, bin""".stripMargin,
-
-    "pack_sequences_bpe_learned" ->
-      graft.functions.Bpe.packLearnedOracleSql(rounds = 8, budget = 512),
-
-    "pack_concat" ->
-      """WITH toks AS (
-        |  SELECT source, doc_id, text,
-        |    len(string_split_regex(trim(text), '\s+')) AS n_toks
-        |  FROM documents
-        |), binned AS (
-        |  SELECT source, doc_id, text,
-        |    COALESCE(SUM(n_toks) OVER (PARTITION BY source ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS bin
-        |  FROM toks
-        |)
-        |SELECT source, CAST(bin AS BIGINT) AS bin,
-        |  string_agg(text, chr(10) || chr(10) ORDER BY doc_id) AS seq_text,
-        |  COUNT(*) AS n_docs
-        |FROM binned GROUP BY source, bin
-        |ORDER BY source, bin""".stripMargin,
-
-    "quality_repetition" ->
-      """WITH toks AS (
-        |  SELECT doc_id, text, string_split_regex(trim(text), '\s+') AS t FROM documents
-        |), topc AS (
-        |  SELECT doc_id, MAX(c) AS top_cnt FROM (
-        |    SELECT doc_id, tok, COUNT(*) AS c
-        |    FROM (SELECT doc_id, unnest(t) AS tok FROM toks)
-        |    GROUP BY doc_id, tok
-        |  ) GROUP BY doc_id
-        |), sig AS (
-        |  SELECT k.doc_id,
-        |    len(k.t) AS n_toks,
-        |    CAST(tc.top_cnt AS DOUBLE) / len(k.t) AS top_tok_frac,
-        |    CAST(len(k.t) - 1 - len(list_distinct(list_transform(range(1, len(k.t)),
-        |        i -> array_to_string(k.t[i:i+1], ' ')))) AS DOUBLE)
-        |      / NULLIF(len(k.t) - 1, 0) AS dup_bigram_frac,
-        |    CAST(len(regexp_extract_all(lower(k.text), '[^a-z0-9\s]')) AS DOUBLE)
-        |      / NULLIF(length(k.text), 0) AS symbol_ratio
-        |  FROM toks k LEFT JOIN topc tc ON k.doc_id = tc.doc_id
-        |)
-        |SELECT doc_id, n_toks, top_tok_frac, dup_bigram_frac, symbol_ratio,
-        |  (top_tok_frac > 0.2 OR dup_bigram_frac > 0.3) AS repetitive
-        |FROM sig ORDER BY doc_id""".stripMargin,
-
-    "quality_fused" -> graft.operators.Repetition.fusedOracleSql(),
-
-    // each event belongs to exactly (size/slide)=2 epoch-aligned windows:
-    // the 30-min floor of ts and that minus 30 minutes
-    "window_sliding" ->
-      """WITH expanded AS (
-        |  SELECT CAST(to_timestamp(CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800
-        |           - o.off * 1800) AS TIMESTAMP) AS window_start,
-        |         event_type, value
-        |  FROM events CROSS JOIN (VALUES (0), (1)) AS o(off)
-        |)
-        |SELECT window_start, event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM expanded
-        |GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    "w_rolling_avg" ->
-      """SELECT user_id, event_id, ts,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE)
-        |    / COUNT(*) OVER w AS rolling_avg
-        |FROM events
-        |WHERE ts IS NOT NULL
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts, event_id""".stripMargin,
-
-    "w_rolling_median" ->
-      """WITH arrs AS (
-        |  SELECT user_id, event_id, ts,
-        |    list_sort(list(value) OVER w) AS arr
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |               ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |)
-        |SELECT user_id, event_id, ts,
-        |  CASE WHEN len(arr) % 2 = 1 THEN arr[(len(arr)+1)//2]
-        |       ELSE (arr[len(arr)//2] + arr[len(arr)//2 + 1]) / 2
-        |  END AS rolling_median
-        |FROM arrs ORDER BY user_id, ts, event_id""".stripMargin,
-
-    "j_full_outer" ->
-      """WITH c AS (
-        |  SELECT user_id, COUNT(*) AS n_clicks FROM events
-        |  WHERE event_type = 'click' GROUP BY user_id
-        |), p AS (
-        |  SELECT user_id, COUNT(*) AS n_purchases FROM events
-        |  WHERE event_type = 'purchase' GROUP BY user_id
-        |)
-        |SELECT COALESCE(c.user_id, p.user_id) AS user_id,
-        |  COALESCE(n_clicks, 0) AS n_clicks,
-        |  COALESCE(n_purchases, 0) AS n_purchases
-        |FROM c FULL OUTER JOIN p ON c.user_id = p.user_id
-        |ORDER BY user_id""".stripMargin,
-
-    // the salt is internal to the operator and drops out of the result, so
-    // the oracle states the UNSALTED join/agg — equality proves the salted
-    // plan preserves semantics
-    "j_skewed_salted" ->
-      """WITH fa AS (
-        |  SELECT l_returnflag,
-        |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)
-        |      / COUNT(l_quantity) AS flag_avg_qty
-        |  FROM lineitem GROUP BY l_returnflag
-        |)
-        |SELECT l.l_returnflag, COUNT(*) AS n_total,
-        |  COUNT(CASE WHEN l.l_quantity > fa.flag_avg_qty THEN 1 END) AS n_above,
-        |  MAX(fa.flag_avg_qty) AS flag_avg_qty
-        |FROM lineitem l JOIN fa USING (l_returnflag)
-        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin,
-
-    "a_skewed_salted" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q18_large_orders" ->
-      """SELECT c_name, c_custkey, o_orderkey, o_totalprice, sum_qty
-        |FROM orders
-        |JOIN (SELECT l_orderkey,
-        |        CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty
-        |      FROM lineitem GROUP BY l_orderkey
-        |      HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) > 250)
-        |  ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 20""".stripMargin,
-
-    "q17_small_qty" ->
-      """WITH brand_li AS (
-        |  SELECT l_partkey, l_quantity, l_extendedprice
-        |  FROM lineitem JOIN part ON p_partkey = l_partkey
-        |  WHERE p_brand = 'Brand#4'
-        |), thr AS (
-        |  SELECT l_partkey,
-        |    0.2 * (CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)
-        |           / COUNT(l_quantity)) AS qty_thr
-        |  FROM brand_li GROUP BY l_partkey
-        |)
-        |SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / 7.0
-        |  AS avg_yearly
-        |FROM brand_li l JOIN thr ON l.l_partkey = thr.l_partkey
-        |WHERE l.l_quantity < qty_thr""".stripMargin,
-
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, COUNT(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1997-07-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-10-01 00:00:00'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND l_shipdate > o_orderdate)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q13_cust_dist" ->
-      """SELECT c_count, COUNT(*) AS custdist FROM (
-        |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY c_custkey)
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q16_supplier_parts" ->
-      """SELECT p_brand, p_type, p_size,
-        |  COUNT(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand <> 'Brand#1'
-        |  AND l_suppkey NOT IN
-        |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 500)
-        |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-
-    "q19_disjunctive_rev" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5
-        |       AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10
-        |       AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-
-    "q22_idle_custs" ->
-      """SELECT c_nationkey, COUNT(*) AS numcust,
-        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE) AS totacctbal
-        |FROM customer
-        |WHERE c_acctbal > (SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,6)))
-        |                            AS DOUBLE) / COUNT(c_acctbal)
-        |                   FROM customer WHERE c_acctbal > 0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-
-    "q2_min_cost_supp" ->
-      """WITH pli AS (
-        |  SELECT l_partkey, l_suppkey, l_extendedprice, p_partkey, p_name
-        |  FROM lineitem JOIN part ON p_partkey = l_partkey
-        |  WHERE p_size = 10
-        |)
-        |SELECT DISTINCT p_partkey, p_name, s_suppkey, s_name,
-        |  l_extendedprice AS min_price
-        |FROM pli JOIN supplier ON s_suppkey = l_suppkey
-        |WHERE l_extendedprice = (SELECT MIN(x.l_extendedprice) FROM pli x
-        |                         WHERE x.l_partkey = pli.l_partkey)
-        |ORDER BY p_partkey, s_suppkey""".stripMargin,
-
-    "profile_table" -> {
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_returnflag", "l_linestatus")
-      cols.map { c =>
-        s"""SELECT '$c' AS "column", COUNT(*) AS n_rows,
-           |  COUNT(*) - COUNT($c) AS n_nulls,
-           |  COUNT(DISTINCT $c) AS n_distinct,
-           |  CAST(MIN($c) AS VARCHAR) AS min_val,
-           |  CAST(MAX($c) AS VARCHAR) AS max_val
-           |FROM lineitem""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY \"column\"")
-    },
-
-    "curate_pipeline" -> {
-      val scoreExprs = TextFns.stopwords.toSeq.sortBy(_._1).map { case (l, ws) =>
-        s"len(regexp_extract_all(lower(text), '\\b(${ws.mkString("|")})\\b')) AS s_$l"
-      }.mkString(",\n    ")
-      val best = "greatest(s_en, s_de, s_fr, s_es)"
-      val ntoks = "len(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+'))"
-      val nuniq = "len(list_distinct(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+')))"
-      s"""WITH scrub AS (
-         |  SELECT doc_id, source,
-         |    regexp_replace(regexp_replace(regexp_replace(text,
-         |      '${TextFns.urlRe}', '<URL>', 'g'),
-         |      '${TextFns.emailRe}', '<EMAIL>', 'g'),
-         |      '${TextFns.phoneRe}', '<PHONE>', 'g') AS text
-         |  FROM documents
-         |), bench AS (
-         |  SELECT * FROM scrub WHERE doc_id % 97 = 0
-         |), corpus AS (
-         |  SELECT * FROM scrub WHERE doc_id % 97 <> 0
-         |), dedup AS (
-         |  SELECT doc_id, source, text FROM (
-         |    SELECT *, row_number() OVER (
-         |      PARTITION BY md5(regexp_replace(trim(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))
-         |      ORDER BY doc_id) AS rn
-         |    FROM corpus) WHERE rn = 1
-         |), dsh AS (
-         |  SELECT doc_id, list_distinct(list_transform(range(1, len(t) - 1),
-         |           i -> array_to_string(t[i:i+2], ' '))) AS sh
-         |  FROM (SELECT doc_id, string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+') AS t
-         |        FROM dedup WHERE text IS NOT NULL)
-         |), bg AS (
-         |  SELECT DISTINCT unnest(sh) AS g FROM (
-         |    SELECT list_distinct(list_transform(range(1, len(t) - 1),
-         |             i -> array_to_string(t[i:i+2], ' '))) AS sh
-         |    FROM (SELECT string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+') AS t
-         |          FROM bench WHERE text IS NOT NULL))
-         |), contaminated AS (
-         |  SELECT DISTINCT c.doc_id
-         |  FROM (SELECT doc_id, unnest(sh) AS g FROM dsh) c JOIN bg USING (g)
-         |), clean AS (
-         |  SELECT * FROM dedup
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
-         |), scored AS (
-         |  SELECT doc_id, source, text,
-         |    $scoreExprs
-         |  FROM clean
-         |), langed AS (
-         |  SELECT doc_id, source, text FROM scored
-         |  WHERE text IS NOT NULL
-         |    AND NOT regexp_matches(text, '[\\x{4e00}-\\x{9fff}]')
-         |    AND $best > 0 AND s_en = $best
-         |), qual AS (
-         |  SELECT doc_id, source, text FROM langed
-         |  WHERE $ntoks >= 10 AND CAST($nuniq AS DOUBLE) / $ntoks >= 0.3
-         |), toks AS (
-         |  SELECT source, doc_id, $ntoks AS n_toks FROM qual
-         |), binned AS (
-         |  SELECT source, doc_id, n_toks,
-         |    COALESCE(SUM(n_toks) OVER (PARTITION BY source ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS bin
-         |  FROM toks
-         |)
-         |SELECT source, CAST(bin AS BIGINT) AS bin, COUNT(*) AS n_docs,
-         |  CAST(SUM(n_toks) AS BIGINT) AS bin_tokens,
-         |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-         |FROM binned GROUP BY source, bin ORDER BY source, bin""".stripMargin
-    },
-
-    "curate_to_shards" ->
-      s"""WITH $curateToShardsCtes,
-         |${curateManifestSelectSql()}""".stripMargin,
-
-    "curate_to_shards_diag_staged" ->
-      s"""WITH $curateToShardsCtes
-         |SELECT doc_id, score_milli, stage,
-         |  ${graft.operators.Sampling.bucketSql("doc_id", "graft-curriculum")}
-         |    AS shuffle_bucket
-         |FROM cstaged ORDER BY doc_id""".stripMargin,
-
-    // the aggregated mega-bucket report of the composite's near-dedup
-    // stage (the chain's bwidths/bdropped CTEs restate the cap; the
-    // downstream CTEs are unreferenced and pruned by the oracle engine) —
-    // (0, 0, 0) on the organic crawl fixture, by the same width rule on
-    // both engines
-    "curate_to_shards_dropped" ->
-      s"""WITH $curateToShardsCtes
-         |SELECT CAST(COUNT(*) AS BIGINT) AS n_buckets,
-         |  CAST(COALESCE(SUM(width), 0) AS BIGINT) AS n_docs,
-         |  CAST(COALESCE(SUM(pairs_dropped), 0) AS BIGINT) AS pairs_dropped
-         |FROM bdropped""".stripMargin,
-
-    // greedy vs component-wise survivor counts over the SAME vpairs the
-    // composite consumes; cc is the dedup_cluster recursive closure
-    "curate_survivor_rule_diag" ->
-      s"""WITH RECURSIVE $curateToShardsCtes,
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM vpairs
-         |  UNION
-         |  SELECT b AS src, a AS dst FROM vpairs
-         |), reach AS (
-         |  SELECT src, src AS dst FROM (SELECT DISTINCT src FROM edges)
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-         |), cc AS (
-         |  SELECT src AS doc_id, MIN(dst) AS cluster_rep FROM reach GROUP BY src
-         |), greedy AS (
-         |  SELECT doc_id FROM dedup2 WHERE doc_id NOT IN (SELECT b FROM vpairs)
-         |), comp AS (
-         |  SELECT doc_id FROM dedup2
-         |  WHERE doc_id NOT IN (SELECT doc_id FROM cc WHERE doc_id <> cluster_rep)
-         |)
-         |SELECT
-         |  CAST((SELECT COUNT(*) FROM dedup2) AS BIGINT) AS n_exact_deduped,
-         |  CAST((SELECT COUNT(*) FROM greedy) AS BIGINT) AS greedy_survivors,
-         |  CAST((SELECT COUNT(*) FROM comp) AS BIGINT) AS component_survivors,
-         |  CAST((SELECT COUNT(*) FROM greedy JOIN comp USING (doc_id)) AS BIGINT) AS n_common""".stripMargin,
-
-    "curate_incremental" ->
-      s"""WITH $curateIncrementalCtes,
-         |${curationTailCtes("novel")},
-         |${curateManifestSelectSql()}""".stripMargin,
-
-    // one verdict row per batch doc — exact beats near (an exact copy
-    // needs no jaccard), novel docs carry nulls; the engine's
-    // when/coalesce chain restated as CASE
-    "curate_incremental_diag_novelty" ->
-      s"""WITH $curateIncrementalCtes
-         |SELECT b.doc_id,
-         |  CASE WHEN e.doc_id IS NOT NULL THEN 'dup_exact'
-         |       WHEN n.batch_id IS NOT NULL THEN 'dup_near'
-         |       ELSE 'novel' END AS verdict,
-         |  COALESCE(e.exact_match, n.match_id) AS match_id,
-         |  CASE WHEN e.doc_id IS NULL THEN n.jaccard END AS jaccard
-         |FROM batchs b
-         |LEFT JOIN ex e ON b.doc_id = e.doc_id
-         |LEFT JOIN near n ON b.doc_id = n.batch_id
-         |ORDER BY b.doc_id""".stripMargin,
-
-    "text_langid" -> {
-      val scoreExprs = TextFns.stopwords.toSeq.sortBy(_._1).map { case (l, ws) =>
-        s"len(regexp_extract_all(lower(text), '\\b(${ws.mkString("|")})\\b')) AS s_$l"
-      }.mkString(",\n  ")
-      """WITH scored AS (
-        |SELECT doc_id, text,
-        |  SCORES
-        |FROM documents
-        |)
-        |SELECT doc_id,
-        |  CASE WHEN text IS NULL THEN NULL
-        |       WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
-        |       WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'und'
-        |       WHEN s_en = greatest(s_en, s_de, s_fr, s_es) THEN 'en'
-        |       WHEN s_de = greatest(s_en, s_de, s_fr, s_es) THEN 'de'
-        |       WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) THEN 'fr'
-        |       ELSE 'es' END AS lang_pred
-        |FROM scored ORDER BY doc_id""".stripMargin.replace("SCORES", scoreExprs)
-    },
-
-    "text_langid_confusion" -> {
-      val scoreExprs = TextFns.stopwords.toSeq.sortBy(_._1).map { case (l, ws) =>
-        s"len(regexp_extract_all(lower(text), '\\b(${ws.mkString("|")})\\b')) AS s_$l"
-      }.mkString(",\n  ")
-      """WITH scored AS (
-        |SELECT lang, text,
-        |  SCORES
-        |FROM documents WHERE text IS NOT NULL
-        |), pred AS (
-        |SELECT lang,
-        |  CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
-        |       WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'und'
-        |       WHEN s_en = greatest(s_en, s_de, s_fr, s_es) THEN 'en'
-        |       WHEN s_de = greatest(s_en, s_de, s_fr, s_es) THEN 'de'
-        |       WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) THEN 'fr'
-        |       ELSE 'es' END AS lang_pred
-        |FROM scored
-        |), cells AS (
-        |SELECT lang, lang_pred, CAST(COUNT(*) AS BIGINT) AS n
-        |FROM pred GROUP BY lang, lang_pred
-        |)
-        |SELECT lang, lang_pred, n,
-        |  (1000 * n) // CAST(SUM(n) OVER (PARTITION BY lang) AS BIGINT)
-        |    AS recall_milli
-        |FROM cells ORDER BY lang, lang_pred""".stripMargin
-        .replace("SCORES", scoreExprs)
-    },
-
-    "f_datetime_family" ->
-      """SELECT o_orderkey,
-        |  CAST(year(o_orderdate) AS INTEGER) AS y,
-        |  CAST(quarter(o_orderdate) AS INTEGER) AS q,
-        |  CAST(month(o_orderdate) AS INTEGER) AS m,
-        |  CAST(day(o_orderdate) AS INTEGER) AS d,
-        |  CAST(dayofyear(o_orderdate) AS INTEGER) AS doy,
-        |  CAST(isodow(o_orderdate) AS INTEGER) AS iso_dow,
-        |  CAST(week(o_orderdate) AS INTEGER) AS iso_week,
-        |  CAST(date_trunc('month', o_orderdate) AS DATE) AS mon_start,
-        |  last_day(CAST(o_orderdate AS DATE)) AS mon_end,
-        |  CAST(CAST(o_orderdate AS DATE) + INTERVAL 2 MONTH AS DATE)
-        |    AS plus2m,
-        |  CAST(date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
-        |    AS INTEGER) AS days_since
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "f_string_family" ->
-      """SELECT c_custkey,
-        |  lpad(c_name, 25, '*') AS pad_l,
-        |  rpad(c_name, 25, '-') AS pad_r,
-        |  translate(c_name, 'aeiou', '01234') AS xlate,
-        |  replace(c_name, '#', '-') AS repl,
-        |  CAST(strpos(c_name, '0') AS INTEGER) AS find0,
-        |  substring(c_name, 1, 5) AS first5,
-        |  substring(c_name, length(c_name) - 4, 5) AS last5,
-        |  repeat(substring(c_name, 1, 2), 3) AS rep3,
-        |  reverse(c_name) AS rev,
-        |  CAST(ascii(c_name) AS INTEGER) AS first_byte,
-        |  printf('cust-%07d', c_custkey) AS padded_id,
-        |  CAST(length(c_name) AS INTEGER) AS len
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "f_regex_family" ->
-      """SELECT c_custkey,
-        |  regexp_extract(c_name, 'Customer#(\d+)', 1) AS ext,
-        |  CAST(len(regexp_extract_all(c_name, '\d+')) AS INTEGER)
-        |    AS ndig,
-        |  regexp_matches(c_name, '0{3}') AS has000,
-        |  regexp_matches(c_name, '^Customer#\d+$') AS anchored,
-        |  c_name ILIKE 'cust%' AS ilk,
-        |  c_name LIKE 'Customer#00%' AS lk,
-        |  CAST(len(string_split_regex(c_name, '#')) AS INTEGER)
-        |    AS nsplit,
-        |  regexp_replace(c_name, '\d+', 'N', 'g') AS repl
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "f_timestamp_family" ->
-      """SELECT event_id,
-        |  CAST(hour(ts) AS INTEGER) AS h,
-        |  CAST(minute(ts) AS INTEGER) AS mi,
-        |  CAST(second(ts) AS INTEGER) AS sec_i,
-        |  CAST(microsecond(ts) AS BIGINT) AS micros_min,
-        |  date_trunc('hour', ts) AS trunc_h,
-        |  CAST(date_diff('second', TIMESTAMP '2024-01-01 00:00:00', ts)
-        |    AS BIGINT) AS secs_since,
-        |  strftime(ts, '%Y-%m-%d %H:%M') AS fmt_min,
-        |  make_timestamp(CAST(year(ts) AS BIGINT), CAST(month(ts) AS BIGINT),
-        |    CAST(day(ts) AS BIGINT), CAST(hour(ts) AS BIGINT),
-        |    CAST(minute(ts) AS BIGINT), CAST(second(ts) AS DOUBLE))
-        |    AS rebuilt
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "f_math_family" ->
-      """SELECT o_orderkey,
-        |  CAST(abs(o_custkey - 750) AS BIGINT) AS abs_v,
-        |  CAST(sign(o_custkey - 750) AS INTEGER) AS sign_v,
-        |  CAST((o_custkey - 750) % 7 AS BIGINT) AS rem7,
-        |  CAST((((o_custkey - 750) % 7) + 7) % 7 AS BIGINT) AS pmod7,
-        |  CAST(((o_custkey - 750) - ((o_custkey - 750) % 7)) // 7
-        |    AS BIGINT) AS tdiv7,
-        |  CAST(o_orderkey & 255 AS BIGINT) AS band,
-        |  CAST(o_orderkey | o_custkey AS BIGINT) AS bor,
-        |  CAST(xor(o_orderkey, o_custkey) AS BIGINT) AS bxor,
-        |  CAST((o_orderkey % 1024) << 3 AS BIGINT) AS shl3,
-        |  CAST(o_orderkey >> 2 AS BIGINT) AS shr2,
-        |  CAST(bit_count(o_orderkey) AS INTEGER) AS bcnt,
-        |  CAST(factorial(CAST(o_orderkey % 13 AS INTEGER)) AS BIGINT)
-        |    AS fact,
-        |  CAST(ceil(o_totalprice) AS BIGINT) AS ceil_p,
-        |  CAST(floor(o_totalprice) AS BIGINT) AS floor_p,
-        |  sqrt(o_totalprice) AS sq,
-        |  CAST(greatest(o_orderkey, o_custkey, 1000) AS BIGINT) AS gmax,
-        |  CAST(least(o_orderkey, o_custkey, 1000) AS BIGINT) AS lmin,
-        |  hex(o_orderkey) AS hexk
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "f_array_family" ->
-      """WITH q AS (
-        |  SELECT o_orderkey,
-        |    CAST((o_orderkey % 5) + 2 AS INTEGER) AS k,
-        |    range(1, CAST((o_orderkey % 5) + 2 AS INTEGER) + 1) AS r
-        |  FROM orders
-        |)
-        |SELECT o_orderkey,
-        |  CAST(len(r) AS INTEGER) AS n_el,
-        |  CAST(list_sum(r) AS BIGINT) AS s,
-        |  CAST(list_max(r) AS BIGINT) AS mx,
-        |  list_contains(r, 3) AS has3,
-        |  CAST(COALESCE(list_position(r, 5), 0) AS BIGINT) AS pos5,
-        |  array_to_string(list_slice(r, 2, 4), ',') AS str_slice,
-        |  array_to_string(list_reverse(r), ',') AS str_rev,
-        |  array_to_string(list_transform(r, x -> x * x), ',') AS str_sq,
-        |  array_to_string(list_filter(r, x -> x % 2 = 0), ',')
-        |    AS str_even,
-        |  array_to_string(list_sort(list_distinct(r || r)), ',')
-        |    AS str_dist,
-        |  array_to_string(list_transform(range(1, k + 1),
-        |    i -> r[i] * r[k + 1 - i]), ',') AS str_zip,
-        |  array_to_string(flatten([r, r]), ',') AS str_flat
-        |FROM q ORDER BY o_orderkey""".stripMargin,
-
-    "a_cohens_kappa" -> {
-      val scoreExprs = TextFns.stopwords.toSeq.sortBy(_._1).map { case (l, ws) =>
-        s"len(regexp_extract_all(lower(text), '\\b(${ws.mkString("|")})\\b')) AS s_$l"
-      }.mkString(",\n  ")
-      """WITH scored AS (
-        |SELECT lang, text,
-        |  SCORES
-        |FROM documents WHERE text IS NOT NULL
-        |), pred AS (
-        |SELECT lang,
-        |  CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
-        |       WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'und'
-        |       WHEN s_en = greatest(s_en, s_de, s_fr, s_es) THEN 'en'
-        |       WHEN s_de = greatest(s_en, s_de, s_fr, s_es) THEN 'de'
-        |       WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) THEN 'fr'
-        |       ELSE 'es' END AS lang_pred
-        |FROM scored
-        |), cells AS (
-        |SELECT lang, lang_pred, CAST(COUNT(*) AS BIGINT) AS n
-        |FROM pred GROUP BY lang, lang_pred
-        |), tot AS (
-        |SELECT CAST(SUM(n) AS BIGINT) AS n_items,
-        |  CAST(SUM(CASE WHEN lang = lang_pred THEN n ELSE 0 END) AS BIGINT)
-        |    AS n_agree
-        |FROM cells
-        |), rows_ AS (
-        |SELECT lang AS label, CAST(SUM(n) AS BIGINT) AS r
-        |FROM cells GROUP BY lang
-        |), cols_ AS (
-        |SELECT lang_pred AS label, CAST(SUM(n) AS BIGINT) AS c
-        |FROM cells GROUP BY lang_pred
-        |), pe AS (
-        |SELECT CAST(COALESCE(SUM(r * c), 0) AS BIGINT) AS pe_num
-        |FROM rows_ JOIN cols_ USING (label)
-        |)
-        |SELECT n_items, n_agree, pe_num,
-        |  CAST(n_items * n_agree - pe_num AS DOUBLE)
-        |    / CAST(n_items * n_items - pe_num AS DOUBLE) AS kappa
-        |FROM tot CROSS JOIN pe""".stripMargin
-        .replace("SCORES", scoreExprs)
-    },
-
-    "text_vocab_topk" ->
-      """SELECT token, freq FROM (
-        |  SELECT token, COUNT(*) AS freq
-        |  FROM (SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-        |        FROM documents)
-        |  WHERE token <> ''
-        |  GROUP BY token)
-        |ORDER BY freq DESC, token LIMIT 100""".stripMargin,
-
-    "a_percentile" ->
-      """SELECT event_type,
-        |  quantile_cont(value, 0.5) AS p50,
-        |  quantile_cont(value, 0.95) AS p95
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "a_histogram" ->
-      """WITH mm AS (
-        |  SELECT MIN(l_extendedprice) AS lo, MAX(l_extendedprice) AS hi
-        |  FROM lineitem
-        |)
-        |SELECT CAST(LEAST(FLOOR((l_extendedprice - lo) / ((hi - lo) / 10)), 9)
-        |            AS INTEGER) AS bin,
-        |  COUNT(*) AS n
-        |FROM lineitem, mm
-        |GROUP BY bin ORDER BY bin""".stripMargin,
-
-    // the sketch estimate is engine-internal (like the HLL gate): pin the
-    // exact quantile, assert the sketch lands inside the ±1%-rank band
-    "a_approx_percentile" ->
-      """SELECT l_returnflag,
-        |  quantile_cont(l_extendedprice, 0.5) AS exact_p50,
-        |  TRUE AS approx_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "text_fingerprint" ->
-      """SELECT doc_id,
-        |  list_reduce(
-        |    list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(
-        |        string_split(regexp_replace(trim(text), '\s+', ' ', 'g'), ''),
-        |        x -> CAST(ascii(x) AS BIGINT))),
-        |    (a, x) -> (a * 31 + x) % 1000000007) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "dedup_exact" -> dedupExactOracleSql,
-
-    "s4_raw_ingest" -> {
-      val (path, name, hdr, months) = rawFixtures(1)
-      RawIngest.ingestOracleSql(path, name, hdr, months)
-    },
-
-    "s4_raw_ingest_quoted" -> {
-      val (_, _, hdr, months) = rawFixtures(1) // same preamble shape as smp
-      RawIngest.ingestOracleSql(quotedFixturePath,
-        "ida_raw_2023_smp_quoted.csv", hdr, months, delim = ",")
-    },
-
-    "e2_lifecycle" -> graft.plans.Pipeline.lifecycleOracleSql(rawFixtures),
-
-    // the oracle re-reads ONLY the mapped sheet inside the container —
-    // exactly the file set the engine's sheet resolution must touch
-    "e2_lifecycle_sheets" ->
-      graft.plans.Pipeline.lifecycleOracleSql(Seq(wbSheetFixture)),
-
-    // the oracle reads the committed CSV MIRROR of the ODS sheet's grid
-    // (same generator, grid equality pinned in OdsSpec) under the ODS
-    // file's name — DuckDB has no ODS reader
-    "e2_lifecycle_ods" ->
-      graft.plans.Pipeline.lifecycleOracleSql(Seq(odsOracleFixture)),
-
-    "sample_stratified" -> graft.operators.Sampling.stratifiedOracleSql(
-      Map("en" -> 0.5, "de" -> 0.25, "zh" -> 1.0, "fr" -> 0.0)),
-
-    // shard = unsigned FNV mod 8 == the engine's signed pmod (8 divides
-    // 2^64, so signed and unsigned residues agree); in-shard order compares
-    // the SIGNED hash like the Spark window
-    "corpus_shuffle" -> {
-      import graft.functions.{SketchOracleSql => O}
-      s"""WITH h AS (
-         |  SELECT doc_id,
-         |    ${O.fnvSigned("CAST(doc_id AS VARCHAR)")} AS sh
-         |  FROM documents
-         |)
-         |SELECT CAST(((sh % 8) + 8) % 8 AS INTEGER) AS shard,
-         |  CAST(ROW_NUMBER() OVER (
-         |    PARTITION BY ((sh % 8) + 8) % 8 ORDER BY sh, doc_id) AS BIGINT)
-         |    AS pos,
-         |  doc_id
-         |FROM h ORDER BY shard, pos""".stripMargin
-    },
-
-    // the JSONL round-trip must reproduce the parquet original exactly —
-    // the oracle IS the original table
-    "s_jsonl_roundtrip" ->
-      """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // ORC round-trip fidelity == the parquet truth, partition-filtered
-    "s_orc_roundtrip" ->
-      """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents WHERE lang IN ('en', 'de')
-        |ORDER BY doc_id""".stripMargin,
-
-    "corpus_mix" -> {
-      import graft.operators.Sampling
-      val webThreshold = math.floor(0.5 * Sampling.Granularity).toLong
-      s"""SELECT source, epoch, doc_id, lang FROM (
-         |  SELECT 'wiki' AS source, e.epoch, doc_id, lang
-         |  FROM documents CROSS JOIN (SELECT unnest(range(0, 2)) AS epoch) e
-         |  WHERE lang = 'en'
-         |  UNION ALL
-         |  SELECT 'web' AS source, 0 AS epoch, doc_id, lang
-         |  FROM documents
-         |  WHERE ${Sampling.bucketSql("doc_id", "graft-web-0")} < $webThreshold
-         |)
-         |ORDER BY source, epoch, doc_id""".stripMargin
-    },
-
-    // op-for-op mirror: exact-integer excess quotient, emission-only exp
-    // through the decimal carrier, exact decimal normalization sum
-    "corpus_doremi_step" ->
-      """WITH per AS (
-        |  SELECT lang, COUNT(*) AS n,
-        |    CAST(SUM(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
-        |      AS t
-        |  FROM documents WHERE text IS NOT NULL GROUP BY lang
-        |), tot AS (
-        |  SELECT CAST(SUM(n) AS BIGINT) AS nn, CAST(SUM(t) AS BIGINT) AS tt,
-        |    COUNT(*) AS k
-        |  FROM per
-        |), wtab AS (
-        |  SELECT lang, n, k,
-        |    CAST(t * nn - n * tt AS DOUBLE) / CAST(n * nn AS DOUBLE)
-        |      AS excess,
-        |    CAST(exp(0.5 * (CAST(t * nn - n * tt AS DOUBLE)
-        |                    / CAST(n * nn AS DOUBLE))) AS DECIMAL(18,6)) AS w
-        |  FROM per CROSS JOIN tot
-        |), z AS (SELECT SUM(w) AS zz FROM wtab)
-        |SELECT lang, n AS n_docs, excess,
-        |  0.875 * (CAST(w AS DOUBLE) / CAST(zz AS DOUBLE))
-        |    + 0.125 / CAST(k AS DOUBLE) AS alpha
-        |FROM wtab CROSS JOIN z
-        |ORDER BY lang""".stripMargin,
-
-    "corpus_dsir_select" -> graft.operators.Dsir.oracleSql(k = 100),
-    "corpus_dsir_resample" -> graft.operators.Dsir.resampleOracleSql(k = 100),
-    "corpus_dsir_diag_tokens" -> graft.operators.Dsir.diagTokensOracleSql(),
-    "corpus_dsir_diag_buckets" -> graft.operators.Dsir.diagBucketsOracleSql(),
-    "corpus_dsir_diag_model" -> graft.operators.Dsir.diagModelOracleSql(),
-    "corpus_dsir_diag_weights" -> graft.operators.Dsir.diagWeightsOracleSql(),
-    "corpus_dsir_diag_gumbel" -> graft.operators.Dsir.diagGumbelOracleSql(),
-    "corpus_dsir_diag_cells" -> graft.operators.Dsir.diagCellsOracleSql(),
-    "corpus_dsir_diag_w12" -> graft.operators.Dsir.diagW12OracleSql(),
-    "f_fixedlog_table" -> FixedLog.tableOracleSql,
-
-    "text_scrub" -> {
-      val url = "https?://[^\\s]+"
-      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val phone = "\\+[0-9]{2} [0-9]{2} [0-9]{4,5}-[0-9]{4}"
-      s"""WITH planted AS (
-         |  SELECT doc_id,
-         |    text || CASE WHEN doc_id % 5 = 0
-         |      THEN ' Contact user' || doc_id || '@example.com via https://site'
-         |           || doc_id || '.example/page?ref=1 or +55 11 91234-5678'
-         |      ELSE '' END AS text
-         |  FROM documents
-         |)
-         |SELECT doc_id,
-         |  regexp_replace(regexp_replace(regexp_replace(text,
-         |    '$url', '<URL>', 'g'),
-         |    '$email', '<EMAIL>', 'g'),
-         |    '$phone', '<PHONE>', 'g') AS texto_limpo,
-         |  len(regexp_extract_all(text, '$url')) AS n_urls,
-         |  len(regexp_extract_all(text, '$email')) AS n_emails,
-         |  len(regexp_extract_all(text, '$phone')) AS n_phones
-         |FROM planted ORDER BY doc_id""".stripMargin
-    },
-
-    // the same RE2-safe pattern; DuckDB lists are 1-based, sent_idx 0-based
-    "text_sentence_split" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    regexp_replace(text, '\b(table|value)\b', '\1.', 'g') AS t
-        |  FROM documents WHERE text IS NOT NULL
-        |), s AS (
-        |  SELECT doc_id,
-        |    list_filter(list_transform(
-        |      regexp_extract_all(t, '[^.!?]+[.!?]*'), x -> trim(x)),
-        |      x -> length(x) > 0) AS sents
-        |  FROM p
-        |), i AS (
-        |  SELECT doc_id, sents,
-        |    CAST(unnest(range(1, len(sents) + 1)) AS INTEGER) AS idx
-        |  FROM s
-        |)
-        |SELECT doc_id, idx - 1 AS sent_idx, sents[idx] AS sentence,
-        |  CAST(length(sents[idx]) AS INTEGER) AS n_chars
-        |FROM i ORDER BY doc_id, sent_idx""".stripMargin,
-
-    // window=64 stride=48; DuckDB lists are 1-based like Spark slice
-    "text_chunk" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents
-        |  WHERE text IS NOT NULL AND trim(text) <> ''
-        |), counted AS (
-        |  SELECT doc_id, t,
-        |    CAST((GREATEST(len(t) - 64, 0) + 47) // 48 AS INTEGER) + 1 AS n_chunks
-        |  FROM toks
-        |), exploded AS (
-        |  SELECT doc_id, CAST(i AS INTEGER) AS chunk_idx,
-        |    array_to_string(t[(i*48 + 1):(i*48 + 64)], ' ') AS chunk_text
-        |  FROM counted, unnest(range(0, n_chunks)) AS u(i)
-        |)
-        |SELECT doc_id, chunk_idx, chunk_text,
-        |  len(string_split_regex(chunk_text, '\s+')) AS n_tokens
-        |FROM exploded
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "curate_topk_per_lang" ->
-      """WITH scored AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(list_distinct(string_split_regex(trim(text), '\s+'))) AS DOUBLE)
-        |      / len(string_split_regex(trim(text), '\s+')) AS uniq_ratio
-        |  FROM documents
-        |), ranked AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY lang
-        |    ORDER BY uniq_ratio DESC NULLS LAST, doc_id) AS rn
-        |  FROM scored
-        |)
-        |SELECT doc_id, lang, uniq_ratio FROM ranked WHERE rn <= 5
-        |ORDER BY lang, uniq_ratio DESC, doc_id""".stripMargin,
-
-    "q14_promo" ->
-      """SELECT 100.0 * CAST(SUM(CASE WHEN p_type LIKE 'PROMO%'
-        |    THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))
-        |    ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
-        |  / CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE)
-        |  AS promo_revenue_pct
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-10-01 00:00:00'""".stripMargin,
-
-    "embed_pca_power" -> graft.functions.VectorOracleSql.pcaPowerSql(),
-
-    "embed_pca_project" -> graft.functions.VectorOracleSql.pcaProjectSql(),
-
-    "embed_centroids" ->
-      """WITH dv AS (
-        |  SELECT label, d.dim AS dim,
-        |    CAST(CAST(embedding[d.dim + 1] AS DOUBLE) AS DECIMAL(18,6)) AS x
-        |  FROM embeddings CROSS JOIN (SELECT unnest(range(0, 64)) AS dim) d
-        |  WHERE embedding IS NOT NULL
-        |)
-        |SELECT label, COUNT(*) AS n_vecs, CAST(dim AS INTEGER) AS dim,
-        |  CAST(SUM(x) AS DOUBLE) / COUNT(*) AS m
-        |FROM dv GROUP BY label, dim ORDER BY label, dim""".stripMargin,
-
-    "embed_project" -> {
-      import graft.functions.{VectorFns, VectorOracleSql => V}
-      val pv = V.planesValuesDouble(VectorFns.randomPlanes(8, 64))
-      s"""WITH p AS (SELECT * FROM $pv AS t(idx, plane))
-         |SELECT e.vec_id, CAST(p.idx AS INTEGER) AS dim,
-         |  ${V.dot("e.embedding", "p.plane")} AS d
-         |FROM embeddings e CROSS JOIN p
-         |WHERE e.embedding IS NOT NULL
-         |ORDER BY e.vec_id, p.idx""".stripMargin
-    },
-
-    "kmeans_step" -> {
-      val idHash = graft.functions.SketchOracleSql.fnvFold("CAST(vec_id AS VARCHAR)")
-      val l2 = graft.functions.VectorOracleSql.l2sq("e.embedding", "c.c_vec")
-      s"""WITH corpus AS (
-         |  SELECT vec_id, embedding FROM embeddings WHERE embedding IS NOT NULL
-         |), idh AS (
-         |  SELECT vec_id, embedding,
-         |    CAST(CASE WHEN u >= CAST('9223372036854775808' AS HUGEINT)
-         |         THEN u - CAST('18446744073709551616' AS HUGEINT) ELSE u END AS BIGINT) AS h
-         |  FROM (SELECT vec_id, embedding, $idHash AS u FROM corpus)
-         |), cents AS (
-         |  SELECT vec_id AS centroid_id, embedding AS c_vec FROM (
-         |    SELECT vec_id, embedding, ROW_NUMBER() OVER (ORDER BY h, vec_id) AS rn FROM idh
-         |  ) WHERE rn <= 8
-         |), assigned AS (
-         |  SELECT centroid_id, embedding FROM (
-         |    SELECT e.embedding, c.centroid_id,
-         |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-         |        ORDER BY $l2, c.centroid_id) AS r
-         |    FROM corpus e CROSS JOIN cents c) WHERE r = 1
-         |), dv AS (
-         |  SELECT centroid_id, d.dim AS dim,
-         |    CAST(CAST(embedding[d.dim + 1] AS DOUBLE) AS DECIMAL(18,6)) AS x
-         |  FROM assigned CROSS JOIN (SELECT unnest(range(0, 64)) AS dim) d
-         |)
-         |SELECT centroid_id, COUNT(*) AS n_assigned, CAST(dim AS INTEGER) AS dim,
-         |  CAST(SUM(x) AS DOUBLE) / COUNT(*) AS m
-         |FROM dv GROUP BY centroid_id, dim
-         |ORDER BY centroid_id, dim""".stripMargin
-    },
-
-    "kmeans_converged" ->
-      graft.functions.VectorOracleSql.kmeansLloydSql(k = 8, iters = 3),
-
-    "kmeans_db_index" ->
-      graft.functions.VectorOracleSql.dbIndexSql(k = 8, iters = 3),
-
-    // the oracle ranks by the inner product DIRECTLY (descending); the
-    // engine ranks through the augmented-L2 reduction — agreement is the
-    // correctness proof of the transform
-    "embed_mips_transform" -> {
-      val d = graft.functions.VectorOracleSql.dot("e.embedding", "q.q_emb")
-      s"""WITH q AS (
-         |  SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings
-         |  WHERE vec_id < 10
-         |), scored AS (
-         |  SELECT q.query_id, e.vec_id, $d AS dot
-         |  FROM embeddings e CROSS JOIN q
-         |  WHERE e.vec_id <> q.query_id AND e.embedding IS NOT NULL
-         |)
-         |SELECT query_id, vec_id, dot, rank FROM (
-         |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |    ORDER BY dot DESC, vec_id) AS INTEGER) AS rank
-         |  FROM scored) WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin
-    },
-
-    "dedup_semantic" ->
-      graft.functions.VectorOracleSql.semanticRepsSql(k = 8, iters = 3),
-
-    "embed_quantize" ->
-      """WITH base AS (
-        |  SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS scale,
-        |    CASE WHEN list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) > 0 THEN
-        |      list_max(list_transform(range(1, len(embedding) + 1),
-        |        i -> abs(floor(CAST(embedding[i] AS DOUBLE)
-        |                 / list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE))))
-        |                 * 127 + 0.5)
-        |                 * list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE))))
-        |                 / 127 - CAST(embedding[i] AS DOUBLE))))
-        |    END AS recon_err
-        |  FROM embeddings WHERE embedding IS NOT NULL
-        |)
-        |SELECT vec_id, scale, recon_err, CAST(d.dim AS INTEGER) AS dim,
-        |  CAST(floor(CAST(embedding[d.dim + 1] AS DOUBLE) / scale * 127 + 0.5)
-        |       AS INTEGER) AS q
-        |FROM base CROSS JOIN (SELECT unnest(range(0, 64)) AS dim) d
-        |WHERE scale > 0
-        |UNION ALL
-        |SELECT vec_id, scale, recon_err, NULL AS dim, NULL AS q
-        |FROM base WHERE scale = 0
-        |ORDER BY vec_id, dim""".stripMargin,
-
-    "ann_brute_topk" -> Similarity.bruteOracleSql(),
-    "embed_hard_negatives" -> Similarity.hardNegOracleSql(),
-    "ann_lsh_topk" -> Similarity.lshOracleSql(),
-    "ann_range_search" -> Similarity.rangeOracleSql(tau = 0.25),
-    "ann_ivf_range" -> Similarity.ivfRangeOracleSql(tau = 0.2),
-    "ann_ivf_topk" -> Similarity.ivfOracleSql(),
-    // identical pipeline to ann_ivf_topk, routed through the materialized
-    // partitioned index — the oracle is the same by construction
-    "ann_ivf_indexed" -> Similarity.ivfOracleSql(),
-    // append ≡ rebuild-with-the-same-codebook: codebook sampled from the
-    // prior subset, assignment/probe/re-rank over the combined corpus
-    "ann_ivf_append" -> Similarity.ivfAppendOracleSql(),
-    "dedup_embedding" -> Dedup.embeddingOracleSql(),
-    "dedup_embedding_incremental" -> Dedup.embeddingIncrementalOracleSql(),
-    "dedup_minhash" -> graft.functions.SketchOracleSql.minhashOracleSql(),
-
-    "dedup_minhash_nonascii" ->
-      graft.functions.SketchOracleSql.minhashNonAsciiOracleSql(),
-
-    "dedup_lsh_recall_report" ->
-      graft.functions.SketchOracleSql.lshRecallOracleSql(),
-    "dedup_cluster" -> graft.functions.SketchOracleSql.clusterOracleSql(),
-
-    "dedup_cluster_survivors" ->
-      graft.functions.SketchOracleSql.clusterSurvivorsOracleSql(),
-    "dedup_survivors" -> graft.functions.SketchOracleSql.survivorsOracleSql(),
-    "decontaminate" -> graft.functions.SketchOracleSql.decontamOracleSql(),
-
-    "decontaminate_fuzzy" ->
-      graft.functions.SketchOracleSql.decontamFuzzyOracleSql(),
-    "dedup_incremental" -> graft.functions.SketchOracleSql.incrementalOracleSql(),
-    "dedup_simhash" -> graft.functions.SketchOracleSql.simhashOracleSql(),
-    "dedup_ngram_jaccard" -> graft.functions.SketchOracleSql.ngramJaccardOracleSql(),
-
-    "dedup_minhash_capped" ->
-      graft.functions.SketchOracleSql.minhashCappedOracleSql(),
-    "dedup_minhash_capped_report" ->
-      graft.functions.SketchOracleSql.minhashCappedReportOracleSql(),
-    "dedup_simhash_capped" ->
-      graft.functions.SketchOracleSql.simhashCappedOracleSql(),
-    "dedup_simhash_capped_report" ->
-      graft.functions.SketchOracleSql.simhashCappedReportOracleSql(),
-    "dedup_embedding_capped" -> Dedup.embeddingCappedOracleSql(),
-    "dedup_embedding_capped_report" ->
-      Dedup.embeddingCappedReportOracleSql(),
-    // the appended index is value-identical to a fresh rebuild over
-    // corpus ∪ batch, so the oracle is dedup_minhash's, verbatim
-    "s_minhash_index_append" ->
-      graft.functions.SketchOracleSql.minhashOracleSql(),
-    "dedup_incremental_indexed" ->
-      graft.functions.SketchOracleSql.incrementalOracleSql(),
-
-    // The staged blob = 8-byte PNG signature ++ UTF-8 text bytes, so the
-    // oracle prepends [137,80,78,71,13,10,26,10] to the byte stream: the
-    // rolling checksum folds over signature-then-payload, and feature
-    // lane 0 collects global positions ≡ 0 (mod 8) — the signature's 137
-    // plus payload bytes at offsets 0, 8, 16, … (1-based substring
-    // indices 1, 9, 17, …). length(text) > 0 on both sides keeps the
-    // staged file set and the oracle row set identical.
-    "multimodal_binary_ingest" ->
-      s"""WITH ${fixtureByteCtes()}
-        |SELECT doc_id AS id,
-        |  (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INTEGER)] AS kind,
-        |  CAST(blen + 8 AS INTEGER) AS n_bytes,
-        |  list_reduce(
-        |    list_prepend(CAST(0 AS BIGINT),
-        |      list_concat(
-        |        list_transform([137, 80, 78, 71, 13, 10, 26, 10],
-        |                       x -> CAST(x AS BIGINT)),
-        |        list_transform(bs, x -> CAST(x AS BIGINT)))),
-        |    (a, x) -> (a * 31 + x) % 1000000007) AS checksum,
-        |  CAST(137 + COALESCE(list_sum(
-        |      list_transform(range(0, CAST(ceil(blen / 8.0) AS BIGINT)),
-        |        j -> CAST(bs[CAST(j * 8 + 1 AS INTEGER)] AS BIGINT))), 0)
-        |    AS DOUBLE) / 255.0 / ((blen + 8) // 8) AS f0
-        |FROM byt
-        |ORDER BY id""".stripMargin,
-
-    // digest = sha256 over hex(signature ++ utf8(text)); the planted
-    // id-shifted copy doubles every payload's count, and documents
-    // sharing identical text collapse into one digest group
-    "dedup_binary" ->
-      s"""WITH ${fixtureByteCtes()}, blobs AS (
-        |  SELECT doc_id AS id,
-        |    sha256('89504E470D0A1A0A' || hex(encode(text))) AS digest
-        |  FROM src
-        |), doubled AS (
-        |  SELECT id, digest FROM blobs
-        |  UNION ALL
-        |  SELECT id + 100000, digest FROM blobs
-        |)
-        |SELECT digest, COUNT(*) AS n_copies, MIN(id) AS keeper_id
-        |FROM doubled GROUP BY digest ORDER BY digest""".stripMargin,
-
-    // pixel layout restated from documents.text: width 1 + len % 31,
-    // height ceil(len/width), zero padding adds nothing to the sum; the
-    // mean is ONE IEEE division of exact integers (engine-identical)
-    "multimodal_png_decode" ->
-      s"""WITH ${fixtureByteCtes()}
-        |SELECT doc_id AS id,
-        |  CAST(1 + blen % 31 AS INTEGER) AS width,
-        |  CAST(CEIL(blen / CAST(1 + blen % 31 AS DOUBLE))
-        |    AS INTEGER) AS height,
-        |  CAST(CAST(1 + blen % 31 AS BIGINT) *
-        |    CAST(CEIL(blen / CAST(1 + blen % 31 AS DOUBLE))
-        |      AS BIGINT) AS BIGINT) AS n_pix,
-        |  CAST(list_sum(list_transform(bs,
-        |    x -> CAST(x AS BIGINT))) AS BIGINT) AS pixel_sum,
-        |  CAST(list_sum(list_transform(bs,
-        |      x -> CAST(x AS BIGINT))) AS DOUBLE) /
-        |    (CAST(1 + blen % 31 AS BIGINT) *
-        |     CAST(CEIL(blen / CAST(1 + blen % 31 AS DOUBLE))
-        |       AS BIGINT)) AS mean_gray
-        |FROM byt
-        |ORDER BY id""".stripMargin,
-
-    // the resized pixels restated from text bytes: the fixture's image is
-    // the payload zero-padded to w*h (w = 1 + len%31), so output pixel
-    // (r, c) = floor-mean of the 2x2 block at (2r, 2c); a byte index past
-    // the payload reads 0 (the zero padding)
-    "multimodal_resize" ->
-      s"""WITH ${fixtureByteCtes()}, dims AS (
-        |  SELECT doc_id, bs, blen AS L,
-        |    CAST(1 + blen % 31 AS BIGINT) AS w,
-        |    CAST(CEIL(blen / CAST(1 + blen % 31 AS DOUBLE))
-        |      AS BIGINT) AS h
-        |  FROM byt
-        |), d2 AS (
-        |  SELECT doc_id, bs, L, w, h, w // 2 AS w2, h // 2 AS h2 FROM dims
-        |), cells AS (
-        |  SELECT doc_id, bs, L, w, w2,
-        |    CAST(unnest(range(w2 * h2)) AS BIGINT) AS i
-        |  FROM d2 WHERE w2 > 0 AND h2 > 0
-        |), blocks AS (
-        |  SELECT doc_id, bs, L,
-        |    2 * (i // w2) * w + 2 * (i % w2) AS base, w
-        |  FROM cells
-        |), px AS (
-        |  SELECT doc_id, (b0 + b1 + b2 + b3) // 4 AS p
-        |  FROM (
-        |    SELECT doc_id,
-        |      CASE WHEN base < L THEN
-        |        bs[CAST(base + 1 AS INTEGER)]
-        |        ELSE 0 END AS b0,
-        |      CASE WHEN base + 1 < L THEN
-        |        bs[CAST(base + 2 AS INTEGER)]
-        |        ELSE 0 END AS b1,
-        |      CASE WHEN base + w < L THEN
-        |        bs[CAST(base + w + 1 AS INTEGER)]
-        |        ELSE 0 END AS b2,
-        |      CASE WHEN base + w + 1 < L THEN
-        |        bs[CAST(base + w + 2 AS INTEGER)]
-        |        ELSE 0 END AS b3
-        |    FROM blocks)
-        |), agg AS (
-        |  SELECT doc_id, CAST(SUM(p) AS BIGINT) AS pix_sum,
-        |    CAST(MIN(p) AS INTEGER) AS pix_min,
-        |    CAST(MAX(p) AS INTEGER) AS pix_max
-        |  FROM px GROUP BY doc_id
-        |)
-        |SELECT d.doc_id AS id, CAST(d.w AS INTEGER) AS width,
-        |  CAST(d.h AS INTEGER) AS height,
-        |  CAST(d.w2 AS INTEGER) AS out_w, CAST(d.h2 AS INTEGER) AS out_h,
-        |  COALESCE(a.pix_sum, 0) AS pix_sum,
-        |  COALESCE(a.pix_min, 0) AS pix_min,
-        |  COALESCE(a.pix_max, 0) AS pix_max
-        |FROM d2 d LEFT JOIN agg a USING (doc_id) ORDER BY id""".stripMargin,
-
-    // removed bytes restated exactly: each tEXt chunk costs 12 bytes of
-    // framing (length + tag + CRC) + keyword + NUL + value, and every
-    // value is a pure function of doc_id
-    "multimodal_metadata_strip" -> pngStripOracleSql,
-
-    // removed bytes restated from (doc_id, text): the LIST chunk is
-    // 8 (header) + payload, payload = 'INFO' (4) + three INFO sub-chunks
-    // each 8 + len + pad(len odd) — ISFT 'graft-engine' (20), IART
-    // 'author-<id>' (l1), ICMT first-16-chars (l2); l + l%2 is even, so
-    // the outer chunk never pads. before = fmt/LIST/data, after = fmt/data
-    "multimodal_wav_metadata_strip" -> wavStripOracleSql,
-
-    // downsampled PCM restated from documents.text: input sample_i =
-    // (byte_i - 128) * 256, output_j = (s_2j + s_2j+1) // 2 (flooring
-    // division, mirrored by Math.floorDiv on the engine side)
-    "multimodal_audio_downsample" ->
-      s"""WITH ${fixtureByteCtes()}, base AS (
-        |  SELECT doc_id, bs, blen AS L,
-        |    CAST(8000 * (1 + doc_id % 3) AS INTEGER) AS rate
-        |  FROM byt
-        |), pairs AS (
-        |  SELECT doc_id, bs,
-        |    CAST(unnest(range(L // 2)) AS BIGINT) AS j
-        |  FROM base WHERE L >= 2
-        |), p AS (
-        |  SELECT doc_id,
-        |    (CAST((bs[CAST(2 * j + 1 AS INTEGER)]
-        |        - 128) * 256 AS BIGINT)
-        |     + CAST((bs[CAST(2 * j + 2 AS INTEGER)]
-        |        - 128) * 256 AS BIGINT)) // 2 AS v
-        |  FROM pairs
-        |), agg AS (
-        |  SELECT doc_id, CAST(SUM(v) AS BIGINT) AS sum_out,
-        |    CAST(MIN(v) AS BIGINT) AS min_out,
-        |    CAST(MAX(v) AS BIGINT) AS max_out
-        |  FROM p GROUP BY doc_id
-        |)
-        |SELECT b.doc_id AS id, b.rate AS rate_in,
-        |  CAST(b.rate // 2 AS INTEGER) AS rate_out,
-        |  b.L AS n_in, b.L // 2 AS n_out,
-        |  COALESCE(a.sum_out, 0) AS sum_out,
-        |  COALESCE(a.min_out, 0) AS min_out,
-        |  COALESCE(a.max_out, 0) AS max_out
-        |FROM base b LEFT JOIN agg a USING (doc_id) ORDER BY id""".stripMargin,
-
-    // PCM restated from documents.text: sample_i = (byte_i - 128) * 256
-    // (the 8->16-bit expansion the fixture encodes), rate 8000*(1+id%3);
-    // sums are exact integers, mean_amp is ONE IEEE division at emission,
-    // zero crossings flip exactly where the byte crosses 128. COALESCE
-    // covers length-1 docs whose crossing list is empty (NULL list_sum)
-    "multimodal_wav_decode" ->
-      s"""WITH ${fixtureByteCtes()}
-        |SELECT doc_id AS id,
-        |  CAST(8000 * (1 + doc_id % 3) AS INTEGER) AS sample_rate,
-        |  CAST(1 AS INTEGER) AS channels,
-        |  blen AS n_samples,
-        |  CAST(blen * 1000 // (8000 * (1 + doc_id % 3)) AS BIGINT)
-        |    AS duration_ms,
-        |  CAST(256 * list_sum(list_transform(bs,
-        |    x -> CAST(x - 128 AS BIGINT))) AS BIGINT) AS sample_sum,
-        |  CAST(256 * list_sum(list_transform(bs,
-        |      x -> CAST(abs(x - 128) AS BIGINT))) AS DOUBLE)
-        |    / blen AS mean_amp,
-        |  CAST(COALESCE(list_sum(list_transform(range(1, blen),
-        |    j -> CASE WHEN (bs[CAST(j AS INTEGER)] < 128)
-        |                <> (bs[CAST(j + 1 AS INTEGER)] < 128)
-        |              THEN 1 ELSE 0 END)), 0) AS BIGINT) AS zero_crossings
-        |FROM byt
-        |ORDER BY id""".stripMargin,
-
-    // the islands restatement of the sequential silence-split pass:
-    // sample i's amplitude is 256*|byte_i - 128| (the fixture's 8->16-bit
-    // expansion), active = amp >= 8192, segments break where >= 4 quiet
-    // samples separate active ones; peak over active samples equals peak
-    // over the span (embedded quiet amps sit below the threshold)
-    "multimodal_audio_segments" ->
-      s"""WITH ${fixtureByteCtes()}, chars AS (
-        |  SELECT doc_id AS id, CAST(u.i AS BIGINT) AS pos,
-        |    CAST(256 * abs(bs[CAST(u.i AS INTEGER)]
-        |      - 128) AS BIGINT) AS amp
-        |  FROM byt, UNNEST(range(1, blen + 1)) u(i)
-        |), act AS (
-        |  SELECT id, pos, amp,
-        |    CASE WHEN LAG(pos) OVER (PARTITION BY id ORDER BY pos) IS NULL
-        |         OR pos - LAG(pos) OVER (PARTITION BY id ORDER BY pos) - 1
-        |            >= 4
-        |      THEN 1 ELSE 0 END AS brk
-        |  FROM chars WHERE amp >= 8192
-        |), grp AS (
-        |  SELECT id, pos, amp,
-        |    CAST(SUM(brk) OVER (PARTITION BY id ORDER BY pos
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS seg
-        |  FROM act
-        |)
-        |SELECT id, seg - 1 AS seg_idx, MIN(pos) - 1 AS start_idx,
-        |  MAX(pos) - 1 AS end_idx, MAX(pos) - MIN(pos) + 1 AS n_samples,
-        |  CAST(COUNT(*) AS BIGINT) AS n_active,
-        |  CAST(MAX(amp) AS BIGINT) AS peak_amp
-        |FROM grp GROUP BY id, seg
-        |ORDER BY id, seg_idx""".stripMargin,
-
-    // pixel layout restated from documents.text (the png_decode formula);
-    // grid positions are integer floors, the mean is a floor division,
-    // the bit packs are BIGINT shifts below bit 32 — all exact
-    "multimodal_phash" ->
-      s"""WITH ${fixtureByteCtes()}, base AS (
-        |  SELECT doc_id AS id, bs, blen AS len,
-        |    CAST(1 + blen % 31 AS INTEGER) AS w,
-        |    CAST(CEIL(blen / CAST(1 + blen % 31 AS DOUBLE))
-        |      AS INTEGER) AS h
-        |  FROM byt
-        |), samp AS (
-        |  SELECT id, w, h,
-        |    list_transform(range(0, 64), k ->
-        |      CASE WHEN ((k // 8) * h // 8) * w + ((k % 8) * w // 8) < len
-        |        THEN bs[CAST(((k // 8) * h // 8) * w + ((k % 8) * w // 8) + 1
-        |            AS INTEGER)]
-        |        ELSE 0 END) AS s
-        |  FROM base
-        |), m AS (
-        |  SELECT id, w, h, s,
-        |    CAST(list_sum(s) // 64 AS INTEGER) AS mean
-        |  FROM samp
-        |)
-        |SELECT id, w AS width, h AS height,
-        |  CAST(COALESCE(list_sum(list_transform(range(0, 32), k ->
-        |    CASE WHEN s[CAST(k + 1 AS INTEGER)] > mean
-        |      THEN (CAST(1 AS BIGINT) << k) ELSE 0 END)), 0) AS BIGINT)
-        |    AS ahash_a,
-        |  CAST(COALESCE(list_sum(list_transform(range(32, 64), k ->
-        |    CASE WHEN s[CAST(k + 1 AS INTEGER)] > mean
-        |      THEN (CAST(1 AS BIGINT) << (k - 32)) ELSE 0 END)), 0)
-        |    AS BIGINT) AS ahash_b
-        |FROM m ORDER BY id""".stripMargin,
-
-    // COALESCEs mirror decodeStub's empty-media semantics: a NULL (or
-    // empty) payload decodes as n_bytes=0, checksum=0, f0=0.0 — without
-    // them a future fixture with a NULL text row would hash-mismatch
-    // byte view WITHOUT the fixture suffix: this gate reads the documents
-    // TABLE directly (mediaFromDocuments casts text to binary), not the
-    // staged files, so no plant applies — but the byte math must still be
-    // octet-true for any future non-ASCII table row
-    "multimodal_features" ->
-      """WITH byt AS (
-        |  SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS blen,
-        |    list_transform([hex(encode(text))], h ->
-        |      list_transform(range(1, CAST(length(h) // 2 AS BIGINT) + 1),
-        |        i -> CAST(('0x' || substr(h, CAST(2 * i - 1 AS INTEGER), 2))
-        |          AS INTEGER)))[1] AS bs
-        |  FROM documents
-        |)
-        |SELECT doc_id AS id,
-        |  (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INTEGER)] AS kind,
-        |  COALESCE(CAST(blen AS INTEGER), 0) AS n_bytes,
-        |  COALESCE(list_reduce(
-        |    list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(bs, x -> CAST(x AS BIGINT))),
-        |    (a, x) -> (a * 31 + x) % 1000000007), 0) AS checksum,
-        |  COALESCE(CAST(list_sum(list_transform(range(0, CAST(ceil(blen / 8.0) AS BIGINT)),
-        |         j -> CAST(bs[CAST(j * 8 + 1 AS INTEGER)] AS BIGINT))) AS DOUBLE)
-        |    / 255.0 / greatest(blen // 8, 1), 0.0) AS f0
-        |FROM byt ORDER BY id""".stripMargin,
-
-    // per-frame stats restated from documents.text: frame f of doc d =
-    // text bytes [f*32, f*32+32) zero-padded onto an 8x4 canvas (padding
-    // contributes 0 to the sum); delay = (1 + d%5)/100 s -> (1+d%5)*10 ms
-    "multimodal_apng_frames" ->
-      s"""WITH ${fixtureByteCtes()}, media AS (
-        |  SELECT doc_id AS id, bs, blen FROM byt
-        |), idx AS (
-        |  SELECT id, bs,
-        |    CAST(CEIL(blen / 32.0) AS BIGINT) AS nf,
-        |    unnest(range(0, CAST(CEIL(blen / 32.0) AS BIGINT)))
-        |      AS i
-        |  FROM media
-        |), sums AS (
-        |  SELECT id, nf, i,
-        |    CAST(COALESCE(list_sum(list_transform(
-        |      bs[CAST(i * 32 + 1 AS INTEGER):CAST(i * 32 + 32 AS INTEGER)],
-        |      x -> CAST(x AS BIGINT))), 0) AS BIGINT) AS pixel_sum
-        |  FROM idx WHERE i % 2 = 0
-        |)
-        |SELECT id, CAST(nf AS INTEGER) AS n_frames,
-        |  CAST(i AS INTEGER) AS frame_idx,
-        |  CAST((1 + id % 5) * 10 AS BIGINT) AS delay_ms,
-        |  pixel_sum,
-        |  CAST(pixel_sum AS DOUBLE) / 32.0 AS mean_gray
-        |FROM sums
-        |ORDER BY id, frame_idx""".stripMargin,
-
-    // restates both hash sets (originals + the pixel-0 -> 255 variants at
-    // id+100000) from documents.text via the multimodal_phash formula,
-    // then the identical band join + Hamming verify
-    "dedup_image_lsh" -> imageLshOracleSql,
-
-    // energy-profile fingerprint restated from documents.text (amp_i =
-    // 256*|byte_i - 128|; the planted variant forces amp_1 = 32768):
-    // window w = 64*(pos-1) // n, bit w set iff asum_w*n > total*cnt_w —
-    // all-integer cross-products, then the image gate's band join
-    "dedup_audio_lsh" -> audioLshOracleSql,
-
-    // temporal fingerprint restated from documents.text (pixel j of
-    // frame f = byte f*32+j, zero-padded; the planted variant forces
-    // frame 0 byte 0 to 255): per-frame GRADIENT hash (bit j iff
-    // px_j > px_{j+1} — near-unbiased bits, unlike threshold-vs-mean on
-    // text bytes), then a fixed 64-slot timeline — slot w reads frame
-    // w*nf//64 and samples hash bit w%31 — then the image gate's band
-    // join + Hamming verify
-    "dedup_video_lsh" ->
-      // frames = CEIL(payload BYTES / 32); the >= 4 minFrames bound is on
-      // those byte-derived frames, hence blen throughout
-      s"""WITH ${fixtureByteCtes()}, base AS (
-        |  SELECT doc_id AS id, bs, blen AS len,
-        |    CAST(CEIL(blen / 32.0) AS BIGINT) AS nf
-        |  FROM byt
-        |  WHERE CEIL(blen / 32.0) >= 4
-        |), alldocs AS (
-        |  SELECT id, bs, len, nf, FALSE AS variant FROM base
-        |  UNION ALL
-        |  SELECT id + 100000 AS id, bs, len, nf, TRUE AS variant
-        |  FROM base WHERE id % 4 = 0
-        |), pix AS (
-        |  SELECT id, nf, CAST(u.f AS BIGINT) AS f, CAST(v.j AS BIGINT) AS j,
-        |    CASE WHEN variant AND u.f = 0 AND v.j = 0 THEN 255
-        |      WHEN u.f * 32 + v.j < len THEN
-        |        bs[CAST(u.f * 32 + v.j + 1 AS INTEGER)]
-        |      ELSE 0 END AS px
-        |  FROM alldocs, UNNEST(range(0, nf)) u(f), UNNEST(range(0, 32)) v(j)
-        |), fh AS (
-        |  SELECT p.id, p.f,
-        |    CAST(COALESCE(SUM(CASE WHEN p.px > q.px
-        |      THEN (CAST(1 AS BIGINT) << CAST(p.j AS INTEGER)) END), 0)
-        |      AS BIGINT) AS ahash
-        |  FROM pix p JOIN pix q
-        |    ON q.id = p.id AND q.f = p.f AND q.j = p.j + 1
-        |  GROUP BY p.id, p.f
-        |), slots AS (
-        |  SELECT a.id, CAST(u.w AS BIGINT) AS w,
-        |    (CAST(u.w AS BIGINT) * a.nf) // 64 AS f
-        |  FROM alldocs a, UNNEST(range(0, 64)) u(w)
-        |), sbits AS (
-        |  SELECT s.id, s.w,
-        |    (h.ahash >> CAST(s.w % 31 AS INTEGER)) & 1 AS bit
-        |  FROM slots s JOIN fh h ON h.id = s.id AND h.f = s.f
-        |), hv AS (
-        |  SELECT id,
-        |    CAST(COALESCE(SUM(CASE WHEN w < 32 AND bit = 1
-        |      THEN CAST(1 AS BIGINT) << CAST(w AS INTEGER) END), 0)
-        |      AS BIGINT) AS ahash_a,
-        |    CAST(COALESCE(SUM(CASE WHEN w >= 32 AND bit = 1
-        |      THEN CAST(1 AS BIGINT) << CAST(w - 32 AS INTEGER) END), 0)
-        |      AS BIGINT) AS ahash_b
-        |  FROM sbits GROUP BY id
-        |), bands AS (
-        |  SELECT id, ahash_a, ahash_b, b,
-        |    CASE WHEN b < 4 THEN (ahash_a >> CAST(b * 8 AS INTEGER)) & 255
-        |      ELSE (ahash_b >> CAST((b - 4) * 8 AS INTEGER)) & 255
-        |    END AS bv
-        |  FROM hv CROSS JOIN (SELECT unnest(range(0, 8)) AS b)
-        |), cand AS (
-        |  SELECT DISTINCT x.id AS id_a, y.id AS id_b,
-        |    x.ahash_a AS aa, x.ahash_b AS ab,
-        |    y.ahash_a AS ba, y.ahash_b AS bb
-        |  FROM bands x JOIN bands y
-        |    ON x.b = y.b AND x.bv = y.bv AND x.id < y.id
-        |)
-        |SELECT id_a, id_b,
-        |  CAST(bit_count(xor(aa, ba)) + bit_count(xor(ab, bb)) AS INTEGER)
-        |    AS hamming
-        |FROM cand
-        |WHERE bit_count(xor(aa, ba)) + bit_count(xor(ab, bb)) <= 16
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // restates every decoded per-frame statistic from documents.text
-    // alone (the APNG fixture lays doc bytes out 32 per 8x4 frame,
-    // zero-padded): pixel j of frame f = byte f*32+j, frame 0 diffs
-    // against black
-    "multimodal_scene_cuts" ->
-      s"""WITH ${fixtureByteCtes()}, media AS (
-        |  SELECT doc_id AS id, bs, blen FROM byt
-        |), idx AS (
-        |  SELECT id, bs,
-        |    unnest(range(0, CAST(CEIL(blen / 32.0) AS BIGINT)))
-        |      AS f
-        |  FROM media
-        |), grid AS (
-        |  SELECT id, bs, f, unnest(range(0, 32)) AS j FROM idx
-        |), pix AS (
-        |  SELECT id, f, j,
-        |    CAST(COALESCE(bs[CAST(f * 32 + j + 1 AS INTEGER)], 0)
-        |      AS BIGINT) AS px
-        |  FROM grid
-        |), fsum AS (
-        |  SELECT id, f, SUM(px) AS s FROM pix GROUP BY id, f
-        |), fh AS (
-        |  SELECT p.id, p.f,
-        |    CAST(SUM(CASE WHEN p.px > s.s // 32
-        |      THEN (CAST(1 AS BIGINT) << CAST(p.j AS INTEGER))
-        |      ELSE 0 END) AS BIGINT) AS ahash
-        |  FROM pix p JOIN fsum s ON p.id = s.id AND p.f = s.f
-        |  GROUP BY p.id, p.f
-        |), dl AS (
-        |  SELECT c.id, c.f,
-        |    CAST(SUM(ABS(c.px - COALESCE(q.px, 0))) AS BIGINT) AS delta
-        |  FROM pix c LEFT JOIN pix q
-        |    ON q.id = c.id AND q.j = c.j AND q.f = c.f - 1
-        |  GROUP BY c.id, c.f
-        |)
-        |SELECT h.id, CAST(h.f AS INTEGER) AS frame_idx, h.ahash,
-        |  d.delta AS delta_l1, d.delta > 512 AS is_cut
-        |FROM fh h JOIN dl d ON h.id = d.id AND h.f = d.f
-        |ORDER BY h.id, frame_idx""".stripMargin,
-
-    "multimodal_frames" ->
-      """WITH media AS (
-        |  SELECT doc_id AS id,
-        |         (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INTEGER)] AS kind,
-        |         encode(text) AS bytes
-        |  FROM documents
-        |), indexed AS (
-        |  SELECT id, kind, hex(bytes) AS h,
-        |         unnest(range(0, GREATEST(CAST(CEIL(octet_length(bytes) / 64.0) AS BIGINT), 1))) AS i
-        |  FROM media
-        |)
-        |SELECT id, kind, CAST(i AS INTEGER) AS frame_idx,
-        |       substring(h, CAST(i * 128 + 1 AS INTEGER), 32) AS frame_hex
-        |FROM indexed
-        |WHERE length(substring(h, CAST(i * 128 + 1 AS INTEGER), 32)) > 0
-        |ORDER BY id, frame_idx""".stripMargin,
-
-    "window_tumbling" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events
-        |GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    // 30-min gap = 1_800_000_000 µs; ties broken by event_id on both sides
-    "sessionize_batch" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, ts, value FROM events WHERE ts IS NOT NULL
-        |), marked AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), seqd AS (
-        |  SELECT user_id, ts, value,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS session_seq
-        |  FROM marked
-        |)
-        |SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-        |  COUNT(*) AS n_events,
-        |  MIN(ts) AS session_start, MAX(ts) AS session_end,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM seqd
-        |GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_seq""".stripMargin,
-
-    // identical to window_tumbling: bounded stream == batch is the gate
-    // identical aggregate spec as window_sliding — the streaming run must
-    // reproduce the batch sliding windows exactly
-    "stream_sliding" ->
-      """WITH expanded AS (
-        |  SELECT CAST(to_timestamp(CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800
-        |           - o.off * 1800) AS TIMESTAMP) AS window_start,
-        |         event_type, value
-        |  FROM events CROSS JOIN (VALUES (0), (1)) AS o(off)
-        |)
-        |SELECT window_start, event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM expanded
-        |GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    "stream_topk" ->
-      """WITH counts AS (
-        |  SELECT date_trunc('hour', ts) AS window_start, user_id,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY window_start, user_id
-        |)
-        |SELECT window_start, user_id, n, rank FROM (
-        |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY window_start
-        |    ORDER BY n DESC, user_id) AS INTEGER) AS rank
-        |  FROM counts) WHERE rank <= 3
-        |ORDER BY window_start, rank""".stripMargin,
-
-    "stream_tumbling" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events
-        |GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    // the finalized subset: windows whose end the bounded run's final
-    // watermark (max event time minus the 2h delay) has passed; the
-    // boundary is window_end <= watermark, Spark's eviction predicate
-    "stream_append_finalize" ->
-      """WITH wm AS (
-        |  SELECT MAX(ts) - INTERVAL 2 HOUR AS w FROM events
-        |)
-        |SELECT date_trunc('hour', ts) AS window_start, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events CROSS JOIN wm
-        |WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= w
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // identical to the batch tumbling aggregate over ALL events — which
-    // the restarted query only matches if its state survived the restart
-    "stream_checkpoint_resume" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events
-        |GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-
-    // sessionize_batch restated at ms precision (the stream state's own
-    // granularity), keeping only sessions CLOSED within the bounded run —
-    // i.e. every session except each user's last (that one stays open in
-    // the state store until a timeout no bounded run delivers)
-    // double replay must equal ONE apply of the change set: latest
-    // (ts, event_id) per key, deletes (error events) absent from serving
-    "stream_cdc_upsert" ->
-      """WITH changes AS (
-        |  SELECT user_id AS key, ts, event_id,
-        |    CASE WHEN event_type = 'error' THEN 'delete' ELSE 'upsert' END
-        |      AS op,
-        |    value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |                       ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events WHERE user_id IS NOT NULL
-        |)
-        |SELECT key, value AS last_value, ts AS last_ts,
-        |  event_id AS last_event_id
-        |FROM changes WHERE rn = 1 AND op = 'upsert'
-        |ORDER BY key""".stripMargin,
-
-    "stream_sessionize_closed" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, date_trunc('milliseconds', ts) AS ts
-        |  FROM events WHERE ts IS NOT NULL
-        |), marked AS (
-        |  SELECT user_id, event_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_ms(ts) - epoch_ms(lag(ts) OVER w) > 1800000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), seqd AS (
-        |  SELECT user_id, ts,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS session_seq
-        |  FROM marked
-        |), sess AS (
-        |  SELECT user_id, session_seq, COUNT(*) AS n_events,
-        |    MIN(ts) AS session_start, MAX(ts) AS session_end
-        |  FROM seqd GROUP BY user_id, session_seq
-        |)
-        |SELECT user_id, n_events, session_start, session_end
-        |FROM (SELECT *, MAX(session_seq) OVER (PARTITION BY user_id) AS mx
-        |      FROM sess)
-        |WHERE session_seq < mx
-        |ORDER BY user_id, session_start""".stripMargin,
-
-    // identical to j_stream_interval: bounded stream == batch is the gate
-    // matched pairs = the plain interval join; the null-row set is the
-    // state EVICTION under the run's final GLOBAL watermark, which is the
-    // MIN across both watermarked inputs (clicks and purchases each carry
-    // max(own ts) - 2h; Spark's multiple-watermark policy takes the min —
-    // measured: using the global max over ALL event types overshoots the
-    // boundary); a click is evicted (and emits its null row) when its
-    // join window end l_ts + 1h falls below that watermark
-    "stream_outer_join" ->
-      """WITH wm AS (
-        |  SELECT LEAST(
-        |    (SELECT max(ts) FROM events WHERE event_type = 'click'),
-        |    (SELECT max(ts) FROM events WHERE event_type = 'purchase'))
-        |    - INTERVAL 2 HOUR AS w
-        |), l AS (
-        |  SELECT user_id, event_id AS l_id, ts AS l_ts FROM events
-        |  WHERE event_type = 'click'
-        |), r AS (
-        |  SELECT user_id AS ru, event_id AS r_id, ts AS r_ts FROM events
-        |  WHERE event_type = 'purchase'
-        |), matched AS (
-        |  SELECT l.user_id, l_id, r_id, l_ts, r_ts
-        |  FROM l JOIN r ON l.user_id = ru AND r_ts > l_ts
-        |    AND r_ts <= l_ts + INTERVAL 1 HOUR
-        |), unmatched AS (
-        |  SELECT l.user_id, l_id, CAST(NULL AS BIGINT) AS r_id, l_ts,
-        |    CAST(NULL AS TIMESTAMP) AS r_ts
-        |  FROM l CROSS JOIN wm
-        |  WHERE NOT EXISTS (
-        |      SELECT 1 FROM r WHERE ru = l.user_id AND r_ts > l_ts
-        |        AND r_ts <= l_ts + INTERVAL 1 HOUR)
-        |    AND l_ts + INTERVAL 1 HOUR < w
-        |)
-        |SELECT * FROM matched
-        |UNION ALL
-        |SELECT * FROM unmatched
-        |ORDER BY user_id, l_id, r_id""".stripMargin,
-
-    "stream_interval_join" ->
-      """SELECT l.user_id, l.event_id AS l_id, r.event_id AS r_id,
-        |  l.ts AS l_ts, r.ts AS r_ts
-        |FROM events l JOIN events r
-        |  ON l.user_id = r.user_id
-        |  AND r.ts > l.ts AND r.ts <= l.ts + INTERVAL 1 HOUR
-        |WHERE l.event_type = 'click' AND r.event_type = 'purchase'
-        |ORDER BY l.user_id, l_id, r_id""".stripMargin,
-
-    // doubled input collapses back to the original table, row for row
-    "stream_dedup" ->
-      """SELECT event_id, ts, user_id, event_type, value, props
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // the streaming near-dup kept-chain, unrolled over the fixed 3-batch
-    // slicing (SketchOracleSql.streamKeptChain scaladoc)
-    "stream_dedup_minhash" ->
-      graft.functions.SketchOracleSql.streamDedupOracleSql(),
-    "stream_dedup_minhash_log" ->
-      graft.functions.SketchOracleSql.streamDedupLogOracleSql(),
-    // retract and compact share ONE oracle verbatim: the tombstone view
-    // and the physically-compacted store must serve the same live set
-    "stream_dedup_retract" ->
-      graft.functions.SketchOracleSql.streamDedupRetractOracleSql(),
-    "stream_dedup_compact" ->
-      graft.functions.SketchOracleSql.streamDedupRetractOracleSql(),
-
-    // bounded stream == batch: the enrichment join + aggregate restated
-    "stream_static_join" ->
-      """SELECT CAST(user_id % 3 AS INTEGER) AS cohort, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events WHERE user_id IS NOT NULL
-        |GROUP BY cohort ORDER BY cohort""".stripMargin,
-
-    // a replayed ingest appends nothing: the store equals ONE load — hash +
-    // first-wins dedup over the normalized records (s7's shape, undoubled,
-    // without the star-key joins the streaming ingest doesn't do)
-    "stream_ingest_exactly_once" ->
-      s"""WITH records AS ($recordsSql),
-         |hashed AS (
-         |  SELECT *,
-         |    md5(strftime(ano_mes, '%Y-%m-%d') || '|' || grupo_economico || '|' ||
-         |        servico || '|' || variavel || '|' ||
-         |        CAST(CAST(valor AS DECIMAL(18,2)) AS VARCHAR)) AS hash_registro
-         |  FROM records
-         |), deduped AS (
-         |  SELECT * FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY hash_registro
-         |                                 ORDER BY arquivo_origem, linha_origem) AS rn
-         |    FROM hashed) WHERE rn = 1
-         |)
-         |SELECT ano_mes, grupo_economico, servico, variavel,
-         |       CAST(valor AS DOUBLE) AS valor,
-         |       arquivo_origem, linha_origem, hash_registro
-         |FROM deduped
-         |ORDER BY hash_registro""".stripMargin,
-
-    "q6_forecast_revenue" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE)
-        |  AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-
-    "q7_nation_volume" ->
-      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-        |  CAST(EXTRACT(year FROM l.l_shipdate) AS INTEGER) AS l_year,
-        |  CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))) AS DOUBLE)
-        |    AS volume
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-        |JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-        |WHERE sn.n_name IN ('NATION_1', 'NATION_2')
-        |  AND cn.n_name IN ('NATION_1', 'NATION_2')
-        |  AND sn.n_name <> cn.n_name
-        |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-
-    "q10_returned_items" ->
-      """SELECT c_custkey, c_name, n_name,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE)
-        |    AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-        |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-
-    "q15_top_supplier" ->
-      """WITH revenue AS (
-        |  SELECT l_suppkey,
-        |    CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE)
-        |      AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  GROUP BY l_suppkey
-        |)
-        |SELECT s_suppkey, s_name, total_revenue
-        |FROM supplier JOIN revenue ON s_suppkey = l_suppkey
-        |WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    // the same FNV shard assignment (power-of-two modulus: unsigned mod
-    // == signed pmod) and whitespace token counts
-    "corpus_shards" -> {
-      val h = graft.functions.SketchOracleSql.fnvFold(
-        "concat('shard|', CAST(doc_id AS VARCHAR))")
-      s"""SELECT CAST($h % 16 AS INTEGER) AS shard,
-         |  COUNT(*) AS n_docs,
-         |  CAST(SUM(len(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+'))) AS BIGINT)
-         |    AS n_tokens,
-         |  CAST(SUM(length(text)) AS BIGINT) AS n_chars
-         |FROM documents WHERE text IS NOT NULL
-         |GROUP BY 1 ORDER BY shard""".stripMargin
-    },
-
-    "privacy_k_anonymity" ->
-      """SELECT c_nationkey, c_mktsegment,
-        |  COUNT(*) AS group_size,
-        |  COUNT(DISTINCT c_acctbal) AS l_diversity,
-        |  COUNT(*) >= 10 AS k_anonymous
-        |FROM customer
-        |GROUP BY c_nationkey, c_mktsegment
-        |ORDER BY c_nationkey, c_mktsegment""".stripMargin,
-
-    // the same inverse-CDF Laplace restated: hash-uniform from the group
-    // key, sign/ln shape mirrored operation-for-operation, decimal
-    // truncation at emission
-    "privacy_dp_laplace" -> {
-      // FixedLog mirror of Privacy.dpLaplaceCounts: m = G - |2h+1-G| odd,
-      // noise = sign(2h+1-G) · ((g·LN2 - fixedLn(m)) · s/ε-num), all
-      // integer — ε = 0.5 → 1/ε = 10/5
-      val b = graft.operators.Sampling.bucketSql("lang", "dp-lap")
-      val g = graft.operators.Sampling.Granularity
-      val kG = java.lang.Long.numberOfTrailingZeros(g)
-      val (sE, aE) = FixedLog.decimalAsRational(0.5)
-      s"""WITH c AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY 1),
-         |dd AS (
-         |  SELECT lang, n, 2 * CAST($b AS BIGINT) + 1 - $g AS d,
-         |    $g - abs(2 * CAST($b AS BIGINT) + 1 - $g) AS m
-         |  FROM c
-         |), nz AS (
-         |  SELECT lang, n, d,
-         |    ${FixedLog.duckLnItems("m", "__lnm").mkString(",\n    ")},
-         |    (CAST($kG * ${FixedLog.Ln2S12} - __lnm AS HUGEINT) * $sE)
-         |      // $aE AS __mag12
-         |  FROM dd
-         |)
-         |SELECT lang, CAST(0.5 AS DOUBLE) AS epsilon,
-         |  CAST(CAST(n + ${FixedLog.duckS12ToDec6("__noise12")}
-         |    AS DECIMAL(18,6)) AS DOUBLE) AS noisy_count
-         |FROM (
-         |  SELECT lang, n,
-         |    CASE WHEN d < 0 THEN -__mag12 ELSE __mag12 END AS __noise12
-         |  FROM nz)
-         |ORDER BY lang""".stripMargin
-    },
-
-    "audit_orphans" ->
-      """SELECT 'customer->nation' AS relation,
-        |  (SELECT COUNT(*) FROM customer c
-        |   WHERE NOT EXISTS (SELECT 1 FROM nation n
-        |                     WHERE n.n_nationkey = c.c_nationkey)) AS n_orphans
-        |UNION ALL
-        |SELECT 'lineitem->orders' AS relation,
-        |  (SELECT COUNT(*) FROM lineitem l
-        |   WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |                     WHERE o.o_orderkey = l.l_orderkey)) AS n_orphans
-        |UNION ALL
-        |SELECT 'orders->customer' AS relation,
-        |  (SELECT COUNT(*) FROM orders o
-        |   WHERE NOT EXISTS (SELECT 1 FROM customer c
-        |                     WHERE c.c_custkey = o.o_custkey)) AS n_orphans
-        |ORDER BY relation""".stripMargin,
-
-    "stream_lateness_profile" ->
-      """WITH marked AS (
-        |  SELECT event_type,
-        |    GREATEST(COALESCE(
-        |      MAX(epoch_us(ts)) OVER (PARTITION BY event_type ORDER BY event_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      - epoch_us(ts), 0), 0) AS late_us
-        |  FROM events
-        |)
-        |SELECT event_type, COUNT(*) AS n,
-        |  COUNT(*) FILTER (WHERE late_us > 1800000000) AS n_late_30m,
-        |  MAX(late_us) AS max_late_us
-        |FROM marked GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    // double-replay appends nothing: the view equals the one-shot batch
-    // aggregate of the raw table
-    "stream_matview" ->
-      """SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events
-        |GROUP BY event_type, day
-        |ORDER BY event_type, day""".stripMargin,
-
-    // compaction preserves content exactly: the oracle is the same
-    // undoubled deduped fact as stream_ingest_exactly_once — the two
-    // disjoint slices reassemble to one load, and the rewrite changes
-    // layout only
-    "s_compaction" ->
-      s"""WITH records AS ($recordsSql),
-         |hashed AS (
-         |  SELECT *,
-         |    md5(strftime(ano_mes, '%Y-%m-%d') || '|' || grupo_economico || '|' ||
-         |        servico || '|' || variavel || '|' ||
-         |        CAST(CAST(valor AS DECIMAL(18,2)) AS VARCHAR)) AS hash_registro
-         |  FROM records
-         |), deduped AS (
-         |  SELECT * FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY hash_registro
-         |                                 ORDER BY arquivo_origem, linha_origem) AS rn
-         |    FROM hashed) WHERE rn = 1
-         |)
-         |SELECT ano_mes, grupo_economico, servico, variavel,
-         |       CAST(valor AS DOUBLE) AS valor,
-         |       arquivo_origem, linha_origem, hash_registro
-         |FROM deduped
-         |ORDER BY hash_registro""".stripMargin,
-
-    // chains follow doc-id rank order, broken every 50 ranks, so each
-    // component's min label is the segment's first doc_id; nodes in a
-    // 1-node trailing segment appear in no pair and are absent (CC's
-    // contract covers only nodes with at least one pair)
-    "dedup_cluster_chain" ->
-      """WITH n AS (
-        |  SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS rn
-        |  FROM documents
-        |), g AS (
-        |  SELECT doc_id, CAST(CEIL(rn / 50.0) AS BIGINT) AS grp FROM n
-        |), sized AS (
-        |  SELECT doc_id, grp, COUNT(*) OVER (PARTITION BY grp) AS gn FROM g
-        |)
-        |SELECT doc_id, MIN(doc_id) OVER (PARTITION BY grp) AS cluster_rep
-        |FROM sized WHERE gn >= 2
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_bpe_tokens" -> graft.functions.Bpe.oracleSql,
-
-    "tokenizer_fertility" -> graft.functions.Bpe.fertilityOracleSql,
-    "text_wordpiece" -> graft.functions.WordPiece.pieceCountsOracleSql(),
-
-    "text_bpe_train" -> graft.functions.Bpe.trainOracleSql(8),
-
-    "text_unigram_step" -> graft.operators.Unigram.emStepOracleSql(),
-
-    "text_unigram_em" ->
-      graft.operators.Unigram.emTrainOracleSql(rounds = 2),
-
-    "text_unigram_tokens" ->
-      graft.operators.Unigram.tokenCountsOracleSql(rounds = 2),
-
-    // the merged read's semantic spec: old-batch rows carry NULL for the
-    // later-added column, new-batch rows keep their values
-    "s_schema_evolution" ->
-      """SELECT doc_id, text, CAST(NULL AS VARCHAR) AS lang
-        |FROM documents WHERE doc_id % 2 = 0
-        |UNION ALL
-        |SELECT doc_id, text, lang FROM documents WHERE doc_id % 2 = 1
-        |ORDER BY doc_id""".stripMargin,
-
-    // bucket layout changes nothing about results — the oracle is the
-    // plain join; co-location is asserted plan-level in ScaleSpec
-    "j_bucketed" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS receita
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-
-    // brute-force restatement of the grid join — the oracle defines the
-    // SEMANTICS (all pairs within radius); the engine's 3x3 cell join is
-    // optimization only. Same exact-BIGINT multiplicative coordinates
-    "j_spatial_grid" -> {
-      def coord(mult: Long, k: String) =
-        s"CAST((CAST($k AS BIGINT) * $mult) % ${1L << 20} AS BIGINT)"
-      s"""WITH c AS (
-         |  SELECT c_custkey, ${coord(2654435761L, "c_custkey")} AS cx,
-         |    ${coord(2246822519L, "c_custkey")} AS cy
-         |  FROM customer
-         |), s AS (
-         |  SELECT s_suppkey, ${coord(3266489917L, "s_suppkey")} AS sx,
-         |    ${coord(668265263L, "s_suppkey")} AS sy
-         |  FROM supplier
-         |)
-         |SELECT s_suppkey, c_custkey,
-         |  (cx - sx) * (cx - sx) + (cy - sy) * (cy - sy) AS dist2
-         |FROM c CROSS JOIN s
-         |WHERE (cx - sx) * (cx - sx) + (cy - sy) * (cy - sy)
-         |      <= ${10000L * 10000L}
-         |ORDER BY s_suppkey, c_custkey""".stripMargin
-    },
-
-    "j_fuzzy_block" ->
-      """WITH keyed AS (
-        |  SELECT c_custkey,
-        |    lpad(CAST((CAST(c_custkey AS BIGINT) * 2654435761) % 1000000000
-        |              AS VARCHAR), 9, '0') AS k
-        |  FROM customer
-        |), phones AS (
-        |  SELECT c_custkey,
-        |    substring(k, 1, 3) || '-' || substring(k, 4, 3) || '-' ||
-        |    substring(k, 7, 3) AS c_phone
-        |  FROM keyed
-        |), pert AS (
-        |  SELECT c_custkey + 1000000 AS alt_key,
-        |    substring(c_phone, 1, length(c_phone) - 1) ||
-        |      CAST((CAST(substring(c_phone, length(c_phone), 1) AS INTEGER) + 1) % 10
-        |           AS VARCHAR) AS alt_phone
-        |  FROM phones WHERE c_custkey % 3 = 0
-        |)
-        |SELECT c.c_custkey, p.alt_key,
-        |  CAST(levenshtein(c.c_phone, p.alt_phone) AS INTEGER) AS dist
-        |FROM phones c JOIN pert p
-        |  ON substring(c.c_phone, 1, 7) = substring(p.alt_phone, 1, 7)
-        |WHERE levenshtein(c.c_phone, p.alt_phone) <= 1
-        |ORDER BY c_custkey, alt_key""".stripMargin,
-
-    // the Spark side computes `pass` from the same unrounded doubles; the
-    // '...' replace is non-overlapping left-to-right in both engines and
-    // the diff is always a multiple of 3, so /3 is exact
-    "quality_gopher_rules" ->
-      """WITH d AS (
-        |  SELECT doc_id, text,
-        |    string_split_regex(trim(lower(text)), '\s+') AS words,
-        |    string_split_regex(lower(text), '[^a-z0-9_]+') AS toks,
-        |    string_split(text, chr(10)) AS lines
-        |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''
-        |), m AS (
-        |  SELECT doc_id,
-        |    CAST(len(words) AS DOUBLE) AS n_words,
-        |    CAST(length(regexp_replace(trim(text), '\s+', '', 'g')) AS DOUBLE)
-        |      / CAST(len(words) AS DOUBLE) AS mean_word_len,
-        |    (CAST(length(text) - length(replace(text, '#', '')) AS DOUBLE)
-        |      + (length(text) - length(replace(text, '...', ''))) / 3)
-        |      / CAST(len(words) AS DOUBLE) AS symbol_ratio,
-        |    CAST(len(list_filter(lines,
-        |        l -> regexp_matches(l, '^\s*[-*•]'))) AS DOUBLE)
-        |      / CAST(len(lines) AS DOUBLE) AS bullet_frac,
-        |    CAST(len(list_filter(lines,
-        |        l -> regexp_matches(l, '\.\.\.\s*$'))) AS DOUBLE)
-        |      / CAST(len(lines) AS DOUBLE) AS ellipsis_frac,
-        |    CAST(len(list_filter(words,
-        |        w -> regexp_matches(w, '[a-z]'))) AS DOUBLE)
-        |      / CAST(len(words) AS DOUBLE) AS alpha_frac,
-        |    len(list_filter(['the','be','to','of','and','that','have','with'],
-        |        sw -> list_contains(toks, sw))) AS stop_hits
-        |  FROM d
-        |)
-        |SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
-        |  ROUND(mean_word_len, 6) AS mean_word_len,
-        |  ROUND(symbol_ratio, 6) AS symbol_ratio,
-        |  ROUND(bullet_frac, 6) AS bullet_frac,
-        |  ROUND(ellipsis_frac, 6) AS ellipsis_frac,
-        |  ROUND(alpha_frac, 6) AS alpha_frac,
-        |  CAST(stop_hits AS BIGINT) AS stop_hits,
-        |  (n_words >= 50 AND n_words <= 100000
-        |    AND mean_word_len >= 3 AND mean_word_len <= 10
-        |    AND symbol_ratio <= 0.1 AND bullet_frac <= 0.9
-        |    AND ellipsis_frac <= 0.3 AND alpha_frac >= 0.8
-        |    AND stop_hits >= 1) AS pass
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    // same collapse-and-count features, same left-to-right arithmetic
-    "quality_readability" ->
-      """WITH base AS (
-        |  SELECT doc_id, replace(lower(text), '#', '') AS t
-        |  FROM documents WHERE text IS NOT NULL AND trim(text) <> ''
-        |), feat AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split_regex(trim(t), '\s+')) AS DOUBLE) AS words,
-        |    CAST(length(regexp_replace(t, '[aeiouy]+', '#', 'g')) -
-        |         length(replace(regexp_replace(t, '[aeiouy]+', '#', 'g'), '#', ''))
-        |         AS DOUBLE) AS syl,
-        |    GREATEST(
-        |      CAST(length(regexp_replace(t, '[.!?]+', '#', 'g')) -
-        |           length(replace(regexp_replace(t, '[.!?]+', '#', 'g'), '#', ''))
-        |           AS DOUBLE), 1.0) AS sents
-        |  FROM base
-        |)
-        |SELECT doc_id,
-        |  ROUND(206.835 - 1.015 * (words / sents) - 84.6 * (syl / words), 6)
-        |    AS flesch
-        |FROM feat ORDER BY doc_id""".stripMargin,
-
-    // per-char term through [[FixedLog]] integer arithmetic (p·ln(p) =
-    // -(c·(fixedLn(n)-fixedLn(c)))//n at scale 12, quantized to 1e-6 by
-    // integer rounding), ln(2) as an exact literal on both engines — no
-    // libm anywhere in the value path
-    "quality_entropy" ->
-      s"""WITH docs AS (
-        |  SELECT doc_id, text, length(text) AS n FROM documents
-        |  WHERE text IS NOT NULL AND length(text) > 0
-        |), chars AS (
-        |  SELECT doc_id, n, substring(text, CAST(i AS INTEGER), 1) AS ch
-        |  FROM docs, unnest(range(1, n + 1)) AS t(i)
-        |), counts AS (
-        |  SELECT doc_id, n, ch, COUNT(*) AS c FROM chars GROUP BY doc_id, n, ch
-        |), terms AS (
-        |  SELECT doc_id, n, -(${FixedLog.duckS12ToDec6("__t12")}) AS t
-        |  FROM (
-        |    SELECT doc_id, n, c,
-        |      ${FixedLog.duckLnItems("n", "__lnn").mkString(",\n      ")},
-        |      ${FixedLog.duckLnItems("c", "__lnc").mkString(",\n      ")},
-        |      __lnn - __lnc AS __pos12,
-        |      CAST((CAST(c AS HUGEINT) * __pos12) // CAST(n AS HUGEINT)
-        |        AS BIGINT) AS __t12
-        |    FROM counts)
-        |)
-        |SELECT doc_id, CAST(MAX(n) AS BIGINT) AS n_chars,
-        |  ROUND(-CAST(SUM(t) AS DOUBLE) / 0.6931471805599453, 6) AS entropy
-        |FROM terms GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "text_hybrid_rrf" -> graft.operators.Retrieval.hybridRrfOracleSql(
-      terms = Seq("vector", "join", "stream")),
-
-    // the cc recursion defines `corpus` (the planted near-dup corpus);
-    // the nested bm25 statement's FROM resolves to that same outer CTE,
-    // so ranking and clustering see the identical relation by construction
-    "text_dedup_topk" -> {
-      val bm25 = graft.operators.Retrieval.bm25OracleSql("doc_id", "text",
-        "corpus", terms = Seq("vector", "join", "stream"), k = 40)
-      s"""${graft.functions.SketchOracleSql.ccChain(0.6)},
-         |scored AS (SELECT doc_id, score_r FROM ($bm25)),
-         |ranked AS (
-         |  SELECT s.doc_id, s.score_r,
-         |    COALESCE(c.cluster_rep, s.doc_id) AS cluster_rep,
-         |    ROW_NUMBER() OVER (PARTITION BY COALESCE(c.cluster_rep, s.doc_id)
-         |      ORDER BY s.score_r DESC, s.doc_id) AS rn
-         |  FROM scored s LEFT JOIN cc c ON c.doc_id = s.doc_id
-         |)
-         |SELECT doc_id, cluster_rep, score_r FROM ranked WHERE rn = 1
-         |ORDER BY score_r DESC, doc_id LIMIT 10""".stripMargin
-    },
-
-    "text_bm25_topk" -> graft.operators.Retrieval.bm25OracleSql(
-      "doc_id", "text", "documents", terms = Seq("vector", "join", "stream"),
-      k = 20),
-
-    "rag_chunk_topk" -> {
-      val chunkCtes =
-        """ragtoks AS (
-          |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-          |  FROM documents
-          |  WHERE text IS NOT NULL AND trim(text) <> ''
-          |), ragcounted AS (
-          |  SELECT doc_id, t,
-          |    CAST((GREATEST(len(t) - 64, 0) + 47) // 48 AS INTEGER) + 1 AS n_chunks
-          |  FROM ragtoks
-          |), chunks AS (
-          |  SELECT doc_id * 1000000 + CAST(i AS BIGINT) AS chunk_id,
-          |    array_to_string(t[(i*48 + 1):(i*48 + 64)], ' ') AS chunk_text
-          |  FROM ragcounted, unnest(range(0, n_chunks)) AS u(i)
-          |)""".stripMargin
-      val bm25 = graft.operators.Retrieval.bm25OracleSql(
-        "chunk_id", "chunk_text", "chunks",
-        terms = Seq("vector", "join", "stream"), k = 20,
-        preludeCtes = chunkCtes)
-      s"""SELECT chunk_id,
-         |  chunk_id // 1000000 AS doc_id,
-         |  chunk_id % 1000000 AS chunk_idx,
-         |  dl, tf_vector, tf_join, tf_stream, score_r
-         |FROM (
-         |$bm25
-         |)
-         |ORDER BY score_r DESC, chunk_id""".stripMargin
-    },
-
-    "text_collocations" -> graft.operators.Retrieval.collocationsOracleSql(
-      "doc_id", "text", "documents", minCount = 5, k = 30),
-
-    "pq_encode" ->
-      graft.functions.VectorOracleSql.pqEncodeSql(m = 4, k = 8, iters = 1,
-        trainMask = 3L),
-
-    "ann_pq_topk" ->
-      graft.functions.VectorOracleSql.pqAdcSql(m = 4, k = 8, iters = 1,
-        queryId = 3L, topK = 50, trainMask = 3L),
-
-    "ann_ivfpq_topk" ->
-      graft.functions.VectorOracleSql.ivfPqSql(m = 4, pqK = 8, iters = 2,
-        ivfK = 16, nProbe = 2, topK = 5, ivfIters = 2),
-
-    "ann_ivfpq_recall_report" ->
-      s"""WITH brute AS (
-         |  SELECT query_id, vec_id FROM (${Similarity.bruteOracleSql()})
-         |), approx AS (
-         |  SELECT query_id, vec_id FROM (
-         |    ${graft.functions.VectorOracleSql.ivfPqSql(m = 4, pqK = 8,
-                  iters = 2, ivfK = 16, nProbe = 2, topK = 5, ivfIters = 2)}
-         |  )
-         |), hits AS (
-         |  SELECT b.query_id, COUNT(*) AS n_hits
-         |  FROM brute b JOIN approx a USING (query_id, vec_id)
-         |  GROUP BY b.query_id
-         |)
-         |SELECT q.query_id, COALESCE(h.n_hits, 0) AS n_hits,
-         |  CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / 5.0 AS recall_at_5
-         |FROM (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < 10) q
-         |LEFT JOIN hits h USING (query_id)
-         |ORDER BY query_id""".stripMargin,
-
-    "split_train_val_test" -> graft.operators.Sampling.splitOracleSql(
-      Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)),
-
-    "split_leakage_audit" -> graft.operators.Sampling.splitLeakageOracleSql(
-      Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)),
-
-    "corpus_curriculum" ->
-      s"""WITH $curriculumStageCtes
-         |SELECT s.doc_id, s.score_milli, m.stage,
-         |  ${graft.operators.Sampling.bucketSql("s.doc_id", "graft-curriculum")}
-         |    AS shuffle_bucket
-         |FROM scored s JOIN stage_map m USING (score_milli)
-         |ORDER BY stage, shuffle_bucket, doc_id""".stripMargin,
-
-    "corpus_curriculum_diag_score" ->
-      s"""WITH $curriculumScoredCte
-         |SELECT doc_id, n_toks, n_stop, n_uniq, score_milli
-         |FROM scored ORDER BY doc_id""".stripMargin,
-
-    "corpus_curriculum_diag_hist" ->
-      s"""WITH $curriculumHistCtes
-         |SELECT score_milli, cnt, before_cnt FROM cum
-         |ORDER BY score_milli""".stripMargin,
-
-    "corpus_curriculum_diag_stages" ->
-      s"""WITH $curriculumStageCtes
-         |SELECT score_milli, stage FROM stage_map
-         |ORDER BY score_milli""".stripMargin,
-
-    "corpus_curriculum_diag_bucket" ->
-      s"""WITH $curriculumScoredCte
-         |SELECT doc_id,
-         |  ${graft.operators.Sampling.bucketSql("doc_id", "graft-curriculum")}
-         |    AS shuffle_bucket
-         |FROM scored ORDER BY doc_id""".stripMargin,
-
-    "corpus_curriculum_diag_join" ->
-      s"""WITH $curriculumStageCtes
-         |SELECT s.doc_id, s.score_milli, m.stage
-         |FROM scored s JOIN stage_map m USING (score_milli)
-         |ORDER BY doc_id""".stripMargin,
-
-    "corpus_curriculum_pack" ->
-      s"""WITH $curriculumStageCtes,
-         |staged AS (
-         |  SELECT s.doc_id, s.n_toks, m.stage,
-         |    ${graft.operators.Sampling.bucketSql("s.doc_id", "graft-curriculum")}
-         |      AS shuffle_bucket
-         |  FROM scored s JOIN stage_map m USING (score_milli)
-         |)
-         |SELECT doc_id, stage, shuffle_bucket, n_toks,
-         |  CAST(COALESCE(SUM(n_toks) OVER (
-         |    PARTITION BY stage ORDER BY shuffle_bucket, doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512
-         |    AS BIGINT) AS bin
-         |FROM staged ORDER BY doc_id""".stripMargin,
-
-    "corpus_token_budget" ->
-      """WITH t AS (
-        |  SELECT lang,
-        |    CAST(SUM(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
-        |      AS n_tokens
-        |  FROM documents WHERE text IS NOT NULL GROUP BY lang
-        |), w AS (
-        |  SELECT lang, n_tokens,
-        |    CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT) AS w_isqrt
-        |  FROM t WHERE n_tokens > 0
-        |), s AS (SELECT CAST(SUM(w_isqrt) AS BIGINT) AS tot FROM w)
-        |SELECT lang, n_tokens, w_isqrt,
-        |  (1000000 * w_isqrt) // tot AS quota_tokens,
-        |  (1000 * ((1000000 * w_isqrt) // tot)) // n_tokens AS epochs_milli
-        |FROM w CROSS JOIN s ORDER BY lang""".stripMargin,
-
-    "quality_lm_nll" -> graft.operators.LangModel.bigramNllOracleSql(),
-
-    "text_zipf_fit" -> graft.operators.LangModel.zipfOracleSql(),
-
-    "a_spearman" -> graft.operators.Drift.spearmanOracleSql,
-
-    "a_cohens_d" -> graft.operators.Drift.cohensDOracleSql,
-
-    "a_wilcoxon" -> graft.operators.Drift.wilcoxonOracleSql(
-      keyA = "click", keyB = "purchase"),
-
-    "a_kruskal_wallis" -> graft.operators.Drift.kruskalWallisOracleSql,
-
-    "a_kendall_tau" -> graft.operators.Drift.kendallOracleSql,
-
-    "a_gini" -> graft.operators.Drift.giniOracleSql,
-
-    "ts_acf" -> graft.operators.TimeSeries.acfOracleSql(maxLag = 7),
-
-    "ts_cross_corr" -> graft.operators.TimeSeries.crossCorrOracleSql(
-      keyA = "click", keyB = "purchase", maxLag = 3),
-
-    "privacy_pseudonymize" ->
-      """SELECT event_id, event_type,
-        |  sha256('graft-pii-v1|' || CAST(user_id AS VARCHAR)) AS token
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "quality_classifier" ->
-      graft.operators.TextClassifier.hashedLinearScoreOracleSql(),
-
-    "quality_classifier_train" ->
-      graft.operators.TextClassifier.trainOracleSql(),
-
-    "quality_classifier_trained_score" ->
-      graft.operators.TextClassifier.trainedScoreOracleSql(),
-
-    "quality_kl_drift" -> graft.operators.LangModel.klDriftOracleSql,
-
-    "quality_calibration_ece" ->
-      graft.operators.TextClassifier.calibrationOracleSql(),
-
-    "corpus_temperature" -> graft.operators.Sampling.temperatureOracleSql(),
-
-    "dedup_substring_spans" ->
-      graft.operators.SubstringDedup.duplicateSpansOracleSql(),
-
-    "a_corr_stats" ->
-      """SELECT l_returnflag, n,
-        |  ROUND(sxy / n - sx / n * (sy / n), 6) AS covar_pop,
-        |  ROUND((sxy / n - sx / n * (sy / n)) /
-        |        (sqrt(sxx / n - (sx / n) * (sx / n)) *
-        |         sqrt(syy / n - (sy / n) * (sy / n))), 6) AS corr
-        |FROM (
-        |  SELECT l_returnflag, COUNT(*) AS n,
-        |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sxy,
-        |    CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sxx,
-        |    CAST(SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS syy
-        |  FROM lineitem GROUP BY l_returnflag
-        |)
-        |ORDER BY l_returnflag""".stripMargin,
-
-    // exact-integer moments in anchored cents (see the engine-side
-    // comment: two float formulations measurably diverged); scale-0
-    // sums cast to double are plain integer conversions — identical on
-    "a_bootstrap_poisson" ->
-      graft.operators.Drift.poissonBootstrapOracleSql(b = 32),
-
-    // both engines — and the derived stats are a mirrored IEEE tree
-    "a_welch_ttest" ->
-      """WITH c AS (
-        |  SELECT l_returnflag,
-        |    CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT) - 5000000
-        |      AS xi
-        |  FROM lineitem WHERE l_returnflag IN ('A', 'R')
-        |), m AS (
-        |  SELECT
-        |    CAST(COUNT(CASE WHEN l_returnflag = 'A' THEN 1 END) AS DOUBLE)
-        |      AS n1,
-        |    CAST(COUNT(CASE WHEN l_returnflag = 'R' THEN 1 END) AS DOUBLE)
-        |      AS n2,
-        |    CAST(CAST(SUM(CASE WHEN l_returnflag = 'A' THEN xi END)
-        |      AS BIGINT) AS DOUBLE) AS sx1,
-        |    CAST(CAST(SUM(CASE WHEN l_returnflag = 'R' THEN xi END)
-        |      AS BIGINT) AS DOUBLE) AS sx2,
-        |    CAST(SUM(CASE WHEN l_returnflag = 'A'
-        |      THEN CAST(xi * xi AS DECIMAL(20,0)) END) AS DOUBLE) AS sxx1,
-        |    CAST(SUM(CASE WHEN l_returnflag = 'R'
-        |      THEN CAST(xi * xi AS DECIMAL(20,0)) END) AS DOUBLE) AS sxx2
-        |  FROM c
-        |), d AS (
-        |  SELECT n1, n2, sx1 / n1 AS mu1, sx2 / n2 AS mu2,
-        |    ((sxx1 - sx1 * sx1 / n1) / (n1 - 1.0)) / n1 AS se1,
-        |    ((sxx2 - sx2 * sx2 / n2) / (n2 - 1.0)) / n2 AS se2
-        |  FROM m
-        |)
-        |SELECT CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-        |  mu1 / 100.0 + 50000.0 AS mean1, mu2 / 100.0 + 50000.0 AS mean2,
-        |  (mu1 - mu2) / sqrt(se1 + se2) AS t_stat,
-        |  (se1 + se2) * (se1 + se2) /
-        |    (se1 * se1 / (n1 - 1.0) + se2 * se2 / (n2 - 1.0)) AS dof,
-        |  abs((mu1 - mu2) / sqrt(se1 + se2)) > 1.96 AS reject_h0
-        |FROM d""".stripMargin,
-
-    // window SUMs cast to BIGINT before arithmetic: DuckDB widens them to
-    // HUGEINT, which reaches the driver's pandas as float and breaks the
-    // value hash (the round-4 packing-oracle lesson)
-    "a_ks_test" ->
-      """WITH s AS (
-        |  SELECT o_totalprice AS v, o_orderpriority = '1-URGENT' AS a
-        |  FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
-        |), per AS (
-        |  SELECT v, SUM(CASE WHEN a THEN 1 ELSE 0 END) AS d1,
-        |    SUM(CASE WHEN NOT a THEN 1 ELSE 0 END) AS d2
-        |  FROM s GROUP BY v
-        |), cum AS (
-        |  SELECT
-        |    CAST(SUM(d1) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS c1,
-        |    CAST(SUM(d2) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS c2
-        |  FROM per
-        |), tot AS (
-        |  SELECT CAST(SUM(d1) AS BIGINT) AS n1, CAST(SUM(d2) AS BIGINT) AS n2
-        |  FROM per
-        |), agg AS (
-        |  SELECT n1, n2, CAST(MAX(ABS(c1 * n2 - c2 * n1)) AS BIGINT) AS ks_num
-        |  FROM cum CROSS JOIN tot GROUP BY n1, n2
-        |)
-        |SELECT n1, n2, ks_num,
-        |  CAST(ks_num AS DOUBLE) / CAST(n1 * n2 AS DOUBLE) AS ks_d,
-        |  CAST(ks_num AS DOUBLE) / CAST(n1 * n2 AS DOUBLE) >
-        |    1.358 * sqrt(CAST(n1 + n2 AS DOUBLE) / CAST(n1 * n2 AS DOUBLE))
-        |    AS reject_h0
-        |FROM agg""".stripMargin,
-
-    // all-integer micro-unit restatement: HUGEINT products, one `//`
-    // integral division per cell, window SUMs cast back to BIGINT (the
-    // a_ks_test HUGEINT rule) — identical to Spark's DECIMAL(38,0)
-    // `div` arithmetic by construction
-    "a_chi2_test" ->
-      """WITH base AS (
-        |  SELECT event_type AS rk,
-        |    CASE WHEN value < 100 THEN 'low'
-        |         WHEN value < 300 THEN 'mid' ELSE 'high' END AS ck
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
-        |), counts AS (
-        |  SELECT rk, ck, COUNT(*) AS o FROM base GROUP BY rk, ck
-        |), grid AS (
-        |  SELECT r.rk, c.ck
-        |  FROM (SELECT DISTINCT rk FROM counts) r
-        |  CROSS JOIN (SELECT DISTINCT ck FROM counts) c
-        |), cells AS (
-        |  SELECT g.rk, g.ck, CAST(COALESCE(o, 0) AS BIGINT) AS o
-        |  FROM grid g LEFT JOIN counts USING (rk, ck)
-        |), dims AS (
-        |  SELECT (SELECT COUNT(DISTINCT rk) FROM counts) AS nr,
-        |         (SELECT COUNT(DISTINCT ck) FROM counts) AS nc
-        |), tot AS (
-        |  SELECT rk, ck, o,
-        |    CAST(SUM(o) OVER (PARTITION BY rk) AS BIGINT) AS r,
-        |    CAST(SUM(o) OVER (PARTITION BY ck) AS BIGINT) AS c,
-        |    CAST(SUM(o) OVER () AS BIGINT) AS n
-        |  FROM cells
-        |), terms AS (
-        |  SELECT rk, ck, o,
-        |    CAST(CAST(r AS HUGEINT) * c * 1000000 // n AS BIGINT) AS e_micro,
-        |    CASE WHEN r = 0 OR c = 0 THEN 0
-        |      ELSE CAST(
-        |        (CAST(o AS HUGEINT) * n - CAST(r AS HUGEINT) * c) *
-        |        (CAST(o AS HUGEINT) * n - CAST(r AS HUGEINT) * c) * 1000000
-        |        // (CAST(n AS HUGEINT) * r * c) AS BIGINT) END AS term_micro
-        |  FROM tot
-        |)
-        |SELECT rk, ck, o, e_micro, term_micro,
-        |  CAST(SUM(term_micro) OVER () AS BIGINT) AS chi2_micro,
-        |  (SELECT (nr - 1) * (nc - 1) FROM dims) AS dof,
-        |  CAST(SUM(term_micro) OVER () AS BIGINT) > 15507313 AS reject_h0
-        |FROM terms ORDER BY rk, ck""".stripMargin,
-
-    // the chi2 grid aggregated to effect size: v2 integer micro-units,
-    // one IEEE sqrt at emission
-    "a_cramers_v" ->
-      """WITH base AS (
-        |  SELECT event_type AS rk,
-        |    CASE WHEN value < 100 THEN 'low'
-        |         WHEN value < 300 THEN 'mid' ELSE 'high' END AS ck
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL
-        |), counts AS (
-        |  SELECT rk, ck, COUNT(*) AS o FROM base GROUP BY rk, ck
-        |), grid AS (
-        |  SELECT r.rk, c.ck
-        |  FROM (SELECT DISTINCT rk FROM counts) r
-        |  CROSS JOIN (SELECT DISTINCT ck FROM counts) c
-        |), cells AS (
-        |  SELECT g.rk, g.ck, CAST(COALESCE(o, 0) AS BIGINT) AS o
-        |  FROM grid g LEFT JOIN counts USING (rk, ck)
-        |), tot AS (
-        |  SELECT rk, ck, o,
-        |    CAST(SUM(o) OVER (PARTITION BY rk) AS BIGINT) AS r,
-        |    CAST(SUM(o) OVER (PARTITION BY ck) AS BIGINT) AS c,
-        |    CAST(SUM(o) OVER () AS BIGINT) AS n
-        |  FROM cells
-        |), terms AS (
-        |  SELECT o,
-        |    CASE WHEN r = 0 OR c = 0 THEN 0
-        |      ELSE CAST(
-        |        (CAST(o AS HUGEINT) * n - CAST(r AS HUGEINT) * c) *
-        |        (CAST(o AS HUGEINT) * n - CAST(r AS HUGEINT) * c) * 1000000
-        |        // (CAST(n AS HUGEINT) * r * c) AS BIGINT) END AS term_micro
-        |  FROM tot
-        |), agg AS (
-        |  SELECT CAST(SUM(o) AS BIGINT) AS n,
-        |    (SELECT COUNT(DISTINCT rk) FROM counts) AS nr,
-        |    (SELECT COUNT(DISTINCT ck) FROM counts) AS nc,
-        |    CAST(SUM(term_micro) AS BIGINT) AS chi2_micro
-        |  FROM terms
-        |)
-        |SELECT n, nr, nc, chi2_micro,
-        |  CAST(chi2_micro // (n * (LEAST(nr, nc) - 1)) AS BIGINT)
-        |    AS v2_micro,
-        |  sqrt(CAST(chi2_micro // (n * (LEAST(nr, nc) - 1)) AS DOUBLE)
-        |    / 1000000.0) AS v
-        |FROM agg""".stripMargin,
-
-    // nine shared micro-literals round(log10(1+1/d)*1e6) (telescoping to
-    // exactly 1e6); grid completed to all nine digits; HUGEINT squares +
-    // one // per digit (the a_chi2_test discipline)
-    "audit_benford" ->
-      """WITH firstdigit AS (
-        |  SELECT TRY_CAST(substring(CAST(CAST(floor(o_totalprice) AS BIGINT)
-        |    AS VARCHAR), 1, 1) AS INTEGER) AS digit
-        |  FROM orders
-        |), counts AS (
-        |  SELECT digit, COUNT(*) AS o FROM firstdigit GROUP BY digit
-        |), probs AS (
-        |  SELECT CAST(u.d AS INTEGER) AS digit,
-        |    ([301030, 176091, 124939, 96910, 79181, 66947, 57992, 51153,
-        |      45757])[CAST(u.d AS INTEGER)] AS p_micro
-        |  FROM UNNEST(range(1, 10)) u(d)
-        |), grid AS (
-        |  SELECT p.digit, CAST(p.p_micro AS BIGINT) AS p_micro,
-        |    CAST(COALESCE(c.o, 0) AS BIGINT) AS o
-        |  FROM probs p LEFT JOIN counts c ON p.digit = c.digit
-        |), tot AS (
-        |  SELECT digit, o, p_micro,
-        |    CAST(SUM(o) OVER () AS BIGINT) AS n
-        |  FROM grid
-        |), terms AS (
-        |  SELECT digit, o, n * p_micro AS e_micro,
-        |    CAST((CAST(o AS HUGEINT) * 1000000 - n * p_micro) *
-        |      (CAST(o AS HUGEINT) * 1000000 - n * p_micro)
-        |      // CAST(n * p_micro AS HUGEINT) AS BIGINT) AS term_micro
-        |  FROM tot
-        |)
-        |SELECT digit, o, e_micro, term_micro,
-        |  CAST(SUM(term_micro) OVER () AS BIGINT) AS chi2_micro,
-        |  CAST(SUM(term_micro) OVER () AS BIGINT) > 15507313 AS reject_h0
-        |FROM terms ORDER BY digit""".stripMargin,
-
-    // one base projection; each section restated independently (the
-    // oracle needs value parity, not the one-scan plan) — integer cents
-    // carrier, HUGEINT micro terms, same section/key/metric encoding
-    "curate_report" -> {
-      val fused = graft.operators.Repetition.fusedOracleSql()
-      val minhash = graft.functions.SketchOracleSql.minhashOracleSql()
-      val decontam = graft.functions.SketchOracleSql.decontamOracleSql()
-      s"""WITH q AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS n_scored,
-         |    CAST(COUNT(CASE WHEN pass THEN 1 END) AS BIGINT) AS n_pass,
-         |    CAST(COUNT(CASE WHEN COALESCE(repetitive, FALSE) THEN 1 END)
-         |      AS BIGINT) AS n_repetitive
-         |  FROM ($fused)
-         |), d1 AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS n_unique_texts,
-         |    CAST(SUM(n_copies - 1) AS BIGINT) AS exact_dup_docs
-         |  FROM ($dedupExactOracleSql)
-         |), d2 AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS near_dup_pairs
-         |  FROM ($minhash)
-         |), ct AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS n_contaminated_docs,
-         |    CAST(SUM(n_hits) AS BIGINT) AS total_ngram_hits
-         |  FROM ($decontam)
-         |), im1 AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS png_files,
-         |    CAST(SUM(bytes_removed) AS BIGINT) AS png_bytes_removed,
-         |    CAST(COUNT(CASE WHEN pixels_intact THEN 1 END) AS BIGINT)
-         |      AS png_pixels_intact
-         |  FROM ($pngStripOracleSql)
-         |), im2 AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS png_near_dup_pairs
-         |  FROM ($imageLshOracleSql)
-         |), au1 AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS wav_files,
-         |    CAST(SUM(bytes_removed) AS BIGINT) AS wav_bytes_removed,
-         |    CAST(COUNT(CASE WHEN samples_intact THEN 1 END) AS BIGINT)
-         |      AS wav_samples_intact
-         |  FROM ($wavStripOracleSql)
-         |), au2 AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS wav_near_dup_pairs
-         |  FROM ($audioLshOracleSql)
-         |)
-         |SELECT * FROM (
-         |  SELECT 'profile' AS section, 'n_docs' AS metric,
-         |    CAST(COUNT(*) AS BIGINT) AS value FROM documents
-         |  UNION ALL SELECT 'profile', 'n_blank_or_null',
-         |    CAST(COUNT(CASE WHEN text IS NULL OR trim(text) = '' THEN 1 END)
-         |      AS BIGINT) FROM documents
-         |  UNION ALL SELECT 'profile', 'n_langs',
-         |    CAST(COUNT(DISTINCT lang) AS BIGINT) FROM documents
-         |  UNION ALL SELECT 'profile', 'total_chars',
-         |    CAST(SUM(length(text)) AS BIGINT) FROM documents
-         |  UNION ALL SELECT 'quality', 'n_scored', n_scored FROM q
-         |  UNION ALL SELECT 'quality', 'n_pass', n_pass FROM q
-         |  UNION ALL SELECT 'quality', 'n_repetitive', n_repetitive FROM q
-         |  UNION ALL SELECT 'dedup', 'n_unique_texts', n_unique_texts FROM d1
-         |  UNION ALL SELECT 'dedup', 'exact_dup_docs', exact_dup_docs FROM d1
-         |  UNION ALL SELECT 'dedup', 'near_dup_pairs', near_dup_pairs FROM d2
-         |  UNION ALL SELECT 'contamination', 'n_contaminated_docs',
-         |    n_contaminated_docs FROM ct
-         |  UNION ALL SELECT 'contamination', 'total_ngram_hits',
-         |    total_ngram_hits FROM ct
-         |  UNION ALL SELECT 'images', 'png_files', png_files FROM im1
-         |  UNION ALL SELECT 'images', 'png_bytes_removed',
-         |    png_bytes_removed FROM im1
-         |  UNION ALL SELECT 'images', 'png_pixels_intact',
-         |    png_pixels_intact FROM im1
-         |  UNION ALL SELECT 'images', 'png_near_dup_pairs',
-         |    png_near_dup_pairs FROM im2
-         |  UNION ALL SELECT 'audio', 'wav_files', wav_files FROM au1
-         |  UNION ALL SELECT 'audio', 'wav_bytes_removed',
-         |    wav_bytes_removed FROM au1
-         |  UNION ALL SELECT 'audio', 'wav_samples_intact',
-         |    wav_samples_intact FROM au1
-         |  UNION ALL SELECT 'audio', 'wav_near_dup_pairs',
-         |    wav_near_dup_pairs FROM au2
-         |) ORDER BY section, metric""".stripMargin
-    },
-
-    "profile_all" ->
-      """WITH base AS (
-        |  SELECT TRY_CAST(substring(CAST(CAST(floor(o_totalprice) AS BIGINT)
-        |      AS VARCHAR), 1, 1) AS INTEGER) AS digit,
-        |    COALESCE(CAST(o_orderpriority AS VARCHAR), 'unknown') AS rk,
-        |    CASE WHEN o_totalprice < 100000 THEN 'low'
-        |         WHEN o_totalprice < 300000 THEN 'mid' ELSE 'high' END AS ck,
-        |    LEAST(CAST(floor(o_totalprice / 50000.0) AS BIGINT), 9) AS bin,
-        |    COALESCE(CAST(o_custkey AS VARCHAR), 'unknown') AS ckey,
-        |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-        |  FROM orders WHERE o_totalprice IS NOT NULL
-        |), gstat AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(cents) AS BIGINT) AS sum_cents,
-        |    MIN(cents) AS min_cents, MAX(cents) AS max_cents FROM base
-        |), stats AS (
-        |  SELECT 'stats' AS section, 'count' AS key1,
-        |    CAST(NULL AS VARCHAR) AS key2, n, n AS metric FROM gstat
-        |  UNION ALL SELECT 'stats', 'sum_cents', NULL, n, sum_cents FROM gstat
-        |  UNION ALL SELECT 'stats', 'min_cents', NULL, n, min_cents FROM gstat
-        |  UNION ALL SELECT 'stats', 'max_cents', NULL, n, max_cents FROM gstat
-        |), bcounts AS (
-        |  SELECT digit, COUNT(*) AS o FROM base
-        |  WHERE digit BETWEEN 1 AND 9 GROUP BY digit
-        |), btot AS (
-        |  SELECT CAST(COALESCE(SUM(o), 0) AS BIGINT) AS bn FROM bcounts
-        |), probs AS (
-        |  SELECT CAST(u.d AS INTEGER) AS digit,
-        |    ([301030, 176091, 124939, 96910, 79181, 66947, 57992, 51153,
-        |      45757])[CAST(u.d AS INTEGER)] AS p_micro
-        |  FROM UNNEST(range(1, 10)) u(d)
-        |), bterm AS (
-        |  SELECT p.digit, CAST(COALESCE(c.o, 0) AS BIGINT) AS o,
-        |    (SELECT bn FROM btot) * CAST(p.p_micro AS BIGINT) AS e_micro
-        |  FROM probs p LEFT JOIN bcounts c ON p.digit = c.digit
-        |), bterm2 AS (
-        |  SELECT digit, o,
-        |    CAST((CAST(o AS HUGEINT) * 1000000 - e_micro) *
-        |      (CAST(o AS HUGEINT) * 1000000 - e_micro)
-        |      // CAST(e_micro AS HUGEINT) AS BIGINT) AS term_micro
-        |  FROM bterm
-        |), benford AS (
-        |  SELECT 'benford' AS section, CAST(digit AS VARCHAR) AS key1,
-        |    CAST(NULL AS VARCHAR) AS key2, o AS n, term_micro AS metric
-        |  FROM bterm2
-        |), benford_stat AS (
-        |  SELECT 'benford_stat', 'chi2_micro', NULL, (SELECT bn FROM btot),
-        |    CAST(SUM(term_micro) AS BIGINT)
-        |  FROM bterm2
-        |), ccounts AS (
-        |  SELECT rk, ck, COUNT(*) AS o FROM base GROUP BY rk, ck
-        |), cgrid AS (
-        |  SELECT r.rk, c.ck
-        |  FROM (SELECT DISTINCT rk FROM ccounts) r
-        |  CROSS JOIN (SELECT DISTINCT ck FROM ccounts) c
-        |), ccells AS (
-        |  SELECT g.rk, g.ck, CAST(COALESCE(o, 0) AS BIGINT) AS o
-        |  FROM cgrid g LEFT JOIN ccounts USING (rk, ck)
-        |), ctot AS (
-        |  SELECT rk, ck, o,
-        |    CAST(SUM(o) OVER (PARTITION BY rk) AS BIGINT) AS r,
-        |    CAST(SUM(o) OVER (PARTITION BY ck) AS BIGINT) AS c,
-        |    CAST(SUM(o) OVER () AS BIGINT) AS nt
-        |  FROM ccells
-        |), cterm AS (
-        |  SELECT rk, ck, o, nt,
-        |    CASE WHEN r = 0 OR c = 0 THEN 0
-        |      ELSE CAST(
-        |        (CAST(o AS HUGEINT) * nt - CAST(r AS HUGEINT) * c) *
-        |        (CAST(o AS HUGEINT) * nt - CAST(r AS HUGEINT) * c) * 1000000
-        |        // (CAST(nt AS HUGEINT) * r * c) AS BIGINT) END AS term_micro
-        |  FROM ctot
-        |), chi2 AS (
-        |  SELECT 'chi2' AS section, rk AS key1, ck AS key2, o AS n,
-        |    term_micro AS metric
-        |  FROM cterm
-        |), cagg AS (
-        |  SELECT CAST(MAX(nt) AS BIGINT) AS nt,
-        |    (SELECT COUNT(DISTINCT rk) FROM ccounts) AS nr,
-        |    (SELECT COUNT(DISTINCT ck) FROM ccounts) AS nc,
-        |    CAST(SUM(term_micro) AS BIGINT) AS chi2_micro
-        |  FROM cterm
-        |), chi2_stat AS (
-        |  SELECT 'chi2_stat', 'chi2_micro', NULL, nt, chi2_micro FROM cagg
-        |  UNION ALL SELECT 'chi2_stat', 'dof', NULL, nt,
-        |    CAST((nr - 1) * (nc - 1) AS BIGINT) FROM cagg
-        |), cramers AS (
-        |  SELECT 'cramers', 'v2_micro', NULL, nt,
-        |    CAST(chi2_micro // (nt * (LEAST(nr, nc) - 1)) AS BIGINT)
-        |  FROM cagg
-        |), hist AS (
-        |  SELECT 'hist' AS section, CAST(bin AS VARCHAR) AS key1,
-        |    CAST(NULL AS VARCHAR) AS key2, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(bin * 5000000 AS BIGINT) AS metric
-        |  FROM base GROUP BY bin
-        |), hcounts AS (
-        |  SELECT ckey, CAST(COUNT(*) AS BIGINT) AS n FROM base GROUP BY ckey
-        |), heavy AS (
-        |  SELECT 'heavy' AS section, ckey AS key1,
-        |    CAST(NULL AS VARCHAR) AS key2, n, rnk AS metric
-        |  FROM (SELECT ckey, n,
-        |          CAST(ROW_NUMBER() OVER (ORDER BY n DESC, ckey) AS BIGINT)
-        |            AS rnk
-        |        FROM hcounts)
-        |  WHERE rnk <= 5
-        |), allrows AS (
-        |  SELECT * FROM stats
-        |  UNION ALL SELECT * FROM benford
-        |  UNION ALL SELECT * FROM benford_stat
-        |  UNION ALL SELECT * FROM chi2
-        |  UNION ALL SELECT * FROM chi2_stat
-        |  UNION ALL SELECT * FROM cramers
-        |  UNION ALL SELECT * FROM hist
-        |  UNION ALL SELECT * FROM heavy
-        |)
-        |SELECT section, key1, key2, n, metric FROM allrows
-        |ORDER BY section, key1, key2""".stripMargin,
-
-    // half-unit midranks keep every statistic integer (2*midrank =
-    // 2*cumulative - cnt + 1); z is the identical IEEE op tree over the
-    // exact moments cast to double
-    "a_mannwhitney" ->
-      """WITH s AS (
-        |  SELECT o_totalprice AS v, o_orderpriority = '1-URGENT' AS a
-        |  FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
-        |), per AS (
-        |  SELECT v, SUM(CASE WHEN a THEN 1 ELSE 0 END) AS d1, COUNT(*) AS cnt
-        |  FROM s GROUP BY v
-        |), rk AS (
-        |  SELECT d1, cnt,
-        |    CAST(SUM(cnt) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      * 2 - cnt + 1 AS rank2
-        |  FROM per
-        |), m AS (
-        |  SELECT CAST(SUM(d1) AS BIGINT) AS n1,
-        |    CAST(SUM(cnt - d1) AS BIGINT) AS n2,
-        |    CAST(SUM(d1 * rank2) AS BIGINT) AS r1_2,
-        |    CAST(SUM(cnt * cnt * cnt - cnt) AS BIGINT) AS ties
-        |  FROM rk
-        |), d AS (
-        |  SELECT n1, n2, r1_2 - n1 * (n1 + 1) AS u1_2, ties,
-        |    CAST(n1 AS DOUBLE) AS n1d, CAST(n2 AS DOUBLE) AS n2d
-        |  FROM m
-        |), z AS (
-        |  SELECT n1, n2, u1_2, n1 * n2 * 2 - u1_2 AS u2_2,
-        |    (CAST(u1_2 AS DOUBLE) - n1d * n2d) / 2.0 /
-        |      sqrt(n1d * n2d / 12.0 * (n1d + n2d + 1.0 -
-        |        CAST(ties AS DOUBLE) /
-        |          ((n1d + n2d) * (n1d + n2d - 1.0)))) AS z
-        |  FROM d
-        |)
-        |SELECT n1, n2, u1_2, u2_2, z, abs(z) > 1.96 AS reject_h0
-        |FROM z""".stripMargin,
-
-    "w_rank_family" ->
-      """SELECT event_id, event_type, value,
-        |  CAST(ntile(4) OVER w AS INTEGER) AS quartile,
-        |  ROUND(percent_rank() OVER w, 6) AS pct_rank,
-        |  ROUND(cume_dist() OVER w, 6) AS cume
-        |FROM events
-        |WHERE event_id % 20 = 0
-        |WINDOW w AS (PARTITION BY event_type ORDER BY value NULLS FIRST, event_id)
-        |ORDER BY event_id""".stripMargin,
-
-    "f_sql_extension" -> {
-      val h = graft.functions.SketchOracleSql.fnvSigned("text")
-      s"""WITH ascii_guard AS (
-         |  SELECT CASE WHEN EXISTS (SELECT 1 FROM documents
-         |      WHERE text IS NOT NULL AND octet_length(encode(text)) <> length(text))
-         |    THEN error('non-ASCII document: the FNV byte-fold oracle restatement is ASCII-only')
-         |    ELSE NULL END AS chk
-         |), base AS (
-         |  SELECT d.doc_id, d.text FROM documents d CROSS JOIN ascii_guard g
-         |  WHERE g.chk IS NULL AND d.text IS NOT NULL
-         |)
-         |SELECT doc_id, $h AS h64,
-         |  CASE WHEN length(pfx) < 5 THEN 1
-         |       ELSE len(list_distinct(list_transform(range(0, length(pfx) - 4),
-         |              i -> substring(pfx, CAST(i + 1 AS INTEGER), 5)))) END AS n_sh5
-         |FROM (SELECT doc_id, text, substring(text, 1, 64) AS pfx FROM base)
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    "a_grouping_sets" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total,
-        |  COUNT(*) AS n
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-
-    // the VERBATIM string the Spark side executes — front-door parity
-    "f_recursive_cte" -> recursiveCteSql,
-
-    // the same stacked-window restatement: each stage's first-timestamp is
-    // a per-user window min over the previous stage's result
-    "funnel_steps" ->
-      """WITH w1 AS (
-        |  SELECT user_id, ts, event_type,
-        |    MIN(CASE WHEN event_type = 'view' THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_view
-        |  FROM events
-        |), w2 AS (
-        |  SELECT *, MIN(CASE WHEN event_type = 'click' AND ts > t_view
-        |                     THEN ts END)
-        |    OVER (PARTITION BY user_id) AS t_click
-        |  FROM w1
-        |), w3 AS (
-        |  SELECT *, MIN(CASE WHEN event_type = 'purchase' AND ts > t_click
-        |                     THEN ts END)
-        |    OVER (PARTITION BY user_id) AS t_purchase
-        |  FROM w2
-        |), agg AS (
-        |  SELECT
-        |    COUNT(DISTINCT CASE WHEN t_view IS NOT NULL THEN user_id END) AS v,
-        |    COUNT(DISTINCT CASE WHEN t_click IS NOT NULL THEN user_id END) AS c,
-        |    COUNT(DISTINCT CASE WHEN t_purchase IS NOT NULL THEN user_id END) AS p
-        |  FROM w3
-        |)
-        |SELECT 1 AS step, 'view' AS stage, v AS users FROM agg
-        |UNION ALL
-        |SELECT 2 AS step, 'click' AS stage, c AS users FROM agg
-        |UNION ALL
-        |SELECT 3 AS step, 'purchase' AS stage, p AS users FROM agg
-        |ORDER BY step""".stripMargin,
-
-    "cdc_merge" ->
-      """WITH changes AS (
-        |  SELECT user_id AS key, ts, event_id,
-        |    CASE WHEN event_type = 'error' THEN 'delete' ELSE 'upsert' END AS op,
-        |    value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |                       ORDER BY ts DESC, event_id DESC) AS rn,
-        |    COUNT(*) OVER (PARTITION BY user_id) AS n_changes
-        |  FROM events
-        |)
-        |SELECT key, value AS last_value, n_changes
-        |FROM changes WHERE rn = 1 AND op = 'upsert'
-        |ORDER BY key""".stripMargin,
-
-    "w_range_frame" ->
-      """SELECT user_id, event_id, ts,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE) AS range_sum,
-        |  COUNT(*) OVER w AS n_in_range
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |             RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts, event_id""".stripMargin,
-
-    "w_islands" ->
-      """WITH days AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
-        |), marked AS (
-        |  SELECT user_id, day,
-        |    (day - DATE '2024-01-01')
-        |      - ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day) AS grp
-        |  FROM days
-        |)
-        |SELECT user_id, MIN(day) AS start_day, MAX(day) AS end_day,
-        |  COUNT(*) AS n_days
-        |FROM marked GROUP BY user_id, grp
-        |ORDER BY user_id, start_day""".stripMargin,
-
-    // the oracle enumerates the same columns the engine DISCOVERS — the
-    // driver's sorted-column compare then proves the discovery found
-    // exactly the fixture's languages
-    "r3_pivot_dynamic" ->
-      """SELECT source,
-        |  COUNT(*) FILTER (WHERE lang = 'de') AS de,
-        |  COUNT(*) FILTER (WHERE lang = 'en') AS en,
-        |  COUNT(*) FILTER (WHERE lang = 'es') AS es,
-        |  COUNT(*) FILTER (WHERE lang = 'fr') AS fr,
-        |  COUNT(*) FILTER (WHERE lang = 'zh') AS zh
-        |FROM documents GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    "j_asof_forward" -> AsofJoin.forwardOracleSql,
-
-    "a_zscore_outliers" ->
-      """WITH stats AS (
-        |  SELECT event_type,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS mean,
-        |    sqrt(CAST(SUM(CAST(value * value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
-        |      - (CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*))
-        |        * (CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)))
-        |      AS std
-        |  FROM events GROUP BY event_type
-        |)
-        |SELECT e.event_type, e.event_id,
-        |  ROUND((e.value - s.mean) / s.std, 6) AS z
-        |FROM events e JOIN stats s ON e.event_type = s.event_type
-        |WHERE abs((e.value - s.mean) / s.std) > 2.0
-        |ORDER BY e.event_id""".stripMargin,
-
-    "a_weighted_avg" ->
-      """SELECT l_returnflag,
-        |  ROUND(CAST(SUM(CAST(l_extendedprice * l_quantity AS DECIMAL(18,6))) AS DOUBLE)
-        |    / CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE), 6)
-        |    AS weighted_avg_price
-        |FROM lineitem
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "u4_except_all" ->
-      """WITH kept AS (
-        |  SELECT user_id, event_type FROM events
-        |  WHERE event_type IN ('view', 'click')
-        |  EXCEPT ALL
-        |  SELECT user_id, event_type FROM events
-        |  WHERE event_type = 'click' AND event_id % 2 = 0
-        |)
-        |SELECT user_id, event_type, COUNT(*) AS n
-        |FROM kept GROUP BY user_id, event_type
-        |ORDER BY user_id, event_type""".stripMargin,
-
-    "w_share_of_total" ->
-      """SELECT o_custkey, o_orderkey,
-        |  ROUND(CAST(CAST(o_totalprice AS DECIMAL(18,6)) AS DOUBLE) /
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6)))
-        |         OVER (PARTITION BY o_custkey) AS DOUBLE), 6) AS share
-        |FROM orders
-        |WHERE o_custkey % 100 = 0
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "a_histogram_eqdepth" ->
-      """WITH bucketed AS (
-        |  SELECT o_orderkey, o_totalprice,
-        |    ntile(4) OVER (ORDER BY o_totalprice, o_orderkey) AS bucket
-        |  FROM orders WHERE o_orderkey % 40 = 0
-        |)
-        |SELECT bucket, COUNT(*) AS n, MIN(o_totalprice) AS lo,
-        |  MAX(o_totalprice) AS hi
-        |FROM bucketed GROUP BY bucket
-        |ORDER BY bucket""".stripMargin,
-
-    "text_tfidf_topk" ->
-      s"""WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '[ \\t\\n\\x0B\\f\\r]+')) AS term
-        |  FROM documents
-        |), tf AS (
-        |  SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term
-        |), df AS (
-        |  SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-        |), n AS (
-        |  SELECT COUNT(*) AS n_docs FROM documents
-        |), scored AS (
-        |  SELECT doc_id, term,
-        |    CAST(${FixedLog.duckS12ToDec6("__s12")} AS DOUBLE) AS tfidf
-        |  FROM (
-        |    SELECT tf.doc_id, tf.term, tf.tf,
-        |      ${FixedLog.duckLnItems("n.n_docs + 1", "__lnn")
-          .mkString(",\n      ")},
-        |      ${FixedLog.duckLnItems("df.df + 1", "__lnd")
-          .mkString(",\n      ")},
-        |      CAST(tf.tf AS HUGEINT) * (__lnn - __lnd) AS __s12
-        |    FROM tf JOIN df ON tf.term = df.term CROSS JOIN n)
-        |), ranked AS (
-        |  SELECT doc_id, term, tfidf,
-        |    ROW_NUMBER() OVER (PARTITION BY doc_id
-        |                       ORDER BY tfidf DESC, term ASC) AS term_rank
-        |  FROM scored
-        |)
-        |SELECT doc_id, term_rank, term, tfidf FROM ranked
-        |WHERE term_rank <= 3
-        |ORDER BY doc_id, term_rank""".stripMargin,
-
-    "r_gap_fill" ->
-      """WITH span AS (
-        |  SELECT CAST(MIN(ts) AS DATE) AS d0, CAST(MAX(ts) AS DATE) AS d1
-        |  FROM events
-        |), spine AS (
-        |  SELECT CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE)
-        |    AS day
-        |  FROM span
-        |), types AS (
-        |  SELECT DISTINCT event_type FROM events
-        |), daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n
-        |  FROM events GROUP BY event_type, day
-        |)
-        |SELECT t.event_type, s.day, COALESCE(d.n, 0) AS n
-        |FROM types t CROSS JOIN spine s
-        |LEFT JOIN daily d ON d.event_type = t.event_type AND d.day = s.day
-        |ORDER BY t.event_type, s.day""".stripMargin,
-
-    "cohort_retention" ->
-      """WITH cohorts AS (
-        |  SELECT user_id,
-        |    CAST(date_trunc('week', MIN(ts)) AS DATE) AS cohort_week
-        |  FROM events WHERE event_type = 'signup' GROUP BY user_id
-        |), activity AS (
-        |  SELECT DISTINCT user_id,
-        |    CAST(date_trunc('week', ts) AS DATE) AS activity_week
-        |  FROM events
-        |)
-        |SELECT c.cohort_week,
-        |  CAST((a.activity_week - c.cohort_week) // 7 AS INTEGER) AS week_offset,
-        |  COUNT(DISTINCT c.user_id) AS n_users
-        |FROM cohorts c JOIN activity a ON c.user_id = a.user_id
-        |WHERE a.activity_week >= c.cohort_week
-        |GROUP BY c.cohort_week, week_offset
-        |ORDER BY cohort_week, week_offset""".stripMargin,
-
-    "graph_pagerank" -> graft.functions.SketchOracleSql.pagerankOracleSql(),
-
-    "graph_hits" -> graft.functions.SketchOracleSql.hitsOracleSql(),
-    "text_textrank" -> graft.functions.SketchOracleSql.textrankOracleSql(),
-
-    "text_keyphrase_rake" -> graft.operators.TextRank.rakeOracleSql(
-      stop = graft.functions.TextFns.stopwords("en"), k = 20),
-    "graph_bfs_hops" -> graft.functions.SketchOracleSql.bfsOracleSql(),
-
-    "graph_scc" -> graft.functions.SketchOracleSql.sccOracleSql,
-
-    "graph_scc_diag_edges" ->
-      graft.functions.SketchOracleSql.sccEdgesOracleSql,
-
-    "graph_scc_diag_sizes" ->
-      graft.functions.SketchOracleSql.sccSizesOracleSql,
-
-    "graph_scc_condensation" ->
-      graft.functions.SketchOracleSql.sccCondensationOracleSql,
-
-    "graph_topo_levels" ->
-      graft.functions.SketchOracleSql.sccTopoLevelsOracleSql,
-
-    // same planted variants; fold = strip_accents(lower(raw)) on both
-    // engines; every variant row must survive the join into its group
-    "j_unaccent_join" ->
-      """WITH variants AS (
-        |  SELECT doc_id,
-        |    (['Informa' || chr(231) || chr(227) || 'o',
-        |      'informac' || chr(807) || 'a' || chr(771) || 'o',
-        |      'INFORMACAO',
-        |      'Relat' || chr(243) || 'rio',
-        |      'relato' || chr(769) || 'rio',
-        |      'relatorio'])[CAST(doc_id % 6 + 1 AS INTEGER)] AS raw
-        |  FROM documents
-        |), dim AS (
-        |  SELECT 'informacao' AS canonical, 1 AS dim_key
-        |  UNION ALL SELECT 'relatorio', 2
-        |)
-        |SELECT canonical, dim_key, COUNT(*) AS n,
-        |  COUNT(DISTINCT raw) AS n_variants
-        |FROM (SELECT doc_id, raw, strip_accents(lower(raw)) AS canonical
-        |      FROM variants) v
-        |JOIN dim USING (canonical)
-        |GROUP BY canonical, dim_key
-        |ORDER BY canonical""".stripMargin,
-
-    // chr(769)=U+0301 combining acute, chr(807)=U+0327 cedilla,
-    // chr(771)=U+0303 tilde — the same planted variants, byte-for-byte
-    "text_unicode_normalize" ->
-      """WITH planted AS (
-        |  SELECT doc_id,
-        |    (['cafe' || chr(769) || ' cliente',
-        |      'a' || chr(807) || 'c' || chr(807) || 'a' || chr(771) || 'o',
-        |      'ação água',
-        |      'plain ascii'])[CAST(doc_id % 4 + 1 AS INTEGER)] AS raw
-        |  FROM documents WHERE doc_id < 200
-        |)
-        |SELECT doc_id, length(raw) AS raw_len,
-        |  nfc_normalize(raw) AS nfc,
-        |  length(nfc_normalize(raw)) AS nfc_len,
-        |  strip_accents(raw) AS folded
-        |FROM planted ORDER BY doc_id""".stripMargin,
-
-    "graph_label_prop" ->
-      graft.functions.SketchOracleSql.labelPropOracleSql(),
-
-    "graph_kcore" -> graft.functions.SketchOracleSql.kcoreOracleSql(),
-
-    "graph_jaccard" -> graft.functions.SketchOracleSql.jaccardOracleSql(),
-
-    "sample_weighted" -> {
-      val b = graft.operators.Sampling.bucketSql("doc_id", "graft-w")
-      """WITH scored AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_distinct(string_split_regex(trim(text), '\s+'))) AS DOUBLE)
-        |      / len(string_split_regex(trim(text), '\s+')) AS weight
-        |  FROM documents
-        |)
-        |SELECT doc_id, weight FROM scored
-        |WHERE BUCKET < CAST(floor(weight * 8192) AS BIGINT)
-        |ORDER BY doc_id""".stripMargin.replace("BUCKET", b)
-    },
-
-    "dedup_chunks" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents
-        |  WHERE text IS NOT NULL AND trim(text) <> ''
-        |), counted AS (
-        |  SELECT doc_id, t,
-        |    CAST((GREATEST(len(t) - 32, 0) + 31) // 32 AS INTEGER) + 1 AS n_chunks
-        |  FROM toks
-        |), exploded AS (
-        |  SELECT doc_id, CAST(i AS INTEGER) AS chunk_idx,
-        |    md5(array_to_string(t[(i*32 + 1):(i*32 + 32)], ' ')) AS h
-        |  FROM counted, unnest(range(0, n_chunks)) AS u(i)
-        |), ranked AS (
-        |  SELECT doc_id, h,
-        |    ROW_NUMBER() OVER (PARTITION BY h ORDER BY doc_id, chunk_idx) AS rn
-        |  FROM exploded
-        |)
-        |SELECT doc_id, COUNT(*) AS n_chunks,
-        |  COUNT(*) FILTER (WHERE rn = 1) AS n_kept
-        |FROM ranked GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    "dedup_cdc_chunks" -> graft.operators.CdcChunk.dedupStatsOracleSql(),
-
-    "s_cdc_store_roundtrip" ->
-      graft.operators.CdcChunk.storeRoundTripOracleSql(),
-
-    "a_mode" ->
-      """WITH counts AS (
-        |  SELECT l_returnflag, l_quantity, COUNT(*) AS n
-        |  FROM lineitem GROUP BY l_returnflag, l_quantity
-        |), ranked AS (
-        |  SELECT l_returnflag, l_quantity, n,
-        |    ROW_NUMBER() OVER (PARTITION BY l_returnflag
-        |                       ORDER BY n DESC, l_quantity ASC) AS rn
-        |  FROM counts
-        |)
-        |SELECT l_returnflag, l_quantity AS mode_qty, n AS n_occurrences
-        |FROM ranked WHERE rn = 1
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "u5_intersect_all" ->
-      """WITH both_sides AS (
-        |  SELECT user_id, event_type FROM events
-        |  WHERE event_type IN ('view', 'click')
-        |  INTERSECT ALL
-        |  SELECT user_id, event_type FROM events
-        |  WHERE event_id % 2 = 0
-        |)
-        |SELECT user_id, event_type, COUNT(*) AS n
-        |FROM both_sides GROUP BY user_id, event_type
-        |ORDER BY user_id, event_type""".stripMargin,
-
-    "audit_expectations" ->
-      """WITH m AS (
-        |  SELECT COUNT(*) AS n_rows,
-        |    COUNT(l_shipdate) AS n_shipdate,
-        |    COUNT(*) FILTER (WHERE l_returnflag IN ('A','N','R'))
-        |      AS n_flag_in_domain,
-        |    COUNT(*) FILTER (WHERE l_quantity >= 0) AS n_qty_nonneg,
-        |    COUNT(*) FILTER (WHERE l_discount BETWEEN 0 AND 1)
-        |      AS n_disc_in_range,
-        |    COUNT(DISTINCT (l_orderkey, l_linenumber)) AS n_distinct_pk
-        |  FROM lineitem
-        |), stacked AS (
-        |  SELECT 'completeness:l_shipdate' AS check_name,
-        |         n_shipdate AS n_satisfied, n_rows FROM m
-        |  UNION ALL SELECT 'domain:l_returnflag in (A,N,R)',
-        |         n_flag_in_domain, n_rows FROM m
-        |  UNION ALL SELECT 'nonneg:l_quantity', n_qty_nonneg, n_rows FROM m
-        |  UNION ALL SELECT 'range:l_discount in [0,1]',
-        |         n_disc_in_range, n_rows FROM m
-        |  UNION ALL SELECT 'unique:(l_orderkey,l_linenumber)',
-        |         n_distinct_pk, n_rows FROM m
-        |)
-        |SELECT check_name, n_satisfied, n_satisfied = n_rows AS pass
-        |FROM stacked ORDER BY check_name""".stripMargin,
-
-    "f_higher_order" ->
-      """WITH milli AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding,
-        |      x -> CAST(floor(abs(CAST(x AS DOUBLE)) * 1000) AS BIGINT)) AS mv,
-        |    embedding
-        |  FROM embeddings WHERE vec_id % 20 = 0
-        |)
-        |SELECT vec_id,
-        |  CAST(length(list_filter(embedding, x -> x > 0)) AS INTEGER) AS n_pos,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT), mv),
-        |    (acc, x) -> acc + x) AS l1_milli,
-        |  list_max(mv) AS max_milli
-        |FROM milli ORDER BY vec_id""".stripMargin,
-
-    "dedup_url" ->
-      """WITH urls AS (
-        |  SELECT doc_id,
-        |    'HTTPS://CDN-' || upper(source) || '.Example.COM/doc/' ||
-        |    CAST(doc_id % 40 AS VARCHAR) ||
-        |    CASE doc_id % 3 WHEN 0 THEN '?utm_source=feed'
-        |                    WHEN 1 THEN '#frag' ELSE '/' END AS url
-        |  FROM documents
-        |)
-        |SELECT rtrim(regexp_replace(lower(url), '[?#].*$', ''), '/')
-        |    AS canonical_url,
-        |  MIN(doc_id) AS survivor_doc_id, COUNT(*) AS n_aliases
-        |FROM urls GROUP BY canonical_url
-        |ORDER BY canonical_url""".stripMargin,
-
-    // the bloom prefilter is lossless by construction (false positives are
-    // removed by the real join) — the oracle is the PLAIN join
-    "j_bloom_prefilter" ->
-      """SELECT o_orderstatus, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |WHERE c.c_mktsegment = 'BUILDING'
-        |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-
-    "a_heavy_hitters" -> {
-      val bucket = graft.functions.SketchOracleSql.fnvFold(
-        "'cms-' || CAST(j AS VARCHAR) || '|' || CAST(user_id AS VARCHAR)")
-      s"""WITH lanes AS (
-         |  SELECT user_id, j,
-         |    CAST($bucket % 256 AS BIGINT) AS bucket
-         |  FROM (SELECT DISTINCT user_id FROM events) u
-         |  CROSS JOIN (SELECT UNNEST(range(0, 3)) AS j)
-         |), grid AS (
-         |  SELECT l.j, l.bucket, COUNT(*) AS n
-         |  FROM events e JOIN lanes l ON e.user_id = l.user_id
-         |  GROUP BY l.j, l.bucket
-         |), top AS (
-         |  SELECT user_id, COUNT(*) AS n_exact
-         |  FROM events GROUP BY user_id
-         |  ORDER BY n_exact DESC, user_id LIMIT 5
-         |), est AS (
-         |  SELECT t.user_id, t.n_exact, MIN(g.n) AS cms_estimate
-         |  FROM top t
-         |  JOIN lanes l ON l.user_id = t.user_id
-         |  JOIN grid g ON g.j = l.j AND g.bucket = l.bucket
-         |  GROUP BY t.user_id, t.n_exact
-         |)
-         |SELECT user_id, n_exact, cms_estimate,
-         |  cms_estimate >= n_exact AS never_undercounts
-         |FROM est ORDER BY n_exact DESC, user_id""".stripMargin
-    },
-
-    "graph_triangles" ->
-      """WITH ranked AS (
-        |  SELECT ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS rn FROM documents
-        |), e AS (
-        |  SELECT a.rn AS u, b.rn AS v
-        |  FROM ranked a JOIN ranked b ON b.rn = a.rn + 1
-        |  WHERE a.rn % 10 < 9
-        |  UNION ALL
-        |  SELECT a.rn, b.rn
-        |  FROM ranked a JOIN ranked b ON b.rn = a.rn + 2
-        |  WHERE a.rn % 10 < 8
-        |)
-        |SELECT (SELECT COUNT(*) FROM e) AS n_edges,
-        |  (SELECT COUNT(*)
-        |   FROM e e1 JOIN e e2 ON e2.u = e1.v
-        |   JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v) AS n_triangles""".stripMargin,
-
-    "w_ewma" -> {
-      val num = (0 until EwmaK).map { j =>
-        val v = if (j == 0) "v" else s"LAG(v, $j) OVER w"
-        s"COALESCE($v * ${ewmaWeightNum(j)}, 0)"
-      }.mkString(" + ")
-      val den = (0 until EwmaK).map { j =>
-        val v = if (j == 0) "v" else s"LAG(v, $j) OVER w"
-        s"(CASE WHEN $v IS NOT NULL THEN ${ewmaWeightNum(j)} ELSE 0 END)"
-      }.mkString(" + ")
-      s"""WITH base AS (
-         |  SELECT event_type, event_id, CAST(value AS DECIMAL(18,6)) AS v
-         |  FROM events WHERE event_id % 20 = 0
-         |), lagged AS (
-         |  SELECT event_type, event_id,
-         |    $num AS num,
-         |    $den AS den
-         |  FROM base WINDOW w AS (PARTITION BY event_type ORDER BY event_id)
-         |)
-         |SELECT event_type, event_id,
-         |  CAST(num AS DOUBLE) / CAST(den AS DOUBLE) AS ewma
-         |FROM lagged ORDER BY event_type, event_id""".stripMargin
-    },
-
-    // last_value(... IGNORE NULLS) carries (day, value) structs exactly
-    // like the Spark windows; the interpolation expression is the same
-    // fixed-shape IEEE arithmetic on both engines
-    // identical FIXED-POINT recurrence unrolled as a RECURSIVE CTE — NOT
-    // list_reduce, whose struct-state lambdas measurably re-order float
-    // arithmetic (TimeSeries.holtLinear scaladoc). State is integer
-    // micro-units with floor-halving (pmod spelled `((x%2)+2)%2`), so
-    // every recursive step is exact BIGINT arithmetic on both engines;
-    // doubles appear only at the final /1e6 emission
-    // the identical micro-mean daily CTE as ts_holt_linear; the detector
-    // itself is integer window arithmetic (BIGINT casts on every window
-    // aggregate — the a_ks_test HUGEINT rule)
-    "ts_changepoint" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    SUM(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)) AS sm,
-        |    COUNT(value) AS cnt
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-        |), dv AS (
-        |  SELECT event_type, day,
-        |    CAST((sm - (((sm % cnt) + cnt) % cnt)) / cnt AS BIGINT) AS v
-        |  FROM daily
-        |), seq AS (
-        |  SELECT event_type, day, v,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day)
-        |      AS BIGINT) AS k,
-        |    CAST(SUM(v) OVER (PARTITION BY event_type ORDER BY day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS p,
-        |    CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
-        |    CAST(SUM(v) OVER (PARTITION BY event_type) AS BIGINT) AS t
-        |  FROM dv
-        |), scored AS (
-        |  SELECT event_type, day, k, p, n, t, abs(n * p - k * t) AS d
-        |  FROM seq WHERE k < n
-        |), top AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
-        |    ORDER BY d DESC, k) AS rn
-        |  FROM scored
-        |)
-        |SELECT event_type, n, k AS cp_idx, day AS cp_day, d AS d_max,
-        |  CAST(p // k AS BIGINT) AS mean_before_micro,
-        |  CAST((t - p) // (n - k) AS BIGINT) AS mean_after_micro
-        |FROM top WHERE rn = 1 ORDER BY event_type""".stripMargin,
-
-    "ts_holt_linear" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    SUM(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)) AS sm,
-        |    COUNT(value) AS cnt
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-        |), dv AS (
-        |  SELECT event_type, day,
-        |    CAST((sm - (((sm % cnt) + cnt) % cnt)) / cnt AS BIGINT) AS v
-        |  FROM daily
-        |), seq AS (
-        |  SELECT event_type, v,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i
-        |  FROM dv
-        |), nn AS (
-        |  SELECT event_type, MAX(i) AS n FROM seq GROUP BY 1
-        |), rec AS (
-        |  SELECT s2.event_type, CAST(2 AS BIGINT) AS i,
-        |    s2.v AS l, s2.v - s1.v AS b
-        |  FROM seq s1 JOIN seq s2
-        |    ON s1.event_type = s2.event_type AND s1.i = 1 AND s2.i = 2
-        |  UNION ALL
-        |  SELECT event_type, i, l,
-        |    CAST((l - lo + bo - ((((l - lo + bo) % 2) + 2) % 2)) / 2
-        |      AS BIGINT) AS b
-        |  FROM (
-        |    SELECT r.event_type, r.i + 1 AS i,
-        |      CAST((s.v + r.l + r.b
-        |            - ((((s.v + r.l + r.b) % 2) + 2) % 2)) / 2 AS BIGINT) AS l,
-        |      r.l AS lo, r.b AS bo
-        |    FROM rec r JOIN seq s
-        |      ON s.event_type = r.event_type AND s.i = r.i + 1)
-        |)
-        |SELECT r.event_type, CAST(nn.n AS INTEGER) AS n_obs,
-        |  CAST(r.l AS DOUBLE) / CAST(1000000 AS DOUBLE) AS level,
-        |  CAST(r.b AS DOUBLE) / CAST(1000000 AS DOUBLE) AS trend,
-        |  CAST(r.l + 3 * r.b AS DOUBLE) / CAST(1000000 AS DOUBLE)
-        |    AS forecast_3
-        |FROM rec r JOIN nn ON r.event_type = nn.event_type AND r.i = nn.n
-        |WHERE nn.n >= 2
-        |ORDER BY r.event_type""".stripMargin,
-
-    // same integer micro-unit pipeline: exact window sums (BIGINT), floor
-    // division via the pmod identity, day-of-week as epoch-days mod 7
-    // (dayofweek() anchors differ between engines); /1e6 only at emission
-    "ts_seasonal_decompose" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    SUM(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)) AS sm,
-        |    COUNT(value) AS cnt
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-        |), dv AS (
-        |  SELECT event_type, day,
-        |    CAST((sm - (((sm % cnt) + cnt) % cnt)) / cnt AS BIGINT) AS v
-        |  FROM daily
-        |), win AS (
-        |  SELECT event_type, day, v,
-        |    SUM(v) OVER (PARTITION BY event_type ORDER BY day
-        |      ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS s7,
-        |    COUNT(v) OVER (PARTITION BY event_type ORDER BY day
-        |      ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS c7
-        |  FROM dv
-        |), det AS (
-        |  SELECT event_type, day, v,
-        |    CAST((s7 - (((s7 % 7) + 7) % 7)) / 7 AS BIGINT) AS trend_m,
-        |    v - CAST((s7 - (((s7 % 7) + 7) % 7)) / 7 AS BIGINT) AS detr,
-        |    (((CAST(day - DATE '1970-01-01' AS BIGINT) % 7) + 7) % 7) AS dow
-        |  FROM win WHERE c7 = 7
-        |), sea AS (
-        |  SELECT event_type, dow,
-        |    CAST((SUM(detr) - (((SUM(detr) % COUNT(*)) + COUNT(*)) % COUNT(*)))
-        |      / COUNT(*) AS BIGINT) AS seasonal_m
-        |  FROM det GROUP BY 1, 2
-        |)
-        |SELECT d.event_type, d.day,
-        |  CAST(d.v AS DOUBLE) / CAST(1000000 AS DOUBLE) AS value,
-        |  CAST(d.trend_m AS DOUBLE) / CAST(1000000 AS DOUBLE) AS trend,
-        |  CAST(s.seasonal_m AS DOUBLE) / CAST(1000000 AS DOUBLE) AS seasonal,
-        |  CAST(d.detr - s.seasonal_m AS DOUBLE) / CAST(1000000 AS DOUBLE)
-        |    AS residual
-        |FROM det d JOIN sea s ON d.event_type = s.event_type AND d.dow = s.dow
-        |ORDER BY d.event_type, d.day""".stripMargin,
-
-    // decimal stays exact through the cumulative window on both engines;
-    // the share division and threshold compares are the same IEEE ops
-    "w_abc_classification" ->
-      """WITH rev AS (
-        |  SELECT p_brand,
-        |    SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6)))
-        |      AS r
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  GROUP BY 1
-        |), tot AS (SELECT SUM(r) AS t FROM rev),
-        |c AS (
-        |  SELECT p_brand, r,
-        |    SUM(r) OVER (ORDER BY r DESC, p_brand
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM rev
-        |)
-        |SELECT p_brand, CAST(r AS DOUBLE) AS revenue,
-        |  CAST(cum AS DOUBLE) / CAST(t AS DOUBLE) AS cum_share,
-        |  CASE WHEN CAST(cum AS DOUBLE) / CAST(t AS DOUBLE) <= 0.8 THEN 'A'
-        |       WHEN CAST(cum AS DOUBLE) / CAST(t AS DOUBLE) <= 0.95 THEN 'B'
-        |       ELSE 'C' END AS abc_class
-        |FROM c CROSS JOIN tot
-        |ORDER BY revenue DESC, p_brand""".stripMargin,
-
-    // the same anchored integer/scale-6 exact moments and mirrored op
-    // tree; every decimal->double cast stays under 2^53 unscaled
-    "a_linreg" ->
-      """WITH d0 AS (
-        |  SELECT MIN(CAST(ts AS DATE)) AS d0 FROM events
-        |  WHERE ts IS NOT NULL AND value IS NOT NULL
-        |), pts AS (
-        |  SELECT event_type,
-        |    CAST(CAST(ts AS DATE) - d0 AS INTEGER) AS xi, value AS y
-        |  FROM events CROSS JOIN d0
-        |  WHERE ts IS NOT NULL AND value IS NOT NULL
-        |), m AS (
-        |  SELECT event_type, COUNT(*) AS n,
-        |    CAST(SUM(xi) AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(y AS DECIMAL(18,6))) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(y AS DECIMAL(18,6)) * xi) AS DOUBLE) AS sxy,
-        |    CAST(SUM(CAST(xi * xi AS BIGINT)) AS DOUBLE) AS sxx
-        |  FROM pts GROUP BY 1
-        |), d AS (
-        |  SELECT event_type, n, sx, sy,
-        |    CAST(n AS DOUBLE) * sxy - sx * sy AS num,
-        |    CAST(n AS DOUBLE) * sxx - sx * sx AS den
-        |  FROM m
-        |)
-        |SELECT event_type, n,
-        |  num / den AS slope,
-        |  (sy - num / den * sx) / CAST(n AS DOUBLE) AS intercept
-        |FROM d ORDER BY event_type""".stripMargin,
-
-    // the same first-occurrence restatement; the window SUM is CAST to
-    // BIGINT (DuckDB windowed SUM yields HUGEINT, which breaks the
-    // driver's value hash — the round-4 lesson)
-    "w_cumulative_distinct" ->
-      """WITH firsts AS (
-        |  SELECT event_type, user_id, MIN(CAST(ts AS DATE)) AS day
-        |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-        |  GROUP BY 1, 2
-        |), perday AS (
-        |  SELECT event_type, day, COUNT(*) AS new_users
-        |  FROM firsts GROUP BY 1, 2
-        |)
-        |SELECT event_type, day, new_users,
-        |  CAST(SUM(new_users) OVER (PARTITION BY event_type ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS cum_users
-        |FROM perday ORDER BY event_type, day""".stripMargin,
-
-    // decompose CTE chain + two medians; DuckDB and Spark both define
-    // median as the midpoint-interpolated 0.5-percentile in DOUBLE, and
-    // the inputs are exact integers/half-integers, so the threshold
-    // comparison is bit-identical
-    "ts_anomaly_mad" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    SUM(CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT)) AS sm,
-        |    COUNT(value) AS cnt
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-        |), dv AS (
-        |  SELECT event_type, day,
-        |    CAST((sm - (((sm % cnt) + cnt) % cnt)) / cnt AS BIGINT) AS v
-        |  FROM daily
-        |), win AS (
-        |  SELECT event_type, day, v,
-        |    SUM(v) OVER (PARTITION BY event_type ORDER BY day
-        |      ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS s7,
-        |    COUNT(v) OVER (PARTITION BY event_type ORDER BY day
-        |      ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS c7
-        |  FROM dv
-        |), det AS (
-        |  SELECT event_type, day, v,
-        |    v - CAST((s7 - (((s7 % 7) + 7) % 7)) / 7 AS BIGINT) AS detr,
-        |    (((CAST(day - DATE '1970-01-01' AS BIGINT) % 7) + 7) % 7) AS dow
-        |  FROM win WHERE c7 = 7
-        |), sea AS (
-        |  SELECT event_type, dow,
-        |    CAST((SUM(detr) - (((SUM(detr) % COUNT(*)) + COUNT(*)) % COUNT(*)))
-        |      / COUNT(*) AS BIGINT) AS seasonal_m
-        |  FROM det GROUP BY 1, 2
-        |), res AS (
-        |  SELECT d.event_type, d.day, d.detr - s.seasonal_m AS resid
-        |  FROM det d JOIN sea s ON d.event_type = s.event_type AND d.dow = s.dow
-        |), med AS (
-        |  SELECT event_type, median(resid) AS med FROM res GROUP BY 1
-        |), dev AS (
-        |  SELECT r.event_type, r.day, r.resid, r.resid - m.med AS dev
-        |  FROM res r JOIN med m ON r.event_type = m.event_type
-        |), mad AS (
-        |  SELECT event_type, median(abs(dev)) AS mad FROM dev GROUP BY 1
-        |)
-        |SELECT d.event_type, d.day,
-        |  CAST(d.resid AS DOUBLE) / CAST(1000000 AS DOUBLE) AS residual,
-        |  d.dev / CAST(1000000 AS DOUBLE) AS deviation,
-        |  m.mad / CAST(1000000 AS DOUBLE) AS mad,
-        |  abs(d.dev) > CAST(3 AS DOUBLE) * m.mad AS is_anomaly
-        |FROM dev d JOIN mad m ON d.event_type = m.event_type
-        |ORDER BY d.event_type, d.day""".stripMargin,
-
-    "ts_resample" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(value) AS v
-        |  FROM events WHERE ts IS NOT NULL
-        |    AND day(CAST(ts AS DATE)) % 3 = 1
-        |  GROUP BY 1, 2
-        |), spine AS (
-        |  SELECT event_type,
-        |    CAST(unnest(generate_series(mn, mx, INTERVAL 1 DAY)) AS DATE) AS day
-        |  FROM (SELECT event_type, MIN(day) AS mn, MAX(day) AS mx
-        |        FROM daily GROUP BY 1)
-        |), j AS (
-        |  SELECT s.event_type, s.day, d.v
-        |  FROM spine s LEFT JOIN daily d USING (event_type, day)
-        |), w AS (
-        |  SELECT event_type, day, v,
-        |    last_value(CASE WHEN v IS NOT NULL
-        |        THEN struct_pack(d := day, v := v) END IGNORE NULLS)
-        |      OVER (PARTITION BY event_type ORDER BY day
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p,
-        |    last_value(CASE WHEN v IS NOT NULL
-        |        THEN struct_pack(d := day, v := v) END IGNORE NULLS)
-        |      OVER (PARTITION BY event_type ORDER BY day DESC
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n
-        |  FROM j
-        |)
-        |SELECT event_type, day,
-        |  CASE WHEN v IS NOT NULL THEN v
-        |    ELSE p.v + (n.v - p.v) *
-        |      (CAST(day - p.d AS DOUBLE) / CAST(n.d - p.d AS DOUBLE))
-        |  END AS filled,
-        |  v IS NULL AS interpolated
-        |FROM w ORDER BY event_type, day""".stripMargin,
-
-    "q8_market_share" ->
-      """SELECT EXTRACT(year FROM o_orderdate) AS o_year,
-        |  CAST(SUM(CASE WHEN n2.n_name = 'NATION_3'
-        |      THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))
-        |      ELSE 0 END) AS DOUBLE) /
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6)))
-        |    AS DOUBLE) AS mkt_share
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey AND p_type = 'STANDARD'
-        |JOIN orders ON l_orderkey = o_orderkey
-        |  AND EXTRACT(year FROM o_orderdate) BETWEEN 1996 AND 1997
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |JOIN region ON n1.n_regionkey = r_regionkey AND r_name = 'AMERICA'
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |GROUP BY o_year
-        |ORDER BY o_year""".stripMargin,
-
-    "q9_product_profit" ->
-      """SELECT n_name AS nation, EXTRACT(year FROM o_orderdate) AS o_year,
-        |  CAST(SUM(
-        |    CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6)) -
-        |    CAST(p_retailprice * l_quantity AS DECIMAL(18,6))
-        |  ) AS DOUBLE) AS sum_profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey AND p_name LIKE '%widget%'
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY n_name, o_year
-        |ORDER BY nation, o_year DESC""".stripMargin,
-
-    "q11_important_stock" ->
-      """WITH valued AS (
-        |  SELECT p_partkey,
-        |    CAST(p_retailprice * l_quantity AS DECIMAL(18,6)) AS v
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |)
-        |SELECT p_partkey, CAST(SUM(v) AS DOUBLE) AS stock_value
-        |FROM valued
-        |GROUP BY p_partkey
-        |HAVING SUM(v) * 10000 > (SELECT SUM(v) FROM valued)
-        |ORDER BY stock_value DESC, p_partkey""".stripMargin,
-
-    "q12_ship_delay" ->
-      """SELECT CASE WHEN date_diff('day', CAST(o_orderdate AS DATE),
-        |      CAST(l_shipdate AS DATE)) > 60 THEN 'SLOW' ELSE 'FAST' END
-        |    AS delay_class,
-        |  COUNT(*) FILTER (WHERE o_orderpriority IN ('1-URGENT', '2-HIGH'))
-        |    AS high_line_count,
-        |  COUNT(*) FILTER (WHERE o_orderpriority NOT IN ('1-URGENT', '2-HIGH'))
-        |    AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE EXTRACT(year FROM l_shipdate) = 1996
-        |GROUP BY delay_class
-        |ORDER BY delay_class""".stripMargin,
-
-    "q20_heavy_suppliers" ->
-      """SELECT s_name
-        |FROM supplier
-        |JOIN nation ON s_nationkey = n_nationkey AND n_name = 'NATION_5'
-        |WHERE s_suppkey IN (
-        |  SELECT l_suppkey
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_type = 'STANDARD' AND EXTRACT(year FROM l_shipdate) = 1996
-        |  GROUP BY l_suppkey
-        |  HAVING SUM(CAST(l_quantity AS DECIMAL(18,6))) > 100
-        |)
-        |ORDER BY s_name""".stripMargin,
-
-    "q21_waiting_suppliers" ->
-      """WITH late AS (
-        |  SELECT DISTINCT l_orderkey, l_suppkey
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F'
-        |    AND date_diff('day', CAST(o_orderdate AS DATE),
-        |          CAST(l_shipdate AS DATE)) > 60
-        |), cand AS (
-        |  SELECT t.l_orderkey, t.l_suppkey FROM late t
-        |  WHERE EXISTS (SELECT 1 FROM lineitem l2
-        |    WHERE l2.l_orderkey = t.l_orderkey
-        |      AND l2.l_suppkey <> t.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM late l3
-        |    WHERE l3.l_orderkey = t.l_orderkey
-        |      AND l3.l_suppkey <> t.l_suppkey)
-        |)
-        |SELECT s_name, COUNT(*) AS numwait
-        |FROM cand JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 10""".stripMargin,
-
-    // the manifest changes WHICH FILES are opened, never the result: the
-    // oracle is the plain range aggregate over the original table
-    "s_manifest_prune" ->
-      """SELECT strftime(CAST(o_orderdate AS TIMESTAMP), '%Y-%m') AS month,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY month ORDER BY month""".stripMargin,
-
-    "s_zorder" -> {
-      val z = graft.operators.ZOrder.zValueSql(Seq("d0", "d1"), 10)
-      s"""WITH norm AS (
-         |  SELECT o_orderkey, o_custkey % 1024 AS d0,
-         |    date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
-         |      % 1024 AS d1
-         |  FROM orders WHERE o_orderkey % 97 = 0
-         |)
-         |SELECT o_orderkey, $z AS zval
-         |FROM norm ORDER BY o_orderkey""".stripMargin
-    },
-
-    "embed_matryoshka_recall" -> Similarity.matryoshkaOracleSql(),
-
-    "ann_recall_report" ->
-      s"""WITH brute AS (
-         |  SELECT query_id, vec_id FROM (${Similarity.bruteOracleSql()})
-         |), approx AS (
-         |  SELECT query_id, vec_id FROM (${Similarity.lshOracleSql()})
-         |), hits AS (
-         |  SELECT b.query_id, COUNT(*) AS n_hits
-         |  FROM brute b JOIN approx a USING (query_id, vec_id)
-         |  GROUP BY b.query_id
-         |)
-         |SELECT q.query_id, COALESCE(h.n_hits, 0) AS n_hits,
-         |  CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / 5.0 AS recall_at_5
-         |FROM (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < 10) q
-         |LEFT JOIN hits h USING (query_id)
-         |ORDER BY query_id""".stripMargin,
-
-    "w_value_family" ->
-      """SELECT event_type, event_id, value,
-        |  LEAD(value, 2) OVER w AS lead2,
-        |  FIRST_VALUE(value) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-        |    AND CURRENT ROW) AS first_cum,
-        |  LAST_VALUE(value) OVER (w ROWS BETWEEN CURRENT ROW
-        |    AND UNBOUNDED FOLLOWING) AS last_fwd,
-        |  NTH_VALUE(value, 3) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-        |    AND UNBOUNDED FOLLOWING) AS third_of_type
-        |FROM events WHERE event_id % 20 = 0
-        |WINDOW w AS (PARTITION BY event_type ORDER BY event_id)
-        |ORDER BY event_type, event_id""".stripMargin,
-
-    "dedup_boilerplate" ->
-      """WITH planted AS (
-        |  SELECT doc_id,
-        |    text || chr(10) || 'subscribe to ' || source || ' updates'
-        |         || chr(10) || 'all rights reserved' AS text
-        |  FROM documents WHERE text IS NOT NULL
-        |), lines AS (
-        |  SELECT doc_id, generate_subscripts(l, 1) - 1 AS line_no,
-        |         unnest(l) AS line
-        |  FROM (SELECT doc_id, string_split(text, chr(10)) AS l FROM planted)
-        |), ldf AS (
-        |  SELECT line, COUNT(DISTINCT doc_id) AS ddf FROM lines GROUP BY line
-        |), kept AS (
-        |  SELECT l.doc_id,
-        |    string_agg(l.line, chr(10) ORDER BY l.line_no) AS clean_text,
-        |    COUNT(*) AS n_kept
-        |  FROM lines l JOIN ldf d ON l.line = d.line
-        |  WHERE d.ddf < 10
-        |  GROUP BY l.doc_id
-        |)
-        |SELECT p.doc_id,
-        |  COALESCE(k.clean_text, '') AS clean_text,
-        |  len(string_split(p.text, chr(10))) - COALESCE(k.n_kept, 0) AS n_removed
-        |FROM planted p LEFT JOIN kept k ON p.doc_id = k.doc_id
-        |ORDER BY p.doc_id""".stripMargin,
-
-    // list_intersect on raw 5-gram strings == intersect on xxhash64'd
-    // grams modulo 64-bit collisions (same caveat as the jaccard gates)
-    "dedup_containment" ->
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  WHERE text IS NOT NULL AND length(text) >= 20
-        |), corpus AS (
-        |  SELECT doc_id, text FROM docs
-        |  UNION ALL
-        |  SELECT doc_id + 200000,
-        |    substring(text, 1, length(text) // 2) || ' <tail-marker>'
-        |  FROM docs
-        |), cgrams AS (
-        |  SELECT doc_id, CASE WHEN length(text) < 5 THEN [text]
-        |    ELSE list_distinct(list_transform(range(1, length(text) - 3),
-        |           i -> substring(text, i, 5))) END AS cg
-        |  FROM corpus
-        |), pairs AS (
-        |  SELECT doc_id + 200000 AS a, doc_id AS b FROM docs
-        |)
-        |SELECT p.a, p.b,
-        |  CAST(len(list_intersect(ga.cg, gb.cg)) AS DOUBLE) / len(ga.cg)
-        |    AS containment
-        |FROM pairs p
-        |JOIN cgrams ga ON ga.doc_id = p.a
-        |JOIN cgrams gb ON gb.doc_id = p.b
-        |WHERE CAST(len(list_intersect(ga.cg, gb.cg)) AS DOUBLE) / len(ga.cg)
-        |  >= 0.8
-        |ORDER BY a, b""".stripMargin,
-
-    "j_interval_overlap" ->
-      """WITH l AS (
-        |  SELECT event_id AS l_id, epoch_us(ts) AS l_lo,
-        |    epoch_us(ts) + 1800000000 AS l_hi
-        |  FROM events WHERE event_id % 50 = 0
-        |), r AS (
-        |  SELECT event_id AS r_id, epoch_us(ts) AS r_lo,
-        |    epoch_us(ts) + 2700000000 AS r_hi
-        |  FROM events WHERE event_id % 137 = 0
-        |)
-        |SELECT l_id, r_id,
-        |  LEAST(l_hi, r_hi) - GREATEST(l_lo, r_lo) AS overlap_us
-        |FROM l JOIN r ON l_lo <= r_hi AND r_lo <= l_hi
-        |ORDER BY l_id, r_id""".stripMargin,
-
-    "a_agg_family" ->
-      """SELECT event_type,
-        |  COUNT(*) FILTER (WHERE value > 100) AS n_big,
-        |  BOOL_AND(value IS NOT NULL) AS all_valued,
-        |  BOOL_OR(value > 900) AS any_huge,
-        |  MAX_BY(epoch_us(ts), event_id) AS us_of_last,
-        |  MIN_BY(epoch_us(ts), event_id) AS us_of_first
-        |FROM events GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    // clone = base + its own append; source = base only, untouched by
-    // the clone's write
-    "s_clone_shallow" ->
-      """SELECT 'clone' AS table_tag, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events WHERE event_id % 4 IN (0, 1)
-        |UNION ALL
-        |SELECT 'source' AS table_tag, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events WHERE event_id % 4 = 0
-        |ORDER BY table_tag""".stripMargin,
-
-    // exactly base + the published clean batch; the discarded batch's
-    // slice must be absent
-    "s_write_audit_publish" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-        |WHERE doc_id % 3 IN (0, 1)
-        |ORDER BY doc_id""".stripMargin,
-
-    // each version's state restated directly: v1 = the first slice,
-    // v2 = first+second, v3 = the overwrite slice alone
-    "s_time_travel" ->
-      """SELECT 1 AS version, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events WHERE event_id % 3 = 0
-        |UNION ALL
-        |SELECT 2, COUNT(*),
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-        |FROM events WHERE event_id % 3 IN (0, 1)
-        |UNION ALL
-        |SELECT 3, COUNT(*),
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-        |FROM events WHERE event_id % 3 = 2
-        |ORDER BY version""".stripMargin,
-
-    // the bloom prunes files, never rows: the lookup's SEMANTICS are a
-    // plain IN predicate
-    "s_bloom_file_skip" ->
-      """SELECT event_id, event_type, CAST(value AS DOUBLE) AS value
-        |FROM events WHERE event_id IN (7, 123, 876)
-        |ORDER BY event_id""".stripMargin,
-
-    // (1,3] = the v2+v3 appends; (2,4] = v4 only (v3's batch added in
-    // window but logically removed by the v4 overwrite — net changes)
-    "s_incremental_read" ->
-      """SELECT 'v1->v3' AS step, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events WHERE event_id % 4 IN (1, 2)
-        |UNION ALL
-        |SELECT 'v2->v4', COUNT(*),
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-        |FROM events WHERE event_id % 4 = 3
-        |ORDER BY step""".stripMargin,
-
-    "s_vacuum_retention" ->
-      """SELECT COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events WHERE event_id % 3 = 2""".stripMargin,
-
-    // null cohort (null user_id) groups and survives; victims' rows gone
-    "s_gdpr_delete" ->
-      """SELECT CAST(user_id % 8 AS INTEGER) AS cohort, COUNT(*) AS n,
-        |  COUNT(DISTINCT user_id) AS n_users,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events
-        |WHERE user_id IS NULL OR user_id NOT IN (1, 5, 9)
-        |GROUP BY cohort ORDER BY cohort""".stripMargin,
-
-    "s_dynamic_overwrite" ->
-      """SELECT CAST(ts AS DATE) AS day, COUNT(*) AS n,
-        |  CAST(SUM(CAST(CASE WHEN CAST(ts AS DATE) =
-        |      (SELECT MIN(CAST(ts AS DATE)) FROM events)
-        |    THEN value * 2 ELSE value END AS DECIMAL(18,6))) AS DOUBLE)
-        |    AS total
-        |FROM events GROUP BY day
-        |ORDER BY day""".stripMargin,
-
-    // the evolved-layout union read restated as one range aggregate
-    "s_partition_evolution" ->
-      """WITH d0 AS (
-        |  SELECT MIN(CAST(ts AS DATE)) AS d0 FROM events WHERE ts IS NOT NULL
-        |)
-        |SELECT CAST(ts AS DATE) AS day, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM events CROSS JOIN d0
-        |WHERE ts IS NOT NULL
-        |  AND CAST(ts AS DATE) BETWEEN d0 + 10 AND d0 + 20
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the 3 earliest days' aggregate — what the pruned scan must equal
-    "s_dpp_prune" ->
-      """WITH days AS (
-        |  SELECT DISTINCT CAST(ts AS DATE) AS day FROM events
-        |  WHERE ts IS NOT NULL ORDER BY day LIMIT 3
-        |)
-        |SELECT e.day, COUNT(*) AS n,
-        |  CAST(SUM(CAST(e.value AS DECIMAL(18,6))) AS DOUBLE) AS total
-        |FROM (SELECT CAST(ts AS DATE) AS day, value FROM events) e
-        |JOIN days ON e.day = days.day
-        |GROUP BY e.day
-        |ORDER BY e.day""".stripMargin,
-
-    // survivors of both delete transactions, straight from the fixture
-    "s_deletion_vectors" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-        |WHERE doc_id % 7 <> 3 AND doc_id % 11 <> 5
-        |ORDER BY doc_id""".stripMargin,
-
-    // the merged-sketch estimate is engine-internal; the oracle pins the
-    // partial count, the exact rollup, and asserts the merge landed in
-    // the 5% band (TRUE column)
-    // equal rows (both sides present, all values equal) never surface
-    "s_store_diff" ->
-      """WITH e AS (
-        |  SELECT user_id, value, event_id, ts FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |), v1 AS (
-        |  SELECT user_id, value, event_id FROM (
-        |    SELECT user_id, value, event_id,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id
-        |        ORDER BY ts DESC, event_id DESC) AS rn
-        |    FROM e WHERE ts < TIMESTAMP '2024-01-16') WHERE rn = 1
-        |), v2 AS (
-        |  SELECT user_id, value, event_id FROM (
-        |    SELECT user_id, value, event_id,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id
-        |        ORDER BY ts DESC, event_id DESC) AS rn
-        |    FROM e WHERE ts >= TIMESTAMP '2024-01-16') WHERE rn = 1
-        |)
-        |SELECT COALESCE(v1.user_id, v2.user_id) AS user_id,
-        |  CASE WHEN v1.user_id IS NULL THEN 'only_right'
-        |       WHEN v2.user_id IS NULL THEN 'only_left'
-        |       ELSE 'changed' END AS status,
-        |  v1.value AS l_value, v1.event_id AS l_event_id,
-        |  v2.value AS r_value, v2.event_id AS r_event_id
-        |FROM v1 FULL OUTER JOIN v2 ON v1.user_id = v2.user_id
-        |WHERE v1.user_id IS NULL OR v2.user_id IS NULL
-        |  OR v1.value IS DISTINCT FROM v2.value
-        |  OR v1.event_id IS DISTINCT FROM v2.event_id
-        |ORDER BY user_id""".stripMargin,
-
-    // exact set cardinalities; the band flags are engine-side assertions
-    "a_theta_setops" ->
-      """WITH seg AS (
-        |  SELECT user_id,
-        |    MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c,
-        |    MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS p
-        |  FROM events
-        |  WHERE user_id IS NOT NULL AND event_type IN ('click', 'purchase')
-        |  GROUP BY user_id
-        |)
-        |SELECT
-        |  CAST((SELECT COUNT(DISTINCT user_id) FROM events
-        |        WHERE user_id IS NOT NULL AND event_type = 'click')
-        |    AS BIGINT) AS n_click_users,
-        |  CAST((SELECT COUNT(DISTINCT user_id) FROM events
-        |        WHERE user_id IS NOT NULL AND event_type = 'purchase')
-        |    AS BIGINT) AS n_purchase_users,
-        |  CAST(COUNT(*) AS BIGINT) AS exact_union,
-        |  CAST(SUM(CASE WHEN c = 1 AND p = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS exact_inter,
-        |  CAST(SUM(CASE WHEN c = 1 AND p = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS exact_click_only,
-        |  TRUE AS union_ok, TRUE AS inter_ok, TRUE AS diff_ok
-        |FROM seg""".stripMargin,
-
-    "a_hll_partials" ->
-      """SELECT event_type,
-        |  COUNT(DISTINCT CAST(ts AS DATE)) AS n_partials,
-        |  COUNT(DISTINCT user_id) AS exact_users,
-        |  TRUE AS merge_ok
-        |FROM events GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    "sessionize_builtin" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, ts, value FROM events WHERE ts IS NOT NULL
-        |), marked AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), seqd AS (
-        |  SELECT user_id, ts, value,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      AS session_seq
-        |  FROM marked
-        |)
-        |SELECT user_id, COUNT(*) AS n_events,
-        |  MIN(ts) AS session_start, MAX(ts) AS session_end,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM seqd
-        |GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_start""".stripMargin
-  )
 }

@@ -97,7 +97,7 @@ object SketchOracleSql {
     * texts themselves are pairwise DISTINCT (different rotations), so the
     * family deliberately survives the exact tier — it models the
     * viral-boilerplate family that only the bucket-width guard can bound.
-    * Shared verbatim by the engine fixture (SparkEntry) and the oracle
+    * Shared verbatim by the engine fixture (DedupGates) and the oracle
     * ([[rotationFamilyCte]]). */
   val RotationWords: Seq[String] = Seq(
     "the", "of", "and", "to", "in", "is", "it", "that", "for",
@@ -650,7 +650,7 @@ object SketchOracleSql {
     * plus DOUBLY-perturbed copies (+300000), so the within-batch near tier
     * is decisive for the odd +300000 docs whose only over-threshold match
     * can be their +200000 twin in the SAME batch. Mirrored verbatim by the
-    * engine's replay (SparkEntry.streamDedupReplay). */
+    * engine's replay (StoreGates.streamDedupReplay). */
   private def streamCorpusCte(extraWhere: String = ""): String = {
     val w = if (extraWhere.isEmpty) "" else s" AND $extraWhere"
     s"""corpus AS (
@@ -999,7 +999,7 @@ object SketchOracleSql {
     * 10-node SCC each), odd blocks stay chains (10 singleton SCCs), and
     * each even block's head points at the next block's head (condensation
     * DAG edges that must NOT merge components). Mirrored verbatim by the
-    * engine fixture in SparkEntry. */
+    * engine fixture in GraphGates. */
   private def sccCtes: String =
     """m AS (
       |  SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS rn

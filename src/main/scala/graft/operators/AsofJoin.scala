@@ -189,7 +189,7 @@ object AsofJoin {
       |FROM picked
       |ORDER BY event_id""".stripMargin
 
-  /** DuckDB mirror of the `j_asof_forward` SparkEntry query (purchases
+  /** DuckDB mirror of the `j_asof_forward` gate (purchases
     * enriched with the EARLIEST at-or-after click per user): the same
     * union+window plan on the reversed order. */
   val forwardOracleSql: String =
@@ -255,7 +255,7 @@ object AsofJoin {
        |FROM filled WHERE __side = 1
        |ORDER BY event_id""".stripMargin
 
-  /** DuckDB mirror of the `j_asof` SparkEntry query (purchases enriched
+  /** DuckDB mirror of the `j_asof` gate (purchases enriched
     * with the latest prior-or-same-instant click per user) — the same
     * union+window plan stated in SQL, so ordering and null semantics are
     * identical by construction. */

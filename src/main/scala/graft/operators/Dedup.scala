@@ -544,7 +544,7 @@ object Dedup {
           .cast("long").as("n_removed"))
   }
 
-  /** DuckDB mirror of the `dedup_embedding` query in SparkEntry:
+  /** DuckDB mirror of the `dedup_embedding` gate:
     * `embeddingNearDups` (nPlanes=32, bands=4, threshold) over the
     * embeddings fixture unioned with planted perturbed copies
     * (+0.05f on element 0, ids +100000). Bit-exact — the hyperplane matrix

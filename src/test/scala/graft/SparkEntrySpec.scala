@@ -1,11 +1,25 @@
 package graft
 
-/** The driver contract's own invariants: every gate has an oracle, and
-  * the declared spools stage once each. */
+import graft.gates.{Gate, Gates}
+
+/** The driver contract's own invariants: every gate has an oracle, gate
+  * names are unique, and the declared spools stage once each. */
 class SparkEntrySpec extends SparkSpec {
 
   test("every query has an oracle and every oracle a query") {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+  }
+
+  test("the registry holds all 350 gates") {
+    // a family left out of the registry drops from both maps at once,
+    // which the key-set test alone cannot see
+    assert(SparkEntry.queries.size == 350)
+  }
+
+  test("the registry rejects a duplicate gate name") {
+    val g = Gate("q1_agg", (s, _) => s.range(1).toDF(), "SELECT 1")
+    val e = intercept[IllegalArgumentException](Gates.registry(Seq(g, g)))
+    assert(e.getMessage.contains("duplicate gate 'q1_agg'"))
   }
 
   test("spools: 38 declared names, all staged, each built once") {
