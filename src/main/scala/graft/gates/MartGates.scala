@@ -295,8 +295,7 @@ private[graft] object MartGates {
     // transform); the oracle re-reads the quoted file with delim=','
     Gate("s4_raw_ingest_quoted", ((s, _) =>
       IdaTransform.rawWideToRecords(
-          RawIngest.readIdaExport(s, SparkEntry.quotedFixturePath,
-            delim = "auto"))
+          RawIngest.readIdaExport(s, SparkEntry.quotedFixturePath))
         .orderBy(col("linha_origem"), col("ano_mes"))),
       {
         val (_, _, hdr, months) = rawFixtures(1) // same preamble shape as smp

@@ -1,12 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Fns._
-import graft.sources.Tables
+import graft.sources.{Sinks, Tables}
 
 /** Star-schema mart build — the reference's load path (SURVEY.md §2.1
   * S7/S8/S10, §2.3 J3, §2.4 A4) rebuilt Spark-first over the `orders`
@@ -59,6 +59,10 @@ object IdaMart {
     * broadcastable either) — a clear error beats a silent driver OOM at
     * 100 TB. The reference's largest dim is 36 rows. */
   val MaxDimCardinality = 100000
+
+  /** The fact's natural keys, one per dimension: a record missing any of
+    * them matches no dimension row, so [[fact]] drops it. */
+  val NaturalKeys = Seq("ano_mes", "grupo_economico", "servico", "variavel")
 
   /** Surrogate-key column of each dimension, by natural-key column. */
   private val SurrogateKeys = Map("ano_mes" -> "tempo_key",
@@ -193,16 +197,15 @@ object IdaMart {
     * four dims both collects every dim's bounded key set and materializes
     * the cache; the fact joins the resulting local key frames, the same
     * frames the standalone dim builders project. So the raw source is
-    * scanned exactly once and the cache exactly twice (key pass, main
-    * pass), independent of the dim count (PipelineSpec pins source scans
-    * with an accumulator). Deriving the dims lazily inside the join plan
-    * instead would re-scan the source per dim: the analyzer's self-join
-    * de-duplication re-aliases those subtrees past the persist. */
+    * scanned exactly once and the cache exactly twice (key pass, and the
+    * [[append]] write), independent of the dim count (PipelineSpec pins
+    * source scans with an accumulator). Deriving the dims lazily inside
+    * the join plan instead would re-scan the source per dim: the analyzer's
+    * self-join de-duplication re-aliases those subtrees past the persist. */
   def fact(recs: DataFrame): DataFrame = {
     val cached = recs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val naturals = Seq("ano_mes", "grupo_economico", "servico", "variavel")
-    val keys = dimKeys(cached, naturals)
-    naturals.foldLeft(hashRecords(cached)) { (df, n) =>
+    val keys = dimKeys(cached, NaturalKeys)
+    NaturalKeys.foldLeft(hashRecords(cached)) { (df, n) =>
         df.join(broadcast(keys(n)), Seq(n)) }
       .select(col("tempo_key"), col("grupo_key"), col("servico_key"),
         col("variavel_key"), col("valor").cast(DecimalType(15, 6)).as("valor"),
@@ -242,15 +245,22 @@ object IdaMart {
   def load(existing: DataFrame, batch: DataFrame): DataFrame =
     batch.join(existing.select(col("hash_registro")), Seq("hash_registro"), "left_anti")
 
-  /** Read the fact store, or None when it does not exist yet. ONLY a
-    * missing path means "first load"; any other read failure propagates —
-    * treating an IO error as an empty store would skip the idempotency
-    * anti-join and append replayed duplicates. Single definition shared by
-    * the batch pipeline and the streaming ingest. */
-  def readStoreIfExists(spark: SparkSession, path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(path))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" => None
-    }
+  /** S7 idempotent append, the one store write of [[Pipeline.run]] and
+    * [[graft.streaming.Ingest.start]]: anti-join the batch against the
+    * store if there is one ([[load]]), append the rest `ano`-partitioned,
+    * and return the rows appended, an `observe` metric of the write. The
+    * write always runs: an empty append writes no parquet file. */
+  def append(batch: DataFrame, factPath: String): Long = {
+    val fresh = Sinks.readStoreIfExists(batch.sparkSession, factPath)
+      .fold(batch)(load(_, batch))
+    val obs = Observation()
+    Sinks.writeFactPartitioned(fresh.observe(obs, count(lit(1)).as("n")),
+      factPath, mode = "append")
+    observedCount(obs, "n")
+  }
+
+  /** An `observe` counter after its action ran. Missing reads as 0: AQE
+    * drops the `CollectMetrics` node of a subtree it proves empty. */
+  private[plans] def observedCount(obs: Observation, name: String): Long =
+    obs.get.get(name).fold(0L)(_.asInstanceOf[Long])
 }

@@ -1,9 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
-
-import graft.sources.Sinks
+import org.apache.spark.sql.functions.{col, count, count_if, lit}
 
 /** The reference's end-to-end ETL lifecycle (SURVEY §3 E2,
   * /root/reference/etl/etl_ida.py:732-834) as one engine call:
@@ -17,17 +15,19 @@ import graft.sources.Sinks
   *    union is a narrow bag-union (U1), so Spark parallelizes across
   *    sheets AND rows;
   *  - the reference re-reads every sheet to count its extracted rows; here
-  *    the counter is an `observe` metric (CollectMetrics) collected DURING
-  *    the single load pass — each input is scanned exactly once, which at
-  *    100 TB halves input I/O vs the reference's audit re-scan;
+  *    every counter is an `observe` metric (CollectMetrics) of the work's
+  *    own jobs, so each input is scanned exactly once, which at 100 TB
+  *    halves input I/O vs the reference's audit re-scan. A missing metric
+  *    is an input AQE proved empty ([[IdaMart.observedCount]]);
   *  - the fact store is written `ano`-partitioned ([[Sinks.writeFactPartitioned]])
   *    so year predicates prune directories — the Spark analog of the
   *    reference's covering indexes (schema_star.sql:96-101);
   *  - the memory-bounded flush every batch_size*5 records disappears —
   *    Spark's task model owns memory;
   *  - "loaded == 0 while transformed > 0" is an error in the reference
-  *    (etl_ida.py:849-851) only on a fresh store; on re-runs it is exactly
-  *    the idempotency contract working, so it is reported, not thrown.
+  *    (etl_ida.py:849-851); a re-run loading nothing is the idempotency
+  *    contract here, so the error is "no transformed record has every
+  *    natural key" (the fact drops them all), reported, not thrown.
   *
   * Fault isolation: a malformed sheet (missing month columns, wrong schema)
   * throws at plan CONSTRUCTION/analysis — driver-side, before any job — and
@@ -120,8 +120,7 @@ object Pipeline {
       case ((ok, errs), (wide, i)) =>
         try {
           // the observe node counts RAW wide rows (pre-filter, pre-unpivot):
-          // the reference's "extracted" counter — collected as a metric of
-          // the load job itself, not a separate scan
+          // the reference's "extracted" counter
           val obs = Observation()
           val recs = IdaTransform.rawWideToRecords(
             wide.observe(obs, count(lit(1)).as("extracted")))
@@ -134,37 +133,27 @@ object Pipeline {
     if (sheets.isEmpty)
       return RunStats(wides.size, 0L, 0L, 0L, errors)
 
+    val recordsObs = Observation()
     val records = sheets.map(_._1).reduce(_ unionByName _)      // U1
+      .observe(recordsObs, count(lit(1)).as("transformed"),
+        count_if(IdaMart.NaturalKeys.map(col(_).isNotNull).reduce(_ && _))
+          .as("keyed"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // materialize the cache FIRST: this one job is the only pass over the
-      // raw sources — it yields the transformed counter, fires the observe
-      // metrics (extracted), and warms the cache so the fact build's one
-      // dimension-key pass (IdaMart.dimKeys) and its main pass read blocks
-      // instead of recomputing the cold source
-      val transformed = records.count()
+      // the fact build's dimension-key collect is the first action over the
+      // cache: the one pass over the raw sources, which also fires every
+      // observe metric; the append's write then reads the cached blocks
+      val loaded = IdaMart.append(IdaMart.fact(records), factPath)
       val extracted =
-        sheets.map(_._2.get("extracted").asInstanceOf[Long]).sum
-      val fact = IdaMart.fact(records)
-      val existing = IdaMart.readStoreIfExists(spark, factPath)
-      val fresh = (existing match {
-        case Some(ex) => IdaMart.load(ex, fact)
-        case None     => fact
-      }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // persisted: counted once for stats, then appended — without the
-      // persist the whole transform+fact DAG would execute twice
-      val loaded = fresh.count()
-      if (loaded > 0 || existing.isEmpty)
-        Sinks.writeFactPartitioned(fresh, factPath, mode = "append")
-      fresh.unpersist()
-      // the reference's invariant tests TRANSFORMED rows (etl_ida.py:849-851)
-      // — extracted rows that were all legitimately filtered are a clean run
-      val freshStoreEmptyLoad =
-        if (existing.isEmpty && loaded == 0 && transformed > 0)
-          Seq("transformed records but loaded none into a fresh store")
+        sheets.map(s => IdaMart.observedCount(s._2, "extracted")).sum
+      val transformed = IdaMart.observedCount(recordsObs, "transformed")
+      // extracted rows all legitimately filtered (transformed == 0) are clean
+      val noneKeyed =
+        if (transformed > 0 && IdaMart.observedCount(recordsObs, "keyed") == 0)
+          Seq("transformed records but none carries every dimension key, " +
+            "so the fact load keeps none")
         else Nil
-      RunStats(wides.size, extracted, transformed, loaded,
-        errors ++ freshStoreEmptyLoad)
+      RunStats(wides.size, extracted, transformed, loaded, errors ++ noneKeyed)
     } catch {
       case scala.util.control.NonFatal(e) =>
         RunStats(wides.size, 0L, 0L, 0L, errors :+ s"run: ${e.getMessage}")

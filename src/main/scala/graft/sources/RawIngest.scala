@@ -73,32 +73,20 @@ object RawIngest {
       if (idx < 0) 0 else cells(idx).length
     }
 
-  /** The quote-aware probe splitter and `from_csv`'s `sep` both operate on
-    * single characters; a multi-char delimiter would silently split on its
-    * first character only, so it fails loudly instead. */
-  private def requireSingleChar(delim: String): Unit =
-    require(delim.length == 1,
-      s"delimiter must be a single character (got '$delim'); " +
-        "use \"auto\" for detection")
-
-  /** The `delim = "auto"` candidate set, shared by every "auto" path. */
+  /** The delimiters [[detectDelim]] chooses from. */
   private val delimCandidates: Seq[String] = Seq(";", ",", "\t")
 
-  /** S6 over a real file: probe the first [[Probe.MaxScan]] physical lines.
-    * `delim = "auto"` autodetects via [[detectDelim]] over the SAME
-    * collected head (one driver probe, not two). */
-  def probeHeader(spark: SparkSession, path: String,
-                  delim: String = ";"): DetectedHeader =
-    probeHeaderFromHead(headLines(spark, path), path, delim)._1
+  /** S6 over a real file: probe the first [[Probe.MaxScan]] physical lines,
+    * split with the delimiter [[detectDelim]] finds in the SAME collected
+    * head (one driver probe, not two). */
+  def probeHeader(spark: SparkSession, path: String): DetectedHeader =
+    probeHeaderFromHead(headLines(spark, path), path)._1
 
-  /** Shared probe core: returns the detected header AND the resolved
-    * delimiter so `readWithDetectedHeader(delim = "auto")` costs one head
-    * collect like the literal-delimiter path. */
-  private def probeHeaderFromHead(head: Seq[String], path: String,
-                                  delim: String): (DetectedHeader, String) = {
-    val d =
-      if (delim == "auto") detectDelimFromHead(head)
-      else { requireSingleChar(delim); delim }
+  /** Shared probe core: returns the detected header AND the detected
+    * delimiter, so [[readWithDetectedHeader]] costs one head collect. */
+  private def probeHeaderFromHead(head: Seq[String],
+                                  path: String): (DetectedHeader, String) = {
+    val d = detectDelimFromHead(head)
     val cells: Seq[Seq[Any]] = head.map(splitQuoted(_, d.charAt(0)))
     val idx = Probe.findHeaderRow(cells)
     require(idx < head.length, s"header probe found no header in $path")
@@ -126,10 +114,9 @@ object RawIngest {
     * `row_idx` (0-based data-row index), the detected columns, and
     * `ARQUIVO_ORIGEM` (file basename). `path` must name exactly one file
     * ([[requireSingleFile]]). */
-  def readWithDetectedHeader(spark: SparkSession, path: String,
-                             delim: String = ";"): DataFrame = {
+  def readWithDetectedHeader(spark: SparkSession, path: String): DataFrame = {
     requireSingleFile(spark, path, "readWithDetectedHeader")
-    val (det, d) = probeHeaderFromHead(headLines(spark, path), path, delim)
+    val (det, d) = probeHeaderFromHead(headLines(spark, path), path)
     val parseSchema = StructType(
       det.columns.map(StructField(_, StringType, nullable = true)))
     val rowSchema = StructType(Seq(
@@ -152,9 +139,8 @@ object RawIngest {
   /** Raw IDA export -> the canonical wide frame [[graft.plans.IdaTransform]]
     * consumes: id headers renamed to their canonical underscore form, month
     * columns kept verbatim. */
-  def readIdaExport(spark: SparkSession, path: String,
-                    delim: String = ";"): DataFrame =
-    renameIdaHeaders(readWithDetectedHeader(spark, path, delim))
+  def readIdaExport(spark: SparkSession, path: String): DataFrame =
+    renameIdaHeaders(readWithDetectedHeader(spark, path))
 
   /** Single-file contract of the detected-header readers, enforced with a
     * file-system listing (no Spark job). Over a glob or directory the

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * The reference's sink is row-at-a-time JDBC inserts with an ON CONFLICT
   * hash guard (/root/reference/etl/etl_ida.py:502-554); its physical tuning
   * is covering indexes (schema_star.sql:96-101). Here idempotency is the
-  * left-anti dedup in [[graft.plans.IdaMart.load]] and the tuning analog is
+  * left-anti dedup in [[graft.plans.IdaMart.append]] and the tuning analog is
   * directory partitioning + parquet stats.
   */
 object Sinks {
@@ -59,6 +59,23 @@ object Sinks {
   /** Read back with partition pruning available on `ano`. */
   def readFact(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
+
+  /** The parquet store at `path`, or None when there is none: no such
+    * path, or no data files in it (a zero-row first append leaves only
+    * `_SUCCESS`). Any other read error propagates: taking it for an empty
+    * store would skip the idempotency anti-join and append replayed
+    * duplicates. The path is asked of the file system, not found by a failed
+    * read, because Spark's observation listener re-analyzes and logs every
+    * failed query, and `IdaMart.append`'s metric read waits behind it. */
+  def readStoreIfExists(spark: org.apache.spark.sql.SparkSession,
+                        path: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else try Some(spark.read.parquet(path)) catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
+    }
+  }
 
   /** Compact an append-heavy fact store back to at most `filesPerYear`
     * files per partition: every idempotent [[graft.plans.Pipeline.run]] /

@@ -58,9 +58,8 @@ object CdcUpsert {
         val staging = new org.apache.hadoop.fs.Path(storeDir + "__staging")
         val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (fs.exists(staging)) fs.delete(staging, true) // stale attempt
-        val existing =
-          if (fs.exists(target)) Some(spark.read.parquet(storeDir)) else None
-        merge(existing, batch).write.parquet(staging.toString)
+        merge(graft.sources.Sinks.readStoreIfExists(spark, storeDir), batch)
+          .write.parquet(staging.toString)
         if (fs.exists(target))
           require(fs.delete(target, true), s"could not remove $target")
         require(fs.rename(staging, target),

@@ -10,11 +10,11 @@ import graft.plans.IdaMart
   * as a Structured Streaming `foreachBatch` sink.
   *
   * Effect is exactly-once on the store even though foreachBatch is
-  * at-least-once: a replayed micro-batch (crash between write and checkpoint
-  * commit, or duplicate input files) re-runs the anti-join against the
-  * already-persisted hashes and appends nothing. One shuffle per batch
-  * (hash dedup); the anti-join probe reads only the hash column of the
-  * store thanks to parquet column pruning.
+  * at-least-once: each hash-deduped micro-batch goes through the batch
+  * pipeline's [[IdaMart.append]], so a replayed one (crash between write
+  * and checkpoint commit, or duplicate input files) appends nothing. One
+  * shuffle per batch (hash dedup); the anti-join probe reads only the hash
+  * column of the store thanks to parquet column pruning.
   */
 object Ingest {
 
@@ -24,18 +24,8 @@ object Ingest {
     records.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val deduped = IdaMart.firstWinsDedup(
-          IdaMart.hashRecords(batch), Seq("hash_registro"),
-          Seq("arquivo_origem", "linha_origem"))
-        val fresh = IdaMart.readStoreIfExists(spark, factDir) match {
-          case Some(ex) => IdaMart.load(ex, deduped)
-          case None     => deduped
-        }
-        // same ano-partitioned layout as the batch pipeline's store, so a
-        // store fed by either path prunes year predicates identically
-        graft.sources.Sinks.writeFactPartitioned(fresh, factDir,
-          mode = "append")
+        IdaMart.append(IdaMart.firstWinsDedup(IdaMart.hashRecords(batch),
+          Seq("hash_registro"), Seq("arquivo_origem", "linha_origem")), factDir)
         ()
       }
       .trigger(Trigger.AvailableNow())
@@ -50,7 +40,7 @@ object Ingest {
     * single load. This is the standard exactly-once-into-JDBC recipe —
     * the sink itself is only transactional per partition, so idempotency
     * must come from the key prefilter, exactly as the file-sink twin
-    * ([[start]]) gets it from [[IdaMart.load]]. */
+    * ([[start]]) gets it from [[IdaMart.append]]. */
   def startJdbc(fact: DataFrame, url: String, table: String,
                 checkpointDir: String): StreamingQuery =
     fact.writeStream

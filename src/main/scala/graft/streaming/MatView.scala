@@ -42,23 +42,14 @@ object MatView {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val partial = partialAgg(batch).withColumn("batch_id", lit(batchId))
-        val fresh = readStoreIfExists(spark, storeDir) match {
-          case Some(ex) => partial.join(
-            ex.select(col("batch_id")).distinct(), Seq("batch_id"), "left_anti")
-          case None => partial
-        }
+        val fresh = graft.sources.Sinks.readStoreIfExists(spark, storeDir)
+          .fold(partial)(ex => partial.join(
+            ex.select(col("batch_id")).distinct(), Seq("batch_id"), "left_anti"))
         fresh.write.mode("append").parquet(storeDir)
         ()
       }
       .trigger(Trigger.AvailableNow())
       .start()
-
-  private def readStoreIfExists(spark: SparkSession,
-                                path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(path)) else None
-  }
 
   /** The view: partials recombined. Decimal partial sums re-sum to the
     * exact one-shot aggregate at any batch slicing. */

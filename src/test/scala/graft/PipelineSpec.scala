@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -29,6 +31,12 @@ class PipelineSpec extends SparkSpec {
     spark.createDataFrame(
       spark.sparkContext.parallelize(wideRows(file, grupo), 1), wideSchema)
 
+  private def parquetFiles(dir: String): Set[String] = {
+    val s = Files.walk(java.nio.file.Paths.get(dir))
+    try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+    finally s.close()
+  }
+
   test("run: transforms all sheets, loads once, re-run is a no-op (E2/A5)") {
     val factPath = Files.createTempDirectory("graft-pipe").toString + "/fact"
     val sheets = Seq(wideSheet("a.ods", "CLARO S.A."),
@@ -39,10 +47,38 @@ class PipelineSpec extends SparkSpec {
     assert(s1.transformed == 6 && s1.loadedNew == 6)
     assert(spark.read.parquet(factPath).count() == 6)
 
+    val files = parquetFiles(factPath)
     val s2 = Pipeline.run(spark, sheets, factPath)
     assert(s2.loadedNew == 0, "idempotent re-run must load nothing")
     assert(s2.errors.isEmpty, "re-run zero-load is the contract, not an error")
     assert(spark.read.parquet(factPath).count() == 6)
+    // the append always runs; an empty one must not add a parquet file
+    assert(parquetFiles(factPath) == files)
+  }
+
+  test("run: a sheet with no data rows counts as empty, others load") {
+    val dir = Files.createTempDirectory("graft-pipe-empty").toString
+    val good = wideSheet("a.ods", "CLARO S.A.")
+    val headerOnly = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq.empty[Row], 1), wideSchema)
+    val alone = Pipeline.run(spark, Seq(good), s"$dir/alone")
+    val both = Pipeline.run(spark, Seq(good, headerOnly), s"$dir/both")
+    assert(both.errors.isEmpty, s"errors: ${both.errors}")
+    assert((both.extracted, both.transformed, both.loadedNew) ==
+      (alone.extracted, alone.transformed, alone.loadedNew))
+    assert(alone.loadedNew == 3)
+  }
+
+  test("run: a first load that transforms to nothing does not break the store") {
+    val factPath = Files.createTempDirectory("graft-pipe-void").toString + "/fact"
+    val unparseable = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(0L, "CLARO S.A.", "Taxa de Reabertas", "-", "n/d", "SMP", "v.ods")), 1),
+      wideSchema)
+    val s1 = Pipeline.run(spark, Seq(unparseable), factPath)
+    assert(s1.errors.isEmpty && s1.transformed == 0 && s1.loadedNew == 0)
+    val s2 = Pipeline.run(spark, Seq(wideSheet("a.ods", "CLARO S.A.")), factPath)
+    assert(s2.errors.isEmpty, s"errors: ${s2.errors}")
+    assert(s2.loadedNew == 3 && spark.read.parquet(factPath).count() == 3)
   }
 
   test("run: each source is scanned exactly once (no audit re-scan)") {
@@ -81,6 +117,15 @@ class PipelineSpec extends SparkSpec {
       factPath)
     assert(stats.errors.exists(_.startsWith("sheet 1")))
     assert(stats.loadedNew == 3)
+  }
+
+  test("run: transformed records the fact load drops whole are an error") {
+    val factPath = Files.createTempDirectory("graft-pipe-nokey").toString + "/fact"
+    val noServico = wideSheet("n.ods", "CLARO S.A.")
+      .withColumn("SERVICO", lit(null).cast(StringType))
+    val s = Pipeline.run(spark, Seq(noServico), factPath)
+    assert(s.transformed == 3 && s.loadedNew == 0)
+    assert(s.errors.exists(_.contains("none carries every dimension key")))
   }
 
   test("lifecycle: discovery -> raw ingest -> partitioned load; re-run over " +

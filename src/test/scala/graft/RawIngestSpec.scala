@@ -46,12 +46,12 @@ class RawIngestSpec extends SparkSpec {
 
   test("quoted comma-delimited export parses to records identical to the " +
     "semicolon export (same data, second physical encoding)") {
-    def recs(path: String, delim: String) = IdaTransform
-      .rawWideToRecords(RawIngest.readIdaExport(spark, path, delim))
+    def recs(path: String) = IdaTransform
+      .rawWideToRecords(RawIngest.readIdaExport(spark, path))
       .drop("arquivo_origem") // only the file name differs
       .collect().map(_.toString).sorted.toSeq
-    val semi = recs(smp, ";")
-    val quoted = recs(SparkEntry.quotedFixturePath, "auto")
+    val semi = recs(smp)
+    val quoted = recs(SparkEntry.quotedFixturePath)
     assert(quoted.nonEmpty && quoted == semi)
   }
 
