@@ -48,7 +48,14 @@ object Bench {
     }
     case class QStat(name: String, med: Double, min: Double, max: Double, ok: Boolean,
                      rddBlocks: Int = 0, rddMb: Double = 0, shufFiles: Int = 0,
-                     shufMb: Double = 0, extraIters: Int = 0)
+                     shufMb: Double = 0, extraIters: Int = 0, compiles: Long = 0,
+                     compileS: Double = 0)
+    // Janino compiles (count, seconds) so far in this JVM. The warmup
+    // execution compiles a gate's classes; a timed iteration that still
+    // compiles is a gate whose generated code misses the codegen cache.
+    def codegenSoFar(): (Long, Double) =
+      (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+        org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e9)
     // ---- residual-state probes (r12 judge ask 4): five iteration-heavy
     // queries drifted +30-50% on the driver with flat minima; the shared
     // suspect is shuffle-file / checkpoint-block accumulation across the
@@ -104,6 +111,7 @@ object Bench {
       try exec(fn(spark, sfDir))
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); ok = false }
+      val (compiles0, compileS0) = codegenSoFar()
       var i = 0
       while (i < iters && ok) {
         val t0 = System.nanoTime()
@@ -143,6 +151,7 @@ object Bench {
             f"min ${cur.min}%.2f max ${cur.max}%.2f")
       }
       val ts = times.result()
+      val (compiles1, compileS1) = codegenSoFar()
       // Drop every cached block the query left behind (operator-level
       // persists and localCheckpoint RDDs have no unpersist hook once the
       // DataFrame is returned). Without this, the dedup/embed family's
@@ -176,7 +185,8 @@ object Bench {
       val (sf, smb) = shuffleFootprint()
       if (ok) QStat(name, median(ts), ts.min, ts.max, ok = true,
         rddBlocks = rb, rddMb = rmb, shufFiles = sf, shufMb = smb,
-        extraIters = extraIters)
+        extraIters = extraIters, compiles = compiles1 - compiles0,
+        compileS = compileS1 - compileS0)
       else QStat(name, 0, 0, 0, ok = false, rddBlocks = rb, rddMb = rmb,
         shufFiles = sf, shufMb = smb, extraIters = extraIters)
     }
@@ -197,9 +207,11 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(d))
     // per-query variance-guard visibility (r16 judge ask): extra_iters > 0
     // names exactly the gates whose 3-sample spread tripped the guard on
-    // THIS run — the attribution signal for contention bimodality
+    // THIS run — the attribution signal for contention bimodality; and
+    // the Janino compiles over the timed iterations (compiles > 0 names a
+    // gate whose generated code is compiled again on every execution)
     val spread = results.collect { case q if q.ok =>
-      jstr(q.name) + s""":{"min":${ms(q.min)},"max":${ms(q.max)},"extra_iters":${q.extraIters}}""" }
+      jstr(q.name) + s""":{"min":${ms(q.min)},"max":${ms(q.max)},"extra_iters":${q.extraIters},"compiles":${q.compiles},"compile_s":${ms(q.compileS)}}""" }
       .mkString("{", ",", "}")
     System.err.println(s"""[bench] spread (min/max over $iters iters): $spread""")
     val failed = results.collect { case q if !q.ok => jstr(q.name) }

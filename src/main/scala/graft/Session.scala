@@ -79,7 +79,22 @@ object Session {
       "spark.sql.ui.retainedExecutions" -> "50",
       "spark.ui.retainedJobs" -> "200",
       "spark.ui.retainedStages" -> "200",
-      "spark.ui.retainedTasks" -> "10000"
+      "spark.ui.retainedTasks" -> "10000",
+      // Compile each generated class once per JVM. Spark's codegen cache
+      // (default 100 classes) is JVM-global and static: the first session
+      // built in a JVM sizes it, at its first codegen. Sized to the working
+      // set (4 vCPUs, sf0.1 star schema + 6-sheet IDA export, one JVM per
+      // size): the 11-query mart mix compiles 198 classes and an ETL load
+      // plus replay 97; together, in one session, 282. A second mart pass
+      // compiled 0 classes at 250 (96 at 200, 191 at the default); a
+      // second load + mart pass 0 at 350 and 71 at 300. Guava splits the
+      // cache in 4 LRU segments, so it needs headroom over the set.
+      "spark.sql.codegen.cache.maxEntries" -> "350",
+      // The class name otherwise embeds the whole-stage codegen id, which
+      // AQE numbers in the order query stages finish: warm flagship runs
+      // compiled the same pipelines again under other names. Stage ids
+      // stay in the plan (`*(n)`) and in a comment of the generated code.
+      "spark.sql.codegen.useIdInClassName" -> "false"
     ) ++ cfg.map(c =>
       "spark.task.maxFailures" -> math.max(1, c.maxRetries + 1).toString)
 

@@ -115,8 +115,10 @@ object Profile {
     // ---- chi2 + Cramér's V over the (category, band) rollup
     val oc = cells.filter(col("gid") === 19)
       .select(col("rk"), col("ck"), col("n").as("o"))
+    // the hint fixes the build side: left to AQE, the side whose stage
+    // finished first was broadcast, so the plan varied from run to run
     val grid = oc.select(col("rk")).distinct()
-      .crossJoin(oc.select(col("ck")).distinct())
+      .crossJoin(broadcast(oc.select(col("ck")).distinct()))
       .join(oc, Seq("rk", "ck"), "left")
       .select(col("rk"), col("ck"), coalesce(col("o"), lit(0L)).as("o"))
     val tot = grid.select(col("rk"), col("ck"), col("o"),
@@ -138,8 +140,12 @@ object Profile {
     val chi2 = cterm.select(sect("chi2"), col("rk").as("key1"),
       col("ck").as("key2"), col("o").as("n"),
       col("term_micro").as("metric"))
+    // set sizes, not two countDistincts: Catalyst rewrites several distinct
+    // aggregates into an Expand whose branch order follows expression-id
+    // hashes, so each run could generate (and compile) different code
     val cagg = cterm.agg(max(col("nt")).as("nt"),
-      countDistinct(col("rk")).as("nr"), countDistinct(col("ck")).as("nc"),
+      size(collect_set(col("rk"))).cast("long").as("nr"),
+      size(collect_set(col("ck"))).cast("long").as("nc"),
       sum(col("term_micro")).as("chi2_micro"))
     val chi2Stat = cagg.select(sect("chi2_stat"),
       expr("stack(2, 'chi2_micro', chi2_micro, " +

@@ -205,12 +205,17 @@ object IdaMart {
   def fact(recs: DataFrame): DataFrame = {
     val cached = recs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keys = dimKeys(cached, NaturalKeys)
+    // F18 lineage: one processing time per fact build. Passed through a
+    // UDF, which the optimizer cannot fold: `current_timestamp()` folds to
+    // a literal inlined into the generated code, so every load compiled
+    // its projection anew.
+    val processedAt = java.time.Instant.now()
     NaturalKeys.foldLeft(hashRecords(cached)) { (df, n) =>
         df.join(broadcast(keys(n)), Seq(n)) }
       .select(col("tempo_key"), col("grupo_key"), col("servico_key"),
         col("variavel_key"), col("valor").cast(DecimalType(15, 6)).as("valor"),
         col("arquivo_origem"), col("linha_origem"),
-        current_timestamp().as("data_processamento"),   // F18 lineage
+        udf(() => processedAt).apply().as("data_processamento"),
         col("hash_registro"),
         // physical partition carrier: the reference tunes with covering
         // indexes (schema_star.sql:96-101); the Spark analog is writing the
@@ -249,9 +254,12 @@ object IdaMart {
     * [[graft.streaming.Ingest.start]]: anti-join the batch against the
     * store if there is one ([[load]]), append the rest `ano`-partitioned,
     * and return the rows appended, an `observe` metric of the write. The
-    * write always runs: an empty append writes no parquet file. */
+    * write always runs: an empty append writes no parquet file. The store
+    * holds earlier batches of the same schema, so it is read with that
+    * schema, not one inferred by a job. */
   def append(batch: DataFrame, factPath: String): Long = {
-    val fresh = Sinks.readStoreIfExists(batch.sparkSession, factPath)
+    val fresh = Sinks.readStoreIfExists(batch.sparkSession, factPath,
+        Some(Sinks.storeSchema(batch.schema)))
       .fold(batch)(load(_, batch))
     val obs = Observation()
     Sinks.writeFactPartitioned(fresh.observe(obs, count(lit(1)).as("n")),

@@ -78,7 +78,10 @@ object TaxaVariacao {
         round2(deltaVsMean(col("variacao"), col("taxa_variacao_media")))))
         .as(alias)
     }
-    mediaCalc.join(grupoCalc, Seq("mes"))
+    // the month series is the build side: left to AQE, whichever side's
+    // stage finished first was broadcast, so the plan (and the generated
+    // code) varied from run to run
+    broadcast(mediaCalc).join(grupoCalc, Seq("mes"))
       .groupBy(col("mes"), col("taxa_variacao_media"))
       .agg(pivotCols.head, pivotCols.tail: _*)
       .orderBy(col("mes"))

@@ -56,6 +56,14 @@ class IdaMartSpec extends SparkSpec {
     assert(out.length == expected.length + 1)
   }
 
+  test("data_processamento: one non-null processing time per fact build (F18)") {
+    val recs = IdaMart.records(spark, sf0001)
+    val stamps = IdaMart.fact(recs).select("data_processamento").distinct().collect()
+    assert(stamps.length == 1 && !stamps.head.isNullAt(0))
+    val later = IdaMart.fact(recs).select("data_processamento").first().getTimestamp(0)
+    assert(!later.before(stamps.head.getTimestamp(0)))
+  }
+
   /** `n` records with `n` distinct grupo_economico values. */
   private def grupoRecords(n: Int) =
     spark.range(n).select(

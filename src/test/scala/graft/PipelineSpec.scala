@@ -167,6 +167,57 @@ class PipelineSpec extends SparkSpec {
       "spark.task.maxFailures") == "1")
     // without an engine config the Spark default is left alone
     assert(!graft.Session.confFor(4).contains("spark.task.maxFailures"))
+    // the codegen cache holds a warm session's working set, and no class
+    // name carries the run-dependent stage id
+    assert(conf("spark.sql.codegen.cache.maxEntries") == "350")
+    assert(conf("spark.sql.codegen.useIdInClassName") == "false")
+    // a static conf: the session this JVM built first carries it
+    assert(spark.sparkContext.getConf.get("spark.sql.codegen.cache.maxEntries") == "350")
+  }
+
+  /** Janino compiles in this JVM so far (Spark's codegen-cache misses). */
+  private def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("a warm session compiles no new class for a second flagship query " +
+    "or a second load and replay") {
+    def flagship() = SparkEntry.queries("flagship_taxa_variacao")(spark, sf0001).collect()
+    def loadAndReplay(): Seq[Pipeline.RunStats] = {
+      val factPath = Files.createTempDirectory("graft-pipe-warm").toString + "/fact"
+      val sheets = Seq(wideSheet("a.ods", "CLARO S.A."), wideSheet("b.ods", "TIM S.A."))
+      Seq(Pipeline.run(spark, sheets, factPath), Pipeline.run(spark, sheets, factPath))
+    }
+    val first = flagship()
+    val c0 = compiles
+    assert(flagship().toSeq == first.toSeq)
+    assert(compiles - c0 == 0, "the second flagship query compiled new classes")
+    assert(loadAndReplay().map(_.loadedNew) == Seq(6, 0))
+    val c1 = compiles
+    assert(loadAndReplay().map(_.loadedNew) == Seq(6, 0))
+    assert(compiles - c1 == 0, "the second load and replay compiled new classes")
+  }
+
+  test("the store schema append reads with is the schema the store infers") {
+    val dir = Files.createTempDirectory("graft-pipe-schema").toString
+    // the fact store: the DDL mirror minus fato_key, plus the ano partition
+    val factPath = s"$dir/fact"
+    assert(Pipeline.run(spark, Seq(wideSheet("a.ods", "CLARO S.A.")), factPath)
+      .loadedNew == 3)
+    val declared = graft.sources.Sinks.storeSchema(
+      graft.plans.IdaMart.fact(graft.plans.IdaMart.records(spark, sf0001)).schema)
+    assert(declared == StructType(graft.plans.MartSchema.factSchema
+      .filterNot(_.name == "fato_key").map(_.copy(nullable = true)) :+
+      StructField("ano", IntegerType)))
+    assert(spark.read.parquet(factPath).schema == declared)
+    // the streaming ingest's store of hashed records
+    val recsPath = s"$dir/records"
+    val batch = graft.plans.IdaMart.firstWinsDedup(
+      graft.plans.IdaMart.hashRecords(graft.plans.IdaMart.records(spark, sf0001)),
+      Seq("hash_registro"), Seq("arquivo_origem", "linha_origem"))
+    assert(graft.plans.IdaMart.append(batch, recsPath) > 0)
+    assert(spark.read.parquet(recsPath).schema ==
+      graft.sources.Sinks.storeSchema(batch.schema))
+    assert(graft.plans.IdaMart.append(batch, recsPath) == 0)
   }
 
   test("EngineConfig.fromEnv: overrides parse, garbage falls back") {

@@ -22,8 +22,12 @@ keeps process-global allocations, and the r15 sf0.1 close sweep OOM'd the
 whole python process ~120 queries in (the recursive-CTE graph oracles
 again — all pass in a fresh process). --fork 40 keeps every chunk's
 footprint bounded no matter how many queries the registry grows to.
+
+Every run writes <verifyOutDir>/check_status.json, one {"ok", "sec"} entry
+per gate checked (sec: wall seconds of the gate's DuckDB check), and ends
+by printing the 20 slowest gates.
 """
-import json, math, sys
+import json, math, os, sys, time
 import duckdb
 
 
@@ -67,7 +71,7 @@ def connect(sf_dir):
 CHECK_TYPES = False
 
 
-def main(sf_dir, out_dir, only=None):
+def main(sf_dir, out_dir, only=None, merge=False):
     # fresh connection PER QUERY: a single long-lived connection exhausted
     # its memory/temp budget ~300 queries into the r14 sf0.1 sweep and
     # failed three recursive-CTE graph oracles that pass in a fresh
@@ -78,12 +82,20 @@ def main(sf_dir, out_dir, only=None):
     if only:  # dev-only subset: iterate on one query without a full dump
         oracle = {k: v for k, v in oracle.items() if k in only}
     failures = []
+    status = {}
     for name, sql in sorted(oracle.items()):
+        t0 = time.perf_counter()
+        failed_before = len(failures)
         con = connect(sf_dir)
         try:
             run_one(con, out_dir, name, sql, failures)
         finally:
             con.close()
+        status[name] = {"ok": len(failures) == failed_before,
+                        "sec": round(time.perf_counter() - t0, 3)}
+    write_status(out_dir, status, merge)
+    if not merge:
+        print_slowest(status)
     if failures:
         print(f"\n{len(failures)} FAILED: {failures}")
         sys.exit(1)
@@ -134,18 +146,45 @@ def run_one(con, out_dir, name, sql, failures):
         print(f"PASS {name} ({len(g)} rows)")
 
 
+def status_path(out_dir):
+    return os.path.join(out_dir, "check_status.json")
+
+
+def write_status(out_dir, status, merge):
+    """Write the per-gate status; a forked chunk (merge) adds its gates to
+    what earlier chunks of the same run wrote."""
+    if merge and os.path.exists(status_path(out_dir)):
+        with open(status_path(out_dir)) as f:
+            status = {**json.load(f), **status}
+    with open(status_path(out_dir), "w") as f:
+        json.dump(dict(sorted(status.items())), f, indent=1)
+
+
+def print_slowest(status, n=20):
+    slow = sorted(status.items(), key=lambda kv: -kv[1]["sec"])[:n]
+    total = sum(v["sec"] for v in status.values())
+    print(f"\n{len(slow)} slowest of {len(status)} gates ({total:.1f} s in all):")
+    for name, v in slow:
+        print(f"  {v['sec']:8.2f} s  {name}{'' if v['ok'] else '  (FAILED)'}")
+
+
 def forked(sf_dir, out_dir, only, chunk):
     import subprocess
     names = sorted(json.load(open(f"{out_dir}/oracle_sql.json")))
     if only:
         names = [n for n in names if n in only]
-    extra = ["--types"] if CHECK_TYPES else []
+    extra = (["--types"] if CHECK_TYPES else []) + ["--merge-status"]
+    if os.path.exists(status_path(out_dir)):
+        os.remove(status_path(out_dir))
     bad = 0
     for i in range(0, len(names), chunk):
         sub = ",".join(names[i:i + chunk])
         r = subprocess.run([sys.executable, __file__, sf_dir, out_dir, sub]
                            + extra)
         bad += 1 if r.returncode != 0 else 0
+    if os.path.exists(status_path(out_dir)):
+        with open(status_path(out_dir)) as f:
+            print_slowest(json.load(f))
     if bad:
         print(f"\n{bad} chunk(s) had failures")
         sys.exit(1)
@@ -163,4 +202,4 @@ if __name__ == "__main__":
     if fork > 0:
         forked(argv[0], argv[1], only, fork)
     else:
-        main(argv[0], argv[1], only)
+        main(argv[0], argv[1], only, merge="--merge-status" in sys.argv)
