@@ -250,16 +250,18 @@ object IdaMart {
   def load(existing: DataFrame, batch: DataFrame): DataFrame =
     batch.join(existing.select(col("hash_registro")), Seq("hash_registro"), "left_anti")
 
+  /** The one store column [[load]] reads. */
+  private[graft] val StoreKey = StructType(Seq(StructField("hash_registro", StringType)))
+
   /** S7 idempotent append, the one store write of [[Pipeline.run]] and
     * [[graft.streaming.Ingest.start]]: anti-join the batch against the
     * store if there is one ([[load]]), append the rest `ano`-partitioned,
     * and return the rows appended, an `observe` metric of the write. The
-    * write always runs: an empty append writes no parquet file. The store
-    * holds earlier batches of the same schema, so it is read with that
-    * schema, not one inferred by a job. */
+    * write always runs: an empty append writes no parquet file. [[load]]
+    * reads only the store's key, so the store is read with that one column
+    * declared, not a schema inferred by a job. */
   def append(batch: DataFrame, factPath: String): Long = {
-    val fresh = Sinks.readStoreIfExists(batch.sparkSession, factPath,
-        Some(Sinks.storeSchema(batch.schema)))
+    val fresh = Sinks.readStoreIfExists(batch.sparkSession, factPath, Some(StoreKey))
       .fold(batch)(load(_, batch))
     val obs = Observation()
     Sinks.writeFactPartitioned(fresh.observe(obs, count(lit(1)).as("n")),

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Partitioned-parquet sink for the fact table — the physical layout that
   * makes the flagship query's time filters prune at 100 TB: partitioning by
@@ -69,9 +69,9 @@ object Sinks {
     * read, because Spark's observation listener re-analyzes and logs every
     * failed query, and `IdaMart.append`'s metric read waits behind it.
     *
-    * Given the store's `schema` ([[storeSchema]]), the read starts no job:
-    * without it Spark runs one to infer the schema from a footer. A store
-    * without data files then reads as an empty frame, not None. */
+    * Given the `schema` of the columns the caller reads, the read starts no
+    * job: without it Spark runs one to infer the schema from a footer. A
+    * store without data files then reads as an empty frame, not None. */
   def readStoreIfExists(spark: org.apache.spark.sql.SparkSession,
                         path: String,
                         schema: Option[StructType] = None): Option[DataFrame] = {
@@ -82,13 +82,6 @@ object Sinks {
           if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
     }
   }
-
-  /** The schema a store written by [[writeFactPartitioned]] from frames of
-    * schema `batch` reads back with: the data columns, then the `ano`
-    * partition column (nullable, like every parquet read). */
-  def storeSchema(batch: StructType): StructType =
-    StructType(batch.filterNot(_.name == "ano").map(_.copy(nullable = true)) :+
-      StructField("ano", IntegerType))
 
   /** Compact an append-heavy fact store back to at most `filesPerYear`
     * files per partition: every idempotent [[graft.plans.Pipeline.run]] /

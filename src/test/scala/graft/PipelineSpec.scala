@@ -197,27 +197,13 @@ class PipelineSpec extends SparkSpec {
     assert(compiles - c1 == 0, "the second load and replay compiled new classes")
   }
 
-  test("the store schema append reads with is the schema the store infers") {
-    val dir = Files.createTempDirectory("graft-pipe-schema").toString
-    // the fact store: the DDL mirror minus fato_key, plus the ano partition
-    val factPath = s"$dir/fact"
-    assert(Pipeline.run(spark, Seq(wideSheet("a.ods", "CLARO S.A.")), factPath)
-      .loadedNew == 3)
-    val declared = graft.sources.Sinks.storeSchema(
-      graft.plans.IdaMart.fact(graft.plans.IdaMart.records(spark, sf0001)).schema)
-    assert(declared == StructType(graft.plans.MartSchema.factSchema
-      .filterNot(_.name == "fato_key").map(_.copy(nullable = true)) :+
-      StructField("ano", IntegerType)))
-    assert(spark.read.parquet(factPath).schema == declared)
-    // the streaming ingest's store of hashed records
-    val recsPath = s"$dir/records"
-    val batch = graft.plans.IdaMart.firstWinsDedup(
-      graft.plans.IdaMart.hashRecords(graft.plans.IdaMart.records(spark, sf0001)),
-      Seq("hash_registro"), Seq("arquivo_origem", "linha_origem"))
-    assert(graft.plans.IdaMart.append(batch, recsPath) > 0)
-    assert(spark.read.parquet(recsPath).schema ==
-      graft.sources.Sinks.storeSchema(batch.schema))
-    assert(graft.plans.IdaMart.append(batch, recsPath) == 0)
+  test("append's declared store key is the key the store infers") {
+    val factPath = Files.createTempDirectory("graft-pipe-key").toString + "/fact"
+    val sheets = Seq(wideSheet("a.ods", "CLARO S.A."))
+    assert(Pipeline.run(spark, sheets, factPath).loadedNew == 3)
+    val key = graft.plans.IdaMart.StoreKey.head
+    assert(spark.read.parquet(factPath).schema(key.name) == key)
+    assert(Pipeline.run(spark, sheets, factPath).loadedNew == 0)
   }
 
   test("EngineConfig.fromEnv: overrides parse, garbage falls back") {

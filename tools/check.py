@@ -24,8 +24,9 @@ again — all pass in a fresh process). --fork 40 keeps every chunk's
 footprint bounded no matter how many queries the registry grows to.
 
 Every run writes <verifyOutDir>/check_status.json, one {"ok", "sec"} entry
-per gate checked (sec: wall seconds of the gate's DuckDB check), and ends
-by printing the 20 slowest gates.
+per gate checked (sec: wall seconds of the gate's DuckDB check); a run over
+a gate subset (each --fork chunk is one) adds its gates to the file. A full
+or forked run ends by printing the 20 slowest gates.
 """
 import json, math, os, sys, time
 import duckdb
@@ -71,7 +72,7 @@ def connect(sf_dir):
 CHECK_TYPES = False
 
 
-def main(sf_dir, out_dir, only=None, merge=False):
+def main(sf_dir, out_dir, only=None):
     # fresh connection PER QUERY: a single long-lived connection exhausted
     # its memory/temp budget ~300 queries into the r14 sf0.1 sweep and
     # failed three recursive-CTE graph oracles that pass in a fresh
@@ -93,8 +94,8 @@ def main(sf_dir, out_dir, only=None, merge=False):
             con.close()
         status[name] = {"ok": len(failures) == failed_before,
                         "sec": round(time.perf_counter() - t0, 3)}
-    write_status(out_dir, status, merge)
-    if not merge:
+    write_status(out_dir, status, merge=only is not None)
+    if only is None:
         print_slowest(status)
     if failures:
         print(f"\n{len(failures)} FAILED: {failures}")
@@ -151,8 +152,8 @@ def status_path(out_dir):
 
 
 def write_status(out_dir, status, merge):
-    """Write the per-gate status; a forked chunk (merge) adds its gates to
-    what earlier chunks of the same run wrote."""
+    """Write the per-gate status; a subset run (merge) adds its gates to
+    what earlier runs wrote, e.g. the earlier chunks of a forked run."""
     if merge and os.path.exists(status_path(out_dir)):
         with open(status_path(out_dir)) as f:
             status = {**json.load(f), **status}
@@ -173,7 +174,7 @@ def forked(sf_dir, out_dir, only, chunk):
     names = sorted(json.load(open(f"{out_dir}/oracle_sql.json")))
     if only:
         names = [n for n in names if n in only]
-    extra = (["--types"] if CHECK_TYPES else []) + ["--merge-status"]
+    extra = ["--types"] if CHECK_TYPES else []
     if os.path.exists(status_path(out_dir)):
         os.remove(status_path(out_dir))
     bad = 0
@@ -202,4 +203,4 @@ if __name__ == "__main__":
     if fork > 0:
         forked(argv[0], argv[1], only, fork)
     else:
-        main(argv[0], argv[1], only, merge="--merge-status" in sys.argv)
+        main(argv[0], argv[1], only)
