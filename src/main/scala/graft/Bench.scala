@@ -49,7 +49,7 @@ object Bench {
     case class QStat(name: String, med: Double, min: Double, max: Double, ok: Boolean,
                      rddBlocks: Int = 0, rddMb: Double = 0, shufFiles: Int = 0,
                      shufMb: Double = 0, extraIters: Int = 0, compiles: Long = 0,
-                     compileS: Double = 0)
+                     compileS: Double = 0, jobs: Int = 0)
     // Janino compiles (count, seconds) so far in this JVM. The warmup
     // execution compiles a gate's classes; a timed iteration that still
     // compiles is a gate whose generated code misses the codegen cache.
@@ -112,43 +112,46 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); ok = false }
       val (compiles0, compileS0) = codegenSoFar()
-      var i = 0
-      while (i < iters && ok) {
-        val t0 = System.nanoTime()
-        try { exec(fn(spark, sfDir)); times += (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); ok = false }
-        i += 1
-      }
-      // Variance guard: with 3 samples, ONE external contention window
-      // covering iterations 2-3 owns the median (r15 driver: graph_hits
-      // min 2.16 / median 8.11 — the plan was fine, the machine wasn't).
-      // When the spread says the samples disagree wildly (max > 2.5x min),
-      // buy up to `iters` extra samples; the median over 5-6 samples needs
-      // a majority of slow runs to report slow, which distinguishes "this
-      // plan is slow" from "the pool was busy for four seconds". Bounded:
-      // at most doubles the cost of the noisy queries only.
+      // the jobs the timed iterations start, variance-guard extras included
       var extraIters = 0
-      if (ok) {
-        var cur = times.result()
-        var guardLive = true
-        while (guardLive && extraIters < iters && cur.nonEmpty &&
-            cur.max > 2.5 * cur.min) {
+      val (_, jobs) = JobCount(spark) {
+        var i = 0
+        while (i < iters && ok) {
           val t0 = System.nanoTime()
-          // a transient failure on an OPTIONAL extra sample must not fail
-          // the gate — the required `iters` samples all succeeded; log it
-          // and stop buying samples (r16 ADVICE)
           try { exec(fn(spark, sfDir)); times += (System.nanoTime() - t0) / 1e9 }
           catch { case e: Throwable =>
-            System.err.println(s"[bench] $name variance-guard extra sample " +
-              s"failed (gate keeps its $iters good samples): ${e.getMessage}")
-            guardLive = false }
-          if (guardLive) extraIters += 1
-          cur = times.result()
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); ok = false }
+          i += 1
         }
-        if (extraIters > 0)
-          System.err.println(f"[bench] $name variance guard: +$extraIters iters, " +
-            f"min ${cur.min}%.2f max ${cur.max}%.2f")
+        // Variance guard: with 3 samples, ONE external contention window
+        // covering iterations 2-3 owns the median (r15 driver: graph_hits
+        // min 2.16 / median 8.11 — the plan was fine, the machine wasn't).
+        // When the spread says the samples disagree wildly (max > 2.5x min),
+        // buy up to `iters` extra samples; the median over 5-6 samples needs
+        // a majority of slow runs to report slow, which distinguishes "this
+        // plan is slow" from "the pool was busy for four seconds". Bounded:
+        // at most doubles the cost of the noisy queries only.
+        if (ok) {
+          var cur = times.result()
+          var guardLive = true
+          while (guardLive && extraIters < iters && cur.nonEmpty &&
+              cur.max > 2.5 * cur.min) {
+            val t0 = System.nanoTime()
+            // a transient failure on an OPTIONAL extra sample must not fail
+            // the gate — the required `iters` samples all succeeded; log it
+            // and stop buying samples (r16 ADVICE)
+            try { exec(fn(spark, sfDir)); times += (System.nanoTime() - t0) / 1e9 }
+            catch { case e: Throwable =>
+              System.err.println(s"[bench] $name variance-guard extra sample " +
+                s"failed (gate keeps its $iters good samples): ${e.getMessage}")
+              guardLive = false }
+            if (guardLive) extraIters += 1
+            cur = times.result()
+          }
+          if (extraIters > 0)
+            System.err.println(f"[bench] $name variance guard: +$extraIters iters, " +
+              f"min ${cur.min}%.2f max ${cur.max}%.2f")
+        }
       }
       val ts = times.result()
       val (compiles1, compileS1) = codegenSoFar()
@@ -186,7 +189,7 @@ object Bench {
       if (ok) QStat(name, median(ts), ts.min, ts.max, ok = true,
         rddBlocks = rb, rddMb = rmb, shufFiles = sf, shufMb = smb,
         extraIters = extraIters, compiles = compiles1 - compiles0,
-        compileS = compileS1 - compileS0)
+        compileS = compileS1 - compileS0, jobs = jobs)
       else QStat(name, 0, 0, 0, ok = false, rddBlocks = rb, rddMb = rmb,
         shufFiles = sf, shufMb = smb, extraIters = extraIters)
     }
@@ -209,9 +212,10 @@ object Bench {
     // names exactly the gates whose 3-sample spread tripped the guard on
     // THIS run — the attribution signal for contention bimodality; and
     // the Janino compiles over the timed iterations (compiles > 0 names a
-    // gate whose generated code is compiled again on every execution)
+    // gate whose generated code is compiled again on every execution); and
+    // the Spark jobs those iterations started
     val spread = results.collect { case q if q.ok =>
-      jstr(q.name) + s""":{"min":${ms(q.min)},"max":${ms(q.max)},"extra_iters":${q.extraIters},"compiles":${q.compiles},"compile_s":${ms(q.compileS)}}""" }
+      jstr(q.name) + s""":{"min":${ms(q.min)},"max":${ms(q.max)},"extra_iters":${q.extraIters},"compiles":${q.compiles},"compile_s":${ms(q.compileS)},"jobs":${q.jobs}}""" }
       .mkString("{", ",", "}")
     System.err.println(s"""[bench] spread (min/max over $iters iters): $spread""")
     val failed = results.collect { case q if !q.ok => jstr(q.name) }

@@ -2,7 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression,
+  ExpressionInfo, InterpretedOrdering, Literal, Unevaluable}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Sort}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.SORT
 import org.apache.spark.sql.types.IntegerType
 
 import graft.functions.{HashExprs, TextExprs, VectorExprs}
@@ -23,10 +27,33 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.AsofNative.Strategy)
     ext.injectPlannerStrategy(_ => graft.plans.RangeNative.Strategy)
     ext.injectPlannerStrategy(_ => graft.plans.IntervalNative.Strategy)
+    ext.injectOptimizerRule(_ => GraftExtensions.SortLocalRelation)
   }
 }
 
 object GraftExtensions {
+
+  /** An ORDER BY over rows already on the driver sorts them there. Spark
+    * plans a global sort as a range shuffle, which samples its input in
+    * jobs of its own even when the input is a `LocalRelation` of a few
+    * rows, such as a dimension ranked on the driver
+    * ([[graft.plans.IdaMart]]) whose projections `ConvertToLocalRelation`
+    * has already folded in. This rule sorts the relation's rows with
+    * Spark's own `InterpretedOrdering`, so the result equals the range
+    * sort's, and its collect starts no job. Sort keys that are
+    * nondeterministic or cannot be evaluated on the driver leave the plan
+    * as it is, and so does every other plan. */
+  object SortLocalRelation extends Rule[LogicalPlan] {
+    private def driverEvaluable(e: Expression): Boolean = e.deterministic &&
+      !e.exists(x => x.isInstanceOf[Unevaluable] && !x.isInstanceOf[AttributeReference])
+
+    override def apply(plan: LogicalPlan): LogicalPlan =
+      plan.transformUpWithPruning(_.containsPattern(SORT)) {
+        case Sort(order, true, rel @ LocalRelation(output, data, false, _), _)
+            if order.forall(o => driverEvaluable(o.child)) =>
+          rel.copy(data = data.sorted(new InterpretedOrdering(order, output)))
+      }
+  }
 
   private def intLit(e: Expression, fn: String): Int = e match {
     case Literal(v: Int, IntegerType) => v

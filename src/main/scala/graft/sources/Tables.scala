@@ -19,9 +19,37 @@ object Tables {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  /** Generic reader; `events` gets its nanosecond timestamp normalized. */
+  /** The star-schema tables' column types, declared like the reference's
+    * DDL (schema_star.sql) rather than inferred: a read with a given schema
+    * starts no footer-sampling job, which on a short mart query is a
+    * whole extra job per table touched. The `*date` columns are
+    * TIMESTAMP_NTZ because the files hold INT64 TIMESTAMP(MICROS) with
+    * isAdjustedToUTC=false. TablesSpec pins each schema to the one Spark
+    * infers from every fixture scale, so a changed fixture fails there
+    * instead of reading as nulls. `events` (three observed `ts`
+    * encodings), `documents` and `embeddings` keep the inferring read. */
+  val declared: Map[String, StructType] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> ("s_suppkey BIGINT, s_name STRING, s_nationkey INT, " +
+      "s_acctbal DOUBLE"),
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, " +
+      "p_type STRING, p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ")
+  ).map { case (n, ddl) => n -> StructType.fromDDL(ddl) }
+
+  /** Generic reader: a declared table reads with its schema; `events` gets
+    * its timestamp normalized. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(path(dir, name))
+    val raw = declared.get(name)
+      .fold(spark.read)(s => spark.read.schema(s)).parquet(path(dir, name))
     if (name == "events") normalizeEventTs(raw) else raw
   }
 

@@ -1,11 +1,16 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.{HashExprs, TextExprs, VectorFns}
 
 /** SparkSessionExtensions registration: every injected SQL function must
-  * plan the SAME native expression as its Column helper. */
+  * plan the SAME native expression as its Column helper, and an ORDER BY
+  * over a driver-side relation must sort there with the same result as
+  * Spark's range sort. */
 class GraftExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -76,6 +81,66 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(viaSql.toSeq == viaCol.toSeq)
     assert(viaSql.getString(0) == "caf\u00e9 data engineering") // composed NFC
     assert(viaSql.getString(1) == "cafe data engineering")     // accent folded
+  }
+
+  private val sortSchema = StructType(Seq(
+    StructField("id", IntegerType, nullable = false),
+    StructField("g", StringType), StructField("s", StringType),
+    StructField("x", IntegerType), StructField("d", DoubleType)))
+
+  // every single key below is unique, and (g, x) is too, so each ordering
+  // is total and the two plans must agree row for row
+  private val sortRows = Seq(
+    Row(1, "b", "ação", 7, 1.5), Row(2, "a", "Zeta", null, -0.5),
+    Row(3, "b", null, 3, Double.NaN), Row(4, "a", "zeta", -2, null),
+    Row(5, "c", "acao", 11, 0.0), Row(6, null, "", 5, -3.25),
+    Row(7, "a", "Ação", 0, 8.0), Row(8, "c", "b", 4, Double.NegativeInfinity))
+
+  private def local: DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(sortRows: _*), sortSchema)
+
+  private def distributed: DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(sortRows, 3), sortSchema)
+
+  private def sorts(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect { case s: Sort => s }.size
+
+  test("ORDER BY over a local relation sorts on the driver, equal to the " +
+    "range sort: asc/desc, nulls first/last, multi-key, string keys") {
+    val orders: Seq[Seq[Column]] = Seq(
+      Seq(col("x")), Seq(col("x").desc), Seq(col("x").asc_nulls_last),
+      Seq(col("x").desc_nulls_first), Seq(col("s")), Seq(col("s").desc),
+      Seq(col("s").asc_nulls_last), Seq(col("d")), Seq(col("d").desc_nulls_first),
+      Seq(col("g"), col("x").desc), Seq(col("g").desc_nulls_last, col("x")),
+      Seq(length(col("s")).desc, col("id")))
+    orders.foreach { o =>
+      val driver = local.orderBy(o: _*)
+      val ranged = distributed.orderBy(o: _*)
+      assert(sorts(driver) == 0 &&
+        driver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        s"$o: ${driver.queryExecution.optimizedPlan}")
+      assert(sorts(ranged) == 1, s"$o: a non-local sort must stay a Sort")
+      assert(driver.collect().toSeq == ranged.collect().toSeq, s"order by $o")
+    }
+  }
+
+  test("a sort within partitions over a local relation keeps its Sort") {
+    assert(sorts(local.sortWithinPartitions(col("x"))) == 1)
+  }
+
+  test("ORDER BY over a local relation, and a ranked dimension, start " +
+    "only the jobs that compute the answer") {
+    val (rows, jobs) = JobCount(spark)(
+      local.select(col("id"), upper(col("g")).as("g"))
+        .orderBy(col("g").desc, col("id")).collect())
+    assert(jobs == 0, s"a local ORDER BY started $jobs jobs")
+    assert(rows.map(_.getInt(0)).toSeq == Seq(5, 8, 1, 3, 2, 4, 7, 6))
+    // the dimension's one key collect (its shuffle map stage, then the
+    // bounded collect); the ORDER BY over the ranked keys starts none
+    val (dim, dimJobs) = JobCount(spark)(
+      SparkEntry.queries("s8_dim_grupo")(spark, sf0001).collect())
+    assert(dimJobs == 2, s"s8_dim_grupo ran $dimJobs jobs")
+    assert(dim.map(_.getInt(0)).toSeq == (1 to dim.length))
   }
 
   test("non-literal parameter and wrong arity fail analysis") {
