@@ -5,7 +5,7 @@ import java.util.zip.ZipInputStream
 
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** REAL OpenDocument Spreadsheet ingestion — the reference's actual input
@@ -42,13 +42,15 @@ import org.apache.spark.sql.functions._
   * the honest 100-TB layout for spreadsheet ingest (a workbook is
   * metadata-to-megabytes; a crawl of them is wide). Within one file the
   * StAX parse is a single streaming pass that never materializes the XML
-  * tree. The header probe reuses [[Probe.findHeaderRow]] on the first
-  * [[Probe.MaxScan]] parsed rows, mirroring [[RawIngest]]'s two-phase
-  * read; the DuckDB oracle reads a committed CSV mirror of the same grid
-  * (DuckDB has no ODS reader) generated from the same source of truth
-  * (tools/make_ods_fixture.py), with grid equality additionally pinned in
-  * OdsSpec. Untrusted-input hygiene: DTDs and external entities are
-  * disabled on the parser. */
+  * tree. The sheet yields the same raw grid as the delimited reader,
+  * `(row_idx, cells)`, and [[readIdaExport]] shares [[RawIngest]]'s
+  * two-phase read: the header probe parses the workbook on the driver and
+  * takes its first [[Probe.MaxScan]] grid rows. The DuckDB oracle reads a
+  * committed CSV mirror of the same grid (DuckDB has no ODS reader)
+  * generated from the same source of truth (tools/make_ods_fixture.py),
+  * with grid and wide-frame equality additionally pinned in OdsSpec.
+  * Untrusted-input hygiene: DTDs and external entities are disabled on
+  * the parser. */
 object Ods {
 
   private val TableNs = "urn:oasis:names:tc:opendocument:xmlns:table:1.0"
@@ -208,38 +210,20 @@ object Ods {
       .toDF("row_idx", "cells")
   }
 
-  /** S4-S6 over a REAL ODS container: probe the header row on the first
-    * [[Probe.MaxScan]] parsed grid rows ([[Probe.findHeaderRow]] — the
-    * same probe the delimited path uses), then project the data rows under the
-    * detected column names. Output matches
-    * [[RawIngest.readWithDetectedHeader]]: `row_idx` (0-based data row),
-    * the detected columns as nullable strings (blank cells -> NULL, like
-    * `from_csv`'s empty-cell default — what the W3 forward-fill expects),
-    * and `ARQUIVO_ORIGEM`. Single-workbook, like the delimited reader
+  /** ODS analog of [[RawIngest.readIdaExport]]: the sheet's grid
+    * ([[readSheet]]) under the header probed on the driver from the
+    * workbook's first [[Probe.MaxScan]] grid rows, through the same
+    * [[RawIngest.wideFrame]] projection as the delimited reader, so
+    * building the frame starts no Spark job and feeds
+    * [[graft.plans.IdaTransform.rawWideToRecords]] unchanged.
+    * Single-workbook, like the delimited reader
     * ([[RawIngest.requireSingleFile]]); [[readSheet]] itself stays
     * glob-capable for schema-free raw parsing. */
-  def readSheetWithDetectedHeader(spark: SparkSession, path: String,
-                                  sheet: String): DataFrame = {
-    RawIngest.requireSingleFile(spark, path, "readSheetWithDetectedHeader")
-    val parsed = readSheet(spark, path, sheet)
-    val head: Seq[Seq[String]] = parsed.orderBy(col("row_idx"))
-      .limit(Probe.MaxScan).collect().map(r => r.getSeq[String](1).toSeq).toSeq
-    val idx = Probe.findHeaderRow(head)
-    require(idx < head.length, s"header probe found no header in $path!$sheet")
-    val names = RawIngest.dedupeNames(head(idx).map(_.trim))
-    val fileName = new java.io.File(path).getName
-    val dataCols: Seq[Column] = names.zipWithIndex.map { case (n, i) =>
-      val c = try_element_at(col("cells"), lit(i + 1)) // null past row end
-      when(c === "", lit(null)).otherwise(c).as(n)
-    }
-    parsed.filter(col("row_idx") > idx)
-      .select((col("row_idx") - lit(idx + 1)).as("row_idx") +: dataCols: _*)
-      .withColumn("ARQUIVO_ORIGEM", lit(fileName))
+  def readIdaExport(spark: SparkSession, path: String, sheet: String): DataFrame = {
+    val file = RawIngest.requireSingleFile(spark, path)
+    val in = file.getFileSystem(spark.sparkContext.hadoopConfiguration).open(file)
+    val bytes = try in.readAllBytes() finally in.close()
+    RawIngest.wideFrame(readSheet(spark, path, sheet),
+      sheetRows(bytes, sheet).take(Probe.MaxScan), path)
   }
-
-  /** ODS analog of [[RawIngest.readIdaExport]]: detected-header sheet read
-    * + canonical id-header renames, feeding
-    * [[graft.plans.IdaTransform.rawWideToRecords]] unchanged. */
-  def readIdaExport(spark: SparkSession, path: String, sheet: String): DataFrame =
-    RawIngest.renameIdaHeaders(readSheetWithDetectedHeader(spark, path, sheet))
 }

@@ -3,9 +3,9 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 
 /** Raw-input probing utilities — the reference's header-row autodetection and
-  * month-column predicate (SURVEY.md §2.1 S6, §2.2 P3). These run on
-  * driver-side samples (`limit(20)`) by design: schema discovery is a
-  * metadata operation, not a distributed scan.
+  * month-column predicate (SURVEY.md §2.1 S6, §2.2 P3). These run on the
+  * first [[MaxScan]] rows of a file or sheet, read on the driver by design:
+  * schema discovery is a metadata operation, not a distributed scan.
   */
 object Probe {
 

@@ -1,40 +1,48 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.io.{BufferedReader, InputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** S4/S5 end-to-end: read a raw headerless delimited export *from disk*,
-  * autodetect its header row (S6, [[Probe.findHeaderRow]]), and re-read the
-  * file with the detected header — the reference's two-phase spreadsheet
-  * ingestion (/root/reference/etl/etl_ida.py:171-176, 213-246, 259-274:
-  * `pd.read_excel(header=None)` probe, then re-read with `header=N`).
+  * autodetect its header row (S6, [[Probe.findHeaderRow]]), and read the
+  * rows below it under the detected header — the reference's two-phase
+  * spreadsheet ingestion (/root/reference/etl/etl_ida.py:171-176, 213-246,
+  * 259-274: `pd.read_excel(header=None)` probe, then re-read with
+  * `header=N`).
   *
-  * Spark-first shape:
-  *  - the probe touches only the file head (`limit(Probe.MaxScan)` on the
-  *    text source — partition 0 of a file scan IS the file head, so this is
-  *    a metadata-sized driver operation no matter how large the file);
-  *  - the full read is a narrow text scan + `from_csv` parse. Line numbers
-  *    come from `zipWithIndex`, which is deterministic for file-backed
-  *    partitions (fixed byte ranges) — they drive the forward-fill order
-  *    (W3) and the `linha_origem` lineage column;
-  *  - empty cells parse to NULL (CSV `nullValue` default), which is what
-  *    the merged-cell forward-fill expects.
+  * Spark-first shape, shared with the ODS reader ([[Ods]]):
+  *  - the file becomes the raw grid both readers produce,
+  *    `(row_idx: long, cells: array<string>)`: each physical line, numbered
+  *    by `zipWithIndex` (deterministic for file-backed partitions — fixed
+  *    byte ranges) and split by [[splitQuoted]]. The line numbers drive the
+  *    forward-fill order (W3) and the `linha_origem` lineage column;
+  *  - the header probe reads the first [[Probe.MaxScan]] lines on the
+  *    driver through the Hadoop `FileSystem` and splits them with the same
+  *    [[splitQuoted]], so the probe and the data share one split rule and
+  *    building the frame starts no Spark job;
+  *  - [[wideFrame]] projects the grid under the detected header, blank
+  *    cells as NULL, which is what the merged-cell forward-fill expects.
   *
-  * At 100 TB this stays two passes over each file (offset count + parse),
-  * both embarrassingly parallel; only the 20-line probe is driver-side.
+  * At 100 TB this stays two passes over each file (`zipWithIndex`'s
+  * per-partition line count, a job once the file spans several splits,
+  * then the split), both embarrassingly parallel; the probe reads only the
+  * file head.
   */
 object RawIngest {
 
   /** Detected header: 0-based line index + raw header cell names. */
   case class DetectedHeader(headerIdx: Int, columns: Seq[String])
 
-  /** RFC-4180-style cell split for the PROBE only (the full read parses
-    * with `from_csv`, which already honors quoting): a delimiter inside a
-    * double-quoted cell does not split, `""` is an escaped quote. Without
-    * this a quoted export (`"89,74"` in a comma-delimited file) would
-    * miscount the header row's cells. Trailing empty cells are kept, like
-    * `String.split(_, -1)`. */
+  /** RFC-4180-style cell split, the one rule for the header probe and the
+    * data rows: a delimiter inside a double-quoted cell does not split,
+    * `""` is an escaped quote, the enclosing quotes are dropped (so
+    * `"ACME ""X"" S.A."` reads `ACME "X" S.A.`, as DuckDB's `read_csv`
+    * reads it). Trailing empty cells are kept, like `String.split(_, -1)`. */
   private def splitQuoted(line: String, delim: Char): Seq[String] = {
     val out = Seq.newBuilder[String]
     val sb = new StringBuilder
@@ -61,42 +69,51 @@ object RawIngest {
     * spreadsheet reader (/root/reference/etl/etl_ida.py:215-242); here it
     * is an explicit bounded probe (driver-side, [[Probe.MaxScan]] lines). */
   def detectDelim(spark: SparkSession, path: String): String =
-    detectDelimFromHead(headLines(spark, path))
+    detectDelimFromHead(headLines(spark, path)).toString
 
-  private def headLines(spark: SparkSession, path: String): Seq[String] =
-    spark.read.textFile(path).limit(Probe.MaxScan).collect().toSeq
-
-  private def detectDelimFromHead(head: Seq[String]): String =
+  private def detectDelimFromHead(head: Seq[String]): Char =
     delimCandidates.maxBy { d =>
-      val cells: Seq[Seq[Any]] = head.map(splitQuoted(_, d.charAt(0)))
+      val cells = head.map(splitQuoted(_, d))
       val idx = Probe.findHeaderRow(cells, default = -1)
       if (idx < 0) 0 else cells(idx).length
     }
 
   /** The delimiters [[detectDelim]] chooses from. */
-  private val delimCandidates: Seq[String] = Seq(";", ",", "\t")
+  private val delimCandidates: Seq[Char] = Seq(';', ',', '\t')
+
+  /** The first [[Probe.MaxScan]] lines of the one file `path` names, read
+    * on the driver (no Spark job) the way `spark.read.textFile` reads
+    * them: UTF-8, `\n`/`\r\n`/`\r` line ends, decompressed by the codec
+    * the file's extension names. */
+  private def headLines(spark: SparkSession, path: String): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val file = requireSingleFile(spark, path)
+    val raw: InputStream = file.getFileSystem(conf).open(file)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(file))
+      .fold(raw)(_.createInputStream(raw))
+    val r = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+    try Iterator.continually(r.readLine()).takeWhile(_ != null)
+      .take(Probe.MaxScan).toList
+    finally r.close()
+  }
 
   /** S6 over a real file: probe the first [[Probe.MaxScan]] physical lines,
-    * split with the delimiter [[detectDelim]] finds in the SAME collected
-    * head (one driver probe, not two). */
-  def probeHeader(spark: SparkSession, path: String): DetectedHeader =
-    probeHeaderFromHead(headLines(spark, path), path)._1
-
-  /** Shared probe core: returns the detected header AND the detected
-    * delimiter, so [[readWithDetectedHeader]] costs one head collect. */
-  private def probeHeaderFromHead(head: Seq[String],
-                                  path: String): (DetectedHeader, String) = {
+    * split with the delimiter [[detectDelim]] finds in the same head. */
+  def probeHeader(spark: SparkSession, path: String): DetectedHeader = {
+    val head = headLines(spark, path)
     val d = detectDelimFromHead(head)
-    val cells: Seq[Seq[Any]] = head.map(splitQuoted(_, d.charAt(0)))
-    val idx = Probe.findHeaderRow(cells)
+    detectHeader(head.map(splitQuoted(_, d)), path)
+  }
+
+  private def detectHeader(head: Seq[Seq[String]], path: String): DetectedHeader = {
+    val idx = Probe.findHeaderRow(head)
     require(idx < head.length, s"header probe found no header in $path")
-    (DetectedHeader(idx, dedupeNames(cells(idx).map(_.toString.trim))), d)
+    DetectedHeader(idx, dedupeNames(head(idx).map(_.trim)))
   }
 
   /** Blank/duplicate header cells get positional fallbacks, like the
-    * reference's pandas rename of unnamed columns. Shared with the ODS
-    * container reader ([[Ods]]) — one naming rule for every raw source. */
-  private[sources] def dedupeNames(names: Seq[String]): Seq[String] = {
+    * reference's pandas rename of unnamed columns. */
+  private def dedupeNames(names: Seq[String]): Seq[String] = {
     val seen = scala.collection.mutable.Map.empty[String, Int]
     names.zipWithIndex.map { case (n0, i) =>
       val n = if (n0.isEmpty) s"_c$i" else n0
@@ -107,73 +124,65 @@ object RawIngest {
     }
   }
 
-  /** S4+S5: text-scan the file, drop everything up to and including the
-    * detected header line, and parse the rest with the detected column
-    * names (all strings — typing happens in the transform stage, like the
-    * reference's `dtype=str` re-read). Output columns:
-    * `row_idx` (0-based data-row index), the detected columns, and
-    * `ARQUIVO_ORIGEM` (file basename). `path` must name exactly one file
-    * ([[requireSingleFile]]). */
-  def readWithDetectedHeader(spark: SparkSession, path: String): DataFrame = {
-    requireSingleFile(spark, path, "readWithDetectedHeader")
-    val (det, d) = probeHeaderFromHead(headLines(spark, path), path)
-    val parseSchema = StructType(
-      det.columns.map(StructField(_, StringType, nullable = true)))
-    val rowSchema = StructType(Seq(
-      StructField("row_idx", LongType, nullable = false),
-      StructField("line", StringType, nullable = true)))
-    val hdr = det.headerIdx.toLong
-    val indexed = spark.createDataFrame(
-      spark.read.textFile(path).rdd.zipWithIndex()
-        .filter(_._2 > hdr)
-        .map { case (line, i) => Row(i - hdr - 1, line) },
-      rowSchema)
-    val fileName = new java.io.File(path).getName
-    indexed
-      .select(col("row_idx"),
-        from_csv(col("line"), parseSchema, Map("sep" -> d)).as("r"))
-      .select(col("row_idx") +: det.columns.map(c => col(s"r.`$c`").as(c)): _*)
-      .withColumn("ARQUIVO_ORIGEM", lit(fileName))
+  /** Canonical id-header renames (matched upper-cased), so the delimited
+    * and ODS readers feed [[graft.plans.IdaTransform]] identically. */
+  private val idaHeaderRenames = Map(
+    "GRUPO ECONOMICO" -> "GRUPO_ECONOMICO",
+    "GRUPO ECONÔMICO" -> "GRUPO_ECONOMICO")
+
+  /** The one projection from a raw grid `(row_idx, cells)` to the wide
+    * frame [[graft.plans.IdaTransform]] consumes, shared by both raw
+    * readers. `head` is the grid's first [[Probe.MaxScan]] rows, read on
+    * the driver. Output columns: `row_idx` (0-based data-row index), the
+    * detected header's columns (deduped, id headers renamed to their
+    * canonical underscore form, month columns verbatim) as nullable
+    * strings — blank cells and cells past a short row's end are NULL —
+    * and `ARQUIVO_ORIGEM` (file basename). Typing happens in the
+    * transform stage, like the reference's `dtype=str` re-read. */
+  private[sources] def wideFrame(grid: DataFrame, head: Seq[Seq[String]],
+                                 path: String): DataFrame = {
+    val det = detectHeader(head, path)
+    val cells = det.columns.zipWithIndex.map { case (n, i) =>
+      val c = try_element_at(col("cells"), lit(i + 1))
+      when(c === "", lit(null)).otherwise(c)
+        .as(idaHeaderRenames.getOrElse(n.toUpperCase, n))
+    }
+    grid.filter(col("row_idx") > det.headerIdx)
+      .select((col("row_idx") - lit(det.headerIdx + 1)).as("row_idx") +: cells: _*)
+      .withColumn("ARQUIVO_ORIGEM", lit(new java.io.File(path).getName))
   }
 
   /** Raw IDA export -> the canonical wide frame [[graft.plans.IdaTransform]]
-    * consumes: id headers renamed to their canonical underscore form, month
-    * columns kept verbatim. */
-  def readIdaExport(spark: SparkSession, path: String): DataFrame =
-    renameIdaHeaders(readWithDetectedHeader(spark, path))
+    * consumes ([[wideFrame]] over the file's line grid). `path` must name
+    * exactly one file ([[requireSingleFile]]). */
+  def readIdaExport(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    val head = headLines(spark, path)
+    val d = detectDelimFromHead(head)
+    val grid = spark.read.textFile(path).rdd.zipWithIndex()
+      .map { case (line, i) => (i, splitQuoted(line, d)) }
+      .toDF("row_idx", "cells")
+    wideFrame(grid, head.map(splitQuoted(_, d)), path)
+  }
 
-  /** Single-file contract of the detected-header readers, enforced with a
-    * file-system listing (no Spark job). Over a glob or directory the
-    * header probe reads only the first file's head, per-file line or
-    * grid-row numbers collide, so other files' preamble and header rows
+  /** Single-file contract of the raw readers, enforced with a file-system
+    * listing (no Spark job); returns that file. Over a glob or directory
+    * the header probe would read only the first file's head, per-file line
+    * or grid-row numbers collide, so other files' preamble and header rows
     * would enter as data, and `ARQUIVO_ORIGEM` would name the glob for
     * every row. Multi-file ingest loops the reader per file. */
-  private[sources] def requireSingleFile(spark: SparkSession, path: String,
-                                         reader: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
+  private[sources] def requireSingleFile(spark: SparkSession, path: String): Path = {
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = Option(fs.globStatus(p)).getOrElse(Array.empty).flatMap {
       case d if d.isDirectory => fs.listStatus(d.getPath).filter(_.isFile)
       case f => Array(f)
     }
     require(files.length == 1,
-      s"$reader: '$path' resolves to ${files.length} files — the " +
-        "detected-header read is single-file (per-file row numbers would " +
-        "interleave); loop per file for multi-file ingest")
-  }
-
-  /** Canonical id-header renames, shared by the delimited and ODS raw
-    * readers so both feed [[graft.plans.IdaTransform]] identically. */
-  private[sources] def renameIdaHeaders(raw: DataFrame): DataFrame = {
-    val renames = Map(
-      "GRUPO ECONOMICO" -> "GRUPO_ECONOMICO",
-      "GRUPO ECONÔMICO" -> "GRUPO_ECONOMICO")
-    raw.columns.foldLeft(raw) { (df, c) =>
-      renames.get(c.toUpperCase) match {
-        case Some(canon) => df.withColumnRenamed(c, canon)
-        case None        => df
-      }
-    }
+      s"'$path' resolves to ${files.length} files — the detected-header " +
+        "read is single-file (per-file row numbers would interleave); loop " +
+        "per file for multi-file ingest")
+    files.head.getPath
   }
 
   /** DuckDB mirror of `readIdaExport` + `IdaTransform.rawWideToRecords`

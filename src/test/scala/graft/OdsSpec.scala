@@ -128,6 +128,16 @@ class OdsSpec extends SparkSpec {
     assert(Ods.sheetRows(odsBytes, "Notas").length == 3)
   }
 
+  test("one projection: the ODS sheet and its CSV mirror read to equal " +
+    "wide frames") {
+    val ods = Ods.readIdaExport(spark, odsPath, "Telefonia_Fixa")
+      .drop("ARQUIVO_ORIGEM")
+    val csv = RawIngest.readIdaExport(spark, mirrorCsv).drop("ARQUIVO_ORIGEM")
+    assert(ods.schema == csv.schema)
+    assert(ods.orderBy("row_idx").collect().toSeq ==
+      csv.orderBy("row_idx").collect().toSeq)
+  }
+
   test("detected-header read matches the delimited path's contract: " +
     "0-based row_idx, blanks as NULL, ARQUIVO_ORIGEM lineage") {
     val wide = Ods.readIdaExport(spark, odsPath, "Telefonia_Fixa")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.EngineConfig
 import graft.plans.IdaTransform
-import graft.sources.{Catalog, RawIngest}
+import graft.sources.{Catalog, Ods, RawIngest}
 
 /** S4/S5/S6 end-to-end from a real file on disk: header probe, re-read
   * with the detected header, full transform — plus S1-S3 catalog
@@ -53,6 +53,31 @@ class RawIngestSpec extends SparkSpec {
     val semi = recs(smp)
     val quoted = recs(SparkEntry.quotedFixturePath)
     assert(quoted.nonEmpty && quoted == semi)
+  }
+
+  test("quoted cells: doubled quotes unescape and a quoted delimiter stays " +
+    "in its cell, in the data rows as in the header probe") {
+    val f = java.nio.file.Files.createTempFile("raw-quoted", ".csv")
+    java.nio.file.Files.write(f, java.util.Arrays.asList(
+      "GRUPO ECONOMICO,VARIAVEL,SERVICO,2023-01",
+      "\"ACME \"\"X\"\" S.A.\",\"Var, with comma\",SMP,\"89,74\""))
+    val row = RawIngest.readIdaExport(spark, f.toString).collect().head
+    assert(row.getAs[String]("GRUPO_ECONOMICO") == "ACME \"X\" S.A.")
+    assert(row.getAs[String]("VARIAVEL") == "Var, with comma")
+    assert(row.getAs[String]("SERVICO") == "SMP")
+    assert(row.getAs[String]("2023-01") == "89,74")
+  }
+
+  test("building the wide frame starts no Spark job (CSV, quoted CSV, WB " +
+    "sheet, ODS)") {
+    val wbSheet = s"$fixturesDir/ida_raw_2023_stfc.wb/Telefonia_Fixa.csv"
+    for (p <- Seq(smp, SparkEntry.quotedFixturePath, wbSheet)) {
+      val (_, jobs) = JobCount(spark)(RawIngest.readIdaExport(spark, p))
+      assert(jobs == 0, s"$p: $jobs jobs")
+    }
+    val (_, odsJobs) = JobCount(spark)(
+      Ods.readIdaExport(spark, SparkEntry.odsFixturePath, "Telefonia_Fixa"))
+    assert(odsJobs == 0, s"ODS: $odsJobs jobs")
   }
 
   test("end-to-end: raw file -> records; forward-fill, standardization, " +
