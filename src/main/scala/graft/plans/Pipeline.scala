@@ -1,5 +1,7 @@
 package graft.plans
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, count_if, lit}
 
@@ -11,9 +13,14 @@ import org.apache.spark.sql.functions.{col, count, count_if, lit}
   * etl_ida.py:743-749,793-818).
   *
   * Differences from the reference, by design:
-  *  - per-sheet sequential Python loops become one unioned lazy plan; the
-  *    union is a narrow bag-union (U1), so Spark parallelizes across
-  *    sheets AND rows;
+  *  - per-sheet sequential Python loops become one lazy records plan:
+  *    each sheet is only checked and shaped ([[IdaTransform.shapeSheet]]:
+  *    every id column present, at least one `YYYY-MM` month column, the
+  *    sheet's own month cells in one array), the shaped sheets are a narrow
+  *    bag-union (U1), and the fill, unpivot and cleaning run once over the
+  *    union ([[IdaTransform.records]]). So the plan, and its one fill
+  *    shuffle, do not grow with the number of sheets, and Spark
+  *    parallelizes across sheets AND rows;
   *  - the reference re-reads every sheet to count its extracted rows; here
   *    every counter is an `observe` metric (CollectMetrics) of the work's
   *    own jobs, so each input is scanned exactly once, which at 100 TB
@@ -29,13 +36,15 @@ import org.apache.spark.sql.functions.{col, count, count_if, lit}
   *    contract here, so the error is "no transformed record has every
   *    natural key" (the fact drops them all), reported, not thrown.
   *
-  * Fault isolation: a malformed sheet (missing month columns, wrong schema)
-  * throws at plan CONSTRUCTION/analysis — driver-side, before any job — and
-  * is reported and skipped like the reference's per-resource try
-  * (etl_ida.py:793-818). A data-plane failure mid-run (vanished/corrupt
-  * file) fails the single load job and is reported as a run-level error;
-  * per-row corruption tolerance belongs to the source configuration
-  * (`spark.sql.files.ignoreCorruptFiles`), not to a second audit scan.
+  * Fault isolation: a malformed sheet (a missing id column, no month
+  * column) fails the per-sheet shape step at plan CONSTRUCTION —
+  * driver-side, before any job — and is reported as `sheet i: …` and
+  * skipped like the reference's per-resource try (etl_ida.py:793-818). A
+  * data-plane failure mid-run (vanished/corrupt file) fails the single
+  * load job and is reported as a run-level error; corruption tolerance
+  * belongs to the source configuration (`spark.files.ignoreCorruptFiles`
+  * for the delimited exports' text scan, `spark.sql.files.ignoreCorruptFiles`
+  * for the ODS workbooks), not to a second audit scan.
   */
 object Pipeline {
 
@@ -115,30 +124,23 @@ object Pipeline {
 
   def run(spark: SparkSession, wides: Seq[DataFrame],
           factPath: String): RunStats = {
-    val (sheets, errors) = wides.zipWithIndex.foldLeft(
-      (Seq.empty[(DataFrame, Observation)], Seq.empty[String])) {
-      case ((ok, errs), (wide, i)) =>
-        try {
-          // the observe node counts RAW wide rows (pre-filter, pre-unpivot):
-          // the reference's "extracted" counter
-          val obs = Observation()
-          val recs = IdaTransform.rawWideToRecords(
-            wide.observe(obs, count(lit(1)).as("extracted")))
-          (ok :+ (recs, obs), errs)
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            (ok, errs :+ s"sheet $i: ${e.getMessage}")
-        }
+    val (errors, sheets) = wides.zipWithIndex.partitionMap { case (wide, i) =>
+      // the observe node counts RAW wide rows (pre-filter, pre-unpivot):
+      // the reference's "extracted" counter
+      val obs = Observation()
+      Try(IdaTransform.shapeSheet(
+          wide.observe(obs, count(lit(1)).as("extracted")), i) -> obs)
+        .toEither.left.map(e => s"sheet $i: ${e.getMessage}")
     }
     if (sheets.isEmpty)
       return RunStats(wides.size, 0L, 0L, 0L, errors)
 
     val recordsObs = Observation()
-    val records = sheets.map(_._1).reduce(_ unionByName _)      // U1
+    // not persisted here: IdaMart.fact caches the frame it is given
+    val records = IdaTransform.records(sheets.map(_._1).reduce(_ union _)) // U1
       .observe(recordsObs, count(lit(1)).as("transformed"),
         count_if(IdaMart.NaturalKeys.map(col(_).isNotNull).reduce(_ && _))
           .as("keyed"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // the fact build's dimension-key collect is the first action over the
       // cache: the one pass over the raw sources, which also fires every

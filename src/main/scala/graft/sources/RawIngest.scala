@@ -17,10 +17,12 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first shape, shared with the ODS reader ([[Ods]]):
   *  - the file becomes the raw grid both readers produce,
-  *    `(row_idx: long, cells: array<string>)`: each physical line, numbered
-  *    by `zipWithIndex` (deterministic for file-backed partitions — fixed
-  *    byte ranges) and split by [[splitQuoted]]. The line numbers drive the
-  *    forward-fill order (W3) and the `linha_origem` lineage column;
+  *    `(row_idx: long, cells: array<string>)`: each physical line of an
+  *    RDD text scan (`SparkContext.textFile`, which posts no SQL execution
+  *    while the frame is built), numbered by `zipWithIndex` (deterministic
+  *    for file-backed partitions — fixed byte ranges) and split by
+  *    [[splitQuoted]]. The line numbers drive the forward-fill order (W3)
+  *    and the `linha_origem` lineage column;
   *  - the header probe reads the first [[Probe.MaxScan]] lines on the
   *    driver through the Hadoop `FileSystem` and splits them with the same
   *    [[splitQuoted]], so the probe and the data share one split rule and
@@ -82,9 +84,9 @@ object RawIngest {
   private val delimCandidates: Seq[Char] = Seq(';', ',', '\t')
 
   /** The first [[Probe.MaxScan]] lines of the one file `path` names, read
-    * on the driver (no Spark job) the way `spark.read.textFile` reads
-    * them: UTF-8, `\n`/`\r\n`/`\r` line ends, decompressed by the codec
-    * the file's extension names. */
+    * on the driver (no Spark job) the way the data read,
+    * `SparkContext.textFile`, reads them: UTF-8, `\n`/`\r\n`/`\r` line
+    * ends, decompressed by the codec the file's extension names. */
   private def headLines(spark: SparkSession, path: String): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val file = requireSingleFile(spark, path)
@@ -159,7 +161,10 @@ object RawIngest {
     import spark.implicits._
     val head = headLines(spark, path)
     val d = detectDelimFromHead(head)
-    val grid = spark.read.textFile(path).rdd.zipWithIndex()
+    // an RDD text scan, not `spark.read.textFile(path).rdd`: that plans a
+    // SQL execution on the driver while the frame is built. One split per
+    // file below the file system's block size, so `zipWithIndex` runs no job
+    val grid = spark.sparkContext.textFile(path, minPartitions = 1).zipWithIndex()
       .map { case (line, i) => (i, splitQuoted(line, d)) }
       .toDF("row_idx", "cells")
     wideFrame(grid, head.map(splitQuoted(_, d)), path)

@@ -119,6 +119,55 @@ class PipelineSpec extends SparkSpec {
     assert(stats.loadedNew == 3)
   }
 
+  test("run: a sheet missing an id column is reported, not loaded as NULLs") {
+    for (id <- Seq("VARIAVEL", "SERVICO")) {
+      val factPath = Files.createTempDirectory("graft-pipe-noid").toString + "/fact"
+      val bad = wideSheet("c.ods", "OI S.A.").drop(id)
+      val stats = Pipeline.run(spark, Seq(wideSheet("a.ods", "CLARO S.A."), bad),
+        factPath)
+      assert(stats.errors.exists(_.startsWith("sheet 1")), s"$id: ${stats.errors}")
+      assert(stats.transformed == 3 && stats.loadedNew == 3, s"$id: $stats")
+    }
+  }
+
+  /** The stored fact's rows, sorted, without the load time and `drop`. */
+  private def storedRows(factPath: String, drop: String*): Seq[String] =
+    spark.read.parquet(factPath).drop("data_processamento" +: drop: _*)
+      .collect().map(_.toString).sorted.toSeq
+
+  test("run: sheets that share a file name fill within their own sheet") {
+    // two years of one WB service both name their sheet Telefonia_Fixa.csv;
+    // a fill over both by file name would give a's row 2 and b's row 0 the
+    // other sheet's group, whatever the order of the tied row indexes
+    def sheet(rows: (Long, String, String)*) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, grupo, v) =>
+        Row(i, grupo, "Taxa de Reabertas", v, "-", "STFC", "Telefonia_Fixa.csv")
+      }, 1), wideSchema)
+    val a = sheet((0L, "CLARO S.A.", "1"), (1L, null, "2"), (2L, null, "3"))
+    val b = sheet((0L, null, "4"), (1L, "TIM S.A.", "5"), (2L, null, "6"))
+    val dir = Files.createTempDirectory("graft-pipe-samename").toString
+    for ((name, sheets) <- Seq("a" -> Seq(a), "b" -> Seq(b), "ab" -> Seq(a, b)))
+      assert(Pipeline.run(spark, sheets, s"$dir/$name").errors.isEmpty)
+    // dimension keys are ranked per load, so rows compare by their hash
+    def rows(name: String) = storedRows(s"$dir/$name",
+      "tempo_key", "grupo_key", "servico_key", "variavel_key")
+    assert(rows("a").size == 3 && rows("b").size == 2) // b's row 0 has no group
+    assert(rows("ab") == (rows("a") ++ rows("b")).sorted)
+  }
+
+  test("run: the load's job count does not grow with the number of sheets") {
+    val groups = Seq("CLARO S.A.", "TIM S.A.", "OI S.A.", "VIVO S.A.")
+    def jobs(n: Int): Int = {
+      val factPath = Files.createTempDirectory("graft-pipe-jobs").toString + "/fact"
+      val sheets = groups.take(n).zipWithIndex.map { case (g, i) => wideSheet(s"s$i.ods", g) }
+      val (stats, jobs) = JobCount(spark)(Pipeline.run(spark, sheets, factPath))
+      assert(stats.errors.isEmpty && stats.loadedNew == 3 * n, s"$n sheets: $stats")
+      jobs
+    }
+    val (two, four) = (jobs(2), jobs(4))
+    assert(two == four, s"2 sheets: $two jobs, 4 sheets: $four jobs")
+  }
+
   test("run: transformed records the fact load drops whole are an error") {
     val factPath = Files.createTempDirectory("graft-pipe-nokey").toString + "/fact"
     val noServico = wideSheet("n.ods", "CLARO S.A.")
@@ -155,6 +204,25 @@ class PipelineSpec extends SparkSpec {
     assert(s1.extracted == 10 && s1.transformed == 25 && s1.loadedNew == 25)
     val s2 = Pipeline.lifecycle(spark, SparkEntry.fixturesDir, cfg, factPath)
     assert(s2.loadedNew == 0 && s2.errors.isEmpty, "sheet replay idempotent")
+  }
+
+  test("lifecycle: the stored fact does not depend on shuffle partitions " +
+    "or the advisory partition size (CSV, WB and ODS sheets)") {
+    val cfg = EngineConfig(anosAlvo = Seq(2023, 2024),
+      servicosAlvo = Seq("SMP", "SCM", "STFC"))
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    val facts = try {
+      for (parts <- Seq("1", "32"); advisory <- Seq("1m", "64m")) yield {
+        keys.zip(Seq(parts, advisory)).foreach { case (k, v) => spark.conf.set(k, v) }
+        val factPath = Files.createTempDirectory("graft-e2-inv").toString + "/fact"
+        val s = Pipeline.lifecycle(spark, SparkEntry.fixturesDir, cfg, factPath)
+        assert(s.resources == 4 && s.errors.isEmpty, s"$parts/$advisory: $s")
+        storedRows(factPath)
+      }
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    assert(facts.head.nonEmpty && facts.forall(_ == facts.head))
   }
 
   test("Session.confFor maps maxRetries to spark.task.maxFailures " +

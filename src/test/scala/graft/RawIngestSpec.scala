@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.GraftGlue
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.model.EngineConfig
@@ -68,12 +71,33 @@ class RawIngestSpec extends SparkSpec {
     assert(row.getAs[String]("2023-01") == "89,74")
   }
 
+  /** SQL executions started while `body` runs, counted like [[JobCount]]. */
+  private def sqlExecutions[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => started.incrementAndGet()
+        case _ =>
+      }
+    }
+    GraftGlue.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      GraftGlue.drainListeners(sc)
+      (result, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("building the wide frame starts no Spark job (CSV, quoted CSV, WB " +
     "sheet, ODS)") {
+    // nor, for the delimited reads, a SQL execution
     val wbSheet = s"$fixturesDir/ida_raw_2023_stfc.wb/Telefonia_Fixa.csv"
     for (p <- Seq(smp, SparkEntry.quotedFixturePath, wbSheet)) {
-      val (_, jobs) = JobCount(spark)(RawIngest.readIdaExport(spark, p))
-      assert(jobs == 0, s"$p: $jobs jobs")
+      val ((_, jobs), execs) =
+        sqlExecutions(JobCount(spark)(RawIngest.readIdaExport(spark, p)))
+      assert(jobs == 0 && execs == 0, s"$p: $jobs jobs, $execs SQL executions")
     }
     val (_, odsJobs) = JobCount(spark)(
       Ods.readIdaExport(spark, SparkEntry.odsFixturePath, "Telefonia_Fixa"))
