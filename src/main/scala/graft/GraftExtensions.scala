@@ -23,9 +23,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
     // whole-operator tier: the native as-of and keyed range joins'
-    // planner strategies
+    // planner strategies (IntervalNative serves point-in-interval joins
+    // too, with the point as both left bounds)
     ext.injectPlannerStrategy(_ => graft.plans.AsofNative.Strategy)
-    ext.injectPlannerStrategy(_ => graft.plans.RangeNative.Strategy)
     ext.injectPlannerStrategy(_ => graft.plans.IntervalNative.Strategy)
     ext.injectOptimizerRule(_ => GraftExtensions.SortLocalRelation)
   }

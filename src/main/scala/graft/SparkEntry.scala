@@ -62,12 +62,14 @@ object SparkEntry {
     * named parts) holding the service's `Telefonia_Fixa` sheet (preamble
     * junk + merged-cell blank GRUPO groups) plus a decoy `Notas` sheet
     * that MUST never be parsed (its header probe would fail loudly).
-    * The tuple is the lifecycle-oracle metadata for the mapped sheet. */
+    * The tuple is the lifecycle-oracle metadata for the mapped sheet; its
+    * lineage name is the workbook's, as [[graft.plans.Pipeline.lifecycle]]
+    * stores it. */
   val wbFixtureDir: String =
     new java.io.File(fixturesDir, "ida_raw_2023_stfc.wb").getPath
   val wbSheetFixture: (String, String, Int, Seq[String]) =
     (new java.io.File(wbFixtureDir, "Telefonia_Fixa.csv").getPath,
-      "Telefonia_Fixa.csv", 3, Seq("2023-01", "2023-02", "2023-03"))
+      "ida_raw_2023_stfc.wb", 3, Seq("2023-01", "2023-02", "2023-03"))
 
   /** The REAL ODS fixture: a genuine OpenDocument zip container
     * (mimetype + META-INF/manifest.xml + content.xml, written once by

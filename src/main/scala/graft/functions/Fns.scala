@@ -130,10 +130,6 @@ object Fns {
     element_at(m, monthCol.cast(IntegerType))
   }
 
-  /** F16: regex month-pattern probe (header detection,
-    * /root/reference/etl/etl_ida.py:270). */
-  def looksLikeMonth(c: Column): Column = c.rlike("^\\d{4}-\\d{2}")
-
   /** Canonical 2-dp money string for hashing (replaces the reference's
     * Python str(float) — internal consistency is what matters, SURVEY §7.3). */
   def money2(c: Column): Column = c.cast(DecimalType(18, 2)).cast(StringType)

@@ -190,8 +190,9 @@ private[graft] object JoinGates {
         |ORDER BY event_id, band_id""".stripMargin),
 
     // ----- NATIVE keyed range join (LogicalPlan -> Strategy -> SparkPlan,
-    // the AsofNative tier): per-type value bands joined by interval sweep
-    // within key co-partitions — one exchange per side, ZERO interval
+    // the AsofNative tier): per-type value bands joined by the
+    // IntervalNative sweep, each point a [value, value] interval, within
+    // key co-partitions — one exchange per side, ZERO interval
     // replication (the encodable j_range shape explodes intervals into
     // every bucket they span)
     Gate("j_range_native", ((s, dir) => {
@@ -205,11 +206,12 @@ private[graft] object JoinGates {
       val bands = types.crossJoin(
         (0 until 12).map(i => (i.toLong, i * 20.0, i * 20.0 + 30.0))
           .toDF("band_id", "lo", "hi"))
-      graft.plans.RangeNative.join(
+      graft.plans.IntervalNative.join(
           Tables.events(s, dir).filter(col("event_type").isNotNull)
             .select(col("event_id"), col("event_type"), col("value")),
-          bands, keys = Seq("event_type"), pointCol = "value",
-          loCol = "lo", hiCol = "hi", payload = Seq("band_id"))
+          bands, keys = Seq("event_type"), lLoCol = "value",
+          lHiCol = "value", rLoCol = "lo", rHiCol = "hi",
+          payload = Seq("band_id"))
         .select(col("event_id"), col("band_id"), col("value"))
         .orderBy(col("event_id"), col("band_id"))
     }),
@@ -230,7 +232,7 @@ private[graft] object JoinGates {
     // the broadcast predicate plan (ZERO exchange on the events side —
     // strictly better than the sweep's one-per-side); a big interval
     // side would take the native node (both plans spec-asserted in
-    // RangeNativeSpec). Same results either way — same oracle as
+    // IntervalNativeSpec). Same results either way — same oracle as
     // j_range_native
     Gate("j_range_auto", ((s, dir) => {
       import s.implicits._
@@ -239,11 +241,12 @@ private[graft] object JoinGates {
       val bands = types.crossJoin(
         (0 until 12).map(i => (i.toLong, i * 20.0, i * 20.0 + 30.0))
           .toDF("band_id", "lo", "hi"))
-      graft.plans.RangeNative.autoJoin(
+      graft.plans.IntervalNative.autoJoin(
           Tables.events(s, dir).filter(col("event_type").isNotNull)
             .select(col("event_id"), col("event_type"), col("value")),
-          bands, keys = Seq("event_type"), pointCol = "value",
-          loCol = "lo", hiCol = "hi", payload = Seq("band_id"))
+          bands, keys = Seq("event_type"), lLoCol = "value",
+          lHiCol = "value", rLoCol = "lo", rHiCol = "hi",
+          payload = Seq("band_id"))
         .select(col("event_id"), col("band_id"), col("value"))
         .orderBy(col("event_id"), col("band_id"))
     }),
@@ -273,12 +276,12 @@ private[graft] object JoinGates {
       val bands = types.crossJoin(
         (0 until 12).map(i => (i.toLong, i * 20.0, i * 20.0 + 30.0))
           .toDF("band_id", "lo", "hi"))
-      graft.plans.RangeNative.join(
+      graft.plans.IntervalNative.join(
           Tables.events(s, dir).filter(col("event_type").isNotNull)
             .select(col("event_id"), col("event_type"), col("value")),
-          bands, keys = Seq("event_type"), pointCol = "value",
-          loCol = "lo", hiCol = "hi", payload = Seq("band_id"),
-          outer = true)
+          bands, keys = Seq("event_type"), lLoCol = "value",
+          lHiCol = "value", rLoCol = "lo", rHiCol = "hi",
+          payload = Seq("band_id"), outer = true)
         .select(col("event_id"), col("band_id"), col("value"))
         .orderBy(col("event_id"), col("band_id"))
     }),

@@ -114,7 +114,6 @@ object Drift {
     val wr = Window.partitionBy(col("rk"))
     val wc = Window.partitionBy(col("ck"))
     val wAll = Window.partitionBy()
-    def d38(c: Column): Column = c.cast("decimal(38,0)")
     val withTotals = cells.select(col("rk"), col("ck"), col("o"),
         sum(col("o")).over(wr).as("r"),
         sum(col("o")).over(wc).as("c"),

@@ -200,10 +200,10 @@ object AsofNative {
     org.apache.spark.sql.graft.GraftSql.ofRows(left.sparkSession, node)
   }
 
-  /** STATS-DRIVEN operator selection — completes the native tier's
-    * `autoJoin` trio ([[RangeNative.autoJoin]] / [[IntervalNative.autoJoin]],
-    * r13 judge ask 6). As-of is the one shape whose broadcast arm CANNOT
-    * be a plain predicate join: "latest right row per left row" needs an
+  /** STATS-DRIVEN operator selection — the native tier's other `autoJoin`
+    * next to [[IntervalNative.autoJoin]] (ranges and points). As-of is
+    * the one shape whose broadcast arm CANNOT be a plain predicate join:
+    * "latest right row per left row" needs an
     * argmax after the join, and a window/groupBy over the joined frame
     * would re-shuffle the full left side — strictly WORSE than the sweep.
     * The genuinely exchange-free arm instead reshapes the small side: one

@@ -12,17 +12,23 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.{DoubleType, LongType, TimestampType}
 
-/** NATIVE keyed interval × interval overlap join — the third operator on
+/** NATIVE keyed interval × interval overlap join — the second operator on
   * the [[AsofNative]] whole-operator tier (custom `LogicalPlan` ->
-  * `Strategy` -> physical `SparkPlan`), completing the range-join family
-  * next to [[RangeNative]]'s point-in-interval sweep.
+  * `Strategy` -> physical `SparkPlan`), and the tier's one range join.
   *
-  * The encodable shape ([[graft.operators.RangeJoin.intervalOverlap]])
-  * replicates BOTH sides into fixed-width cells and needs an ownership
-  * rule so each overlapping pair is counted once; its cost carries the
+  * A keyed POINT-in-interval join is the same join: pass the point column
+  * as both left bounds (`lLoCol = lHiCol = point`). The left interval
+  * `[p, p]` overlaps `[lo, hi]` iff `lo <= p <= hi`, a null point is a
+  * null bound (never matches; null-padded under LEFT OUTER), and the plan
+  * is the same one exchange and one sort per side.
+  *
+  * The encodable shapes ([[graft.operators.RangeJoin.intervalOverlap]],
+  * [[graft.operators.RangeJoin.pointInInterval]]) replicate rows into
+  * fixed-width cells, and the overlap shape needs an ownership rule so
+  * each overlapping pair is counted once; their cost carries the
   * cell-replication factor of the wider side. With an equi-key (campaign
-  * vs session per user, maintenance window vs incident per device — the
-  * common production case) none of that is necessary:
+  * vs session per user, value bands per category — the common production
+  * case) none of that is necessary:
   *
   *  - `requiredChildDistribution`: both sides clustered on the equi-key —
   *    ONE exchange per side (none for a side already hash-partitioned on
@@ -126,7 +132,7 @@ object IntervalNative {
       val isOuter = outer
       // one comparator for the shared bound type, chosen ONCE from the
       // declared type (long-typed bounds must not round through doubles
-      // past 2^53 — the RangeNative rule)
+      // past 2^53)
       val isLongCmp = lLoE.dataType match {
         case LongType | TimestampType => true
         case DoubleType => false
@@ -169,8 +175,14 @@ object IntervalNative {
           private var activeL = heap() // (l_hi, full left row)
           private var activeR = heap() // (r_hi, projected payload row)
           private val out = mutable.Queue.empty[InternalRow]
+          // each side's head row with its key and bounds, evaluated once
+          // when the row is pulled
           private var lHead: InternalRow = _
+          private var lKey: InternalRow = _
+          private var lB: (Any, Any) = _
           private var rHead: InternalRow = _
+          private var rKey: InternalRow = _
+          private var rB: (Any, Any) = _
           private var curKey: InternalRow = _
           private var flushed = false
 
@@ -186,7 +198,7 @@ object IntervalNative {
           private def newKey(k: InternalRow): Unit = {
             if (curKey == null || keyOrd.compare(curKey, k) != 0) {
               drainL(); activeR.clear()
-              curKey = k.copy()
+              curKey = k
             }
           }
 
@@ -202,8 +214,14 @@ object IntervalNative {
           private def fill(): Unit = {
             while (out.isEmpty && (lHead != null || rHead != null ||
                 lIt.hasNext || rIt.hasNext)) {
-              if (lHead == null && lIt.hasNext) lHead = lIt.next().copy()
-              if (rHead == null && rIt.hasNext) rHead = rIt.next().copy()
+              if (lHead == null && lIt.hasNext) {
+                lHead = lIt.next().copy()
+                lKey = lKeyProj(lHead).copy(); lB = bounds(lHead, lLoB, lHiB)
+              }
+              if (rHead == null && rIt.hasNext) {
+                rHead = rIt.next().copy()
+                rKey = rKeyProj(rHead).copy(); rB = bounds(rHead, rLoB, rHiB)
+              }
               // pick the side whose head sweeps next: key order first,
               // then lo order (tie -> either; each pair still emitted
               // exactly once, by the interval processed second)
@@ -211,15 +229,11 @@ object IntervalNative {
                 if (lHead == null) false
                 else if (rHead == null) true
                 else {
-                  val kc = keyOrd.compare(lKeyProj(lHead), rKeyProj(rHead))
+                  val kc = keyOrd.compare(lKey, rKey)
                   if (kc != 0) kc < 0
-                  else {
-                    val lb = bounds(lHead, lLoB, lHiB)
-                    val rb = bounds(rHead, rLoB, rHiB)
-                    if (lb == null) true // degenerate: consume + drop now
-                    else if (rb == null) false
-                    else cmp(lb._1, rb._1) <= 0
-                  }
+                  else if (lB == null) true // degenerate: consume + drop now
+                  else if (rB == null) false
+                  else cmp(lB._1, rB._1) <= 0
                 }
               // State discipline (r12 advisor): (a) evict the ARRIVING
               // side's own active set against this lo too — future
@@ -236,20 +250,18 @@ object IntervalNative {
               // stream runs dry under a heavy key, instead of degrading
               // to O(key-group size).
               if (takeLeft) {
-                newKey(lKeyProj(lHead))
-                val b = bounds(lHead, lLoB, lHiB)
-                if (b != null) {
-                  while (activeR.nonEmpty && cmp(activeR.head.hi, b._1) < 0)
+                newKey(lKey)
+                if (lB != null) {
+                  while (activeR.nonEmpty && cmp(activeR.head.hi, lB._1) < 0)
                     activeR.dequeue()
-                  while (activeL.nonEmpty && cmp(activeL.head.hi, b._1) < 0)
+                  while (activeL.nonEmpty && cmp(activeL.head.hi, lB._1) < 0)
                     emitUnmatched(activeL.dequeue())
                   val paired = activeR.nonEmpty
                   activeR.foreach { e =>
                     out.enqueue(outProj(joined(lHead, e.row)).copy())
                   }
-                  if (rHead != null &&
-                      keyOrd.compare(lKeyProj(lHead), rKeyProj(rHead)) == 0)
-                    activeL.enqueue(new ActiveEntry(b._2, lHead, paired))
+                  if (rHead != null && keyOrd.compare(lKey, rKey) == 0)
+                    activeL.enqueue(new ActiveEntry(lB._2, lHead, paired))
                   else if (isOuter && !paired)
                     out.enqueue(outProj(joined(lHead, nullPayload)).copy())
                 } else if (isOuter) {
@@ -260,21 +272,19 @@ object IntervalNative {
                 }
                 lHead = null
               } else if (rHead != null) {
-                newKey(rKeyProj(rHead))
-                val b = bounds(rHead, rLoB, rHiB)
-                if (b != null) {
-                  while (activeL.nonEmpty && cmp(activeL.head.hi, b._1) < 0)
+                newKey(rKey)
+                if (rB != null) {
+                  while (activeL.nonEmpty && cmp(activeL.head.hi, rB._1) < 0)
                     emitUnmatched(activeL.dequeue())
-                  while (activeR.nonEmpty && cmp(activeR.head.hi, b._1) < 0)
+                  while (activeR.nonEmpty && cmp(activeR.head.hi, rB._1) < 0)
                     activeR.dequeue()
                   val pRow = payloadProj(rHead).copy()
                   activeL.foreach { e =>
                     out.enqueue(outProj(joined(e.row, pRow)).copy())
                     e.matched = true
                   }
-                  if (lHead != null &&
-                      keyOrd.compare(rKeyProj(rHead), lKeyProj(lHead)) == 0)
-                    activeR.enqueue(new ActiveEntry(b._2, pRow, true))
+                  if (lHead != null && keyOrd.compare(rKey, lKey) == 0)
+                    activeR.enqueue(new ActiveEntry(rB._2, pRow, true))
                 }
                 rHead = null
               }
@@ -329,10 +339,12 @@ object IntervalNative {
     org.apache.spark.sql.graft.GraftSql.ofRows(left.sparkSession, node)
   }
 
-  /** STATS-DRIVEN operator selection — the [[RangeNative.autoJoin]] rule
-    * for interval overlap: a right side under the broadcast threshold
-    * takes the broadcast predicate join (no exchange, no sort on the
-    * left), anything larger takes the native plane sweep. The predicate
+  /** STATS-DRIVEN operator selection: a right side under the broadcast
+    * threshold takes the broadcast predicate join (no exchange, no sort on
+    * the left), anything larger takes the native plane sweep. A custom
+    * `SparkPlan` cannot be re-planned mid-query by AQE, so the pick is made
+    * here, at plan time, on the same size estimate AQE's join demotion
+    * reads. The predicate
     * path reproduces the sweep's documented semantics exactly: null-safe
     * key equality (null keys group), and BOTH sides' intervals must be
     * non-empty (`lo <= hi` joins the condition — the raw overlap
@@ -345,12 +357,12 @@ object IntervalNative {
     val thresh = conf.autoBroadcastJoinThreshold
     val rightSize = right.queryExecution.optimizedPlan.stats.sizeInBytes
     if (thresh > 0 && rightSize <= thresh) {
-      // rename EVERY right column behind a __r_ prefix (the RangeNative
-      // .autoJoin rule): interval joins naturally carry the SAME lo/hi
-      // names on both sides (the self-enrichment shape the native arm
-      // supports via fresh exprIds), which would make every bound
-      // reference ambiguous — and only when the input is small enough to
-      // broadcast. Also mirror the native arm's payload-collision assert.
+      // rename EVERY right column behind a __r_ prefix: interval joins
+      // naturally carry the SAME lo/hi names on both sides (the
+      // self-enrichment shape the native arm supports via fresh exprIds),
+      // which would make every bound reference ambiguous — and only when
+      // the input is small enough to broadcast. Also mirror the native
+      // arm's payload-collision assert.
       payload.foreach(p => require(!left.columns.contains(p),
         s"IntervalNative.autoJoin: payload '$p' collides with a left column"))
       val rCols = (keys ++ Seq(rLoCol, rHiCol) ++ payload).distinct

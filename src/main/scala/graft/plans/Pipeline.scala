@@ -61,14 +61,18 @@ object Pipeline {
     val resources = graft.sources.Catalog.discover(resourcesDir, cfg)
     // plain files read directly; WB workbook directories and real ODS zip
     // containers read only the service's mapped sheet (reference
-    // SHEET_MAPPING semantics, etl_ida.py:171-176)
+    // SHEET_MAPPING semantics, etl_ida.py:171-176). Every row's lineage is
+    // its resource's file name, as the reference records per downloaded
+    // resource: a WB sheet is named by its workbook, not by the sheet file
+    // two workbooks of one service share
     val wides = resources.map { r =>
-      r.formato match {
+      val wide = r.formato match {
         case "ODS" => graft.sources.Ods.readIdaExport(spark, r.url,
           graft.sources.Catalog.mappedSheet(r.servico))
         case _ => graft.sources.RawIngest.readIdaExport(spark,
           graft.sources.Catalog.resolveSheet(r))
       }
+      wide.withColumn("ARQUIVO_ORIGEM", lit(r.id))
     }
     run(spark, wides, factPath)
   }

@@ -54,6 +54,23 @@ class IdaMartSpec extends SparkSpec {
     assert(out.find(_.name == "ano").exists(
       _.dataType == org.apache.spark.sql.types.IntegerType))
     assert(out.length == expected.length + 1)
+
+    // the dimensions: exactly their DDL mirror's column names and types
+    import graft.plans.MartSchema._
+    def cols(st: org.apache.spark.sql.types.StructType) =
+      st.fields.toSeq.map(f => f.name -> f.dataType)
+    val recs = IdaMart.records(spark, sf0001)
+    Seq(IdaMart.dimTempo(recs) -> dimTempoSchema,
+        IdaMart.dimGrupo(recs) -> dimGrupoSchema,
+        IdaMart.dimServico(recs) -> dimServicoSchema,
+        seedDimVariavel(spark) -> dimVariavelSchema).foreach { case (dim, ddl) =>
+      assert(cols(dim.schema) == cols(ddl), s"${dim.schema} vs $ddl")
+    }
+    // the derived dim_variavel carries 5 of the 9 columns (the reference
+    // seeds the other 4); each one it carries matches the mirror
+    val derived = cols(IdaMart.dimVariavel(recs).schema)
+    assert(derived.size == 5 && derived.forall(c => cols(dimVariavelSchema).contains(c)),
+      s"$derived vs ${cols(dimVariavelSchema)}")
   }
 
   test("data_processamento: one non-null processing time per fact build (F18)") {

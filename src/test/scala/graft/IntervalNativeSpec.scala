@@ -9,7 +9,8 @@ import graft.plans.IntervalNative
   * interleaved/nested/touching intervals, exactly-once pair emission
   * (including equal-`lo` ties), null/empty-interval semantics, and the
   * declared-distribution plan shape (one exchange per side, no
-  * replication). */
+  * replication). The same checks cover the point form, a keyed
+  * point-in-interval join with the point column as both left bounds. */
 class IntervalNativeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -250,12 +251,12 @@ class IntervalNativeSpec extends SparkSpec {
         "lo", "hi", "lo", "hi", Seq("r_id"))
       .select($"l_id", $"r_id").as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 10L)), s"got $got")
-    // and the range form with a left column named like a right bound
+    // and the point form with a left column named like a right bound
     val pts = Seq(("a", 1L, 7.0, 99.0), ("a", 2L, 50.0, 99.0))
       .toDF("k", "p_id", "v", "lo") // left 'lo' collides with right 'lo'
     val iv = Seq(("a", 20L, 5.0, 10.0)).toDF("k", "i_id", "lo", "hi")
-    val gotR = graft.plans.RangeNative.autoJoin(pts, iv, Seq("k"),
-        "v", "lo", "hi", Seq("i_id"))
+    val gotR = IntervalNative.autoJoin(pts, iv, Seq("k"),
+        "v", "v", "lo", "hi", Seq("i_id"))
       .select($"p_id", $"i_id").as[(Long, Long)].collect().toSet
     assert(gotR == Set((1L, 20L)), s"got $gotR")
   }
@@ -273,5 +274,172 @@ class IntervalNativeSpec extends SparkSpec {
       .select($"l_id", $"r_id").as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 10L)),
       s"big+4 touches; big+5 must not (double would round it to big+4): $got")
+  }
+
+  // ----- point form: the point column as both left bounds -----
+
+  private def points = Seq(
+    ("a", 1L, 5.0), ("a", 2L, 12.0), ("a", 3L, 16.0), ("a", 4L, 25.0),
+    ("a", 5L, 35.0), ("a", 6L, 95.0), ("a", 7L, 101.0),
+    ("b", 8L, 12.0), ("b", 9L, 50.0)
+  ).toDF("k", "pid", "p")
+
+  // interleaved + nested + point-width intervals, plus a key with
+  // different bands — the active-set eviction order matters here
+  private def bands = Seq(
+    ("a", 10L, 0.0, 100.0), ("a", 11L, 10.0, 20.0), ("a", 12L, 15.0, 90.0),
+    ("a", 13L, 30.0, 40.0), ("a", 14L, 12.0, 12.0),
+    ("b", 15L, 11.0, 13.0), ("b", 16L, 60.0, 70.0)
+  ).toDF("k", "iid", "lo", "hi")
+
+  private def pointPairs = IntervalNative.join(points, bands, keys = Seq("k"),
+    lLoCol = "p", lHiCol = "p", rLoCol = "lo", rHiCol = "hi",
+    payload = Seq("iid"))
+    .select($"pid", $"iid").as[(Long, Long)].collect().toSet
+
+  test("point form: matches a brute-force keyed inequality join") {
+    val want = points.as("l").join(bands.as("r"),
+        $"l.k" === $"r.k" && $"p" >= $"lo" && $"p" <= $"hi")
+      .select($"pid", $"iid").as[(Long, Long)].collect().toSet
+    val got = pointPairs
+    assert(got == want && want.nonEmpty)
+    // spot checks: nested interval matched, point-width interval matched,
+    // cross-key band NOT matched
+    assert(got.contains((2L, 14L)) && got.contains((3L, 11L)))
+    assert(!got.contains((8L, 11L)), "'b' point must not hit an 'a' band")
+  }
+
+  test("point form: parity with the bucketed RangeJoin per key") {
+    val got = pointPairs
+    for (key <- Seq("a", "b")) {
+      val enc = RangeJoin.pointInInterval(
+          points.filter($"k" === key), bands.filter($"k" === key),
+          pointCol = "p", loCol = "lo", hiCol = "hi", bucketWidth = 7.0)
+        .select($"pid", $"iid").as[(Long, Long)].collect().toSet
+      val ids = points.filter($"k" === key).select($"pid").as[Long]
+        .collect().toSet
+      val nat = got.filter(p => ids.contains(p._1))
+      assert(nat == enc, s"key $key: native $nat vs encodable $enc")
+    }
+  }
+
+  test("point form LEFT OUTER: unmatched and null points padded once") {
+    val withNull = points.unionByName(
+      Seq(("a", 20L)).toDF("k", "pid").withColumn("p", lit(null).cast("double")))
+    val got = IntervalNative.join(withNull, bands, keys = Seq("k"),
+        "p", "p", "lo", "hi", Seq("iid"), outer = true)
+      .select($"pid", $"iid").as[(Long, Option[Long])].collect().toList
+    val want = withNull.as("l").join(bands.as("r"),
+        $"l.k" === $"r.k" && $"p" >= $"lo" && $"p" <= $"hi", "left_outer")
+      .select($"pid", $"iid").as[(Long, Option[Long])].collect().toList
+    assert(got.sorted == want.sorted)
+    // pid 7 (101.0) is past every 'a' band: padded; null point padded
+    assert(got.contains((7L, None)) && got.contains((20L, None)))
+    assert(got.count(_._1 == 7L) == 1)
+  }
+
+  test("point form autoJoin: broadcast when small, sweep at threshold -1") {
+    val auto = IntervalNative.autoJoin(points, bands, Seq("k"),
+      "p", "p", "lo", "hi", Seq("iid"))
+    val planSmall = auto.queryExecution.executedPlan.toString
+    assert(planSmall.contains("Broadcast") &&
+      !planSmall.contains("IntervalJoin "), planSmall)
+    val got = pointPairs
+    assert(auto.select($"pid", $"iid").as[(Long, Long)].collect().toSet == got)
+    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val native = IntervalNative.autoJoin(points, bands, Seq("k"),
+        "p", "p", "lo", "hi", Seq("iid"))
+      assert(native.queryExecution.executedPlan.toString
+        .contains("IntervalJoin "))
+      assert(native.select($"pid", $"iid").as[(Long, Long)].collect().toSet
+        == got)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    // outer parity through the broadcast path: null-padded rows match join()
+    val autoOuter = IntervalNative.autoJoin(points, bands, Seq("k"),
+        "p", "p", "lo", "hi", Seq("iid"), outer = true)
+      .select($"pid", $"iid").as[(Long, Option[Long])].collect().toList
+    val nativeOuter = IntervalNative.join(points, bands, Seq("k"),
+        "p", "p", "lo", "hi", Seq("iid"), outer = true)
+      .select($"pid", $"iid").as[(Long, Option[Long])].collect().toList
+    assert(autoOuter.sorted == nativeOuter.sorted)
+  }
+
+  test("point form: null points and bounds never match; null keys pair") {
+    val p = Seq((Option("a"), 1L, Option(12.0)), (Option("a"), 2L, None),
+      (Option.empty[String], 3L, Option(12.0)))
+      .toDF("k", "pid", "p")
+    val i = Seq((Option("a"), 10L, Option(10.0), Option(20.0)),
+      (Option("a"), 11L, Option.empty[Double], Option(20.0)),
+      (Option.empty[String], 12L, Option(10.0), Option(20.0)))
+      .toDF("k", "iid", "lo", "hi")
+    val r = IntervalNative.join(p, i, Seq("k"), "p", "p", "lo", "hi",
+        Seq("iid"))
+      .select($"pid", $"iid").as[(Long, Long)].collect().toSet
+    assert(r == Set((1L, 10L), (3L, 12L)),
+      s"expected null-point and null-lo to drop, null keys to pair: $r")
+  }
+
+  test("point form plan: IntervalJoin, one hash exchange per side") {
+    val df = IntervalNative.join(points, bands, Seq("k"),
+      "p", "p", "lo", "hi", Seq("iid"))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("IntervalJoin "), plan)
+    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 2, plan)
+    assert(!plan.toLowerCase.contains("explode"), plan)
+    // an aggregation output already clustered on the key joins with only
+    // the interval side exchanged
+    val preParts = points.groupBy($"k").agg(max($"p").as("p"))
+    val df2 = IntervalNative.join(preParts, bands, Seq("k"),
+      "p", "p", "lo", "hi", Seq("iid"))
+    val plan2 = df2.queryExecution.executedPlan.toString
+    assert("Exchange hashpartitioning".r.findAllIn(plan2).size == 2,
+      s"agg shuffle + right side only — the left side must reuse the " +
+        s"aggregation's partitioning:\n$plan2")
+    df2.collect() // and it executes
+  }
+
+  test("point form: builder rejects mixed bound types, payload clashes") {
+    intercept[IllegalArgumentException] {
+      IntervalNative.join(points, bands.withColumn("lo", $"lo".cast("int")),
+        Seq("k"), "p", "p", "lo", "hi", Seq("iid"))
+    }
+    intercept[IllegalArgumentException] {
+      IntervalNative.join(points, bands.withColumnRenamed("iid", "pid"),
+        Seq("k"), "p", "p", "lo", "hi", Seq("pid"))
+    }
+  }
+
+  test("point form randomized parity with Spark's inequality join") {
+    // null keys, points and bounds, and inverted (lo > hi) intervals
+    val rnd = new scala.util.Random(42L)
+    def maybe[T](v: T): Option[T] = if (rnd.nextInt(20) == 0) None else Some(v)
+    val keys = Seq("a", "b", "c", "d")
+    def key = maybe(keys(rnd.nextInt(keys.size)))
+    val pts = (0 until 3000).map(i =>
+      (key, i.toLong, maybe(rnd.nextInt(1000).toDouble)))
+      .toDF("k", "pid", "p")
+    val ivs = (0 until 400).map { i =>
+      val lo = rnd.nextInt(1000)
+      (key, 10000L + i, maybe(lo.toDouble),
+        maybe((lo + rnd.nextInt(100) - 20).toDouble)) // len < 0: inverted
+    }.toDF("k", "iid", "lo", "hi")
+    for (tpe <- Seq("double", "long"); outer <- Seq(false, true);
+         auto <- Seq(false, true)) {
+      val l = pts.withColumn("p", $"p".cast(tpe))
+      val r = ivs.withColumn("lo", $"lo".cast(tpe)).withColumn("hi", $"hi".cast(tpe))
+      val build = if (auto) IntervalNative.autoJoin _ else IntervalNative.join _
+      val got = build(l, r, Seq("k"), "p", "p", "lo", "hi", Seq("iid"), outer)
+        .select($"pid", $"iid").as[(Long, Option[Long])].collect().toList
+      val want = l.as("l").join(r.as("r"),
+          $"l.k" <=> $"r.k" && $"p" >= $"lo" && $"p" <= $"hi",
+          if (outer) "left_outer" else "inner")
+        .select($"pid", $"iid").as[(Long, Option[Long])].collect().toList
+      val tag = s"$tpe outer=$outer auto=$auto"
+      assert(got.size == want.size, s"$tag: ${got.size} rows vs ${want.size}")
+      assert(got.sorted == want.sorted, tag)
+      assert(want.count(_._2.nonEmpty) > 5000, s"$tag: degenerate generator")
+    }
   }
 }

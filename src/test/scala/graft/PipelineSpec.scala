@@ -206,6 +206,29 @@ class PipelineSpec extends SparkSpec {
     assert(s2.loadedNew == 0 && s2.errors.isEmpty, "sheet replay idempotent")
   }
 
+  test("lifecycle: each WB workbook's rows carry that workbook's name") {
+    // two years of one service: both workbooks hold a Telefonia_Fixa.csv
+    // sheet, each with its own month grid
+    val dir = Files.createTempDirectory("graft-e2-wbs")
+    for ((year, months) <- Seq(2023 -> Seq("01", "02", "03"), 2024 -> Seq("01", "02"))) {
+      val wb = Files.createDirectories(dir.resolve(s"ida_raw_${year}_stfc.wb"))
+      val cells = months.indices.map(i => s"${i + 1},5").mkString(";")
+      Files.write(wb.resolve("Telefonia_Fixa.csv"), Seq(
+        "Anatel - IDA;;;;;",
+        "GRUPO ECONOMICO;VARIAVEL;SERVICO;" + months.map(m => s"$year-$m").mkString(";"),
+        s"CLARO S.A.;Taxa de Reabertas;STFC;$cells",
+        s";Taxa de Respondidas em 5 dias Úteis;STFC;$cells").asJava)
+    }
+    val factPath = dir.resolve("fact").toString
+    val cfg = EngineConfig(anosAlvo = Seq(2023, 2024), servicosAlvo = Seq("STFC"))
+    val stats = Pipeline.lifecycle(spark, dir.toString, cfg, factPath)
+    assert(stats.resources == 2 && stats.errors.isEmpty, s"$stats")
+    val byYear = spark.read.parquet(factPath).groupBy("ano", "arquivo_origem")
+      .count().collect().map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(byYear == Map((2023, "ida_raw_2023_stfc.wb") -> 6L,
+      (2024, "ida_raw_2024_stfc.wb") -> 4L), s"$byYear")
+  }
+
   test("lifecycle: the stored fact does not depend on shuffle partitions " +
     "or the advisory partition size (CSV, WB and ODS sheets)") {
     val cfg = EngineConfig(anosAlvo = Seq(2023, 2024),
