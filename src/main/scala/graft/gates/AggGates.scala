@@ -428,10 +428,10 @@ private[graft] object AggGates {
 
     // ----- Pearson chi-squared independence test, EXACT: each cell term
     // restated over the common denominator as (O*N - R*C)^2 * 10^6 div
-    // (N*R*C) in DECIMAL(38,0) integral arithmetic — bit-identical on any
-    // engine by construction (the a_ks_test/a_welch_ttest discipline for
-    // CATEGORICAL drift). One corpus-wide count aggregate; all remaining
-    // math on the category-bounded cell grid. Critical value is
+    // (N*R*C) in integer arithmetic (Drift.contingency) — bit-identical on
+    // any engine by construction (the a_ks_test/a_welch_ttest discipline
+    // for CATEGORICAL drift). One corpus-wide count aggregate, then the
+    // driver computes the category-bounded cell grid. Critical value is
     // chi2(.05, dof=8) for the 5x3 grid, in micro-units
     Gate("a_chi2_test", ((s, dir) =>
       graft.operators.Drift.chi2Test(
@@ -444,8 +444,8 @@ private[graft] object AggGates {
         .orderBy(col("rk"), col("ck"))),
       // all-integer micro-unit restatement: HUGEINT products, one `//`
       // integral division per cell, window SUMs cast back to BIGINT (the
-      // a_ks_test HUGEINT rule) — identical to Spark's DECIMAL(38,0)
-      // `div` arithmetic by construction
+      // a_ks_test HUGEINT rule) — identical to the engine kernel's
+      // integer `div` arithmetic by construction
       """WITH base AS (
         |  SELECT event_type AS rk,
         |    CASE WHEN value < 100 THEN 'low'

@@ -851,7 +851,8 @@ private[graft] object MartGates {
     // hitters, global stats — off ONE scan of orders via a single
     // grouping-sets aggregation (Expand feeds partial aggs of bounded
     // cardinality, so map-side combine collapses it before the one
-    // shuffle; scan IO paid once — the first call a curation user makes)
+    // shuffle; scan IO paid once — the first call a curation user makes),
+    // whose bounded cells the driver turns into every section
     Gate("profile_all", ((s, dir) =>
       graft.operators.Profile.profileAll(Tables.orders(s, dir),
         priceCol = "o_totalprice", catCol = "o_orderpriority",

@@ -1120,9 +1120,8 @@ private[graft] object StoreGates {
     // rewrite-and-swap (Sinks.compactFact). The gate is content identity
     // through the rewrite; ScaleSpec asserts the file-count collapse
     Gate("s_compaction", ((s, dir) => {
-      val deduped = IdaMart.firstWinsDedup(
-        IdaMart.hashRecords(IdaMart.records(s, dir)),
-        Seq("hash_registro"), Seq("arquivo_origem", "linha_origem"))
+      val deduped = IdaMart.firstLoadWins(
+        IdaMart.hashRecords(IdaMart.records(s, dir)))
       val factDir = scratchDir("compact-store") + "/fact"
       (0 until 2).foreach { i =>
         graft.sources.Sinks.writeFactPartitioned(

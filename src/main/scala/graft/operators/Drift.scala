@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.collection.mutable
 
 /** Exact distribution-drift tests between two samples of one numeric
   * column — the monitoring primitive a feature store runs per feature per
@@ -72,123 +75,159 @@ object Drift {
       lit("broken; pre-aggregate or subsample the comparison"))))
       .otherwise(ksNum)
 
+  /** The most cells a contingency table may have: its counts are
+    * collected to the driver, so a key that is not categorical must fail
+    * loudly rather than pull a corpus-sized aggregate. */
+  val MaxCells = 10000
+
+  /** One cell of a completed contingency grid: observed count, expected
+    * count and chi-squared term, both in micro-units. */
+  final case class Cell[R, C](rk: R, ck: C, o: Long, eMicro: Long,
+                              termMicro: Long)
+
+  /** A completed grid and its totals: `n` observations in `nr` row by `nc`
+    * column categories, `chi2Micro` the sum of the cell terms. */
+  final case class Contingency[R, C](cells: Seq[Cell[R, C]], n: Long,
+                                     nr: Long, nc: Long, chi2Micro: Long) {
+    def dof: Long = (nr - 1) * (nc - 1)
+
+    /** Cramér's `chi2_micro div (n * (min(nr, nc) - 1))`: none when a side
+      * has fewer than two categories (an empty grid has none). */
+    def v2Micro: Option[Long] = {
+      val k = math.min(nr, nc)
+      Option.when(k > 1)(chi2Micro / (n * (k - 1)))
+    }
+  }
+
+  /** The exact Pearson chi-squared kernel (Pearson 1900) over the observed
+    * `(rk, ck, o)` cells of a contingency table, the one place the engine
+    * computes a chi-squared test of independence. The table is
+    * completed to the full `rows x cols` grid (absent combinations count
+    * 0), so every expected-frequency term contributes. Each cell's
+    * `(O - E)^2 / E` is restated over the common denominator as
+    * `(o*n - r*c)^2 * 10^6 div (n*r*c)` with r, c and n the row, column
+    * and grand totals, and `e_micro = r*c*10^6 div n`; a cell of an empty
+    * row or column has term 0. The arithmetic is `BigInt`, and every
+    * quotient is non-negative, so the truncating division equals Spark's
+    * `DECIMAL(38,0) div` and DuckDB's HUGEINT `//`: the statistic is
+    * bit-identical on any engine by construction, with no libm and no
+    * carrier ties. The numerator is at most `n^4 * 10^6`, which fits 38
+    * digits (the oracle's HUGEINT) only for n <= 10^7, so a larger n fails
+    * here rather than let the two sides drift apart. Keys are told apart
+    * by their `==`. */
+  def contingency[R, C](observed: Seq[(R, C, Long)],
+                        who: String): Contingency[R, C] = {
+    val rows = observed.map(_._1).distinct
+    val cols = observed.map(_._2).distinct
+    val obs = observed.map { case (r, c, o) => (r, c) -> o }.toMap
+    val r = observed.groupMapReduce(_._1)(_._3)(_ + _)
+    val c = observed.groupMapReduce(_._2)(_._3)(_ + _)
+    val n = observed.map(_._3).sum
+    require(n <= 10000000L, s"$who: n exceeds 10^7 — the DECIMAL(38,0) " +
+      "exactness bound; pre-aggregate or subsample the comparison")
+    val cells = for (rk <- rows; ck <- cols) yield {
+      val o = obs.getOrElse((rk, ck), 0L)
+      val rc = BigInt(r(rk)) * c(ck)
+      if (rc == 0) Cell(rk, ck, o, 0L, 0L)
+      else {
+        val d = BigInt(o) * n - rc
+        Cell(rk, ck, o, (rc * 1000000 / n).toLong,
+          (d * d * 1000000 / (rc * n)).toLong)
+      }
+    }
+    Contingency(cells, n, rows.size, cols.size, cells.map(_.termMicro).sum)
+  }
+
+  /** Fail loudly when a table has more than [[MaxCells]] cells. */
+  private[graft] def requireCells(k: Int, who: String): Unit =
+    require(k <= MaxCells, s"$who: more than $MaxCells contingency cells " +
+      "— the keys are not categorical; bucket them or pre-aggregate")
+
+  /** Add up `(key, count)` pairs by key, [[MaxCells]] keys at most. */
+  private def countCells(cells: Iterator[(Row, Long)],
+                         who: String): Iterator[(Row, Long)] = {
+    val m = mutable.LinkedHashMap.empty[Row, Long]
+    cells.foreach { case (k, o) =>
+      m(k) = m.getOrElse(k, 0L) + o
+      requireCells(m.size, who)
+    }
+    m.iterator
+  }
+
+  /** The `(rk, ck, o)` counts of two key columns (null keys dropped) and
+    * the keys' schema, from ONE Spark job: each partition counts its own
+    * cells, and the driver adds up the partitions' counts — the map-side
+    * half of a count aggregate with the driver as its reducer, as MLlib's
+    * `ChiSqTest` counts a contingency table. A shuffled `groupBy` would
+    * start a second job for its map stage. Each key is a one-field `Row`:
+    * `Row` equality, unlike Scala's `==` on a boxed double, holds for two
+    * NaNs, so NaN keys are one category, as in Spark's grouping. */
+  private def observedCells(df: DataFrame, rowKey: Column, colKey: Column,
+                            who: String): (Seq[(Row, Row, Long)], StructType) = {
+    val keys = df.select(rowKey.as("rk"), colKey.as("ck"))
+    val partials = keys.filter(col("rk").isNotNull && col("ck").isNotNull).rdd
+      .mapPartitions(rows => countCells(rows.map(_ -> 1L), who)).collect()
+    (countCells(partials.iterator, who)
+      .map { case (k, o) => (Row(k.get(0)), Row(k.get(1)), o) }.toSeq,
+      keys.schema)
+  }
+
   /** Pearson chi-squared test of independence between two categorical
-    * columns (Pearson 1900) — the drift test for CATEGORICAL features,
-    * completing the family next to [[ksTest]] (continuous shape) and the
-    * Welch mean-shift gate. ENTIRELY integer/decimal arithmetic: each
-    * cell's term `(O - E)^2 / E` is restated over the common denominator
-    * as `(O*N - R*C)^2 * 10^6 div (N*R*C)` — products in DECIMAL(38,0)
-    * (numerator <= (N^2)^2 * 10^6, within 38 digits for N up to ~10^7;
-    * larger N overflows the decimal LOUDLY under ANSI rather than
-    * drifting), one integral division per cell, summed in micro-units —
-    * so the statistic is bit-identical on any engine BY CONSTRUCTION, no
-    * libm, no carrier ties.
+    * columns — the drift test for CATEGORICAL features, completing the
+    * family next to [[ksTest]] (continuous shape) and the Welch mean-shift
+    * gate. Exact: the statistic is [[contingency]]'s.
     *
-    * The contingency table is completed to the full `rows x cols` grid
-    * (absent combinations count 0) so every expected-frequency term
-    * contributes, and a globally-empty row/column contributes 0 by the
-    * usual convention. Scale shape: ONE count aggregate over the corpus
-    * (hash partial); everything after runs on the category-bounded cell
-    * grid (|rows|*|cols| rows — windows over it are driver-trivial at
-    * any corpus size).
+    * Scale shape: one aggregate, then the driver. ONE count aggregate over
+    * the corpus ([[observedCells]], bounded by [[MaxCells]]) reaches the
+    * driver; the grid, its totals and every term are computed there, and
+    * the result is a local frame, so a later ORDER BY starts no job.
     *
     * Output: one row per cell `(rk, ck, o, e_micro, term_micro)` plus the
     * grid-constant `(chi2_micro, dof, reject_h0)`, where `reject_h0`
     * compares against the caller's critical value in micro-units (the
     * chi-squared quantile depends on dof, a table lookup the caller
-    * owns). */
+    * owns). No input row, no output row. */
   def chi2Test(df: DataFrame, rowKey: Column, colKey: Column,
                critMicro: Long): DataFrame = {
-    val base = df.select(rowKey.as("rk"), colKey.as("ck"))
-      .filter(col("rk").isNotNull && col("ck").isNotNull)
-    val counts = base.groupBy(col("rk"), col("ck"))
-      .agg(count(lit(1)).as("o"))
-    val rks = counts.select(col("rk")).distinct()
-    val cks = counts.select(col("ck")).distinct()
-    // full grid: absent cells are real zero observations
-    val cells = rks.crossJoin(cks)
-      .join(counts, Seq("rk", "ck"), "left")
-      .select(col("rk"), col("ck"), coalesce(col("o"), lit(0L)).as("o"))
-    val dims = rks.agg(count(lit(1)).as("nr"))
-      .crossJoin(cks.agg(count(lit(1)).as("nc")))
-    val wr = Window.partitionBy(col("rk"))
-    val wc = Window.partitionBy(col("ck"))
-    val wAll = Window.partitionBy()
-    val withTotals = cells.select(col("rk"), col("ck"), col("o"),
-        sum(col("o")).over(wr).as("r"),
-        sum(col("o")).over(wc).as("c"),
-        sum(col("o")).over(wAll).as("n"))
-      .crossJoin(broadcast(dims))
-    val eMicro = expr("CAST(r AS DECIMAL(38,0)) * CAST(c AS DECIMAL(38,0))" +
-      " * 1000000 div CAST(n AS DECIMAL(38,0))")
-    // exactness bound rides the EMITTED term (the guardedKsNum rule):
-    // the numerator is <= N^4 * 10^6, which fits DECIMAL(38,0) only for
-    // N <= 10^7 — and with ANSI off a decimal overflow yields NULL which
-    // sum() then silently SKIPS (r12 advisor), so the bound must fail
-    // loudly here rather than let chi2_micro underestimate
-    val termMicro = when(col("n") > lit(10000000L), raise_error(
-        lit("Drift.chi2Test: n exceeds 10^7 — the DECIMAL(38,0) " +
-          "exactness bound; pre-aggregate or subsample the comparison")))
-      .when(col("r") === 0L || col("c") === 0L, lit(0L))
-      .otherwise(expr(
-        "(CAST(o AS DECIMAL(38,0)) * CAST(n AS DECIMAL(38,0)) -" +
-        " CAST(r AS DECIMAL(38,0)) * CAST(c AS DECIMAL(38,0))) *" +
-        " (CAST(o AS DECIMAL(38,0)) * CAST(n AS DECIMAL(38,0)) -" +
-        " CAST(r AS DECIMAL(38,0)) * CAST(c AS DECIMAL(38,0))) * 1000000" +
-        " div (CAST(n AS DECIMAL(38,0)) * CAST(r AS DECIMAL(38,0)) *" +
-        " CAST(c AS DECIMAL(38,0)))"))
-    withTotals
-      .select(col("rk"), col("ck"), col("o"),
-        eMicro.as("e_micro"), termMicro.as("term_micro"),
-        col("nr"), col("nc"))
-      .select(col("rk"), col("ck"), col("o"), col("e_micro"),
-        col("term_micro"),
-        sum(col("term_micro")).over(wAll).as("chi2_micro"),
-        ((col("nr") - 1L) * (col("nc") - 1L)).as("dof"))
-      .withColumn("reject_h0", col("chi2_micro") > lit(critMicro))
+    val who = "Drift.chi2Test"
+    val (observed, schema) = observedCells(df, rowKey, colKey, who)
+    val t = contingency(observed, who)
+    df.sparkSession.createDataFrame(java.util.List.of(t.cells.map(e =>
+        Row(e.rk.get(0), e.ck.get(0), e.o, e.eMicro, e.termMicro,
+          t.chi2Micro, t.dof, t.chi2Micro > critMicro)): _*),
+      StructType(Seq(schema("rk"), schema("ck"),
+        StructField("o", LongType, nullable = false),
+        StructField("e_micro", LongType), StructField("term_micro", LongType),
+        StructField("chi2_micro", LongType),
+        StructField("dof", LongType, nullable = false),
+        StructField("reject_h0", BooleanType))))
   }
 
   /** Cramér's V effect size (Cramér 1946) from the [[chi2Test]] grid —
     * the "how strong is the association" companion to chi2's "is there
     * one" (a 100-TB corpus makes ANY dependence significant; V is what a
     * drift monitor should threshold). `v2_micro = chi2_micro div
-    * (n * min(r-1, c-1))` stays exact integer; the single emitted `v` is
-    * one IEEE `sqrt(v2_micro / 1e6)` over that exact integer — correctly
-    * rounded, bit-identical cross-engine (the ksTest emission rule).
-    * One row: `(n, nr, nc, chi2_micro, v2_micro, v)`. */
+    * (n * min(r-1, c-1))` stays exact integer, null when a side has one
+    * category; the single emitted `v` is one IEEE `sqrt(v2_micro / 1e6)`
+    * over that exact integer — correctly rounded, bit-identical
+    * cross-engine (the ksTest emission rule). Same scale shape as
+    * [[chi2Test]]. One row: `(n, nr, nc, chi2_micro, v2_micro, v)`; an
+    * empty input gives `(null, 0, 0, null, null, null)`. */
   def cramersV(df: DataFrame, rowKey: Column, colKey: Column): DataFrame = {
-    val agg = chi2Test(df, rowKey, colKey, critMicro = 0L)
-      .agg(sum(col("o")).as("n"),
-        countDistinct(col("rk")).as("nr"),
-        countDistinct(col("ck")).as("nc"),
-        max(col("chi2_micro")).as("chi2_micro"))
-    agg
-      .withColumn("v2_micro", expr(
-        "chi2_micro div (n * (least(nr, nc) - 1))"))
-      .select(col("n"), col("nr"), col("nc"), col("chi2_micro"),
-        col("v2_micro"),
-        sqrt(col("v2_micro").cast("double") / lit(1000000.0)).as("v"))
+    val who = "Drift.cramersV"
+    val t = contingency(observedCells(df, rowKey, colKey, who)._1, who)
+    val n = Option.when(t.cells.nonEmpty)(t.n)
+    val v2 = t.v2Micro
+    df.sparkSession.createDataFrame(java.util.List.of(Row(n.getOrElse(null),
+        t.nr, t.nc, n.map(_ => t.chi2Micro).getOrElse(null), v2.getOrElse(null),
+        v2.map(v => math.sqrt(v.toDouble / 1000000.0)).getOrElse(null))),
+      StructType(Seq(StructField("n", LongType),
+        StructField("nr", LongType, nullable = false),
+        StructField("nc", LongType, nullable = false),
+        StructField("chi2_micro", LongType), StructField("v2_micro", LongType),
+        StructField("v", DoubleType))))
   }
 
-  /** Two-sample Mann-Whitney U / Wilcoxon rank-sum test (Mann & Whitney
-    * 1947) with midrank tie handling — the nonparametric mean-shift test
-    * that, unlike Welch's t, needs no normality assumption. Exactness:
-    * midranks live on a half-unit lattice, so EVERYTHING is integer in
-    * DOUBLED units — for a distinct value v with `lt` rows below it and
-    * `eq` rows equal, `2*midrank = 2*lt + eq + 1`; `u1_2 = 2*U1 =
-    * sum_A(2*midrank) - n1*(n1+1)` is an exact BIGINT on any engine. The
-    * normal-approximation z (tie-corrected variance, Lehmann 1975) is a
-    * mirrored fixed IEEE op tree on those exact integers cast to double,
-    * with the 2^53 exact-double contract enforced INSIDE the emitted z
-    * column (the [[guardedKsNum]] rule).
-    *
-    * Scale shape: one value-keyed count aggregate, one global cumulative
-    * window (the ksTest two-pass prefix-sum restatement at 100 TB), one
-    * 1-row reduce.
-    *
-    * Output: 1 row `(n1, n2, u1_2, u2_2, z, reject_h0)` — U statistics in
-    * DOUBLED units (exact integers; halve for the textbook value),
-    * alpha=.05 two-sided decision. */
   /** Spearman rank correlation per group — the monotone-trend detector a
     * drift monitor runs per feature per window (is `value` drifting WITH
     * time?): Pearson over midranks, ties handled exactly by the
@@ -274,6 +313,25 @@ object Drift {
       |    ELSE NULL END AS rho
       |FROM s ORDER BY event_type""".stripMargin
 
+  /** Two-sample Mann-Whitney U / Wilcoxon rank-sum test (Mann & Whitney
+    * 1947) with midrank tie handling — the nonparametric mean-shift test
+    * that, unlike Welch's t, needs no normality assumption. Exactness:
+    * midranks live on a half-unit lattice, so EVERYTHING is integer in
+    * DOUBLED units — for a distinct value v with `lt` rows below it and
+    * `eq` rows equal, `2*midrank = 2*lt + eq + 1`; `u1_2 = 2*U1 =
+    * sum_A(2*midrank) - n1*(n1+1)` is an exact BIGINT on any engine. The
+    * normal-approximation z (tie-corrected variance, Lehmann 1975) is a
+    * mirrored fixed IEEE op tree on those exact integers cast to double,
+    * with the 2^53 exact-double contract enforced INSIDE the emitted z
+    * column (the [[guardedKsNum]] rule).
+    *
+    * Scale shape: one value-keyed count aggregate, one global cumulative
+    * window (the ksTest two-pass prefix-sum restatement at 100 TB), one
+    * 1-row reduce.
+    *
+    * Output: 1 row `(n1, n2, u1_2, u2_2, z, reject_h0)` — U statistics in
+    * DOUBLED units (exact integers; halve for the textbook value),
+    * alpha=.05 two-sided decision. */
   def mannWhitneyU(df: DataFrame, value: Column, isA: Column): DataFrame = {
     val per = df.select(value.as("v"), isA.as("__a"))
       .groupBy(col("v")).agg(

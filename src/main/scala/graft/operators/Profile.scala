@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Data profiling: exact per-column statistics — the engine-side
   * replacement for `DataFrame.summary` when results must be exact,
@@ -37,22 +38,27 @@ object Profile {
     * independence + Cramér's V over a category × value-band grid, a
     * fixed-width histogram, exact top-k heavy hitters, and global
     * min/max/sum/count — off ONE scan of the fact table: one
-    * grouping-sets aggregation computes every section's counts in a
-    * single pass (scan → Expand(5 sets) → partial agg → one shuffle of
-    * ALREADY-AGGREGATED partials). This is the opposite trade from
-    * [[profile]]'s per-column branches: there the Expand feeds exact
+    * grouping-sets aggregation ([[profileCells]]) computes every section's
+    * counts in a single pass (scan → Expand(5 sets) → partial agg → one
+    * shuffle of ALREADY-AGGREGATED partials). This is the opposite trade
+    * from [[profile]]'s per-column branches: there the Expand feeds exact
     * DISTINCTs, multiplying the SHUFFLE; here every grouping is a
     * bounded-cardinality count, so map-side combine collapses the
     * expansion before the exchange and the scan IO — the dominant cost
-    * at 100 TB — is paid once. The grouped cells frame (1 + 9 digits +
-    * grid cells + 10 bins + |keys| rows) is localCheckpoint'ed and every
-    * section derives from it without touching the table again.
+    * at 100 TB — is paid once.
+    *
+    * Scale shape: one aggregate, then the driver. One collect fetches the
+    * category-bounded cells (1 + digits + grid cells + 10 bins, at most
+    * [[Drift.MaxCells]]) and the top-`topK` key cells, which Spark's sort +
+    * limit picks; every section is computed from those rows on the driver
+    * and the result is a local frame, so its ORDER BY starts no job.
     *
     * Determinism: every emitted metric is an exact integer — counts,
     * cents (floor(x*100+0.5), the exact BIGINT carrier for 2-decimal
-    * data), chi2/Benford terms in micro-units via DECIMAL(38,0) integral
-    * division (the [[Drift.chi2Test]] discipline, including its loud
-    * n <= 10^7 exactness guard riding the emitted term).
+    * data), chi2/Benford terms in micro-units by integral division (the
+    * chi2 and Cramér sections are [[Drift.contingency]]'s, including its
+    * loud n <= 10^7 exactness guard). An empty input still reports
+    * `stats` (count 0, null cents), as SQL's global aggregate does.
     *
     * Output rows `(section, key1, key2, n, metric)`:
     *  - `('stats', count|sum_cents|min_cents|max_cents, null, N, value)`
@@ -62,124 +68,88 @@ object Profile {
     *    `('chi2_stat', 'chi2_micro'|'dof', null, N, value)`
     *  - `('cramers', 'v2_micro', null, N, v2_micro)`
     *  - `('hist', bin, null, count, bin_lo_cents)`
-    *  - `('heavy', key, null, count, rank)` for the top-`topK` keys. */
+    *  - `('heavy', key, null, count, rank)` for the top-`topK` keys, ranked
+    *    by count, then key in Spark's string order (UTF-8 bytes). */
   def profileAll(df: DataFrame, priceCol: String, catCol: String,
                  keyCol: String, bandLo: Double = 100000.0,
                  bandHi: Double = 300000.0, binWidth: Double = 50000.0,
                  topK: Int = 5): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
+    val who = "Profile.profileAll"
     val cells = profileCells(df, priceCol, catCol, keyCol,
-      bandLo, bandHi, binWidth).localCheckpoint(true)
-    val global = cells.filter(col("gid") === 31)
-      .select(col("n"), col("sum_cents"), col("min_cents"), col("max_cents"))
-    def sect(name: String) = lit(name).as("section")
-    val nullKey2 = lit(null).cast("string").as("key2")
+      bandLo, bandHi, binWidth)
+    val (top, bounded) = cells.filter(col("gid") =!= 30)
+      .limit(Drift.MaxCells + 1)
+      .unionByName(cells.filter(col("gid") === 30)
+        .orderBy(col("n").desc, col("ckey")).limit(topK))
+      .collect().partition(_.getLong(9) == 30)
+    Drift.requireCells(bounded.length, who)
+    val byGid = bounded.toSeq.groupBy(_.getLong(9)).withDefaultValue(Nil)
 
-    val stats = global.select(sect("stats"),
-      expr("stack(4, 'count', n, 'sum_cents', sum_cents, " +
-        "'min_cents', min_cents, 'max_cents', max_cents) AS (key1, metric)"),
-      col("n"))
-      .select(col("section"), col("key1"), nullKey2, col("n"), col("metric"))
+    // Spark's grouping-sets aggregate emits no global row for an empty
+    // input, where SQL's global aggregate gives count 0 and null cents
+    val global = byGid(31).headOption
+    val n = global.fold(0L)(_.getLong(5))
+    val stats = Row("stats", "count", null, n, n) +:
+      Seq("sum_cents" -> 6, "min_cents" -> 7, "max_cents" -> 8).map {
+        case (k, i) => Row("stats", k, null, n, global.map(_.get(i)).orNull) }
 
-    // ---- Benford over the digit rollup (grid completed to all nine).
-    // The expected-count base is the number of rows with a SIGNIFICANT
-    // leading digit (1-9) — Benford's law is defined on those; rows whose
-    // digit is 0 (price < 1), null, or unparsable (negative sign) are not
-    // part of the test, and using the global n for the base would inflate
-    // every term whenever such rows exist
-    val probs = BenfordMicro.zipWithIndex
-      .map { case (p, i) => (i + 1, p) }.toDF("digit", "p_micro")
-    val digitObs = cells.filter(col("gid") === 15)
-      .filter(col("digit").between(1, 9))
-      .select(col("digit"), col("n").as("o"))
-    val bTotal = digitObs.agg(coalesce(sum(col("o")), lit(0L)).as("nt"))
-    val bterm = probs
-      .join(digitObs, Seq("digit"), "left")
-      .select(col("digit"), col("p_micro"),
-        coalesce(col("o"), lit(0L)).as("o"))
-      .crossJoin(broadcast(bTotal))
-      .withColumn("e_micro", expr("nt * p_micro"))
-      .withColumn("term_micro", expr(
-        "(CAST(o AS DECIMAL(38,0)) * 1000000 - e_micro) *" +
-        " (CAST(o AS DECIMAL(38,0)) * 1000000 - e_micro)" +
-        " div CAST(e_micro AS DECIMAL(38,0))"))
-    val benford = bterm.select(sect("benford"),
-      col("digit").cast("string").as("key1"), nullKey2,
-      col("o").as("n"), col("term_micro").as("metric"))
-    val benfordStat = bterm
-      .agg(max(col("nt")).as("n"), sum(col("term_micro")).as("metric"))
-      .select(sect("benford_stat"), lit("chi2_micro").as("key1"), nullKey2,
-        col("n"), col("metric"))
+    // Benford over the nine significant digits. The expected-count base
+    // is the number of rows with a leading digit 1-9 — Benford's law is
+    // defined on those; rows whose digit is 0 (price < 1), null, or
+    // unparsable (negative sign) are not part of the test, and using the
+    // global n for the base would inflate every term whenever such rows
+    // exist. A base of 0 has no expectation: every term is null.
+    val digits = byGid(15).filter(r => !r.isNullAt(0) && r.getInt(0) >= 1)
+      .map(r => r.getInt(0) -> r.getLong(5)).toMap
+    val nb = digits.values.sum
+    val bterms = BenfordMicro.zipWithIndex.map { case (p, i) =>
+      val (o, e) = (digits.getOrElse(i + 1, 0L), BigInt(nb) * p)
+      (i + 1, o, Option.when(e > 0)(((BigInt(o) * 1000000 - e).pow(2) / e).toLong))
+    }
+    val benford = bterms.map { case (d, o, term) =>
+      Row("benford", d.toString, null, o, term.getOrElse(null)) } :+
+      Row("benford_stat", "chi2_micro", null, nb,
+        bterms.flatMap(_._3).reduceOption(_ + _).getOrElse(null))
 
-    // ---- chi2 + Cramér's V over the (category, band) rollup
-    val oc = cells.filter(col("gid") === 19)
-      .select(col("rk"), col("ck"), col("n").as("o"))
-    // the hint fixes the build side: left to AQE, the side whose stage
-    // finished first was broadcast, so the plan varied from run to run
-    val grid = oc.select(col("rk")).distinct()
-      .crossJoin(broadcast(oc.select(col("ck")).distinct()))
-      .join(oc, Seq("rk", "ck"), "left")
-      .select(col("rk"), col("ck"), coalesce(col("o"), lit(0L)).as("o"))
-    val tot = grid.select(col("rk"), col("ck"), col("o"),
-      sum(col("o")).over(Window.partitionBy(col("rk"))).as("r"),
-      sum(col("o")).over(Window.partitionBy(col("ck"))).as("c"),
-      sum(col("o")).over(Window.partitionBy()).as("nt"))
-    val cterm = tot.withColumn("term_micro",
-      when(col("nt") > lit(10000000L), raise_error(
-        lit("Profile.profileAll: n exceeds 10^7 — the DECIMAL(38,0) " +
-          "chi2 exactness bound; pre-aggregate or subsample")))
-      .when(col("r") === 0L || col("c") === 0L, lit(0L))
-      .otherwise(expr(
-        "(CAST(o AS DECIMAL(38,0)) * CAST(nt AS DECIMAL(38,0)) -" +
-        " CAST(r AS DECIMAL(38,0)) * CAST(c AS DECIMAL(38,0))) *" +
-        " (CAST(o AS DECIMAL(38,0)) * CAST(nt AS DECIMAL(38,0)) -" +
-        " CAST(r AS DECIMAL(38,0)) * CAST(c AS DECIMAL(38,0))) * 1000000" +
-        " div (CAST(nt AS DECIMAL(38,0)) * CAST(r AS DECIMAL(38,0)) *" +
-        " CAST(c AS DECIMAL(38,0)))")))
-    val chi2 = cterm.select(sect("chi2"), col("rk").as("key1"),
-      col("ck").as("key2"), col("o").as("n"),
-      col("term_micro").as("metric"))
-    // set sizes, not two countDistincts: Catalyst rewrites several distinct
-    // aggregates into an Expand whose branch order follows expression-id
-    // hashes, so each run could generate (and compile) different code
-    val cagg = cterm.agg(max(col("nt")).as("nt"),
-      size(collect_set(col("rk"))).cast("long").as("nr"),
-      size(collect_set(col("ck"))).cast("long").as("nc"),
-      sum(col("term_micro")).as("chi2_micro"))
-    val chi2Stat = cagg.select(sect("chi2_stat"),
-      expr("stack(2, 'chi2_micro', chi2_micro, " +
-        "'dof', (nr - 1) * (nc - 1)) AS (key1, metric)"), col("nt"))
-      .select(col("section"), col("key1"), nullKey2,
-        col("nt").as("n"), col("metric"))
-    val cramers = cagg.select(sect("cramers"),
-      lit("v2_micro").as("key1"), nullKey2, col("nt").as("n"),
-      expr("chi2_micro div (nt * (least(nr, nc) - 1))").as("metric"))
+    // chi2 + Cramér's V over the (category, band) cells
+    val t = Drift.contingency(
+      byGid(19).map(r => (r.get(1), r.get(2), r.getLong(5))), who)
+    val nt = Option.when(t.cells.nonEmpty)(t.n)
+    val chi2 = t.cells.map(c => Row("chi2", c.rk, c.ck, c.o, c.termMicro)) ++
+      Seq(Row("chi2_stat", "chi2_micro", null, nt.getOrElse(null),
+          nt.map(_ => t.chi2Micro).getOrElse(null)),
+        Row("chi2_stat", "dof", null, nt.getOrElse(null), t.dof),
+        Row("cramers", "v2_micro", null, nt.getOrElse(null),
+          t.v2Micro.getOrElse(null)))
 
-    // ---- fixed-width histogram (bin lo in cents as the metric)
-    val hist = cells.filter(col("gid") === 29)
-      .select(sect("hist"), col("bin").cast("string").as("key1"), nullKey2,
-        col("n"),
-        (col("bin") * lit(math.round(binWidth * 100))).as("metric"))
+    // fixed-width histogram (bin lo in cents as the metric)
+    val hist = byGid(29).map(r => Row("hist", r.getLong(3).toString, null,
+      r.getLong(5), r.getLong(3) * math.round(binWidth * 100)))
 
-    // ---- exact heavy hitters: top-k keys by count (TakeOrdered, then
-    // rank over the k-row result)
-    val heavy = cells.filter(col("gid") === 30)
-      .select(col("ckey"), col("n"))
-      .orderBy(col("n").desc, col("ckey")).limit(topK)
-      .withColumn("metric",
-        row_number().over(Window.orderBy(col("n").desc, col("ckey")))
-          .cast("long"))
-      .select(sect("heavy"), col("ckey").as("key1"), nullKey2, col("n"),
-        col("metric"))
+    // exact heavy hitters, ranked as Spark ordered them: by count, then by
+    // key in UTF-8 byte order (Scala's `<` compares UTF-16 code units,
+    // which disagrees above the BMP)
+    val heavy = top.sortWith { (a, b) =>
+      if (a.getLong(5) != b.getLong(5)) a.getLong(5) > b.getLong(5)
+      else UTF8String.fromString(a.getString(4))
+        .compareTo(UTF8String.fromString(b.getString(4))) < 0
+    }.zipWithIndex.map { case (r, i) =>
+      Row("heavy", r.getString(4), null, r.getLong(5), i + 1L) }
 
-    Seq(stats, benford, benfordStat, chi2, chi2Stat, cramers, hist, heavy)
-      .reduce(_ unionByName _)
+    // a local relation: the ORDER BY sorts on the driver, with no job
+    df.sparkSession.createDataFrame(java.util.List.of(
+        stats ++ benford ++ chi2 ++ hist ++ heavy: _*), ProfileAllSchema)
       .orderBy(col("section"), col("key1"), col("key2"))
   }
 
-  /** The single-pass grouping-sets aggregate behind [[profileAll]],
-    * un-checkpointed so specs can assert the ONE-scan plan shape:
+  /** `(section, key1, key2, n, metric)`, the rows of [[profileAll]]. */
+  private val ProfileAllSchema = StructType(Seq(
+    StructField("section", StringType, nullable = false),
+    StructField("key1", StringType), StructField("key2", StringType),
+    StructField("n", LongType), StructField("metric", LongType)))
+
+  /** The single-pass grouping-sets aggregate behind [[profileAll]], so
+    * specs can assert the ONE-scan plan shape:
     * `(digit, rk, ck, bin, ckey, n, sum_cents, min_cents, max_cents,
     * gid)` with gid 31=global, 15=digit, 19=(rk,ck), 29=bin, 30=key. */
   private[graft] def profileCells(df: DataFrame, priceCol: String,

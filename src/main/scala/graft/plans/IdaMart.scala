@@ -222,9 +222,15 @@ object IdaMart {
         // fact partitioned by year (Sinks.writeFactPartitioned) so year
         // predicates prune directories instead of scanning the store
         year(col("ano_mes")).as("ano"))
-      .transform(firstWinsDedup(_, Seq("hash_registro"),
-        Seq("arquivo_origem", "linha_origem")))
+      .transform(firstLoadWins)
   }
+
+  /** The store's one dedup rule: per `hash_registro`, the row with the
+    * lowest `(arquivo_origem, linha_origem)` wins. [[fact]], the streaming
+    * ingest and the compaction gate all apply it, so a row loaded by any
+    * path is the one every other path would have kept. */
+  def firstLoadWins(df: DataFrame): DataFrame =
+    firstWinsDedup(df, Seq("hash_registro"), Seq("arquivo_origem", "linha_origem"))
 
   /** Deterministic dedup: the reference's first-INSERT-wins ON CONFLICT
     * semantics (file order, then row order). `dropDuplicates` would keep an
@@ -244,7 +250,7 @@ object IdaMart {
     * `load(existing, batch)` is a no-op when the batch was already loaded.
     *
     * Precondition: `batch` is already unique on `hash_registro` (both
-    * [[fact]] and the streaming ingest dedup it with [[firstWinsDedup]]);
+    * [[fact]] and the streaming ingest dedup it with [[firstLoadWins]]);
     * intra-batch dedup is not repeated here, because `dropDuplicates` would
     * keep an arbitrary row per hash. */
   def load(existing: DataFrame, batch: DataFrame): DataFrame =

@@ -89,23 +89,37 @@ object Sinks {
     * eventually holds hundreds of small parquet files whose open/footer
     * cost dominates scans.
     *
-    * Shape: one full rewrite into a staging directory (Spark refuses to
-    * overwrite a path it is reading, correctly), then delete + rename —
-    * data is written once and the store swap is two metadata operations.
-    * Content is row-identical, so re-running after a failure is safe; if
-    * the process dies between delete and rename, the full store survives
-    * at `<path>__compacting` (the error message says so). NOT
+    * Shape: one full rewrite, swapped in by [[swapStore]] — data is written
+    * once and the store swap is two metadata operations. Content is
+    * row-identical, so re-running after a failure is safe; if the process
+    * dies between delete and rename, the full store survives at
+    * `<path>__compacting` (the error message says so). NOT
     * concurrent-reader-safe — schedule like any maintenance job. */
   def compactFact(spark: org.apache.spark.sql.SparkSession, path: String,
-                  filesPerYear: Int = 8): Unit = {
+                  filesPerYear: Int = 8): Unit =
+    swapStore(spark, path, "__compacting", "compacted") { staging =>
+      writeFactPartitioned(spark.read.parquet(path), staging,
+        mode = "overwrite", filesPerYear = filesPerYear)
+    }
+
+  /** The staged rewrite-and-swap of the store at `path`: remove the
+    * staging directory `path + suffix` a crashed attempt may have left,
+    * `write` the new store there, delete the old store (if any) and
+    * rename the staging directory onto it. A rewrite that reads the store
+    * it replaces must go through staging: Spark refuses to overwrite a
+    * path it is reading, correctly. If the process dies between delete and
+    * rename, the whole new store survives at the staging path, and a
+    * failed rename says so ("<what> store preserved at <staging>"). */
+  def swapStore(spark: org.apache.spark.sql.SparkSession, path: String,
+                suffix: String, what: String)(write: String => Unit): Unit = {
     val target = new org.apache.hadoop.fs.Path(path)
-    val staging = new org.apache.hadoop.fs.Path(path + "__compacting")
+    val staging = new org.apache.hadoop.fs.Path(path + suffix)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(staging)) fs.delete(staging, true) // stale prior attempt
-    writeFactPartitioned(spark.read.parquet(path), staging.toString,
-      mode = "overwrite", filesPerYear = filesPerYear)
-    require(fs.delete(target, true), s"could not remove $target for swap")
+    write(staging.toString)
+    if (fs.exists(target))
+      require(fs.delete(target, true), s"could not remove $target for swap")
     require(fs.rename(staging, target),
-      s"swap rename failed — compacted store preserved at $staging")
+      s"swap rename failed — $what store preserved at $staging")
   }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.sources.Sinks
+
 /** Streaming CDC apply — a change feed (`key, ts, event_id, op, value`)
   * continuously merged into a keyed store, the streaming twin of the batch
   * `cdc_merge` gate and the SCD-1 counterpart of `scd2_history` (the
@@ -21,8 +23,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * let a late older upsert silently resurrect a deleted key). The serving
   * view [[latest]] filters tombstones out.
   *
-  * Store write is the staged rewrite-and-swap of
-  * [[graft.sources.Sinks.compactFact]] (write staging, delete, rename):
+  * Store write is the staged rewrite-and-swap [[Sinks.swapStore]] (write
+  * staging, delete, rename):
   * the merged frame READS the live store, so an in-place overwrite is both
   * unsafe and refused by Spark. A crash between delete and rename leaves
   * the full store at `<dir>__staging`; re-running the feed rebuilds it
@@ -54,17 +56,9 @@ object CdcUpsert {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val target = new org.apache.hadoop.fs.Path(storeDir)
-        val staging = new org.apache.hadoop.fs.Path(storeDir + "__staging")
-        val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(staging)) fs.delete(staging, true) // stale attempt
-        merge(graft.sources.Sinks.readStoreIfExists(spark, storeDir), batch)
-          .write.parquet(staging.toString)
-        if (fs.exists(target))
-          require(fs.delete(target, true), s"could not remove $target")
-        require(fs.rename(staging, target),
-          s"swap rename failed — merged store preserved at $staging")
-        ()
+        Sinks.swapStore(spark, storeDir, "__staging", "merged") {
+          merge(Sinks.readStoreIfExists(spark, storeDir), batch).write.parquet(_)
+        }
       }
       .trigger(Trigger.AvailableNow())
       .start()

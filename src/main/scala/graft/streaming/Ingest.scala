@@ -24,8 +24,7 @@ object Ingest {
     records.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        IdaMart.append(IdaMart.firstWinsDedup(IdaMart.hashRecords(batch),
-          Seq("hash_registro"), Seq("arquivo_origem", "linha_origem")), factDir)
+        IdaMart.append(IdaMart.firstLoadWins(IdaMart.hashRecords(batch)), factDir)
         ()
       }
       .trigger(Trigger.AvailableNow())

@@ -276,8 +276,8 @@ object NearDupStream {
       df.join(t.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti"))
 
   /** COMPACT the index store: rewrite `docs/`
-    * minus tombstoned docs (staged write + directory swap, the
-    * [[CdcUpsert]] rewrite-and-swap), preserving the partition-per-batch
+    * minus tombstoned docs (staged write + directory swap,
+    * [[graft.sources.Sinks.swapStore]]), preserving the partition-per-batch
     * layout via `partitionBy("batch")` so post-compaction appends keep the
     * same directory shape, then clear the tombstone store. Also the
     * small-file merge for a long-running stream (one task's files per
@@ -295,17 +295,12 @@ object NearDupStream {
     val stores = Seq("docs" -> docsSchema)
     stores.foreach { case (name, schema) =>
       val target = new Path(s"$storeDir/$name")
-      val fs = target.getFileSystem(conf)
-      if (fs.exists(target)) {
-        val staging = new Path(s"$storeDir/${name}__compact")
-        if (fs.exists(staging)) fs.delete(staging, true) // stale attempt
-        live(spark, storeDir,
-            spark.read.schema(schema).parquet(target.toString))
-          .write.partitionBy("batch").parquet(staging.toString)
-        require(fs.delete(target, true), s"could not remove $target")
-        require(fs.rename(staging, target),
-          s"swap rename failed — compacted store preserved at $staging")
-      }
+      if (target.getFileSystem(conf).exists(target))
+        graft.sources.Sinks.swapStore(spark, target.toString, "__compact",
+            "compacted") {
+          live(spark, storeDir, spark.read.schema(schema).parquet(target.toString))
+            .write.partitionBy("batch").parquet(_)
+        }
     }
     val tomb = new Path(s"$storeDir/retracted")
     val fs = tomb.getFileSystem(conf)

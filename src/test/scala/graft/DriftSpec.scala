@@ -105,6 +105,62 @@ class DriftSpec extends SparkSpec {
       math.sqrt((6666664L / 60L).toDouble / 1e6))
   }
 
+  test("contingency kernel: grid completion, terms and totals equal the " +
+    "engine's distributed chi2 on a 2x3 table with two absent cells") {
+    val t = Drift.contingency(Seq(("1-U", 1L, 2L), ("1-U", 3L, 4L),
+      ("2-B", 2L, 2L), ("2-B", 3L, 1L)), "test")
+    assert(t.cells.map(c => (c.rk, c.ck, c.o, c.eMicro, c.termMicro)).toSet ==
+      Set(("1-U", 1L, 2L, 1333333L, 333333L), ("1-U", 2L, 0L, 1333333L, 1333333L),
+        ("1-U", 3L, 4L, 3333333L, 133333L), ("2-B", 1L, 0L, 666666L, 666666L),
+        ("2-B", 2L, 2L, 666666L, 2666666L), ("2-B", 3L, 1L, 1666666L, 266666L)))
+    assert((t.n, t.nr, t.nc, t.chi2Micro, t.dof) == (9L, 2L, 3L, 5399997L, 2L))
+    assert(t.v2Micro == Some(599999L))
+  }
+
+  test("contingency kernel: an empty grid; chi2Test gives no row and " +
+    "cramersV (null, 0, 0, null, null, null)") {
+    val t = Drift.contingency(Nil, "test")
+    assert(t.cells.isEmpty && (t.n, t.nr, t.nc, t.chi2Micro) == (0L, 0L, 0L, 0L))
+    val empty = Seq(("r", "c")).toDF("rk", "ck").filter(lit(false))
+    val chi2 = Drift.chi2Test(empty, col("rk"), col("ck"), 3841459L)
+    assert(chi2.columns.toSeq == Seq("rk", "ck", "o", "e_micro", "term_micro",
+      "chi2_micro", "dof", "reject_h0"))
+    assert(chi2.collect().isEmpty)
+    val v = Drift.cramersV(empty, col("rk"), col("ck")).collect().toSeq
+    assert(v.map(_.toSeq) == Seq(Seq(null, 0L, 0L, null, null, null)))
+  }
+
+  test("contingency kernel: a single row category has chi2 0 and no " +
+    "Cramér's V") {
+    val t = Drift.contingency(Seq(("X", 1L, 2L), ("X", 2L, 2L), ("X", 3L, 5L)),
+      "test")
+    assert(t.cells.map(c => (c.eMicro, c.termMicro)) ==
+      Seq((2000000L, 0L), (2000000L, 0L), (5000000L, 0L)))
+    assert((t.chi2Micro, t.dof) == (0L, 0L))
+    assert(t.v2Micro.isEmpty)
+    val df = (Seq.fill(2)(("X", 1L)) ++ Seq.fill(2)(("X", 2L)) ++
+      Seq.fill(5)(("X", 3L))).toDF("rk", "ck")
+    assert(Drift.cramersV(df, col("rk"), col("ck")).collect().head.toSeq ==
+      Seq(9L, 1L, 3L, 0L, null, null))
+    // NaN keys are one category, as in Spark's grouping
+    val nan = Seq((Double.NaN, 1L), (Double.NaN, 2L), (Double.NaN, 2L))
+      .toDF("rk", "ck")
+    assert(Drift.cramersV(nan, col("rk"), col("ck")).collect().head.toSeq ==
+      Seq(3L, 1L, 2L, 0L, null, null))
+  }
+
+  test("contingency kernel: n past 10^7 and a table past the cell bound " +
+    "both fail loudly") {
+    val big = intercept[IllegalArgumentException](
+      Drift.contingency(Seq(("a", "x", 10000001L)), "test"))
+    assert(big.getMessage.contains("n exceeds 10^7"), big.getMessage)
+    val wide = spark.range(Drift.MaxCells + 1)
+      .select(col("id").as("rk"), lit("a").as("ck"))
+    val e = intercept[Exception](
+      Drift.chi2Test(wide, col("rk"), col("ck"), 0L))
+    assert(e.getMessage.contains(s"more than ${Drift.MaxCells}"), e.getMessage)
+  }
+
   test("Mann-Whitney closed forms: disjoint samples pin U to an extreme; " +
     "midrank ties land on the half-unit lattice") {
     // A={1,2,3} all below B={4,5,6}: U1 = 0, U2 = 9

@@ -1,6 +1,8 @@
 package graft
 
-import graft.operators.Profile
+import org.apache.spark.sql.functions._
+
+import graft.operators.{Drift, Profile}
 
 /** One-scan profile: exact nulls/distincts/min/max per column. */
 class ProfileSpec extends SparkSpec {
@@ -87,5 +89,80 @@ class ProfileSpec extends SparkSpec {
     assert("Scan parquet".r.findAllIn(plan).size == 1, plan)
     assert(plan.contains("Expand"), plan) // the grouping-sets expansion
     assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan)
+  }
+
+  private def profileRows(df: org.apache.spark.sql.DataFrame, topK: Int = 5) =
+    Profile.profileAll(df, "price", "cat", "cust", topK = topK).collect().toList
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        Option.unless(r.isNullAt(3))(r.getLong(3)),
+        Option.unless(r.isNullAt(4))(r.getLong(4))))
+
+  test("profileAll on an empty input gives the oracle's 17 rows, stats " +
+    "included (count 0, null cents)") {
+    val expected =
+      (1 to 9).map(d => ("benford", d.toString, null, Some(0L), None)) ++ Seq(
+        ("benford_stat", "chi2_micro", null, Some(0L), None),
+        ("chi2_stat", "chi2_micro", null, None, None),
+        ("chi2_stat", "dof", null, None, Some(1L)),
+        ("cramers", "v2_micro", null, None, None),
+        ("stats", "count", null, Some(0L), Some(0L)),
+        ("stats", "max_cents", null, Some(0L), None),
+        ("stats", "min_cents", null, Some(0L), None),
+        ("stats", "sum_cents", null, Some(0L), None))
+    assert(profileRows(auditDf.filter(lit(false))) == expected)
+    // every price null: the same empty profile
+    assert(profileRows(auditDf.withColumn("price",
+      lit(null).cast("double"))) == expected)
+  }
+
+  test("profileAll: a Benford base of 0 has null terms; one value band " +
+    "has no Cramér's V") {
+    // every price < 1: no significant leading digit, and every row is 'low'
+    val rows = profileRows(auditDf.withColumn("price", col("price") / 1e6))
+    def sec(s: String) = rows.filter(_._1 == s)
+    assert(sec("benford") ==
+      (1 to 9).map(d => ("benford", d.toString, null, Some(0L), None)))
+    assert(sec("benford_stat") ==
+      List(("benford_stat", "chi2_micro", null, Some(0L), None)))
+    assert(sec("chi2") == List(("chi2", "1-U", "low", Some(6L), Some(0L)),
+      ("chi2", "2-B", "low", Some(3L), Some(0L))))
+    assert(sec("chi2_stat") ==
+      List(("chi2_stat", "chi2_micro", null, Some(9L), Some(0L)),
+        ("chi2_stat", "dof", null, Some(9L), Some(0L))))
+    assert(sec("cramers") == List(("cramers", "v2_micro", null, Some(9L), None)))
+  }
+
+  test("profileAll ranks heavy hitters in Spark's string order (UTF-8 " +
+    "bytes), not UTF-16 code units") {
+    // U+FB01 sorts before U+1F600 in UTF-8 bytes (EF.. < F0..), after it
+    // in UTF-16 (FB01 > D83D)
+    val df = Seq(("a", "\uFB01", 1.0), ("a", "\uD83D\uDE00", 2.0),
+      ("b", "z", 3.0), ("b", "\uFB01", 5.0), ("a", "\uD83D\uDE00", 7.0))
+      .toDF("cat", "cust", "price")
+    def heavy(k: Int) = profileRows(df, k).filter(_._1 == "heavy")
+      .map(r => (r._2, r._4.get, r._5.get)).sortBy(_._3)
+    assert(heavy(5) == List(("\uFB01", 2L, 1L), ("\uD83D\uDE00", 2L, 2L),
+      ("z", 1L, 3L)))
+    assert(heavy(2) == heavy(5).take(2))
+  }
+
+  test("profileAll fails loudly past the contingency cell bound") {
+    val wide = spark.range(Drift.MaxCells + 1)
+      .select(col("id").cast("string").as("cat"), col("id").as("cust"),
+        lit(5.0).as("price"))
+    val e = intercept[Exception](profileRows(wide))
+    assert(e.getMessage.contains(s"more than ${Drift.MaxCells}"), e.getMessage)
+  }
+
+  test("profile_all, a_chi2_test and a_cramers_v finish on the driver: " +
+    "one aggregate each, so at most 3, 2 and 2 jobs") {
+    for ((gate, most) <- Seq("profile_all" -> 3, "a_chi2_test" -> 2,
+        "a_cramers_v" -> 2)) {
+      val q = SparkEntry.queries(gate)
+      q(spark, sf0001).collect() // warm
+      val (rows, jobs) = JobCount(spark)(q(spark, sf0001).collect())
+      assert(rows.nonEmpty)
+      assert(jobs <= most, s"$gate ran $jobs jobs")
+    }
   }
 }

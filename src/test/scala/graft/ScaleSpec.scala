@@ -93,6 +93,23 @@ class ScaleSpec extends SparkSpec {
     assert(scannedParts.forall(_.contains("ano=1998")))
   }
 
+  test("swapStore: a stale staging dir left by a crashed attempt is " +
+    "removed, and the swap completes") {
+    val store = Files.createTempDirectory("graft-swap").toString + "/store"
+    Seq(1L, 2L).toDF("v").write.parquet(store)
+    // the crashed attempt's leftover: a partial rewrite in the staging dir
+    Seq(99L).toDF("v").write.parquet(store + "__staging")
+    Sinks.swapStore(spark, store, "__staging", "merged") { staging =>
+      assert(!new java.io.File(staging).exists(), "stale staging dir kept")
+      // the rewrite reads the store it replaces
+      spark.read.parquet(store).select((col("v") * 10).as("v"))
+        .write.parquet(staging)
+    }
+    assert(!new java.io.File(store + "__staging").exists())
+    assert(spark.read.parquet(store).as[Long].collect().sorted.toSeq ==
+      Seq(10L, 20L))
+  }
+
   test("compactFact: repeated appends collapse to bounded files per year, " +
     "row set unchanged, files month-clustered") {
     val out = Files.createTempDirectory("graft-compact").toString + "/fact"

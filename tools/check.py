@@ -16,7 +16,11 @@ int64 (the corpus_curriculum r13/r14 red). The class map groups widths
 (int32 vs int64 compare equal — the driver tolerates those) and isolates
 the risk classes: HUGEINT and DECIMAL emitted against an engine int/float.
 
---fork N (r15): run the sweep in fresh SUBPROCESSES of N queries each.
+--fork N (r15): run the sweep in fresh SUBPROCESSES of N queries each,
+dealt round-robin, as many at once as there are CPUs (a forked gate's
+"sec" then includes waiting for CPUs that other chunks' DuckDB threads
+hold). Each chunk writes its own check_status.json.chunk<i>, which the
+parent merges into check_status.json.
 Per-query connection isolation (the r14 fix) is not always enough: duckdb
 keeps process-global allocations, and the r15 sf0.1 close sweep OOM'd the
 whole python process ~120 queries in (the recursive-CTE graph oracles
@@ -25,10 +29,11 @@ footprint bounded no matter how many queries the registry grows to.
 
 Every run writes <verifyOutDir>/check_status.json, one {"ok", "sec"} entry
 per gate checked (sec: wall seconds of the gate's DuckDB check); a run over
-a gate subset (each --fork chunk is one) adds its gates to the file. A full
-or forked run ends by printing the 20 slowest gates.
+a gate subset adds its gates to the file. A full or forked run ends by
+printing the 20 slowest gates.
 """
-import json, math, os, sys, time
+import json, math, multiprocessing, os, sys, time
+from concurrent.futures import ThreadPoolExecutor
 import duckdb
 
 
@@ -73,27 +78,10 @@ CHECK_TYPES = False
 
 
 def main(sf_dir, out_dir, only=None):
-    # fresh connection PER QUERY: a single long-lived connection exhausted
-    # its memory/temp budget ~300 queries into the r14 sf0.1 sweep and
-    # failed three recursive-CTE graph oracles that pass in a fresh
-    # session — per-query isolation keeps one oracle's residue from
-    # failing another (the views are metadata-only, so reconnects are
-    # effectively free)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     if only:  # dev-only subset: iterate on one query without a full dump
         oracle = {k: v for k, v in oracle.items() if k in only}
-    failures = []
-    status = {}
-    for name, sql in sorted(oracle.items()):
-        t0 = time.perf_counter()
-        failed_before = len(failures)
-        con = connect(sf_dir)
-        try:
-            run_one(con, out_dir, name, sql, failures)
-        finally:
-            con.close()
-        status[name] = {"ok": len(failures) == failed_before,
-                        "sec": round(time.perf_counter() - t0, 3)}
+    status, failures = check(sf_dir, out_dir, sorted(oracle))
     write_status(out_dir, status, merge=only is not None)
     if only is None:
         print_slowest(status)
@@ -101,6 +89,30 @@ def main(sf_dir, out_dir, only=None):
         print(f"\n{len(failures)} FAILED: {failures}")
         sys.exit(1)
     print(f"\nall {len(oracle)} queries match")
+
+
+def check(sf_dir, out_dir, names):
+    """Check the named gates; returns ({name: {"ok", "sec"}}, failed names)."""
+    # fresh connection PER QUERY: a single long-lived connection exhausted
+    # its memory/temp budget ~300 queries into the r14 sf0.1 sweep and
+    # failed three recursive-CTE graph oracles that pass in a fresh
+    # session — per-query isolation keeps one oracle's residue from
+    # failing another (the views are metadata-only, so reconnects are
+    # effectively free)
+    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    failures = []
+    status = {}
+    for name in names:
+        t0 = time.perf_counter()
+        failed_before = len(failures)
+        con = connect(sf_dir)
+        try:
+            run_one(con, out_dir, name, oracle[name], failures)
+        finally:
+            con.close()
+        status[name] = {"ok": len(failures) == failed_before,
+                        "sec": round(time.perf_counter() - t0, 3)}
+    return status, failures
 
 
 def run_one(con, out_dir, name, sql, failures):
@@ -153,7 +165,7 @@ def status_path(out_dir):
 
 def write_status(out_dir, status, merge):
     """Write the per-gate status; a subset run (merge) adds its gates to
-    what earlier runs wrote, e.g. the earlier chunks of a forked run."""
+    what earlier runs wrote."""
     if merge and os.path.exists(status_path(out_dir)):
         with open(status_path(out_dir)) as f:
             status = {**json.load(f), **status}
@@ -169,25 +181,59 @@ def print_slowest(status, n=20):
         print(f"  {v['sec']:8.2f} s  {name}{'' if v['ok'] else '  (FAILED)'}")
 
 
+def run_chunk(sf_dir, out_dir, check_types, names, path):
+    """One --fork chunk, in a fresh process: checks `names` and writes
+    their status to the chunk's own file, `path`."""
+    global CHECK_TYPES
+    CHECK_TYPES = check_types
+    status, _ = check(sf_dir, out_dir, names)
+    with open(path, "w") as f:
+        json.dump(status, f)
+
+
 def forked(sf_dir, out_dir, only, chunk):
-    import subprocess
     names = sorted(json.load(open(f"{out_dir}/oracle_sql.json")))
     if only:
         names = [n for n in names if n in only]
-    extra = ["--types"] if CHECK_TYPES else []
-    if os.path.exists(status_path(out_dir)):
-        os.remove(status_path(out_dir))
-    bad = 0
-    for i in range(0, len(names), chunk):
-        sub = ",".join(names[i:i + chunk])
-        r = subprocess.run([sys.executable, __file__, sf_dir, out_dir, sub]
-                           + extra)
-        bad += 1 if r.returncode != 0 else 0
-    if os.path.exists(status_path(out_dir)):
-        with open(status_path(out_dir)) as f:
-            print_slowest(json.load(f))
-    if bad:
-        print(f"\n{bad} chunk(s) had failures")
+    # deal round-robin: the slowest oracles sort next to each other (the
+    # graph_* recursive CTEs), and slicing would put them in one chunk
+    n_chunks = max(1, math.ceil(len(names) / chunk))
+    chunks = [names[i::n_chunks] for i in range(n_chunks)]
+    # each chunk writes its own status file and only this process merges
+    # them, so no two processes read-modify-write check_status.json; a
+    # chunk that dies (an OOM) leaves no file and costs only its own gates
+    paths = [f"{status_path(out_dir)}.chunk{i}" for i in range(n_chunks)]
+    for path in paths:
+        if os.path.exists(path):
+            os.remove(path)
+    ctx = multiprocessing.get_context("spawn")
+
+    def run(i):
+        p = ctx.Process(target=run_chunk, args=(
+            sf_dir, out_dir, CHECK_TYPES, chunks[i], paths[i]))
+        p.start()
+        p.join()
+        return p.exitcode
+
+    with ThreadPoolExecutor(min(os.cpu_count() or 1, n_chunks)) as pool:
+        codes = list(pool.map(run, range(n_chunks)))
+    status, crashed = {}, []
+    for i, path in enumerate(paths):
+        if os.path.exists(path):
+            with open(path) as f:
+                status.update(json.load(f))
+            os.remove(path)
+        else:
+            crashed.append(f"chunk {i} (exit code {codes[i]}, "
+                           f"{len(chunks[i])} gates unchecked)")
+    write_status(out_dir, status, merge=False)
+    print_slowest(status)
+    failures = sorted(n for n, v in status.items() if not v["ok"])
+    if failures:
+        print(f"\n{len(failures)} FAILED: {failures}")
+    if crashed:
+        print(f"\n{len(crashed)} chunk(s) crashed: {crashed}")
+    if failures or crashed:
         sys.exit(1)
     print(f"\nall {len(names)} queries match (forked)")
 
