@@ -2,14 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression,
-  ExpressionInfo, InterpretedOrdering, Literal, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EvalMode,
+  Expression, ExpressionInfo, InterpretedOrdering, Literal, UnscaledValue, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.TreePattern.SORT
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.catalyst.trees.TreePattern.{AGGREGATE_EXPRESSION, SORT}
+import org.apache.spark.sql.types.{Decimal, DecimalType, IntegerType}
 
-import graft.functions.{HashExprs, TextExprs, VectorExprs}
+import graft.functions.{ExactSum, HashExprs, TextExprs, VectorExprs}
 
 /** SQL front door for the engine's native Catalyst expressions: registered
   * through `SparkSessionExtensions` (`spark.sql.extensions` — wired in
@@ -28,6 +29,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.AsofNative.Strategy)
     ext.injectPlannerStrategy(_ => graft.plans.IntervalNative.Strategy)
     ext.injectOptimizerRule(_ => GraftExtensions.SortLocalRelation)
+    ext.injectOptimizerRule(_ => GraftExtensions.LongDecimalSum)
   }
 }
 
@@ -52,6 +54,32 @@ object GraftExtensions {
         case Sort(order, true, rel @ LocalRelation(output, data, false, _), _)
             if order.forall(o => driverEvaluable(o.child)) =>
           rel.copy(data = data.sorted(new InterpretedOrdering(order, output)))
+      }
+  }
+
+  /** A non-DISTINCT, non-ANSI SUM over DECIMAL(p, s) with 8 < p ≤ 18, in an
+    * `Aggregate` or a `Window`, sums on two primitive longs
+    * ([[graft.functions.ExactSum.LongPairSum]] over the column's unscaled
+    * value) instead of one `BigDecimal` add per row. The result type,
+    * nullability, null semantics and exact value stay Spark's; so do the
+    * aggregate's `FILTER` and its result attribute. p ≤ 8 is left to
+    * Spark's own `DecimalAggregates` (one long; it runs after this rule),
+    * and p ≥ 19 has no unscaled long. So `Fns.sumExact`'s DECIMAL(18,6)
+    * sums, and every SQL `SUM(CAST(x AS DECIMAL(18,6)))`, take this path. */
+  object LongDecimalSum extends Rule[LogicalPlan] {
+    // Spark's rule takes p + 10 <= MAX_LONG_DIGITS: there the sum fits one long
+    private val OneLongMax = Decimal.MAX_LONG_DIGITS - 10
+
+    override def apply(plan: LogicalPlan): LogicalPlan =
+      plan.transformAllExpressionsWithPruning(_.containsPattern(AGGREGATE_EXPRESSION)) {
+        case ae @ AggregateExpression(sum @ Sum(e, ctx), _, false, _, _)
+            if ctx.evalMode == EvalMode.LEGACY && (e.dataType match {
+              case d: DecimalType =>
+                d.precision > OneLongMax && d.precision <= Decimal.MAX_LONG_DIGITS
+              case _ => false
+            }) =>
+          ae.copy(aggregateFunction = ExactSum.LongPairSum(UnscaledValue(e),
+            sum.dataType.asInstanceOf[DecimalType]))
       }
   }
 

@@ -14,6 +14,12 @@ import org.apache.spark.sql.types._
   * single cast of the final value back to DOUBLE. Identical bit patterns on
   * both engines regardless of partitioning / summation order — which is also
   * what makes results *deterministic across cluster sizes*.
+  *
+  * The rule's SUM runs on two primitive longs, not one `BigDecimal` add per
+  * row: [[graft.GraftExtensions.LongDecimalSum]] plans every non-DISTINCT
+  * SUM over DECIMAL(9..18, s) as [[ExactSum.LongPairSum]], with Spark's
+  * result type and exact value. The cast to DECIMAL(18,6) itself still
+  * builds one `BigDecimal` per row.
   */
 object Fns {
 

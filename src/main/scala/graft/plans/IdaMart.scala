@@ -1,6 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftGlue, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext,
+  ExprCode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,14 +24,15 @@ import graft.sources.{Sinks, Tables}
   *    unlike `monotonically_increasing_id` which depends on partition layout;
   *  - the fact load is an INSERT..SELECT over 4 natural-key lookups where a
   *    record matching no dim row is silently dropped
-  *    (/root/reference/etl/etl_ida.py:504-554) -> inner broadcast joins;
+  *    (/root/reference/etl/etl_ida.py:504-554) -> a hash probe per key into
+  *    the dimension's driver-side ranks, dropping unmatched records;
   *  - dedup via md5 record hash + ON CONFLICT DO NOTHING
   *    (schema_star.sql:93-94) -> [[firstWinsDedup]] on the hash for
   *    intra-batch, left-anti join vs the existing table for cross-batch
   *    idempotency.
   *
   * Scale shape: all four dims are tiny (derived from low-cardinality
-  * attributes) -> broadcast hash joins, zero shuffle on the fact side; the
+  * attributes) -> driver-side lookups, zero shuffle on the fact side; the
   * only wide operation is the dedup on the hash (one shuffle on an
   * already-narrow projection). The dim keys are ranked on the driver.
   */
@@ -70,8 +75,8 @@ object IdaMart {
     "variavel" -> "variavel_key")
 
   /** The ONE dimension-key collect: the distinct natural keys of every
-    * requested dim, ranked into surrogate keys ON THE DRIVER, one local
-    * `(x_key, natural)` frame per dim.
+    * requested dim, ranked ON THE DRIVER: a dim's surrogate key is its
+    * key's 1-based position in the returned array.
     *
     * Each record explodes to one (dim, key) row per dim, the key in a
     * string or a date field (no per-row formatting); one distinct shuffle
@@ -83,23 +88,22 @@ object IdaMart {
     *
     * Dims are metadata-cardinality by contract (the reference seeds
     * 36/10/3/11 rows, schema_star.sql:198-268): the key set is a
-    * driver-sized collect — the same size bound that already makes these
-    * dims broadcast-join build sides. Ranking driver-side avoids a
+    * driver-sized collect, small enough to ship to every task as the
+    * fact's lookup table. Ranking driver-side avoids a
     * `row_number` over a global window, which (a) forced an
     * all-rows-to-one-partition WindowExec, and (b) as a lazy subtree
-    * inside the fact's multi-join got re-aliased by the analyzer's
+    * inside the fact's plan got re-aliased by the analyzer's
     * self-join deduplication and re-scanned the raw source (PipelineSpec's
     * scan-count test pins this).
     *
-    * Null natural keys are dropped: the fact's equi-join lookup never
-    * matches null, and Spark (NULLS FIRST) vs DuckDB (NULLS LAST) disagree
-    * on where a null would rank. Dates rank chronologically, everything
+    * Null natural keys are dropped: the fact drops a record with a null
+    * key, as an equi-join would, and Spark (NULLS FIRST) vs DuckDB (NULLS
+    * LAST) disagree on where a null would rank. Dates rank chronologically, everything
     * else in Scala String order (UTF-16 code units), which equals DuckDB's
     * UTF-8 byte order for all BMP text — the fixtures' pt-BR accents
     * included. */
-  private def dimKeys(records: DataFrame,
-                      naturals: Seq[String]): Map[String, DataFrame] = {
-    val spark = records.sparkSession
+  private def rankedKeys(records: DataFrame,
+                         naturals: Seq[String]): Map[String, Array[Any]] = {
     val isDate = naturals.map(n => n -> (records.schema(n).dataType == DateType)).toMap
     val collected = records.select(explode(array(naturals.map { n =>
         val (str, date) =
@@ -120,20 +124,60 @@ object IdaMart {
           "or raise MaxDimCardinality deliberately")
     }
     naturals.map { n =>
-      val ranked = collected.getOrElse(n, Array.empty[Any]).sortWith {
+      n -> collected.getOrElse(n, Array.empty[Any]).sortWith {
         case (a: java.sql.Date, b: java.sql.Date) => a.getTime < b.getTime
         case (a, b) => String.valueOf(a) < String.valueOf(b)
       }
-      n -> spark.createDataFrame(
-        java.util.Arrays.asList(ranked.toSeq.zipWithIndex.map {
-          case (v, i) => org.apache.spark.sql.Row(i + 1, v) }: _*),
-        StructType(Seq(StructField(SurrogateKeys(n), IntegerType, nullable = false),
-          StructField(n, records.schema(n).dataType))))
     }.toMap
   }
 
+  /** One dimension's `(x_key, natural)` frame: its [[rankedKeys]] with the
+    * 1-based rank as the surrogate key. */
   private def dimKeys(records: DataFrame, natural: String): DataFrame =
-    dimKeys(records, Seq(natural))(natural)
+    records.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rankedKeys(records, Seq(natural))(natural).toSeq
+        .zipWithIndex.map { case (v, i) => org.apache.spark.sql.Row(i + 1, v) }: _*),
+      StructType(Seq(StructField(SurrogateKeys(natural), IntegerType, nullable = false),
+        StructField(natural, records.schema(natural).dataType))))
+
+  /** A natural key's surrogate key in [[fact]]: a hash probe into the
+    * dimension's ranks, keyed by Catalyst's internal value (`UTF8String`,
+    * days for a date). The ranks stay on the driver and ride each task as
+    * one reference object, so the lookup starts no job, and two loads
+    * generate the same code. Null for a null key or one the dimension does
+    * not hold. */
+  private[plans] case class SurrogateKey(child: Expression,
+                                         ranks: java.util.HashMap[AnyRef, Integer])
+      extends UnaryExpression {
+    override def dataType: DataType = IntegerType
+    override def nullable: Boolean = true
+
+    override protected def nullSafeEval(key: Any): Any = ranks.get(key)
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val map = ctx.addReferenceObj("ranks", ranks, "java.util.HashMap")
+      val rank = ctx.freshName("rank")
+      nullSafeCodeGen(ctx, ev, key => {
+        val boxed = if (CodeGenerator.isPrimitiveType(child.dataType))
+          s"${CodeGenerator.boxedType(child.dataType)}.valueOf($key)" else key
+        s"""Integer $rank = (Integer) $map.get($boxed);
+           |${ev.isNull} = $rank == null;
+           |if (!${ev.isNull}) ${ev.value} = $rank;""".stripMargin
+      })
+    }
+
+    override protected def withNewChildInternal(newChild: Expression): SurrogateKey =
+      copy(child = newChild)
+  }
+
+  private def surrogateKey(natural: String, ranked: Array[Any], dt: DataType): Column = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val ranks = new java.util.HashMap[AnyRef, Integer]()
+    ranked.zipWithIndex.foreach { case (v, i) =>
+      ranks.put(toCatalyst(v).asInstanceOf[AnyRef], Int.box(i + 1)) }
+    GraftGlue.toColumn(SurrogateKey(GraftGlue.toExpression(col(natural)), ranks))
+      .as(SurrogateKeys(natural))
+  }
 
   /** S8/A4: dim_tempo — distinct months + calendar attributes
     * (schema_star.sql:19-27; /root/reference/etl/etl_ida.py:574-587). */
@@ -188,32 +232,29 @@ object IdaMart {
         col("grupo_economico"), col("servico"), col("variavel"),
         money2(col("valor"))))
 
-  /** J3 + S7: fact build — 4-way natural-key lookup (inner: a record whose
-    * key matches no dim row — e.g. a null natural key, which an equi-join
-    * never matches — is silently dropped like the reference), F8 md5 hash,
-    * intra-batch dedup.
+  /** J3 + S7: fact build — 4-way natural-key lookup (a record whose key
+    * matches no dim row — e.g. a null natural key — is silently dropped
+    * like the reference's inner lookup), F8 md5 hash, intra-batch dedup.
     *
-    * Scan discipline: recs is persisted, and ONE [[dimKeys]] pass over all
-    * four dims both collects every dim's bounded key set and materializes
-    * the cache; the fact joins the resulting local key frames, the same
-    * frames the standalone dim builders project. So the raw source is
-    * scanned exactly once and the cache exactly twice (key pass, and the
-    * [[append]] write), independent of the dim count (PipelineSpec pins
-    * source scans with an accumulator). Deriving the dims lazily inside
-    * the join plan instead would re-scan the source per dim: the analyzer's
-    * self-join de-duplication re-aliases those subtrees past the persist. */
+    * Scan discipline: recs is persisted, and ONE [[rankedKeys]] pass over
+    * all four dims both collects every dim's bounded key set and
+    * materializes the cache; each record then finds its four surrogate
+    * keys by a [[SurrogateKey]] hash probe into those ranks, the same ranks
+    * the standalone dim builders number. So the raw source is scanned
+    * exactly once and the cache exactly twice (key pass, and the [[append]]
+    * write), independent of the dim count (PipelineSpec pins source scans
+    * with an accumulator), and no lookup starts a broadcast job. */
   def fact(recs: DataFrame): DataFrame = {
     val cached = recs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keys = dimKeys(cached, NaturalKeys)
+    val ranks = rankedKeys(cached, NaturalKeys)
     // F18 lineage: one processing time per fact build. Passed through a
     // UDF, which the optimizer cannot fold: `current_timestamp()` folds to
     // a literal inlined into the generated code, so every load compiled
     // its projection anew.
     val processedAt = java.time.Instant.now()
-    NaturalKeys.foldLeft(hashRecords(cached)) { (df, n) =>
-        df.join(broadcast(keys(n)), Seq(n)) }
-      .select(col("tempo_key"), col("grupo_key"), col("servico_key"),
-        col("variavel_key"), col("valor").cast(DecimalType(15, 6)).as("valor"),
+    hashRecords(cached)
+      .select(NaturalKeys.map(n => surrogateKey(n, ranks(n), cached.schema(n).dataType)) ++
+        Seq(col("valor").cast(DecimalType(15, 6)).as("valor"),
         col("arquivo_origem"), col("linha_origem"),
         udf(() => processedAt).apply().as("data_processamento"),
         col("hash_registro"),
@@ -221,7 +262,8 @@ object IdaMart {
         // indexes (schema_star.sql:96-101); the Spark analog is writing the
         // fact partitioned by year (Sinks.writeFactPartitioned) so year
         // predicates prune directories instead of scanning the store
-        year(col("ano_mes")).as("ano"))
+        year(col("ano_mes")).as("ano")): _*)
+      .where(NaturalKeys.map(n => col(SurrogateKeys(n)).isNotNull).reduce(_ && _))
       .transform(firstLoadWins)
   }
 

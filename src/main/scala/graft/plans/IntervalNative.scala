@@ -244,8 +244,11 @@ object IntervalNative {
               // pending row of the SAME key (heads are refilled before
               // the branch, so a null head means that iterator is
               // exhausted; sorted keys mean a differing head key closes
-              // this key) — otherwise the entry is unmatchable dead
-              // state. Together these keep per-key state at O(max
+              // this key) whose lo does not already lie past this row's
+              // hi (later opposite rows of the key arrive with a larger
+              // lo) — otherwise the entry is unmatchable dead state, and
+              // an unpaired LEFT OUTER row is emitted null-padded now.
+              // Together these keep per-key state at O(max
               // simultaneously open intervals) even when one side's
               // stream runs dry under a heavy key, instead of degrading
               // to O(key-group size).
@@ -260,7 +263,8 @@ object IntervalNative {
                   activeR.foreach { e =>
                     out.enqueue(outProj(joined(lHead, e.row)).copy())
                   }
-                  if (rHead != null && keyOrd.compare(lKey, rKey) == 0)
+                  if (rHead != null && keyOrd.compare(lKey, rKey) == 0 &&
+                      (rB == null || cmp(rB._1, lB._2) <= 0))
                     activeL.enqueue(new ActiveEntry(lB._2, lHead, paired))
                   else if (isOuter && !paired)
                     out.enqueue(outProj(joined(lHead, nullPayload)).copy())
@@ -283,7 +287,8 @@ object IntervalNative {
                     out.enqueue(outProj(joined(e.row, pRow)).copy())
                     e.matched = true
                   }
-                  if (lHead != null && keyOrd.compare(rKey, lKey) == 0)
+                  if (lHead != null && keyOrd.compare(rKey, lKey) == 0 &&
+                      (lB == null || cmp(lB._1, rB._2) <= 0))
                     activeR.enqueue(new ActiveEntry(rB._2, pRow, true))
                 }
                 rHead = null

@@ -1,6 +1,12 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,7 +33,8 @@ object Tables {
     * isAdjustedToUTC=false. TablesSpec pins each schema to the one Spark
     * infers from every fixture scale, so a changed fixture fails there
     * instead of reading as nulls. `events` (three observed `ts`
-    * encodings), `documents` and `embeddings` keep the inferring read. */
+    * encodings) reads with its file's [[footerSchema]]; `documents` and
+    * `embeddings` keep the inferring read. */
   val declared: Map[String, StructType] = Map(
     "region" -> "r_regionkey INT, r_name STRING",
     "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
@@ -45,12 +52,35 @@ object Tables {
       "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ")
   ).map { case (n, ddl) => n -> StructType.fromDDL(ddl) }
 
-  /** Generic reader: a declared table reads with its schema; `events` gets
-    * its timestamp normalized. */
+  /** Generic reader: a declared table reads with its schema; `events`
+    * reads with its footer's schema and gets its timestamp normalized. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = declared.get(name)
-      .fold(spark.read)(s => spark.read.schema(s)).parquet(path(dir, name))
+    val file = path(dir, name)
+    val schema = if (name == "events") Some(footerSchema(spark, file))
+      else declared.get(name)
+    val raw = schema.fold(spark.read)(s => spark.read.schema(s)).parquet(file)
     if (name == "events") normalizeEventTs(raw) else raw
+  }
+
+  /** The schema Spark's parquet inference gives `path`, read on the driver
+    * with no Spark job: the footer of the one file the inference reads (the
+    * path itself, or a directory's first data file in path order), through
+    * the Hadoop `FileSystem`, converted by Spark's own parquet schema
+    * converter under the session's settings (`nanosAsLong`, NTZ inference).
+    * A Spark-written file's stored row schema wins, as it does there.
+    * TablesSpec pins it to the inferred schema at every fixture scale. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file = if (!fs.getFileStatus(p).isDirectory) p
+      else fs.listStatus(p).filter(_.isFile).map(_.getPath)
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .minBy(_.toString)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(file, conf), ParquetMetadataConverter.NO_FILTER)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")

@@ -338,6 +338,21 @@ class IntervalNativeSpec extends SparkSpec {
     assert(got.count(_._1 == 7L) == 1)
   }
 
+  test("point form: a heavy key whose points all lie past every interval " +
+    "pairs none (inner) and pads each point once (outer)") {
+    val ivs = Seq(("h", 1L, 0.0, 10.0), ("h", 2L, 5.0, 20.0), ("g", 3L, 0.0, 1e9))
+      .toDF("k", "iid", "lo", "hi")
+    val pts = spark.range(5000).select(lit("h").as("k"), col("id").as("pid"),
+      (col("id") + 100).cast("double").as("p"))
+    def join(outer: Boolean) = IntervalNative.join(pts, ivs, keys = Seq("k"),
+        "p", "p", "lo", "hi", Seq("iid"), outer = outer)
+      .select($"pid", $"iid").as[(Long, Option[Long])].collect()
+    assert(join(outer = false).isEmpty)
+    val padded = join(outer = true)
+    assert(padded.length == 5000 && padded.forall(_._2.isEmpty))
+    assert(padded.map(_._1).toSet == (0L until 5000L).toSet)
+  }
+
   test("point form autoJoin: broadcast when small, sweep at threshold -1") {
     val auto = IntervalNative.autoJoin(points, bands, Seq("k"),
       "p", "p", "lo", "hi", Seq("iid"))

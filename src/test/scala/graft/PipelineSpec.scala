@@ -166,6 +166,8 @@ class PipelineSpec extends SparkSpec {
     }
     val (two, four) = (jobs(2), jobs(4))
     assert(two == four, s"2 sheets: $two jobs, 4 sheets: $four jobs")
+    // no surrogate-key lookup starts a broadcast job
+    assert(two <= 7, s"the load ran $two jobs")
   }
 
   test("run: transformed records the fact load drops whole are an error") {

@@ -156,8 +156,10 @@ class ProfileSpec extends SparkSpec {
 
   test("profile_all, a_chi2_test and a_cramers_v finish on the driver: " +
     "one aggregate each, so at most 3, 2 and 2 jobs") {
-    for ((gate, most) <- Seq("profile_all" -> 3, "a_chi2_test" -> 2,
-        "a_cramers_v" -> 2)) {
+    // the two tests' one aggregate is all they run: reading `events`
+    // starts no schema-inference job
+    for ((gate, most) <- Seq("profile_all" -> 3, "a_chi2_test" -> 1,
+        "a_cramers_v" -> 1)) {
       val q = SparkEntry.queries(gate)
       q(spark, sf0001).collect() // warm
       val (rows, jobs) = JobCount(spark)(q(spark, sf0001).collect())

@@ -100,6 +100,25 @@ class TablesSpec extends SparkSpec {
         s"$dir/$name: declared ${schema.toDDL}, file infers ${inferred.toDDL}")
       assert(Tables.table(spark, dir, name).schema == schema)
     }
+    // events: the footer schema it reads with is the one Spark infers
+    for (dir <- dirs) {
+      val file = Tables.path(dir, "events")
+      val inferred = spark.read.parquet(file).schema
+      val footer = spark.read.schema(Tables.footerSchema(spark, file)).parquet(file).schema
+      assert(footer == inferred,
+        s"$dir/events: footer gives ${footer.toDDL}, file infers ${inferred.toDDL}")
+    }
+  }
+
+  test("events starts no job while it is read: its schema comes from the " +
+    "footer on the driver") {
+    val sf001 = new java.io.File(sf0001).getParent + "/sf0.01"
+    for (dir <- Seq(sf0001, sf001)) {
+      val (df, jobs) = JobCount(spark)(Tables.events(spark, dir))
+      assert(jobs == 0, s"$dir: reading events started $jobs jobs")
+      assert(df.schema == Tables.normalizeEventTs(
+        spark.read.parquet(Tables.path(dir, "events"))).schema)
+    }
   }
 
   test("a query over declared tables starts no job while it is built") {
